@@ -73,3 +73,25 @@ def test_dem2tintiles_catalog_sink(asc_file, tmp_path):
     ])
     assert manifest[0]["n_tiles"] >= 1
     assert os.path.exists(os.path.join(cat_dir, "LATEST"))
+
+
+def test_dem2tintiles_raster_resumes(asc_file, tmp_path):
+    """Raster pyramids run the same loop as documents: a manifest row
+    and a _SUCCESS marker per zoom, and a rerun skips every completed
+    zoom (its manifest `seconds` stay those of the first run)."""
+    out_dir = str(tmp_path / "tiles")
+    argv = [
+        "dem2tintiles", "--input", asc_file, "--output-dir", out_dir,
+        "--min-zoom", "0", "--max-zoom", "1",
+        "--grid-bits", "3", "--buffer-cells", "0", "--cores", "4",
+    ]
+    first = main(argv)
+    assert set(first) == {0, 1}
+    assert os.path.exists(os.path.join(out_dir, "_manifest.jsonl"))
+    for z in (0, 1):
+        assert os.path.exists(os.path.join(out_dir, f"zoom={z}", "_SUCCESS"))
+        assert first[z]["n_tiles"] >= 1
+    again = main(argv)
+    assert {z: e["seconds"] for z, e in again.items()} == {
+        z: e["seconds"] for z, e in first.items()
+    }

@@ -182,6 +182,17 @@ def test_docs_spread_auto_gates_on_input_size(spark, monkeypatch):
     assert a == b
 
 
+def test_docs_spread_rejects_unknown_strings(spark):
+    """Only the string "auto" selects the size gate; any other string
+    (a typo like "Auto" or "off") fails loudly instead of counting as
+    truthy and spreading."""
+    from tin_terrain_spark import queries as Q
+
+    for bad in ("Auto", "off", ""):
+        with pytest.raises(ValueError, match=repr(bad)):
+            Q._docs(spark, SF, spread=bad)
+
+
 def test_spread_pays_fallbacks():
     """Non-file inputs (directories / object-store paths) must default
     to spreading: at cluster scale the repartition is a cheap
@@ -197,7 +208,8 @@ def test_spread_pays_reads_footer_not_compressed_size(tmp_path):
     """Dup-heavy corpora compress far below the byte gate while still
     carrying per-row map work — the gate must read the parquet footer
     (row count / uncompressed bytes), not the compressed file size. A
-    20k-row constant column compresses to a few KB but must spread."""
+    constant column just above the row gate (_SPREAD_MIN_ROWS + 1
+    rows) compresses to a few KB but must spread."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -211,7 +223,7 @@ def test_spread_pays_reads_footer_not_compressed_size(tmp_path):
     import os
 
     assert os.path.getsize(path) < 1024 * 1024  # tiny on disk...
-    assert _spread_pays(path) is True           # ...but 20k rows of work
+    assert _spread_pays(path) is True           # ...but past the row gate
 
 
 def test_knn_ring_prune_multi_round_equals_brute(spark):

@@ -509,36 +509,83 @@ def test_short_doc_shingles(spark):
     assert any(r.doc_a == 1 and r.doc_b == 2 and r.jaccard == 1.0 for r in nd)
 
 
-def test_stream_kernel_equals_grouped_kernel(points):
-    """The streaming mapInPandas mesh path (one Arrow round per batch
-    of tiles) must produce byte-identical rows to the per-group
-    applyInPandas path — terrain blobs included."""
+def test_stream_kernel_equals_grouped_kernel(spark, points):
+    """The streaming mapInPandas mesh stage must produce byte-identical
+    rows — terrain blobs included — to a driver-side reference that
+    groups the collected cell grid per tile in pandas and calls the
+    tile kernel once per tile. A 7-row Arrow batch makes every tile's
+    rows span several batches, so the carry-over path runs too."""
     from tin_terrain_spark.operators.meshing import (
-        TILE_SCHEMA, _make_mesh_kernel, cell_grid, mesh_tiles,
+        TILE_SCHEMA, _make_tile_fn, cell_grid, mesh_tiles,
     )
 
-    args = (2, 5, 2, "terra", 2.0, 1, True, True)
-    new = {
-        (r["tile_x"], r["tile_y"]): r.asDict()
-        for r in mesh_tiles(points, zoom=2, method="terra", max_error=2.0,
-                            compute_error=True).collect()
-    }
-    cells = cell_grid(points, zoom=2, grid_bits=5, buffer_cells=2)
-    old = {
-        (r["tile_x"], r["tile_y"]): r.asDict()
-        for r in cells.groupBy("tile_x", "tile_y")
-        .applyInPandas(_make_mesh_kernel(*args), TILE_SCHEMA)
-        .collect()
-    }
-    assert set(new) == set(old) and len(new) == 16
-    for k, nrow in new.items():
-        orow = old[k]
-        for col, v in nrow.items():
-            ov = orow[col]
-            if isinstance(v, float) and np.isnan(v):
-                assert np.isnan(ov), (k, col)
-            else:
-                assert v == ov, (k, col)
+    tile_fn = _make_tile_fn(2, 5, 2, "terra", 2.0, 1, True, True)
+    names = [f.split()[0] for f in TILE_SCHEMA.split(",")]
+    pdf = cell_grid(points, zoom=2, grid_bits=5, buffer_cells=2).toPandas()
+    ref = {}
+    for (tx, ty), g in pdf.groupby(["tile_x", "tile_y"]):
+        d = tile_fn(int(tx), int(ty), g["row_b"].to_numpy(), g["col_b"].to_numpy(),
+                    g["z_sum"].to_numpy(), g["z_cnt"].to_numpy())
+        ref[(int(tx), int(ty))] = {c: d[c] for c in names}
+    assert len(ref) == 16 and min(pdf.groupby(["tile_x", "tile_y"]).size()) > 7
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    for batch in (None, "7"):
+        if batch:
+            spark.conf.set(key, batch)
+        try:
+            got = {
+                (r["tile_x"], r["tile_y"]): r.asDict()
+                for r in mesh_tiles(points, zoom=2, method="terra", max_error=2.0,
+                                    compute_error=True).collect()
+            }
+        finally:
+            spark.conf.unset(key)
+        assert set(got) == set(ref), batch
+        for k, row in got.items():
+            for col, v in row.items():
+                rv = ref[k][col]
+                if isinstance(v, float) and np.isnan(v):
+                    assert np.isnan(rv), (batch, k, col)
+                else:
+                    assert v == rv, (batch, k, col)
+
+
+def test_pyramid_honours_step(spark, tmp_path):
+    """A dense pyramid meshes with the caller's step: its max-zoom
+    tiles equal mesh_tiles at that zoom with the same step (both build
+    the zoom from the same base cells, no rollup)."""
+    from tin_terrain_spark.operators.geocode import geocode_points
+    from tin_terrain_spark.operators.meshing import mesh_tiles
+    from tin_terrain_spark.pipeline.dem2tintiles import build_tile_pyramid
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    out = str(tmp_path / "tiles")
+    build_tile_pyramid(spark, docs, out, min_zoom=2, max_zoom=2, method="dense",
+                       step=2, resume=False)
+
+    def canon(df):
+        # NaN != NaN and bytearrays do not hash: compare as repr strings
+        return sorted(repr(tuple(r)) for r in df.collect())
+
+    pyr = canon(spark.read.parquet(f"{out}/zoom=2"))
+    pts = geocode_points(docs, zoom=2, grid_bits=5)
+    ref = canon(mesh_tiles(pts, zoom=2, method="dense", step=2))
+    assert len(ref) == 16 and pyr == ref
+
+
+def test_unknown_method_fails_on_driver(spark, points, tmp_path):
+    """An unknown method is rejected before any Spark job, naming it."""
+    from tin_terrain_spark.operators.meshing import mesh_tiles
+    from tin_terrain_spark.pipeline.dem2tintiles import build_tile_pyramid
+
+    with pytest.raises(ValueError, match="'nope'"):
+        mesh_tiles(points, 1, method="nope")
+    out = str(tmp_path / "never")
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    with pytest.raises(ValueError, match="'nope'"):
+        build_tile_pyramid(spark, docs, out, method="nope")
+    assert not os.path.exists(out)
 
 
 def test_quality_filter_keep_is_boolean_for_tiny_docs(spark):

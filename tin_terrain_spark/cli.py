@@ -14,9 +14,13 @@ same verbs and flags here:
 dem2tin is the reference's single-raster tool and runs driver-side
 (one file → one mesh, no cluster needed). dem2tintiles and benchmark
 run on Spark: input globs fan out file-per-task (GeoTIFF/ASC/XYZ via
-sources.geotiff/textgrids; a documents parquet geocodes synthetically)
-and every zoom level reuses the mesh_tiles operator — the same code
-path the driver-gated queries exercise.
+sources.geotiff/textgrids; a documents parquet geocodes synthetically).
+dem2tintiles keys either input at --max-zoom and runs the one pyramid
+loop (pipeline.dem2tintiles.mesh_pyramid: resume manifest, _SUCCESS
+markers, per-zoom max_error default); benchmark runs the sweep. All
+three mesh through kernels.tin.generate_tin, and both Spark verbs
+through operators.meshing.mesh_cells — the same stage the
+driver-gated queries exercise.
 """
 
 from __future__ import annotations
@@ -26,7 +30,7 @@ import json
 import os
 import sys
 
-METHODS = ("terra", "zemlya", "dense", "curvature")
+from .kernels.tin import METHODS
 
 
 def _cells_for(spark, input_glob: str):
@@ -64,6 +68,7 @@ def cmd_dem2tin(args) -> dict:
 
 
 def cmd_dem2tintiles(args) -> dict:
+    from .pipeline.dem2tintiles import build_tile_pyramid, mesh_pyramid
     from .session import get_spark
 
     spark = get_spark("dem2tintiles", cores=args.cores)
@@ -74,54 +79,23 @@ def cmd_dem2tintiles(args) -> dict:
             from .sources.iceberg import tile_catalog
 
             catalog = tile_catalog(spark, local_path=args.catalog_path)
+        kw = dict(
+            min_zoom=args.min_zoom, max_zoom=args.max_zoom,
+            grid_bits=args.grid_bits, buffer_cells=args.buffer_cells,
+            method=args.method, max_error=args.max_error, step=args.step,
+            catalog=catalog,
+        )
         if is_docs:
-            from .pipeline.dem2tintiles import build_tile_pyramid
-
-            manifest = build_tile_pyramid(
-                spark, src, args.output_dir,
-                min_zoom=args.min_zoom, max_zoom=args.max_zoom,
-                grid_bits=args.grid_bits, buffer_cells=args.buffer_cells,
-                method=args.method, max_error=args.max_error,
-                catalog=catalog,
-            )
+            manifest = build_tile_pyramid(spark, src, args.output_dir, **kw)
         else:
-            manifest = _raster_pyramid(spark, src, args, catalog)
+            from .sources.geotiff import assign_tile_keys
+
+            keyed = assign_tile_keys(src, zoom=args.max_zoom, grid_bits=args.grid_bits)
+            manifest = mesh_pyramid(spark, keyed, args.output_dir, **kw)
         print(json.dumps({str(z): e for z, e in sorted(manifest.items())}))
         return manifest
     finally:
         spark.stop()
-
-
-def _raster_pyramid(spark, cells, args, catalog) -> dict:
-    """Real-coordinate pyramid: per zoom, key the (x, y, z) cells and
-    run the shared mesh_tiles operator (the reference's per-zoom
-    overview loop, driven from the same points each level)."""
-    from .operators.meshing import mesh_tiles
-    from .sources.geotiff import assign_tile_keys
-
-    cells = cells.persist()
-    manifest: dict[int, dict] = {}
-    try:
-        for zoom in range(args.max_zoom, args.min_zoom - 1, -1):
-            keyed = assign_tile_keys(cells, zoom=zoom, grid_bits=args.grid_bits)
-            kw = {"step": args.step} if args.method == "dense" else {
-                "max_error": args.max_error if args.max_error is not None else 2.0
-            }
-            tiles = mesh_tiles(
-                keyed, zoom=zoom, grid_bits=args.grid_bits,
-                buffer_cells=args.buffer_cells, method=args.method, **kw,
-            )
-            if catalog is not None:
-                catalog.merge(tiles)
-                n = catalog.read().where(f"zoom = {zoom}").count()
-            else:
-                zdir = os.path.join(args.output_dir, f"zoom={zoom}")
-                tiles.write.mode("overwrite").parquet(zdir)
-                n = spark.read.parquet(zdir).count()
-            manifest[zoom] = {"zoom": zoom, "n_tiles": int(n), "method": args.method}
-    finally:
-        cells.unpersist()
-    return manifest
 
 
 def cmd_benchmark(args) -> list:

@@ -122,10 +122,10 @@ def doc_token_ids(docs: DataFrame) -> DataFrame:
     min over the multiset equals min over the set. Plan note: Catalyst
     (RemoveRedundantAggregates) already eliminates the redundant
     distinct below these duplicate-insensitive aggregates — the
-    round-start physical plans carry no (doc_id, tok) shuffle
-    (plans/r06/minhash_before.txt) — so skipping it here changes the
-    LOGICAL plan only: it keeps the redundancy out of every consumer
-    instead of relying on the optimizer to notice it each time."""
+    physical plan carries no (doc_id, tok) shuffle either way — so
+    skipping it here changes the LOGICAL plan only: it keeps the
+    redundancy out of every consumer instead of relying on the
+    optimizer to notice it each time."""
     return shingles_df(docs, distinct=False).select(
         "doc_id", _tok_hash(F.col("tok")).alias("tok_id")
     )

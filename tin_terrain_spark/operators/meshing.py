@@ -3,22 +3,30 @@
 Pipeline (reference dem2tintiles, SURVEY.md §3.1), Spark-first:
 
   points(x, y, z, tile, cell)
-    → border-buffer fan-out: a point within `buffer_cells` grid cells of
-      a tile edge is duplicated into the neighbor tile's buffered raster
-      (the reference buffers partitions by resolution*100 m so border
-      triangles survive clipping — dem2tintiles_workflow.cpp:51-53);
-      bounded 1:≤4 row expansion, pure Column exprs
-    → groupBy(tile, row, col).agg(sum(z), count)   ← map-side combine
-      collapses 10^12 points to ≤ (grid_n+2b)² rows per tile BEFORE the
-      heavy shuffle (this is the scale-critical step)
-    → repartition(tile) → sortWithinPartitions(tile) → streaming
-      mapInPandas(mesh_tile_kernel) — walk contiguous tile runs per
-      Arrow batch (one Python round per ~hundreds of tiles, not one
-      pandas group per tile), assemble the dense grid, run
-      Terra/Zemlya/dense greedy meshing, normalize to the unit tile,
-      clip to [0,1]² (TileMaker.cpp:45-124), encode quantized-mesh
+    → base_cells: groupBy(cell).agg(sum(z), count)  ← map-side combine
+      collapses 10^12 points to one row per cell BEFORE the heavy
+      shuffle (this is the scale-critical step)
+    → cell_grid: border-buffer fan-out — a cell within `buffer_cells`
+      of a tile edge is duplicated into the neighbor tile's buffered
+      raster (the reference buffers partitions by resolution*100 m so
+      border triangles survive clipping —
+      dem2tintiles_workflow.cpp:51-53); bounded 1:≤4 row expansion,
+      pure Column exprs
+    → mesh_cells, the ONE mesh stage: repartition(tile) →
+      sortWithinPartitions(tile) → streaming mapInPandas that walks
+      contiguous tile runs per Arrow batch and calls the ONE tile
+      kernel (_make_tile_fn): assemble the dense grid, mesh it through
+      kernels.tin.generate_tin (terra | zemlya | dense | curvature),
+      optionally measure the re-rasterized error, normalize to the
+      unit tile, clip to [0,1]² (TileMaker.cpp:45-124), encode
+      quantized-mesh
     → tiles(zoom, tile_x, tile_y, n_points, n_vertices, n_faces,
             max_err, terrain:binary)
+
+mesh_tiles is cell_grid + mesh_cells; the pyramid loop
+(pipeline.dem2tintiles) and the benchmark sweep (pipeline.benchmark)
+call mesh_cells on their own grids, the sweep with its own output
+columns.
 
 Skew: hot tiles are bounded by construction — the pre-aggregation caps
 any tile's kernel input at (grid_n+2b)² rows regardless of how many
@@ -34,6 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import geocode_exprs as GX
+from ..kernels.tin import check_method
 
 TILE_SCHEMA = (
     "zoom INT, tile_x BIGINT, tile_y BIGINT, n_points BIGINT, "
@@ -137,10 +146,13 @@ def cell_grid(
 def _make_tile_fn(zoom: int, grid_bits: int, buffer_cells: int, method: str,
                   max_error: float, step: int, compute_error: bool,
                   encode_terrain: bool):
-    """Build the per-tile kernel as a plain-arrays → dict function
+    """Build the one per-tile kernel as a plain-arrays → dict function
     (runs on executors; imports stay inside so the function pickles
-    cleanly). Both the applyInPandas compat wrapper and the streaming
-    mapInPandas path call this."""
+    cleanly): assemble the buffered grid, mesh it through
+    kernels.tin.generate_tin, optionally re-rasterize and measure the
+    error, optionally clip + encode. The dict carries every TILE_SCHEMA
+    field plus the benchmark sweep's `mesh_seconds` and error moments
+    (`err_n`, `err_mean`, `err_std`); callers pick their columns."""
     g = 1 << grid_bits
     b = buffer_cells
     tile_m = GX.tile_size_meters(zoom)
@@ -149,13 +161,13 @@ def _make_tile_fn(zoom: int, grid_bits: int, buffer_cells: int, method: str,
 
     def mesh_tile(tile_x: int, tile_y: int, rows: np.ndarray, cols: np.ndarray,
                   z_sum: np.ndarray, z_cnt: np.ndarray) -> dict:
+        import time
+
         from tin_terrain_spark.kernels.codec import encode_qm_tile
-        from tin_terrain_spark.kernels.dense import generate_tin_dense_quadwalk
         from tin_terrain_spark.kernels.geometry import clip_triangles_to_01_quadrant
         from tin_terrain_spark.kernels.mesh2raster import measure_error, rasterise_mesh
         from tin_terrain_spark.kernels.raster import Grid
-        from tin_terrain_spark.kernels.terra import generate_tin_terra
-        from tin_terrain_spark.kernels.zemlya import generate_tin_zemlya
+        from tin_terrain_spark.kernels.tin import generate_tin
 
         size = g + 2 * b
         z = np.full((size, size), np.nan)
@@ -176,28 +188,18 @@ def _make_tile_fn(zoom: int, grid_bits: int, buffer_cells: int, method: str,
             cellsize=cellsize,
             ndv=np.nan,
         )
-        if method == "terra":
-            verts, faces = generate_tin_terra(grid, max_error)
-        elif method == "zemlya":
-            verts, faces = generate_tin_zemlya(grid, max_error)
-        elif method == "dense":
-            verts, faces = generate_tin_dense_quadwalk(grid, step)
-        elif method == "curvature":
-            # the max_error slot carries the curvature threshold
-            # (param_threshold in the reference's benchmark StatsRow)
-            from tin_terrain_spark.kernels.curvature import generate_tin_curvature
-
-            verts, faces = generate_tin_curvature(grid, max_error)
-        else:
-            raise ValueError(f"unknown meshing method {method!r}")
+        t0 = time.perf_counter()
+        verts, faces = generate_tin(grid, method, max_error, step)
+        mesh_seconds = time.perf_counter() - t0
 
         max_err = float("nan")
+        err_n, err_mean, err_std = 0, 0.0, 0.0
         euler_ok = verts_on_grid_ok = cover_ok = None
         if compute_error and len(faces):
             r = rasterise_mesh(verts, faces, size, size)
             src = Grid(np.where(np.isnan(z), -99999.0, z), ndv=-99999.0)
-            _, _, max_err, n_valid, _ = measure_error(r, src)
-            if n_valid == 0:
+            err_mean, err_std, max_err, err_n, _ = measure_error(r, src)
+            if err_n == 0:
                 max_err = float("nan")
 
             # independent invariants, oracled as literal TRUE (a
@@ -239,7 +241,7 @@ def _make_tile_fn(zoom: int, grid_bits: int, buffer_cells: int, method: str,
                     and np.array_equal(z[vr, vc], verts[:, 2], equal_nan=True)
                 )
             src_in = src.z[2 : size - 2, 2 : size - 2]
-            cover_ok = bool(n_valid == int((src_in != src.ndv).sum()))
+            cover_ok = bool(err_n == int((src_in != src.ndv).sum()))
 
         # normalize to unit tile space (TileMaker.cpp:71-105)
         tris = verts[faces]  # (m, 3, 3) world coords
@@ -287,45 +289,28 @@ def _make_tile_fn(zoom: int, grid_bits: int, buffer_cells: int, method: str,
             "euler_ok": euler_ok,
             "verts_on_grid_ok": verts_on_grid_ok,
             "cover_ok": cover_ok,
+            "mesh_seconds": mesh_seconds,
+            "err_n": int(err_n),
+            "err_mean": float(err_mean),
+            "err_std": float(err_std),
         }
 
     return mesh_tile
 
 
-_TILE_COLS = (
-    "zoom", "tile_x", "tile_y", "n_points", "n_cells", "n_vertices",
-    "n_faces", "max_err", "min_z", "max_z", "terrain", "euler_ok",
-    "verts_on_grid_ok", "cover_ok",
-)
-
-
-def _make_mesh_kernel(*args):
-    """applyInPandas-compatible wrapper around _make_tile_fn (kept for
-    the pipeline/benchmark callers that group per tile)."""
-    tile_fn = _make_tile_fn(*args)
-
-    def mesh_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        d = tile_fn(
-            int(pdf["tile_x"].iloc[0]), int(pdf["tile_y"].iloc[0]),
-            pdf["row_b"].to_numpy(), pdf["col_b"].to_numpy(),
-            pdf["z_sum"].to_numpy(), pdf["z_cnt"].to_numpy(),
-        )
-        return pd.DataFrame([d], columns=_TILE_COLS)
-
-    return mesh_tile
-
-
-def _make_stream_kernel(*args):
+def _make_stream_kernel(*args, columns: str = TILE_SCHEMA):
     """mapInPandas generator over TILE-SORTED partitions: walks
     contiguous (tile_x, tile_y) runs inside each Arrow batch with
-    NumPy slicing and emits ONE output DataFrame per batch (hundreds
-    of tiles) instead of one per tile. applyInPandas pays a pandas
-    sub-DataFrame + 1-row result DataFrame per group — measured ~8 ms
-    of per-tile overhead at 65k-tile scale, more than the mesh kernel
-    itself. A tile whose rows span two Arrow batches is carried over
-    in `buf` (rows per tile are contiguous because the partition is
-    sorted by the tile key)."""
+    NumPy slicing, calls _make_tile_fn(*args) per tile and emits ONE
+    output DataFrame per batch (hundreds of tiles) instead of one per
+    tile — a per-group applyInPandas paid ~8 ms of pandas overhead per
+    tile at 65k-tile scale, more than the mesh kernel itself. A tile
+    whose rows span two Arrow batches is carried over in `buf` (rows
+    per tile are contiguous because the partition is sorted by the
+    tile key). `columns` is the output schema (DDL); its field names
+    select from the kernel's dict."""
     tile_fn = _make_tile_fn(*args)
+    names = [f.split()[0] for f in columns.split(",")]
 
     def process(pdf: pd.DataFrame) -> pd.DataFrame:
         tx = pdf["tile_x"].to_numpy()
@@ -343,7 +328,7 @@ def _make_stream_kernel(*args):
             tile_fn(int(tx[s]), int(ty[s]), rb[s:e], cb[s:e], zs[s:e], zc[s:e])
             for s, e in zip(starts, ends)
         ]
-        return pd.DataFrame(out, columns=_TILE_COLS)
+        return pd.DataFrame(out, columns=names)
 
     def gen(batches):
         buf = None
@@ -368,6 +353,39 @@ def _make_stream_kernel(*args):
     return gen
 
 
+def mesh_cells(
+    grid: DataFrame,
+    zoom: int,
+    grid_bits: int = 5,
+    buffer_cells: int = 2,
+    method: str = "terra",
+    max_error: float = 2.0,
+    step: int = 1,
+    compute_error: bool = False,
+    encode_terrain: bool = True,
+    columns: str = TILE_SCHEMA,
+) -> DataFrame:
+    """THE mesh stage: a cell_grid → one row per tile, shaped by
+    `columns` (TILE_SCHEMA, or the sweep's per-tile stats).
+
+    The explicit repartition before the kernel matters: the cell grid
+    is only KBs after aggregation, so AQE would coalesce it to one
+    partition and serialize the CPU-heavy Python kernels behind it
+    (measured 3-5x slower). A user repartition by the tile key is
+    respected by AQE and sizes tasks by kernel cost, not bytes; the
+    tile-sorted partitions let the streaming kernel walk tile runs.
+    The method is validated here, on the driver, before any job."""
+    check_method(method)
+    grid = grid.repartition(
+        grid.sparkSession.sparkContext.defaultParallelism, "tile_x", "tile_y"
+    ).sortWithinPartitions("tile_x", "tile_y")
+    kernel = _make_stream_kernel(
+        zoom, grid_bits, buffer_cells, method, max_error, step,
+        compute_error, encode_terrain, columns=columns,
+    )
+    return grid.mapInPandas(kernel, columns)
+
+
 def mesh_tiles(
     points: DataFrame,
     zoom: int,
@@ -378,31 +396,14 @@ def mesh_tiles(
     step: int = 1,
     compute_error: bool = False,
     encode_terrain: bool = True,
-    mesh_parallelism: int | None = None,
 ) -> DataFrame:
-    """Full tile-meshing operator: geocoded points → tile records.
+    """Full tile-meshing operator: geocoded points → tile records
+    (cell_grid + mesh_cells).
 
     Degenerate tiles (too sparse to carry information) still mesh —
     corner repair (TerraUtils.cpp:8-22) back-fills from the nearest
-    valid cells, exactly as the reference handles no-data regions.
-
-    The explicit repartition before the kernel matters: the cell grid
-    is only KBs after aggregation, so AQE would coalesce it to one
-    partition and serialize the CPU-heavy Python kernels behind it
-    (measured 3-5x slower). A user repartition by the group key is
-    respected by AQE, keeps the hash partitioning applyInPandas needs
-    (no extra shuffle), and sizes tasks by kernel cost, not bytes."""
-    cells = cell_grid(points, zoom, grid_bits, buffer_cells)
-    spark = cells.sparkSession
-    if mesh_parallelism is None:
-        mesh_parallelism = spark.sparkContext.defaultParallelism
-    cells = cells.repartition(mesh_parallelism, "tile_x", "tile_y")
-    # tile-sorted partitions + streaming mapInPandas: one Python/Arrow
-    # round per BATCH of tiles, not one pandas group per tile (the
-    # per-group overhead dominated the kernel at 65k-tile scale)
-    cells = cells.sortWithinPartitions("tile_x", "tile_y")
-    kernel = _make_stream_kernel(
-        zoom, grid_bits, buffer_cells, method, max_error, step,
-        compute_error, encode_terrain,
+    valid cells, exactly as the reference handles no-data regions."""
+    return mesh_cells(
+        cell_grid(points, zoom, grid_bits, buffer_cells), zoom, grid_bits,
+        buffer_cells, method, max_error, step, compute_error, encode_terrain,
     )
-    return cells.mapInPandas(kernel, TILE_SCHEMA)

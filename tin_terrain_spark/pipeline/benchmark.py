@@ -6,8 +6,10 @@ Re-expresses /root/reference/src/benchmark_workflow.cpp:975-1073 (the
 reference's test-and-perf oracle) Spark-first:
 
   - the reference loops method x param over ONE raster file on one
-    core; here each (method, param) run is a distributed job over all
-    tiles, and the per-raster error stats are combined EXACTLY from
+    core; here each (method, param) run is one distributed job over all
+    tiles through the pyramid's mesh_cells stage and tile kernel (error
+    measurement on, terrain encoding off, SWEEP_SCHEMA columns), and
+    the per-raster error stats are combined EXACTLY from
     per-tile moments (count/mean/population-std merge — the same
     Welford algebra Mesh2Raster.cpp:351-491 accumulates serially)
   - parameter sets are the reference's own:
@@ -18,7 +20,7 @@ reference's test-and-perf oracle) Spark-first:
     (benchmark_workflow.cpp:591-613, :942-944)
   - CSV columns follow StatsRow (benchmark_workflow.cpp:29-51)
 
-The per-tile `err_max <= param_max_error` invariant (terra/zemlya
+The per-tile `max_err <= param_max_error` invariant (terra/zemlya
 refine until the max interior error is below the threshold) is the
 strongest self-oracle available without GDAL fixtures; the sweep emits
 a `violations` column that must be 0.
@@ -29,11 +31,9 @@ from __future__ import annotations
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions import geocode_exprs as GX
-from ..operators.meshing import cell_grid
+from ..operators.meshing import cell_grid, mesh_cells
 
 # benchmark_workflow.cpp:554-555
 PARAM_MAX_ERROR = [
@@ -48,7 +48,7 @@ PARAM_THRESHOLD = [0.1, 0.2, 0.3, 0.5, 0.8, 1.0, 1.2, 1.4, 1.6, 1.8, 2.0, 2.5, 3
 SWEEP_SCHEMA = (
     "tile_x BIGINT, tile_y BIGINT, n_points BIGINT, n_vertices INT, "
     "n_faces INT, mesh_seconds DOUBLE, err_n BIGINT, err_mean DOUBLE, "
-    "err_std DOUBLE, err_max DOUBLE"
+    "err_std DOUBLE, max_err DOUBLE"
 )
 
 CSV_HEADER = (
@@ -58,106 +58,23 @@ CSV_HEADER = (
 )
 
 
-def _make_sweep_kernel(zoom: int, grid_bits: int, buffer_cells: int,
-                       method: str, max_error: float, step: int,
-                       threshold: float = float("nan")):
-    g = 1 << grid_bits
-    b = buffer_cells
-    tile_m = GX.tile_size_meters(zoom)
-    cellsize = tile_m / g
-    hc = GX.HALF_CIRCUMFERENCE
-
-    def sweep_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-        import time
-
-        from tin_terrain_spark.kernels.dense import generate_tin_dense_quadwalk
-        from tin_terrain_spark.kernels.mesh2raster import measure_error, rasterise_mesh
-        from tin_terrain_spark.kernels.raster import Grid
-        from tin_terrain_spark.kernels.terra import generate_tin_terra
-        from tin_terrain_spark.kernels.zemlya import generate_tin_zemlya
-
-        tile_x = int(pdf["tile_x"].iloc[0])
-        tile_y = int(pdf["tile_y"].iloc[0])
-        size = g + 2 * b
-        z = np.full((size, size), np.nan)
-        z[pdf["row_b"].to_numpy(), pdf["col_b"].to_numpy()] = (
-            pdf["z_sum"].to_numpy() / pdf["z_cnt"].to_numpy()
-        )
-        n_points = int(
-            pdf.loc[
-                (pdf["row_b"] >= b) & (pdf["row_b"] < g + b)
-                & (pdf["col_b"] >= b) & (pdf["col_b"] < g + b),
-                "z_cnt",
-            ].sum()
-        )
-        res = 2.0 * hc / 256.0 / (1 << zoom)
-        grid = Grid(
-            z,
-            xpos=tile_x * 256.0 * res - hc - b * cellsize,
-            ypos=tile_y * 256.0 * res - hc - b * cellsize,
-            cellsize=cellsize,
-            ndv=np.nan,
-        )
-        t0 = time.perf_counter()
-        if method == "terra":
-            verts, faces = generate_tin_terra(grid, max_error)
-        elif method == "zemlya":
-            verts, faces = generate_tin_zemlya(grid, max_error)
-        elif method == "dense":
-            verts, faces = generate_tin_dense_quadwalk(grid, step)
-        elif method == "curvature":
-            from tin_terrain_spark.kernels.curvature import generate_tin_curvature
-
-            verts, faces = generate_tin_curvature(grid, threshold)
-        else:
-            raise ValueError(f"unknown meshing method {method!r}")
-        mesh_seconds = time.perf_counter() - t0
-
-        err_n, err_mean, err_std, err_max = 0, 0.0, 0.0, float("nan")
-        if len(faces):
-            r = rasterise_mesh(verts, faces, size, size)
-            src = Grid(np.where(np.isnan(z), -99999.0, z), ndv=-99999.0)
-            err_mean, err_std, err_max, err_n, _ = measure_error(r, src)
-            if err_n == 0:
-                err_max = float("nan")
-
-        return pd.DataFrame(
-            [
-                {
-                    "tile_x": tile_x,
-                    "tile_y": tile_y,
-                    "n_points": n_points,
-                    "n_vertices": int(len(verts)),
-                    "n_faces": int(len(faces)),
-                    "mesh_seconds": mesh_seconds,
-                    "err_n": int(err_n),
-                    "err_mean": float(err_mean),
-                    "err_std": float(err_std),
-                    "err_max": float(err_max),
-                }
-            ]
-        )
-
-    return sweep_tile
-
-
 def run_parametrization(points: DataFrame, zoom: int, method: str,
                         max_error: float = float("nan"), step: int = -1,
                         threshold: float = float("nan"),
                         grid_bits: int = 5, buffer_cells: int = 2,
                         cells: DataFrame | None = None) -> dict:
-    """One (method, param) run: distributed mesh+measure over all tiles,
-    exact moment merge to a single StatsRow-shaped dict."""
-    spark = points.sparkSession
+    """One (method, param) run: the mesh_cells stage with error
+    measurement over all tiles (per-tile SWEEP_SCHEMA rows, terrain
+    encoding off), exact moment merge to a single StatsRow-shaped
+    dict."""
     if cells is None:
         cells = cell_grid(points, zoom, grid_bits, buffer_cells)
-    cells = cells.repartition(
-        spark.sparkContext.defaultParallelism, "tile_x", "tile_y"
+    # curvature reads its threshold through the kernel's max_error slot
+    per_tile = mesh_cells(
+        cells, zoom, grid_bits, buffer_cells, method,
+        threshold if method == "curvature" else max_error, step,
+        compute_error=True, encode_terrain=False, columns=SWEEP_SCHEMA,
     )
-    kernel = _make_sweep_kernel(
-        zoom, grid_bits, buffer_cells, method, max_error, step, threshold
-    )
-    per_tile = cells.groupBy("tile_x", "tile_y").applyInPandas(kernel, SWEEP_SCHEMA)
 
     is_terra_like = method in ("terra", "zemlya")
     agg = per_tile.agg(
@@ -173,10 +90,10 @@ def run_parametrization(points: DataFrame, zoom: int, method: str,
             (F.col("err_std") * F.col("err_std") + F.col("err_mean") * F.col("err_mean"))
             * F.col("err_n")
         ).alias("sd2"),
-        F.max("err_max").alias("max_error"),
+        F.max("max_err").alias("max_error"),
         (
             F.sum(
-                F.when(F.col("err_max") > max_error, 1).otherwise(0)
+                F.when(F.col("max_err") > max_error, 1).otherwise(0)
             ).alias("violations")
             if is_terra_like
             else F.lit(0).alias("violations")
@@ -196,7 +113,7 @@ def run_parametrization(points: DataFrame, zoom: int, method: str,
         "meshing_time_seconds": agg["meshing_time_seconds"],
         "standard_dev_error": float(np.sqrt(max(var, 0.0))) if n else nanf,
         "mean_error": mean,
-        # null when every tile's err_max was NaN (pandas NaN → Spark null)
+        # null when every tile's max_err was NaN (pandas NaN → Spark null)
         "max_error": nanf if agg["max_error"] is None else agg["max_error"],
         "num_vertices": agg["num_vertices"],
         "num_faces": agg["num_faces"],

@@ -19,7 +19,7 @@ import os
 
 import numpy as np
 
-from ..kernels.raster import Grid
+from ..kernels.tin import generate_tin
 
 FORMATS = ("obj", "off", "terrain", "json", "geojson")
 
@@ -30,29 +30,6 @@ _EXT2FMT = {
     ".json": "geojson",
     ".geojson": "geojson",
 }
-
-
-def generate_tin(grid: Grid, method: str = "terra", max_error: float = 2.0,
-                 step: int = 1):
-    """method dispatch mirroring cmd.cpp:352-392 (terra | zemlya |
-    dense)."""
-    if method == "terra":
-        from ..kernels.terra import generate_tin_terra
-
-        return generate_tin_terra(grid, max_error)
-    if method == "zemlya":
-        from ..kernels.zemlya import generate_tin_zemlya
-
-        return generate_tin_zemlya(grid, max_error)
-    if method == "dense":
-        from ..kernels.dense import generate_tin_dense_quadwalk
-
-        return generate_tin_dense_quadwalk(grid, step)
-    if method == "curvature":
-        from ..kernels.curvature import generate_tin_curvature
-
-        return generate_tin_curvature(grid, max_error)
-    raise ValueError(f"unknown meshing method {method!r}")
 
 
 def write_mesh_file(verts: np.ndarray, faces: np.ndarray, output_file: str,

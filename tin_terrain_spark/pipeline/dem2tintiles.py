@@ -1,16 +1,19 @@
 """The flagship job chain: dem2tintiles as a per-zoom pyramid build.
 
 Mirrors the reference's driver loop (src/cmd.cpp:179-228 →
-dem2tintiles_workflow.cpp), Spark-first (SURVEY.md §3.1):
+dem2tintiles_workflow.cpp), Spark-first (SURVEY.md §3.1). ONE loop,
+mesh_pyramid, serves documents (build_tile_pyramid geocodes them) and
+rasters (the CLI keys them with sources.geotiff.assign_tile_keys), both
+keyed (cell_x, cell_y, z) at the finest zoom:
 
-  geocode once at the FINEST zoom's cell resolution
-    → base_cells: the single heavy shuffle (map-side combined)
+  base_cells: the single heavy shuffle (map-side combined)
     → persist
     → for zoom in max_zoom..min_zoom (descending, like
       RasterOverviews::next):
         rollup_cells (Y2 overview reuse — no raw re-scan)
-        cell_grid buffer fan-out (Y3) → mesh_tiles kernel (Y4)
-        write parquet to {out}/zoom={z}/ (overwrite = idempotent)
+        cell_grid buffer fan-out (Y3) → mesh_cells stage (Y4)
+        write parquet to {out}/zoom={z}/ (overwrite = idempotent), or
+        MERGE into a tile catalog
         append a manifest row (Y5 resume lineage)
 
 Resume: a zoom level whose manifest row exists and whose _SUCCESS file
@@ -32,8 +35,9 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions import geocode_exprs as GX
+from ..kernels.tin import check_method
 from ..operators.geocode import geocode_points
-from ..operators.meshing import TILE_SCHEMA, _make_stream_kernel, base_cells, cell_grid, rollup_cells
+from ..operators.meshing import base_cells, cell_grid, mesh_cells, rollup_cells
 
 
 def _manifest_path(out_dir: str) -> str:
@@ -65,8 +69,35 @@ def build_tile_pyramid(
     resume: bool = True,
     id_col: str = "doc_id",
     catalog=None,
+    step: int = 1,
 ) -> dict[int, dict]:
-    """Run the pyramid; returns the manifest (zoom → stats).
+    """Documents → pyramid: geocode at the finest zoom (coarser zooms
+    roll up), then mesh_pyramid. Returns the manifest (zoom → stats)."""
+    pts = geocode_points(docs, id_col=id_col, zoom=max_zoom, grid_bits=grid_bits)
+    return mesh_pyramid(
+        spark, pts, out_dir, min_zoom=min_zoom, max_zoom=max_zoom,
+        grid_bits=grid_bits, buffer_cells=buffer_cells, method=method,
+        max_error=max_error, step=step, resume=resume, catalog=catalog,
+    )
+
+
+def mesh_pyramid(
+    spark: SparkSession,
+    points: DataFrame,
+    out_dir: str,
+    min_zoom: int = 0,
+    max_zoom: int = 4,
+    grid_bits: int = 5,
+    buffer_cells: int = 2,
+    method: str = "terra",
+    max_error: float | None = None,
+    step: int = 1,
+    resume: bool = True,
+    catalog=None,
+) -> dict[int, dict]:
+    """THE pyramid loop over points keyed (cell_x, cell_y, z) at
+    `max_zoom` — geocoded documents or assign_tile_keys'd rasters.
+    Returns the manifest (zoom → stats).
 
     With `catalog` (a sources.iceberg.TileCatalog — Iceberg MERGE on a
     cluster, LocalTileCatalog locally), the sink is the catalog's
@@ -75,12 +106,11 @@ def build_tile_pyramid(
     so a resumed run recomputes only the missing tiles (the
     transactional replacement for the per-zoom _SUCCESS marker, which
     still gates whole completed zooms)."""
+    check_method(method)
     os.makedirs(out_dir, exist_ok=True)
     manifest = read_manifest(out_dir) if resume else {}
 
-    # geocode at the finest zoom; coarser zooms roll up
-    pts = geocode_points(docs, id_col=id_col, zoom=max_zoom, grid_bits=grid_bits)
-    base = base_cells(pts).persist()
+    base = base_cells(points).persist()
     try:
         for zoom in range(max_zoom, min_zoom - 1, -1):
             zdir = os.path.join(out_dir, f"zoom={zoom}")
@@ -105,13 +135,7 @@ def build_tile_pyramid(
                 # per-zoom resolution re-default
                 else GX.tile_size_meters(zoom + grid_bits) / 10000.0
             )
-            kernel = _make_stream_kernel(
-                zoom, grid_bits, buffer_cells, method, me, 1, False, True
-            )
-            grid = grid.repartition(
-                spark.sparkContext.defaultParallelism, "tile_x", "tile_y"
-            ).sortWithinPartitions("tile_x", "tile_y")
-            tiles = grid.mapInPandas(kernel, TILE_SCHEMA)
+            tiles = mesh_cells(grid, zoom, grid_bits, buffer_cells, method, me, step)
             if catalog is not None:
                 catalog.merge(tiles)
                 n_tiles = catalog.read().where(f"zoom = {zoom}").count()
@@ -127,6 +151,7 @@ def build_tile_pyramid(
                 "n_tiles": n_tiles,
                 "method": method,
                 "max_error": me,
+                "step": step,
                 "grid_bits": grid_bits,
                 "buffer_cells": buffer_cells,
                 "seconds": round(time.time() - t0, 3),

@@ -39,16 +39,9 @@ GRID_BITS = 5
 # exactly the dup-heavy case. Uncompressed bytes (8 MiB) catch
 # few-but-huge-doc corpora the row gate would miss. Compressed file
 # size (1 MiB) is the fallback when no footer is readable.
-# All three env-overridable (scripts/ab_spread.py re-measures).
-_SPREAD_MIN_ROWS = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_MIN_ROWS", str(16 * 1024))
-)
-_SPREAD_MIN_UBYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_MIN_UBYTES", str(8 * 1024 * 1024))
-)
-_SPREAD_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_SPREAD_MIN_BYTES", str(1024 * 1024))
-)
+_SPREAD_MIN_ROWS = 16 * 1024
+_SPREAD_MIN_UBYTES = 8 * 1024 * 1024
+_SPREAD_MIN_BYTES = 1024 * 1024
 
 
 def _spread_pays(path: str) -> bool:
@@ -109,9 +102,11 @@ def _docs(spark: SparkSession, sf_dir: str,
     each) and WINS at sf1.0, so the raw scan is kept exactly where it
     is the faster plan. Result rows are identical either way (a
     repartition reorders, never edits)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    if spread == "auto":
+    if isinstance(spread, str):
+        if spread != "auto":
+            raise ValueError(f"spread must be True, False or 'auto', not {spread!r}")
         spread = _spread_pays(f"{sf_dir}/documents.parquet")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     if not spread:
         return docs
     return docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
