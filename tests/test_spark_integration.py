@@ -38,6 +38,36 @@ def test_geocode_in_range(points):
     assert row[4] >= 0 and row[5] <= 3  # zoom 2 → 4 tiles per side
 
 
+def test_geocode_ids_past_int64_product_range(spark):
+    """Ids whose product with the hash multipliers overflows BIGINT,
+    and a negative id, geocode in Spark and in DuckDB (the oracles
+    share the SQL), equal to a Python big-int evaluation of the hash."""
+    import duckdb
+
+    from tin_terrain_spark.functions import geocode_exprs as GX
+    from tin_terrain_spark.operators.geocode import geocode_points
+
+    ids = [3_470_000_000, 5_000_000_000, 2**62, 2**63 - 1, -1]
+    mod, hc = 2147483647, GX.HALF_CIRCUMFERENCE
+
+    def u(i, m1, a1, m2, a2):
+        return float(((i * m1 + a1) % mod * m2 + a2) % mod) / float(mod)
+
+    want = {
+        i: (-hc + 2.0 * hc * u(i, *GX._STREAMS["u1"]),
+            -hc + 2.0 * hc * u(i, *GX._STREAMS["u2"]),
+            -100.0 + 200.0 * u(i, *GX._STREAMS["u3"]))
+        for i in ids
+    }
+    df = spark.createDataFrame([(i,) for i in ids], "doc_id bigint")
+    got = {r.doc_id: (r.x, r.y, r.z_h) for r in geocode_points(df).collect()}
+    assert got == want
+    sql = (f"SELECT doc_id, {GX.mercator_x_sql('doc_id')}, {GX.mercator_y_sql('doc_id')}, "
+           f"{GX.hash_z_sql('doc_id')} FROM (SELECT unnest(?::BIGINT[]) AS doc_id)")
+    rows = duckdb.connect().execute(sql, [ids]).fetchall()
+    assert {r[0]: tuple(r[1:]) for r in rows} == want
+
+
 def test_tile_key_matches_numpy_kernel(points):
     """Column-expression tile keys == NumPy kernel tile keys (the two
     implementations must agree bit-for-bit)."""

@@ -2,9 +2,9 @@
 
 One source of truth for BOTH engines: each function returns an ANSI-SQL
 string that parses identically in Spark SQL and DuckDB, using only
-integer multiply/add/mod (no overflow at our id ranges — max id ~1e7,
-max intermediate ~5e18 < 2^63) and IEEE-double +,-,*,/ with
-ceil/floor — every operation is exactly rounded, so Spark and DuckDB
+integer multiply/add/mod (the id is reduced mod 2^31 - 1 first, so no
+intermediate reaches 2^63 for any BIGINT id) and IEEE-double +,-,*,/
+with ceil/floor — every operation is exactly rounded, so Spark and DuckDB
 produce bit-identical doubles.
 
 Geocoding (FIXTURES.md §1): pages are placed uniformly in Web-Mercator
@@ -38,10 +38,19 @@ _STREAMS = {
 
 def u_hash_sql(id_col: str, stream: str) -> str:
     """Uniform [0,1) double from a bigint id — exact integer arithmetic,
-    identical in Spark and DuckDB."""
+    identical in Spark and DuckDB.
+
+    The id is reduced to [0, _MOD) before the first multiply, so every
+    BIGINT id hashes without overflow (ANSI mode raises on it): the
+    intermediates stay below _MOD * 2654435789 + 2^32 < 2^63. By
+    congruence the hash equals the unreduced form for every id that
+    form accepted (0 up to ~3.47e9). Both engines' % truncates toward
+    zero, so `(r + _MOD) % _MOD` maps a negative id's remainder into
+    range too: -1 hashes as _MOD - 1."""
     m1, a1, m2, a2 = _STREAMS[stream]
+    r = f"(((CAST({id_col} AS BIGINT) % {_MOD}) + {_MOD}) % {_MOD})"
     return (
-        f"(CAST((((CAST({id_col} AS BIGINT) * {m1} + {a1}) % {_MOD}) * {m2} + {a2}) % {_MOD} "
+        f"(CAST(((({r} * {m1} + {a1}) % {_MOD}) * {m2} + {a2}) % {_MOD} "
         f"AS DOUBLE) / {dlit(_MOD)})"
     )
 
