@@ -111,28 +111,6 @@ def test_pagerank_n_nodes_param(spark):
     assert a == b and len(a) == 12
 
 
-def test_knn_ring_cache_inputs_off(spark, points):
-    """cache_inputs=False (the 10^12-row escape hatch) must return the
-    same rows as the default cached path."""
-    from tin_terrain_spark.operators.joins import knn_ring
-
-    queries = points.filter(F.col("doc_id") < 8).select(
-        F.col("doc_id").alias("q_id"), "x", "y", "cell_x", "cell_y"
-    )
-    others = points.filter(F.col("doc_id") >= 8)
-    cached = {
-        (r.q_id, r.rank): (r.doc_id, r.dist2)
-        for r in knn_ring(others, queries, 2, 5, k=5).collect()
-    }
-    uncached = {
-        (r.q_id, r.rank): (r.doc_id, r.dist2)
-        for r in knn_ring(
-            others, queries, 2, 5, k=5, cache_inputs=False
-        ).collect()
-    }
-    assert cached == uncached and len(cached) == 40
-
-
 def test_incr_dedup_array_refine(spark):
     """dedup_against_store's array-set refine: a verbatim duplicate of
     a stored doc must resolve as a dup of it with jaccard 1.0; a fresh

@@ -193,6 +193,75 @@ def test_knn_density_ring_equals_brute(spark, points):
     assert b == sh
 
 
+def _knn_corpus(spark, kind, k, zoom, grid_bits):
+    """Points (doc_id, x, y, cell_x, cell_y) and queries (q_id, x, y,
+    cell_x, cell_y) for the degenerate corpora _density_ring branches
+    on: collinear (> 32·k points, zero-area bbox), every point
+    identical (> 32·k), and tiny (<= 32·k, the brute plan)."""
+    import pyspark.sql.functions as F
+
+    from tin_terrain_spark.functions.geocode_exprs import tile_sql
+
+    rng = np.random.default_rng(97)
+    n = 32 * k + 40
+    if kind == "collinear":
+        xs = np.sort(rng.uniform(-5e6, 5e6, n))
+        pts = [(i, float(x), 1234.5) for i, x in enumerate(xs)]
+        qs = [(i, float(x), 1234.5 + float(dy)) for i, (x, dy) in
+              enumerate(zip(rng.uniform(-5e6, 5e6, 6), rng.uniform(-900, 900, 6)))]
+    elif kind == "identical":
+        pts = [(i, 1.25e6, -2.5e6) for i in range(n)]
+        qs = [(i, 1.25e6 + float(dx), -2.5e6 + float(dy)) for i, (dx, dy) in
+              enumerate(zip(rng.uniform(-5e3, 5e3, 6), rng.uniform(-5e3, 5e3, 6)))]
+    else:
+        xy = rng.uniform(-1.5e7, 1.5e7, (32 * k, 2))
+        pts = [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)]
+        qs = [(i, float(x), float(y)) for i, (x, y) in
+              enumerate(rng.uniform(-1.5e7, 1.5e7, (6, 2)))]
+
+    def cells(rows, id_col):
+        df = spark.createDataFrame(rows, f"{id_col} BIGINT, x DOUBLE, y DOUBLE")
+        return df.select(
+            id_col, "x", "y",
+            F.expr(tile_sql("x", zoom + grid_bits)).alias("cell_x"),
+            F.expr(tile_sql("y", zoom + grid_bits)).alias("cell_y"),
+        )
+
+    return cells(pts, "doc_id"), cells(qs, "q_id")
+
+
+@pytest.mark.parametrize("variant", ["ring_broadcast", "ring_shuffle", "hex"])
+@pytest.mark.parametrize("corpus", ["collinear", "identical", "tiny"])
+def test_knn_degenerate_corpora_equal_brute(spark, corpus, variant):
+    """The density-sizing edge branches — a collinear corpus (1-D
+    density), every point identical (ring 1) and a corpus of at most
+    32·k points (the brute plan) — each return knn_brute's rows. The
+    brute plan is lazy: the call leaves no RDD persisted."""
+    from tin_terrain_spark.functions.geocode_exprs import tile_size_meters
+    from tin_terrain_spark.operators.joins import knn_brute, knn_hex, knn_ring
+
+    k, zoom, grid_bits = 5, 2, 5
+    pts, queries = _knn_corpus(spark, corpus, k, zoom, grid_bits)
+    jsc = spark.sparkContext._jsc.sc()
+    n_persisted = jsc.getPersistentRDDs().size()
+    if variant == "hex":
+        out = knn_hex(pts, queries.select("q_id", "x", "y"),
+                      tile_size_meters(zoom + grid_bits), k=k)
+    else:
+        out = knn_ring(pts, queries, zoom, grid_bits, k=k,
+                       cell_join=variant.split("_")[1])
+    got = sorted(tuple(r) for r in out.select("q_id", "rank", "doc_id", "dist2").collect())
+    want = sorted(
+        tuple(r) for r in knn_brute(pts, queries.select("q_id", "x", "y"), k=k)
+        .select("q_id", "rank", "doc_id", "dist2").collect()
+    )
+    assert len(want) == 6 * k and got == want
+    if corpus == "tiny":
+        assert jsc.getPersistentRDDs().size() == n_persisted
+    else:
+        out.unpersist()
+
+
 def test_with_h3_id_packs_axial(spark, points):
     """H3-layout ids over the hex grid: every packed id must be a valid
     cell-mode H3 index that decodes back to its row's axial cell."""
@@ -507,21 +576,101 @@ def test_ann_ivf_recall(spark):
 
 
 def test_lsh_hot_bucket_star(spark):
-    """A degenerate bucket (identical boilerplate docs > bucket_cap)
+    """A degenerate bucket (identical boilerplate docs > BUCKET_CAP)
     must still connect the whole cluster — as a hub star (O(bucket)
     pairs), never O(n²), and never dropped."""
-    from tin_terrain_spark.operators.dedup import lsh_candidates
+    from tin_terrain_spark.operators.dedup import BUCKET_CAP, lsh_candidates
 
-    n_hot = 30
+    n_hot = BUCKET_CAP + 10
+    uniq = 10_000  # ids of the unrelated docs, above every hot id
     rows = [(i, "the same boilerplate page text repeated verbatim here") for i in range(n_hot)]
-    rows += [(100 + i, f"unique document number {i} with its own words entirely") for i in range(5)]
+    rows += [(uniq + i, f"unique document number {i} with its own words entirely") for i in range(5)]
     docs = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
-    pairs = lsh_candidates(docs, bucket_cap=10).collect()
-    hot = [(p.doc_a, p.doc_b) for p in pairs if p.doc_a < 100 and p.doc_b < 100]
+    pairs = lsh_candidates(docs).collect()
+    hot = [(p.doc_a, p.doc_b) for p in pairs if p.doc_a < uniq and p.doc_b < uniq]
     # star: exactly n_hot-1 pairs, all anchored at the min id
     assert len(hot) == n_hot - 1
     assert all(a == 0 for a, _ in hot)
     assert sorted(b for _, b in hot) == list(range(1, n_hot))
+
+
+def _shingle_set(text, n=3):
+    toks = text.split(" ")
+    if len(toks) < n:
+        return {" ".join(toks)}
+    return {" ".join(toks[i:i + n]) for i in range(len(toks) - n + 1)}
+
+
+def test_store_probe_hot_bucket_equals_brute_jaccard(spark):
+    """dedup_against_store against a store holding a hot LSH bucket
+    (BUCKET_CAP + 20 identical docs), near duplicates and unrelated
+    docs, checked against a brute-force shingle-set Jaccard: every
+    duplicate verdict names the smallest qualifying store doc with its
+    exact Jaccard, verbatim copies are always caught, and every doc
+    with no qualifying store doc is admitted."""
+    from tin_terrain_spark.operators.dedup import (
+        BUCKET_CAP, band_keys, dedup_against_store, shingles_df,
+    )
+
+    rng = np.random.default_rng(431)
+
+    def fresh():
+        return [f"w{t}" for t in rng.integers(0, 3000, int(rng.integers(20, 40)))]
+
+    def perturb(toks):
+        out = list(toks)
+        out[int(rng.integers(0, len(out)))] = f"w{int(rng.integers(0, 3000))}"
+        return out
+
+    hot = " ".join(fresh())
+    store = {i: hot for i in range(BUCKET_CAP + 20)}
+    originals = [fresh() for _ in range(15)]
+    for t in originals:
+        store[1000 + len(store)] = " ".join(t)
+    for t in originals[:8]:
+        store[1000 + len(store)] = " ".join(perturb(t))
+    for _ in range(25):
+        store[1000 + len(store)] = " ".join(fresh())
+
+    verbatim = {5000: hot, 5001: store[1000 + BUCKET_CAP + 20]}
+    probe = dict(verbatim)
+    for t in originals:
+        probe[5000 + len(probe)] = " ".join(perturb(t))
+    for _ in range(15):
+        probe[5000 + len(probe)] = " ".join(fresh())
+
+    def df(docs):
+        return spark.createDataFrame(sorted(docs.items()), "doc_id BIGINT, text STRING")
+
+    store_df, probe_df = df(store), df(probe)
+    out = {
+        r.doc_id: r
+        for r in dedup_against_store(
+            probe_df, band_keys(store_df), shingles_df(store_df), 0.5
+        ).collect()
+    }
+    assert set(out) == set(probe)
+
+    sets = {d: _shingle_set(t) for d, t in store.items()}
+    for d, text in probe.items():
+        a = _shingle_set(text)
+        qualifying = {}
+        for s_id, b in sets.items():
+            n_inter = len(a & b)
+            jac = round(n_inter / (len(a) + len(b) - n_inter), 6)
+            if n_inter >= 1 and jac >= 0.5:
+                qualifying[s_id] = jac
+        r = out[d]
+        if r.is_dup:
+            best = min(qualifying)
+            assert (r.dup_of, r.jaccard) == (best, qualifying[best]), d
+        else:
+            assert r.dup_of is None and r.jaccard is None
+        if not qualifying:
+            assert not r.is_dup, d
+        if d in verbatim:
+            assert r.is_dup and r.jaccard == 1.0, d
+    assert out[5000].dup_of == 0
 
 
 def test_short_doc_shingles(spark):

@@ -111,11 +111,3 @@ def tile_min_sql(t_sql: str, zoom: int, tile_size: int = TILE_SIZE) -> str:
 
 def tile_size_meters(zoom: int) -> float:
     return 2.0 * HALF_CIRCUMFERENCE / (1 << zoom)
-
-
-def url_sql(id_col: str) -> str:
-    """FIXTURES.md §1 synthetic url, 1:1 with the page id."""
-    return (
-        f"CONCAT('https://host', CAST({id_col} % 100 AS STRING), "
-        f"'.example/p/', CAST({id_col} AS STRING))"
-    )

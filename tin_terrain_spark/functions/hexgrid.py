@@ -91,12 +91,6 @@ def hex_cell_subquery_sql(inner_sql: str, size: float,
     """
 
 
-def hex_dist_cols(dq, dr):
-    """Axial hex distance as a Column expression from coordinate
-    deltas: (|dq| + |dr| + |dq + dr|) / 2 (integer-exact)."""
-    return (F.abs(dq) + F.abs(dr) + F.abs(dq + dr)) / 2
-
-
 def hex_ring_guarantee_m(ring: int, size: float) -> float:
     """Euclidean distance below which NOTHING outside hex-ring `ring`
     can lie (see module docstring geometry)."""

@@ -2,8 +2,6 @@
 
 Semantics follow the reference:
   triArea / ccw / inCircle (EPS=1e-6 bias)  include/tntn/QuadEdge.h:6,13-44
-  Plane through 3 points                    include/tntn/QuadEdge.h:67-104
-  bbox intersects/contains (eps-padded)     src/geometrix.cpp:234-260
   barycentric interpolate (bounds incl.)    src/SuperTriangle.cpp:32-49
   sign_2D half-plane test                   src/geometrix.cpp:462-517
   segment × line intersection (2.5D)        src/geometrix.cpp:417-460
@@ -41,17 +39,6 @@ def in_circle(ax, ay, bx, by, cx, cy, dx, dy):
     ) > IN_CIRCLE_EPS
 
 
-def plane_from_points(p, q, r):
-    """z = a*x + b*y + c through 3 (x,y,z) points (QuadEdge.h:84-104)."""
-    ux, uy, uz = q[0] - p[0], q[1] - p[1], q[2] - p[2]
-    vx, vy, vz = r[0] - p[0], r[1] - p[1], r[2] - p[2]
-    den = ux * vy - uy * vx
-    a = (uz * vy - uy * vz) / den
-    b = (ux * vz - uz * vx) / den
-    c = p[2] - a * p[0] - b * p[1]
-    return a, b, c
-
-
 def barycentric_interpolate(v1, v2, v3, x, y):
     """Vectorized barycentric z-interpolation with *inclusive* 0..1
     bounds — the reference's edge-tie rule (SuperTriangle.cpp:32-49).
@@ -69,29 +56,6 @@ def barycentric_interpolate(v1, v2, v3, x, y):
         (0 <= w1) & (w1 <= 1) & (0 <= w2) & (w2 <= 1) & (0 <= w3) & (w3 <= 1)
     )
     return z, inside
-
-
-def bbox_intersects(amin, amax, bmin, bmax, eps: float = 1e-9):
-    """Epsilon-grown rectangle overlap (geometrix.cpp:234-254)."""
-    if amin[1] - eps > bmax[1] + eps:
-        return False
-    if amax[1] + eps < bmin[1] - eps:
-        return False
-    if amax[0] + eps < bmin[0] - eps:
-        return False
-    if amin[0] - eps > bmax[0] + eps:
-        return False
-    return True
-
-
-def bbox_contains(bmin, bmax, x, y, eps: float = 1e-9):
-    """Vectorized eps-padded point-in-box (geometrix.cpp:256-260)."""
-    return (
-        (bmin[0] - eps <= x)
-        & (bmin[1] - eps <= y)
-        & (bmax[0] + eps >= x)
-        & (bmax[1] + eps >= y)
-    )
 
 
 def sign_2d(px, py, l_org, l_dir):

@@ -9,11 +9,10 @@ Mirrors /root/reference/src/Mesh2Raster.cpp:
   measureError         :351-491 (Welford single-pass variance, 2-px
                         border excluded, both-valid pixels only;
                         ndv test is `!= ndv` without isnan)
-  findRMSError         :257-349 (sqrt(mean(d²)), same masking)
 
-The distributed analogues (A4/A5 as join+agg) live in
-tin_terrain_spark.operators.aggregates; this kernel is the per-tile /
-test-oracle path.
+The distributed analogues (A4 and findRMSError :257-349 as join+agg)
+are the error_stats query (queries.q_error_stats, rms_err); this
+kernel is the per-tile / test-oracle path.
 """
 
 from __future__ import annotations
@@ -109,15 +108,3 @@ def measure_error(r1: Grid, r2: Grid):
     inner = emap[2 : h - 2, 2 : w - 2]
     inner[valid] = np.abs(d[valid])
     return (mean, std, max_abs, n, emap)
-
-
-def rms_error(r1: Grid, r2: Grid) -> float:
-    """sqrt(mean(d²)) with the same masking (Mesh2Raster.cpp:257-349)."""
-    h, w = r1.z.shape
-    a = r1.z[2 : h - 2, 2 : w - 2]
-    b = r2.z[2 : h - 2, 2 : w - 2]
-    valid = (a != r1.ndv) & (b != r2.ndv)
-    if not valid.any():
-        return 0.0
-    d = (a - b)[valid]
-    return float(np.sqrt(np.mean(d * d)))

@@ -229,11 +229,6 @@ def _circle_offsets(radius: int) -> np.ndarray:
     return arr
 
 
-def count_value(grid: Grid, v: float) -> int:
-    """Raster::count (Raster.h:162-174)."""
-    return int((grid.z == v).sum())
-
-
 def nearest_valid_avg_batch(
     grid: Grid, rows: np.ndarray, cols: np.ndarray, min_samples: int = 1
 ) -> np.ndarray:

@@ -151,13 +151,32 @@ def minhash_signatures(docs: DataFrame) -> DataFrame:
 
 
 BUCKET_CAP = 100
+BANDS = 4  # rows_per_band = len(MINHASH_FUNCS) // BANDS
 
 
-def lsh_candidates(docs: DataFrame, bands: int = 4, bucket_cap: int = BUCKET_CAP) -> DataFrame:
-    """Band the signature (rows_per_band = n_funcs/bands) and bucket by
-    the band tuple; emit candidate pairs (a<b) per band, deduped.
+def band_keys(docs: DataFrame) -> DataFrame:
+    """(doc_id, band, band_key) — the storable LSH band index of a
+    corpus (what a production pipeline WRITES when a batch is
+    admitted, so later batches can dedup against it without touching
+    the corpus text). The band key is a deterministic fold of the
+    band's minhashes (order-free sum of position-weighted values —
+    portable integer math)."""
+    rows_per_band = len(MINHASH_FUNCS) // BANDS
+    sig = minhash_signatures(docs).withColumn(
+        "band", (F.col("func_id") / rows_per_band).cast("int")
+    )
+    return sig.groupBy("doc_id", "band").agg(
+        F.sum(
+            (F.col("func_id") % rows_per_band + 1) * F.col("minhash")
+        ).alias("band_key")
+    )
 
-    Hot-bucket guard: buckets larger than bucket_cap do NOT self-join —
+
+def lsh_candidates(docs: DataFrame) -> DataFrame:
+    """Bucket docs by their band keys (band_keys); emit candidate pairs
+    (a<b) per band, deduped.
+
+    Hot-bucket guard: buckets larger than BUCKET_CAP do NOT self-join —
     a single degenerate bucket (all-identical boilerplate pages, the
     common case in web data) would otherwise emit O(n²) pairs. Instead
     each hot bucket emits a deterministic HUB STAR: every member pairs
@@ -173,62 +192,47 @@ def lsh_candidates(docs: DataFrame, bands: int = 4, bucket_cap: int = BUCKET_CAP
     rows per doc, released by bench/gate clearCache or the caller."""
     from pyspark.sql import Window as W
 
-    rows_per_band = len(MINHASH_FUNCS) // bands
-    sig = minhash_signatures(docs).withColumn(
-        "band", (F.col("func_id") / rows_per_band).cast("int")
-    )
-    # band key = deterministic fold of the band's minhashes (order-free sum
-    # of position-weighted values — portable integer math)
-    band_key = sig.groupBy("doc_id", "band").agg(
-        F.sum((F.col("func_id") % rows_per_band + 1) * F.col("minhash")).alias("band_key")
-    )
     wb = W.partitionBy("band", "band_key")
-    band_key = band_key.withColumn("_bsz", F.count(F.lit(1)).over(wb)).withColumn(
+    band_key = band_keys(docs).withColumn("_bsz", F.count(F.lit(1)).over(wb)).withColumn(
         "_bmin", F.min("doc_id").over(wb)
     ).persist()
-    small = band_key.filter(F.col("_bsz") <= bucket_cap)
+    small = band_key.filter(F.col("_bsz") <= BUCKET_CAP)
     a = small.select(F.col("doc_id").alias("doc_a"), "band", "band_key")
     b = small.select(F.col("doc_id").alias("doc_b"), "band", "band_key")
     pairs = a.join(b, ["band", "band_key"], "inner").filter(
         F.col("doc_a") < F.col("doc_b")
     )
     star = band_key.filter(
-        (F.col("_bsz") > bucket_cap) & (F.col("doc_id") != F.col("_bmin"))
+        (F.col("_bsz") > BUCKET_CAP) & (F.col("doc_id") != F.col("_bmin"))
     ).select(F.col("_bmin").alias("doc_a"), F.col("doc_id").alias("doc_b"))
     return pairs.select("doc_a", "doc_b").unionAll(star).distinct()
 
 
-def near_dup_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
-    """Exact shingle-set Jaccard (n-gram Jaccard) refine over the LSH
-    candidates — the same shingle universe the minhash estimates.
-
-    Round-6 shape: each doc's distinct shingle set is collected ONCE
-    into an array (collect_set — the per-doc distinct and the set
-    build in a single shuffle of the raw token stream), and the refine
-    is two equi-joins of the candidate pairs against that doc-count-
-    sized table with n_inter = size(array_intersect(..)) — exact set
-    intersection, identical to the previous count-of-matching-rows
-    formulation. The round-5 shape shuffled the full (doc, tok) string
-    stream three more times (both join sides + the size aggregate,
-    no Catalyst subtree reuse); this one shuffles it once and the
-    remaining joins carry one array row per doc. Array size is bounded
-    by document length (the shingle set of one doc), the same bound
-    the per-doc window formulations already rely on."""
-    cand = lsh_candidates(docs)
-    sets = (
-        shingles_df(docs, distinct=False)
-        .groupBy("doc_id")
+def _shingle_sets(shingles: DataFrame) -> DataFrame:
+    """(doc_id, tok) rows -> (doc_id, toks, sz): each doc's distinct
+    shingle set collected ONCE into an array (collect_set — the per-doc
+    distinct and the set build in a single shuffle of the raw token
+    stream) with its size. Array size is bounded by document length."""
+    return (
+        shingles.groupBy("doc_id")
         .agg(F.collect_set("tok").alias("toks"))
         .select("doc_id", "toks", F.size("toks").alias("sz"))
-        .persist()
     )
-    sets.count()  # materialize once: both join branches read the cache
-    sa = sets.select(
+
+
+def _jaccard_refine(cand: DataFrame, sets_a: DataFrame, sets_b: DataFrame,
+                    threshold: float) -> DataFrame:
+    """Exact shingle-set Jaccard of candidate pairs cand(doc_a, doc_b):
+    two equi-joins against the doc-count-sized set tables (_shingle_sets;
+    doc_a from sets_a, doc_b from sets_b), n_inter =
+    size(array_intersect(..)) — exact set intersection. Returns
+    (doc_a, doc_b, n_inter, jaccard) for pairs with jaccard >= threshold."""
+    sa = sets_a.select(
         F.col("doc_id").alias("doc_a"),
         F.col("toks").alias("toks_a"),
         F.col("sz").alias("sz_a"),
     )
-    sb = sets.select(
+    sb = sets_b.select(
         F.col("doc_id").alias("doc_b"),
         F.col("toks").alias("toks_b"),
         F.col("sz").alias("sz_b"),
@@ -271,6 +275,16 @@ def near_dup_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     return j.filter(F.col("jaccard") >= threshold).select(
         "doc_a", "doc_b", "n_inter", "jaccard"
     )
+
+
+def near_dup_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
+    """Exact shingle-set Jaccard (n-gram Jaccard) refine over the LSH
+    candidates — the same shingle universe the minhash estimates. The
+    batch's shingle sets are built once and cached for the call: both
+    sides of the refine read the same table."""
+    sets = _shingle_sets(shingles_df(docs, distinct=False)).persist()
+    sets.count()  # materialize once: both join branches read the cache
+    return _jaccard_refine(lsh_candidates(docs), sets, sets, threshold)
 
 
 def winnow_fingerprints(docs: DataFrame, window: int = 4, n: int = NGRAM) -> DataFrame:
@@ -651,35 +665,22 @@ def sql_span_dups(window: int = 4, n: int = NGRAM) -> str:
     """
 
 
-def band_keys(docs: DataFrame, bands: int = 4) -> DataFrame:
-    """(doc_id, band, band_key) — the storable LSH band index of a
-    corpus (what a production pipeline WRITES when a batch is
-    admitted, so later batches can dedup against it without touching
-    the corpus text)."""
-    rows_per_band = len(MINHASH_FUNCS) // bands
-    sig = minhash_signatures(docs).withColumn(
-        "band", (F.col("func_id") / rows_per_band).cast("int")
-    )
-    return sig.groupBy("doc_id", "band").agg(
-        F.sum(
-            (F.col("func_id") % rows_per_band + 1) * F.col("minhash")
-        ).alias("band_key")
-    )
-
-
 def dedup_against_store(
     new_docs: DataFrame,
     store_bands: DataFrame,
     store_shingles: DataFrame,
     threshold: float = 0.5,
-    bands: int = 4,
 ) -> DataFrame:
     """Incremental near-dup dedup: a NEW crawl batch against the
     STORED corpus index — the production daily shape. The corpus side
-    is two stored tables (band_keys + shingle sets, written once per
+    is two stored tables (band_keys + shingles, written once per
     admitted batch); the new batch computes only ITS OWN signatures,
     probes the band index with one equi-join, and Jaccard-refines the
-    candidates. Nothing re-LSHes or re-scans the existing corpus.
+    candidates (_jaccard_refine, doc_a = new, doc_b = stored). The
+    store is never re-LSHed, but every probe re-groups the WHOLE stored
+    shingle table into per-doc sets (collect_set; store rows are sets
+    per the store contract, so it is a no-op dedup), so probe cost
+    grows with the store, not only with the batch.
 
     Returns one row per new doc: (doc_id, dup_of, jaccard, is_dup) —
     dup_of the smallest store doc whose refined Jaccard ≥ threshold
@@ -687,76 +688,31 @@ def dedup_against_store(
     store multiplies candidates; a store may keep ≤K representatives
     per (band, band_key) to bound probe fan-out at a recall cost —
     this op takes the store as-given."""
-    nb = band_keys(new_docs, bands)
     cand = (
-        nb.join(
+        band_keys(new_docs).join(
             store_bands.select(
-                F.col("doc_id").alias("old_id"), "band", "band_key"
+                F.col("doc_id").alias("doc_b"), "band", "band_key"
             ),
             ["band", "band_key"],
         )
-        .select(F.col("doc_id").alias("new_id"), "old_id")
+        .select(F.col("doc_id").alias("doc_a"), "doc_b")
         .distinct()
     )
-    # array-set refine (same restructure as near_dup_pairs): one
-    # collect_set shuffle per side, then the candidate pairs join two
-    # doc-count-sized array tables; size(array_intersect) is the exact
-    # |A ∩ B| the row-count join computed. store_shingles rows are
-    # sets per the store contract, so collect_set is a no-op dedup.
-    ns = (
-        shingles_df(new_docs, distinct=False)
-        .groupBy("doc_id")
-        .agg(F.collect_set("tok").alias("toks_new"))
-        .select(
-            F.col("doc_id").alias("new_id"), "toks_new",
-            F.size("toks_new").alias("sz_new"),
-        )
+    j = _jaccard_refine(
+        cand,
+        _shingle_sets(shingles_df(new_docs, distinct=False)),
+        _shingle_sets(store_shingles),
+        threshold,
     )
-    os_ = (
-        store_shingles.groupBy("doc_id")
-        .agg(F.collect_set("tok").alias("toks_old"))
-        .select(
-            F.col("doc_id").alias("old_id"), "toks_old",
-            F.size("toks_old").alias("sz_old"),
-        )
-    )
-    j = (
-        cand.join(ns, "new_id")
-        .join(os_, "old_id")
-        # same exact size-ratio prune as near_dup_pairs: max achievable
-        # Jaccard is min(sz)/max(sz); pairs that cannot reach the
-        # threshold skip the array_intersect
-        .filter(
-            F.round(
-                F.least("sz_new", "sz_old") / F.greatest("sz_new", "sz_old"),
-                6,
-            )
-            >= F.lit(threshold)
-        )
-        .withColumn(
-            "n_inter",
-            F.size(F.array_intersect("toks_new", "toks_old")).cast("bigint"),
-        )
-        .filter(F.col("n_inter") >= 1)
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter")
-                / (F.col("sz_new") + F.col("sz_old") - F.col("n_inter")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    best = j.groupBy("new_id").agg(
-        F.min(F.struct(F.col("old_id"), F.col("jaccard"))).alias("_b")
+    best = j.groupBy("doc_a").agg(
+        F.min(F.struct(F.col("doc_b"), F.col("jaccard"))).alias("_b")
     )
     return (
         new_docs.select("doc_id")
-        .join(best.withColumnRenamed("new_id", "doc_id"), "doc_id", "left")
+        .join(best.withColumnRenamed("doc_a", "doc_id"), "doc_id", "left")
         .select(
             "doc_id",
-            F.col("_b.old_id").alias("dup_of"),
+            F.col("_b.doc_b").alias("dup_of"),
             F.col("_b.jaccard").alias("jaccard"),
             F.col("_b").isNotNull().alias("is_dup"),
         )

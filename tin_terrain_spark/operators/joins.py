@@ -56,7 +56,6 @@ def pip_join(points: DataFrame, polys: DataFrame, zoom: int) -> DataFrame:
     covering tiles (bounded fan-out), broadcast, equi-joined on the tile
     key, then exactly refined — Catalyst turns this into a broadcast
     hash join with the `between` conjunction as a post-filter."""
-    spark = points.sparkSession  # noqa: F841  (kept for symmetry)
     pt = polys.select(
         "poly_id",
         "pmin_x",
@@ -128,8 +127,9 @@ def _density_ring(pts: DataFrame, k: int, cell_m: float,
     expected to hold ~8x k points. An under-estimate only costs an
     extra round (the guarantee check stays exact); an over-estimate
     only widens the candidate window. Returns None when the corpus is
-    so small (n <= 32k) or so degenerate (zero-area bbox) that the
-    brute crossJoin is the right plan outright.
+    so small (n <= 32k) that the brute crossJoin is the right plan
+    outright; a zero-area corpus gets a 1-D density (collinear) or
+    ring 1 (every point identical).
 
     The factor was 32x k with a ring floor of 2 through round 5;
     measured at sf1.0 (1.44M points, 160k queries, ~22 points/cell)
@@ -178,9 +178,9 @@ def _density_ring(pts: DataFrame, k: int, cell_m: float,
     return max(1, ring)
 
 
-def _knn_rounds(pts: DataFrame, q: DataFrame, k: int, initial_ring: int,
-                max_rounds: int, cand_fn, guarantee_m, pts_persists,
-                brute_pts: DataFrame) -> DataFrame:
+def _knn_rounds(pts: DataFrame, q: DataFrame, k: int, initial_ring: int | None,
+                max_rounds: int, cand_fn, guarantee_m, cell_m: float,
+                geometry: str) -> DataFrame:
     """Shared iterative driver for knn_ring / knn_hex: per round, build
     candidates within ring R of each unresolved query (cand_fn), refine
     by exact distance + per-query top-k, and mark a query FINAL when
@@ -197,7 +197,27 @@ def _knn_rounds(pts: DataFrame, q: DataFrame, k: int, initial_ring: int,
     no extra materialize action; total cost is the density aggregate +
     one join round. No driver collect of data rows anywhere; counts
     are coordination, as in any LSH/ANN loop.
+
+    The projected points (pts) and queries (q: q_id, qx, qy plus the
+    cell columns cand_fn joins on) are persisted for the DURATION OF THE
+    CALL: the points side is read by the density aggregate AND by every
+    ring round, the query side by every round's ball build — without
+    the cache an expensive upstream subtree (a geocode chain, a
+    replicated corpus) re-executes per consumer. Both are released
+    before returning. initial_ring None sizes the first ring from the
+    corpus density (_density_ring over cell_m / geometry); a corpus
+    of at most 32·k points returns the lazy knn_brute plan instead,
+    with no cache left behind.
     """
+    pts, q = pts.persist(), q.persist()
+    if initial_ring is None:
+        initial_ring = _density_ring(pts, k, cell_m, geometry)
+        if initial_ring is None:  # tiny corpus: brute IS the plan
+            pts.unpersist()
+            q.unpersist()
+            return knn_brute(
+                pts, q.select("q_id", F.col("qx").alias("x"), F.col("qy").alias("y")), k
+            )
     w = W.partitionBy("q_id").orderBy(F.col("dist2").asc(), F.col("doc_id").asc())
     done: DataFrame | None = None
     remaining = q
@@ -240,8 +260,8 @@ def _knn_rounds(pts: DataFrame, q: DataFrame, k: int, initial_ring: int,
         )
         nxt = remaining.join(F.broadcast(resolved), "q_id", "left_anti")
         if nxt.count() == 0:  # the action that populates topk's cache
-            for p in pts_persists:  # topk is cached; pts scan is done
-                p.unpersist()
+            pts.unpersist()  # topk is cached; the input scans are done
+            q.unpersist()
             if done is None:
                 # single-round fast path: every query resolved, so the
                 # cached round-1 top-k IS the result (documented single
@@ -257,20 +277,19 @@ def _knn_rounds(pts: DataFrame, q: DataFrame, k: int, initial_ring: int,
         ring *= 4
 
     leftover = knn_brute(
-        brute_pts,
+        pts,
         remaining.select("q_id", F.col("qx").alias("x"), F.col("qy").alias("y")),
         k,
     )
     final = leftover if done is None else done.unionAll(leftover)
-    return _finalize_rounds(final, round_caches + list(pts_persists))
+    return _finalize_rounds(final, round_caches + [pts, q])
 
 
 def knn_ring(points: DataFrame, queries: DataFrame, zoom: int, grid_bits: int,
              k: int = 5, initial_ring: int | None = None,
              repartition_to: int | None = None,
              max_ring_rounds: int = 3,
-             cell_join: str = "broadcast",
-             cache_inputs: bool = True) -> DataFrame:
+             cell_join: str = "broadcast") -> DataFrame:
     """J6 scale path: iterative ring join on the cell grid, exact brute
     fallback only for queries no ring round resolves.
 
@@ -294,16 +313,6 @@ def knn_ring(points: DataFrame, queries: DataFrame, zoom: int, grid_bits: int,
         box predicate against every point row); both sides shuffle on
         the cell key, partial work scales with |q|·ball + |points|.
     Both shapes are exact and hash-equal to knn_brute (tested).
-
-    cache_inputs (default True) persists the points/queries
-    projections for the DURATION OF THE CALL (released by the same
-    unpersist pass as the per-round caches): the points side is read
-    by the density aggregate AND by every ring round, the query side
-    by every round's ball build — without the cache an expensive
-    upstream subtree (a geocode chain, a replicated corpus) re-executes
-    per consumer. Callers whose points side is too large to cache
-    (10^12-row cluster scans, where two streaming passes beat one
-    materialization) pass cache_inputs=False.
     """
     if cell_join not in ("broadcast", "shuffle"):
         raise ValueError(f"cell_join must be broadcast|shuffle, not {cell_join!r}")
@@ -322,19 +331,6 @@ def knn_ring(points: DataFrame, queries: DataFrame, zoom: int, grid_bits: int,
         F.col("cell_x").alias("qcx"),
         F.col("cell_y").alias("qcy"),
     )
-    persists: tuple = ()
-    if cache_inputs:
-        pts = pts.persist()
-        q = q.persist()
-        persists = (pts, q)
-
-    if initial_ring is None:
-        initial_ring = _density_ring(pts, k, cell_m, "square")
-        if initial_ring is None:  # tiny/degenerate corpus: brute IS the plan
-            out = knn_brute(
-                pts, q.select("q_id", F.col("qx").alias("x"), F.col("qy").alias("y")), k
-            )
-            return _finalize_rounds(out, list(persists))
 
     def cand_fn(pts_r, remaining, ring):
         if cell_join == "shuffle":
@@ -365,7 +361,7 @@ def knn_ring(points: DataFrame, queries: DataFrame, zoom: int, grid_bits: int,
 
     return _knn_rounds(
         pts, q, k, initial_ring, max_ring_rounds,
-        cand_fn, lambda r: r * cell_m, pts_persists=persists, brute_pts=pts,
+        cand_fn, lambda r: r * cell_m, cell_m, "square",
     )
 
 
@@ -511,13 +507,11 @@ def knn_hex(points: DataFrame, queries: DataFrame, hex_size: float,
     guarantee uses the hex staircase geometry
     (hexgrid.hex_ring_guarantee_m). Cells are computed from the meter
     coordinates with pure Column expressions (no UDF, no native lib),
-    ONCE: on the local/query path (repartition_to set) the hexed
-    points projection is persisted across rounds instead of re-derived
-    per action; cluster-scale callers keep their layout and pay the
-    (cheap, codegen'd) per-scan hex math instead of caching 10^12
-    rows. The first ring is density-derived so round 1 is expected to
-    resolve everything. Exactness: results are hash-equal to knn_brute
-    (the driver gate's oracle recomputes brute-force kNN in DuckDB).
+    ONCE: the hexed projections are persisted for the call by
+    _knn_rounds instead of re-derived per action. The first ring is
+    density-derived so round 1 is expected to resolve everything.
+    Exactness: results are hash-equal to knn_brute (the driver gate's
+    oracle recomputes brute-force kNN in DuckDB).
     cell_join as in knn_ring: "broadcast" (default, driver-small query
     sets) or "shuffle" (many-query: the exploded ring ball equi-joins
     with no broadcast; both sides shuffle on the hex cell key)."""
@@ -527,28 +521,13 @@ def knn_hex(points: DataFrame, queries: DataFrame, hex_size: float,
         raise ValueError(f"cell_join must be broadcast|shuffle, not {cell_join!r}")
 
     pts = points.select("doc_id", "x", "y")
-    persists: tuple = ()
     if repartition_to is not None:
-        pts = HG.with_hex_cell(pts.repartition(repartition_to), hex_size).persist()
-        persists = (pts,)
-    else:
-        pts = HG.with_hex_cell(pts, hex_size)
-    # the query side is small by contract and read by every round's
-    # ball build — cache it for the call like knn_ring's cache_inputs
+        pts = pts.repartition(repartition_to)
+    pts = HG.with_hex_cell(pts, hex_size)
     q = HG.with_hex_cell(
         queries.select("q_id", F.col("x").alias("qx"), F.col("y").alias("qy")),
         hex_size, x="qx", y="qy", q_col="qhq", r_col="qhr",
-    ).persist()
-    persists = persists + (q,)
-
-    if initial_ring is None:
-        initial_ring = _density_ring(pts, k, hex_size, "hex")
-        if initial_ring is None:  # tiny/degenerate corpus: brute IS the plan
-            for p in persists:
-                p.unpersist()
-            return knn_brute(
-                pts, q.select("q_id", F.col("qx").alias("x"), F.col("qy").alias("y")), k
-            )
+    )
 
     def cand_fn(pts_r, remaining, ring):
         ball = _hex_ring_cells(remaining, ring)
@@ -562,6 +541,5 @@ def knn_hex(points: DataFrame, queries: DataFrame, hex_size: float,
 
     return _knn_rounds(
         pts, q, k, initial_ring, max_ring_rounds,
-        cand_fn, lambda r: HG.hex_ring_guarantee_m(r, hex_size),
-        pts_persists=persists, brute_pts=pts,
+        cand_fn, lambda r: HG.hex_ring_guarantee_m(r, hex_size), hex_size, "hex",
     )

@@ -11,9 +11,9 @@
                       single-node serving; streams via toLocalIterator
   write_tile_tree     facade: store + materialize (local-mode
                       convenience, same signature as before)
-  tiles_as_obj/off    per-tile OBJ / OFF text columns (MeshIO sinks) for
-                      export pipelines — decode the terrain blob, format
-                      in a pandas UDF batch
+  tiles_as_obj        per-tile OBJ text column (MeshIO sink) for export
+                      pipelines — decode the terrain blob, format in a
+                      pandas UDF batch
 """
 
 from __future__ import annotations
@@ -66,45 +66,29 @@ def write_tile_tree(tiles: DataFrame, out_dir: str, store_dir: str | None = None
     return materialize_tile_tree(tiles.sparkSession, store, out_dir)
 
 
-def _decode_format_udf(fmt: str):
-    @F.pandas_udf(StringType())
-    def decode_format(terrain: pd.Series) -> pd.Series:
-        import numpy as np
+@F.pandas_udf(StringType())
+def _decode_obj(terrain: pd.Series) -> pd.Series:
+    import numpy as np
 
-        from ..kernels.codec import decode_qm_tile, dequantize_coordinate
-        from ..kernels.meshio import format_geojson, format_obj, format_off
+    from ..kernels.codec import decode_qm_tile, dequantize_coordinate
+    from ..kernels.meshio import format_obj
 
-        out = []
-        for blob in terrain:
-            if blob is None:
-                out.append(None)
-                continue
-            t = decode_qm_tile(bytes(blob))
-            verts = np.column_stack(
-                [
-                    dequantize_coordinate(t.u, 0.0, 1.0),
-                    dequantize_coordinate(t.v, 0.0, 1.0),
-                    dequantize_coordinate(t.h, t.min_height, t.max_height),
-                ]
-            )
-            if fmt == "obj":
-                out.append(format_obj(verts, t.faces))
-            elif fmt == "off":
-                out.append(format_off(verts, t.faces))
-            else:
-                out.append(format_geojson(verts, t.faces))
-        return pd.Series(out)
-
-    return decode_format
+    out = []
+    for blob in terrain:
+        if blob is None:
+            out.append(None)
+            continue
+        t = decode_qm_tile(bytes(blob))
+        verts = np.column_stack(
+            [
+                dequantize_coordinate(t.u, 0.0, 1.0),
+                dequantize_coordinate(t.v, 0.0, 1.0),
+                dequantize_coordinate(t.h, t.min_height, t.max_height),
+            ]
+        )
+        out.append(format_obj(verts, t.faces))
+    return pd.Series(out)
 
 
 def tiles_as_obj(tiles: DataFrame) -> DataFrame:
-    return tiles.withColumn("obj", _decode_format_udf("obj")(F.col("terrain")))
-
-
-def tiles_as_off(tiles: DataFrame) -> DataFrame:
-    return tiles.withColumn("off", _decode_format_udf("off")(F.col("terrain")))
-
-
-def tiles_as_geojson(tiles: DataFrame) -> DataFrame:
-    return tiles.withColumn("geojson", _decode_format_udf("geojson")(F.col("terrain")))
+    return tiles.withColumn("obj", _decode_obj(F.col("terrain")))

@@ -200,8 +200,8 @@ def q_lsh_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.lsh_candidates(_docs(spark, sf_dir))
 
 
-def _sql_lsh_candidates(bands: int = 4, bucket_cap: int = D.BUCKET_CAP) -> str:
-    rpb = len(D.MINHASH_FUNCS) // bands
+def _sql_lsh_candidates() -> str:
+    rpb, cap = len(D.MINHASH_FUNCS) // D.BANDS, D.BUCKET_CAP
     return f"""
       WITH sig AS ({_sql_minhash()}),
       band_key AS (
@@ -219,10 +219,10 @@ def _sql_lsh_candidates(bands: int = 4, bucket_cap: int = D.BUCKET_CAP) -> str:
         SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
         FROM sized a JOIN sized b
           ON a.band = b.band AND a.band_key = b.band_key AND a.doc_id < b.doc_id
-        WHERE a.bsz <= {bucket_cap} AND b.bsz <= {bucket_cap}
+        WHERE a.bsz <= {cap} AND b.bsz <= {cap}
         UNION ALL
         SELECT bmin AS doc_a, doc_id AS doc_b
-        FROM sized WHERE bsz > {bucket_cap} AND doc_id <> bmin
+        FROM sized WHERE bsz > {cap} AND doc_id <> bmin
       )
     """
 
@@ -2385,8 +2385,8 @@ def q_incr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_incr_dedup(threshold: float = 0.5, bands: int = 4) -> str:
-    rpb = len(D.MINHASH_FUNCS) // bands
+def _sql_incr_dedup(threshold: float = 0.5) -> str:
+    rpb = len(D.MINHASH_FUNCS) // D.BANDS
     return f"""
       WITH sig AS ({_sql_minhash()}),
       bandk AS (
