@@ -183,11 +183,12 @@ def test_knn_density_ring_equals_brute(spark, points):
         for r in knn_ring(others, queries, 2, 5, k=5, cell_join="shuffle").collect()
     }
     assert b == s
+    # a first ring past the 8192-cell broadcast cap: the shuffled ball join
     sh = {
         (r["q_id"], r["rank"]): r["doc_id"]
         for r in knn_hex(
             others, queries.select("q_id", "x", "y"), tile_size_meters(7), k=5,
-            cell_join="shuffle",
+            initial_ring=60,
         ).collect()
     }
     assert b == sh
@@ -350,6 +351,108 @@ def test_pipeline_resume(spark, tmp_path):
     t1 = spark.read.parquet(f"{out}/zoom=1")
     assert t1.count() == m1[1]["n_tiles"]
     assert read_manifest(out)[2]["n_tiles"] == m1[2]["n_tiles"]
+
+
+# The pyramid's parquet sink: one write action per zoom, tile counts
+# taken from that write, and reruns, resumes and empty inputs held to
+# independent counts (a fresh build, a re-read of the written store),
+# never to pinned values.
+PYRAMID_ZOOMS = (1, 2)
+# Jobs of one build_tile_pyramid over zooms 1-2 into a fresh directory.
+# AQE runs every shuffle map stage as its own job, and reading a
+# persisted relation the first time fills it in one more:
+#   base_cells: 1 (scan + geocode + partial aggregate) + 1 (fill the
+#     persisted cells)
+#   per zoom: 1 (cell_grid → repartition map stage) + 1 (sort +
+#     mapInPandas + parquet write, the observed count included), plus
+#     1 rollup map stage below max_zoom
+# = 2 + 2 + 3 = 7. Counting each zoom by re-reading it cost 3 more jobs
+# a zoom (footer schema, count map stage, count result): 13.
+PYRAMID_MAX_JOBS = 7
+
+
+def _pyramid(spark, out, docs=None, resume=False, catalog=None):
+    from tin_terrain_spark.pipeline.dem2tintiles import build_tile_pyramid
+
+    if docs is None:
+        docs = spark.read.parquet(f"{SF}/documents.parquet")
+    return build_tile_pyramid(spark, docs, out, min_zoom=PYRAMID_ZOOMS[0],
+                              max_zoom=PYRAMID_ZOOMS[1], resume=resume,
+                              catalog=catalog)
+
+
+def _zoom_rows(spark, out, zoom) -> list[str]:
+    # NaN != NaN and bytearrays do not hash: compare as repr strings
+    return sorted(repr(tuple(r)) for r in spark.read.parquet(f"{out}/zoom={zoom}").collect())
+
+
+def _assert_counts_match_store(spark, out):
+    from tin_terrain_spark.pipeline.dem2tintiles import read_manifest
+
+    for z, e in read_manifest(out).items():
+        assert e["n_tiles"] == spark.read.parquet(f"{out}/zoom={z}").count(), z
+
+
+def test_pyramid_job_bound(spark, tmp_path):
+    """A pyramid build runs at most PYRAMID_MAX_JOBS Spark jobs: none of
+    them reads the written tiles back."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")  # a footer job
+    sc = spark.sparkContext
+    group = "pyramid_job_bound"
+    sc.setJobGroup(group, "build_tile_pyramid, zooms 1-2")
+    try:
+        m = _pyramid(spark, str(tmp_path / "p"), docs=docs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert set(m) == set(PYRAMID_ZOOMS)
+    assert n_jobs <= PYRAMID_MAX_JOBS, f"{n_jobs} jobs, bound {PYRAMID_MAX_JOBS}"
+
+
+def test_pyramid_rerun_equals_fresh_build(spark, tmp_path):
+    """Two resume=False builds into one directory leave every zoom
+    equal, row for row, to one build into a fresh directory, and every
+    manifest count equals a re-read of its zoom."""
+    rerun, fresh = str(tmp_path / "rerun"), str(tmp_path / "fresh")
+    _pyramid(spark, rerun)
+    _pyramid(spark, rerun)
+    _pyramid(spark, fresh)
+    for z in PYRAMID_ZOOMS:
+        assert _zoom_rows(spark, rerun, z) == _zoom_rows(spark, fresh, z)
+    _assert_counts_match_store(spark, rerun)
+    _assert_counts_match_store(spark, fresh)
+
+
+def test_pyramid_resume_recomputes_only_unmarked_zoom(spark, tmp_path):
+    """With resume=True, a zoom whose _SUCCESS marker is gone is built
+    again — its manifest `seconds` change, its tiles do not — and every
+    other zoom is skipped."""
+    out = str(tmp_path / "p")
+    first = _pyramid(spark, out, resume=True)
+    before = _zoom_rows(spark, out, 2)
+    os.remove(os.path.join(out, "zoom=2", "_SUCCESS"))
+    second = _pyramid(spark, out, resume=True)
+    assert second[1]["seconds"] == first[1]["seconds"]
+    assert second[2]["seconds"] != first[2]["seconds"]
+    assert _zoom_rows(spark, out, 2) == before
+    _assert_counts_match_store(spark, out)
+
+
+def test_pyramid_empty_input(spark, tmp_path):
+    """An input of 0 rows writes 0 tiles at every zoom, and says so, in
+    the parquet store and through a tile catalog."""
+    from tin_terrain_spark.sources.iceberg import LocalTileCatalog
+
+    empty = spark.read.parquet(f"{SF}/documents.parquet").limit(0)
+    none = {z: 0 for z in PYRAMID_ZOOMS}
+    out = str(tmp_path / "p")
+    m = _pyramid(spark, out, docs=empty)
+    assert {z: e["n_tiles"] for z, e in m.items()} == none
+    _assert_counts_match_store(spark, out)
+    cat = LocalTileCatalog(spark, str(tmp_path / "cat"))
+    m = _pyramid(spark, str(tmp_path / "c"), docs=empty, catalog=cat)
+    assert {z: e["n_tiles"] for z, e in m.items()} == none
+    assert cat.read().count() == 0
 
 
 def test_connected_components_transitive(spark):

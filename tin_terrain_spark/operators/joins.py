@@ -498,8 +498,7 @@ def _hex_ring_cells(remaining: DataFrame, ring: int) -> DataFrame:
 def knn_hex(points: DataFrame, queries: DataFrame, hex_size: float,
             k: int = 5, initial_ring: int | None = None,
             repartition_to: int | None = None,
-            max_ring_rounds: int = 3,
-            cell_join: str = "broadcast") -> DataFrame:
+            max_ring_rounds: int = 3) -> DataFrame:
     """J6 over the H3-style hex index (charter: "kNN lookups over H3
     ring expansion"): same iterative driver as knn_ring (_knn_rounds),
     but candidate rings are hexagonal — the ring ball is exploded to
@@ -511,14 +510,10 @@ def knn_hex(points: DataFrame, queries: DataFrame, hex_size: float,
     _knn_rounds instead of re-derived per action. The first ring is
     density-derived so round 1 is expected to resolve everything.
     Exactness: results are hash-equal to knn_brute (the driver gate's
-    oracle recomputes brute-force kNN in DuckDB).
-    cell_join as in knn_ring: "broadcast" (default, driver-small query
-    sets) or "shuffle" (many-query: the exploded ring ball equi-joins
-    with no broadcast; both sides shuffle on the hex cell key)."""
+    oracle recomputes brute-force kNN in DuckDB). The ring ball is
+    broadcast while it has at most 8192 cells a query; past that both
+    sides shuffle on the hex cell key."""
     from ..functions import hexgrid as HG
-
-    if cell_join not in ("broadcast", "shuffle"):
-        raise ValueError(f"cell_join must be broadcast|shuffle, not {cell_join!r}")
 
     pts = points.select("doc_id", "x", "y")
     if repartition_to is not None:
@@ -535,7 +530,7 @@ def knn_hex(points: DataFrame, queries: DataFrame, hex_size: float,
         # (unbounded on sparse corpora, x4 per miss round): past the cap
         # drop the broadcast hint and let the equi-join shuffle instead
         # of forcing an arbitrarily large broadcast through the driver
-        if cell_join == "broadcast" and 3 * ring * (ring + 1) + 1 <= 8192:
+        if 3 * ring * (ring + 1) + 1 <= 8192:
             ball = F.broadcast(ball)
         return pts_r.join(ball, ["hex_q", "hex_r"], "inner")
 

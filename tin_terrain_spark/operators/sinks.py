@@ -1,16 +1,16 @@
 """Sinks: the reference's output formats as distributed writers.
 
+Every tile writer (the pyramid, write_tile_store, a LocalTileCatalog
+version) writes one tile-store layout: parquet partitioned by zoom.
+
   write_tile_store    cluster-safe tile sink: ONE DataFrame-writer job
-                      into a zoom/tile_x-partitioned parquet store (any
-                      Hadoop-compatible FS / object store; partition
-                      pruning serves single-tile reads)
+                      into a zoom-partitioned parquet store (any
+                      Hadoop-compatible FS / object store)
   materialize_tile_tree
-                      parquet store → {out}/{z}/{x}/{y}.terrain file
+                      tile store → {out}/{z}/{x}/{y}.terrain file
                       tree (dem2tintiles_workflow.cpp:134-148) on the
                       DRIVER's filesystem — the explicit local step for
                       single-node serving; streams via toLocalIterator
-  write_tile_tree     facade: store + materialize (local-mode
-                      convenience, same signature as before)
   tiles_as_obj        per-tile OBJ text column (MeshIO sink) for export
                       pipelines — decode the terrain blob, format in a
                       pandas UDF batch
@@ -26,25 +26,27 @@ from pyspark.sql.types import StringType
 
 
 def write_tile_store(tiles: DataFrame, store_dir: str) -> None:
-    """Cluster-safe tile sink: one writer job, no executor-local paths.
-    The layout (partitioned by zoom, tile_x) makes per-tile lookups a
-    partition-pruned scan and per-zoom exports a directory listing —
-    the distributed analogue of the reference's z/x/y file tree."""
+    """Cluster-safe tile sink: one writer job, no executor-local paths,
+    faceless tiles (null terrain) left out. Partitioned by zoom only: a
+    lookup still prunes to one zoom, and a tile_x level would add a
+    file per (task, tile_x) and 2^z directories per zoom."""
     (
         tiles.filter(F.col("terrain").isNotNull())
         .select("zoom", "tile_x", "tile_y", "terrain")
         .write.mode("overwrite")
-        .partitionBy("zoom", "tile_x")
+        .partitionBy("zoom")
         .parquet(store_dir)
     )
 
 
 def materialize_tile_tree(spark: SparkSession, store_dir: str, out_dir: str) -> int:
     """{z}/{x}/{y}.terrain files (dem2tintiles_workflow.cpp:134-148)
-    from the parquet store, on the driver-local filesystem. Streams
-    partition-by-partition (toLocalIterator) — never collects the full
-    store. Returns the tile count; idempotent overwrite."""
-    df = spark.read.parquet(store_dir).select("zoom", "tile_x", "tile_y", "terrain")
+    from any tile store, faceless tiles skipped, on the calling
+    process's filesystem. Streams partition-by-partition
+    (toLocalIterator) — never collects the full store. Returns the tile
+    count; idempotent overwrite."""
+    df = spark.read.parquet(store_dir).where(F.col("terrain").isNotNull())
+    df = df.select("zoom", "tile_x", "tile_y", "terrain")
     n = 0
     for r in df.toLocalIterator():
         d = os.path.join(out_dir, str(r["zoom"]), str(r["tile_x"]))
@@ -55,15 +57,6 @@ def materialize_tile_tree(spark: SparkSession, store_dir: str, out_dir: str) -> 
         os.replace(tmp, os.path.join(d, f"{r['tile_y']}.terrain"))
         n += 1
     return n
-
-
-def write_tile_tree(tiles: DataFrame, out_dir: str, store_dir: str | None = None) -> int:
-    """Local-mode convenience: write the cluster-safe store, then
-    materialize the file tree next to it. out_dir must be reachable
-    from the DRIVER (the store, by contrast, can be any shared FS)."""
-    store = store_dir or os.path.join(out_dir, "_store")
-    write_tile_store(tiles, store)
-    return materialize_tile_tree(tiles.sparkSession, store, out_dir)
 
 
 @F.pandas_udf(StringType())

@@ -13,7 +13,7 @@ keyed (cell_x, cell_y, z) at the finest zoom:
         rollup_cells (Y2 overview reuse — no raw re-scan)
         cell_grid buffer fan-out (Y3) → mesh_cells stage (Y4)
         write parquet to {out}/zoom={z}/ (overwrite = idempotent), or
-        MERGE into a tile catalog
+        MERGE into a tile catalog; count the tiles from the write
         append a manifest row (Y5 resume lineage)
 
 Resume: a zoom level whose manifest row exists and whose _SUCCESS file
@@ -32,7 +32,7 @@ import json
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..functions import geocode_exprs as GX
 from ..kernels.tin import check_method
@@ -67,13 +67,13 @@ def build_tile_pyramid(
     method: str = "terra",
     max_error: float | None = None,
     resume: bool = True,
-    id_col: str = "doc_id",
     catalog=None,
     step: int = 1,
 ) -> dict[int, dict]:
     """Documents → pyramid: geocode at the finest zoom (coarser zooms
-    roll up), then mesh_pyramid. Returns the manifest (zoom → stats)."""
-    pts = geocode_points(docs, id_col=id_col, zoom=max_zoom, grid_bits=grid_bits)
+    roll up), then mesh_pyramid. Documents are keyed by `doc_id`.
+    Returns the manifest (zoom → stats)."""
+    pts = geocode_points(docs, zoom=max_zoom, grid_bits=grid_bits)
     return mesh_pyramid(
         spark, pts, out_dir, min_zoom=min_zoom, max_zoom=max_zoom,
         grid_bits=grid_bits, buffer_cells=buffer_cells, method=method,
@@ -98,6 +98,11 @@ def mesh_pyramid(
     """THE pyramid loop over points keyed (cell_x, cell_y, z) at
     `max_zoom` — geocoded documents or assign_tile_keys'd rasters.
     Returns the manifest (zoom → stats).
+
+    Without a catalog, `out_dir` is a tile store (sinks): one zoom=Z/
+    partition per zoom. Each pending zoom costs one write action, whose
+    shuffle map stages AQE runs as separate jobs; its `n_tiles` (every
+    written row, faceless tiles included) is observed on that write.
 
     With `catalog` (a sources.iceberg.TileCatalog — Iceberg MERGE on a
     cluster, LocalTileCatalog locally), the sink is the catalog's
@@ -144,8 +149,12 @@ def mesh_pyramid(
                 os.makedirs(zdir, exist_ok=True)
                 open(os.path.join(zdir, "_SUCCESS"), "w").close()
             else:
-                tiles.write.mode("overwrite").parquet(zdir)
-                n_tiles = spark.read.parquet(zdir).count()
+                # counted in the write's result stage: a retried map
+                # stage cannot count twice
+                obs = Observation()
+                (tiles.observe(obs, F.count(F.lit(1)).alias("n"))
+                 .write.mode("overwrite").parquet(zdir))
+                n_tiles = obs.get["n"]
             entry = {
                 "zoom": zoom,
                 "n_tiles": n_tiles,

@@ -38,7 +38,12 @@ Design notes for 10^12 rows:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+import json
+import os
+import tempfile
+
+from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 PAGES_SCHEMA = (
     "url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING"
@@ -231,8 +236,11 @@ class IcebergTileCatalog(TileCatalog):
 class LocalTileCatalog(TileCatalog):
     """Parquet-backed MERGE semantics with versioned commits.
 
-    Layout: <path>/v_<n>/ parquet snapshots + <path>/LATEST pointing at
-    the live version. A merge writes the NEXT version completely, then
+    Layout: <path>/v_<n>/ snapshots + <path>/LATEST pointing at the
+    live version. A snapshot is a zoom-partitioned tile store, like the
+    Iceberg table, with its schema in _schema.json (parquet readers skip
+    it): an empty merge leaves no data file to infer the schema from.
+    A merge writes the NEXT version completely, then
     commits by atomically replacing LATEST (os.replace) — a crash
     before the pointer flip leaves the previous version live, so a
     resumed run re-merges its batch idempotently; a crash after is a
@@ -242,15 +250,11 @@ class LocalTileCatalog(TileCatalog):
     """
 
     def __init__(self, spark: SparkSession, path: str):
-        import os
-
         self.spark = spark
         self.path = path
         os.makedirs(path, exist_ok=True)
 
     def _latest(self) -> int:
-        import os
-
         p = os.path.join(self.path, "LATEST")
         if not os.path.exists(p):
             return 0
@@ -258,20 +262,18 @@ class LocalTileCatalog(TileCatalog):
             return int(f.read().strip())
 
     def _version_dir(self, v: int) -> str:
-        import os
-
         return os.path.join(self.path, f"v_{v:06d}")
 
     def read(self) -> DataFrame:
         v = self._latest()
         if v == 0:
             raise ValueError("empty catalog: merge at least once first")
-        return self.spark.read.parquet(self._version_dir(v))
+        vdir = self._version_dir(v)
+        with open(os.path.join(vdir, "_schema.json")) as f:
+            schema = StructType.fromJson(json.load(f))
+        return self.spark.read.schema(schema).parquet(vdir)
 
     def merge(self, tiles: DataFrame) -> None:
-        import os
-        import tempfile
-
         v = self._latest()
         keys = list(TILE_KEY)
         # the update set feeds the plan twice (anti-join keys + union
@@ -283,8 +285,6 @@ class LocalTileCatalog(TileCatalog):
             # matching one target row; the local binding must not
             # silently accumulate duplicate tile rows instead. Same
             # contract → same failure mode.
-            from pyspark.sql import functions as F
-
             n_rows, n_keys = tiles.agg(
                 F.count(F.lit(1)), F.count_distinct(*[F.col(k) for k in keys])
             ).first()
@@ -304,7 +304,10 @@ class LocalTileCatalog(TileCatalog):
                     tiles.select(*keys), keys, "left_anti"
                 ).unionByName(tiles)
             nxt = v + 1
-            new_state.write.mode("overwrite").parquet(self._version_dir(nxt))
+            vdir = self._version_dir(nxt)
+            new_state.write.mode("overwrite").partitionBy("zoom").parquet(vdir)
+            with open(os.path.join(vdir, "_schema.json"), "w") as f:
+                f.write(new_state.schema.json())
         finally:
             tiles.unpersist()
         fd, tmp = tempfile.mkstemp(dir=self.path)
@@ -313,8 +316,6 @@ class LocalTileCatalog(TileCatalog):
         os.replace(tmp, os.path.join(self.path, "LATEST"))  # the commit
 
     def completed_keys(self, zoom: int) -> DataFrame:
-        from pyspark.sql import functions as F
-
         if self._latest() == 0:
             schema = ", ".join(
                 ("zoom INT",) + tuple(f"{k} BIGINT" for k in TILE_KEY[1:])
