@@ -11,7 +11,10 @@ from tin_terrain_spark.kernels.delaunator import (
     Delaunator,
     generate_delaunay_faces_sweephull,
 )
-from tin_terrain_spark.kernels.points2mesh import generate_delaunay_mesh
+from tin_terrain_spark.kernels.points2mesh import (
+    delaunay_mesh_incremental,
+    generate_delaunay_mesh,
+)
 
 
 def _random_points(n, seed):
@@ -65,8 +68,8 @@ def test_backends_agree(seed):
     from tin_terrain_spark.kernels.delaunator import _circumradius
 
     pts = _random_points(80, seed)
-    v1, f1 = generate_delaunay_mesh(pts, backend="incremental")
-    v2, f2 = generate_delaunay_mesh(pts, backend="sweephull")
+    v1, f1 = delaunay_mesh_incremental(pts)
+    v2, f2 = generate_delaunay_mesh(pts)
 
     span = max(pts[:, 0].ptp(), pts[:, 1].ptp())
     cutoff2 = (span * 5.0) ** 2  # well inside the 10x super-quad pad
@@ -87,7 +90,7 @@ def test_backends_agree(seed):
 
 def test_facade_ccw_and_z():
     pts = _random_points(50, 5)
-    verts, faces = generate_delaunay_mesh(pts, backend="sweephull")
+    verts, faces = generate_delaunay_mesh(pts)
     # z carried through; faces CCW in the x-y plane
     assert verts.shape[1] == 3
     v = verts[faces]

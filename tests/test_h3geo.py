@@ -159,17 +159,11 @@ def test_class_iii_rotation_applied():
 
 
 def test_geo_to_h3_runs_on_derived_tables():
-    """Without injected library tables, the global encode runs on the
-    numerically derived engine-canonical tables (round 5 — previously
-    it raised; tests/test_h3global.py covers the grid invariants).
-    set_base_cell_tables still validates injected shapes loudly."""
-    assert not G.base_cell_tables_available()
+    """The global encode runs on the numerically derived
+    engine-canonical tables (tests/test_h3global.py covers the grid
+    invariants)."""
     h = G.geo_to_h3(0.5, 0.5, 9)
     assert h.shape == (1,) and h[0] > 0
-    with pytest.raises(ValueError):
-        G.set_base_cell_tables(np.zeros((19, 3, 3, 3, 2)), [0] * 122)
-    with pytest.raises(ValueError):
-        G.set_base_cell_tables(np.zeros((20, 3, 3, 3, 2)), [0] * 121)
 
 
 @pytest.fixture(scope="module")
@@ -179,50 +173,6 @@ def spark():
     s = get_spark("h3geo", cores=8)
     yield s
     s.stop()
-
-
-def test_with_face_ijk_spark_path(spark):
-    """mapInPandas surface equals the NumPy kernel row-for-row."""
-    rng = np.random.RandomState(13)
-    lat_d = rng.uniform(-85, 85, 300)
-    lng_d = rng.uniform(-180, 180, 300)
-    df = spark.createDataFrame(
-        [(int(n), float(a), float(o)) for n, (a, o) in enumerate(zip(lat_d, lng_d))],
-        "row_id long, lat double, lng double",
-    )
-    got = {
-        r["row_id"]: (r["h3_face"], r["h3_i"], r["h3_j"], r["h3_k"])
-        for r in G.with_face_ijk(df, res=3).collect()
-    }
-    f, i, j, k = G.geo_to_face_ijk(
-        np.radians(lat_d), np.radians(lng_d), 3
-    )
-    for n in range(300):
-        assert got[n] == (f[n], i[n], j[n], k[n])
-
-
-def test_with_h3_global_spark_path(spark):
-    """mapInPandas GLOBAL-id surface equals geo_to_h3 row-for-row, and
-    the ids are full 122-base-cell (not the planar shim: >1 distinct
-    base cell on a global sample)."""
-    rng = np.random.RandomState(29)
-    lat_d = np.degrees(np.arcsin(rng.uniform(-1, 1, 400)))
-    lng_d = rng.uniform(-180, 180, 400)
-    df = spark.createDataFrame(
-        [(int(n), float(a), float(o)) for n, (a, o) in enumerate(zip(lat_d, lng_d))],
-        "row_id long, lat double, lng double",
-    )
-    got = {
-        r["row_id"]: r["h3_id"]
-        for r in G.with_h3_global(df, res=4).collect()
-    }
-    want = G.geo_to_h3(np.radians(lat_d), np.radians(lng_d), 4)
-    assert [got[n] for n in range(400)] == list(want)
-    from tin_terrain_spark.functions.h3pack import unpack_h3_np
-
-    res_f, bc, _ = unpack_h3_np(want)
-    assert set(res_f.tolist()) == {4}
-    assert len(set(bc.tolist())) > 20  # genuinely global, not one chart
 
 
 @pytest.mark.parametrize("res", [2, 3])
@@ -249,58 +199,3 @@ def test_column_twin_equals_numpy_kernel(spark, res):
     f, i, j, k = G.geo_to_face_ijk(lat, lng, res)
     mismatch = [m for m in range(n) if got[m] != (f[m], i[m], j[m], k[m])]
     assert not mismatch, f"{len(mismatch)} cells differ, first: {mismatch[:3]}"
-
-
-@pytest.mark.parametrize("res", [0, 3, 5])
-def test_with_h3_global_cols_matches_numpy(spark, res):
-    """The pure-Column GLOBAL encode: every non-NULL id must equal
-    geo_to_h3 EXACTLY (64-bit ints via Row, not a float64 round-trip
-    — h3 ids exceed the float53 mantissa), and the NULL (rare-path)
-    fraction must be the pentagon-disc share of a uniform sphere
-    (~13%), never more than 20%."""
-    rng = np.random.RandomState(41 + res)
-    n = 1500
-    lat = np.arcsin(rng.uniform(-1, 1, n))
-    lng = rng.uniform(-math.pi, math.pi, n)
-    x = lng * G.EARTH_R_MERC
-    y = np.log(np.tan(math.pi / 4 + lat / 2)) * G.EARTH_R_MERC
-    df = spark.createDataFrame(
-        [(int(m), float(a), float(b)) for m, (a, b) in enumerate(zip(x, y))],
-        "row_id long, x double, y double",
-    )
-    got = {
-        r["row_id"]: r["h3_id"]
-        for r in G.with_h3_global_cols(df, res).collect()
-    }
-    want = G.geo_to_h3(lat, lng, res)
-    nulls = [m for m in range(n) if got[m] is None]
-    bad = [m for m in range(n)
-           if got[m] is not None and got[m] != int(want[m])]
-    assert not bad, f"{len(bad)} non-null ids differ, first: {bad[:3]}"
-    assert len(nulls) < 0.2 * n
-    if res > 0:
-        assert nulls, "uniform sphere sample must hit the pentagon discs"
-
-
-def test_with_h3_global_hybrid_all_rows_exact(spark):
-    """The hybrid (JVM bulk + NumPy rare-path union) returns every
-    input row exactly once with the id geo_to_h3 would produce —
-    including the pentagon-disc rows the Column path NULLs out."""
-    res = 4
-    rng = np.random.RandomState(53)
-    n = 1500
-    lat = np.arcsin(rng.uniform(-1, 1, n))
-    lng = rng.uniform(-math.pi, math.pi, n)
-    x = lng * G.EARTH_R_MERC
-    y = np.log(np.tan(math.pi / 4 + lat / 2)) * G.EARTH_R_MERC
-    df = spark.createDataFrame(
-        [(int(m), float(a), float(b)) for m, (a, b) in enumerate(zip(x, y))],
-        "row_id long, x double, y double",
-    )
-    rows = G.with_h3_global_hybrid(df, res).collect()
-    assert len(rows) == n
-    got = {r["row_id"]: r["h3_id"] for r in rows}
-    want = G.geo_to_h3(lat, lng, res)
-    bad = [m for m in range(n) if got[m] != int(want[m])]
-    assert not bad, f"{len(bad)} ids differ, first: {bad[:3]}"
-    assert all(v is not None for v in got.values())

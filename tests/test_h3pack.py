@@ -28,8 +28,6 @@ SF_FIELDS = {"mode": 1, "res": 9, "base_cell": 20,
 def test_unpack_public_id():
     assert H.unpack_h3(SF_ID) == SF_FIELDS
     assert H.h3_is_valid(SF_ID)
-    assert H.h3_to_string(SF_ID) == "8928308280fffff"
-    assert H.string_to_h3("8928308280fffff") == SF_ID
 
 
 def test_pack_roundtrips_public_id():

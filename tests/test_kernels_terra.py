@@ -119,6 +119,19 @@ def test_dense_georef_bbox():
     assert verts[:, 1].max() == 23.0 + (h - 1 + 0.5) * 1.5
 
 
+def test_dense_single_valid_cell_heights_finite():
+    """One valid cell in a 36x36 no-data grid: the Bresenham gap fill
+    misses it from some vertices, which take the 0.0 corner-repair
+    fallback, never NaN. Counts still follow the count law."""
+    z = np.full((36, 36), np.nan)
+    z[10, 10] = 5.0
+    g = Grid(z, xpos=0.0, ypos=0.0, cellsize=1.0, ndv=np.nan)
+    verts, faces = generate_tin_dense_quadwalk(g, step=1)
+    assert np.isfinite(verts).all()
+    assert verts[:, 2].max() == 5.0
+    assert (len(verts), len(faces)) == dense_mesh_counts(36, 36, 1)
+
+
 def test_downsample_mean_golden():
     """A1 downsample (Raster_tests.cpp:119-139 semantics + sum>0 quirk)."""
     z = np.array(

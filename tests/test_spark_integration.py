@@ -455,6 +455,26 @@ def test_pyramid_empty_input(spark, tmp_path):
     assert cat.read().count() == 0
 
 
+@pytest.mark.parametrize("method", ["terra", "zemlya", "dense"])
+def test_pyramid_single_page_blobs_finite(spark, tmp_path, method):
+    """One page through the pyramid: every stored tile has finite
+    min/max heights, and its blob decodes to finite header heights and
+    the row's face count."""
+    from tin_terrain_spark.kernels.codec import decode_qm_tile
+    from tin_terrain_spark.pipeline.dem2tintiles import build_tile_pyramid
+
+    page = spark.read.parquet(f"{SF}/documents.parquet").limit(1)
+    out = str(tmp_path / "p")
+    build_tile_pyramid(spark, page, out, min_zoom=3, max_zoom=4, method=method)
+    rows = spark.read.parquet(out).collect()
+    assert rows and all(r["terrain"] is not None for r in rows)
+    for r in rows:
+        assert np.isfinite([r["min_z"], r["max_z"]]).all(), r["zoom"]
+        t = decode_qm_tile(bytes(r["terrain"]))
+        assert np.isfinite([t.min_height, t.max_height]).all(), r["zoom"]
+        assert len(t.faces) == r["n_faces"]
+
+
 def test_connected_components_transitive(spark):
     """CC over pairs: A~B~C one cluster WITHOUT an A~C edge; chains,
     a long path (pointer-jump convergence), and isolated pairs."""
@@ -557,53 +577,6 @@ def test_asc_xyz_spark_sources(spark, tmp_path):
     assert len(t) >= 1 and all(r["n_faces"] > 0 for r in t)
 
 
-def test_streaming_windowed_counts(spark):
-    from tin_terrain_spark.streaming.events import stream_windowed_counts
-
-    agg = stream_windowed_counts(spark, SF)
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName("win_counts")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        out = spark.sql("SELECT * FROM win_counts")
-        n = out.count()
-        assert n > 0
-        # batch mirror must agree on total event count
-        total_stream = out.agg({"n": "sum"}).collect()[0][0]
-        total_batch = spark.read.parquet(f"{SF}/events.parquet").count()
-        assert total_stream == total_batch
-    finally:
-        q.stop()
-
-
-def test_streaming_tile_ingest(spark):
-    from tin_terrain_spark.streaming.events import stream_tile_ingest
-
-    df = stream_tile_ingest(spark, SF, zoom=3)
-    q = df.writeStream.outputMode("append").format("memory").queryName("ingest").start()
-    try:
-        q.processAllAvailable()
-        out = spark.sql("SELECT * FROM ingest")
-        assert out.count() == 500
-        # identical to the batch geocode
-        from tin_terrain_spark.operators.geocode import geocode_points
-
-        batch = geocode_points(
-            spark.read.parquet(f"{SF}/documents.parquet"), zoom=3
-        ).select("doc_id", "tile_x", "tile_y")
-        assert (
-            out.select("doc_id", "tile_x", "tile_y")
-            .exceptAll(batch)
-            .isEmpty()
-        )
-    finally:
-        q.stop()
-
-
 def test_golden_tile_counts(spark, points):
     """Frozen golden per-tile counts at sf0.001 zoom 2 (FIXTURES.md §4
     tiles_golden): any change to geocoding, gridding, buffering, or the
@@ -627,35 +600,6 @@ def test_golden_tile_counts(spark, points):
         )
         got = sorted([[r[0], r[1], r[2], r[3], r[4]] for r in rows])
         assert got == golden[method], f"{method} golden mismatch"
-
-
-def test_streaming_stateful_sessionize(spark):
-    """applyInPandasWithState sessionizer: replaying the whole events
-    table in one micro-batch must produce the same (user, n_events,
-    sum_value) session multiset as the batch lag/cumsum sessionizer."""
-    from tin_terrain_spark.queries_ext import q_sessionize
-    from tin_terrain_spark.streaming.sessionize import stream_sessionize
-
-    out = stream_sessionize(spark, SF)
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("sess_state")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = spark.sql(
-            "SELECT user_id, n_events, round(sum_value, 6) AS sv FROM sess_state"
-        ).collect()
-    finally:
-        q.stop()
-    stream_sessions = sorted((r["user_id"], r["n_events"], r["sv"]) for r in got)
-    batch = q_sessionize(spark, SF).collect()
-    batch_sessions = sorted(
-        (r["user_id"], r["n_events"], r["sum_value"]) for r in batch
-    )
-    assert stream_sessions == batch_sessions
 
 
 def test_ann_ivf_recall(spark):
@@ -774,6 +718,63 @@ def test_store_probe_hot_bucket_equals_brute_jaccard(spark):
         if d in verbatim:
             assert r.is_dup and r.jaccard == 1.0, d
     assert out[5000].dup_of == 0
+
+
+@pytest.mark.parametrize("empty", ["queries", "points"])
+def test_knn_empty_inputs_equal_brute(spark, points, empty):
+    """0 queries (the ring rounds run) or 0 points (the brute plan):
+    knn_ring over both cell joins and knn_hex return knn_brute's rows."""
+    import pyspark.sql.functions as F
+
+    from tin_terrain_spark.functions.geocode_exprs import tile_size_meters
+    from tin_terrain_spark.operators.joins import knn_brute, knn_hex, knn_ring
+
+    pts = points.select("doc_id", "x", "y", "cell_x", "cell_y")
+    queries = pts.select(F.col("doc_id").alias("q_id"), "x", "y", "cell_x", "cell_y")
+    if empty == "queries":
+        queries = queries.limit(0)
+    else:
+        pts = pts.limit(0)
+    cols = ("q_id", "rank", "doc_id", "dist2")
+    want = sorted(
+        tuple(r) for r in knn_brute(pts, queries.select("q_id", "x", "y"), k=5)
+        .select(*cols).collect()
+    )
+    outs = [knn_ring(pts, queries, 2, 5, k=5, cell_join=j)
+            for j in ("broadcast", "shuffle")]
+    outs.append(knn_hex(pts, queries.select("q_id", "x", "y"), tile_size_meters(7), k=5))
+    for out in outs:
+        assert sorted(tuple(r) for r in out.select(*cols).collect()) == want
+        out.unpersist()
+
+
+def test_empty_catalog_inputs(spark, points):
+    """pip_join with 0 boxes, near_dup_pairs on a 0-doc batch, and
+    dedup_against_store with 0 new docs return no rows; against an
+    empty store every new doc is admitted (is_dup false, no dup_of)."""
+    from tin_terrain_spark.operators.dedup import (
+        band_keys, dedup_against_store, near_dup_pairs, shingles_df,
+    )
+    from tin_terrain_spark.operators.joins import pip_join
+
+    boxes = spark.createDataFrame(
+        [], "poly_id BIGINT, pmin_x DOUBLE, pmax_x DOUBLE, pmin_y DOUBLE, pmax_y DOUBLE"
+    )
+    assert pip_join(points, boxes, zoom=2).count() == 0
+
+    docs = spark.createDataFrame(
+        [(1, "a page about hills and valleys"), (2, "a page about hills and valleys"),
+         (3, "another page entirely")],
+        "doc_id BIGINT, text STRING",
+    )
+    none = docs.limit(0)
+    assert near_dup_pairs(none).count() == 0
+    store = (band_keys(none), shingles_df(none))
+    out = dedup_against_store(docs, *store).collect()
+    assert sorted(r.doc_id for r in out) == [1, 2, 3]
+    assert all(not r.is_dup and r.dup_of is None for r in out)
+    full = (band_keys(docs), shingles_df(docs))
+    assert dedup_against_store(none, *full).count() == 0
 
 
 def test_short_doc_shingles(spark):

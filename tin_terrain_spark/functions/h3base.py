@@ -50,10 +50,7 @@ numbering, from the geometry alone:
     isValidCell, pentagons where pentagons belong, correct cell
     counts 122/842/5882/... per res) but NOT numerically equal to the
     real library's ids: the library's arbitrary numbering and per-cell
-    orientation choices remain un-derivable. h3geo.set_base_cell_tables
-    remains the injection point — when the published tables arrive as
-    retrieved public content they REPLACE this derivation and ids
-    become library-identical with no other code change.
+    orientation choices remain un-derivable.
 
 Everything here is asserted at derivation time (counts, census,
 uniqueness, margins, pentagon sector coverage); a garbled derivation
@@ -119,7 +116,6 @@ class BaseCellTables:
     bc_is_pentagon: np.ndarray  # (122,) bool
     bc_faces: tuple            # per bc: tuple of faces that see it
     bc_center: np.ndarray      # (122, 2) lat/lng radians
-    derived: bool              # True = numerical derivation, False = injected
     # per-bc chart representatives (home rep in slot 0), padded:
     bc_rep_count: np.ndarray = None   # (122,)
     bc_rep_face: np.ndarray = None    # (122, R)
@@ -243,7 +239,6 @@ def derive_base_cells() -> BaseCellTables:
             bc_is_pentagon=np.array(d["bc_is_pentagon"], dtype=bool),
             bc_faces=tuple(tuple(f) for f in d["bc_faces"]),
             bc_center=np.array(d["bc_center"], dtype=np.float64),
-            derived=True,
             bc_rep_count=np.array(d["bc_rep_count"], dtype=np.int8),
             bc_rep_face=np.array(d["bc_rep_face"], dtype=np.int8),
             bc_rep_ijk=np.array(d["bc_rep_ijk"], dtype=np.int8),
@@ -526,7 +521,7 @@ def _derive_base_cells_numeric() -> BaseCellTables:
         lookup_bc=lookup_bc, lookup_rot=lookup_rot,
         bc_home_face=bc_home_face, bc_home_ijk=bc_home_ijk,
         bc_home_rot=bc_home_rot_arr, bc_is_pentagon=bc_is_pent,
-        bc_faces=tuple(bc_faces), bc_center=bc_center, derived=True,
+        bc_faces=tuple(bc_faces), bc_center=bc_center,
         bc_rep_count=rep_count, bc_rep_face=rep_face,
         bc_rep_ijk=rep_ijk, bc_rep_rot=rep_rot_arr,
     )
@@ -611,40 +606,3 @@ def _rep_arrays(lookup_bc, lookup_rot, bc_home_face, bc_home_ijk):
             rep_ijk[bc, s] = (i, j, k)
             rep_rot[bc, s] = ro
     return rep_count, rep_face, rep_ijk, rep_rot
-
-
-def tables_from_library(face_ijk_base_cells, base_cell_data) -> BaseCellTables:
-    """Build the same flat tables from the PUBLISHED library constants
-    (h3geo.set_base_cell_tables's injection path): ids then become
-    numerically identical to the real h3 library's."""
-    fib = np.asarray(face_ijk_base_cells)
-    lookup_bc = np.full(540, -1, dtype=np.int16)
-    lookup_rot = np.zeros(540, dtype=np.int8)
-    for f in range(20):
-        for i in range(3):
-            for j in range(3):
-                for k in range(3):
-                    bc, rot = fib[f, i, j, k]
-                    lookup_bc[f * 27 + i * 9 + j * 3 + k] = bc
-                    lookup_rot[f * 27 + i * 9 + j * 3 + k] = rot
-    bc_home_face = np.zeros(122, dtype=np.int8)
-    bc_home_ijk = np.zeros((122, 3), dtype=np.int8)
-    bc_is_pent = np.zeros(122, dtype=bool)
-    bc_center = np.zeros((122, 2), dtype=np.float64)
-    for b, (hf, hijk, is_pent) in enumerate(base_cell_data):
-        bc_home_face[b] = hf
-        bc_home_ijk[b] = hijk
-        bc_is_pent[b] = bool(is_pent)
-        bc_center[b] = _center_of(int(hf), tuple(int(x) for x in hijk))
-    rep_count, rep_face, rep_ijk, rep_rot = _rep_arrays(
-        lookup_bc, lookup_rot, bc_home_face, bc_home_ijk
-    )
-    return BaseCellTables(
-        lookup_bc=lookup_bc, lookup_rot=lookup_rot,
-        bc_home_face=bc_home_face, bc_home_ijk=bc_home_ijk,
-        bc_home_rot=np.zeros(122, dtype=np.int8),
-        bc_is_pentagon=bc_is_pent, bc_faces=(),
-        bc_center=bc_center, derived=False,
-        bc_rep_count=rep_count, bc_rep_face=rep_face,
-        bc_rep_ijk=rep_ijk, bc_rep_rot=rep_rot,
-    )

@@ -29,10 +29,9 @@ no network, so the table's GLOBAL ORIENTATION cannot be pinned against
 real-library output from inside the sandbox; and base-cell NUMBERING
 (the 122-entry faceIjkBaseCells/baseCellData tables, pure published
 constants) is not reproducible from first principles — it is an
-arbitrary canonical ordering. Until those tables arrive as retrieved
-public content, set_base_cell_tables() below is the injection point:
-once called, geo_to_h3() emits fully library-laid-out ids through
-h3pack's spec-true digit machinery with zero further code.
+arbitrary canonical ordering. geo_to_h3() therefore runs on the
+base-cell tables h3base.py derives from this geometry: its ids are
+engine-canonical, laid out by h3pack's spec-true digit machinery.
 
 Reference parity note: the reference engine has no spherical index at
 all (its tiler is Web-Mercator only, src/dem2tintiles_workflow.cpp);
@@ -252,123 +251,18 @@ def face_ijk_to_geo(face, i, j, k, res: int):
 
 # --- Spark surface ----------------------------------------------------
 
-
-def with_face_ijk(df, res: int, lat_col: str = "lat", lng_col: str = "lng",
-                  degrees: bool = True):
-    """Add (h3_face, h3_i, h3_j, h3_k) columns: the icosahedral cell
-    coordinate at `res`. Vectorized Arrow batches (mapInPandas — one
-    NumPy pass per batch, no per-row Python); the closest-face argmax
-    and the trig chain are whole-array ops over the 20-row constant
-    tables, so per-row cost is a handful of FLOPs. At 10^12 rows this
-    is a map-only stage: no shuffle, no state, partition-parallel."""
-    import pandas as pd  # noqa: F401 (mapInPandas contract)
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        df.schema.fields
-        + [
-            T.StructField("h3_face", T.IntegerType()),
-            T.StructField("h3_i", T.LongType()),
-            T.StructField("h3_j", T.LongType()),
-            T.StructField("h3_k", T.LongType()),
-        ]
-    )
-    to_rad = math.pi / 180.0 if degrees else 1.0
-
-    def run(batches):
-        for pdf in batches:
-            lat = pdf[lat_col].to_numpy(dtype=float) * to_rad
-            lng = pdf[lng_col].to_numpy(dtype=float) * to_rad
-            f, i, j, k = geo_to_face_ijk(lat, lng, res)
-            out = pdf.copy()
-            out["h3_face"] = f.astype(np.int32)
-            out["h3_i"] = i
-            out["h3_j"] = j
-            out["h3_k"] = k
-            yield out
-
-    return df.mapInPandas(run, schema)
-
-
 EARTH_R_MERC = 20037508.342789243 / math.pi  # Web-Mercator sphere radius
 
 
-def with_face_ijk_from_mercator(df, res: int, x_col: str = "x",
-                                y_col: str = "y"):
-    """Same as with_face_ijk but from Web-Mercator meters (the
-    engine's native point frame): inverse-Mercator to lat/lng inside
-    the SAME NumPy pass (lat = 2 atan(exp(y/R)) - pi/2), so the whole
-    transcendental chain runs in one Arrow batch kernel."""
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        df.schema.fields
-        + [
-            T.StructField("h3_face", T.IntegerType()),
-            T.StructField("h3_i", T.LongType()),
-            T.StructField("h3_j", T.LongType()),
-            T.StructField("h3_k", T.LongType()),
-        ]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            x = pdf[x_col].to_numpy(dtype=float)
-            y = pdf[y_col].to_numpy(dtype=float)
-            lat = 2.0 * np.arctan(np.exp(y / EARTH_R_MERC)) - math.pi / 2.0
-            lng = x / EARTH_R_MERC
-            f, i, j, k = geo_to_face_ijk(lat, lng, res)
-            out = pdf.copy()
-            out["h3_face"] = f.astype(np.int32)
-            out["h3_i"] = i
-            out["h3_j"] = j
-            out["h3_k"] = k
-            yield out
-
-    return df.mapInPandas(run, schema)
-
-
-def with_h3_global(df, res: int, lat_col: str = "lat", lng_col: str = "lng",
-                   degrees: bool = True, out_col: str = "h3_id"):
-    """Add a GLOBAL 64-bit H3-layout cell id column (geo_to_h3: all 122
-    base cells over the derived icosahedral tables, or the injected
-    library tables after set_base_cell_tables). Vectorized Arrow
-    batches via mapInPandas — the derived base-cell tables are
-    lru-cached per Python worker (~0.8 s once per executor worker,
-    amortized across every batch it processes), and the encode itself
-    is whole-array NumPy. Map-only stage: no shuffle, no state,
-    partition-parallel — the 10^12-row plan is a single scan."""
-    import pandas as pd  # noqa: F401 (mapInPandas contract)
-
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        df.schema.fields + [T.StructField(out_col, T.LongType())]
-    )
-    to_rad = math.pi / 180.0 if degrees else 1.0
-
-    def run(batches):
-        for pdf in batches:
-            lat = pdf[lat_col].to_numpy(dtype=float) * to_rad
-            lng = pdf[lng_col].to_numpy(dtype=float) * to_rad
-            out = pdf.copy()
-            out[out_col] = geo_to_h3(lat, lng, res)
-            yield out
-
-    return df.mapInPandas(run, schema)
-
-
-def with_face_ijk_cols(df, res: int, x_col: str = "x", y_col: str = "y",
-                       keep_xy: bool = False):
-    """Pure-Column twin of with_face_ijk_from_mercator: the whole
-    icosahedral chain — inverse Mercator, 20-way closest-face argmax
+def with_face_ijk_cols(df, res: int, x_col: str = "x", y_col: str = "y"):
+    """Add (h3_face, h3_i, h3_j, h3_k) from Web-Mercator meters: the
+    whole icosahedral chain — inverse Mercator, 20-way closest-face argmax
     (array_max over a struct array; ties break to the lowest face via
     the negated-face field, matching NumPy argmax), gnomonic scaling,
     Class II/III rotation, nearest-center cube rounding — as JVM
     Column algebra inside WholeStageCodegen. No UDF, no Python worker,
-    no Arrow hop: at 10^12 rows this is the plan you want (the
-    mapInPandas form above is the tested NumPy reference twin).
+    no Arrow hop: at 10^12 rows this is the plan you want
+    (geo_to_face_ijk is the tested NumPy reference twin).
 
     Staged through intermediate columns on purpose: each stage's
     outputs are referenced several times downstream, and Catalyst's
@@ -464,9 +358,6 @@ def with_face_ijk_cols(df, res: int, x_col: str = "x", y_col: str = "y",
         "_lng", "_slat", "_clat", "_best", "_r", "_theta", "_r2d", "_hx",
         "_hy", "_a", "_b", "_c", "_ra", "_rb", "_rc", "_i0", "_j0", "_m"
     ]
-    if keep_xy:
-        out = (out.withColumn("h3_x", F.col("_hx"))
-               .withColumn("h3_y", F.col("_hy")))
     return out.drop(*drop)
 
 
@@ -480,44 +371,6 @@ def face_table_sql() -> str:
         for f in range(20)
     )
     return f"(VALUES {rows}) AS f(face, clat, clng, az0)"
-
-
-# --- base-cell injection point ---------------------------------------
-
-_BASE_CELL_TABLES = None
-
-
-def set_base_cell_tables(face_ijk_base_cells, base_cell_data) -> None:
-    """Inject the published base-cell constants when available as
-    retrieved public content:
-      face_ijk_base_cells: nested [face][i][j][k] -> (base_cell,
-        ccw_rot60) for i,j,k in 0..2 (the res-0 overlap lattice),
-      base_cell_data: sequence of (home_face, (i, j, k), is_pentagon)
-        per base cell 0..121.
-    After injection geo_to_h3 resolves (face, res-0 ijk) to the
-    canonical base cell + orientation and emits library-laid-out ids
-    via h3pack's digit machinery."""
-    global _BASE_CELL_TABLES
-    fib = np.asarray(face_ijk_base_cells)
-    if fib.shape[:4] != (20, 3, 3, 3):
-        raise ValueError("face_ijk_base_cells must be [20][3][3][3][2]")
-    if len(base_cell_data) != 122:
-        raise ValueError("base_cell_data must have 122 entries")
-    _BASE_CELL_TABLES = (fib, list(base_cell_data))
-
-
-def base_cell_tables_available() -> bool:
-    return _BASE_CELL_TABLES is not None
-
-
-def _active_tables():
-    """Injected library tables if supplied, else the numerically
-    derived engine-canonical tables (h3base.derive_base_cells)."""
-    from . import h3base
-
-    if _BASE_CELL_TABLES is not None:
-        return h3base.tables_from_library(*_BASE_CELL_TABLES)
-    return h3base.derive_base_cells()
 
 
 def geo_to_h3(lat, lng, res: int) -> np.ndarray:
@@ -536,17 +389,17 @@ def geo_to_h3(lat, lng, res: int) -> np.ndarray:
     by nearest decoded center — exact, deterministic, and table-free
     (no cwOffsetPent needed).
 
-    With the numerically-derived tables the ids are engine-canonical
-    (structurally library-true: valid per isValidCell, pentagons in the
-    library pentagon slots, exact cell censuses); after
-    set_base_cell_tables() they become numerically library-identical.
+    The base-cell tables are the derived ones (h3base.derive_base_cells),
+    so the ids are engine-canonical: structurally library-true (valid
+    per isValidCell, pentagons in the library pentagon slots, exact cell
+    censuses) but not numerically equal to the real library's ids.
     """
     from . import h3base
     from .h3pack import pack_h3_np, walk_digits_np
 
     lat = np.atleast_1d(np.asarray(lat, float))
     lng = np.atleast_1d(np.asarray(lng, float))
-    tables = _active_tables()
+    tables = h3base.derive_base_cells()
     face, x, y = geo_to_hex2d(lat, lng, res)
     i, j, k = hex2d_to_ijk(x, y)
     digits, i0, j0, k0 = walk_digits_np(i, j, k, res)
@@ -748,7 +601,7 @@ def h3_to_geo(h, tables=None):
     from .h3pack import descend_digits_np, unpack_h3_np
 
     if tables is None:
-        tables = _active_tables()
+        tables = h3base.derive_base_cells()
     h = np.atleast_1d(np.asarray(h, np.int64))
     res_arr, bc, digits = unpack_h3_np(h)
     res = int(res_arr[0])
@@ -815,187 +668,3 @@ def _hex2d_to_geo(face, x, y, res: int):
     lat2 = np.where(origin, clat, lat2)
     lng2 = np.where(origin, clng, lng2)
     return lat2, lng2
-
-
-# --- GLOBAL encode as pure Column algebra (hybrid rare path) ----------
-
-
-def with_h3_global_cols(df, res: int, x_col: str = "x", y_col: str = "y",
-                        out_col: str = "h3_id"):
-    """GLOBAL H3 encode compiled to JVM Column algebra: icosahedral
-    projection (with_face_ijk_cols), the aperture-7 digit walk
-    (h3pack.h3_walk_ijk_exprs), base-cell + frame-rotation resolution
-    via element_at on the derived 540-entry lookup embedded as a
-    constant-folded literal array (no join, no broadcast, no Python),
-    digit rotation into the cell's canonical frame through the flat
-    6x7 rotation table, pentagon lead-digit relabel, and spec bit
-    packing — all inside WholeStageCodegen.
-
-    Rows the closed-form path cannot settle — res-0 lookup miss,
-    a pentagon deleted-subtree walk (raw lead digit 5), or a point
-    inside a pentagon corner disc where closest-face rounding is not a
-    consistent partition — get a NULL id: with_h3_global_hybrid routes
-    exactly those rows through the exact NumPy re-walk. The discs are
-    the SAME region geo_to_h3 itself re-walks (_near_pentagon) —
-    radius 0.75 res-0 spacings around each of the 12 pentagons, ~13%
-    of a uniform sphere (measured 13.05% on 20k uniform points), so
-    the hybrid's JVM fast path covers the other ~87%. Input is
-    Web-Mercator meters (the engine's native point frame)."""
-    from pyspark.sql import functions as F
-
-    from . import h3base
-    from .h3pack import (_BC_OFFSET, _MAX_RES, _MODE_OFFSET, _RES_OFFSET,
-                         MODE_CELL, _h3_stages, h3_walk_ijk_exprs)
-
-    tables = _active_tables()
-    out = with_face_ijk_cols(df, res, x_col=x_col, y_col=y_col, keep_xy=True)
-    for stage in _h3_stages(h3_walk_ijk_exprs(res, "h3_i", "h3_j", "h3_k")):
-        out = out.select(
-            "*", *[F.expr(expr).alias(name) for name, expr in stage]
-        )
-
-    def lit_arr(vals):
-        return F.array(*[F.lit(int(v)) for v in vals])
-
-    bc_arr = lit_arr(tables.lookup_bc)
-    rot_arr = lit_arr(tables.lookup_rot)
-    rtab = h3base.rot_digit_table()
-    rtab_arr = lit_arr(rtab.reshape(-1))          # flat (6*7,): rot*7+d
-    rt1_arr = lit_arr(rtab[1])                    # one extra ccw step
-    pent_arr = lit_arr(tables.bc_is_pentagon.astype(np.int64))
-
-    valid = (
-        F.greatest("_h3i0", "_h3j0", "_h3k0") <= F.lit(2).cast("bigint")
-    )
-    key = (
-        F.col("h3_face").cast("bigint") * 27
-        + F.col("_h3i0") * 9 + F.col("_h3j0") * 3 + F.col("_h3k0")
-    )
-    out = (
-        out.withColumn("_gkey", F.when(valid, key).otherwise(F.lit(0)))
-        .withColumn("_gvalid", valid)
-    )
-    out = (
-        out.withColumn(
-            "_gbc", F.element_at(bc_arr, (F.col("_gkey") + 1).cast("int"))
-        )
-        .withColumn(
-            "_grot", F.element_at(rot_arr, (F.col("_gkey") + 1).cast("int"))
-        )
-    )
-    out = out.withColumn(
-        "_gpent",
-        F.when(
-            F.col("_gbc") >= 0,
-            F.element_at(pent_arr, (F.col("_gbc") + 1).cast("int")) == 1,
-        ).otherwise(F.lit(False)),
-    )
-    if res > 0:
-        # canonical-frame digits: one flat-table lookup per level
-        out = out.select(
-            "*",
-            *[
-                F.element_at(
-                    rtab_arr,
-                    (F.col("_grot") * 7 + F.col(f"_h3d{rr}") + 1).cast("int"),
-                ).alias(f"_gc{rr}")
-                for rr in range(1, res + 1)
-            ],
-        )
-        # first nonzero canonical digit, coarsest level (rr=1) winning:
-        # fold fine->coarse so the outermost CASE tests rr=1 first
-        lead = F.lit(0)
-        for rr in range(res, 0, -1):
-            lead = F.when(
-                F.col(f"_gc{rr}") != 0, F.col(f"_gc{rr}")
-            ).otherwise(lead)
-        out = out.withColumn("_glead", lead)
-        relabel = F.col("_gpent") & (F.col("_glead") == 1)
-        out = out.withColumn("_grelab", relabel)
-        out = out.select(
-            "*",
-            *[
-                F.when(
-                    F.col("_grelab"),
-                    F.element_at(rt1_arr, (F.col(f"_gc{rr}") + 1).cast("int")),
-                )
-                .otherwise(F.col(f"_gc{rr}"))
-                .alias(f"_gf{rr}")
-                for rr in range(1, res + 1)
-            ],
-        )
-        pent_bad = F.col("_gpent") & (F.col("_glead") == 5)
-        cx, cy, u = _corner_xy(res)
-        r2 = float((u * _PENT_DISC_FRACTION * SQRT7 ** res) ** 2)
-        near = F.lit(False)
-        for c in range(3):
-            near = near | (
-                (F.col("h3_x") - float(cx[c])) ** 2
-                + (F.col("h3_y") - float(cy[c])) ** 2
-                < F.lit(r2)
-            )
-        problem = (~F.col("_gvalid")) | (F.col("_gbc") < 0) | pent_bad | near
-    else:
-        problem = (~F.col("_gvalid")) | (F.col("_gbc") < 0)
-
-    header = (MODE_CELL << _MODE_OFFSET) | (res << _RES_OFFSET)
-    for rr in range(res + 1, _MAX_RES + 1):
-        header |= 7 << (3 * (_MAX_RES - rr))
-    packed = F.lit(header).cast("bigint") + F.col("_gbc").cast(
-        "bigint"
-    ) * F.lit(1 << _BC_OFFSET).cast("bigint")
-    for rr in range(1, res + 1):
-        packed = packed + F.col(f"_gf{rr}").cast("bigint") * F.lit(
-            1 << (3 * (_MAX_RES - rr))
-        ).cast("bigint")
-    out = out.withColumn(
-        out_col, F.when(problem, F.lit(None)).otherwise(packed)
-    )
-    tmp = [c for c in out.columns if c.startswith(("_h3", "_g"))]
-    return out.drop(*tmp, "h3_face", "h3_i", "h3_j", "h3_k", "h3_x", "h3_y")
-
-
-def with_h3_global_hybrid(df, res: int, x_col: str = "x", y_col: str = "y",
-                          out_col: str = "h3_id"):
-    """GLOBAL H3 ids, split by cost: the bulk path is pure JVM Column
-    algebra (with_h3_global_cols — no Python workers, no Arrow hop,
-    scan-pipelined), and ONLY the rows the closed form marks
-    unresolvable (NULL id: pentagon-disc / deleted-wedge /
-    lookup-miss — ~13% of a UNIFORM sphere, and ~0% of a real corpus
-    concentrated away from the 12 ocean/desert pentagons) cross into
-    the exact vectorized NumPy re-walk (geo_to_h3) via mapInPandas;
-    results union back by name with identical schema.
-
-    The encoded frame is persisted BEFORE the null-split: filtering
-    the raw projection would let Catalyst substitute the full encode
-    expression tree into the filter condition (measured: analysis
-    blowup, minutes-to-OOM), whereas the filter above the cache
-    boundary tests the materialized column. The cache also makes the
-    two branches one computation instead of two. Callers doing a
-    one-shot pass may `.unpersist()` the returned frame's source via
-    spark.catalog.clearCache() or rely on LRU eviction."""
-    import pandas as pd  # noqa: F401 (mapInPandas contract)
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    cols = with_h3_global_cols(df, res, x_col=x_col, y_col=y_col,
-                               out_col=out_col).persist()
-    good = cols.filter(F.col(out_col).isNotNull())
-    rare = cols.filter(F.col(out_col).isNull()).drop(out_col)
-
-    schema = T.StructType(
-        rare.schema.fields + [T.StructField(out_col, T.LongType())]
-    )
-
-    def run(batches):
-        for pdf in batches:
-            x = pdf[x_col].to_numpy(dtype=float)
-            y = pdf[y_col].to_numpy(dtype=float)
-            lat = 2.0 * np.arctan(np.exp(y / EARTH_R_MERC)) - math.pi / 2.0
-            lng = x / EARTH_R_MERC
-            out = pdf.copy()
-            out[out_col] = geo_to_h3(lat, lng, res)
-            yield out
-
-    return good.unionByName(rare.mapInPandas(run, schema))

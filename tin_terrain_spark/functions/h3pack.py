@@ -92,7 +92,11 @@ def h3_is_valid(h: int) -> bool:
     bits 0, base cell <= 121, used digits <= 6, unused digits all 7,
     and under a pentagon base cell the LEADING non-center digit must
     not be K (the spec's isValidCell checks only the first non-zero
-    digit — deeper K digits are legal)."""
+    digit — deeper K digits are legal).
+
+    Kept without a shipped caller: tests/test_h3pack.py,
+    tests/test_h3global.py and test_spark_integration
+    (test_with_h3_id_packs_axial) check every minted id with it."""
     if h >> 63:
         return False
     if (h >> _MODE_OFFSET) & 0xF != MODE_CELL:
@@ -114,17 +118,13 @@ def h3_is_valid(h: int) -> bool:
     return True
 
 
-def h3_to_string(h: int) -> str:
-    return format(h, "x")
-
-
-def string_to_h3(s: str) -> int:
-    return int(s, 16)
-
-
 def h3_to_parent(h: int, parent_res: int) -> int:
     """Truncate to a coarser resolution by digit masking (spec
-    semantics: set res, fill digits past parent_res with 7)."""
+    semantics: set res, fill digits past parent_res with 7).
+
+    Kept without a shipped caller: the reference that h3_parent_expr
+    is checked against in DuckDB (tests/test_h3pack.py,
+    test_parent_expr_equals_python)."""
     f = unpack_h3(h)
     if parent_res > f["res"] or parent_res < 0:
         raise ValueError("parent_res must be <= cell res")
@@ -211,7 +211,11 @@ def h3_from_axial(q: int, r: int, res: int = _MAX_RES,
     under the shim base cell. Spec digit algorithm: walk from the
     finest resolution up, recording at each step which child of the
     parent the cell is (class II/III alternation). Raises when the
-    coordinate doesn't fit in `res` digits (leftover != origin)."""
+    coordinate doesn't fit in `res` digits (leftover != origin).
+
+    Kept without a shipped caller: the scalar reference encode of
+    tests/test_h3pack.py (test_np_batch_equals_scalar,
+    test_sql_walk_equals_numpy) and tests/test_property_based.py."""
     # axial -> IJK (q = i - k, r = j - k with k = 0, then normalize)
     i, j, k = _normalize(int(q), int(r), 0)
     digits = [0] * res
@@ -237,7 +241,12 @@ def h3_from_axial(q: int, r: int, res: int = _MAX_RES,
 
 def axial_from_h3(h: int) -> tuple[int, int]:
     """Decode back to axial (q, r): walk the digits coarse-to-fine
-    (spec decode order), then IJK -> axial."""
+    (spec decode order), then IJK -> axial.
+
+    Kept without a shipped caller: the inverse that
+    tests/test_h3pack.py (test_axial_roundtrip_exhaustive) and
+    test_spark_integration (test_with_h3_id_packs_axial) decode ids
+    with."""
     f = unpack_h3(h)
     i, j, k = 0, 0, 0
     for rr in range(1, f["res"] + 1):
@@ -252,8 +261,12 @@ def axial_from_h3(h: int) -> tuple[int, int]:
 
 def h3_from_axial_np(q: np.ndarray, r: np.ndarray, res: int = _MAX_RES,
                      base_cell: int = SHIM_BASE_CELL) -> np.ndarray:
-    """Vectorized batch encode (the Arrow-batch work unit for the
-    pandas_udf below): same algorithm, whole-array integer ops."""
+    """Vectorized batch encode: same algorithm as h3_from_axial,
+    whole-array integer ops.
+
+    Kept without a shipped caller: the batch twin of the scalar
+    reference, compared with it id for id by tests/test_h3pack.py
+    (test_np_batch_equals_scalar)."""
     i = np.asarray(q, dtype=np.int64).copy()
     j = np.asarray(r, dtype=np.int64).copy()
     k = np.zeros_like(i)
@@ -463,26 +476,8 @@ def h3_step_exprs(res: int, q_col: str = "hex_q", r_col: str = "hex_r"):
     return cols
 
 
-def h3_walk_ijk_exprs(res: int, i_col: str, j_col: str, k_col: str):
-    """General-IJK form of the walk (the GLOBAL encode front half):
-    start from face-frame (i, j, k) at `res` — NOT required to
-    up-aggregate to the chart origin — and emit the step columns down
-    to the res-0 coords `_h3i0/_h3j0/_h3k0` (the base-cell lookup key)
-    plus the raw digits `_h3d{1..res}`. No packing: the caller looks up
-    the base cell + frame rotation and packs (h3geo.with_h3_global_cols).
-    The spec's sequential negative-removal normalize is the uniform
-    translation x - min(x), so LEAST-subtraction is exact."""
-    cols: list[tuple[str, str]] = []
-    m0 = f"LEAST({i_col}, {j_col}, {k_col})"
-    cols.append((f"_h3i{res}", f"CAST(({i_col}) - {m0} AS BIGINT)"))
-    cols.append((f"_h3j{res}", f"CAST(({j_col}) - {m0} AS BIGINT)"))
-    cols.append((f"_h3k{res}", f"CAST(({k_col}) - {m0} AS BIGINT)"))
-    cols.extend(_h3_walk_body(res))
-    return cols
-
-
 def _h3_walk_body(res: int):
-    """The shared aperture-7 up-walk step columns: consumes
+    """The aperture-7 up-walk step columns of h3_step_exprs: consumes
     `_h3i{res}/_h3j{res}/_h3k{res}`, emits parents down to level 0 and
     digits `_h3d{rr}` (identical text to the pre-refactor inline loop —
     the h3_cells oracle twin depends on the semantics, not the text)."""

@@ -23,6 +23,7 @@ with ``np.cumsum`` on decode.
 
 from __future__ import annotations
 
+import math
 import struct
 from dataclasses import dataclass
 
@@ -70,8 +71,11 @@ def dequantize_coordinate(q, vmin, vmax):
 
 def high_watermark_encode(indices: np.ndarray) -> np.ndarray:
     """Flat triangle-index stream → watermark deltas
-    (QuantizedMeshIO.cpp:199-220). Sequential reference loop; kept as
-    the oracle for the vectorized first-seen fast path below."""
+    (QuantizedMeshIO.cpp:199-220). Sequential reference loop.
+
+    Kept without a shipped caller: the oracle for the vectorized
+    first-seen fast path (tests/test_kernels_codec.py,
+    test_watermark_first_seen_fast_path_matches_loop)."""
     out = np.empty(len(indices), dtype=np.int64)
     watermark = 0
     for n, index in enumerate(indices):
@@ -193,6 +197,8 @@ def encode_qm_tile(
     triangles.reshape(-1, 3)) — callers that already dedup the soup
     (the mesh-tile kernel needs n_vertices anyway) pass it to avoid a
     second row-unique.
+    Raises ValueError on a non-finite vertex or bound: NaN would
+    otherwise quantize to garbage heights behind a NaN header.
     """
     tri_stream = triangles.reshape(-1, 3).astype(np.float64)
     if vertex_order is not None:
@@ -202,6 +208,9 @@ def encode_qm_tile(
     else:
         verts = np.zeros((0, 3), dtype=np.float64)
         stream_idx = np.zeros(0, dtype=np.int64)
+    if not (np.isfinite(verts).all()
+            and all(map(math.isfinite, (*bbox_min, *bbox_max)))):
+        raise ValueError("encode_qm_tile: non-finite vertex or bound")
 
     if mesh_is_rescaled:
         u = scale_coordinate(verts[:, 0]) if len(verts) else np.zeros(0, np.int64)

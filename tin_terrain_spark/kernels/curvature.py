@@ -68,4 +68,4 @@ def generate_tin_curvature(grid: Grid, threshold: float):
     )
     # deterministic input order regardless of how the mask iterated
     order = np.lexsort((pts[:, 0], pts[:, 1]))
-    return generate_delaunay_mesh(pts[order], backend="sweephull")
+    return generate_delaunay_mesh(pts[order])

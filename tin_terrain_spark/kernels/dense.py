@@ -19,7 +19,10 @@ from .raster import Grid, is_no_data, sample_nearest_valid_avg
 
 
 def dense_mesh_counts(w: int, h: int, step: int):
-    """The closed-form vertex/face counts (BASELINE.md count law)."""
+    """The closed-form vertex/face counts (BASELINE.md count law).
+
+    Kept without a shipped caller: tests/test_kernels_terra.py
+    (test_dense_count_law) checks the dense mesher against it."""
     vpr = (w - 1) // step + (1 if (w - 1) % step else 0) + 1
     vpc = (h - 1) // step + (1 if (h - 1) % step else 0) + 1
     return vpr * vpc, (vpr - 1) * (vpc - 1) * 2
@@ -45,9 +48,10 @@ def generate_tin_dense_quadwalk(grid: Grid, step: int = 1):
     if len(bad_r):
         from .raster import nearest_valid_avg_batch
 
-        zz[bad_r, bad_c] = nearest_valid_avg_batch(
-            grid, rows[bad_r], cols[bad_c]
-        )
+        fill = nearest_valid_avg_batch(grid, rows[bad_r], cols[bad_c])
+        # the Bresenham circles can miss every valid cell; such a vertex
+        # takes 0.0, the corner-repair fallback (TerraUtils.cpp:8-22)
+        zz[bad_r, bad_c] = np.where(is_no_data(fill, grid.ndv), 0.0, fill)
 
     xs = grid.col2x(cols)
     ys = grid.row2y(rows)

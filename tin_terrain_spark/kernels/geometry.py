@@ -1,7 +1,7 @@
 """Geometry kernels: predicates, barycentric interpolation, 2.5D clipping.
 
 Semantics follow the reference:
-  triArea / ccw / inCircle (EPS=1e-6 bias)  include/tntn/QuadEdge.h:6,13-44
+  triArea / inCircle (EPS=1e-6 bias)        include/tntn/QuadEdge.h:6,13-44
   barycentric interpolate (bounds incl.)    src/SuperTriangle.cpp:32-49
   sign_2D half-plane test                   src/geometrix.cpp:462-517
   segment × line intersection (2.5D)        src/geometrix.cpp:417-460
@@ -24,13 +24,12 @@ def tri_area(ax, ay, bx, by, cx, cy):
     return (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
 
 
-def ccw(ax, ay, bx, by, cx, cy):
-    return tri_area(ax, ay, bx, by, cx, cy) > 0
-
-
 def in_circle(ax, ay, bx, by, cx, cy, dx, dy):
     """True if d strictly inside circumcircle of (a,b,c), with the
-    reference's EPS=1e-6 bias (QuadEdge.h:37-44)."""
+    reference's EPS=1e-6 bias (QuadEdge.h:37-44).
+
+    Kept without a shipped caller: the Delaunay-property check in
+    tests/test_kernels_meshio.py (test_points2mesh_delaunay_property)."""
     return (
         (ax * ax + ay * ay) * tri_area(bx, by, cx, cy, dx, dy)
         - (bx * bx + by * by) * tri_area(ax, ay, cx, cy, dx, dy)

@@ -21,7 +21,10 @@ TILE_SIZE = 256  # MercatorProjection.cpp:5-9 (default tile size)
 
 
 def lonlat_to_meters(lon, lat):
-    """P1 — forward spherical Mercator (MercatorProjection.cpp:11-18)."""
+    """P1 — forward spherical Mercator (MercatorProjection.cpp:11-18).
+
+    Kept without a shipped caller: SURVEY's P1 port, checked by
+    tests/test_kernels_mercator.py."""
     x = np.asarray(lon, dtype=np.float64) * HALF_CIRCUMFERENCE / 180.0
     y = np.log(np.tan(np.pi * 0.25 + np.asarray(lat, dtype=np.float64) * np.pi / 360.0))
     return x, y * R_EARTH
@@ -35,7 +38,10 @@ def meters_to_lonlat(mx, my):
 
 
 def resolution(zoom: int, tile_size: int = TILE_SIZE) -> float:
-    """meters per pixel at a zoom level (MercatorProjection.cpp:5-9,30-36)."""
+    """meters per pixel at a zoom level (MercatorProjection.cpp:5-9,30-36).
+
+    Kept without a shipped caller: SURVEY's port of the reference
+    resolution, checked by tests/test_kernels_mercator.py."""
     return 2.0 * HALF_CIRCUMFERENCE / tile_size / (1 << zoom)
 
 
@@ -64,14 +70,21 @@ def pixels_to_tile(px, py, tile_size: int = TILE_SIZE):
 
 
 def meters_to_tile(mx, my, zoom: int, tile_size: int = TILE_SIZE):
-    """P5 = P3 ∘ P4 (MercatorProjection.cpp:58-65)."""
+    """P5 = P3 ∘ P4 (MercatorProjection.cpp:58-65).
+
+    Kept without a shipped caller: SURVEY's P5 tie-rule port;
+    test_spark_integration (test_tile_key_matches_numpy_kernel) checks
+    the geocoder's tile keys against it."""
     px, py = meters_to_pixels(mx, my, zoom, tile_size)
     return pixels_to_tile(px, py, tile_size)
 
 
 def tile_bounds(tx, ty, zoom: int, tile_size: int = TILE_SIZE):
     """P6 — tile → meters bbox (min_x, min_y, max_x, max_y)
-    (MercatorProjection.cpp:76-80)."""
+    (MercatorProjection.cpp:76-80).
+
+    Kept without a shipped caller: SURVEY's P6 port, checked by
+    tests/test_kernels_mercator.py (test_tile_bounds_roundtrip)."""
     tx = np.asarray(tx, dtype=np.float64)
     ty = np.asarray(ty, dtype=np.float64)
     min_x, min_y = pixels_to_meters(tx * tile_size, ty * tile_size, zoom, tile_size)

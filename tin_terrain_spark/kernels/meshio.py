@@ -34,6 +34,11 @@ def format_obj(verts: np.ndarray, faces: np.ndarray) -> str:
 
 
 def parse_obj(text: str):
+    """OBJ text -> (verts, faces), zero-based.
+
+    Kept without a shipped caller: reads written OBJ back in
+    tests/test_kernels_meshio.py (test_obj_roundtrip) and
+    tests/test_dem2tin.py."""
     verts, faces = [], []
     for line in text.splitlines():
         t = line.split()
@@ -67,6 +72,10 @@ def format_off(verts: np.ndarray, faces: np.ndarray) -> str:
 
 
 def parse_off(text: str):
+    """OFF text -> (verts, faces).
+
+    Kept without a shipped caller: reads written OFF back in
+    tests/test_kernels_meshio.py (test_off_roundtrip_and_edge_count)."""
     lines = [ln for ln in text.splitlines() if ln.strip()]
     assert lines[0].strip() == "OFF", "not an OFF file"
     nv, nf, _ = (int(x) for x in lines[1].split()[:3])
@@ -114,6 +123,11 @@ def format_geojson(verts: np.ndarray, faces: np.ndarray) -> str:
 
 
 def format_asc(grid: Grid) -> str:
+    """Grid -> ESRI ASCII raster text.
+
+    Kept without a shipped caller: writes the ASC inputs of
+    tests/test_kernels_meshio.py (test_asc_roundtrip), tests/test_cli.py
+    and test_spark_integration's ASC source test."""
     ndv = grid.ndv if not np.isnan(grid.ndv) else -99999.0
     out = [
         f"NCOLS {grid.w}\n",

@@ -438,7 +438,11 @@ def encode_png_palette(idx: np.ndarray, palette: np.ndarray,
     """uint8 index raster (H, W) + palette (N, 3) [+ per-entry alpha
     (M,)] -> color-type-3 PNG bytes (fixture/sink side of the palette
     decode path). depth=1/2/4 bit-packs the indices MSB-first
-    (palette must then fit in 2**depth entries)."""
+    (palette must then fit in 2**depth entries).
+
+    Kept without a shipped caller: builds the palette PNGs that
+    tests/test_png.py (test_roundtrip_palette and the other palette
+    cases) decodes."""
     h, w = idx.shape
     palette = np.ascontiguousarray(palette, dtype=np.uint8)
     if palette.ndim != 2 or palette.shape[1] != 3 or not len(palette):

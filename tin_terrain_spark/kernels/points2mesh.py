@@ -2,44 +2,65 @@
 (M6 — the reference's Points2Mesh/Delaunator path,
 /root/reference/src/Points2Mesh.cpp:78-85, src/Delaunator.cpp).
 
-The reference uses a sweep-hull Delaunator port (addon path, off by
-default). Here the same operator is built on our quad-edge incremental
-structure (kernels/delaunay.py): a bounding super-quad hosts the
-insertions, and faces touching super-quad corners are dropped on
-emission — standard public technique; outputs are valid Delaunay
-triangulations of the inputs (verified by the in-circle property test),
-not bit-copies of Delaunator's.
+Like the reference, the operator runs a sweep-hull Delaunator
+(kernels/delaunator.py). `delaunay_mesh_incremental` builds the same
+triangulation on the quad-edge incremental structure
+(kernels/delaunay.py) and is kept as the independent reference the
+sweep-hull is tested against. Outputs are valid Delaunay
+triangulations of the inputs (verified by the in-circle property
+test), not bit-copies of Delaunator's.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
+from .delaunator import generate_delaunay_faces_sweephull
 from .delaunay import DelaunayMesh
 from .geometry import tri_area
 
 
-def generate_delaunay_mesh(points: np.ndarray, backend: str = "incremental"):
-    """points: (n, 3) float64 (x, y, z); duplicate (x, y) keep the first
-    z. Returns (verts (m,3), faces (k,3) int64, CCW upward).
+def _first_seen_xy(pts: np.ndarray) -> np.ndarray:
+    """Drop points whose (x, y) repeats an earlier point's."""
+    _, first_idx = np.unique(pts[:, :2], axis=0, return_index=True)
+    return pts[np.sort(first_idx)]
 
-    backend='incremental' (default): quad-edge insertion in a super-quad
-    — the engine's native structure. backend='sweephull': the
-    reference's actual Delaunator algorithm (kernels/delaunator.py).
-    Both produce THE Delaunay triangulation (unique for points in
-    general position); test_points2mesh asserts face-set equality."""
+
+def generate_delaunay_mesh(points: np.ndarray):
+    """points: (n, 3) float64 (x, y, z); duplicate (x, y) keep the first
+    z. Returns (verts (m,3), faces (k,3) int64, CCW upward), built by
+    the sweep-hull Delaunator (kernels/delaunator.py)."""
     pts = np.asarray(points, dtype=np.float64)
     if len(pts) < 3:
         return pts.reshape(-1, 3), np.zeros((0, 3), dtype=np.int64)
-    if backend == "sweephull":
-        return _generate_sweephull(pts)
-    if backend != "incremental":
-        raise ValueError(f"unknown Delaunay backend {backend!r}")
+    pts = _first_seen_xy(pts)
+    faces = generate_delaunay_faces_sweephull(pts[:, :2])
+    if faces is None:
+        return pts.reshape(-1, 3), np.zeros((0, 3), dtype=np.int64)
+    # normalize to CCW in the x-y plane (the facade contract; Delaunator
+    # emits a consistent orientation but with the opposite convention)
+    v = pts[faces]
+    cw = (
+        (v[:, 1, 0] - v[:, 0, 0]) * (v[:, 2, 1] - v[:, 0, 1])
+        - (v[:, 1, 1] - v[:, 0, 1]) * (v[:, 2, 0] - v[:, 0, 0])
+    ) < 0
+    faces[cw] = faces[cw][:, [1, 0, 2]]
+    return pts, faces
 
-    # dedup on (x, y), first-seen
-    _, first_idx = np.unique(pts[:, :2], axis=0, return_index=True)
-    keep = np.sort(first_idx)
-    pts = pts[keep]
+
+def delaunay_mesh_incremental(points: np.ndarray):
+    """Same contract as generate_delaunay_mesh, built by quad-edge
+    insertion into a bounding super-quad whose corner faces are dropped
+    on emission.
+
+    Kept without a shipped caller: tests/test_delaunator.py
+    (test_backends_agree) checks the sweep-hull face set against it.
+    Both produce THE Delaunay triangulation (unique for points in
+    general position)."""
+    pts = np.asarray(points, dtype=np.float64)
+    if len(pts) < 3:
+        return pts.reshape(-1, 3), np.zeros((0, 3), dtype=np.int64)
+    pts = _first_seen_xy(pts)
 
     min_x, min_y = pts[:, 0].min(), pts[:, 1].min()
     max_x, max_y = pts[:, 0].max(), pts[:, 1].max()
@@ -81,24 +102,3 @@ def generate_delaunay_mesh(points: np.ndarray, backend: str = "incremental"):
         np.asarray(verts, dtype=np.float64).reshape(-1, 3),
         np.asarray(faces, dtype=np.int64).reshape(-1, 3),
     )
-
-
-def _generate_sweephull(pts: np.ndarray):
-    """Delaunator backend with the same output contract as the
-    incremental path: first-seen (x, y) dedup, CCW-upward faces."""
-    from .delaunator import generate_delaunay_faces_sweephull
-
-    _, first_idx = np.unique(pts[:, :2], axis=0, return_index=True)
-    pts = pts[np.sort(first_idx)]
-    faces = generate_delaunay_faces_sweephull(pts[:, :2])
-    if faces is None:
-        return pts.reshape(-1, 3), np.zeros((0, 3), dtype=np.int64)
-    # normalize to CCW in the x-y plane (the facade contract; Delaunator
-    # emits a consistent orientation but with the opposite convention)
-    v = pts[faces]
-    cw = (
-        (v[:, 1, 0] - v[:, 0, 0]) * (v[:, 2, 1] - v[:, 0, 1])
-        - (v[:, 1, 1] - v[:, 0, 1]) * (v[:, 2, 0] - v[:, 0, 0])
-    ) < 0
-    faces[cw] = faces[cw][:, [1, 0, 2]]
-    return pts, faces

@@ -11,7 +11,6 @@ Kernels:
   integer_downsample_mean   src/raster_tools.cpp:15-60  (incl. the
                             `sum>0`-guard quirk: a window whose valid
                             sum is <= 0 keeps the no-data value)
-  find_minmax               src/raster_tools.cpp:193-219
   sample_nearest_valid_avg  src/raster_tools.cpp:274-427 (expanding
                             Bresenham circles of 3x3 weighted samples)
   raster_bbox               Raster.h:301-312 (bbox spans pixel CENTERS)
@@ -83,7 +82,11 @@ def integer_downsample_mean(grid: Grid, win: int) -> Grid:
     """Mean over win×win windows of valid pixels; destination keeps ndv
     when the window has no valid pixels OR their sum is <= 0 (the
     reference's quirk, raster_tools.cpp:50-55). ndv test here is
-    `!= ndv` without isnan, matching the reference (:44)."""
+    `!= ndv` without isnan, matching the reference (:44).
+
+    Kept without a shipped caller: the reference's downsample port,
+    pinned by tests/test_kernels_terra.py (test_downsample_mean_golden,
+    test_downsample_sum_negative_quirk)."""
     h, w = grid.z.shape
     hs, ws = h // win, w // win
     src = grid.z[: hs * win, : ws * win]
@@ -99,15 +102,6 @@ def integer_downsample_mean(grid: Grid, win: int) -> Grid:
     write = (count > 0) & (s > 0)
     out[write] = s[write] / count[write]
     return Grid(out, grid.xpos, grid.ypos, grid.cellsize * win, grid.ndv)
-
-
-def find_minmax(grid: Grid):
-    """(min, max) ignoring no-data (raster_tools.cpp:193-219)."""
-    valid = ~is_no_data(grid.z, grid.ndv)
-    if not valid.any():
-        return (np.nan, np.nan)
-    v = grid.z[valid]
-    return (float(v.min()), float(v.max()))
 
 
 def _subsample_3x3_full(z: np.ndarray, ndv: float) -> np.ndarray:

@@ -26,6 +26,10 @@ def check_tin_properties(
     expect_square_hull: bool = True,
     rel_tol: float = 1e-9,
 ):
+    """(ok, problems): mesh validity checks on a TIN.
+
+    Kept without a shipped caller: the mesh-validity check of
+    tests/test_kernels_terra.py (terra, dense and zemlya cases)."""
     problems = []
     nv = len(verts)
     if len(faces):
@@ -77,7 +81,10 @@ def check_tin_properties(
 def triangles_overlap_exists(verts: np.ndarray, faces: np.ndarray) -> bool:
     """O(n²) overlapping-triangle check (Mesh.cpp:384-438) — use only on
     small test meshes. Two triangles overlap if any edges properly
-    cross."""
+    cross.
+
+    Kept without a shipped caller: tests/test_kernels_terra.py
+    (test_terra_small_dense_grid) checks terra meshes with it."""
     if len(faces) < 2:
         return False
     segs = []

@@ -459,13 +459,14 @@ def sql_contamination(bench_mod: int = 97, n: int = 5,
 # --------------------------------------------------------------------------
 
 
-def dup_clusters(docs: DataFrame, threshold: float = 0.5,
-                 max_iters: int = 25) -> DataFrame:
-    """Connected components over the near-duplicate graph: the step a
-    production dedup actually keys its keep/drop decision on (pairs
-    alone can't — transitive duplicates A~B~C must land in ONE group
-    even when A~C was never a candidate pair). cluster_id = min doc_id
-    reachable in the near_dup_pairs graph.
+def connected_components(pairs: DataFrame, max_iters: int = 25,
+                         stats: dict | None = None) -> DataFrame:
+    """Min-label connected components over an undirected (doc_a,
+    doc_b) pair list, such as the near_dup_pairs graph: the step a
+    production dedup keys its keep/drop decision on (pairs alone
+    can't — transitive duplicates A~B~C must land in ONE group even
+    when A~C was never a candidate pair). cluster_id = min doc_id
+    reachable in the graph.
 
     Algorithm: min-label propagation with POINTER JUMPING — per round,
     every vertex takes the min of its own label and its neighbors'
@@ -481,19 +482,10 @@ def dup_clusters(docs: DataFrame, threshold: float = 0.5,
     count. No collect of data rows.
 
     Returns (doc_id, cluster_id, cluster_size) for every vertex of the
-    graph (docs with no near-duplicate don't appear; their cluster is
-    trivially themselves)."""
-    pairs = near_dup_pairs(docs, threshold).select("doc_a", "doc_b")
-    return connected_components(pairs, max_iters=max_iters)
-
-
-def connected_components(pairs: DataFrame, max_iters: int = 25,
-                         stats: dict | None = None) -> DataFrame:
-    """Min-label connected components over an undirected (doc_a,
-    doc_b) pair list — see dup_clusters for the algorithm contract.
-    If `stats` is passed, it receives {"rounds": n} — the number of
-    propagate+jump rounds executed including the final fixpoint-
-    confirming round (the O(log diameter) evidence hook)."""
+    graph (docs with no edge don't appear; their cluster is trivially
+    themselves). If `stats` is passed, it receives {"rounds": n} — the
+    number of propagate+jump rounds executed including the final
+    fixpoint-confirming round (the O(log diameter) evidence hook)."""
     # symmetric edge list (propagation needs both directions) PLUS a
     # self-loop (v,v) per vertex: with self-loops present, a single
     # groupBy-min over the edge list computes min(own label, neighbor

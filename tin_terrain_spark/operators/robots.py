@@ -93,7 +93,11 @@ def pattern_regex(pattern: str) -> str:
 
 def crawl_allowed(rules: list[tuple[str, int, bool]], path: str) -> bool:
     """Reference evaluator (kernel form): longest match wins, allow
-    beats disallow on ties, default allow."""
+    beats disallow on ties, default allow.
+
+    Kept without a shipped caller: tests/test_robots.py
+    (test_distributed_filter_matches_kernel) compares robots_filter
+    against it."""
     best: tuple[int, int] | None = None
     for pat, prec, allow in rules:
         if re.match(pattern_regex(pat), path):

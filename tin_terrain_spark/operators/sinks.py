@@ -44,7 +44,10 @@ def materialize_tile_tree(spark: SparkSession, store_dir: str, out_dir: str) -> 
     from any tile store, faceless tiles skipped, on the calling
     process's filesystem. Streams partition-by-partition
     (toLocalIterator) — never collects the full store. Returns the tile
-    count; idempotent overwrite."""
+    count; idempotent overwrite.
+
+    Kept without a shipped caller: the reference's Z/X/Y.terrain
+    export, tested by tests/test_sinks_tiletree.py."""
     df = spark.read.parquet(store_dir).where(F.col("terrain").isNotNull())
     df = df.select("zoom", "tile_x", "tile_y", "terrain")
     n = 0

@@ -351,8 +351,8 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_events_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 5-minute window agg — the batch mirror of the
-    structured-streaming path (tin_terrain_spark.streaming)."""
+    """Tumbling 5-minute window agg over the events table: count and
+    value sum per (window, event_type)."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     # parquet ts is TIMESTAMP_NTZ; cast via TIMESTAMP (session TZ = UTC)
     # to get epoch seconds identical to DuckDB's naive epoch()
@@ -937,7 +937,7 @@ def q_points_mesh(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
         )
         order = np.lexsort((p[:, 0], p[:, 1]))  # input-order independence
-        v, f = generate_delaunay_mesh(p[order], backend="sweephull")
+        v, f = generate_delaunay_mesh(p[order])
         return pd.DataFrame(
             [
                 {
@@ -1319,10 +1319,9 @@ H3_GLOBAL_RES = 2  # ~5.9k cells globally; every base cell reachable
 
 def q_h3_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GLOBAL icosahedral H3 cell rollup (functions/h3geo.py +
-    h3base.py — the numerically-derived 122-base-cell grid): the bulk
-    path is pure JVM Column algebra (with_h3_global_cols), with only
-    pentagon-disc rows crossing into the exact NumPy re-walk
-    (with_h3_global_hybrid). Deterministic → golden-row oracle
+    h3base.py — the numerically-derived 122-base-cell grid): every
+    point is encoded by the vectorized NumPy kernel h3geo.geo_to_h3
+    in one mapInPandas scan. Deterministic → golden-row oracle
     (freeze_goldens.py), hardened by a TRUE-oracled independent
     invariant: every emitted cell id must decode to a center that
     re-encodes to the same id at the same resolution (enc∘dec
@@ -1356,12 +1355,8 @@ def q_h3_global(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # map-only vectorized NumPy encode (derived tables lru-cached per
     # Python worker): a single scan, no shuffle before the rollup —
-    # the 10^12-row shape. The pure-Column twin + hybrid split
-    # (with_h3_global_cols / _hybrid) are row-equality-tested against
-    # this exact kernel in tests/test_h3global.py; the Column build
-    # costs ~2 s of driver-side expression construction per fresh
-    # plan, which dominates at gate/bench corpus sizes, so the catalog
-    # query uses the kernel path.
+    # the 10^12-row shape. tests/test_h3global.py checks the kernel's
+    # grid invariants.
     ids = pts.mapInPandas(encode, "doc_id BIGINT, h3_id BIGINT")
     cells = ids.groupBy("h3_id").agg(
         F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("first_doc")

@@ -1,16 +1,11 @@
-"""Iceberg source/sink for the Common-Crawl-style pages table.
+"""Iceberg tile sink with MERGE-based idempotent resume.
 
-The charter's canonical input is an Iceberg table
-
-    pages(url STRING, warc_ts TIMESTAMP, html BINARY,
-          text STRING, lang STRING)
-
-at 10^12-document scale. This module wires that path end-to-end —
-catalog config, bucket(url) table layout, snapshot/incremental reads,
-and MERGE-based idempotent resume for the tile sink — all gated on the
-Iceberg runtime jars actually being on the classpath (this container
-ships none, so every entry point degrades loudly-but-gracefully and
-the tests exercise the unavailable path).
+On a lakehouse cluster the pyramid's tiles land in an Iceberg table
+keyed on (zoom, tile_x, tile_y). The Iceberg entry points are gated on
+the runtime jars being on the classpath: without them each one raises
+IcebergUnavailable with launch guidance, and `tile_catalog` falls back
+to LocalTileCatalog, which runs the same resume contract on versioned
+parquet.
 
 Cluster usage (spark-submit):
     spark-submit --py-files tin_terrain_spark.zip \\
@@ -19,21 +14,13 @@ Cluster usage (spark-submit):
       job.py
 or set the confs via `iceberg_session_confs()` below.
 
-Design notes for 10^12 rows:
-  - PARTITIONED BY (bucket(N_BUCKETS, url)): url is the natural unique
-    key; hash-bucketing spreads crawl hot-spots (one host's pages
-    arriving together) evenly, and joins/dedups keyed on url can use
-    storage-partitioned joins (no shuffle) when both sides share the
-    bucket spec.
-  - days(warc_ts) as a secondary partition field gives snapshot-range
-    pruning for incremental recrawl processing.
-  - The tile sink resumes via MERGE INTO keyed on (zoom, tile_x,
-    tile_y): re-running a failed job overwrites exactly the tiles it
-    recomputes and inserts the missing ones — idempotent, no
-    read-modify-write race (Iceberg serializable snapshot commit), and
-    no .done marker files needed (the reference's benchmark_done
-    design, src/benchmark_workflow.cpp:585-648, is the file-system
-    ancestor of this).
+The tile sink resumes via MERGE INTO keyed on (zoom, tile_x, tile_y):
+re-running a failed job overwrites exactly the tiles it recomputes and
+inserts the missing ones — idempotent, no read-modify-write race
+(Iceberg serializable snapshot commit), and no .done marker files
+needed (the reference's benchmark_done design,
+src/benchmark_workflow.cpp:585-648, is the file-system ancestor of
+this).
 """
 
 from __future__ import annotations
@@ -44,12 +31,6 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
-
-PAGES_SCHEMA = (
-    "url STRING, warc_ts TIMESTAMP, html BINARY, text STRING, lang STRING"
-)
-
-N_BUCKETS = 256  # per-write file-count control at warehouse scale
 
 TILE_KEY = ("zoom", "tile_x", "tile_y")
 
@@ -80,7 +61,10 @@ def _require(spark: SparkSession) -> None:
 
 def iceberg_session_confs(catalog: str = "lake", warehouse: str = "s3://bucket/wh") -> dict:
     """The session confs a cluster launcher should set (documented here
-    so the launch path is code, not tribal knowledge)."""
+    so the launch path is code, not tribal knowledge).
+
+    Kept without a shipped caller: a deployment setting for the
+    cluster launcher, checked by tests/test_sources_iceberg.py."""
     return {
         f"spark.sql.catalog.{catalog}": "org.apache.iceberg.spark.SparkCatalog",
         f"spark.sql.catalog.{catalog}.type": "hadoop",
@@ -91,67 +75,6 @@ def iceberg_session_confs(catalog: str = "lake", warehouse: str = "s3://bucket/w
             "org.apache.iceberg.spark.extensions.IcebergSparkSessionExtensions"
         ),
     }
-
-
-def create_pages_table_ddl(table: str = "lake.web.pages") -> str:
-    """DDL for the charter's input table with the scale layout."""
-    return f"""
-      CREATE TABLE IF NOT EXISTS {table} ({PAGES_SCHEMA})
-      USING iceberg
-      PARTITIONED BY (bucket({N_BUCKETS}, url), days(warc_ts))
-      TBLPROPERTIES (
-        'write.distribution-mode' = 'hash',
-        'write.target-file-size-bytes' = '536870912'
-      )
-    """
-
-
-def create_tiles_table_ddl(table: str = "lake.web.tiles") -> str:
-    """DDL for the tile-store sink (MERGE resume target)."""
-    return f"""
-      CREATE TABLE IF NOT EXISTS {table} (
-        zoom INT, tile_x BIGINT, tile_y BIGINT, n_points BIGINT,
-        n_cells INT, n_vertices INT, n_faces INT, max_err DOUBLE,
-        min_z DOUBLE, max_z DOUBLE, terrain BINARY,
-        euler_ok BOOLEAN, verts_on_grid_ok BOOLEAN, cover_ok BOOLEAN
-      )
-      USING iceberg
-      PARTITIONED BY (zoom)
-      TBLPROPERTIES ('write.distribution-mode' = 'hash')
-    """
-
-
-def read_pages(spark: SparkSession, table: str = "lake.web.pages",
-               snapshot_id: int | None = None,
-               parquet_fallback: str | None = None) -> DataFrame:
-    """Scan the pages table. With `snapshot_id`, a time-travel read
-    (reproducible lineage — the same snapshot re-reads byte-identical
-    inputs after a resume). `parquet_fallback` keeps local tests and
-    jar-less environments running against the same schema from plain
-    parquet."""
-    if not iceberg_available(spark):
-        if parquet_fallback is not None:
-            return spark.read.parquet(parquet_fallback)
-        _require(spark)
-    reader = spark.read
-    if snapshot_id is not None:
-        reader = reader.option("snapshot-id", str(snapshot_id))
-    return reader.table(table)
-
-
-def read_pages_incremental(spark: SparkSession, start_snapshot: int,
-                           end_snapshot: int | None = None,
-                           table: str = "lake.web.pages") -> DataFrame:
-    """Appended-rows-only incremental scan between snapshots — the
-    recrawl-delta path (processes only new WARC loads)."""
-    _require(spark)
-    reader = (
-        spark.read.format("iceberg")
-        .option("start-snapshot-id", str(start_snapshot))
-    )
-    if end_snapshot is not None:
-        reader = reader.option("end-snapshot-id", str(end_snapshot))
-    return reader.load(table)
 
 
 def merge_tiles(spark: SparkSession, tiles: DataFrame,
