@@ -2,7 +2,7 @@
 reference's published terra number (tntn_benchmarks.csv: 17.0M cells in
 16.4 s single-thread ≈ 1.03M cells/s/core on a smooth real DEM).
 
-Two workloads:
+Workloads (default: smooth + noise; `tile` on request):
   smooth   512x512 smooth synthetic DEM (Crater-Lake-like relief,
            ~3% of cells inserted at max_error=2) — the apples-to-apples
            case: greedy meshing cost is dominated by triangle scans.
@@ -10,6 +10,13 @@ Two workloads:
            workload shape, ~70% of cells inserted) — the worst case
            for greedy refinement; no published reference figure exists
            for this regime.
+  tile     `python scripts/bench_kernel.py tile`: the pyramid's whole
+           per-tile kernel (meshing._make_tile_fn: grid assembly, terra,
+           normalize, clip, quantized-mesh encode) on seeded sparse
+           36x36 zoom-6 tiles with ~15 and ~60 occupied cells, the
+           pyramid's shape. Reports per-tile CPU-ms for the native path
+           and for the pure-Python fallback (TTS_NO_NATIVE=1), each in
+           its own process.
 
 Prints one JSON line; run_scaling.py embeds it in BENCH/BASELINE.md.
 """
@@ -18,6 +25,7 @@ from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
@@ -92,5 +100,73 @@ def main() -> None:
     )
 
 
+TILE_ZOOM, TILE_GRID_BITS, TILE_BUFFER = 6, 5, 2
+
+
+def _tile_inputs(n_tiles: int, n_cells: int, seed: int):
+    """Seeded sparse tiles in _make_tile_fn's input form: (tile_x,
+    tile_y, row_b, col_b, z_sum, z_cnt), `n_cells` occupied cells of the
+    buffered 36x36 raster, heights in the pyramid DEM's +-110 m band."""
+    rng = np.random.RandomState(seed)
+    size = (1 << TILE_GRID_BITS) + 2 * TILE_BUFFER
+    tiles = []
+    for _ in range(n_tiles):
+        idx = np.sort(rng.choice(size * size, n_cells, replace=False))
+        cnt = rng.randint(1, 4, n_cells).astype(np.int64)
+        z_sum = (rng.rand(n_cells) * 220.0 - 110.0) * cnt
+        tx, ty = (int(v) for v in rng.randint(0, 1 << TILE_ZOOM, 2))
+        tiles.append((tx, ty, (idx // size).astype(np.int32),
+                      (idx % size).astype(np.int32), z_sum, cnt))
+    return tiles
+
+
+def tile_run(n_tiles: int) -> dict:
+    """Per-tile CPU-ms of the tile kernel in THIS process (native or
+    fallback, whichever kernels.native resolved), best of 3 passes."""
+    from tin_terrain_spark.functions.geocode_exprs import tile_size_meters
+    from tin_terrain_spark.kernels import native
+    from tin_terrain_spark.operators.meshing import _make_tile_fn
+
+    # the pyramid's per-zoom default max_error (dem2tintiles)
+    max_error = tile_size_meters(TILE_ZOOM + TILE_GRID_BITS) / 10000.0
+    fn = _make_tile_fn(TILE_ZOOM, TILE_GRID_BITS, TILE_BUFFER, "terra",
+                       max_error, 1, False, True)
+    out = {"native_kernel": native.native_available()}
+    for n_cells, seed in ((15, 1), (60, 2)):
+        tiles = _tile_inputs(n_tiles, n_cells, seed)
+        best = float("inf")
+        for _ in range(3):
+            t0 = time.process_time()
+            rows = [fn(*t) for t in tiles]
+            best = min(best, time.process_time() - t0)
+        out[f"cells_{n_cells}"] = {
+            "cpu_ms_per_tile": round(1000 * best / n_tiles, 4),
+            "tiles": n_tiles,
+            "mean_faces": round(sum(r["n_faces"] for r in rows) / n_tiles, 1),
+        }
+    return out
+
+
+def tile_main() -> None:
+    """The `tile` workload: one child process per backend, so the
+    native library's once-per-process gating sees TTS_NO_NATIVE."""
+    res = {}
+    for name, extra, n_tiles in (("native", {}, 2000),
+                                 ("no_native", {"TTS_NO_NATIVE": "1"}, 100)):
+        env = {k: v for k, v in os.environ.items() if k != "TTS_NO_NATIVE"}
+        env.update(extra)
+        r = subprocess.run(
+            [sys.executable, os.path.abspath(__file__), "tile-run", str(n_tiles)],
+            env=env, capture_output=True, text=True, check=True,
+        )
+        res[name] = json.loads(r.stdout.strip().splitlines()[-1])
+    print(json.dumps({"tile": res}))
+
+
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] == ["tile"]:
+        tile_main()
+    elif sys.argv[1:2] == ["tile-run"]:
+        print(json.dumps(tile_run(int(sys.argv[2]))))
+    else:
+        main()

@@ -132,6 +132,41 @@ def test_dense_single_valid_cell_heights_finite():
     assert (len(verts), len(faces)) == dense_mesh_counts(36, 36, 1)
 
 
+@pytest.mark.parametrize("backend", ["native", "numpy"])
+@pytest.mark.parametrize("method", ["terra", "zemlya", "dense", "curvature"])
+def test_all_nan_tile(method, backend, monkeypatch):
+    """A tile whose cells all hold NaN heights (or no cell at all)
+    through the tile kernel, on both backends: terra, zemlya and dense
+    mesh the 0.0 corner-repair / gap fill into a flat blob whose heights
+    are all finite; curvature keeps no vertex and gives a faceless tile
+    with no blob. No method raises."""
+    from tin_terrain_spark.kernels import native
+    from tin_terrain_spark.kernels.codec import decode_qm_tile
+    from tin_terrain_spark.operators.meshing import _make_tile_fn
+
+    if backend == "numpy":
+        monkeypatch.setattr(native, "get_lib", lambda: None)
+    inputs = {
+        "nan_cells": (np.array([3, 10, 20], np.int32), np.array([4, 11, 30], np.int32),
+                      np.full(3, np.nan), np.array([1, 2, 1], np.int64)),
+        "no_cells": (np.zeros(0, np.int32), np.zeros(0, np.int32), np.zeros(0),
+                     np.zeros(0, np.int64)),
+    }
+    for compute_error in (False, True):
+        fn = _make_tile_fn(6, 5, 2, method, 2.0, 1, compute_error, True)
+        for name, cells in inputs.items():
+            row = fn(5, 7, *cells)
+            if method == "curvature":
+                assert row["terrain"] is None and row["n_faces"] == 0, name
+                continue
+            assert row["terrain"] is not None and row["n_faces"] > 0, name
+            assert (row["min_z"], row["max_z"]) == (0.0, 0.0), name
+            t = decode_qm_tile(row["terrain"])
+            assert np.isfinite([t.min_height, t.max_height, *t.center]).all(), name
+            assert (t.min_height, t.max_height) == (0.0, 0.0), name
+            assert (len(t.u), len(t.faces)) == (row["n_vertices"], row["n_faces"])
+
+
 def test_downsample_mean_golden():
     """A1 downsample (Raster_tests.cpp:119-139 semantics + sum>0 quirk)."""
     z = np.array(

@@ -475,6 +475,68 @@ def test_pyramid_single_page_blobs_finite(spark, tmp_path, method):
         assert len(t.faces) == r["n_faces"]
 
 
+def test_mesh_tiles_single_point(spark):
+    """One geocoded point through mesh_tiles: its own tile counts the
+    point, and every tile it reaches (border buffer included) carries a
+    blob that decodes to its row's counts with finite heights."""
+    from tin_terrain_spark.kernels.codec import decode_qm_tile
+    from tin_terrain_spark.operators.geocode import geocode_points
+    from tin_terrain_spark.operators.meshing import mesh_tiles
+
+    pts = geocode_points(spark.range(1).withColumnRenamed("id", "doc_id"), zoom=3)
+    own = pts.select("tile_x", "tile_y").first()
+    rows = mesh_tiles(pts, zoom=3).collect()
+    assert {(r.tile_x, r.tile_y) for r in rows} >= {(own.tile_x, own.tile_y)}
+    for r in rows:
+        mine = (r.tile_x, r.tile_y) == (own.tile_x, own.tile_y)
+        assert (r.n_points, r.n_cells) == ((1 if mine else 0), 1)
+        assert np.isfinite([r.min_z, r.max_z]).all()
+        t = decode_qm_tile(bytes(r.terrain))
+        assert (len(t.u), len(t.faces)) == (r.n_vertices, r.n_faces)
+        assert np.isfinite([t.min_height, t.max_height]).all()
+
+
+def test_hot_cell_kernel_input_bounded(spark):
+    """20,000 points in one cell (beside a tile corner, so it fans out
+    to four tiles) over a sparse background: every tile's kernel input
+    stays at most (2^grid_bits + 2b)^2 rows, and each tile's cell and
+    point counts equal a NumPy twin of the aggregation and fan-out."""
+    import pyspark.sql.functions as F
+
+    from tin_terrain_spark.operators.meshing import mesh_tiles
+
+    zoom, bits, b, n_hot, n_bg = 2, 5, 2, 20_000, 500
+    g, side = 1 << bits, 1 << (zoom + bits)
+    hot = spark.range(n_hot).select(
+        F.lit(g).cast("bigint").alias("cell_x"), F.lit(g).cast("bigint").alias("cell_y"),
+        (F.col("id") % 7).cast("double").alias("z"))
+    bg = spark.range(n_bg).select(
+        (F.col("id") * 37 % side).alias("cell_x"), (F.col("id") * 53 % side).alias("cell_y"),
+        (F.col("id") % 11).cast("double").alias("z"))
+    got = {(r.tile_x, r.tile_y): (r.n_cells, r.n_points)
+           for r in mesh_tiles(hot.union(bg), zoom=zoom, grid_bits=bits,
+                               buffer_cells=b).collect()}
+
+    ids = np.arange(n_bg)
+    cx = np.concatenate([np.full(n_hot, g), ids * 37 % side])
+    cy = np.concatenate([np.full(n_hot, g), ids * 53 % side])
+    cells, counts = np.unique(np.stack([cx, cy], axis=1), axis=0, return_counts=True)
+    want: dict = {}
+    for (x, y), c in zip(cells.tolist(), counts.tolist()):
+        tx, ty, col, row = x // g, y // g, x % g, y % g
+        for dx in (-1, 0, 1):
+            for dy in (-1, 0, 1):
+                near_x = dx == 0 or (dx == -1 and col < b) or (dx == 1 and col >= g - b)
+                near_y = dy == 0 or (dy == -1 and row < b) or (dy == 1 and row >= g - b)
+                t = (tx + dx, ty + dy)
+                if near_x and near_y and 0 <= t[0] < side // g and 0 <= t[1] < side // g:
+                    n_cells, n_points = want.get(t, (0, 0))
+                    want[t] = (n_cells + 1, n_points + (c if dx == dy == 0 else 0))
+    assert got == want
+    assert max(n for n, _ in got.values()) <= (g + 2 * b) ** 2
+    assert got[(1, 1)][1] >= n_hot and all((t in got) for t in ((0, 0), (0, 1), (1, 0)))
+
+
 def test_connected_components_transitive(spark):
     """CC over pairs: A~B~C one cluster WITHOUT an A~C edge; chains,
     a long path (pointer-jump convergence), and isolated pairs."""

@@ -1,17 +1,20 @@
-/* tinmesh.c — native fast path for the Terra/Zemlya greedy TIN kernels,
- * corner repair, and the unit-square triangle clip.
+/* tinmesh.c — native fast path for the Terra/Zemlya greedy TIN kernels
+ * and their mesh emission, corner repair, the unit-square triangle
+ * clip, and the post-mesh half of a tile (normalize, clip, first-seen
+ * vertex order, quantized-mesh body).
  *
  * A line-for-line translation of THIS REPO'S Python kernels
- * (kernels/delaunay.py, kernels/terra.py, kernels/zemlya.py,
- * kernels/raster.py's subsample/nearest-valid search, and
- * kernels/geometry.py's clip) into C — not of the reference C++
- * (heremaps/tin-terrain), whose semantics the Python kernels already
- * re-implement and test. Outputs must be BIT-IDENTICAL to the Python
- * path: every float expression keeps the Python evaluation order, and
- * the build uses -ffp-contract=off so the compiler cannot fuse
- * multiply-adds. kernels/native.py compiles this with the system gcc
- * at first use and falls back to pure Python when no compiler is
- * available (the .so is a cache, never a requirement).
+ * (kernels/delaunay.py, kernels/terra.py, kernels/zemlya.py and their
+ * to_mesh, kernels/raster.py's subsample/nearest-valid search,
+ * kernels/geometry.py's clip, kernels/codec.py's vertex order and
+ * encoder, operators/meshing.py's unit-tile normalize) into C — not of
+ * the reference C++ (heremaps/tin-terrain), whose semantics the Python
+ * kernels already re-implement and test. Outputs must be BIT-IDENTICAL
+ * to the Python path: every float expression keeps the Python
+ * evaluation order, and the build uses -ffp-contract=off so the
+ * compiler cannot fuse multiply-adds. kernels/native.py compiles this
+ * with the system gcc at first use and falls back to pure Python when
+ * no compiler is available (the .so is a cache, never a requirement).
  *
  * Key shared-semantics notes (mirroring the Python docstrings):
  *  - quarter-edge algebra: edge k owns quarters 4k..4k+3
@@ -21,6 +24,10 @@
  *    unique, so pop order is a total order (matches Python heapq)
  *  - scanline walk: sequential `x += dx` accumulators, lower-triangle
  *    x2 restart at v0x, first-strict-max candidate selection
+ *  - tile body: first-seen vertex dedup by value (-0.0 == 0.0, first
+ *    occurrence kept), truncating quantize, int16-wrapped zig-zag
+ *    deltas, u16/u32 watermark indices, 0xCA padding on the absolute
+ *    offset; the 88-byte header is left to the caller (NumPy trig)
  */
 
 #include <math.h>
@@ -669,49 +676,96 @@ static void init_quad(Mesh *m, double ax, double ay, double bx, double by,
     make_face(m, q_sym(ec));
 }
 
-/* emit faces in first_face link order; returns count or -1 on overflow */
-static int64_t emit_faces(Mesh *m, int32_t *faces_out, int64_t cap) {
-    int64_t n = 0;
-    for (int32_t t = m->first_face; t >= 0; t = m->tri_next[t]) {
-        if (n >= cap) return -1;
-        int32_t a = m->tri_anchor[t];
-        faces_out[n * 3 + 0] = m->orgpt[a];
-        faces_out[n * 3 + 1] = m->orgpt[q_sym(a)];
-        faces_out[n * 3 + 2] = m->orgpt[q_sym(m->onext[a])];
-        n++;
-    }
-    return n;
-}
+/* ------------------------------------------------------------------ */
+/* emission (terra.py TerraMesh.to_mesh / zemlya.py ZemlyaMesh.to_mesh) */
+/* ------------------------------------------------------------------ */
 
-static int64_t emit_points(Mesh *m, double *pts_out, int64_t cap) {
-    if (m->n_pts > cap) return -1;
-    for (int32_t i = 0; i < m->n_pts; i++) {
-        pts_out[i * 2 + 0] = m->ptx[i];
-        pts_out[i * 2 + 1] = m->pty[i];
+/* Vertices: the valid cells of zsrc (not NaN, not ndv; for terra also
+ * used == 1) in row-major order, at pixel-centre world coordinates
+ * (raster.py Grid.col2x / Grid.row2y, same expression order).
+ * Faces: first_face link order, vertex ids looked up per pixel (a cell
+ * without a vertex maps to 0, as the Python lookup table does), flipped
+ * to (p3, p2, p1) when ccw in pixel space (TerraMesh.cpp:220-231).
+ * vid: h*w scratch. verts_out holds h*w rows; returns n_faces, or -1
+ * when cap_faces is too small. */
+static int64_t emit_mesh(Mesh *m, const double *zsrc, const uint8_t *used,
+                         double xpos, double ypos, double cellsize,
+                         int64_t *vid, double *verts_out, int64_t *faces_out,
+                         int64_t cap_faces, int64_t *n_verts_out) {
+    int h = m->h, w = m->w;
+    int64_t nv = 0;
+    for (int r = 0; r < h; r++) {
+        double y = ypos + ((double)(h - 1) - (double)r + 0.5) * cellsize;
+        for (int c = 0; c < w; c++) {
+            size_t i = (size_t)r * w + c;
+            double zv = zsrc[i];
+            if ((used && used[i] != 1) || isnan(zv) || zv == m->ndv) {
+                vid[i] = 0;
+                continue;
+            }
+            vid[i] = nv;
+            verts_out[nv * 3 + 0] = xpos + ((double)c + 0.5) * cellsize;
+            verts_out[nv * 3 + 1] = y;
+            verts_out[nv * 3 + 2] = zv;
+            nv++;
+        }
     }
-    return m->n_pts;
+    int64_t nf = 0;
+    for (int32_t t = m->first_face; t >= 0; t = m->tri_next[t]) {
+        if (nf >= cap_faces) return -1;
+        int32_t a = m->tri_anchor[t];
+        int32_t p1 = m->orgpt[a];
+        int32_t p2 = m->orgpt[q_sym(a)];
+        int32_t p3 = m->orgpt[q_sym(m->onext[a])];
+        double x1 = m->ptx[p1], y1 = m->pty[p1];
+        double x2 = m->ptx[p2], y2 = m->pty[p2];
+        double x3 = m->ptx[p3], y3 = m->pty[p3];
+        int64_t i1 = vid[(size_t)(int64_t)y1 * w + (int64_t)x1];
+        int64_t i2 = vid[(size_t)(int64_t)y2 * w + (int64_t)x2];
+        int64_t i3 = vid[(size_t)(int64_t)y3 * w + (int64_t)x3];
+        int64_t *f = faces_out + nf * 3;
+        if (tri_area(x1, y1, x2, y2, x3, y3) > 0) {
+            f[0] = i3; f[1] = i2; f[2] = i1;
+        } else {
+            f[0] = i1; f[1] = i2; f[2] = i3;
+        }
+        nf++;
+    }
+    *n_verts_out = nv;
+    return nf;
 }
 
 /* ------------------------------------------------------------------ */
 /* drivers                                                             */
 /* ------------------------------------------------------------------ */
 
-/* terra greedy insertion; returns n_faces, or -1 on overflow/oom.
- * z: h*w row-major (already corner-repaired by the caller).
- * used: h*w zeroed; token: h*w zeroed.
- * Caller-provided outputs: faces_out (cap_faces*3), pts_out (cap_pts*2). */
-int64_t tin_terra_greedy(const double *z, int h, int w, double ndv,
-                         double max_error, uint8_t *used, int64_t *token,
-                         int32_t *faces_out, int64_t cap_faces,
-                         double *pts_out, int64_t cap_pts,
-                         int64_t *n_pts_out) {
+void tin_repair_corners(double *z, int h, int w, double ndv);
+
+/* terra: corner repair (when `repair`), greedy insertion and emission
+ * in one call — kernels/native.py:terra_native.
+ * z: h*w row-major float64, repaired in place. used (h*w bytes), token
+ * and vid (h*w int64 each) are scratch, zeroed here. verts_out holds
+ * h*w rows of (x, y, z); faces_out holds cap_faces rows of int64.
+ * Returns n_faces (n_vertices in *n_verts_out), or -1 on overflow/oom,
+ * in which case a repair done here is undone, so the pure-Python
+ * fallback repairs pristine corners (repair is not idempotent). */
+int64_t tin_terra_mesh(double *z, int h, int w, double ndv,
+                       double max_error, double xpos, double ypos,
+                       double cellsize, int repair, uint8_t *used,
+                       int64_t *token, int64_t *vid, double *verts_out,
+                       int64_t *faces_out, int64_t cap_faces,
+                       int64_t *n_verts_out) {
+    size_t corner[4] = {0, (size_t)(h - 1) * w, (size_t)(h - 1) * w + (w - 1),
+                        (size_t)(w - 1)};
+    double snap[4];
+    for (int i = 0; i < 4; i++) snap[i] = z[corner[i]];
+    if (repair) tin_repair_corners(z, h, w, ndv);
+    memset(used, 0, (size_t)h * w);
+    memset(token, 0, (size_t)h * w * sizeof(int64_t));
+
     Mesh m;
     mesh_init(&m, z, h, w, ndv, max_error, used, token);
-
-    used[0] = 1;
-    used[(size_t)(h - 1) * w] = 1;
-    used[(size_t)(h - 1) * w + (w - 1)] = 1;
-    used[w - 1] = 1;
+    for (int i = 0; i < 4; i++) used[corner[i]] = 1;
 
     init_quad(&m, 0.0, 0.0, 0.0, (double)(h - 1), (double)(w - 1),
               (double)(h - 1), (double)(w - 1), 0.0);
@@ -723,7 +777,6 @@ int64_t tin_terra_greedy(const double *z, int h, int w, double ndv,
         double neg_imp = m.hk[0];
         int64_t tok = m.ht[0];
         int32_t cx = m.hx[0], cy = m.hy[0], tri = m.htri[0];
-        double cz = m.hz[0];
         h_pop(&m);
         if (-neg_imp < max_error) break;
         if (m.token[(size_t)cy * w + cx] != tok) continue;
@@ -731,28 +784,30 @@ int64_t tin_terra_greedy(const double *z, int h, int w, double ndv,
         insert_point(&m, (double)cx, (double)cy, tri);
     }
 
-    int64_t nf = -1, np = -1;
-    if (!m.oom) {
-        np = emit_points(&m, pts_out, cap_pts);
-        nf = emit_faces(&m, faces_out, cap_faces);
-    }
+    int64_t nf = -1;
+    if (!m.oom)
+        nf = emit_mesh(&m, z, used, xpos, ypos, cellsize, vid, verts_out,
+                       faces_out, cap_faces, n_verts_out);
     mesh_free(&m);
-    if (np < 0 || nf < 0) return -1;
-    *n_pts_out = np;
+    if (nf < 0 && repair)
+        for (int i = 0; i < 4; i++) z[corner[i]] = snap[i];
     return nf;
 }
 
-/* zemlya hierarchical greedy insertion.
+/* zemlya hierarchical greedy insertion and emission.
  * z: raw raster (corner-repaired); insert_stack: (max_level) levels of
  * h*w candidate rasters (level L at insert_stack + (L-1)*h*w; the final
  * level scans z itself and its slot is ignored); result: h*w, prefilled
- * NaN except the 4 corner values. */
-int64_t tin_zemlya_greedy(const double *z, const double *insert_stack,
-                          int max_level, int h, int w, double ndv,
-                          double max_error, double *result, uint8_t *used,
-                          int64_t *token, int32_t *faces_out,
-                          int64_t cap_faces, double *pts_out,
-                          int64_t cap_pts, int64_t *n_pts_out) {
+ * NaN except the 4 corner values. Scratch and outputs as in
+ * tin_terra_mesh; vertices are the valid cells of result. */
+int64_t tin_zemlya_mesh(const double *z, const double *insert_stack,
+                        int max_level, int h, int w, double ndv,
+                        double max_error, double xpos, double ypos,
+                        double cellsize, double *result, uint8_t *used,
+                        int64_t *token, int64_t *vid, double *verts_out,
+                        int64_t *faces_out, int64_t cap_faces,
+                        int64_t *n_verts_out) {
+    memset(token, 0, (size_t)h * w * sizeof(int64_t));
     Mesh m;
     mesh_init(&m, z, h, w, ndv, max_error, used, token);
     m.result = result;
@@ -785,14 +840,11 @@ int64_t tin_zemlya_greedy(const double *z, const double *insert_stack,
         }
     }
 
-    int64_t nf = -1, np = -1;
-    if (!m.oom) {
-        np = emit_points(&m, pts_out, cap_pts);
-        nf = emit_faces(&m, faces_out, cap_faces);
-    }
+    int64_t nf = -1;
+    if (!m.oom)
+        nf = emit_mesh(&m, result, NULL, xpos, ypos, cellsize, vid,
+                       verts_out, faces_out, cap_faces, n_verts_out);
     mesh_free(&m);
-    if (np < 0 || nf < 0) return -1;
-    *n_pts_out = np;
     return nf;
 }
 
@@ -1056,47 +1108,43 @@ static void clip_tri_by_line(Tri *tv, int64_t idx, int64_t *n_tv, double ox,
     /* nl == 3: fully inside, unchanged */
 }
 
-/* clip a triangle soup to [0,1]^2. tris: n x 3 x 3 doubles. out must
- * hold cap triangles; returns m, or -1 when cap would overflow.
+static int tri_inside01(const double *t) {
+    for (int vi = 0; vi < 3; vi++) {
+        double x = t[vi * 3 + 0], y = t[vi * 3 + 1];
+        if (!(x > 0.0 && x < 1.0 && y > 0.0 && y < 1.0)) return 0;
+    }
+    return 1;
+}
+
+/* clip a triangle soup (n x 3 x 3 doubles) to [0,1]^2 into a malloc'd
+ * soup the caller frees; returns its length, or -1 on oom.
  * Output order matches the Python wrapper exactly: strictly-inside
  * triangles first (original order), then clip survivors in working-
  * list order (appends last, per line pass). */
-int64_t tin_clip01(const double *tris, int64_t n, double *out, int64_t cap) {
+static int64_t clip01_alloc(const double *tris, int64_t n, Tri **out) {
     static const double lines[4][4] = {
         {0.0, 0.0, 1.0, 0.0},   /* bottom, right-wards */
         {1.0, 0.0, 0.0, 1.0},   /* right, upwards */
         {1.0, 1.0, -1.0, 0.0},  /* top, left-wards */
         {0.0, 1.0, 0.0, -1.0},  /* left, downwards */
     };
-    if (n == 0) return 0;
-
-    int64_t m = 0;       /* triangles written to out */
-    int64_t n_rest = 0;
+    int64_t n_in = 0;
+    for (int64_t i = 0; i < n; i++) n_in += tri_inside01(tris + i * 9);
     /* worst case growth: one append per triangle per line pass */
-    int64_t cap_tv = 16 * n + 8;
-    Tri *tv = (Tri *)malloc((size_t)cap_tv * sizeof(Tri));
-    if (!tv) return -1;
-
+    int64_t cap_tv = 16 * (n - n_in) + 8;
+    Tri *soup = (Tri *)malloc((size_t)(n_in + cap_tv) * sizeof(Tri));
+    if (!soup) return -1;
+    Tri *tv = soup + n_in;
+    int64_t m = 0, n_rest = 0;
     for (int64_t i = 0; i < n; i++) {
         const double *t = tris + i * 9;
-        int inside = 1;
-        for (int vi = 0; vi < 3 && inside; vi++) {
-            double x = t[vi * 3 + 0], y = t[vi * 3 + 1];
-            if (!(x > 0.0 && x < 1.0 && y > 0.0 && y < 1.0)) inside = 0;
-        }
-        if (inside) {
-            if (m >= cap) { free(tv); return -1; }
-            memcpy(out + m * 9, t, 9 * sizeof(double));
-            m++;
-        } else {
-            memcpy(&tv[n_rest++], t, sizeof(Tri));
-        }
+        memcpy(tri_inside01(t) ? &soup[m++] : &tv[n_rest++], t, sizeof(Tri));
     }
 
     for (int li = 0; li < 4; li++) {
         int64_t len_at_start = n_rest;
         for (int64_t i = 0; i < len_at_start; i++) {
-            if (n_rest >= cap_tv) { free(tv); return -1; }
+            if (n_rest >= cap_tv) { free(soup); return -1; }
             clip_tri_by_line(tv, i, &n_rest, lines[li][0], lines[li][1],
                              lines[li][2], lines[li][3]);
         }
@@ -1104,10 +1152,216 @@ int64_t tin_clip01(const double *tris, int64_t n, double *out, int64_t cap) {
 
     for (int64_t i = 0; i < n_rest; i++) {
         if (tri_has_nan(&tv[i])) continue;
-        if (m >= cap) { free(tv); return -1; }
-        memcpy(out + m * 9, &tv[i], 9 * sizeof(double));
+        if (&soup[m] != &tv[i]) memcpy(&soup[m], &tv[i], sizeof(Tri));
         m++;
     }
-    free(tv);
+    *out = soup;
     return m;
+}
+
+/* tris: n x 3 x 3 doubles; out must hold cap triangles. Returns m, or
+ * -1 when cap would overflow. */
+int64_t tin_clip01(const double *tris, int64_t n, double *out, int64_t cap) {
+    if (n == 0) return 0;
+    Tri *soup;
+    int64_t m = clip01_alloc(tris, n, &soup);
+    if (m < 0) return -1;
+    if (m > cap) m = -1;
+    else memcpy(out, soup, (size_t)m * sizeof(Tri));
+    free(soup);
+    return m;
+}
+
+/* ------------------------------------------------------------------ */
+/* the post-mesh half of one tile (operators/meshing.py:_tile_terrain's */
+/* NumPy path): unit-tile normalize, [0,1]^2 clip, first-seen vertex    */
+/* order (kernels/codec.py:_first_seen_vertex_order) and the quantized- */
+/* mesh body after the 88-byte header (kernels/codec.py:encode_qm_tile) */
+/* ------------------------------------------------------------------ */
+
+#define QM_HEADER_BYTES 88
+#define QM_COORD 32767
+
+static inline void put_u16(uint8_t *p, uint32_t v) {
+    p[0] = (uint8_t)v;
+    p[1] = (uint8_t)(v >> 8);
+}
+
+static inline void put_u32(uint8_t *p, uint32_t v) {
+    p[0] = (uint8_t)v;
+    p[1] = (uint8_t)(v >> 8);
+    p[2] = (uint8_t)(v >> 16);
+    p[3] = (uint8_t)(v >> 24);
+}
+
+static inline void put_index(uint8_t **p, int wide, uint64_t v) {
+    if (wide) { put_u32(*p, (uint32_t)v); *p += 4; }
+    else { put_u16(*p, (uint16_t)v); *p += 2; }
+}
+
+static inline uint64_t mix64(uint64_t h) {
+    h ^= h >> 33;
+    h *= 0xff51afd7ed558ccdULL;
+    h ^= h >> 33;
+    return h;
+}
+
+/* hash of a vertex by value: + 0.0 folds -0.0 into 0.0, which compare
+ * equal (numpy's row-unique groups by ==, too) */
+static uint64_t vertex_hash(const double *v) {
+    uint64_t h = 0x9e3779b97f4a7c15ULL, b;
+    for (int k = 0; k < 3; k++) {
+        double x = v[k] + 0.0;
+        memcpy(&b, &x, 8);
+        h = mix64(h ^ b) + 0x9e3779b97f4a7c15ULL;
+    }
+    return h;
+}
+
+/* verts: nv_in world (x, y, z) rows; faces: nf x 3 int64 rows into
+ * verts (nf > 0; an index outside [0, nv_in) returns -1, leaving
+ * numpy's indexing rules to the Python path). Writes the blob from
+ * byte 88 of out (cap bytes; the caller writes the header, which needs
+ * zrange). counts[0..1] = n_vertices, n_faces after the clip;
+ * zrange[0..1] = zmin, zmax of the face-referenced vertices, and
+ * counts[2] = 1 when those hold both -0.0 and 0.0: numpy's min/max may
+ * then return either zero, and only the header's copy of zmin/zmax can
+ * tell them apart (the body is the same for both), so the caller takes
+ * the header's pair from numpy.
+ * Returns the blob length, written only when it fits in cap (a caller
+ * with a smaller buffer grows it and calls again); -1 on oom, -2 on a
+ * non-finite vertex or bound (encode_qm_tile raises ValueError there).
+ * A clip that leaves no face still encodes. */
+int64_t tin_tile_qm(const double *verts, int64_t nv_in,
+                    const int64_t *faces, int64_t nf, double tile_min_x,
+                    double tile_min_y, double tile_m, uint8_t *out,
+                    int64_t cap, int64_t *counts, double *zrange) {
+    for (int64_t k = 0; k < nf * 3; k++)
+        if (faces[k] < 0 || faces[k] >= nv_in) return -1;
+    double zmin = INFINITY, zmax = -INFINITY;
+    int zero_signs = 0;
+    for (int64_t k = 0; k < nf * 3; k++) {
+        double z = verts[faces[k] * 3 + 2];
+        if (!isfinite(z)) return -2; /* np.min/np.max -> non-finite bound */
+        if (z < zmin) zmin = z;
+        if (z > zmax) zmax = z;
+        if (z == 0.0) zero_signs |= signbit(z) ? 2 : 1;
+    }
+    if (!(isfinite(tile_min_x) && isfinite(tile_min_y) &&
+          isfinite(tile_min_x + tile_m) && isfinite(tile_min_y + tile_m)))
+        return -2;
+    zrange[0] = zmin;
+    zrange[1] = zmax;
+    double inv_z = zmax > zmin ? 1.0 / (zmax - zmin) : 1.0;
+
+    double *unit = (double *)malloc((size_t)nf * 9 * sizeof(double));
+    if (!unit) return -1;
+    for (int64_t k = 0; k < nf * 3; k++) {
+        const double *v = verts + faces[k] * 3;
+        unit[k * 3 + 0] = (v[0] - tile_min_x) / tile_m;
+        unit[k * 3 + 1] = (v[1] - tile_min_y) / tile_m;
+        unit[k * 3 + 2] = (v[2] - zmin) * inv_z;
+    }
+    Tri *soup;
+    int64_t nt = clip01_alloc(unit, nf, &soup);
+    free(unit);
+    if (nt < 0) return -1;
+    const double *stream = (const double *)soup; /* nt*3 vertices */
+    int64_t ns = nt * 3;
+    for (int64_t k = 0; k < ns * 3; k++)
+        if (!isfinite(stream[k])) { free(soup); return -2; }
+
+    /* first-seen dedup: open addressing, value equality */
+    int64_t tcap = 16;
+    while (tcap < 2 * ns) tcap <<= 1;
+    int64_t *table = (int64_t *)malloc((size_t)tcap * sizeof(int64_t));
+    int64_t *sidx = (int64_t *)malloc((size_t)(ns + 1) * sizeof(int64_t));
+    int64_t *first = (int64_t *)malloc((size_t)(ns + 1) * sizeof(int64_t));
+    int64_t *q = (int64_t *)malloc((size_t)(ns + 1) * 3 * sizeof(int64_t));
+    int64_t ret = -1;
+    if (!table || !sidx || !first || !q) goto done;
+    memset(table, 0xff, (size_t)tcap * sizeof(int64_t));
+    int64_t nv = 0;
+    for (int64_t k = 0; k < ns; k++) {
+        const double *v = stream + k * 3;
+        int64_t slot = (int64_t)(vertex_hash(v) & (uint64_t)(tcap - 1));
+        for (;;) {
+            int64_t id = table[slot];
+            if (id < 0) {
+                table[slot] = nv;
+                first[nv] = k;
+                sidx[k] = nv++;
+                break;
+            }
+            const double *u = stream + first[id] * 3;
+            if (u[0] == v[0] && u[1] == v[1] && u[2] == v[2]) {
+                sidx[k] = id;
+                break;
+            }
+            slot = (slot + 1) & (tcap - 1);
+        }
+    }
+
+    /* quantize the first occurrences: truncation, as the C cast in
+     * codec.scale_coordinate */
+    int64_t n_edge = 0;
+    for (int64_t i = 0; i < nv; i++) {
+        const double *v = stream + first[i] * 3;
+        for (int c = 0; c < 3; c++)
+            q[i * 3 + c] = (int64_t)(v[c] * (double)QM_COORD);
+        n_edge += (q[i * 3] == 0) + (q[i * 3] == QM_COORD) +
+                  (q[i * 3 + 1] == 0) + (q[i * 3 + 1] == QM_COORD);
+    }
+    int wide = nv > 65536;
+    int isz = wide ? 4 : 2;
+    int64_t off = QM_HEADER_BYTES + 4 + 6 * nv;
+    int64_t pad = (isz - off % isz) % isz;
+    int64_t len = off + pad + 4 + isz * ns + 16 + isz * n_edge;
+    ret = len;
+    if (len > cap) goto done;
+
+    uint8_t *p = out + QM_HEADER_BYTES;
+    put_u32(p, (uint32_t)nv);
+    p += 4;
+    /* u, v, h streams: zig-zag int16 deltas */
+    for (int c = 0; c < 3; c++) {
+        int64_t prev = 0;
+        for (int64_t i = 0; i < nv; i++) {
+            int64_t cur = q[i * 3 + c];
+            int16_t d = (int16_t)(uint16_t)(uint64_t)(cur - prev);
+            put_u16(p, (uint16_t)(((uint16_t)d << 1) ^ (uint16_t)(d >> 15)));
+            p += 2;
+            prev = cur;
+        }
+    }
+    for (int64_t i = 0; i < pad; i++) *p++ = 0xCA;
+    put_u32(p, (uint32_t)nt);
+    p += 4;
+    /* high-watermark face indices */
+    int64_t watermark = 0;
+    for (int64_t k = 0; k < ns; k++) {
+        put_index(&p, wide, (uint64_t)(watermark - sidx[k]));
+        if (sidx[k] == watermark) watermark++;
+    }
+    /* edge lists: west (u == 0), south (v == max), east (u == max),
+     * north (v == 0) */
+    static const int edge_c[4] = {0, 1, 0, 1};
+    static const int edge_v[4] = {0, QM_COORD, QM_COORD, 0};
+    for (int e = 0; e < 4; e++) {
+        uint8_t *cnt = p;
+        p += 4;
+        uint32_t n_e = 0;
+        for (int64_t i = 0; i < nv; i++)
+            if (q[i * 3 + edge_c[e]] == edge_v[e]) {
+                put_index(&p, wide, (uint64_t)i);
+                n_e++;
+            }
+        put_u32(cnt, n_e);
+    }
+    counts[0] = nv;
+    counts[1] = nt;
+    counts[2] = zero_signs == 3;
+done:
+    free(table); free(sidx); free(first); free(q); free(soup);
+    return ret;
 }

@@ -162,6 +162,25 @@ def _first_seen_vertex_order(tri_xyz: np.ndarray):
     return unique_xyz, stream_index
 
 
+QM_HEADER_BYTES = 88
+
+
+def _pack_qm_header(buf, bbox_min: tuple, bbox_max: tuple) -> None:
+    """Write the 88-byte header (QuantizedMeshIO.cpp:336-356) into the
+    first bytes of `buf`: ECEF centre, min/max height, bounding sphere
+    and horizon-occlusion point. encode_qm_tile and the native tile
+    encoder (native.tile_qm_native) share it."""
+    cx = (bbox_min[0] + bbox_max[0]) / 2.0
+    cy = (bbox_min[1] + bbox_max[1]) / 2.0
+    cz = (bbox_min[2] + bbox_max[2]) / 2.0
+    ex, ey, ez = mercator_to_ecef(cx, cy, cz)
+    ex, ey, ez = float(ex), float(ey), float(ez)
+    radius = float(np.hypot(bbox_max[0] - bbox_min[0], bbox_max[1] - bbox_min[1]))
+    # horizon occlusion = center at bbox max z (QuantizedMeshIO.cpp:352-355)
+    struct.pack_into("<3d2f4d3d", buf, 0, ex, ey, ez, bbox_min[2], bbox_max[2],
+                     ex, ey, ez, radius, ex, ey, float(bbox_max[2]))
+
+
 @dataclass
 class QMTile:
     """Decoded quantized-mesh tile."""
@@ -227,21 +246,8 @@ def encode_qm_tile(
 
     nvertices = len(verts)
 
-    # header (QuantizedMeshIO.cpp:336-356)
-    cx = (bbox_min[0] + bbox_max[0]) / 2.0
-    cy = (bbox_min[1] + bbox_max[1]) / 2.0
-    cz = (bbox_min[2] + bbox_max[2]) / 2.0
-    ex, ey, ez = mercator_to_ecef(cx, cy, cz)
-    ex, ey, ez = float(ex), float(ey), float(ez)
-    radius = float(np.hypot(bbox_max[0] - bbox_min[0], bbox_max[1] - bbox_min[1]))
-
-    buf = bytearray()
-    buf += struct.pack("<3d", ex, ey, ez)
-    buf += struct.pack("<2f", bbox_min[2], bbox_max[2])
-    buf += struct.pack("<4d", ex, ey, ez, radius)
-    # horizon occlusion = center at bbox max z (QuantizedMeshIO.cpp:352-355)
-    hx, hy, hz = ex, ey, ez
-    buf += struct.pack("<3d", hx, hy, float(bbox_max[2]))
+    buf = bytearray(QM_HEADER_BYTES)
+    _pack_qm_header(buf, bbox_min, bbox_max)
 
     # vertex data: zig-zag deltas of u, v, h streams (QuantizedMeshIO.cpp:441-476)
     buf += struct.pack("<I", nvertices)

@@ -1,20 +1,44 @@
-"""Compile-on-first-use native fast path for the mesh kernels.
+"""Compile-on-first-use native fast path for the mesh kernels and the
+per-tile encoder.
 
 `_native/tinmesh.c` is a direct C translation of this repo's own
-Python kernels (delaunay.py / terra.py / zemlya.py) with bit-identical
-float semantics (-ffp-contract=off, same expression order, same
-MT19937(42) walk, same (-importance, token) heap order). This module
-builds it with the system C compiler into a per-user cache directory
-the first time it's needed and exposes drop-in replacements for the
-greedy-insertion cores.
+Python kernels (delaunay.py / terra.py / zemlya.py, geometry.py's clip,
+codec.py's quantized-mesh body) with bit-identical float semantics
+(-ffp-contract=off, same expression order, same MT19937(42) walk, same
+(-importance, token) heap order). This module builds it with the
+system C compiler into a per-user cache directory the first time it's
+needed and exposes drop-in replacements. The mesh-tile kernel
+(operators/meshing.py:_make_tile_fn) makes one native mesh call and
+one native tile call per tile:
+  - terra_native / zemlya_native: corner repair (terra), greedy
+    insertion AND the to_mesh emission in C — row-major valid
+    vertices at pixel-centre world coordinates, faces flipped CCW in
+    pixel space — returning fresh (verts, faces) arrays;
+  - tile_qm_native: the post-mesh half of a tile in C — unit-tile
+    normalize, [0,1]² clip, first-seen vertex order and the
+    quantized-mesh body — for every method.
 
-Gating: everything degrades to the pure-Python kernels —
+Marshalling: per-array ctypes conversion used to cost more than the C
+work itself, so each thread keeps its scratch buffers per raster shape
+(used, token, vertex-id, vertex and face outputs; C zeroes what it
+reads) and the encoder's output buffer, and passes their raw
+addresses. Returned arrays and blobs are copies, never views of the
+cache, which holds one small raster shape's buffers per thread.
+
+The 88-byte quantized-mesh header (ECEF centre, bounding sphere,
+horizon point) stays NumPy: it depends only on the tile bounds and
+zmin/zmax, and its trig runs through NumPy (codec.mercator_to_ecef),
+whose sin/cos/atan may differ from libm's in the last ulp.
+tile_qm_native packs it with codec._pack_qm_header into the first 88
+bytes of the same buffer the C body fills.
+
+Gating: everything degrades to the pure-Python / NumPy kernels —
   - no C compiler / failed compile / failed load  → Python
   - TTS_NO_NATIVE=1 in the environment            → Python
   - capacity overflow inside the C kernel         → Python (per call)
 The Python path remains the semantics oracle: tests assert the two
-backends produce byte-identical vertices/faces on every workload
-class, and the frozen goldens pin both.
+backends produce byte-identical vertices/faces and terrain blobs on
+every workload class, and the frozen goldens pin both.
 
 Cluster story: --py-files ships the .c source as package data; each
 executor compiles once per node into its local cache (atomic rename —
@@ -29,6 +53,7 @@ import hashlib
 import os
 import subprocess
 import tempfile
+import threading
 
 import numpy as np
 
@@ -105,19 +130,22 @@ def _build_and_load():
 
     i64 = ctypes.c_int64
     dbl = ctypes.c_double
+    vp = ctypes.c_void_p
+    cint = ctypes.c_int
     P = ctypes.POINTER
-    lib.tin_terra_greedy.restype = i64
-    lib.tin_terra_greedy.argtypes = [
-        P(dbl), ctypes.c_int, ctypes.c_int, dbl, dbl,
-        P(ctypes.c_uint8), P(i64),
-        P(ctypes.c_int32), i64, P(dbl), i64, P(i64),
+    # mesh entries: raster, shape, ndv, max_error, georef, then the
+    # _Scratch.args tail (used, token, vid, verts, faces, cap, n_verts)
+    scratch = [vp, vp, vp, vp, vp, i64, vp]
+    lib.tin_terra_mesh.restype = i64
+    lib.tin_terra_mesh.argtypes = [
+        vp, cint, cint, dbl, dbl, dbl, dbl, dbl, cint, *scratch,
     ]
-    lib.tin_zemlya_greedy.restype = i64
-    lib.tin_zemlya_greedy.argtypes = [
-        P(dbl), P(dbl), ctypes.c_int, ctypes.c_int, ctypes.c_int, dbl, dbl,
-        P(dbl), P(ctypes.c_uint8), P(i64),
-        P(ctypes.c_int32), i64, P(dbl), i64, P(i64),
+    lib.tin_zemlya_mesh.restype = i64
+    lib.tin_zemlya_mesh.argtypes = [
+        vp, vp, cint, cint, cint, dbl, dbl, dbl, dbl, dbl, vp, *scratch,
     ]
+    lib.tin_tile_qm.restype = i64
+    lib.tin_tile_qm.argtypes = [vp, i64, vp, i64, dbl, dbl, dbl, vp, i64, vp, vp]
     lib.tin_repair_corners.restype = None
     lib.tin_repair_corners.argtypes = [P(dbl), ctypes.c_int, ctypes.c_int, dbl]
     lib.tin_clip01.restype = i64
@@ -139,40 +167,6 @@ def native_available() -> bool:
 
 def _ptr(a, ct):
     return a.ctypes.data_as(ctypes.POINTER(ct))
-
-
-def _emit(zsrc: np.ndarray, used_valid: np.ndarray,
-          faces_pts: np.ndarray, pts: np.ndarray, grid):
-    """Shared emission: mirrors TerraMesh.to_mesh / ZemlyaMesh.to_mesh
-    (row-major vertex order, CCW flip in pixel space), vectorized."""
-    h, w = zsrc.shape
-    ys, xs = np.nonzero(used_valid)
-    order = np.argsort(ys * w + xs, kind="stable")
-    ys, xs = ys[order], xs[order]
-    zs = zsrc[ys, xs]
-
-    vertex_id = np.zeros((h, w), dtype=np.int64)
-    vertex_id[ys, xs] = np.arange(len(xs))
-    verts = np.column_stack([grid.col2x(xs), grid.row2y(ys), zs])
-
-    if len(faces_pts) == 0:
-        return verts, np.zeros((0, 3), dtype=np.int64)
-    p1 = pts[faces_pts[:, 0]]
-    p2 = pts[faces_pts[:, 1]]
-    p3 = pts[faces_pts[:, 2]]
-    i1 = vertex_id[p1[:, 1].astype(np.int64), p1[:, 0].astype(np.int64)]
-    i2 = vertex_id[p2[:, 1].astype(np.int64), p2[:, 0].astype(np.int64)]
-    i3 = vertex_id[p3[:, 1].astype(np.int64), p3[:, 0].astype(np.int64)]
-    area = (p2[:, 0] - p1[:, 0]) * (p3[:, 1] - p1[:, 1]) - (
-        p2[:, 1] - p1[:, 1]
-    ) * (p3[:, 0] - p1[:, 0])
-    flip = area > 0
-    faces = np.where(
-        flip[:, None],
-        np.column_stack([i3, i2, i1]),
-        np.column_stack([i1, i2, i3]),
-    ).astype(np.int64)
-    return verts, faces
 
 
 def _repair_corners(grid) -> None:
@@ -250,39 +244,78 @@ def _restore_corners(grid, snap) -> None:
         grid.z[py, px] = v
 
 
+# scratch buffers are per thread (fresh mesh and encoder buffers cost
+# ~15 µs a 36x36 tile on a 4-core x86 host, 5-10 % of the native
+# tile); a raster above this many cells gets fresh ones per call
+# instead of pinning its buffers in the cache
+_local = threading.local()
+_CACHE_MAX_CELLS = 1 << 16
+
+
+class _Scratch:
+    """One raster shape's C buffers, and the addresses the mesh entries
+    take as their argument tail."""
+
+    def __init__(self, h: int, w: int, cap_faces: int):
+        self.key = (h, w, cap_faces)
+        n = h * w
+        self.used = np.empty(n, dtype=np.uint8)
+        self.token = np.empty(n, dtype=np.int64)
+        self.vid = np.empty(n, dtype=np.int64)
+        self.verts = np.empty((n, 3), dtype=np.float64)
+        self.faces = np.empty((cap_faces, 3), dtype=np.int64)
+        self.n_verts = np.zeros(1, dtype=np.int64)
+        self.args = (self.used.ctypes.data, self.token.ctypes.data,
+                     self.vid.ctypes.data, self.verts.ctypes.data,
+                     self.faces.ctypes.data, cap_faces, self.n_verts.ctypes.data)
+
+    def mesh(self, nf: int):
+        """Fresh copies of the emitted (verts, faces)."""
+        return self.verts[: self.n_verts[0]].copy(), self.faces[:nf].copy()
+
+
+def _scratch(h: int, w: int, cap_faces: int) -> _Scratch:
+    """This thread's scratch for the last raster shape it meshed (a
+    pyramid meshes one shape throughout)."""
+    s = _local.__dict__.get("scratch")
+    if s is None or s.key != (h, w, cap_faces):
+        s = _Scratch(h, w, cap_faces)
+        if h * w <= _CACHE_MAX_CELLS:
+            _local.scratch = s
+    return s
+
+
 def terra_native(grid, max_error: float):
-    """Native TerraMesh greedy_insert + to_mesh. Returns (verts, faces)
-    or None when the native path is unavailable / overflowed."""
+    """Native TerraMesh corner repair + greedy_insert + to_mesh in one
+    C call. Returns (verts, faces) or None when the native path is
+    unavailable / overflowed (the C call then restores the corners it
+    repaired)."""
     lib = get_lib()
     if lib is None:
         return None
     h, w = grid.z.shape
     if h < 2 or w < 2:
         return None
-    corner_snap = _snapshot_corners(grid)
-    repair_corners_dispatch(grid)
-    z = np.ascontiguousarray(grid.z, dtype=np.float64)
-    used = np.zeros((h, w), dtype=np.uint8)
-    token = np.zeros((h, w), dtype=np.int64)
-    cap_pts = h * w + 8
-    cap_faces = 2 * cap_pts + 16
-    faces_pts = np.empty((cap_faces, 3), dtype=np.int32)
-    pts = np.empty((cap_pts, 2), dtype=np.float64)
-    n_pts = ctypes.c_int64(0)
-    nf = lib.tin_terra_greedy(
-        _ptr(z, ctypes.c_double), h, w, float(grid.ndv), float(max_error),
-        _ptr(used, ctypes.c_uint8), _ptr(token, ctypes.c_int64),
-        _ptr(faces_pts, ctypes.c_int32), cap_faces,
-        _ptr(pts, ctypes.c_double), cap_pts, ctypes.byref(n_pts),
+    z = grid.z
+    repair = z.dtype == np.float64 and z.flags.c_contiguous
+    snap = None
+    if not repair:
+        # other dtypes and layouts repair in place in their own
+        # arithmetic (the Python oracle's), then mesh a float64 copy
+        snap = _snapshot_corners(grid)
+        _repair_corners(grid)
+        z = np.ascontiguousarray(grid.z, dtype=np.float64)
+    s = _scratch(h, w, 2 * (h * w + 8) + 16)
+    nf = lib.tin_terra_mesh(
+        z.ctypes.data, h, w, float(grid.ndv), float(max_error),
+        float(grid.xpos), float(grid.ypos), float(grid.cellsize), repair,
+        *s.args,
     )
     if nf < 0:
-        _restore_corners(grid, corner_snap)  # pure-Python fallback must
-        return None  # repair pristine corners (repair isn't idempotent)
-    # grid.z may have been repaired in place; emission reads it like
-    # TerraMesh.to_mesh (used cells, nan/ndv dropped)
-    zs = grid.z
-    valid = (used == 1) & ~(np.isnan(zs) | (zs == grid.ndv))
-    return _emit(zs, valid, faces_pts[:nf], pts[: n_pts.value], grid)
+        if snap is not None:
+            _restore_corners(grid, snap)
+        return None
+    return s.mesh(nf)
 
 
 def zemlya_native(grid, max_error: float):
@@ -316,23 +349,73 @@ def zemlya_native(grid, max_error: float):
         stack[level - 1] = zm.insert_r
 
     zc = np.ascontiguousarray(z, dtype=np.float64)
-    used = np.zeros((h, w), dtype=np.uint8)
-    token = np.zeros((h, w), dtype=np.int64)
-    cap_pts = h * w * max_level + 8
-    cap_faces = 2 * cap_pts + 16
-    faces_pts = np.empty((cap_faces, 3), dtype=np.int32)
-    pts = np.empty((cap_pts, 2), dtype=np.float64)
-    n_pts = ctypes.c_int64(0)
-    nf = lib.tin_zemlya_greedy(
-        _ptr(zc, ctypes.c_double), _ptr(stack, ctypes.c_double),
-        max_level, h, w, float(grid.ndv), float(max_error),
-        _ptr(result, ctypes.c_double),
-        _ptr(used, ctypes.c_uint8), _ptr(token, ctypes.c_int64),
-        _ptr(faces_pts, ctypes.c_int32), cap_faces,
-        _ptr(pts, ctypes.c_double), cap_pts, ctypes.byref(n_pts),
+    s = _scratch(h, w, 2 * (h * w * max_level + 8) + 16)
+    nf = lib.tin_zemlya_mesh(
+        zc.ctypes.data, stack.ctypes.data, max_level, h, w,
+        float(grid.ndv), float(max_error), float(grid.xpos),
+        float(grid.ypos), float(grid.cellsize), result.ctypes.data, *s.args,
     )
     if nf < 0:
         _restore_corners(grid, corner_snap)  # see terra_native
         return None
-    valid = ~(np.isnan(result) | (result == grid.ndv))
-    return _emit(result, valid, faces_pts[:nf], pts[: n_pts.value], grid)
+    return s.mesh(nf)
+
+
+def _tile_buffers(cap: int = 0):
+    """This thread's encoder output buffer, at least `cap` bytes, with
+    its (n_vertices, n_faces, mixed-zero flag) and (zmin, zmax) result
+    slots and their addresses. A buffer above 1 MiB serves one call and
+    is not kept."""
+    t = _local.__dict__.get("tile")
+    if t is None or len(t[0]) < cap:
+        buf = np.empty(max(cap, 1 << 16), dtype=np.uint8)
+        counts = np.zeros(3, dtype=np.int64)
+        zrange = np.zeros(2, dtype=np.float64)
+        t = (buf, counts, zrange, buf.ctypes.data, counts.ctypes.data,
+             zrange.ctypes.data)
+        if len(buf) <= 1 << 20:
+            _local.tile = t
+    return t
+
+
+def tile_qm_native(verts: np.ndarray, faces: np.ndarray, tile_min_x: float,
+                   tile_min_y: float, tile_m: float):
+    """The post-mesh half of one tile in C: a method's world-space
+    (verts, faces) → (quantized-mesh blob, n_vertices, n_faces) after
+    the unit-tile normalize, [0,1]² clip and first-seen vertex order;
+    byte-identical to meshing._tile_terrain's NumPy path. A faceless
+    mesh gives (None, len(verts), 0). Returns None when the library is
+    not loaded or C ran out of memory; raises ValueError on a
+    non-finite vertex or bound, as codec.encode_qm_tile does."""
+    lib = get_lib()
+    if lib is None:
+        return None
+    nf = len(faces)
+    if not nf:
+        return None, len(verts), 0
+    from .codec import _pack_qm_header
+
+    verts = np.ascontiguousarray(verts, dtype=np.float64)
+    faces = np.ascontiguousarray(faces, dtype=np.int64)
+    if verts.ndim != 2 or verts.shape[1] != 3 or faces.shape != (nf, 3):
+        return None
+    args = (verts.ctypes.data, len(verts), faces.ctypes.data, nf,
+            float(tile_min_x), float(tile_min_y), float(tile_m))
+    buf, counts, zrange, *ptrs = _tile_buffers()
+    n = lib.tin_tile_qm(*args, ptrs[0], len(buf), ptrs[1], ptrs[2])
+    if n > len(buf):  # the blob did not fit: grow and encode again
+        buf, counts, zrange, *ptrs = _tile_buffers(n)
+        n = lib.tin_tile_qm(*args, ptrs[0], len(buf), ptrs[1], ptrs[2])
+    if n == -2:
+        raise ValueError("encode_qm_tile: non-finite vertex or bound")
+    if n < 0:
+        return None
+    zmin, zmax = zrange
+    if counts[2]:
+        # face heights hold both -0.0 and 0.0: the header carries the
+        # sign numpy's reduction picks (see tin_tile_qm)
+        fz = verts[faces][:, :, 2]
+        zmin, zmax = fz.min(), fz.max()
+    _pack_qm_header(buf, (tile_min_x, tile_min_y, zmin),
+                    (tile_min_x + tile_m, tile_min_y + tile_m, zmax))
+    return buf[:n].tobytes(), int(counts[0]), int(counts[1])

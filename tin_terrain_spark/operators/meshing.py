@@ -15,11 +15,18 @@ Pipeline (reference dem2tintiles, SURVEY.md §3.1), Spark-first:
     → mesh_cells, the ONE mesh stage: repartition(tile) →
       sortWithinPartitions(tile) → streaming mapInPandas that walks
       contiguous tile runs per Arrow batch and calls the ONE tile
-      kernel (_make_tile_fn): assemble the dense grid, mesh it through
-      kernels.tin.generate_tin (terra | zemlya | dense | curvature),
-      optionally measure the re-rasterized error, normalize to the
-      unit tile, clip to [0,1]² (TileMaker.cpp:45-124), encode
-      quantized-mesh
+      kernel (_make_tile_fn) per tile:
+        1. assemble the buffered grid (NumPy);
+        2. mesh it through kernels.tin.generate_tin (terra | zemlya |
+           dense | curvature) — for terra and zemlya ONE native call
+           that also emits the (verts, faces) arrays;
+        3. optionally measure the re-rasterized error (NumPy);
+        4. _tile_terrain, the post-mesh half — normalize to the unit
+           tile, clip to [0,1]² (TileMaker.cpp:45-124), order vertices
+           first-seen, encode quantized-mesh — as ONE native call for
+           every method, with only the 88-byte header packed in NumPy.
+      The NumPy steps stay as the byte-exact oracle and the
+      no-compiler fallback (kernels/native.py's gating).
     → tiles(zoom, tile_x, tile_y, n_points, n_vertices, n_faces,
             max_err, terrain:binary)
 
@@ -149,10 +156,16 @@ def _make_tile_fn(zoom: int, grid_bits: int, buffer_cells: int, method: str,
     """Build the one per-tile kernel as a plain-arrays → dict function
     (runs on executors; imports stay inside so the function pickles
     cleanly): assemble the buffered grid, mesh it through
-    kernels.tin.generate_tin, optionally re-rasterize and measure the
-    error, optionally clip + encode. The dict carries every TILE_SCHEMA
-    field plus the benchmark sweep's `mesh_seconds` and error moments
-    (`err_n`, `err_mean`, `err_std`); callers pick their columns."""
+    kernels.tin.generate_tin (one native call for terra and zemlya),
+    optionally re-rasterize and measure the error, optionally encode
+    the terrain through _tile_terrain (one native call for every
+    method: normalize, clip, vertex order, quantized-mesh body). With
+    the library loaded a tile costs one native mesh call, one native
+    tile call and a little NumPy (grid assembly, min/max heights, the
+    header); without it the same steps run in Python/NumPy and give
+    the same bytes. The dict carries every TILE_SCHEMA field plus the
+    benchmark sweep's `mesh_seconds` and error moments (`err_n`,
+    `err_mean`, `err_std`); callers pick their columns."""
     g = 1 << grid_bits
     b = buffer_cells
     tile_m = GX.tile_size_meters(zoom)
@@ -163,8 +176,6 @@ def _make_tile_fn(zoom: int, grid_bits: int, buffer_cells: int, method: str,
                   z_sum: np.ndarray, z_cnt: np.ndarray) -> dict:
         import time
 
-        from tin_terrain_spark.kernels.codec import encode_qm_tile
-        from tin_terrain_spark.kernels.geometry import clip_triangles_to_01_quadrant
         from tin_terrain_spark.kernels.mesh2raster import measure_error, rasterise_mesh
         from tin_terrain_spark.kernels.raster import Grid
         from tin_terrain_spark.kernels.tin import generate_tin
@@ -243,36 +254,13 @@ def _make_tile_fn(zoom: int, grid_bits: int, buffer_cells: int, method: str,
             src_in = src.z[2 : size - 2, 2 : size - 2]
             cover_ok = bool(err_n == int((src_in != src.ndv).sum()))
 
-        # normalize to unit tile space (TileMaker.cpp:71-105)
-        tris = verts[faces]  # (m, 3, 3) world coords
-        terrain = None
         n_vertices, n_faces = len(verts), len(faces)
-        min_z = float(np.min(verts[:, 2])) if len(verts) else float("nan")
-        max_z = float(np.max(verts[:, 2])) if len(verts) else float("nan")
-        if encode_terrain and len(tris):
-            zmin = tris[:, :, 2].min()
-            zmax = tris[:, :, 2].max()
-            inv_z = 1.0 / (zmax - zmin) if zmax > zmin else 1.0
-            unit = tris.copy()
-            unit[:, :, 0] = (unit[:, :, 0] - tile_min_x) / tile_m
-            unit[:, :, 1] = (unit[:, :, 1] - tile_min_y) / tile_m
-            unit[:, :, 2] = (unit[:, :, 2] - zmin) * inv_z
-            clipped = clip_triangles_to_01_quadrant(unit)
-            n_faces = len(clipped)
-            if n_faces:
-                from tin_terrain_spark.kernels.codec import _first_seen_vertex_order
-
-                vorder = _first_seen_vertex_order(clipped.reshape(-1, 3))
-            else:
-                vorder = (np.zeros((0, 3)), np.zeros(0, dtype=np.int64))
-            n_vertices = len(vorder[0])
-            terrain = encode_qm_tile(
-                clipped,
-                (tile_min_x, tile_min_y, zmin),
-                (tile_min_x + tile_m, tile_min_y + tile_m, zmax),
-                mesh_is_rescaled=True,
-                vertex_order=vorder,
-            )
+        min_z = float(np.min(verts[:, 2])) if n_vertices else float("nan")
+        max_z = float(np.max(verts[:, 2])) if n_vertices else float("nan")
+        terrain = None
+        if encode_terrain:
+            terrain, n_vertices, n_faces = _tile_terrain(
+                verts, faces, tile_min_x, tile_min_y, tile_m)
 
         return {
             "zoom": zoom,
@@ -296,6 +284,51 @@ def _make_tile_fn(zoom: int, grid_bits: int, buffer_cells: int, method: str,
         }
 
     return mesh_tile
+
+
+def _tile_terrain(verts: np.ndarray, faces: np.ndarray, tile_min_x: float,
+                  tile_min_y: float, tile_m: float):
+    """The post-mesh half of the tile kernel: a method's world-space
+    (verts, faces) → (terrain blob, n_vertices, n_faces) — normalize to
+    the unit tile (TileMaker.cpp:71-105; x, y by the tile bounds, z by
+    the face-referenced zmin/zmax), clip to [0,1]² (TileMaker.cpp:
+    45-124), order vertices first-seen and encode quantized-mesh. A
+    faceless mesh has no blob and keeps its vertex count; a clip that
+    leaves no face still encodes.
+
+    One native call (kernels.native.tile_qm_native) when the library
+    is loaded; these NumPy steps are its byte-exact oracle and the
+    no-compiler fallback."""
+    from tin_terrain_spark.kernels import native
+    from tin_terrain_spark.kernels.codec import _first_seen_vertex_order, encode_qm_tile
+    from tin_terrain_spark.kernels.geometry import clip_triangles_to_01_quadrant
+
+    out = native.tile_qm_native(verts, faces, tile_min_x, tile_min_y, tile_m)
+    if out is not None:
+        return out
+    if not len(faces):
+        return None, len(verts), 0
+    tris = verts[faces]  # (m, 3, 3) world coords
+    zmin = tris[:, :, 2].min()
+    zmax = tris[:, :, 2].max()
+    inv_z = 1.0 / (zmax - zmin) if zmax > zmin else 1.0
+    unit = tris.copy()
+    unit[:, :, 0] = (unit[:, :, 0] - tile_min_x) / tile_m
+    unit[:, :, 1] = (unit[:, :, 1] - tile_min_y) / tile_m
+    unit[:, :, 2] = (unit[:, :, 2] - zmin) * inv_z
+    clipped = clip_triangles_to_01_quadrant(unit)
+    if len(clipped):
+        vorder = _first_seen_vertex_order(clipped.reshape(-1, 3))
+    else:
+        vorder = (np.zeros((0, 3)), np.zeros(0, dtype=np.int64))
+    terrain = encode_qm_tile(
+        clipped,
+        (tile_min_x, tile_min_y, zmin),
+        (tile_min_x + tile_m, tile_min_y + tile_m, zmax),
+        mesh_is_rescaled=True,
+        vertex_order=vorder,
+    )
+    return terrain, len(vorder[0]), len(clipped)
 
 
 def _make_stream_kernel(*args, columns: str = TILE_SCHEMA):

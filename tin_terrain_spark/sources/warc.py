@@ -207,11 +207,16 @@ WARC_PAGES_SCHEMA = (
     "html BINARY"
 )
 
+# the WARC files relation (synth_warc_files, or spark.read.format(
+# 'binaryFile') with its path renamed): one row per file, its bytes in
+# CONTENT_COL and its bigint key in FILE_ID_COL
+CONTENT_COL = "content"
+FILE_ID_COL = "file_id"
 
-def warc_pages(files: DataFrame, content_col: str = "content") -> DataFrame:
-    """Distributed WARC scan: one input row per WARC file (e.g. from
-    spark.read.format('binaryFile')), output one row per response
-    record. Map-only mapInPandas — no shuffle; file-level parallelism
+
+def warc_pages(files: DataFrame) -> DataFrame:
+    """Distributed WARC scan: one input row per WARC file (its bytes in
+    CONTENT_COL), output one row per response record. Map-only mapInPandas — no shuffle; file-level parallelism
     is the natural CC unit (files are ~1 GB each)."""
 
     def op(batches):
@@ -223,7 +228,7 @@ def warc_pages(files: DataFrame, content_col: str = "content") -> DataFrame:
                 "content_type": [],
                 "html": [],
             }
-            for blob in pdf[content_col]:
+            for blob in pdf[CONTENT_COL]:
                 for r in parse_warc(bytes(blob)):
                     out["url"].append(r["url"])
                     out["warc_epoch"].append(r["epoch"])
@@ -232,7 +237,7 @@ def warc_pages(files: DataFrame, content_col: str = "content") -> DataFrame:
                     out["html"].append(r["body"])
             yield pd.DataFrame(out)
 
-    return files.select(content_col).mapInPandas(op, WARC_PAGES_SCHEMA)
+    return files.select(CONTENT_COL).mapInPandas(op, WARC_PAGES_SCHEMA)
 
 
 def index_warc(data: bytes) -> list[dict]:
@@ -297,24 +302,21 @@ WARC_CDX_SCHEMA = (
 )
 
 
-def warc_cdx(files: DataFrame, content_col: str = "content",
-             id_col: str = "file_id", id_type: str = "BIGINT") -> DataFrame:
+def warc_cdx(files: DataFrame) -> DataFrame:
     """Distributed CDX build: one row per response record with its
-    byte span in the stored file. Map-only mapInPandas like the scan —
-    at 100 TB the index job is one pass over the archive, and the
-    output (a few hundred bytes/record) is what interactive lookups
-    hit instead of the archive itself."""
-
-    id_cast = int if id_type.upper() == "BIGINT" else str
+    byte span in the stored file (keyed by FILE_ID_COL). Map-only
+    mapInPandas like the scan — at 100 TB the index job is one pass
+    over the archive, and the output (a few hundred bytes/record) is
+    what interactive lookups hit instead of the archive itself."""
 
     def op(batches):
         for pdf in batches:
             out = {k: [] for k in (
-                id_col, "url", "warc_epoch", "rec_offset",
+                FILE_ID_COL, "url", "warc_epoch", "rec_offset",
                 "rec_length", "digest", "seek_ok")}
-            for fid, blob in zip(pdf[id_col], pdf[content_col]):
+            for fid, blob in zip(pdf[FILE_ID_COL], pdf[CONTENT_COL]):
                 for r in index_warc(bytes(blob)):
-                    out[id_col].append(id_cast(fid))
+                    out[FILE_ID_COL].append(int(fid))
                     out["url"].append(r["url"])
                     out["warc_epoch"].append(r["epoch"])
                     out["rec_offset"].append(r["offset"])
@@ -323,8 +325,7 @@ def warc_cdx(files: DataFrame, content_col: str = "content",
                     out["seek_ok"].append(r["seek_ok"])
             yield pd.DataFrame(out)
 
-    schema = WARC_CDX_SCHEMA.replace("file_id BIGINT", f"{id_col} {id_type}")
-    return files.select(id_col, content_col).mapInPandas(op, schema)
+    return files.select(FILE_ID_COL, CONTENT_COL).mapInPandas(op, WARC_CDX_SCHEMA)
 
 
 WARC_FILE_SCHEMA = "file_id BIGINT, n_records INT, content BINARY"
@@ -383,8 +384,7 @@ FETCH_SCHEMA = (
 )
 
 
-def cdx_fetch(cdx: DataFrame, files: DataFrame, content_col: str = "content",
-              id_col: str = "file_id") -> DataFrame:
+def cdx_fetch(cdx: DataFrame, files: DataFrame) -> DataFrame:
     """Selective record fetch THROUGH the CDX index: given a
     (typically heavily filtered) slice of the index and the archive
     files, decode ONLY the indexed byte spans — the random-access
@@ -397,7 +397,7 @@ def cdx_fetch(cdx: DataFrame, files: DataFrame, content_col: str = "content",
     wherever the file blocks already are, and a file with no wanted
     records drops out at the join."""
     spans = (
-        cdx.groupBy(id_col)
+        cdx.groupBy(FILE_ID_COL)
         .agg(
             F.collect_list(
                 F.struct(F.col("rec_offset").alias("o"),
@@ -405,12 +405,12 @@ def cdx_fetch(cdx: DataFrame, files: DataFrame, content_col: str = "content",
             ).alias("_spans")
         )
     )
-    joined = files.select(id_col, content_col).join(spans, id_col)
+    joined = files.select(FILE_ID_COL, CONTENT_COL).join(spans, FILE_ID_COL)
 
     def op(batches):
         for pdf in batches:
             out = {"url": [], "warc_epoch": [], "http_status": [], "html": []}
-            for blob, spans_ in zip(pdf[content_col], pdf["_spans"]):
+            for blob, spans_ in zip(pdf[CONTENT_COL], pdf["_spans"]):
                 data = bytes(blob)
                 for s in spans_:
                     o, l = int(s["o"]), int(s["l"])
@@ -421,4 +421,4 @@ def cdx_fetch(cdx: DataFrame, files: DataFrame, content_col: str = "content",
                     out["html"].append(rec["body"])
             yield pd.DataFrame(out)
 
-    return joined.select(content_col, "_spans").mapInPandas(op, FETCH_SCHEMA)
+    return joined.select(CONTENT_COL, "_spans").mapInPandas(op, FETCH_SCHEMA)
