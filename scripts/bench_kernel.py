@@ -17,6 +17,12 @@ Workloads (default: smooth + noise; `tile` on request):
            pyramid's shape. Reports per-tile CPU-ms for the native path
            and for the pure-Python fallback (TTS_NO_NATIVE=1), each in
            its own process.
+  worker   `python scripts/bench_kernel.py worker`: the fixed cost of a
+           Python task in a reused worker. Python-worker CPU-ms per task
+           of an empty mapInPandas over 32 partitions in a get_spark
+           session, read from /proc of the session's non-JVM descendant
+           processes (the daemon and its workers) over 4 such jobs
+           after a warm-up job. ~20 s.
 
 Prints one JSON line; run_scaling.py embeds it in BENCH/BASELINE.md.
 """
@@ -163,8 +169,59 @@ def tile_main() -> None:
     print(json.dumps({"tile": res}))
 
 
+WORKER_TASKS, WORKER_JOBS = 32, 4
+
+
+def _passthrough(batches):
+    yield from batches
+
+
+def _python_worker_cpu_s() -> dict[int, float]:
+    """User + system CPU-s of each live non-JVM descendant of this
+    process: the Python worker daemon and its forked workers."""
+    from perfbench.probes import descendants
+
+    tick = os.sysconf("SC_CLK_TCK")
+    out = {}
+    for pid in descendants(os.getpid()):
+        try:
+            with open(f"/proc/{pid}/comm") as f:
+                if f.read().strip() == "java":
+                    continue
+            with open(f"/proc/{pid}/stat") as f:
+                fields = f.read().rsplit(")", 1)[1].split()
+        except OSError:
+            continue
+        out[pid] = (int(fields[11]) + int(fields[12])) / tick
+    return out
+
+
+def worker_main() -> None:
+    """The `worker` workload (see the module docstring)."""
+    from tin_terrain_spark.session import get_spark
+
+    spark = get_spark("bench_worker", cores=len(os.sched_getaffinity(0)))
+    df = spark.range(0, WORKER_TASKS, 1, WORKER_TASKS).mapInPandas(_passthrough, "id long")
+    df.collect()  # warm-up: starts the daemon and its workers
+    before = _python_worker_cpu_s()
+    for _ in range(WORKER_JOBS):
+        df.collect()
+    after = _python_worker_cpu_s()
+    daemon = spark.conf.get("spark.python.daemon.module", "pyspark.daemon")
+    spark.stop()
+    cpu_s = sum(t - before.get(pid, 0.0) for pid, t in after.items())
+    print(json.dumps({"worker": {
+        "daemon_module": daemon,
+        "tasks": WORKER_TASKS * WORKER_JOBS,
+        "processes": len(after),
+        "cpu_ms_per_task": round(1000 * cpu_s / (WORKER_TASKS * WORKER_JOBS), 2),
+    }}))
+
+
 if __name__ == "__main__":
-    if sys.argv[1:2] == ["tile"]:
+    if sys.argv[1:2] == ["worker"]:
+        worker_main()
+    elif sys.argv[1:2] == ["tile"]:
         tile_main()
     elif sys.argv[1:2] == ["tile-run"]:
         print(json.dumps(tile_run(int(sys.argv[2]))))
