@@ -2,7 +2,7 @@
 reference's published terra number (tntn_benchmarks.csv: 17.0M cells in
 16.4 s single-thread ≈ 1.03M cells/s/core on a smooth real DEM).
 
-Workloads (default: smooth + noise; `tile` on request):
+Workloads (default: smooth + noise; `tile`, `worker`, `mesh-rss` on request):
   smooth   512x512 smooth synthetic DEM (Crater-Lake-like relief,
            ~3% of cells inserted at max_error=2) — the apples-to-apples
            case: greedy meshing cost is dominated by triangle scans.
@@ -23,6 +23,13 @@ Workloads (default: smooth + noise; `tile` on request):
            session, read from /proc of the session's non-JVM descendant
            processes (the daemon and its workers) over 4 such jobs
            after a warm-up job. ~20 s.
+  mesh-rss `python scripts/bench_kernel.py mesh-rss`: the memory of the
+           mesh stage's Python workers. mesh_tiles (terra) over 48k
+           seeded pages at the pyramid benchmark's shape (zoom 6, grid
+           5, buffer 2) in a fresh get_spark session, then each Python
+           worker's peak RSS (VmHWM) and whether it maps pandas'
+           compiled libraries, from /proc of the session's non-JVM
+           descendant processes. ~20 s.
 
 Prints one JSON line; run_scaling.py embeds it in BENCH/BASELINE.md.
 """
@@ -176,22 +183,32 @@ def _passthrough(batches):
     yield from batches
 
 
-def _python_worker_cpu_s() -> dict[int, float]:
-    """User + system CPU-s of each live non-JVM descendant of this
-    process: the Python worker daemon and its forked workers."""
+def _python_procs(*names: str):
+    """(pid, {name: text of /proc/<pid>/<name>}) for each live non-JVM
+    descendant of this process: the Python worker daemon and its forked
+    workers."""
     from perfbench.probes import descendants
 
-    tick = os.sysconf("SC_CLK_TCK")
-    out = {}
     for pid in descendants(os.getpid()):
         try:
             with open(f"/proc/{pid}/comm") as f:
                 if f.read().strip() == "java":
                     continue
-            with open(f"/proc/{pid}/stat") as f:
-                fields = f.read().rsplit(")", 1)[1].split()
+            files = {}
+            for name in names:
+                with open(f"/proc/{pid}/{name}") as f:
+                    files[name] = f.read()
         except OSError:
             continue
+        yield pid, files
+
+
+def _python_worker_cpu_s() -> dict[int, float]:
+    """User + system CPU-s of each Python worker process."""
+    tick = os.sysconf("SC_CLK_TCK")
+    out = {}
+    for pid, files in _python_procs("stat"):
+        fields = files["stat"].rsplit(")", 1)[1].split()
         out[pid] = (int(fields[11]) + int(fields[12])) / tick
     return out
 
@@ -218,9 +235,58 @@ def worker_main() -> None:
     }}))
 
 
+MESH_RSS_PAGES, MESH_RSS_SEED = 48_000, 9001
+
+
+def _python_processes() -> list[dict]:
+    """Each Python worker process: role (the daemon, or a worker it
+    forked), peak RSS in MB, whether it maps pandas' compiled
+    libraries."""
+    out = []
+    for pid, files in _python_procs("status", "maps"):
+        status = dict(line.split(":", 1) for line in files["status"].splitlines())
+        if "VmHWM" not in status:  # a zombie: no memory left to read
+            continue
+        out.append({"pid": pid, "ppid": int(status["PPid"]),
+                    "vmhwm_mb": round(int(status["VmHWM"].split()[0]) / 1024, 1),
+                    "pandas": "pandas/_libs" in files["maps"]})
+    pids = {p["pid"] for p in out}
+    for p in out:
+        p["role"] = "worker" if p.pop("ppid") in pids else "daemon"
+    return out
+
+
+def mesh_rss_main() -> None:
+    """The `mesh-rss` workload (see the module docstring)."""
+    from perfbench.inputs import id_space
+    from tin_terrain_spark.functions.geocode_exprs import tile_size_meters
+    from tin_terrain_spark.operators.geocode import geocode_points
+    from tin_terrain_spark.operators.meshing import mesh_tiles
+    from tin_terrain_spark.session import get_spark
+
+    ids = id_space(np.random.default_rng(MESH_RSS_SEED), MESH_RSS_PAGES)
+    base, stride = int(ids[0]), int(ids[1] - ids[0])
+    spark = get_spark("bench_mesh_rss", cores=len(os.sched_getaffinity(0)))
+    docs = spark.range(MESH_RSS_PAGES).selectExpr(f"{base} + {stride} * id AS doc_id")
+    pts = geocode_points(docs, zoom=TILE_ZOOM, grid_bits=TILE_GRID_BITS)
+    max_error = tile_size_meters(TILE_ZOOM + TILE_GRID_BITS) / 10000.0
+    tiles = mesh_tiles(pts, TILE_ZOOM, TILE_GRID_BITS, TILE_BUFFER, "terra", max_error).count()
+    procs = _python_processes()
+    spark.stop()
+    workers = [p for p in procs if p["role"] == "worker"]
+    print(json.dumps({"mesh_rss": {
+        "tiles": tiles,
+        "workers": len(workers),
+        "workers_mapping_pandas": sum(p["pandas"] for p in workers),
+        "processes": procs,
+    }}))
+
+
 if __name__ == "__main__":
     if sys.argv[1:2] == ["worker"]:
         worker_main()
+    elif sys.argv[1:2] == ["mesh-rss"]:
+        mesh_rss_main()
     elif sys.argv[1:2] == ["tile"]:
         tile_main()
     elif sys.argv[1:2] == ["tile-run"]:

@@ -854,46 +854,158 @@ def test_short_doc_shingles(spark):
     assert any(r.doc_a == 1 and r.doc_b == 2 and r.jaccard == 1.0 for r in nd)
 
 
+def _canon_rows(df) -> list[str]:
+    # NaN != NaN and bytearrays do not hash: compare as repr strings
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
 def test_stream_kernel_equals_grouped_kernel(spark, points):
-    """The streaming mapInPandas mesh stage must produce byte-identical
+    """The streaming mapInArrow mesh stage must produce byte-identical
     rows — terrain blobs included — to a driver-side reference that
     groups the collected cell grid per tile in pandas and calls the
-    tile kernel once per tile. A 7-row Arrow batch makes every tile's
-    rows span several batches, so the carry-over path runs too."""
+    tile kernel once per tile; the reference's NaN (DOUBLE) and None
+    (BOOLEAN, BINARY) come back as SQL NULL. A 7-row Arrow batch makes
+    every data tile's rows span several batches, so the carry-over path
+    runs too. Two tiles beyond the data's add the degenerate rows: a
+    one-cell tile (curvature inserts no vertex: NULL min_z, max_z,
+    terrain and checks) and an all-no-data tile (NULL max_err)."""
     from tin_terrain_spark.operators.meshing import (
-        TILE_SCHEMA, _make_tile_fn, cell_grid, mesh_tiles,
+        TILE_SCHEMA, _make_tile_fn, cell_grid, mesh_cells,
     )
 
-    tile_fn = _make_tile_fn(2, 5, 2, "terra", 2.0, 1, True, True)
     names = [f.split()[0] for f in TILE_SCHEMA.split(",")]
-    pdf = cell_grid(points, zoom=2, grid_bits=5, buffer_cells=2).toPandas()
-    ref = {}
-    for (tx, ty), g in pdf.groupby(["tile_x", "tile_y"]):
-        d = tile_fn(int(tx), int(ty), g["row_b"].to_numpy(), g["col_b"].to_numpy(),
-                    g["z_sum"].to_numpy(), g["z_cnt"].to_numpy())
-        ref[(int(tx), int(ty))] = {c: d[c] for c in names}
-    assert len(ref) == 16 and min(pdf.groupby(["tile_x", "tile_y"]).size()) > 7
+    extra = spark.createDataFrame(
+        [(4, 0, 5, 5, 3.0, 1), (4, 1, 5, 5, float("nan"), 1), (4, 1, 6, 6, float("nan"), 2)],
+        "tile_x BIGINT, tile_y BIGINT, row_b INT, col_b INT, z_sum DOUBLE, z_cnt BIGINT")
+    grid = cell_grid(points, zoom=2, grid_bits=5, buffer_cells=2).unionByName(extra)
+    pdf = grid.toPandas()
+    assert min(pdf.groupby(["tile_x", "tile_y"]).size().iloc[:16]) > 7
 
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    for batch in (None, "7"):
+    runs = [(m, batch, err) for m in ("terra", "curvature")
+            for batch, err in ((None, True), ("7", True), (None, False))]
+    for method, batch, compute_error in runs:
+        tile_fn = _make_tile_fn(2, 5, 2, method, 2.0, 1, compute_error, True)
+        ref = {}
+        for (tx, ty), g in pdf.groupby(["tile_x", "tile_y"]):
+            d = tile_fn(int(tx), int(ty), g["row_b"].to_numpy(), g["col_b"].to_numpy(),
+                        g["z_sum"].to_numpy(), g["z_cnt"].to_numpy())
+            ref[(int(tx), int(ty))] = {c: d[c] for c in names}
+        assert len(ref) == 18
         if batch:
             spark.conf.set(key, batch)
         try:
             got = {
                 (r["tile_x"], r["tile_y"]): r.asDict()
-                for r in mesh_tiles(points, zoom=2, method="terra", max_error=2.0,
-                                    compute_error=True).collect()
+                for r in mesh_cells(grid, 2, method=method, max_error=2.0,
+                                    compute_error=compute_error).collect()
             }
         finally:
             spark.conf.unset(key)
-        assert set(got) == set(ref), batch
+        run = (method, batch, compute_error)
+        assert set(got) == set(ref), run
         for k, row in got.items():
             for col, v in row.items():
                 rv = ref[k][col]
-                if isinstance(v, float) and np.isnan(v):
-                    assert np.isnan(rv), (batch, k, col)
+                if rv is None or (isinstance(rv, float) and np.isnan(rv)):
+                    assert v is None, (run, k, col)
                 else:
-                    assert v == rv, (batch, k, col)
+                    assert v == rv, (run, k, col)
+        if not compute_error:
+            assert all(row[c] is None for row in got.values()
+                       for c in ("euler_ok", "verts_on_grid_ok", "cover_ok")), run
+        assert got[(4, 1)]["max_err"] is None, run
+        if method == "curvature":
+            lone = got[(4, 0)]
+            assert lone["n_vertices"] == 0, run
+            assert [lone[c] for c in ("min_z", "max_z", "terrain", "euler_ok")] == [None] * 4
+
+
+def test_stream_kernel_through_map_in_pandas(spark, points):
+    """The pandas boundary: _make_stream_kernel driven by mapInPandas,
+    as perfbench's traced probe drives it (and with 7-row batches, so
+    the carry-over runs there too), returns mesh_cells' rows."""
+    from tin_terrain_spark.operators.meshing import (
+        TILE_SCHEMA, _make_stream_kernel, cell_grid, mesh_cells,
+    )
+
+    grid = cell_grid(points, zoom=2, grid_bits=5, buffer_cells=2)
+    want = _canon_rows(mesh_cells(grid, 2, max_error=2.0))
+    kernel = _make_stream_kernel(2, 5, 2, "terra", 2.0, 1, False, True)
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    for batch in (None, "7"):
+        if batch:
+            spark.conf.set(key, batch)
+        try:
+            got = _canon_rows(
+                grid.repartition(4, "tile_x", "tile_y")
+                .sortWithinPartitions("tile_x", "tile_y")
+                .mapInPandas(kernel, TILE_SCHEMA))
+        finally:
+            spark.conf.unset(key)
+        assert len(got) == 16 and got == want, batch
+
+
+def test_mesh_null_z_sum_is_no_data(spark, points):
+    """A grid row whose z_sum is NULL meshes exactly like one whose
+    z_sum is NaN: a no-data cell."""
+    import pyspark.sql.functions as F
+
+    from tin_terrain_spark.operators.meshing import cell_grid, mesh_cells
+
+    grid = cell_grid(points, zoom=2, grid_bits=5, buffer_cells=2)
+    blank = F.col("row_b") % 3 == 0
+
+    def with_z(v):
+        return grid.withColumn("z_sum", F.when(blank, v).otherwise(F.col("z_sum")))
+
+    nulled = with_z(F.lit(None).cast("double"))
+    assert nulled.where(F.col("z_sum").isNull()).count() > 0
+    got = _canon_rows(mesh_cells(nulled, 2))
+    assert got == _canon_rows(mesh_cells(with_z(F.lit(float("nan"))), 2))
+    assert got != _canon_rows(mesh_cells(grid, 2))
+
+
+@pytest.mark.parametrize("col", ["tile_y", "row_b", "z_cnt"])
+def test_mesh_null_integer_grid_column_raises(spark, points, col):
+    """A NULL in an integer grid column has no no-data reading: the
+    mesh stage fails with a ValueError naming the column."""
+    import pyspark.sql.functions as F
+
+    from tin_terrain_spark.operators.meshing import cell_grid, mesh_cells
+
+    grid = cell_grid(points, zoom=2, grid_bits=5, buffer_cells=2)
+    bad = grid.withColumn(col, F.when(F.col("col_b") == 7, F.lit(None)).otherwise(F.col(col)))
+    with pytest.raises(Exception, match=f"ValueError: grid column '{col}'"):
+        mesh_cells(bad, 2).collect()
+
+
+def test_mesh_stage_rejects_unsupported_output_type(points):
+    """Output columns are built from buffers for INT, BIGINT, DOUBLE,
+    BOOLEAN and BINARY only; any other type fails on the driver."""
+    from tin_terrain_spark.operators.meshing import cell_grid, mesh_cells
+
+    grid = cell_grid(points, zoom=2, grid_bits=5, buffer_cells=2)
+    with pytest.raises(ValueError, match="'tile_x' of type STRING"):
+        mesh_cells(grid, 2, columns="tile_x STRING, n_faces INT")
+
+
+def test_grid_column_reads_offset_and_nulls():
+    """_grid_column reads a sliced Arrow batch (non-zero offsets) with
+    NULLs as pandas reads it: NULL doubles as NaN, values from the
+    slice's offset on."""
+    import pyarrow as pa
+
+    from tin_terrain_spark.operators.meshing import _grid_column
+
+    z = [1.5, None, 2.5, None, 4.0, 5.0, None, 7.0, 8.0, 9.5, None]
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(z, pa.float64()), pa.array(range(11), pa.int32())], names=["z", "i"])
+    for start in (0, 1, 3, 9):
+        part = batch.slice(start)
+        np.testing.assert_array_equal(_grid_column(part, "z"),
+                                      part.to_pandas()["z"].to_numpy())
+        np.testing.assert_array_equal(_grid_column(part, "i"), np.arange(start, 11))
 
 
 def test_pyramid_honours_step(spark, tmp_path):
@@ -909,13 +1021,9 @@ def test_pyramid_honours_step(spark, tmp_path):
     build_tile_pyramid(spark, docs, out, min_zoom=2, max_zoom=2, method="dense",
                        step=2, resume=False)
 
-    def canon(df):
-        # NaN != NaN and bytearrays do not hash: compare as repr strings
-        return sorted(repr(tuple(r)) for r in df.collect())
-
-    pyr = canon(spark.read.parquet(f"{out}/zoom=2"))
+    pyr = _canon_rows(spark.read.parquet(f"{out}/zoom=2"))
     pts = geocode_points(docs, zoom=2, grid_bits=5)
-    ref = canon(mesh_tiles(pts, zoom=2, method="dense", step=2))
+    ref = _canon_rows(mesh_tiles(pts, zoom=2, method="dense", step=2))
     assert len(ref) == 16 and pyr == ref
 
 

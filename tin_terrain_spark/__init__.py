@@ -9,8 +9,9 @@ operators over a Common-Crawl-style web-pages table:
     → TMS tile keys at zoom z  (J1, reference src/MercatorProjection.cpp:48-65)
     → per-(tile,row,col) grid aggregation (SurfacePoints::to_raster analogue)
     → per-tile Terra/Zemlya/dense TIN meshing inside a streaming
-      mapInPandas over tile-sorted partitions, native C kernels with a
-      bit-identical NumPy fallback
+      mapInArrow over tile-sorted partitions (NumPy views of the Arrow
+      buffers, no pandas), native C kernels with a bit-identical NumPy
+      fallback
       (reference src/TerraMesh.cpp, src/ZemlyaMesh.cpp, src/simple_meshing.cpp)
     → quantized-mesh tile records   (reference src/QuantizedMeshIO.cpp)
 

@@ -13,9 +13,10 @@ Pipeline (reference dem2tintiles, SURVEY.md §3.1), Spark-first:
       dem2tintiles_workflow.cpp:51-53); bounded 1:≤4 row expansion,
       pure Column exprs
     → mesh_cells, the ONE mesh stage: repartition(tile) →
-      sortWithinPartitions(tile) → streaming mapInPandas that walks
-      contiguous tile runs per Arrow batch and calls the ONE tile
-      kernel (_make_tile_fn) per tile:
+      sortWithinPartitions(tile) → streaming mapInArrow that reads each
+      Arrow batch's grid columns as NumPy views of its buffers, walks
+      contiguous tile runs and calls the ONE tile kernel
+      (_make_tile_fn) per tile:
         1. assemble the buffered grid (NumPy);
         2. mesh it through kernels.tin.generate_tin (terra | zemlya |
            dense | curvature) — for terra and zemlya ONE native call
@@ -26,7 +27,10 @@ Pipeline (reference dem2tintiles, SURVEY.md §3.1), Spark-first:
            first-seen, encode quantized-mesh — as ONE native call for
            every method, with only the 88-byte header packed in NumPy.
       The NumPy steps stay as the byte-exact oracle and the
-      no-compiler fallback (kernels/native.py's gating).
+      no-compiler fallback (kernels/native.py's gating). The output
+      batch is built from buffers too, so a mesh worker never imports
+      pandas (this module must not import it either: a worker imports
+      it to unpickle the kernel).
     → tiles(zoom, tile_x, tile_y, n_points, n_vertices, n_faces,
             max_err, terrain:binary)
 
@@ -45,7 +49,7 @@ aggregation + AQE.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..functions import geocode_exprs as GX
@@ -331,57 +335,153 @@ def _tile_terrain(verts: np.ndarray, faces: np.ndarray, tile_min_x: float,
     return terrain, len(vorder[0]), len(clipped)
 
 
-def _make_stream_kernel(*args, columns: str = TILE_SCHEMA):
-    """mapInPandas generator over TILE-SORTED partitions: walks
-    contiguous (tile_x, tile_y) runs inside each Arrow batch with
-    NumPy slicing, calls _make_tile_fn(*args) per tile and emits ONE
-    output DataFrame per batch (hundreds of tiles) instead of one per
-    tile — a per-group applyInPandas paid ~8 ms of pandas overhead per
-    tile at 65k-tile scale, more than the mesh kernel itself. A tile
-    whose rows span two Arrow batches is carried over in `buf` (rows
-    per tile are contiguous because the partition is sorted by the
-    tile key). `columns` is the output schema (DDL); its field names
-    select from the kernel's dict."""
-    tile_fn = _make_tile_fn(*args)
-    names = [f.split()[0] for f in columns.split(",")]
+# the cell_grid columns the mesh stage reads, in kernel argument order
+_GRID_COLUMNS = ("tile_x", "tile_y", "row_b", "col_b", "z_sum", "z_cnt")
 
-    def process(pdf: pd.DataFrame) -> pd.DataFrame:
-        tx = pdf["tile_x"].to_numpy()
-        ty = pdf["tile_y"].to_numpy()
-        rb = pdf["row_b"].to_numpy()
-        cb = pdf["col_b"].to_numpy()
-        zs = pdf["z_sum"].to_numpy()
-        zc = pdf["z_cnt"].to_numpy()
+# output column types the mesh stage can emit (TILE_SCHEMA, the sweep's
+# SWEEP_SCHEMA): DDL type → (Arrow type, NumPy dtype of a fixed-width one)
+_OUT_TYPES = {
+    "INT": (pa.int32(), np.int32),
+    "BIGINT": (pa.int64(), np.int64),
+    "DOUBLE": (pa.float64(), np.float64),
+    "BOOLEAN": (pa.bool_(), None),
+    "BINARY": (pa.binary(), None),
+}
+
+
+def _out_fields(columns: str) -> list[tuple[str, str]]:
+    """A DDL column list → [(name, TYPE)], every TYPE one the stage
+    can emit; raised on the driver when the kernel is built."""
+    fields = []
+    for f in columns.split(","):
+        name, typ = f.split()
+        typ = typ.upper()
+        if typ not in _OUT_TYPES:
+            raise ValueError(f"mesh stage cannot emit column {name!r} of type {typ}")
+        fields.append((name, typ))
+    return fields
+
+
+def _grid_column(batch: pa.RecordBatch, name: str) -> np.ndarray:
+    """One numeric column of an Arrow batch as a NumPy view of its data
+    buffer (from the array's offset on). A NULL in a floating column
+    reads as NaN, as pandas reads it (a NULL z_sum is a no-data cell);
+    a NULL in an integer column raises, naming the column."""
+    arr = batch.column(name)
+    if pa.types.is_floating(arr.type):
+        kind = "f"
+    elif pa.types.is_integer(arr.type):
+        kind = "i"
+    else:
+        raise TypeError(f"grid column {name!r} has type {arr.type}, not a number")
+    dtype = np.dtype(f"{kind}{arr.type.bit_width // 8}")
+    validity, data = arr.buffers()
+    vals = np.frombuffer(data, dtype, count=len(arr), offset=arr.offset * dtype.itemsize)
+    if arr.null_count:
+        if kind == "i":
+            raise ValueError(f"grid column {name!r} holds {arr.null_count} NULL(s)")
+        bits = np.unpackbits(np.frombuffer(validity, np.uint8),
+                             count=arr.offset + len(arr), bitorder="little")
+        vals = np.where(bits[arr.offset:].astype(bool), vals, np.nan)
+    return vals
+
+
+def _arrow_column(typ: str, vals: list) -> pa.Array:
+    """Python values → an Arrow array of DDL type `typ`, with pyspark's
+    pandas → Arrow NULL rules: NaN in a DOUBLE column and None in a
+    BOOLEAN or BINARY column are NULL."""
+    atype, dtype = _OUT_TYPES[typ]
+    n = len(vals)
+    if typ == "BINARY":
+        valid = np.array([v is not None for v in vals], dtype=bool)
+        offsets = np.zeros(n + 1, dtype=np.int32)
+        np.cumsum([len(v) if v is not None else 0 for v in vals], out=offsets[1:])
+        bufs = [pa.py_buffer(offsets),
+                pa.py_buffer(b"".join(v for v in vals if v is not None))]
+    elif typ == "BOOLEAN":
+        valid = np.array([v is not None for v in vals], dtype=bool)
+        bits = np.array([bool(v) for v in vals], dtype=bool)
+        bufs = [pa.py_buffer(np.packbits(bits, bitorder="little"))]
+    else:
+        data = np.array(vals, dtype=dtype)
+        valid = ~np.isnan(data) if typ == "DOUBLE" else np.ones(n, dtype=bool)
+        bufs = [pa.py_buffer(data)]
+    n_null = n - int(valid.sum())
+    mask = pa.py_buffer(np.packbits(valid, bitorder="little")) if n_null else None
+    return pa.Array.from_buffers(atype, n, [mask, *bufs], null_count=n_null)
+
+
+def _make_stream_kernel(*args, columns: str = TILE_SCHEMA):
+    """mapInArrow generator over TILE-SORTED partitions: reads the grid
+    columns of each Arrow batch as NumPy views of its buffers, walks
+    contiguous (tile_x, tile_y) runs with NumPy slicing, calls
+    _make_tile_fn(*args) per tile and emits ONE output batch per input
+    batch (hundreds of tiles) instead of one per tile — a per-group
+    applyInPandas paid ~8 ms of pandas overhead per tile at 65k-tile
+    scale, more than the mesh kernel itself. A tile whose rows span two
+    Arrow batches is carried over in `held` (rows per tile are
+    contiguous because the partition is sorted by the tile key).
+    `columns` is the output schema (DDL); its field names select from
+    the kernel's dict, and each output column is built from buffers.
+
+    Pandas is never imported on this path, so a mesh worker does not
+    load it (~37 MB of RSS each). In pyarrow 16, pa.array,
+    Array.to_numpy and RecordBatch.from_pydict import pandas lazily,
+    even for NumPy input; np.frombuffer, Array.from_buffers and
+    RecordBatch.from_arrays do not.
+
+    The one pandas boundary: the generator also accepts pandas
+    DataFrame batches (mapInPandas) and then returns DataFrames, with
+    pandas imported in that branch only. It exists for perfbench's
+    traced probe, which drives this kernel through mapInPandas, and
+    goes when the probe calls mesh_cells instead; the tile walk and the
+    kernel are the same on both."""
+    tile_fn = _make_tile_fn(*args)
+    fields = _out_fields(columns)
+    names = [n for n, _ in fields]
+
+    def process(cols: list[np.ndarray]) -> list[dict]:
+        tx, ty, rb, cb, zs, zc = cols
         change = np.empty(len(tx), dtype=bool)
         change[0] = True
         change[1:] = (tx[1:] != tx[:-1]) | (ty[1:] != ty[:-1])
         starts = np.nonzero(change)[0]
         ends = np.append(starts[1:], len(tx))
-        out = [
+        return [
             tile_fn(int(tx[s]), int(ty[s]), rb[s:e], cb[s:e], zs[s:e], zc[s:e])
             for s, e in zip(starts, ends)
         ]
-        return pd.DataFrame(out, columns=names)
+
+    def arrow_batch(rows: list[dict]) -> pa.RecordBatch:
+        return pa.RecordBatch.from_arrays(
+            [_arrow_column(typ, [r[n] for r in rows]) for n, typ in fields], names=names)
+
+    def pandas_frame(rows: list[dict]):
+        import pandas as pd
+
+        return pd.DataFrame(rows, columns=names)
 
     def gen(batches):
-        buf = None
-        for pdf in batches:
-            if buf is not None and len(buf):
-                pdf = pd.concat([buf, pdf], ignore_index=True)
-                buf = None
-            if not len(pdf):
+        emit, held = arrow_batch, None
+        for batch in batches:
+            if not len(batch):
                 continue
-            tx = pdf["tile_x"].to_numpy()
-            ty = pdf["tile_y"].to_numpy()
-            # the last group may continue in the next batch — hold it
-            eq = (tx == tx[-1]) & (ty == ty[-1])
-            nz = np.nonzero(~eq)[0]
-            start_last = int(nz[-1]) + 1 if len(nz) else 0
-            buf = pdf.iloc[start_last:]
-            if start_last:
-                yield process(pdf.iloc[:start_last])
-        if buf is not None and len(buf):
-            yield process(buf)
+            if isinstance(batch, pa.RecordBatch):
+                cols = [_grid_column(batch, c) for c in _GRID_COLUMNS]
+            else:  # the pandas boundary (see the docstring)
+                cols = [batch[c].to_numpy() for c in _GRID_COLUMNS]
+                emit = pandas_frame
+            if held is not None:
+                cols = [np.concatenate(pair) for pair in zip(held, cols)]
+            tx, ty = cols[0], cols[1]
+            # the last tile may continue in the next batch — hold it
+            nz = np.nonzero((tx != tx[-1]) | (ty != ty[-1]))[0]
+            cut = int(nz[-1]) + 1 if len(nz) else 0
+            held = [c[cut:] for c in cols]
+            if cut:
+                yield emit(process([c[:cut] for c in cols]))
+        if held is not None:
+            yield emit(process(held))
 
     return gen
 
@@ -416,7 +516,7 @@ def mesh_cells(
         zoom, grid_bits, buffer_cells, method, max_error, step,
         compute_error, encode_terrain, columns=columns,
     )
-    return grid.mapInPandas(kernel, columns)
+    return grid.mapInArrow(kernel, columns)
 
 
 def mesh_tiles(

@@ -27,8 +27,10 @@ daemon and 4.0-4.1 ms with this one (``scripts/bench_kernel.py
 worker``), and the pyramid benchmark operation's Python-worker CPU fell
 from 3.2-4.0 to 1.8 CPU-s. Avoiding the re-reads also lowers each
 worker's peak RSS, as every re-read left a separate copy of the
-directory (mesh workers 130 -> 116 MB, the check's workers 62 -> 49). On a cluster the package must be
-importable on the executors when the daemon starts (installed there,
+directory (mesh workers 130 -> 116 MB, the check's workers 62 -> 49);
+since the mesh stage became a pandas-free mapInArrow, a mesh worker
+peaks at 79-81 MB and the daemon at 61-62. On a cluster the package
+must be importable on the executors when the daemon starts (installed there,
 or on ``spark.executorEnv.PYTHONPATH``), not only through per-task
 ``--py-files``, which reach ``sys.path`` after the daemon has started.
 """
