@@ -90,7 +90,7 @@ def bench_queries():
         # are 10% of a 32x-replicated corpus (~16k queries over ~144k
         # points), where broadcasting the query set would evaluate
         # every box predicate against every point row. Work scales as
-        # |q|·ball + |points|; no broadcast anywhere (PLANS.md).
+        # |q|·ball + |points|; no broadcast anywhere (see the query's .explain()).
         # join_aux: timed + counted, outside the cross-round headline.
         "knn_ring_manyq": ("join_aux", knn_manyq_q),
         # mesh_aux: not in the tiles/sec headline (keeps the metric

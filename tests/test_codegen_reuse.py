@@ -109,7 +109,6 @@ def _catalog_pass(spark, inp, store_dir):
     probed = D.dedup_against_store(
         inp["probe_df"], spark.read.parquet(bands), spark.read.parquet(shingles), THRESHOLD
     ).collect()
-    spark.catalog.clearCache()  # near_dup_pairs leaves its caches
     return (n, sorted((r.q_id, r.rank, r.doc_id, r.dist2) for r in sample),
             sorted((r.poly_id, r.doc_id) for r in pip), sorted(pairs), sorted(probed))
 

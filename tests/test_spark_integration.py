@@ -703,6 +703,42 @@ def test_lsh_hot_bucket_star(spark):
     assert sorted(b for _, b in hot) == list(range(1, n_hot))
 
 
+def test_lsh_bucket_cap_edges_equal_brute(spark):
+    """Buckets of exactly BUCKET_CAP and BUCKET_CAP + 1 identical docs,
+    against a brute-force expectation built on the driver from the band
+    table: the capped bucket returns all C(100, 2) pairs, the one past
+    the cap the 100-pair star anchored at its minimum id."""
+    from itertools import combinations
+
+    from tin_terrain_spark.operators.dedup import BUCKET_CAP, band_keys, lsh_candidates
+
+    rng = np.random.default_rng(97)
+    ids = rng.permutation(np.arange(10, 10 + 2 * BUCKET_CAP + 1)).tolist()
+    at_cap, past_cap = sorted(ids[:BUCKET_CAP]), sorted(ids[BUCKET_CAP:])
+    rows = [(i, "one boilerplate page kept verbatim under the cap") for i in at_cap]
+    rows += [(i, "another boilerplate page repeated one time past the cap") for i in past_cap]
+    rows += [(5000 + i, f"unique document number {i} with its own words entirely") for i in range(5)]
+    docs = spark.createDataFrame(rows, "doc_id BIGINT, text STRING")
+
+    buckets = {}
+    for r in band_keys(docs).collect():
+        buckets.setdefault((r.band, r.band_key), []).append(r.doc_id)
+    want = set()
+    for members in buckets.values():
+        members = sorted(members)
+        if len(members) <= BUCKET_CAP:
+            want |= set(combinations(members, 2))
+        else:
+            want |= {(members[0], m) for m in members[1:]}
+    got = {(p.doc_a, p.doc_b) for p in lsh_candidates(docs).collect()}
+    assert got == want
+
+    full = set(combinations(at_cap, 2))
+    assert {p for p in got if p[0] in at_cap} == full and len(full) == 4950
+    star = {p for p in got if p[0] in past_cap}
+    assert star == {(past_cap[0], m) for m in past_cap[1:]} and len(star) == 100
+
+
 def _shingle_set(text, n=3):
     toks = text.split(" ")
     if len(toks) < n:
@@ -1060,23 +1096,6 @@ def test_quality_filter_keep_is_boolean_for_tiny_docs(spark):
     assert rows[1].ok_top_bigram is True
     # doc 3 fails distinct/top-token rules but boolean-ly so
     assert rows[3].keep is False
-
-
-def test_contamination_broadcast_optin_same_result(spark):
-    """The broadcast hint on the benchmark side is opt-in (the default
-    lets AQE size the join: a corpus-derived benchmark slice is NOT
-    guaranteed tiny at scale). Both plans must agree on values."""
-    from tin_terrain_spark.operators.dedup import contamination
-
-    docs = spark.createDataFrame(
-        [(i, f"tok{i % 7} alpha beta gamma delta epsilon tok{i % 5} zeta")
-         for i in range(60)],
-        "doc_id BIGINT, text STRING",
-    )
-    a = sorted(map(tuple, contamination(docs, bench_mod=10).collect()))
-    b = sorted(map(tuple, contamination(docs, bench_mod=10,
-                                        broadcast_bench=True).collect()))
-    assert a == b and len(a) > 0
 
 
 def test_connected_components_log_diameter_rounds(spark):

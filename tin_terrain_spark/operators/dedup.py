@@ -174,38 +174,48 @@ def band_keys(docs: DataFrame) -> DataFrame:
 
 def lsh_candidates(docs: DataFrame) -> DataFrame:
     """Bucket docs by their band keys (band_keys); emit candidate pairs
-    (a<b) per band, deduped.
+    (a<b) per band, deduped. A lazy plan: nothing is cached and no
+    Spark job runs before the caller's action.
 
-    Hot-bucket guard: buckets larger than BUCKET_CAP do NOT self-join —
-    a single degenerate bucket (all-identical boilerplate pages, the
-    common case in web data) would otherwise emit O(n²) pairs. Instead
-    each hot bucket emits a deterministic HUB STAR: every member pairs
-    with the bucket's min doc_id. That is O(bucket) rows, keeps the
-    whole cluster connected for union-find style dedup (the densest
+    Hot-bucket guard: a bucket larger than BUCKET_CAP does NOT
+    self-join — a single degenerate bucket (all-identical boilerplate
+    pages, the common case in web data) would otherwise emit O(n²)
+    pairs. Instead it emits a deterministic HUB STAR: every member
+    pairs with the bucket's min doc_id. That is O(bucket) rows, keeps
+    the whole cluster connected for union-find style dedup (the densest
     duplicate clusters are exactly what dedup must not lose), and is
     mirrored exactly in the DuckDB oracle.
 
-    The sized band-key table feeds THREE plan branches (pair join
-    left/right + the hot-bucket star); Catalyst reuses none of them
-    (plan audit: the whole shingle->minhash->band subtree appeared 3x,
-    zero ReusedExchange), so it is persisted for the call — 4 narrow
-    rows per doc, released by bench/gate clearCache or the caller."""
+    Both cases are ONE self-join on (band, band_key) with doc_a <
+    doc_b. The left side keeps a row iff its bucket is small or it is
+    the bucket's hub (`_bsz <= BUCKET_CAP OR doc_id = _bmin`); the
+    right side is the plain band table. Exact, because band_keys has
+    one row per (doc_id, band), so ids within a bucket are unique:
+    - a small bucket keeps every member on the left, so it yields
+      every a < b pair;
+    - a hot bucket's only left row is its minimum, which is below
+      every other member: exactly the star;
+    - work stays linear in a hot bucket's size (one probe row per
+      member).
+
+    The SHUFFLE_HASH hint sits on the hub-filtered left side, which
+    holds at most BUCKET_CAP rows per key, so a hot bucket never
+    becomes a hash build chain; it also pins the join strategy, so AQE
+    cannot pick another plan (and compile new classes) on a repeat
+    call."""
     from pyspark.sql import Window as W
 
     wb = W.partitionBy("band", "band_key")
-    band_key = band_keys(docs).withColumn("_bsz", F.count(F.lit(1)).over(wb)).withColumn(
-        "_bmin", F.min("doc_id").over(wb)
-    ).persist()
-    small = band_key.filter(F.col("_bsz") <= BUCKET_CAP)
-    a = small.select(F.col("doc_id").alias("doc_a"), "band", "band_key")
-    b = small.select(F.col("doc_id").alias("doc_b"), "band", "band_key")
-    pairs = a.join(b, ["band", "band_key"], "inner").filter(
-        F.col("doc_a") < F.col("doc_b")
+    bands = band_keys(docs)
+    hubs = (
+        bands.withColumn("_bsz", F.count(F.lit(1)).over(wb))
+        .withColumn("_bmin", F.min("doc_id").over(wb))
+        .filter((F.col("_bsz") <= BUCKET_CAP) | (F.col("doc_id") == F.col("_bmin")))
+        .select(F.col("doc_id").alias("doc_a"), "band", "band_key")
     )
-    star = band_key.filter(
-        (F.col("_bsz") > BUCKET_CAP) & (F.col("doc_id") != F.col("_bmin"))
-    ).select(F.col("_bmin").alias("doc_a"), F.col("doc_id").alias("doc_b"))
-    return pairs.select("doc_a", "doc_b").unionAll(star).distinct()
+    b = bands.select(F.col("doc_id").alias("doc_b"), "band", "band_key")
+    pairs = hubs.hint("SHUFFLE_HASH").join(b, ["band", "band_key"])
+    return pairs.filter(F.col("doc_a") < F.col("doc_b")).select("doc_a", "doc_b").distinct()
 
 
 def _shingle_sets(shingles: DataFrame) -> DataFrame:
@@ -226,7 +236,8 @@ def _jaccard_refine(cand: DataFrame, sets_a: DataFrame, sets_b: DataFrame,
     two equi-joins against the doc-count-sized set tables (_shingle_sets;
     doc_a from sets_a, doc_b from sets_b), n_inter =
     size(array_intersect(..)) — exact set intersection. Returns
-    (doc_a, doc_b, n_inter, jaccard) for pairs with jaccard >= threshold."""
+    (doc_a, doc_b, n_inter, jaccard) for pairs with jaccard >= threshold.
+    A hint on sets_a / sets_b reaches its join through the select."""
     sa = sets_a.select(
         F.col("doc_id").alias("doc_a"),
         F.col("toks").alias("toks_a"),
@@ -279,11 +290,18 @@ def _jaccard_refine(cand: DataFrame, sets_a: DataFrame, sets_b: DataFrame,
 
 def near_dup_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Exact shingle-set Jaccard (n-gram Jaccard) refine over the LSH
-    candidates — the same shingle universe the minhash estimates. The
-    batch's shingle sets are built once and cached for the call: both
-    sides of the refine read the same table."""
-    sets = _shingle_sets(shingles_df(docs, distinct=False)).persist()
-    sets.count()  # materialize once: both join branches read the cache
+    candidates — the same shingle universe the minhash estimates. A
+    lazy plan: nothing is cached and no Spark job runs before the
+    caller's action. The batch's one shingle-set table is both sides
+    of the refine.
+
+    Both refine joins carry a SHUFFLE_HASH hint on the set side.
+    Without it AQE may pick another broadcast or build side on a
+    repeat call, and that plan compiles new classes. Neither side is
+    bounded in rows; the set side is the build side because it has one
+    row per doc_id, while a hot bucket's hub repeats in the candidates
+    once per member."""
+    sets = _shingle_sets(shingles_df(docs, distinct=False)).hint("SHUFFLE_HASH")
     return _jaccard_refine(lsh_candidates(docs), sets, sets, threshold)
 
 
@@ -386,8 +404,7 @@ def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
 
 
 def contamination(docs: DataFrame, bench_mod: int = 97, n: int = 5,
-                  threshold: float = 0.2,
-                  broadcast_bench: bool = False) -> DataFrame:
+                  threshold: float = 0.2) -> DataFrame:
     """Training-data decontamination: flag corpus docs whose n-gram
     shingles overlap an evaluation-benchmark set (the standard
     pre-training hygiene step — e.g. 13-gram overlap in GPT-3's data
@@ -399,11 +416,9 @@ def contamination(docs: DataFrame, bench_mod: int = 97, n: int = 5,
     the corpus side is one scan + per-(doc, tok) dedup + per-doc
     count — both map-side combinable. A REAL eval benchmark (a few
     thousand fixed prompts) is tiny and broadcast-able; the stand-in
-    slice here grows with the corpus, so the broadcast hint is
-    OPT-IN (`broadcast_bench=True`, only when the caller knows the
-    benchmark side is small) and the default lets AQE pick the
-    strategy from observed sizes. No cross join anywhere; the oracle
-    recomputes the identical rates in DuckDB.
+    slice here grows with the corpus, so there is no broadcast hint:
+    AQE picks the strategy from observed sizes. No cross join
+    anywhere; the oracle recomputes the identical rates in DuckDB.
 
     Returns (doc_id, n_shingles, n_hits, contamination_rate,
     contaminated) for every NON-benchmark doc, zero-hit docs included.
@@ -412,8 +427,6 @@ def contamination(docs: DataFrame, bench_mod: int = 97, n: int = 5,
     bench = sh.filter(F.col("doc_id") % bench_mod == 0).select(
         F.col("tok").alias("btok")
     ).distinct()
-    if broadcast_bench:
-        bench = F.broadcast(bench)
     corpus = sh.filter(F.col("doc_id") % bench_mod != 0)
     totals = corpus.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     hits = (
