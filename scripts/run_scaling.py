@@ -23,6 +23,9 @@ import sys
 import zipfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from tin_terrain_spark.session import MALLOC_ARENA_MAX, jvm_options  # noqa: E402
 
 DRIVER = """
 import json, os, sys, time
@@ -74,6 +77,32 @@ def build_pyfiles_zip(path: str) -> str:
     return path
 
 
+def submit(driver_py: str, zip_path: str, env: dict) -> subprocess.CompletedProcess:
+    """Run ``driver_py`` under ``spark-submit --py-files zip_path`` in the
+    JVM that ``get_spark`` builds. spark-submit starts the JVM before the
+    driver calls ``get_spark``, so the builder-time driver memory, JVM
+    options and environment come too late there; they are given here."""
+    env = dict(env)
+    env.setdefault("MALLOC_ARENA_MAX", MALLOC_ARENA_MAX)
+    spark_submit = shutil.which("spark-submit") or os.path.join(
+        os.path.dirname(sys.executable), "spark-submit"
+    )
+    # 12g matches session.py (see its note on the heap size); the
+    # scaling job's shuffles spill to disk if they ever need more
+    driver_memory = env.get("SPARK_DRIVER_MEM", "12g")
+    cmd = [
+        spark_submit,
+        "--driver-memory",
+        driver_memory,
+        "--conf",
+        f"spark.driver.defaultJavaOptions={jvm_options(driver_memory)}",
+        "--py-files",
+        zip_path,
+        driver_py,
+    ]
+    return subprocess.run(cmd, env=env, capture_output=True, text=True, timeout=3600)
+
+
 def run_leg(cores: int, zip_path: str, sf_dir: str) -> dict:
     env = dict(os.environ)
     env["SPARK_GRAFT_CPUS"] = str(cores)
@@ -82,23 +111,7 @@ def run_leg(cores: int, zip_path: str, sf_dir: str) -> dict:
     driver_py = "/tmp/tts_scaling_driver.py"
     with open(driver_py, "w") as f:
         f.write(DRIVER)
-    spark_submit = shutil.which("spark-submit") or os.path.join(
-        os.path.dirname(sys.executable), "spark-submit"
-    )
-    # NOTE: driver memory must be set here — builder-time
-    # spark.driver.memory is ignored once spark-submit has launched the JVM
-    cmd = [
-        spark_submit,
-        "--driver-memory",
-        # 12g matches session.py: measured 2x faster on this sandbox
-        # than 48g (large-heap full-GC stalls); the scaling job's
-        # shuffles spill to disk if they ever need more
-        os.environ.get("SPARK_DRIVER_MEM", "12g"),
-        "--py-files",
-        zip_path,
-        driver_py,
-    ]
-    out = subprocess.run(cmd, env=env, capture_output=True, text=True, timeout=3600)
+    out = submit(driver_py, zip_path, env)
     for line in out.stdout.splitlines():
         line = line.strip()
         if line.startswith("{") and '"wall"' in line:

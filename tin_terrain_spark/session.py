@@ -13,7 +13,7 @@ and every call compiles (and the JIT recompiles) its plans again. The
 catalog benchmark operation needs 132 classes, more than Spark's
 default of 100; ``CODEGEN_CACHE_ENTRIES`` records the measurement.
 
-The other is the Python worker daemon, ``PYTHON_DAEMON_MODULE``.
+Another is the Python worker daemon, ``PYTHON_DAEMON_MODULE``.
 Pyspark reuses its Python workers across tasks but charges each task a
 fixed cost that does not depend on the task: on CPython 3.11,
 ``setup_spark_files`` calls ``importlib.invalidate_caches()``, which
@@ -33,6 +33,21 @@ peaks at 79-81 MB and the daemon at 61-62. On a cluster the package
 must be importable on the executors when the daemon starts (installed there,
 or on ``spark.executorEnv.PYTHONPATH``), not only through per-task
 ``--py-files``, which reach ``sys.path`` after the daemon has started.
+
+The last is the JVM's own memory: ``JVM_OPTIONS`` (the Parallel
+collector instead of G1, and a metaspace GC threshold),
+``MAX_NEW_SIZE_MB`` (a young generation cap for a heap over 3 GB, so
+that a heap that starts small does not outgrow G1's) and
+``MALLOC_ARENA_MAX``; their comments hold the measurements. Outside its
+heap the JVM holds its collector's data structures, metaspace, the code
+cache, thread stacks and the malloc arenas of its threads, which was
+most of the catalog benchmark's peak RSS. ``jvm_options`` puts the
+flags for the session's heap in
+``spark.driver.defaultJavaOptions``, which Spark puts before a caller's
+``spark.driver.extraJavaOptions``, so a caller's own JVM options
+(perfbench's fixed heap) add to them; a caller replaces them through
+``extra_conf``. A JVM that spark-submit starts has its options before
+``get_spark`` runs: ``scripts/run_scaling.py`` passes them itself.
 """
 
 from __future__ import annotations
@@ -55,9 +70,66 @@ from pyspark.sql import SparkSession
 # and +13 MB (pyramid).
 CODEGEN_CACHE_ENTRIES = 1000
 
+# The driver JVM's flags (Spark's ``spark.driver.defaultJavaOptions``).
+# Measured together with MALLOC_ARENA_MAX on a 4-core host, ten
+# alternating benchmark pairs (seeds 301-310, every run correct, 0
+# failed ops), medians parent -> change: catalog peak_rss_mb 767 -> 604
+# and pyramid 1428 -> 1224 (10/10 pairs each), all of it in the JVM
+# process; op_cpu_s and setup_s within their run-to-run spread (pyramid
+# op_cpu_s 12.10 -> 12.54, 4/10).
+# -XX:+UseParallelGC: the Parallel collector's data structures are
+# smaller than G1's remembered sets and card tables (NMT's GC line after
+# one catalog benchmark operation: 167 MB under G1, 131 MB under
+# Parallel). Its GC threads cost CPU: in three GC-logged pairs per
+# workload (first operation of each run) they used 0.37-0.45 CPU-s, G1's
+# 0.01-0.31; per pair +0.32-0.44 CPU-s on pyramid, which is the size of
+# its op_cpu_s median gap, and +0.06-0.33 on catalog.
+# -XX:MetaspaceSize=256m only moves the metaspace size at which class
+# loading first triggers a collection: without it the Parallel
+# collector ran a full GC at each metaspace threshold (5 "Metadata GC
+# Threshold" full GCs in a GC-logged catalog run, the longest 203 ms);
+# with it 0 full GCs and 10 young pauses, at the same RSS.
+JVM_OPTIONS = "-XX:+UseParallelGC -XX:MetaspaceSize=256m"
+
+# Largest young generation, in MB, of a driver heap over 3 GB (see
+# jvm_options). The Parallel collector lets its young generation reach
+# a third of the heap, and grows it while collections take over 1 % of
+# the time; a heap that starts small grows its old generation by full
+# collections. Uncapped, bench.py at sf0.001 on a 4-core host (default
+# 12 GB heap) grew the young generation to ~4 GB and the JVM's peak RSS
+# past G1's (2 alternating pairs: 5427 and 5956 MB against 5189 and
+# 3844). Capped at 1 GB, which is the default young generation of
+# perfbench's fixed 3 GB heap, over 10 alternating pairs against G1
+# (medians): JVM peak RSS 3224 against 5246 MB and the process tree's
+# 4589 against 6852 (lower in 10/10); wall unchanged (lower in 5/10,
+# median pair difference +0.8 s on 93-269 s runs); GC pauses 5.0
+# against 2.4 s in all, of them 8-16 full collections (longest pause
+# 498 ms) where G1 had none (longest 101 ms).
+MAX_NEW_SIZE_MB = 1024
+
+# glibc's malloc arena cap for the JVM and the Python workers (glibc's
+# default is 8 per core, and a thread that meets a locked arena makes a
+# new one). On catalog the cap took a further ~76 MB off peak RSS
+# (medians of 3 seeds: 684 MB with the collector alone, 608 with both;
+# ranges 654-707 and 599-617).
+MALLOC_ARENA_MAX = "2"
+
 # pyspark.daemon with stat-checked zip invalidation and gc.freeze after
 # a worker's first task (see the module docstring and pyworker).
 PYTHON_DAEMON_MODULE = "tin_terrain_spark.pyworker"
+
+
+def jvm_options(driver_memory: str) -> str:
+    """The driver JVM's flags for a heap of ``driver_memory``, a Spark size
+    string ("12g", "3072m"; MB without a unit): ``JVM_OPTIONS``, with the
+    young generation capped at ``MAX_NEW_SIZE_MB`` where the Parallel
+    collector's default, a third of the heap, is larger."""
+    s = driver_memory.strip().lower().removesuffix("b")
+    to_mb = {"k": 1 / 1024, "m": 1, "g": 1024, "t": 1024 * 1024}
+    heap_mb = float(s[:-1]) * to_mb[s[-1]] if s[-1] in to_mb else float(s)
+    if heap_mb <= 3 * MAX_NEW_SIZE_MB:
+        return JVM_OPTIONS
+    return f"{JVM_OPTIONS} -XX:MaxNewSize={MAX_NEW_SIZE_MB}m"
 
 
 def get_spark(
@@ -75,14 +147,22 @@ def get_spark(
     which cuts the fixed cost of a task in a reused worker from ~220-340
     to ~4 CPU-ms (no zip directory re-read, no full gc walk per task);
     the repo root is set as the executors' PYTHONPATH so that the daemon
-    can import it, also in a JVM that spark-submit started."""
+    can import it, also in a JVM that spark-submit started. The JVM runs
+    with ``jvm_options(<driver memory>)``, and it and its Python workers
+    with at most
+    ``MALLOC_ARENA_MAX`` malloc arenas (a value already in the
+    environment wins); see the module docstring."""
     # make the package importable in the processes this driver starts
     # (a local JVM and its Python workers inherit the environment)
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     existing = os.environ.get("PYTHONPATH", "")
     if repo_root not in existing.split(":"):
         os.environ["PYTHONPATH"] = f"{repo_root}:{existing}" if existing else repo_root
+    # read by glibc when a process starts: the local JVM and its Python
+    # workers inherit it, the driver's own Python has already started
+    os.environ.setdefault("MALLOC_ARENA_MAX", MALLOC_ARENA_MAX)
 
+    driver_memory = os.environ.get("SPARK_DRIVER_MEM", "12g")
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     if shuffle_partitions is None:
@@ -96,13 +176,18 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 12g, not "as much as the box has": measured on this sandbox,
-        # the same 80-query bench ran 89 s at 12g vs 171 s at 48g —
-        # huge heaps turn rare full GCs into multi-second stalls that
-        # land randomly on Python-worker stages (worst line 42.7 s →
-        # 2.0 s). Override with SPARK_DRIVER_MEM for jobs that truly
-        # need more.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "12g"))
+        # 12g, not "as much as the box has": under G1 the same
+        # 80-query bench ran 89 s at 12g vs 171 s at 48g (worst line
+        # 42.7 s → 2.0 s), rare full GCs of a huge heap stalling
+        # Python-worker stages. Under the Parallel collector the 12g
+        # heap starts small and grows by full GCs; with the young
+        # generation capped (MAX_NEW_SIZE_MB) the integration tests
+        # at sf0.001 paused 2.8 s in all (4 full, longest 355 ms, heap
+        # at most 1.9 GB) against G1's 3.2 s (longest 111 ms, 5.5 GB);
+        # bench.py is measured at MAX_NEW_SIZE_MB. 48g was not measured
+        # under Parallel. Override with SPARK_DRIVER_MEM for jobs that
+        # truly need more.
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
@@ -111,6 +196,7 @@ def get_spark(
         # reach sys.path; a JVM started by spark-submit does not inherit
         # the os.environ set above
         .config("spark.executorEnv.PYTHONPATH", repo_root)
+        .config("spark.driver.defaultJavaOptions", jvm_options(driver_memory))
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
