@@ -100,7 +100,6 @@ def _catalog_pass(spark, inp, store_dir):
     res = J.knn_ring(geo(inp["points"]), q, ZOOM, GRID_BITS, k=K, cell_join="shuffle")
     n = res.count()
     sample = res.where(F.col("q_id").isin(inp["check_q"])).collect()
-    res.unpersist()
     pip = J.pip_join(geo(inp["points"]), J.polygons_df(spark, N_POLYS), ZOOM).collect()
     pairs = D.near_dup_pairs(inp["batch"], THRESHOLD).collect()
     bands, shingles = (str(store_dir / t) for t in ("bands", "shingles"))

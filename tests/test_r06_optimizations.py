@@ -4,6 +4,7 @@ replaced (the optimizations are plan changes, never value changes)."""
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -204,35 +205,115 @@ def test_spread_pays_reads_footer_not_compressed_size(tmp_path):
     assert _spread_pays(path) is True           # ...but past the row gate
 
 
+def _open_queries(pts, queries, k: int, guarantee_m: float) -> set:
+    """Driver-side NumPy twin of the ring round's guarantee check: a
+    query stays open when its k-th smallest dist2 over every point
+    exceeds guarantee_m**2 (fewer than k points inside the circle the
+    ring is guaranteed to cover). Same dist2 arithmetic as the plan."""
+    p = np.array([(r.x, r.y) for r in pts.select("x", "y").collect()])
+    qs = queries.select("q_id", "x", "y").collect()
+    q = np.array([(r.x, r.y) for r in qs])
+    dx = p[None, :, 0] - q[:, None, 0]
+    dy = p[None, :, 1] - q[:, None, 1]
+    kth = np.sort(dx * dx + dy * dy, axis=1)[:, k - 1]
+    return {r.q_id for r, d2 in zip(qs, kth) if d2 > guarantee_m ** 2}
+
+
+def _executions(spark) -> list:
+    """The session's SQL executions."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    return list(spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava(store.executionsList()))
+
+
+def _semi_join_rows(spark, since: int) -> int:
+    """Output rows of the LeftSemi broadcast joins (topk ⋉ resolved) in
+    the SQL executions newer than `since`: k per query the ring round
+    resolved. AQE drops the join when nothing resolved."""
+    conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+    store = spark._jsparkSession.sharedState().statusStore()
+    total = 0
+    for e in _executions(spark):
+        if e.executionId() <= since:
+            continue
+        vals = store.executionMetrics(e.executionId())
+        for node in conv.asJava(store.planGraph(e.executionId()).allNodes()):
+            if node.name() != "BroadcastHashJoin" or "LeftSemi" not in node.desc():
+                continue
+            for m in conv.asJava(node.metrics()):
+                v = vals.get(m.accumulatorId())
+                if m.name() == "number of output rows" and v.isDefined():
+                    total += int(str(v.get()).replace(",", ""))
+    return total
+
+
+def _mixed_corpus(spark, zoom: int, grid_bits: int):
+    """A dense cluster (300 points in a 40 km square) with 4 queries
+    inside it and 3 queries 300-900 km away from it."""
+    from tin_terrain_spark.functions.geocode_exprs import tile_sql
+
+    rng = np.random.default_rng(53)
+    pts = [(i, 1.0e6 + float(x), 2.0e6 + float(y))
+           for i, (x, y) in enumerate(rng.uniform(0, 4e4, (300, 2)))]
+    qs = [(1000 + i, 1.0e6 + float(x), 2.0e6 + float(y))
+          for i, (x, y) in enumerate(rng.uniform(5e3, 3.5e4, (4, 2)))]
+    qs += [(2000 + i, 1.0e6 + float(d), 2.0e6 - float(d))
+           for i, d in enumerate((3e5, 6e5, 9e5))]
+
+    def cells(rows, id_col):
+        return spark.createDataFrame(rows, f"{id_col} BIGINT, x DOUBLE, y DOUBLE").select(
+            id_col, "x", "y",
+            F.expr(tile_sql("x", zoom + grid_bits)).alias("cell_x"),
+            F.expr(tile_sql("y", zoom + grid_bits)).alias("cell_y"),
+        )
+
+    return cells(pts, "doc_id"), cells(qs, "q_id")
+
+
 def test_knn_ring_prune_multi_round_equals_brute(spark):
-    """The guarantee-radius candidate prune must stay exact when round
-    1 does NOT resolve: a sparse far-apart corpus with a deliberately
-    tiny initial_ring forces unresolved queries through ring*4 rounds
-    and the brute fallback; every path must match knn_brute."""
+    """The guarantee-radius candidate prune must stay exact when the
+    ring round does NOT resolve every query. With a deliberately tiny
+    initial_ring=1, a sparse far-apart corpus leaves its queries open
+    and a mixed corpus (a dense cluster plus far-off queries) resolves
+    some but not all, as the NumPy twin of the guarantee check shows.
+    The ring round resolves exactly the twin's queries, the open ones
+    go to the brute branch, and every path must match knn_brute."""
     from tin_terrain_spark.functions.geocode_exprs import tile_size_meters
+    from tin_terrain_spark.functions.hexgrid import hex_ring_guarantee_m
     from tin_terrain_spark.operators.geocode import geocode_points
     from tin_terrain_spark.operators.joins import knn_brute, knn_hex, knn_ring
 
+    k, zoom, grid_bits = 5, 5, 6
+    cell_m = tile_size_meters(zoom + grid_bits)
+    assert hex_ring_guarantee_m(1, cell_m) == cell_m  # one twin serves both grids
     # 40 points: ids spread so the hash streams scatter them widely —
     # at zoom 5 / grid_bits 6 most cells are empty and the k-th
     # neighbor sits far outside a 1-cell ring guarantee
     docs = spark.range(40).select((F.col("id") * 7919).alias("doc_id"))
-    pts = geocode_points(docs, zoom=5, grid_bits=6, with_dem_z=False)
-    queries = pts.limit(6).select(
-        F.col("doc_id").alias("q_id"), "x", "y", "cell_x", "cell_y"
-    )
-    brute = {
-        (r.q_id, r.rank): (r.doc_id, r.dist2)
-        for r in knn_brute(
-            pts, queries.select("q_id", "x", "y"), k=5
-        ).collect()
+    sparse = geocode_points(docs, zoom=zoom, grid_bits=grid_bits, with_dem_z=False)
+    corpora = {
+        "sparse": (sparse, sparse.filter(F.col("doc_id") < 6 * 7919).select(
+            F.col("doc_id").alias("q_id"), "x", "y", "cell_x", "cell_y")),
+        "mixed": _mixed_corpus(spark, zoom, grid_bits),
     }
-    for out in (
-        knn_ring(pts, queries, 5, 6, k=5, initial_ring=1, max_ring_rounds=2),
-        knn_ring(pts, queries, 5, 6, k=5, initial_ring=1, max_ring_rounds=2,
-                 cell_join="shuffle"),
-        knn_hex(pts, queries.select("q_id", "x", "y"), tile_size_meters(11),
-                k=5, initial_ring=1, max_ring_rounds=2),
-    ):
-        got = {(r.q_id, r.rank): (r.doc_id, r.dist2) for r in out.collect()}
-        assert got == brute
+    for name, (pts, queries) in corpora.items():
+        n_q = queries.count()
+        open_q = _open_queries(pts, queries, k, cell_m)
+        if name == "sparse":
+            assert len(open_q) == n_q, open_q
+        else:
+            assert 0 < len(open_q) < n_q, open_q
+        brute = {
+            (r.q_id, r.rank): (r.doc_id, r.dist2)
+            for r in knn_brute(pts, queries.select("q_id", "x", "y"), k=k).collect()
+        }
+        assert len(brute) == k * n_q
+        for out in (
+            knn_ring(pts, queries, zoom, grid_bits, k=k, initial_ring=1),
+            knn_ring(pts, queries, zoom, grid_bits, k=k, initial_ring=1,
+                     cell_join="shuffle"),
+            knn_hex(pts, queries.select("q_id", "x", "y"), cell_m, k=k, initial_ring=1),
+        ):
+            mark = max(e.executionId() for e in _executions(spark))
+            got = {(r.q_id, r.rank): (r.doc_id, r.dist2) for r in out.collect()}
+            assert got == brute, name
+            assert _semi_join_rows(spark, mark) == k * (n_q - len(open_q)), name

@@ -236,8 +236,8 @@ def _knn_corpus(spark, kind, k, zoom, grid_bits):
 def test_knn_degenerate_corpora_equal_brute(spark, corpus, variant):
     """The density-sizing edge branches — a collinear corpus (1-D
     density), every point identical (ring 1) and a corpus of at most
-    32·k points (the brute plan) — each return knn_brute's rows. The
-    brute plan is lazy: the call leaves no RDD persisted."""
+    32·k points (the brute plan) — each return knn_brute's rows. Every
+    plan is lazy: no call leaves an RDD persisted."""
     from tin_terrain_spark.functions.geocode_exprs import tile_size_meters
     from tin_terrain_spark.operators.joins import knn_brute, knn_hex, knn_ring
 
@@ -257,10 +257,7 @@ def test_knn_degenerate_corpora_equal_brute(spark, corpus, variant):
         .select("q_id", "rank", "doc_id", "dist2").collect()
     )
     assert len(want) == 6 * k and got == want
-    if corpus == "tiny":
-        assert jsc.getPersistentRDDs().size() == n_persisted
-    else:
-        out.unpersist()
+    assert jsc.getPersistentRDDs().size() == n_persisted
 
 
 def test_with_h3_id_packs_axial(spark, points):
@@ -820,7 +817,7 @@ def test_store_probe_hot_bucket_equals_brute_jaccard(spark):
 
 @pytest.mark.parametrize("empty", ["queries", "points"])
 def test_knn_empty_inputs_equal_brute(spark, points, empty):
-    """0 queries (the ring rounds run) or 0 points (the brute plan):
+    """0 queries (the ring round runs) or 0 points (the brute plan):
     knn_ring over both cell joins and knn_hex return knn_brute's rows."""
     import pyspark.sql.functions as F
 
@@ -843,7 +840,6 @@ def test_knn_empty_inputs_equal_brute(spark, points, empty):
     outs.append(knn_hex(pts, queries.select("q_id", "x", "y"), tile_size_meters(7), k=5))
     for out in outs:
         assert sorted(tuple(r) for r in out.select(*cols).collect()) == want
-        out.unpersist()
 
 
 def test_empty_catalog_inputs(spark, points):

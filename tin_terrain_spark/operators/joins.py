@@ -9,12 +9,11 @@ coordinate lies in [min, max] falls in a covering tile; the exact
 
 J6 kNN: grid-ring expansion — candidates from the Chebyshev ring of
 cells around each query, exact distance refine + per-query top-k
-window, with the correctness guarantee enforced by expansion: a query's
-result is final only when its k-th distance is ≤ the ring's guaranteed
-radius (ring_r * cell_size, the geometry the reference uses for
-buffered partitions, dem2tintiles_workflow.cpp:51-53); unresolved
-queries re-run with a doubled ring. Brute-force variant provided as the
-oracle-checked baseline.
+window. A query's ring result is final only when its k-th distance is
+≤ the ring's guaranteed radius (ring_r * cell_size, the geometry the
+reference uses for buffered partitions, dem2tintiles_workflow.cpp:51-53);
+the queries the ring leaves open take the exact brute-force answer.
+Brute-force variant provided as the oracle-checked baseline.
 """
 
 from __future__ import annotations
@@ -124,26 +123,25 @@ def _density_ring(pts: DataFrame, k: int, cell_m: float,
     one aggregate over the points (count + xy bounding box) gives the
     areal density; the ring radius is chosen so the guarantee circle
     (the distance below which nothing outside the ring can lie) is
-    expected to hold ~8x k points. An under-estimate only costs an
-    extra round (the guarantee check stays exact); an over-estimate
-    only widens the candidate window. Returns None when the corpus is
-    so small (n <= 32k) that the brute crossJoin is the right plan
-    outright; a zero-area corpus gets a 1-D density (collinear) or
-    ring 1 (every point identical).
+    expected to hold ~8x k points. An under-estimate only sends the
+    queries it leaves open to knn_brute (the guarantee check stays
+    exact); an over-estimate only widens the candidate window. Returns
+    None when the corpus is so small (n <= 32k) that the brute
+    crossJoin is the right plan outright; a zero-area corpus gets a 1-D
+    density (collinear) or ring 1 (every point identical).
 
     The factor was 32x k with a ring floor of 2 through round 5;
     measured at sf1.0 (1.44M points, 160k queries, ~22 points/cell)
     that yielded ring 2 -> 550 candidates per query for k = 5 — an
     88M-row candidate join where the 8x sizing picks ring 1 (~200
     candidates) and still leaves ~14x k points expected inside the
-    guarantee circle; rare misses re-run at ring*4 for the handful of
-    unresolved queries only.
+    guarantee circle; the handful of rare misses go to knn_brute.
 
     The denominator is the COVERED AREA, not the occupied-cell count:
     on sparse grids (most cells empty) occupied-cell density
     overestimates true density by the fill factor, which is exactly
     the regime where the first ring then misses its guarantee and the
-    query pays fixed per-round coordination again.
+    query falls through to the brute crossJoin.
     """
     import math
 
@@ -178,130 +176,86 @@ def _density_ring(pts: DataFrame, k: int, cell_m: float,
     return max(1, ring)
 
 
-def _knn_rounds(pts: DataFrame, q: DataFrame, k: int, initial_ring: int | None,
-                max_rounds: int, cand_fn, guarantee_m, cell_m: float,
-                geometry: str) -> DataFrame:
-    """Shared iterative driver for knn_ring / knn_hex: per round, build
-    candidates within ring R of each unresolved query (cand_fn), refine
-    by exact distance + per-query top-k, and mark a query FINAL when
-    its k-th distance <= guarantee_m(R) (nothing outside the ring can
-    be closer). Unresolved queries re-run with R*4; what survives
-    max_rounds hits the brute crossJoin.
+def _knn_plan(pts: DataFrame, q: DataFrame, k: int, initial_ring: int | None,
+              cand_fn, guarantee_m, cell_m: float, geometry: str) -> DataFrame:
+    """The one kNN plan behind knn_ring and knn_hex: a single ring round,
+    then knn_brute for the queries that round leaves open.
 
-    Coordination is deliberately minimal: ONE action per round (the
-    unresolved count, which doubles as the materializer for that
-    round's persisted top-k — the split reads the ring join twice, and
-    with a lazy DAG Spark would recompute the join per consumer). When
-    round 1 resolves every query — the designed case, since the ring
-    is density-sized — the result IS the round-1 cache: no semi-join,
-    no extra materialize action; total cost is the density aggregate +
-    one join round. No driver collect of data rows anywhere; counts
-    are coordination, as in any LSH/ANN loop.
+    The round builds the candidates within ring R of every query
+    (cand_fn), refines them by exact distance and takes the per-query
+    top-k. A query is RESOLVED when it found k rows and its k-th
+    distance is <= guarantee_m(R): nothing outside the ring can be
+    closer. The result is topk ⋉ resolved (left semi-join) unioned with
+    knn_brute over the queries ▷ resolved (left anti-join), so every
+    query gets an exact answer whatever R is.
 
-    The projected points (pts) and queries (q: q_id, qx, qy plus the
-    cell columns cand_fn joins on) are persisted for the DURATION OF THE
-    CALL: the points side is read by the density aggregate AND by every
-    ring round, the query side by every round's ball build — without
-    the cache an expensive upstream subtree (a geocode chain, a
-    replicated corpus) re-executes per consumer. Both are released
-    before returning. initial_ring None sizes the first ring from the
-    corpus density (_density_ring over cell_m / geometry); a corpus
-    of at most 32·k points returns the lazy knn_brute plan instead,
-    with no cache left behind.
+    Building the plan runs one Spark action at most: the _density_ring
+    aggregate that sizes R when initial_ring is None (over cell_m /
+    geometry). A given initial_ring builds with no job, and a corpus of
+    at most 32·k points returns the knn_brute plan outright. Nothing is
+    persisted, so the plan reads `pts` and `q` more than once per action
+    (the ring join and the brute branch; `pts` once more in the density
+    aggregate at build). Both inputs must therefore be deterministic: a
+    sample, an unordered limit or a rand() column could show the ring
+    and the brute branch different rows.
     """
-    pts, q = pts.persist(), q.persist()
     if initial_ring is None:
         initial_ring = _density_ring(pts, k, cell_m, geometry)
-        if initial_ring is None:  # tiny corpus: brute IS the plan
-            pts.unpersist()
-            q.unpersist()
-            return knn_brute(
-                pts, q.select("q_id", F.col("qx").alias("x"), F.col("qy").alias("y")), k
-            )
-    w = W.partitionBy("q_id").orderBy(F.col("dist2").asc(), F.col("doc_id").asc())
-    done: DataFrame | None = None
-    remaining = q
-    ring = initial_ring
-    round_caches: list[DataFrame] = []
-    for _ in range(max_rounds):
-        guarantee2 = float(guarantee_m(ring)) ** 2
-        cand = cand_fn(pts, remaining, ring).withColumn(
-            "dist2",
-            (F.col("x") - F.col("qx")) * (F.col("x") - F.col("qx"))
-            + (F.col("y") - F.col("qy")) * (F.col("y") - F.col("qy")),
-        )
-        # Guarantee-radius candidate prune (guide §2.3): only rows with
-        # dist2 <= guarantee2 can participate in a RESOLUTION this
-        # round, and the prune is exact — if >= k candidates lie within
-        # the guarantee circle, the k nearest are all within it (they
-        # are the k smallest distances), so the pruned top-k equals the
-        # unpruned top-k and the query resolves identically; if fewer,
-        # the pruned count drops below k and the query is unresolved —
-        # exactly the verdict the unpruned round reaches (either < k
-        # rows, or kth_d2 > guarantee2). Same inclusive <= as the
-        # resolution check, same dist2 expression bit-for-bit.
-        # Unresolved queries re-join at ring*4 from scratch, so pruned
-        # rows never leak. Ring candidates outside the circle (corner
-        # cells: ~1 - pi/4 of the box, plus the density margin) skip
-        # the sort/shuffle/window entirely — measured 18-21% off the
-        # round action at 1.44M points x 160k queries.
-        cand = cand.filter(F.col("dist2") <= F.lit(guarantee2))
-        topk = (
-            cand.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("q_id", "doc_id", "rank", "dist2")
-        ).persist()
-        round_caches.append(topk)
-        resolved = (
-            topk.groupBy("q_id")
-            .agg(F.count(F.lit(1)).alias("n_found"), F.max("dist2").alias("kth_d2"))
-            .filter((F.col("n_found") >= k) & (F.col("kth_d2") <= guarantee2))
-            .select("q_id")
-        )
-        nxt = remaining.join(F.broadcast(resolved), "q_id", "left_anti")
-        if nxt.count() == 0:  # the action that populates topk's cache
-            pts.unpersist()  # topk is cached; the input scans are done
-            q.unpersist()
-            if done is None:
-                # single-round fast path: every query resolved, so the
-                # cached round-1 top-k IS the result (documented single
-                # persist residue, same as _finalize_rounds')
-                return topk
-            final = done.unionAll(
-                topk.join(F.broadcast(resolved), "q_id", "left_semi")
-            )
-            return _finalize_rounds(final, round_caches)
-        done_r = topk.join(F.broadcast(resolved), "q_id", "left_semi")
-        done = done_r if done is None else done.unionAll(done_r)
-        remaining = nxt
-        ring *= 4
-
-    leftover = knn_brute(
-        pts,
-        remaining.select("q_id", F.col("qx").alias("x"), F.col("qy").alias("y")),
-        k,
+    q_xy = q.select("q_id", F.col("qx").alias("x"), F.col("qy").alias("y"))
+    if initial_ring is None:  # tiny corpus: brute IS the plan
+        return knn_brute(pts, q_xy, k)
+    guarantee2 = float(guarantee_m(initial_ring)) ** 2
+    cand = cand_fn(pts, q, initial_ring).withColumn(
+        "dist2",
+        (F.col("x") - F.col("qx")) * (F.col("x") - F.col("qx"))
+        + (F.col("y") - F.col("qy")) * (F.col("y") - F.col("qy")),
     )
-    final = leftover if done is None else done.unionAll(leftover)
-    return _finalize_rounds(final, round_caches + [pts, q])
+    # Guarantee-radius candidate prune: only rows with dist2 <=
+    # guarantee2 can take part in a resolution, and the prune is exact.
+    # If >= k candidates lie within the guarantee circle, the k nearest
+    # are all within it (they are the k smallest distances), so the
+    # pruned top-k equals the unpruned one and the query resolves the
+    # same way. If fewer do, the query stays open, as it would unpruned
+    # (either < k rows, or kth_d2 > guarantee2). Same inclusive <= and
+    # same dist2 expression as the resolution check. Pruned rows never
+    # leak: an open query goes to knn_brute over ALL points. Ring rows
+    # outside the circle (the corner cells, ~1 - pi/4 of the box, plus
+    # the density margin) skip the sort, shuffle and window: measured
+    # 18-21% off the round at 1.44M points x 160k queries.
+    cand = cand.filter(F.col("dist2") <= F.lit(guarantee2))
+    w = W.partitionBy("q_id").orderBy(F.col("dist2").asc(), F.col("doc_id").asc())
+    topk = (
+        cand.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("q_id", "doc_id", "rank", "dist2")
+    )
+    # n_found >= k AND kth_d2 <= guarantee2, read off the rank-k row:
+    # row_number is gap-free, so that row exists iff n_found >= k, and
+    # its dist2 is the largest of the top-k
+    resolved = F.broadcast(
+        topk.filter((F.col("rank") == k) & (F.col("dist2") <= guarantee2)).select("q_id")
+    )
+    return topk.join(resolved, "q_id", "left_semi").unionAll(
+        knn_brute(pts, q_xy.join(resolved, "q_id", "left_anti"), k)
+    )
 
 
 def knn_ring(points: DataFrame, queries: DataFrame, zoom: int, grid_bits: int,
              k: int = 5, initial_ring: int | None = None,
              repartition_to: int | None = None,
-             max_ring_rounds: int = 3,
              cell_join: str = "broadcast") -> DataFrame:
-    """J6 scale path: iterative ring join on the cell grid, exact brute
-    fallback only for queries no ring round resolves.
+    """J6 scale path: one ring join on the cell grid, exact brute
+    fallback only for the queries the ring does not resolve.
 
-    Each round joins points whose cell lies within Chebyshev radius R
-    of a query's cell, refines by exact distance, and takes the
-    per-query top-k. A query is FINAL when its k-th distance ≤
+    The ring round joins points whose cell lies within Chebyshev
+    radius R of a query's cell, refines by exact distance, and takes
+    the per-query top-k. A query is FINAL when its k-th distance ≤
     R * cell_size (nothing outside the ring can be closer — the same
     buffered-margin geometry as the reference's partitions,
-    dem2tintiles_workflow.cpp:51-53). The first ring is
-    density-derived (_density_ring) so round 1 is expected to resolve
-    everything; the iterative loop is the rare-miss path. See
-    _knn_rounds for the coordination contract.
+    dem2tintiles_workflow.cpp:51-53). The ring is density-derived
+    (_density_ring) so it is expected to resolve every query; the
+    brute branch is the rare-miss path. See _knn_plan for the plan
+    and its one action.
 
     cell_join picks the candidate-join physical shape:
       "broadcast" (default): broadcast the query set and range-join on
@@ -332,11 +286,11 @@ def knn_ring(points: DataFrame, queries: DataFrame, zoom: int, grid_bits: int,
         F.col("cell_y").alias("qcy"),
     )
 
-    def cand_fn(pts_r, remaining, ring):
+    def cand_fn(pts_r, q_r, ring):
         if cell_join == "shuffle":
             r = F.lit(ring)
             ball = (
-                remaining.withColumn(
+                q_r.withColumn(
                     "cell_x", F.explode(F.sequence(F.col("qcx") - r, F.col("qcx") + r))
                 )
                 .withColumn(
@@ -351,7 +305,7 @@ def knn_ring(points: DataFrame, queries: DataFrame, zoom: int, grid_bits: int,
             # broadcast plan it exists to avoid.
             return pts_r.join(ball.hint("SHUFFLE_HASH"), ["cell_x", "cell_y"], "inner")
         return pts_r.join(
-            F.broadcast(remaining),
+            F.broadcast(q_r),
             (F.col("cell_x") >= F.col("qcx") - ring)
             & (F.col("cell_x") <= F.col("qcx") + ring)
             & (F.col("cell_y") >= F.col("qcy") - ring)
@@ -359,24 +313,10 @@ def knn_ring(points: DataFrame, queries: DataFrame, zoom: int, grid_bits: int,
             "inner",
         )
 
-    return _knn_rounds(
-        pts, q, k, initial_ring, max_ring_rounds,
+    return _knn_plan(
+        pts, q, k, initial_ring,
         cand_fn, lambda r: r * cell_m, cell_m, "square",
     )
-
-
-def _finalize_rounds(result: DataFrame, round_caches: list[DataFrame]) -> DataFrame:
-    """Pin the (tiny: |queries| x k rows) final result, then release
-    every per-round top-k cache — without this, repeated knn calls in a
-    long-lived driver pin one cached DataFrame per ring round for the
-    life of the session. The single result cache is the documented
-    residue; callers that care run spark.catalog.clearCache() (bench.py
-    does, between queries)."""
-    result = result.persist()
-    result.count()
-    for c in round_caches:
-        c.unpersist()
-    return result
 
 
 # unit CCW octagon (trig-free: exact double literals shared with the oracle)
@@ -466,7 +406,7 @@ def pip_convex_join(points: DataFrame, poly_edges: DataFrame) -> DataFrame:
     )
 
 
-def _hex_ring_cells(remaining: DataFrame, ring: int) -> DataFrame:
+def _hex_ring_cells(q: DataFrame, ring: int) -> DataFrame:
     """Enumerate the hex BALL of radius `ring` around each query cell
     as rows — 3R(R+1)+1 cells per query (the axial-coordinate identity:
     hexdist <= R  ⟺  dq in [-R,R], dr in [max(-R,-dq-R), min(R,-dq+R)]).
@@ -477,7 +417,7 @@ def _hex_ring_cells(remaining: DataFrame, ring: int) -> DataFrame:
     to)."""
     r = F.lit(ring)
     return (
-        remaining.withColumn("dq", F.explode(F.sequence(-r, r)))
+        q.withColumn("dq", F.explode(F.sequence(-r, r)))
         .withColumn(
             "dr",
             F.explode(
@@ -497,18 +437,16 @@ def _hex_ring_cells(remaining: DataFrame, ring: int) -> DataFrame:
 
 def knn_hex(points: DataFrame, queries: DataFrame, hex_size: float,
             k: int = 5, initial_ring: int | None = None,
-            repartition_to: int | None = None,
-            max_ring_rounds: int = 3) -> DataFrame:
+            repartition_to: int | None = None) -> DataFrame:
     """J6 over the H3-style hex index (charter: "kNN lookups over H3
-    ring expansion"): same iterative driver as knn_ring (_knn_rounds),
-    but candidate rings are hexagonal — the ring ball is exploded to
-    cell rows and equi-joined on (hex_q, hex_r) — and the resolution
+    ring expansion"): the same plan as knn_ring (_knn_plan), but the
+    candidate ring is hexagonal — the ring ball is exploded to cell
+    rows and equi-joined on (hex_q, hex_r) — and the resolution
     guarantee uses the hex staircase geometry
     (hexgrid.hex_ring_guarantee_m). Cells are computed from the meter
-    coordinates with pure Column expressions (no UDF, no native lib),
-    ONCE: the hexed projections are persisted for the call by
-    _knn_rounds instead of re-derived per action. The first ring is
-    density-derived so round 1 is expected to resolve everything.
+    coordinates with pure Column expressions (no UDF, no native lib);
+    nothing is persisted, so each action derives them again. The ring
+    is density-derived so it is expected to resolve every query.
     Exactness: results are hash-equal to knn_brute (the driver gate's
     oracle recomputes brute-force kNN in DuckDB). The ring ball is
     broadcast while it has at most 8192 cells a query; past that both
@@ -524,17 +462,17 @@ def knn_hex(points: DataFrame, queries: DataFrame, hex_size: float,
         hex_size, x="qx", y="qy", q_col="qhq", r_col="qhr",
     )
 
-    def cand_fn(pts_r, remaining, ring):
-        ball = _hex_ring_cells(remaining, ring)
+    def cand_fn(pts_r, q_r, ring):
+        ball = _hex_ring_cells(q_r, ring)
         # the ball has 3R(R+1)+1 rows PER QUERY and R is density-derived
-        # (unbounded on sparse corpora, x4 per miss round): past the cap
-        # drop the broadcast hint and let the equi-join shuffle instead
-        # of forcing an arbitrarily large broadcast through the driver
+        # (unbounded on sparse corpora): past the cap drop the broadcast
+        # hint and let the equi-join shuffle instead of forcing an
+        # arbitrarily large broadcast through the driver
         if 3 * ring * (ring + 1) + 1 <= 8192:
             ball = F.broadcast(ball)
         return pts_r.join(ball, ["hex_q", "hex_r"], "inner")
 
-    return _knn_rounds(
-        pts, q, k, initial_ring, max_ring_rounds,
+    return _knn_plan(
+        pts, q, k, initial_ring,
         cand_fn, lambda r: HG.hex_ring_guarantee_m(r, hex_size), hex_size, "hex",
     )
