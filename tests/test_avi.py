@@ -72,14 +72,14 @@ def test_rejections():
 
 def test_decode_dispatch_first_frame_and_sampled():
     from tin_terrain_spark.operators.multimodal import (
-        _decode_frame_real, _decode_real,
+        _decode_frames_real, _decode_real,
     )
 
     vals = [40, 90, 200]
     data = A.encode_avi_mjpeg(_mjpeg(vals), 16, 16)
     first = _decode_real(data, 16, 16)
     assert first is not None and np.allclose(first, 40 / 256.0)
-    for i, v in enumerate(vals):
-        px = _decode_frame_real(data, 16, 16, i)
+    pxs = _decode_frames_real(data, 16, 16, [0, 1, 2, 9])
+    for px, v in zip(pxs, vals + [vals[-1]]):  # past the end: last frame
         assert np.allclose(px, v / 256.0)
-    assert _decode_frame_real(b"junk", 16, 16, 1) is None
+    assert _decode_frames_real(b"junk", 16, 16, [1]) is None

@@ -121,3 +121,22 @@ def test_resume_skips_done(sweep, spark):
     assert again == []
     csv = open(os.path.join(out, "tin_terrain_benchmarks.csv")).read().splitlines()
     assert len(csv) == 7  # no duplicate appends
+
+
+def test_failed_sweep_releases_cells(spark, tmp_path, monkeypatch):
+    """A parametrization that raises still unpersists the sweep's
+    shared cell grid: no cached relation outlives the failed call."""
+    from tin_terrain_spark.pipeline import benchmark as B
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("parametrization failed")
+
+    monkeypatch.setattr(B, "run_parametrization", fail)
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    pts = geocode_points(docs, zoom=1, grid_bits=5)
+    with pytest.raises(RuntimeError, match="parametrization failed"):
+        run_benchmark_sweep(
+            pts, zoom=1, out_dir=str(tmp_path), max_errors=[1.0],
+            steps=[2], thresholds=[0.5],
+        )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

@@ -1202,7 +1202,13 @@ def test_lm_score_properties(spark):
         ],
         ["doc_id", "text"],
     )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    jsc = spark.sparkContext._jsc
+    n_cached, n_persisted = cache.numCachedEntries(), jsc.getPersistentRDDs().size()
     out = {r["doc_id"]: r for r in lm_score(docs).collect()}
+    # the call leaves no cached relation and no persisted RDD behind
+    assert cache.numCachedEntries() == n_cached
+    assert jsc.getPersistentRDDs().size() == n_persisted
     # corpus: aa x6, bb x2, zz x1, yy x1 -> total 10
     assert out[0]["n_tokens"] == 4
     assert out[0]["bits_per_token"] == round(math.log2(10) - math.log2(6), 6)

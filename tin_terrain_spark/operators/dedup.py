@@ -49,6 +49,14 @@ def _tok_hash(col):
 SQL_TOK_HASH = "(CAST(concat('0x', substr(md5({s}), 1, 14)) AS BIGINT) % 2147483647)"
 
 NGRAM = 3
+# winnowing window, in consecutive shingle hashes
+WINNOW = 4
+# decontamination: the benchmark stand-in is doc_id % CONTAM_MOD == 0,
+# matched on CONTAM_NGRAM-gram shingles; a doc is contaminated at a hit
+# rate of at least CONTAM_THRESHOLD
+CONTAM_MOD = 97
+CONTAM_NGRAM = 5
+CONTAM_THRESHOLD = 0.2
 
 
 def tokens_df(docs: DataFrame) -> DataFrame:
@@ -305,10 +313,10 @@ def near_dup_pairs(docs: DataFrame, threshold: float = 0.5) -> DataFrame:
     return _jaccard_refine(lsh_candidates(docs), sets, sets, threshold)
 
 
-def winnow_fingerprints(docs: DataFrame, window: int = 4, n: int = NGRAM) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (the MOSS algorithm, Schleimer/
-    Wilkerson/Aiken 2003): hash every n-gram shingle IN ORDER, slide a
-    window of `window` consecutive hashes, keep each window's minimum;
+    Wilkerson/Aiken 2003): hash every NGRAM shingle IN ORDER, slide a
+    window of WINNOW consecutive hashes, keep each window's minimum;
     the distinct kept hashes are the fingerprint set. Guarantees every
     sufficiently long match between documents shares a fingerprint —
     the positional robustness plain minhash lacks.
@@ -319,32 +327,32 @@ def winnow_fingerprints(docs: DataFrame, window: int = 4, n: int = NGRAM) -> Dat
     from pyspark.sql import Window as W
 
     # ORDERED shingles (no distinct — winnowing is positional)
-    idxs = ", ".join(f"toks[i + {j}]" for j in range(n))
+    idxs = ", ".join(f"toks[i + {j}]" for j in range(NGRAM))
     sh = (
         tokens_df(docs)
-        .filter(F.size("toks") >= n)
+        .filter(F.size("toks") >= NGRAM)
         .select(
             "doc_id",
             F.posexplode(
-                F.expr(f"transform(sequence(0, size(toks) - {n}), i -> concat_ws(' ', {idxs}))")
+                F.expr(f"transform(sequence(0, size(toks) - {NGRAM}), i -> concat_ws(' ', {idxs}))")
             ).alias("pos", "tok"),
         )
         .withColumn("h", _tok_hash(F.col("tok")))
     )
     wdoc = W.partitionBy("doc_id")
-    wslide = W.partitionBy("doc_id").orderBy("pos").rowsBetween(0, window - 1)
+    wslide = W.partitionBy("doc_id").orderBy("pos").rowsBetween(0, WINNOW - 1)
     picked = (
         sh.withColumn("n_sh", F.count(F.lit(1)).over(wdoc))
         .withColumn("winmin", F.min("h").over(wslide))
-        .filter(F.col("pos") <= F.col("n_sh") - window)
+        .filter(F.col("pos") <= F.col("n_sh") - WINNOW)
         .select("doc_id", F.col("winmin").alias("fp"))
         .distinct()
     )
     return picked
 
 
-def sql_winnow_fingerprints(window: int = 4, n: int = NGRAM) -> str:
-    idxs = ", ".join(f"toks[i + {j}]" for j in range(n))
+def sql_winnow_fingerprints() -> str:
+    idxs = ", ".join(f"toks[i + {j}]" for j in range(NGRAM))
     tok_hash = SQL_TOK_HASH.format(s="tok")
     return f"""
       WITH sh AS (
@@ -352,27 +360,27 @@ def sql_winnow_fingerprints(window: int = 4, n: int = NGRAM) -> str:
         FROM (
           SELECT doc_id, concat_ws(' ', {idxs}) AS tok, i
           FROM (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-          LATERAL (SELECT unnest(range(1, len(toks) - {n - 2})) AS i)
-          WHERE len(toks) >= {n}
+          LATERAL (SELECT unnest(range(1, len(toks) - {NGRAM - 2})) AS i)
+          WHERE len(toks) >= {NGRAM}
         )
       ), win AS (
         SELECT doc_id, pos,
                count(*) OVER (PARTITION BY doc_id) AS n_sh,
                min(h) OVER (PARTITION BY doc_id ORDER BY pos
-                            ROWS BETWEEN CURRENT ROW AND {window - 1} FOLLOWING) AS winmin
+                            ROWS BETWEEN CURRENT ROW AND {WINNOW - 1} FOLLOWING) AS winmin
         FROM sh
       )
       SELECT DISTINCT doc_id, winmin AS fp
-      FROM win WHERE pos <= n_sh - {window}
+      FROM win WHERE pos <= n_sh - {WINNOW}
     """
 
 
-def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
+def simhash(docs: DataFrame) -> DataFrame:
     """SimHash: bit j of hash(tok) votes ±1; doc bit = majority.
     Token ids come from the fixed string hash over unigram token
     OCCURRENCES (frequency-weighted votes, the classic formulation).
 
-    Realized as ONE groupBy(doc_id) with `bits` sum-aggregates — all 32
+    Realized as ONE groupBy(doc_id) with 32 sum-aggregates — all 32
     bit votes are extracted from each token hash in a single pass
     (integer div/mod on the same row), so the plan has NO Generate: the
     pre-aggregation row stream is exactly the token stream, not
@@ -388,12 +396,12 @@ def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
     )
     vote_aggs = [
         F.sum(F.expr(f"(h div {1 << j}) % 2 * 2 - 1")).alias(f"v{j}")
-        for j in range(bits)
+        for j in range(32)
     ]
     votes = ids.groupBy("doc_id").agg(*vote_aggs)
     hash_expr = " + ".join(
         f"CASE WHEN v{j} > 0 THEN CAST({1 << j} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
-        for j in range(bits)
+        for j in range(32)
     )
     return votes.select("doc_id", F.expr(hash_expr).alias("simhash"))
 
@@ -403,13 +411,12 @@ def simhash(docs: DataFrame, bits: int = 32) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def contamination(docs: DataFrame, bench_mod: int = 97, n: int = 5,
-                  threshold: float = 0.2) -> DataFrame:
+def contamination(docs: DataFrame) -> DataFrame:
     """Training-data decontamination: flag corpus docs whose n-gram
     shingles overlap an evaluation-benchmark set (the standard
     pre-training hygiene step — e.g. 13-gram overlap in GPT-3's data
-    card; n is a parameter here). The benchmark stand-in is the
-    deterministic slice doc_id % bench_mod == 0; a real benchmark
+    card; CONTAM_NGRAM-grams here). The benchmark stand-in is the
+    deterministic slice doc_id % CONTAM_MOD == 0; a real benchmark
     table joins in exactly the same shape.
 
     Plan shape at 10^12 docs: a hash equi-join on the shingle string;
@@ -421,13 +428,14 @@ def contamination(docs: DataFrame, bench_mod: int = 97, n: int = 5,
     anywhere; the oracle recomputes the identical rates in DuckDB.
 
     Returns (doc_id, n_shingles, n_hits, contamination_rate,
-    contaminated) for every NON-benchmark doc, zero-hit docs included.
+    contaminated) for every NON-benchmark doc, zero-hit docs included;
+    contaminated means a rate of at least CONTAM_THRESHOLD.
     """
-    sh = shingles_df(docs, n=n)
-    bench = sh.filter(F.col("doc_id") % bench_mod == 0).select(
+    sh = shingles_df(docs, n=CONTAM_NGRAM)
+    bench = sh.filter(F.col("doc_id") % CONTAM_MOD == 0).select(
         F.col("tok").alias("btok")
     ).distinct()
-    corpus = sh.filter(F.col("doc_id") % bench_mod != 0)
+    corpus = sh.filter(F.col("doc_id") % CONTAM_MOD != 0)
     totals = corpus.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
     hits = (
         corpus.join(bench, corpus["tok"] == bench["btok"], "inner")
@@ -441,16 +449,15 @@ def contamination(docs: DataFrame, bench_mod: int = 97, n: int = 5,
         "n_shingles",
         "n_hits",
         rate.alias("contamination_rate"),
-        (rate >= threshold).alias("contaminated"),
+        (rate >= CONTAM_THRESHOLD).alias("contaminated"),
     )
 
 
-def sql_contamination(bench_mod: int = 97, n: int = 5,
-                      threshold: float = 0.2) -> str:
+def sql_contamination() -> str:
     return f"""
-      WITH sh AS ({sql_shingles(n)}),
-      bench AS (SELECT DISTINCT tok FROM sh WHERE doc_id % {bench_mod} = 0),
-      corpus AS (SELECT doc_id, tok FROM sh WHERE doc_id % {bench_mod} <> 0),
+      WITH sh AS ({sql_shingles(CONTAM_NGRAM)}),
+      bench AS (SELECT DISTINCT tok FROM sh WHERE doc_id % {CONTAM_MOD} = 0),
+      corpus AS (SELECT doc_id, tok FROM sh WHERE doc_id % {CONTAM_MOD} <> 0),
       totals AS (SELECT doc_id, count(*) AS n_shingles FROM corpus GROUP BY doc_id),
       hits AS (
         SELECT c.doc_id, count(*) AS n_hits
@@ -462,7 +469,7 @@ def sql_contamination(bench_mod: int = 97, n: int = 5,
              round(CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / t.n_shingles, 6)
                AS contamination_rate,
              round(CAST(COALESCE(h.n_hits, 0) AS DOUBLE) / t.n_shingles, 6)
-               >= {threshold} AS contaminated
+               >= {CONTAM_THRESHOLD} AS contaminated
       FROM totals t LEFT JOIN hits h ON t.doc_id = h.doc_id
     """
 
@@ -472,7 +479,7 @@ def sql_contamination(bench_mod: int = 97, n: int = 5,
 # --------------------------------------------------------------------------
 
 
-def connected_components(pairs: DataFrame, max_iters: int = 25,
+def connected_components(pairs: DataFrame,
                          stats: dict | None = None) -> DataFrame:
     """Min-label connected components over an undirected (doc_a,
     doc_b) pair list, such as the near_dup_pairs graph: the step a
@@ -555,12 +562,8 @@ def connected_components(pairs: DataFrame, max_iters: int = 25,
         # sum exact at any id scale.
         return lbl.agg(F.sum(F.col("label").cast("decimal(38,0)"))).collect()[0][0]
 
-    import time as _time
-
-    round_s = []
     # round 0 needs no join at all: initial labels are the identity,
     # so min-of-neighbor-labels == min neighbor id, straight off edges
-    _t0 = _time.time()
     step0 = (
         edges.groupBy(F.col("doc_a").alias("doc_id"))
         .agg(F.min("doc_b").alias("label"))
@@ -569,11 +572,9 @@ def connected_components(pairs: DataFrame, max_iters: int = 25,
     labels = jump(step0)
     prev_sum = potential(labels)
     step0.unpersist()
-    round_s.append(round(_time.time() - _t0, 3))
     rounds = 1
     try:
-        for _ in range(max_iters - 1):
-            _t0 = _time.time()
+        for _ in range(24):  # at most 25 rounds with round 0
             stepped = (
                 edges.join(
                     labels.hint("SHUFFLE_HASH"),
@@ -589,13 +590,11 @@ def connected_components(pairs: DataFrame, max_iters: int = 25,
             labels.unpersist()
             labels = new_labels
             rounds += 1
-            round_s.append(round(_time.time() - _t0, 3))
             if cur_sum == prev_sum:
                 break
             prev_sum = cur_sum
         if stats is not None:
             stats["rounds"] = rounds
-            stats["round_s"] = round_s
         sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
         out = labels.join(sizes, "label").select(
             "doc_id",
@@ -611,7 +610,7 @@ def connected_components(pairs: DataFrame, max_iters: int = 25,
         labels.unpersist()
 
 
-def sql_dup_clusters(threshold: float = 0.5, pairs_sql: str = "") -> str:
+def sql_dup_clusters(pairs_sql: str) -> str:
     """DuckDB oracle twin: transitive closure by recursive CTE (the
     graph at oracle scale is tiny), cluster = min reachable vertex."""
     return f"""
@@ -640,16 +639,16 @@ def sql_dup_clusters(threshold: float = 0.5, pairs_sql: str = "") -> str:
     """
 
 
-def span_dups(docs: DataFrame, window: int = 4, n: int = NGRAM) -> DataFrame:
+def span_dups(docs: DataFrame) -> DataFrame:
     """Cross-document repeated SPANS (the boilerplate-passage case
     exact doc-level dedup misses and doc-level MinHash under-weights):
     a winnowing fingerprint shared by >= 2 documents witnesses a
-    repeated >= n-token passage (the MOSS guarantee), so grouping the
+    repeated >= NGRAM-token passage (the MOSS guarantee), so grouping the
     fingerprint table by fp and keeping multi-doc rows IS the
     published substring-dedup recipe at span granularity. ONE
     map-side-combinable aggregation over the per-doc fingerprint
     stream — no pairwise work, scales with corpus size not corpus^2."""
-    fps = winnow_fingerprints(docs, window=window, n=n)
+    fps = winnow_fingerprints(docs)
     return (
         fps.groupBy("fp")
         .agg(
@@ -661,11 +660,11 @@ def span_dups(docs: DataFrame, window: int = 4, n: int = NGRAM) -> DataFrame:
     )
 
 
-def sql_span_dups(window: int = 4, n: int = NGRAM) -> str:
+def sql_span_dups() -> str:
     return f"""
       SELECT fp, count(*) AS n_docs,
              min(doc_id) AS first_doc, max(doc_id) AS last_doc
-      FROM ({sql_winnow_fingerprints(window=window, n=n)})
+      FROM ({sql_winnow_fingerprints()})
       GROUP BY fp HAVING count(*) >= 2
     """
 

@@ -21,21 +21,18 @@ from ..functions import geocode_exprs as GX
 
 def geocode_points(
     df: DataFrame,
-    id_col: str = "doc_id",
     zoom: int = 3,
     grid_bits: int = 5,
     with_dem_z: bool = True,
 ) -> DataFrame:
-    """Attach (x, y) mercator meters, synthetic z, tile and grid-cell
-    keys at `zoom`. grid_n = 2^grid_bits cells per tile side; the cell
+    """Attach to each doc_id (x, y) mercator meters, synthetic z, tile
+    and grid-cell keys at `zoom`. grid_n = 2^grid_bits cells per tile side; the cell
     key is simply the tile key at zoom+grid_bits (same ceil-1 tie
     rule), so cell→tile is a bit shift."""
-    x_sql = GX.mercator_x_sql(id_col)
-    y_sql = GX.mercator_y_sql(id_col)
     out = (
-        df.withColumn("x", F.expr(x_sql))
-        .withColumn("y", F.expr(y_sql))
-        .withColumn("z_h", F.expr(GX.hash_z_sql(id_col)))
+        df.withColumn("x", F.expr(GX.mercator_x_sql("doc_id")))
+        .withColumn("y", F.expr(GX.mercator_y_sql("doc_id")))
+        .withColumn("z_h", F.expr(GX.hash_z_sql("doc_id")))
         .withColumn("tile_x", F.expr(GX.tile_sql("x", zoom)))
         .withColumn("tile_y", F.expr(GX.tile_sql("y", zoom)))
         .withColumn("cell_x", F.expr(GX.cell_sql("x", zoom, grid_bits)))

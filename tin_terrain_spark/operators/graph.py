@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 DAMPING = 0.85
-N_ITERS = 5
+N_ITERS = 5  # PageRank and HITS rounds
 LINK_MULTS = (7, 13, 31)  # dst_j = (src * mult_j + j + 1) % n_nodes
 
 
@@ -56,7 +56,6 @@ def pagerank(
     edges: DataFrame,
     nodes: DataFrame,
     iters: int = N_ITERS,
-    damping: float = DAMPING,
     n_nodes: int | None = None,
 ) -> DataFrame:
     """PageRank with fixed iteration count over edges(src, dst) and
@@ -97,7 +96,7 @@ def pagerank(
         "node", F.lit(1.0 / n_nodes).alias("rank")
     ).localCheckpoint()
 
-    base = (1.0 - damping) / n_nodes
+    base = (1.0 - DAMPING) / n_nodes
     for _ in range(iters):
         contrib = (
             wedges.join(
@@ -126,24 +125,24 @@ def pagerank(
             mass = F.coalesce(F.col("c"), F.lit(0.0))
         ranks = joined.select(
             "node",
-            (F.lit(base) + F.lit(damping) * mass).alias("rank"),
+            (F.lit(base) + F.lit(DAMPING) * mass).alias("rank"),
         ).localCheckpoint()
     return ranks
 
 
-def sql_pagerank(iters: int = N_ITERS, damping: float = DAMPING) -> str:
+def sql_pagerank() -> str:
     """Unrolled DuckDB twin over the same synthesized multigraph; the
     rank is scaled by n and rounded to 6 dp on both sides so the
     engines' different reduction orders cannot flip the hash."""
     m0, m1, m2 = LINK_MULTS
     prev = "r0"
     iter_ctes = []
-    for t in range(1, iters + 1):
+    for t in range(1, N_ITERS + 1):
         iter_ctes.append(
             f"""r{t} AS (
         SELECT n.node,
-               (1e0 - {damping!r}e0) / p.n
-               + {damping!r}e0 * coalesce(s.c, 0e0) AS rank
+               (1e0 - {DAMPING!r}e0) / p.n
+               + {DAMPING!r}e0 * coalesce(s.c, 0e0) AS rank
         FROM allnodes n CROSS JOIN params p
         LEFT JOIN (
           SELECT e.dst AS node, sum(r.rank * e.w) AS c
@@ -178,18 +177,18 @@ def sql_pagerank(iters: int = N_ITERS, damping: float = DAMPING) -> str:
     """
 
 
-def host_graph(links: DataFrame, src_url: str = "page_url",
-               dst_url: str = "link_url") -> DataFrame:
+def host_graph(links: DataFrame) -> DataFrame:
     """Collapse a page-level link table to the HOST graph — the
-    domain-granularity web graph behind spam/centrality analysis and
+    domain-granularity web graph, from (page_url, link_url) rows,
+    behind spam/centrality analysis and
     crawl budgeting. Pure JVM: parse_url on both endpoints + one
     map-side-combinable aggregate keyed on (src_host, dst_host); at
     10^12 links the combine collapses each partition to its distinct
     host pairs (hosts ~10^7, pairs far fewer than rows) before the
     shuffle. Self-loops (intra-host links) are kept — callers that
     want the inter-host graph filter src_host != dst_host."""
-    src = F.parse_url(F.col(src_url), F.lit("HOST"))
-    dst = F.parse_url(F.col(dst_url), F.lit("HOST"))
+    src = F.parse_url(F.col("page_url"), F.lit("HOST"))
+    dst = F.parse_url(F.col("link_url"), F.lit("HOST"))
     return (
         links.select(src.alias("src_host"), dst.alias("dst_host"))
         .groupBy("src_host", "dst_host")
@@ -197,7 +196,7 @@ def host_graph(links: DataFrame, src_url: str = "page_url",
     )
 
 
-def hits(edges: DataFrame, nodes: DataFrame, iters: int = 5) -> DataFrame:
+def hits(edges: DataFrame, nodes: DataFrame, iters: int = N_ITERS) -> DataFrame:
     """HITS hub/authority scores, fixed iteration count, UNNORMALIZED
     INTEGER form: h0 = 1; a_t(v) = Σ h_{t-1}(u) over in-edges,
     h_t(u) = Σ a_t(v) over out-edges. Skipping the per-round
@@ -263,13 +262,13 @@ def hits(edges: DataFrame, nodes: DataFrame, iters: int = 5) -> DataFrame:
     )
 
 
-def sql_hits(iters: int = 5) -> str:
+def sql_hits() -> str:
     """Unrolled DuckDB twin over the synth_links multigraph — exact
     integer recursion, bit-equal by construction."""
     m0, m1, m2 = LINK_MULTS
     prev_h = "h0"
     ctes = []
-    for t in range(1, iters + 1):
+    for t in range(1, N_ITERS + 1):
         ctes.append(f"""a{t} AS (
         SELECT n.node,
                CAST(coalesce(s.v, 0) AS BIGINT) AS auth
@@ -302,5 +301,5 @@ def sql_hits(iters: int = 5) -> str:
       h0 AS (SELECT node, CAST(1 AS BIGINT) AS hub FROM allnodes),
       {joined}
       SELECT a.node AS doc_id, a.auth, h.hub
-      FROM a{iters} a JOIN h{iters} h ON h.node = a.node
+      FROM a{N_ITERS} a JOIN h{N_ITERS} h ON h.node = a.node
     """

@@ -134,9 +134,7 @@ def html_to_text(html: str) -> str:
 HTML_EXTRACT_SCHEMA = "doc_id BIGINT, extracted STRING"
 
 
-def extract_html(
-    pages: DataFrame, html_col: str = "html", keep_cols: tuple[str, ...] = ()
-) -> DataFrame:
+def extract_html(pages: DataFrame, keep_cols: tuple[str, ...] = ()) -> DataFrame:
     """Distributed extraction: (doc_id, html BINARY) → (doc_id,
     extracted STRING). Map-only Arrow-batched stage; see module
     docstring for why this is the honest Python-path exception.
@@ -157,14 +155,14 @@ def extract_html(
                 html_to_text(
                     h.decode("utf-8", errors="replace") if isinstance(h, (bytes, bytearray)) else str(h)
                 )
-                for h in pdf[html_col]
+                for h in pdf["html"]
             ]
             res = {"doc_id": pdf["doc_id"], "extracted": out}
             for c in keep_cols:
                 res[c] = pdf[c]
             yield pd.DataFrame(res)
 
-    return pages.select("doc_id", html_col, *keep_cols).mapInPandas(op, schema)
+    return pages.select("doc_id", "html", *keep_cols).mapInPandas(op, schema)
 
 
 def _enc_body(text_col):
@@ -302,19 +300,17 @@ def html_links(html: str, base_url: str | None = None) -> list[tuple[str, str]]:
 LINKS_SCHEMA = "doc_id BIGINT, link_url STRING, anchor STRING"
 
 
-def extract_links(
-    pages: DataFrame, html_col: str = "html", url_col: str | None = None
-) -> DataFrame:
+def extract_links(pages: DataFrame, url_col: str | None = None) -> DataFrame:
     """Distributed link harvest: one output row per <a href>. Map-only
     Arrow stage like extract_html; with url_col set, relative hrefs
     are resolved against the page url (crawl-frontier form)."""
-    cols = ["doc_id", html_col] + ([url_col] if url_col else [])
+    cols = ["doc_id", "html"] + ([url_col] if url_col else [])
 
     def op(batches):
         for pdf in batches:
             ids, hrefs, anchors = [], [], []
             bases = pdf[url_col] if url_col else [None] * len(pdf)
-            for doc_id, h, base in zip(pdf["doc_id"], pdf[html_col], bases):
+            for doc_id, h, base in zip(pdf["doc_id"], pdf["html"], bases):
                 raw = (
                     h.decode("utf-8", errors="replace")
                     if isinstance(h, (bytes, bytearray))
@@ -411,15 +407,15 @@ def sniff_decode(data: bytes) -> tuple[str, str]:
 DECODE_SCHEMA = "doc_id BIGINT, text_out STRING, charset STRING"
 
 
-def decode_pages(pages: DataFrame, html_col: str = "html") -> DataFrame:
-    """Distributed bytes→text with charset sniffing (map-only Arrow
+def decode_pages(pages: DataFrame) -> DataFrame:
+    """Distributed html bytes→text with charset sniffing (map-only Arrow
     stage, same shape as extract_html — run this FIRST on raw WARC
     payloads, then feed the text to the extractor)."""
 
     def op(batches):
         for pdf in batches:
             ids, texts, charsets = [], [], []
-            for doc_id, blob in zip(pdf["doc_id"], pdf[html_col]):
+            for doc_id, blob in zip(pdf["doc_id"], pdf["html"]):
                 t, cs = sniff_decode(bytes(blob))
                 ids.append(doc_id)
                 texts.append(t)
@@ -428,7 +424,7 @@ def decode_pages(pages: DataFrame, html_col: str = "html") -> DataFrame:
                 {"doc_id": ids, "text_out": texts, "charset": charsets}
             )
 
-    return pages.select("doc_id", html_col).mapInPandas(op, DECODE_SCHEMA)
+    return pages.select("doc_id", "html").mapInPandas(op, DECODE_SCHEMA)
 
 
 def synth_encoded_pages(docs: DataFrame) -> DataFrame:
@@ -536,36 +532,34 @@ class _MainTextExtractor(_TextExtractor):
         return blocks
 
 
-def html_main_text(html: str, max_link_density: float = 0.5) -> tuple[str, int]:
+def html_main_text(html: str) -> tuple[str, int]:
     """Main-content extraction: the _TextExtractor contract PLUS
-    dropping blocks whose link-char density exceeds max_link_density.
+    dropping blocks whose link-char density exceeds 0.5.
     Returns (main_text, n_dropped_blocks)."""
     p = _MainTextExtractor()
     p.feed(html)
     p.close()
     blocks = p.scored_blocks()
-    kept = [t for t, d in blocks if d <= max_link_density]
+    kept = [t for t, d in blocks if d <= 0.5]
     return "\n".join(kept), len(blocks) - len(kept)
 
 
 MAIN_TEXT_SCHEMA = "doc_id BIGINT, main_text STRING, n_dropped INT"
 
 
-def extract_main_text(
-    pages: DataFrame, html_col: str = "html", max_link_density: float = 0.5
-) -> DataFrame:
+def extract_main_text(pages: DataFrame) -> DataFrame:
     """Distributed main-content extraction (map-only Arrow stage)."""
 
     def op(batches):
         for pdf in batches:
             ids, texts, dropped = [], [], []
-            for doc_id, h in zip(pdf["doc_id"], pdf[html_col]):
+            for doc_id, h in zip(pdf["doc_id"], pdf["html"]):
                 raw = (
                     h.decode("utf-8", errors="replace")
                     if isinstance(h, (bytes, bytearray))
                     else str(h)
                 )
-                t, nd = html_main_text(raw, max_link_density)
+                t, nd = html_main_text(raw)
                 ids.append(doc_id)
                 texts.append(t)
                 dropped.append(nd)
@@ -573,7 +567,7 @@ def extract_main_text(
                 {"doc_id": ids, "main_text": texts, "n_dropped": dropped}
             )
 
-    return pages.select("doc_id", html_col).mapInPandas(op, MAIN_TEXT_SCHEMA)
+    return pages.select("doc_id", "html").mapInPandas(op, MAIN_TEXT_SCHEMA)
 
 
 def synth_boilerplate_html(docs: DataFrame) -> DataFrame:
@@ -602,32 +596,31 @@ def synth_boilerplate_html(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", F.encode(page, "UTF-8").alias("html"))
 
 
-def anchor_text(links: DataFrame, url_col: str = "link_url",
-                anchor_col: str = "anchor") -> DataFrame:
+def anchor_text(links: DataFrame) -> DataFrame:
     """Per-target anchor-text aggregation — the classic web-corpus
-    signal (anchor words describe the TARGET page better than its own
-    text; query-independent relevance + link-spam features). Two
+    signal over (link_url, anchor) rows (anchor words describe the
+    TARGET page better than its own text; query-independent relevance + link-spam features). Two
     map-side-combinable aggs: per (target, anchor) counts, then per
     target pick the most-frequent anchor (ties: lexicographically
     smallest) plus reference/diversity counts. No UDF, no window."""
     per_anchor = (
-        links.groupBy(url_col, anchor_col)
+        links.groupBy("link_url", "anchor")
         .agg(F.count(F.lit(1)).alias("_c"))
     )
     return (
-        per_anchor.groupBy(url_col)
+        per_anchor.groupBy("link_url")
         .agg(
             F.sum("_c").alias("n_refs"),
             F.count(F.lit(1)).alias("n_distinct_anchors"),
             F.min(
-                F.struct((-F.col("_c")).alias("nc"), F.col(anchor_col))
+                F.struct((-F.col("_c")).alias("nc"), F.col("anchor"))
             ).alias("_top"),
         )
         .select(
-            url_col,
+            "link_url",
             "n_refs",
             "n_distinct_anchors",
-            F.col(f"_top.{anchor_col}").alias("top_anchor"),
+            F.col("_top.anchor").alias("top_anchor"),
             (-F.col("_top.nc")).alias("top_anchor_refs"),
         )
     )

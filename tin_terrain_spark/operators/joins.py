@@ -22,8 +22,12 @@ from pyspark.sql import DataFrame, Window as W, functions as F
 
 from ..functions import geocode_exprs as GX
 
+# the query boxes of polygons_df/polygons_sql: count and hash seed
+N_POLYS = 24
+POLY_SEED = 7777
 
-def polygons_df(spark, n: int = 24, seed_base: int = 7777):
+
+def polygons_df(spark, n: int = N_POLYS, seed_base: int = POLY_SEED):
     """Deterministic axis-aligned query boxes derived from the same
     integer hash streams (reproducible in SQL for the oracle)."""
     r = spark.range(n).withColumnRenamed("id", "poly_id")
@@ -38,15 +42,15 @@ def polygons_df(spark, n: int = 24, seed_base: int = 7777):
     )
 
 
-def polygons_sql(n: int = 24, seed_base: int = 7777) -> str:
-    cx = GX.mercator_x_sql(f"(poly_id + {seed_base})")
-    cy = GX.mercator_y_sql(f"(poly_id + {seed_base})")
-    half = f"({GX.dlit(100000.0)} + {GX.dlit(1500000.0)} * {GX.u_hash_sql(f'(poly_id + {seed_base})', 'u3')})"
+def polygons_sql() -> str:
+    cx = GX.mercator_x_sql(f"(poly_id + {POLY_SEED})")
+    cy = GX.mercator_y_sql(f"(poly_id + {POLY_SEED})")
+    half = f"({GX.dlit(100000.0)} + {GX.dlit(1500000.0)} * {GX.u_hash_sql(f'(poly_id + {POLY_SEED})', 'u3')})"
     return f"""
       SELECT poly_id,
              {cx} - {half} AS pmin_x, {cx} + {half} AS pmax_x,
              {cy} - {half} AS pmin_y, {cy} + {half} AS pmax_y
-      FROM (SELECT CAST(range AS BIGINT) AS poly_id FROM range({n}))
+      FROM (SELECT CAST(range AS BIGINT) AS poly_id FROM range({N_POLYS}))
     """
 
 
@@ -325,19 +329,22 @@ OCTAGON = [
     (1.0, 0.0), (_OCT_S, _OCT_S), (0.0, 1.0), (-_OCT_S, _OCT_S),
     (-1.0, 0.0), (-_OCT_S, -_OCT_S), (0.0, -1.0), (_OCT_S, -_OCT_S),
 ]
+# the convex polygons of convex_polygons_df/convex_polygons_sql
+N_CONVEX = 12
+CONVEX_SEED = 4242
 
 
-def convex_polygons_df(spark, n: int = 12, seed_base: int = 4242):
+def convex_polygons_df(spark):
     """Deterministic convex polygons (scaled octagons) as edge rows:
     (poly_id, edge_id, ex1, ey1, ex2, ey2, pmin_x/pmax_x/pmin_y/pmax_y).
     Edge rows instead of ring arrays keep the exact point-in-convex
     test a plain join + min-cross aggregation (no UDF)."""
     from pyspark.sql import functions as F
 
-    r = spark.range(n).withColumnRenamed("id", "poly_id")
-    cx = GX.mercator_x_sql(f"(poly_id + {seed_base})")
-    cy = GX.mercator_y_sql(f"(poly_id + {seed_base})")
-    rad = f"({GX.dlit(200000.0)} + {GX.dlit(2000000.0)} * {GX.u_hash_sql(f'(poly_id + {seed_base})', 'u3')})"
+    r = spark.range(N_CONVEX).withColumnRenamed("id", "poly_id")
+    cx = GX.mercator_x_sql(f"(poly_id + {CONVEX_SEED})")
+    cy = GX.mercator_y_sql(f"(poly_id + {CONVEX_SEED})")
+    rad = f"({GX.dlit(200000.0)} + {GX.dlit(2000000.0)} * {GX.u_hash_sql(f'(poly_id + {CONVEX_SEED})', 'u3')})"
     base = (
         r.withColumn("cx", F.expr(cx))
         .withColumn("cy", F.expr(cy))
@@ -363,10 +370,10 @@ def convex_polygons_df(spark, n: int = 12, seed_base: int = 4242):
     return edges
 
 
-def convex_polygons_sql(n: int = 12, seed_base: int = 4242) -> str:
-    cx = GX.mercator_x_sql(f"(poly_id + {seed_base})")
-    cy = GX.mercator_y_sql(f"(poly_id + {seed_base})")
-    rad = f"({GX.dlit(200000.0)} + {GX.dlit(2000000.0)} * {GX.u_hash_sql(f'(poly_id + {seed_base})', 'u3')})"
+def convex_polygons_sql() -> str:
+    cx = GX.mercator_x_sql(f"(poly_id + {CONVEX_SEED})")
+    cy = GX.mercator_y_sql(f"(poly_id + {CONVEX_SEED})")
+    rad = f"({GX.dlit(200000.0)} + {GX.dlit(2000000.0)} * {GX.u_hash_sql(f'(poly_id + {CONVEX_SEED})', 'u3')})"
     corners = " UNION ALL ".join(
         f"SELECT {i} AS edge_id, {GX.dlit(x1)} AS ox1, {GX.dlit(y1)} AS oy1, "
         f"{GX.dlit(OCTAGON[(i + 1) % 8][0])} AS ox2, {GX.dlit(OCTAGON[(i + 1) % 8][1])} AS oy2"
@@ -379,7 +386,7 @@ def convex_polygons_sql(n: int = 12, seed_base: int = 4242) -> str:
              cx - rad AS pmin_x, cx + rad AS pmax_x,
              cy - rad AS pmin_y, cy + rad AS pmax_y
       FROM (SELECT CAST(range AS BIGINT) AS poly_id, {cx} AS cx, {cy} AS cy, {rad} AS rad
-            FROM range({n})), ({corners})
+            FROM range({N_CONVEX})), ({corners})
     """
 
 

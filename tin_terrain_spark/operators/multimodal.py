@@ -250,12 +250,13 @@ def synth_real_video(docs: DataFrame) -> DataFrame:
 AUDIO_FEATURE_SCHEMA = (
     "doc_id BIGINT, media_type STRING, block INT, bsum DOUBLE, bsq DOUBLE"
 )
+AUDIO_BLOCKS = 8
 
 
-def audio_features(media: DataFrame, blocks: int = 8) -> DataFrame:
-    """WAV decode → per-block waveform energy features, batched via
-    mapInPandas (the Arrow batch is the decode unit, same shape as
-    image_features). Channels are mean-merged; per block: sample sum
+def audio_features(media: DataFrame) -> DataFrame:
+    """WAV decode → per-block waveform energy features over AUDIO_BLOCKS
+    blocks, batched via mapInPandas (the Arrow batch is the decode
+    unit, same shape as image_features). Channels are mean-merged; per block: sample sum
     and sum of squares — both exact dyadic arithmetic, so the whole
     path has a value-exact SQL oracle. Non-WAV payloads fall back to
     the deterministic stub waveform (hash-seeded), mirroring the image
@@ -285,16 +286,16 @@ def audio_features(media: DataFrame, blocks: int = 8) -> DataFrame:
                         seed = int.from_bytes(data[:7], "big")
                     t = np.arange(1, 257, dtype=np.int64)
                     x = ((seed + t * 2654435761) % 65521) / 65536.0
-                hop = len(x) // blocks
+                hop = len(x) // AUDIO_BLOCKS
                 if hop == 0:  # shorter than one sample per block
-                    x = np.pad(x, (0, blocks - len(x)))
+                    x = np.pad(x, (0, AUDIO_BLOCKS - len(x)))
                     hop = 1
-                xb = x[: hop * blocks].reshape(blocks, hop)
+                xb = x[: hop * AUDIO_BLOCKS].reshape(AUDIO_BLOCKS, hop)
                 bs = xb.sum(axis=1)
                 bq = (xb * xb).sum(axis=1)
-                out["doc_id"].extend([int(doc_id)] * blocks)
-                out["media_type"].extend([mtype] * blocks)
-                out["block"].extend(range(blocks))
+                out["doc_id"].extend([int(doc_id)] * AUDIO_BLOCKS)
+                out["media_type"].extend([mtype] * AUDIO_BLOCKS)
+                out["block"].extend(range(AUDIO_BLOCKS))
                 out["bsum"].extend(bs.tolist())
                 out["bsq"].extend(bq.tolist())
             yield pd.DataFrame(out)
@@ -302,13 +303,13 @@ def audio_features(media: DataFrame, blocks: int = 8) -> DataFrame:
     return media.mapInPandas(op, AUDIO_FEATURE_SCHEMA)
 
 
-def extract_text(pages: DataFrame, html_col: str = "html") -> DataFrame:
+def extract_text(pages: DataFrame) -> DataFrame:
     """Inverse of the synth step: strip the wrapper — the byte-identical
     text invariant (BASELINE.md per-row invariant) is asserted on this."""
     return pages.withColumn(
         "text_rt",
         F.decode(
-            F.expr(f"substring({html_col}, 7, length({html_col}) - 13)"), "UTF-8"
+            F.expr("substring(html, 7, length(html) - 13)"), "UTF-8"
         ),
     )
 
@@ -415,37 +416,6 @@ def _decode_real(payload: bytes, width: int, height: int) -> "np.ndarray | None"
     return None
 
 
-def _decode_frame_real(payload: bytes, width: int, height: int,
-                       frame_idx: int) -> "np.ndarray | None":
-    """Real FRAME decode: animated GIF (kernels/gif.py) and MJPEG AVI
-    (kernels/avi.py demux + kernels/jpeg.py per-frame decode) are the
-    multi-frame formats with in-container codecs, so frame sampling is
-    real for both — frame_idx indexes the animation/stream (clamped
-    to the last frame, like a player holding the final still). Returns
-    None for other payloads (caller falls back to the stub)."""
-    from ..kernels import avi as _avi
-    from ..kernels import gif as _gif
-    from ..kernels import png as _png
-
-    if not payload:
-        return None
-    if _gif.is_gif(payload):
-        try:
-            frames = _gif.decode_gif_frames(payload)
-        except ValueError:
-            return None
-        px = _png.to_gray_f32(frames[min(frame_idx, len(frames) - 1)])
-        return px[: min(int(height), 32), : min(int(width), 32)]
-    if _avi.is_avi(payload):
-        try:
-            frame = _avi.decode_avi_frame(payload, frame_idx)
-        except ValueError:
-            return None
-        px = _png.to_gray_f32(np.atleast_3d(frame))
-        return px[: min(int(height), 32), : min(int(width), 32)]
-    return None
-
-
 def _decode_stub(payload: bytes, width: int, height: int, frame_salt: int = 0) -> np.ndarray:
     """STUB decode: deterministic pseudo-pixels from the payload hash.
     Real implementation: PIL.Image.open(io.BytesIO(payload)) — see
@@ -471,20 +441,15 @@ def _decode_stub(payload: bytes, width: int, height: int, frame_salt: int = 0) -
     return px.astype(np.float32)
 
 
-def _decode_pixels(payload: bytes, width: int, height: int, frame_salt: int = 0) -> np.ndarray:
+def _decode_pixels(payload: bytes, width: int, height: int) -> np.ndarray:
     """Decode dispatch: real PIL decode when the library exists AND the
     bytes decode as an image; the deterministic stub otherwise (always
     the case for synth_media's hex-digest payloads, so the oracle gate
-    keeps checking the stub path even in a PIL-equipped image).
-    Frame extraction (frame_salt > 0) is real for animated GIF
-    (_decode_frame_real); other video containers stay stubbed."""
-    if frame_salt == 0:
-        real = _decode_real(payload, width, height)
-    else:
-        real = _decode_frame_real(payload, width, height, frame_salt)
+    keeps checking the stub path even in a PIL-equipped image)."""
+    real = _decode_real(payload, width, height)
     if real is not None:
         return real
-    return _decode_stub(payload, width, height, frame_salt)
+    return _decode_stub(payload, width, height)
 
 
 def image_features(media: DataFrame, dim: int = 16) -> DataFrame:
@@ -516,23 +481,24 @@ def image_features(media: DataFrame, dim: int = 16) -> DataFrame:
 
 
 RESIZE_SCHEMA = "doc_id BIGINT, out_r INT, out_c INT, pval FLOAT"
+RESIZE_OUT = 8
 
 
-def resize_media(media: DataFrame, out: int = 8) -> DataFrame:
-    """Resize (area-pooling) of decoded media to a fixed out x out
-    grid: output cell (i, j) = SUM of source pixels whose block index
-    floor(r*out/H), floor(c*out/W) maps to it. Sum (not mean) keeps the
+def resize_media(media: DataFrame) -> DataFrame:
+    """Resize (area-pooling) of decoded media to a fixed out x out grid,
+    out = RESIZE_OUT: output cell (i, j) = SUM of source pixels whose
+    block index floor(r*out/H), floor(c*out/W) maps to it. Sum (not mean) keeps the
     arithmetic exact in float32, so the whole decode→resize path is
     value-checked against the SQL oracle. Emitted long-form (one row
     per output cell) — the Arrow batch is the decode/resize unit."""
 
     def op(batches):
-        cells = out * out
+        cells = RESIZE_OUT * RESIZE_OUT
         # batch-constant output-cell index columns (row-major), tiled
         # per document — the whole output frame is flat-array built, no
         # per-cell Python objects anywhere in the hot path
-        rr = np.repeat(np.arange(out, dtype=np.int32), out)
-        cc = np.tile(np.arange(out, dtype=np.int32), out)
+        rr = np.repeat(np.arange(RESIZE_OUT, dtype=np.int32), RESIZE_OUT)
+        cc = np.tile(np.arange(RESIZE_OUT, dtype=np.int32), RESIZE_OUT)
         for pdf in batches:
             n = len(pdf)
             pooled_all = np.empty((n, cells), dtype=np.float64)
@@ -543,9 +509,9 @@ def resize_media(media: DataFrame, out: int = 8) -> DataFrame:
                     bytes(payload) if payload is not None else b"", int(w), int(h)
                 )
                 hh, ww = px.shape
-                ri = (np.arange(hh) * out) // hh
-                ci = (np.arange(ww) * out) // ww
-                pooled = np.zeros((out, out), dtype=np.float64)
+                ri = (np.arange(hh) * RESIZE_OUT) // hh
+                ci = (np.arange(ww) * RESIZE_OUT) // ww
+                pooled = np.zeros((RESIZE_OUT, RESIZE_OUT), dtype=np.float64)
                 np.add.at(pooled, (ri[:, None], ci[None, :]), px.astype(np.float64))
                 pooled_all[k] = pooled.reshape(-1)
             yield pd.DataFrame(

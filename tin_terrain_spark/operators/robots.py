@@ -221,7 +221,7 @@ SITEMAP_SCHEMA = (
 )
 
 
-def sitemap_urls(sitemaps: DataFrame, xml_col: str = "sitemap_xml") -> DataFrame:
+def sitemap_urls(sitemaps: DataFrame) -> DataFrame:
     """(host, sitemap_xml) → one row per discovered url. Map-only
     Arrow stage; sitemap files are per-host and small, discovery
     parallelism is per-file like the WARC scan."""
@@ -230,7 +230,7 @@ def sitemap_urls(sitemaps: DataFrame, xml_col: str = "sitemap_xml") -> DataFrame
         for pdf in batches:
             out = {"host": [], "loc": [], "lastmod_epoch": [],
                    "priority": [], "is_index": []}
-            for host, xml in zip(pdf["host"], pdf[xml_col]):
+            for host, xml in zip(pdf["host"], pdf["sitemap_xml"]):
                 for rec in parse_sitemap(xml):
                     out["host"].append(host)
                     out["loc"].append(rec["loc"])
@@ -239,7 +239,7 @@ def sitemap_urls(sitemaps: DataFrame, xml_col: str = "sitemap_xml") -> DataFrame
                     out["is_index"].append(rec["is_index"])
             yield pd.DataFrame(out)
 
-    return sitemaps.select("host", xml_col).mapInPandas(op, SITEMAP_SCHEMA)
+    return sitemaps.select("host", "sitemap_xml").mapInPandas(op, SITEMAP_SCHEMA)
 
 
 # --------------------------------------------------------------------------
@@ -251,23 +251,21 @@ def frontier_schedule(
     frontier: DataFrame,
     n_fetchers: int = 64,
     base_epoch: int = 0,
-    delay_col: str = "crawl_delay",
     priority_col: str | None = "priority",
-    order_col: str = "url",
 ) -> DataFrame:
     """Turn a crawl frontier (url, host, crawl_delay[, priority]) into
     a politeness-respecting fetch plan: every url gets a fetcher slot
     (stable hash of its host — all requests to one host go through ONE
     fetcher, so the spacing guarantee survives distribution) and a
     fetch_epoch spaced crawl_delay seconds apart within the host,
-    highest priority first. Pure JVM plan: one hash, one per-host
-    window (rank is per-host sequence — skew-bounded because a
+    highest priority first, then by url. Pure JVM plan: one hash, one
+    per-host window (rank is per-host sequence — skew-bounded because a
     mega-host's rows land on one partition of the window shuffle but
     politeness serializes that host anyway; the work bound is the
     frontier's largest single host, which is inherent to the
     semantics, not the plan)."""
     order = [F.col(priority_col).desc()] if priority_col else []
-    w = Window.partitionBy("host").orderBy(*order, F.col(order_col))
+    w = Window.partitionBy("host").orderBy(*order, F.col("url"))
     seq = F.row_number().over(w)
     return (
         frontier.withColumn("fetcher", F.pmod(F.xxhash64(F.col("host")), F.lit(n_fetchers)).cast("int"))
@@ -276,7 +274,7 @@ def frontier_schedule(
             "fetch_epoch",
             (
                 F.lit(base_epoch)
-                + (F.col("host_seq") - 1).cast("bigint") * F.col(delay_col).cast("bigint")
+                + (F.col("host_seq") - 1).cast("bigint") * F.col("crawl_delay").cast("bigint")
             ).cast("bigint"),
         )
     )
@@ -310,13 +308,9 @@ def _parse_level(frontier: DataFrame) -> DataFrame:
     return frontier.mapInPandas(op, SITEMAP_TREE_SCHEMA)
 
 
-def expand_sitemap_tree(
-    files: DataFrame,
-    url_col: str = "sitemap_url",
-    xml_col: str = "sitemap_xml",
-    max_depth: int = 3,
-) -> DataFrame:
-    """Recursive sitemap discovery: parse every root sitemap; entries
+def expand_sitemap_tree(files: DataFrame, max_depth: int = 3) -> DataFrame:
+    """Recursive sitemap discovery over (sitemap_url, sitemap_xml)
+    files: parse every root sitemap; entries
     of a sitemapindex are FOLLOWED (equi-join of the child loc back to
     the files table), plain urlset entries are emitted as leaves with
     their depth. The loop is UNROLLED max_depth times into one
@@ -331,8 +325,8 @@ def expand_sitemap_tree(
     would duplicate leaves up to max_depth, as in a real crawler's
     bounded frontier)."""
     frontier = files.select(
-        F.col(url_col).alias("root_url"),
-        F.col(xml_col).alias("_xml"),
+        F.col("sitemap_url").alias("root_url"),
+        F.col("sitemap_xml").alias("_xml"),
         F.lit(0).alias("depth"),
     )
     leaves = None
@@ -345,7 +339,8 @@ def expand_sitemap_tree(
             .select("root_url", "loc", "depth")
             .join(
                 files.select(
-                    F.col(url_col).alias("loc"), F.col(xml_col).alias("_xml")
+                    F.col("sitemap_url").alias("loc"),
+                    F.col("sitemap_xml").alias("_xml"),
                 ),
                 "loc",
             )
@@ -420,10 +415,10 @@ def parse_robots_meta(text: str, agent: str = "*") -> dict:
     }
 
 
-def robots_meta(robots: DataFrame, agent: str = "*") -> DataFrame:
-    """(host, robots_txt) → per-host crawl metadata: one row per
-    discovered sitemap url (or a single NULL-sitemap row when none),
-    each carrying the applicable group's crawl_delay. Feeds
+def robots_meta(robots: DataFrame) -> DataFrame:
+    """(host, robots_txt) → per-host crawl metadata for agent `*`: one
+    row per discovered sitemap url (or a single NULL-sitemap row when
+    none), each carrying the applicable group's crawl_delay. Feeds
     frontier_schedule (delay) and expand_sitemap_tree (roots) — the
     missing edge between the policy file and the politeness/discovery
     operators. Map-only Arrow stage like robots_rules."""
@@ -432,7 +427,7 @@ def robots_meta(robots: DataFrame, agent: str = "*") -> DataFrame:
         for pdf in batches:
             hosts, delays, sms = [], [], []
             for host, txt in zip(pdf["host"], pdf["robots_txt"]):
-                meta = parse_robots_meta(str(txt), agent)
+                meta = parse_robots_meta(str(txt))
                 targets = meta["sitemaps"] or [None]
                 for sm in targets:
                     hosts.append(host)

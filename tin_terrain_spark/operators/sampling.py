@@ -17,9 +17,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-# default mixing rates (percent) per language stratum
-DEFAULT_RATES = {"en": 50, "de": 30, "fr": 30}
-DEFAULT_RATE_OTHER = 10
+# mixing rates (percent) per language stratum, and for every other one
+RATES = {"en": 50, "de": 30, "fr": 30}
+RATE_OTHER = 10
 
 
 def _hash_pct(col):
@@ -34,41 +34,35 @@ def sql_hash_pct(expr: str) -> str:
     return f"(CAST(concat('0x', substr(md5(CAST({expr} AS VARCHAR)), 1, 14)) AS BIGINT) % 100)"
 
 
-def _rate_col(rates: dict, other: int):
-    c = F.lit(other)
-    for lang, r in sorted(rates.items()):
+def _rate_col():
+    c = F.lit(RATE_OTHER)
+    for lang, r in sorted(RATES.items()):
         c = F.when(F.col("lang") == lang, F.lit(r)).otherwise(c)
     return c
 
 
-def sql_rate(rates: dict, other: int) -> str:
+def sql_rate() -> str:
     whens = " ".join(
-        f"WHEN lang = '{lang}' THEN {r}" for lang, r in sorted(rates.items())
+        f"WHEN lang = '{lang}' THEN {r}" for lang, r in sorted(RATES.items())
     )
-    return f"(CASE {whens} ELSE {other} END)"
+    return f"(CASE {whens} ELSE {RATE_OTHER} END)"
 
 
-def stratified_sample(
-    docs: DataFrame, rates: dict | None = None, rate_other: int = DEFAULT_RATE_OTHER
-) -> DataFrame:
+def stratified_sample(docs: DataFrame) -> DataFrame:
     """Rows kept iff hash_pct(doc_id) < rate(lang). Pure Column exprs —
     the filter pushes to the scan, no shuffle, no state."""
-    rates = DEFAULT_RATES if rates is None else rates
     h = _hash_pct(F.col("doc_id"))
     return (
         docs.withColumn("h_pct", h)
-        .filter(F.col("h_pct") < _rate_col(rates, rate_other))
+        .filter(F.col("h_pct") < _rate_col())
         .select("doc_id", "lang", "h_pct")
     )
 
 
-def sample_profile(
-    docs: DataFrame, rates: dict | None = None, rate_other: int = DEFAULT_RATE_OTHER
-) -> DataFrame:
+def sample_profile(docs: DataFrame) -> DataFrame:
     """Per-lang mixing report: total, sampled, realized rate."""
-    rates = DEFAULT_RATES if rates is None else rates
     h = _hash_pct(F.col("doc_id"))
-    kept = (h < _rate_col(rates, rate_other)).cast("int")
+    kept = (h < _rate_col()).cast("int")
     return docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_total"),
         F.sum(kept).alias("n_sampled"),
@@ -76,32 +70,29 @@ def sample_profile(
     )
 
 
-def sql_stratified_sample(rates: dict | None = None, other: int = DEFAULT_RATE_OTHER) -> str:
-    rates = DEFAULT_RATES if rates is None else rates
+def sql_stratified_sample() -> str:
     h = sql_hash_pct("doc_id")
     return f"""
       SELECT doc_id, lang, {h} AS h_pct
       FROM documents
-      WHERE {h} < {sql_rate(rates, other)}
+      WHERE {h} < {sql_rate()}
     """
 
 
-def sql_sample_profile(rates: dict | None = None, other: int = DEFAULT_RATE_OTHER) -> str:
-    rates = DEFAULT_RATES if rates is None else rates
+def sql_sample_profile() -> str:
     h = sql_hash_pct("doc_id")
     return f"""
       SELECT lang, count(*) AS n_total,
-             CAST(sum(CASE WHEN {h} < {sql_rate(rates, other)} THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled,
-             round(CAST(sum(CASE WHEN {h} < {sql_rate(rates, other)} THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) AS realized_rate
+             CAST(sum(CASE WHEN {h} < {sql_rate()} THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled,
+             round(CAST(sum(CASE WHEN {h} < {sql_rate()} THEN 1 ELSE 0 END) AS DOUBLE) / count(*), 6) AS realized_rate
       FROM documents GROUP BY lang
     """
 
 
-def host_quota(pages: DataFrame, per_host: int = 3,
-               host_col: str = "host", order_col: str = "doc_id") -> DataFrame:
+def host_quota(pages: DataFrame, per_host: int = 3) -> DataFrame:
     """Per-host document cap — the anti-mega-host mixing primitive: no
     single host may contribute more than `per_host` docs to the
-    training mix. Deterministic: keeps the `per_host` LOWEST order_col
+    training mix. Deterministic: keeps the `per_host` LOWEST doc_id
     values per host.
 
     100 TB shape: a rank-filtered window over (host), which Spark
@@ -109,7 +100,7 @@ def host_quota(pages: DataFrame, per_host: int = 3,
     map-side BEFORE the shuffle, so a 10^8-page mega-host ships only
     k rows per input partition, not its whole tail. This is the same
     bounded-skew pattern as the kNN top-k."""
-    w = Window.partitionBy(host_col).orderBy(F.col(order_col).asc())
+    w = Window.partitionBy("host").orderBy(F.col("doc_id").asc())
     return (
         pages.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= per_host)
@@ -118,14 +109,15 @@ def host_quota(pages: DataFrame, per_host: int = 3,
 
 
 MIX_WEIGHTS = {"en": 0.6, "de": 0.25}  # remaining mass → 'other'
+MIX_BUDGET = 50_000  # tokens
+OTHER_MASS = 1.0 - sum(MIX_WEIGHTS.values())
 
 
-def mix_plan(docs: DataFrame, budget_tokens: int = 50_000,
-             weights: dict | None = None) -> DataFrame:
+def mix_plan(docs: DataFrame) -> DataFrame:
     """Mixture planner — derives the per-language sampling rates that
     `stratified_sample` then applies: given target mixture weights and
     a global token budget, rate_s = min(1, budget * w_s / tokens_s),
-    with every language outside `weights` pooled into the remaining
+    with every language outside MIX_WEIGHTS pooled into the remaining
     'other' mass (split proportionally to availability). Reports per
     stratum: available tokens, target share, the rate, and the
     expected token yield — the artifact a data-mixing run records.
@@ -134,21 +126,15 @@ def mix_plan(docs: DataFrame, budget_tokens: int = 50_000,
     (token counts are row-wise expressions), then a broadcast of the
     tiny per-stratum table through the rate arithmetic — no second
     scan; the planner's output is O(#languages)."""
-    weights = MIX_WEIGHTS if weights is None else weights
-    named_mass = sum(weights.values())
-    if not 0.0 <= named_mass <= 1.0:
-        raise ValueError(f"mixture weights sum to {named_mass}, must be in [0, 1]")
-    other_mass = 1.0 - named_mass
-
     per_lang = docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size(F.split(F.col("text"), " "))).alias("tokens_avail"),
     )
     named = F.create_map(
-        *[F.lit(x) for kv in weights.items() for x in kv]
+        *[F.lit(x) for kv in MIX_WEIGHTS.items() for x in kv]
     )
     # unnamed strata split the 'other' mass proportionally to their
-    # availability: w_s = other_mass * tokens_s / tokens_other_total
+    # availability: w_s = OTHER_MASS * tokens_s / tokens_other_total
     tagged = per_lang.withColumn("named_w", named[F.col("lang")])
     other_tot = tagged.filter(F.col("named_w").isNull()).agg(
         F.coalesce(F.sum("tokens_avail"), F.lit(0)).cast("double").alias("other_tokens")
@@ -157,13 +143,13 @@ def mix_plan(docs: DataFrame, budget_tokens: int = 50_000,
         "target_share",
         F.coalesce(
             F.col("named_w"),
-            F.lit(other_mass) * F.col("tokens_avail") / F.col("other_tokens"),
+            F.lit(OTHER_MASS) * F.col("tokens_avail") / F.col("other_tokens"),
         ),
     ).withColumn(
         "rate",
         F.least(
             F.lit(1.0),
-            F.lit(float(budget_tokens)) * F.col("target_share") / F.col("tokens_avail"),
+            F.lit(float(MIX_BUDGET)) * F.col("target_share") / F.col("tokens_avail"),
         ),
     )
     return planned.select(
@@ -176,11 +162,9 @@ def mix_plan(docs: DataFrame, budget_tokens: int = 50_000,
     )
 
 
-def sql_mix_plan(budget_tokens: int = 50_000, weights: dict | None = None) -> str:
-    weights = MIX_WEIGHTS if weights is None else weights
-    other_mass = 1.0 - sum(weights.values())
+def sql_mix_plan() -> str:
     named_case = " ".join(
-        f"WHEN '{k}' THEN {v!r}e0" for k, v in weights.items()
+        f"WHEN '{k}' THEN {v!r}e0" for k, v in MIX_WEIGHTS.items()
     )
     return f"""
       WITH per_lang AS (
@@ -196,14 +180,14 @@ def sql_mix_plan(budget_tokens: int = 50_000, weights: dict | None = None) -> st
       planned AS (
         SELECT lang, n_docs, tokens_avail,
                coalesce(named_w,
-                        {other_mass!r}e0 * tokens_avail / other_tokens)
+                        {OTHER_MASS!r}e0 * tokens_avail / other_tokens)
                  AS target_share
         FROM per_lang, other_tot
       )
       SELECT lang, n_docs, tokens_avail,
              round(target_share, 6) AS target_share,
-             round(least(1e0, {float(budget_tokens)!r}e0 * target_share / tokens_avail), 6) AS rate,
-             round(least(1e0, {float(budget_tokens)!r}e0 * target_share / tokens_avail)
+             round(least(1e0, {float(MIX_BUDGET)!r}e0 * target_share / tokens_avail), 6) AS rate,
+             round(least(1e0, {float(MIX_BUDGET)!r}e0 * target_share / tokens_avail)
                    * tokens_avail, 3) AS expected_tokens
       FROM planned
     """

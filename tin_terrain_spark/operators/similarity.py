@@ -16,6 +16,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
+# queries (vec_id < N_QUERIES) and results per query of the ANN operators
+N_QUERIES = 8
+TOP_K = 10
+# SRP hashing: SRP_TABLES tables of SRP_PLANES hyperplanes each
+SRP_TABLES = 4
+SRP_PLANES = 4
+# IVF: IVF_CENT centroids, each query probes its IVF_PROBE nearest
+IVF_CENT = 16
+IVF_PROBE = 4
+# embed_near_dup: cosine threshold and the hot-bucket cap
+EMB_DUP_THRESHOLD = 0.35
+EMB_BUCKET_CAP = 200
+
 DOT = "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
 
 
@@ -23,7 +36,7 @@ def _norm_sql(col: str) -> str:
     return f"SQRT({DOT.format(a=col, b=col)})"
 
 
-def ann_brute(emb: DataFrame, n_queries: int = 8, k: int = 10) -> DataFrame:
+def ann_brute(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K) -> DataFrame:
     """Exact brute-force cosine top-k for the first n_queries vectors."""
     # norms once per vector / per query, not per pair (same values,
     # factored out of the O(n x queries) pair stream)
@@ -47,22 +60,22 @@ def ann_brute(emb: DataFrame, n_queries: int = 8, k: int = 10) -> DataFrame:
     )
 
 
-def srp_buckets(emb: DataFrame, n_tables: int = 4, planes_per_table: int = 4) -> DataFrame:
+def srp_buckets(emb: DataFrame) -> DataFrame:
     """Multi-table sign-random-projection: per table t, bucket bit p =
     sign(<v, h_{t,p}>), hyperplane weight for dim d =
     ((d * (t*P+p+1) * 2654435761) mod 65521) - 32760 (deterministic
-    integer pseudo-hyperplanes). One row per (vec_id, table, bucket) —
-    a long layout that joins as a plain equi-key.
+    integer pseudo-hyperplanes, P = SRP_PLANES). One row per (vec_id,
+    table, bucket) — a long layout that joins as a plain equi-key.
 
-    All tables are computed in ONE projection over ONE scan and
-    unpivoted with posexplode (the earlier n_tables-way unionAll
+    All SRP_TABLES tables are computed in ONE projection over ONE scan and
+    unpivoted with posexplode (the earlier table-per-branch unionAll
     re-scanned the input per table and quadrupled the plan that
     Catalyst has to analyze on every fresh build)."""
     buckets = []
-    for t in range(n_tables):
+    for t in range(SRP_TABLES):
         bits = []
-        for p in range(planes_per_table):
-            seed = t * planes_per_table + p + 1
+        for p in range(SRP_PLANES):
+            seed = t * SRP_PLANES + p + 1
             w_expr = (
                 f"aggregate(zip_with(embedding, sequence(1, size(embedding)), "
                 f"(x, d) -> CAST(x AS DOUBLE) * (CAST((d * {seed} * 2654435761) % 65521 AS DOUBLE) - 32760.0)), "
@@ -80,15 +93,12 @@ def srp_buckets(emb: DataFrame, n_tables: int = 4, planes_per_table: int = 4) ->
     )
 
 
-def ann_lsh(
-    emb: DataFrame, n_queries: int = 8, k: int = 10,
-    n_tables: int = 4, planes_per_table: int = 4,
-) -> DataFrame:
+def ann_lsh(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K) -> DataFrame:
     """LSH-bucketed ANN: candidates = vectors sharing ANY table's bucket
     with the query (equi-join on (table, bucket) — shuffle-free with
     broadcast queries), deduped, exact cosine refine + top-k.
     Approximate by design; recall vs ann_brute asserted in tests."""
-    b = srp_buckets(emb, n_tables, planes_per_table)
+    b = srp_buckets(emb)
     qb = b.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("q_id"), "table_id", "bucket"
     )
@@ -120,9 +130,9 @@ def ann_lsh(
 L2 = "aggregate(zip_with({a}, {b}, (x, y) -> (CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * (CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
 
 
-def ivf_centroids(emb: DataFrame, n_cent: int = 16, iters: int = 1) -> DataFrame:
+def ivf_centroids(emb: DataFrame) -> DataFrame:
     """Deterministic IVF coarse quantizer: centroids seeded from the
-    first n_cent vectors, refined by `iters` Lloyd steps (assign by L2,
+    first IVF_CENT vectors, refined by one Lloyd step (assign by L2,
     recompute per-dimension means). Everything is DataFrame ops —
     assignment is a broadcast distance join + argmin window (partitioned
     by vec_id), the mean recompute is posexplode → groupBy(centroid,
@@ -130,39 +140,37 @@ def ivf_centroids(emb: DataFrame, n_cent: int = 16, iters: int = 1) -> DataFrame
     (order-dependent) double sums agree bit-wise with the SQL oracle.
 
     Returns (centroid_id, centroid ARRAY<DOUBLE>)."""
-    cent = emb.filter(F.col("vec_id") < n_cent).select(
+    seed = emb.filter(F.col("vec_id") < IVF_CENT).select(
         F.col("vec_id").alias("centroid_id"),
         F.expr("transform(embedding, x -> CAST(x AS DOUBLE))").alias("centroid"),
     )
-    for _ in range(iters):
-        d2 = F.expr(L2.format(a="embedding", b="centroid"))
-        asg = (
-            emb.crossJoin(F.broadcast(cent))
-            .withColumn("d2", F.round(d2, 6))
-            .withColumn(
-                "rk",
-                F.row_number().over(
-                    W.partitionBy("vec_id").orderBy(F.col("d2").asc(), F.col("centroid_id").asc())
-                ),
-            )
-            .filter(F.col("rk") == 1)
-            .select("vec_id", "centroid_id", "embedding")
+    d2 = F.expr(L2.format(a="embedding", b="centroid"))
+    asg = (
+        emb.crossJoin(F.broadcast(seed))
+        .withColumn("d2", F.round(d2, 6))
+        .withColumn(
+            "rk",
+            F.row_number().over(
+                W.partitionBy("vec_id").orderBy(F.col("d2").asc(), F.col("centroid_id").asc())
+            ),
         )
-        dims = asg.select(
-            "centroid_id", F.posexplode("embedding").alias("dim", "val")
+        .filter(F.col("rk") == 1)
+        .select("vec_id", "centroid_id", "embedding")
+    )
+    dims = asg.select(
+        "centroid_id", F.posexplode("embedding").alias("dim", "val")
+    )
+    means = dims.groupBy("centroid_id", "dim").agg(
+        F.round(F.avg(F.col("val").cast("double")), 5).alias("m")
+    )
+    return (
+        means.groupBy("centroid_id")
+        .agg(
+            F.expr(
+                "transform(array_sort(collect_list(struct(dim, m))), s -> s.m)"
+            ).alias("centroid")
         )
-        means = dims.groupBy("centroid_id", "dim").agg(
-            F.round(F.avg(F.col("val").cast("double")), 5).alias("m")
-        )
-        cent = (
-            means.groupBy("centroid_id")
-            .agg(
-                F.expr(
-                    "transform(array_sort(collect_list(struct(dim, m))), s -> s.m)"
-                ).alias("centroid")
-            )
-        )
-    return cent
+    )
 
 
 def assign_ivf(emb: DataFrame, cent: DataFrame) -> DataFrame:
@@ -182,17 +190,14 @@ def assign_ivf(emb: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
-def ann_ivf(
-    emb: DataFrame, n_queries: int = 8, k: int = 10,
-    n_cent: int = 16, n_probe: int = 4, iters: int = 1,
-) -> DataFrame:
+def ann_ivf(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K) -> DataFrame:
     """IVF-probed ANN (the charter's IVF scale path, alongside the
-    SRP-LSH variant): queries probe their n_probe nearest centroids,
+    SRP-LSH variant): queries probe their IVF_PROBE nearest centroids,
     candidates come from those inverted lists only (equi-join on
-    centroid_id — at 10^12 rows this scans n_probe/n_cent of the
+    centroid_id — at 10^12 rows this scans IVF_PROBE/IVF_CENT of the
     corpus), exact cosine refine + top-k. Fully deterministic →
     sql_ann_ivf oracle."""
-    cent = ivf_centroids(emb, n_cent, iters)
+    cent = ivf_centroids(emb)
     asg = assign_ivf(emb, cent)
 
     q = emb.filter(F.col("vec_id") < n_queries).select(
@@ -208,7 +213,7 @@ def ann_ivf(
                 W.partitionBy("q_id").orderBy(F.col("d2").asc(), F.col("centroid_id").asc())
             ),
         )
-        .filter(F.col("rk") <= n_probe)
+        .filter(F.col("rk") <= IVF_PROBE)
         .select("q_id", "centroid_id")
     )
     cand_ids = (
@@ -233,11 +238,9 @@ def ann_ivf(
     )
 
 
-def sql_ann_ivf(
-    n_queries: int = 8, k: int = 10, n_cent: int = 16, n_probe: int = 4,
-) -> str:
-    """DuckDB twin of ann_ivf with iters=1 (seed → one Lloyd step →
-    assign → probe → refine)."""
+def sql_ann_ivf() -> str:
+    """DuckDB twin of ann_ivf (seed → one Lloyd step → assign → probe
+    → refine)."""
     l2 = (
         "list_sum(list_transform(list_zip({a}, {b}), "
         "z -> (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE)) * (CAST(z[1] AS DOUBLE) - CAST(z[2] AS DOUBLE))))"
@@ -246,7 +249,7 @@ def sql_ann_ivf(
       WITH seed AS (
         SELECT vec_id AS centroid_id,
                list_transform(embedding, x -> CAST(x AS DOUBLE)) AS centroid
-        FROM embeddings WHERE vec_id < {n_cent}
+        FROM embeddings WHERE vec_id < {IVF_CENT}
       ), asg0 AS (
         SELECT vec_id, centroid_id, embedding FROM (
           SELECT e.vec_id, s.centroid_id, e.embedding,
@@ -272,14 +275,14 @@ def sql_ann_ivf(
           FROM embeddings e, cent c
         ) WHERE rk = 1
       ), q AS (
-        SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < {n_queries}
+        SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < {N_QUERIES}
       ), probes AS (
         SELECT q_id, centroid_id FROM (
           SELECT q.q_id, c.centroid_id,
                  row_number() OVER (PARTITION BY q.q_id
                    ORDER BY round({l2.format(a='q.q_emb', b='c.centroid')}, 6) ASC, c.centroid_id ASC) AS rk
           FROM q, cent c
-        ) WHERE rk <= {n_probe}
+        ) WHERE rk <= {IVF_PROBE}
       ), cand AS (
         SELECT DISTINCT p.q_id, a.vec_id
         FROM asg a JOIN probes p USING (centroid_id)
@@ -298,26 +301,24 @@ def sql_ann_ivf(
         SELECT q_id, vec_id, round(dot / (nv * nq), 4) AS score,
                CAST(row_number() OVER (PARTITION BY q_id ORDER BY round(dot / (nv * nq), 4) DESC, vec_id ASC) AS INT) AS rank
         FROM pairs
-      ) WHERE rank <= {k}
+      ) WHERE rank <= {TOP_K}
     """
 
 
-def embed_near_dup(
-    emb: DataFrame, threshold: float = 0.35,
-    n_tables: int = 4, planes_per_table: int = 4, bucket_cap: int = 200,
-) -> DataFrame:
+def embed_near_dup(emb: DataFrame) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (the charter's
-    embedding-based dedup method): SRP buckets → capped bucket
-    self-join → exact cosine refine ≥ threshold. The bucket join is the
+    embedding-based dedup method): SRP buckets → bucket self-join
+    capped at EMB_BUCKET_CAP members → exact cosine refine ≥
+    EMB_DUP_THRESHOLD. The bucket join is the
     O(n) scale path (candidates only among bucket-mates, hot buckets
     dropped); exact cosine keeps the emitted pairs precise. Fully
     deterministic → SQL-twin oracle (sql_embed_near_dup)."""
     from pyspark.sql import Window as W
 
-    b = srp_buckets(emb, n_tables, planes_per_table)
+    b = srp_buckets(emb)
     sized = b.withColumn(
         "_bsz", F.count(F.lit(1)).over(W.partitionBy("table_id", "bucket"))
-    ).filter(F.col("_bsz") <= bucket_cap)
+    ).filter(F.col("_bsz") <= EMB_BUCKET_CAP)
     a = sized.select(F.col("vec_id").alias("vec_a"), "table_id", "bucket")
     bb = sized.select(F.col("vec_id").alias("vec_b"), "table_id", "bucket")
     cand = (
@@ -341,20 +342,17 @@ def embed_near_dup(
     cos = dot / (F.col("norm_a") * F.col("norm_b"))
     return (
         pairs.withColumn("score", F.round(cos, 4))
-        .filter(F.col("score") >= threshold)
+        .filter(F.col("score") >= EMB_DUP_THRESHOLD)
         .select("vec_a", "vec_b", "score")
     )
 
 
-def sql_embed_near_dup(
-    threshold: float = 0.35,
-    n_tables: int = 4, planes_per_table: int = 4, bucket_cap: int = 200,
-) -> str:
+def sql_embed_near_dup() -> str:
     return f"""
       WITH planes AS (
-        SELECT t AS table_id, p, t * {planes_per_table} + p + 1 AS seed
-        FROM (SELECT unnest(range(0, {n_tables})) AS t),
-             (SELECT unnest(range(0, {planes_per_table})) AS p)
+        SELECT t AS table_id, p, t * {SRP_PLANES} + p + 1 AS seed
+        FROM (SELECT unnest(range(0, {SRP_TABLES})) AS t),
+             (SELECT unnest(range(0, {SRP_PLANES})) AS p)
       ), proj AS (
         SELECT e.vec_id, pl.table_id, pl.p,
                list_sum(list_transform(list_zip(e.embedding, range(1, len(e.embedding) + 1)),
@@ -371,7 +369,7 @@ def sql_embed_near_dup(
       ), cand AS (
         SELECT DISTINCT a.vec_id AS vec_a, b.vec_id AS vec_b
         FROM sized a JOIN sized b ON a.table_id = b.table_id AND a.bucket = b.bucket
-        WHERE a.vec_id < b.vec_id AND a.bsz <= {bucket_cap}
+        WHERE a.vec_id < b.vec_id AND a.bsz <= {EMB_BUCKET_CAP}
       )
       SELECT c.vec_a, c.vec_b,
              round(
@@ -388,21 +386,19 @@ def sql_embed_near_dup(
                         pr -> CAST(pr[1] AS DOUBLE) * CAST(pr[2] AS DOUBLE)))
                / (sqrt(list_sum(list_transform(ea.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
                   * sqrt(list_sum(list_transform(eb.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-               4) >= {threshold}
+               4) >= {EMB_DUP_THRESHOLD}
     """
 
 
-def sql_ann_lsh(
-    n_queries: int = 8, k: int = 10, n_tables: int = 4, planes_per_table: int = 4,
-) -> str:
+def sql_ann_lsh() -> str:
     """DuckDB oracle for the SRP-bucketed ANN: the bucketing is exact
     integer pseudo-hyperplane math (srp_buckets), so candidates — and
     therefore the refined top-k — are reproducible in plain SQL."""
     return f"""
       WITH planes AS (
-        SELECT t AS table_id, p, t * {planes_per_table} + p + 1 AS seed
-        FROM (SELECT unnest(range(0, {n_tables})) AS t),
-             (SELECT unnest(range(0, {planes_per_table})) AS p)
+        SELECT t AS table_id, p, t * {SRP_PLANES} + p + 1 AS seed
+        FROM (SELECT unnest(range(0, {SRP_TABLES})) AS t),
+             (SELECT unnest(range(0, {SRP_PLANES})) AS p)
       ), proj AS (
         SELECT e.vec_id, pl.table_id, pl.p,
                list_sum(list_transform(list_zip(e.embedding, range(1, len(e.embedding) + 1)),
@@ -413,7 +409,7 @@ def sql_ann_lsh(
                CAST(sum(CASE WHEN proj >= 0 THEN 1 << p ELSE 0 END) AS BIGINT) AS bucket
         FROM proj GROUP BY vec_id, table_id
       ), qb AS (
-        SELECT vec_id AS q_id, table_id, bucket FROM buckets WHERE vec_id < {n_queries}
+        SELECT vec_id AS q_id, table_id, bucket FROM buckets WHERE vec_id < {N_QUERIES}
       ), cand AS (
         SELECT DISTINCT b.vec_id, q.q_id
         FROM buckets b JOIN qb q USING (table_id, bucket)
@@ -432,18 +428,18 @@ def sql_ann_lsh(
         SELECT q_id, vec_id, round(dot / (nv * nq), 4) AS score,
                CAST(row_number() OVER (PARTITION BY q_id ORDER BY round(dot / (nv * nq), 4) DESC, vec_id ASC) AS INT) AS rank
         FROM pairs
-      ) WHERE rank <= {k}
+      ) WHERE rank <= {TOP_K}
     """
 
 
-def sql_ann_brute(n_queries: int = 8, k: int = 10) -> str:
+def sql_ann_brute() -> str:
     """DuckDB oracle: unnest-based dot product (cast to double),
     rounded to 4 before ranking — identical tie semantics."""
     return f"""
       WITH v AS (
         SELECT vec_id, embedding FROM embeddings
       ), q AS (
-        SELECT vec_id AS q_id, embedding AS q_emb FROM v WHERE vec_id < {n_queries}
+        SELECT vec_id AS q_id, embedding AS q_emb FROM v WHERE vec_id < {N_QUERIES}
       ), pairs AS (
         SELECT v.vec_id, q.q_id,
                list_sum(list_transform(list_zip(v.embedding, q.q_emb),
@@ -456,5 +452,5 @@ def sql_ann_brute(n_queries: int = 8, k: int = 10) -> str:
         SELECT q_id, vec_id, round(dot / (nv * nq), 4) AS score,
                CAST(row_number() OVER (PARTITION BY q_id ORDER BY round(dot / (nv * nq), 4) DESC, vec_id ASC) AS INT) AS rank
         FROM pairs
-      ) WHERE rank <= {k}
+      ) WHERE rank <= {TOP_K}
     """

@@ -101,14 +101,10 @@ def asof_join(
 def range_join(
     rows: DataFrame,
     ranges: DataFrame,
-    value_col: str = "value",
-    lo_col: str = "lo",
-    hi_col: str = "hi",
-    range_id: str = "range_id",
     bucket_width: float = 5.0,
 ) -> DataFrame:
-    """Interval join: rows.value in [lo, hi) per range — as a hash
-    equi-join on a bounded bucket explode, never a nested-loop theta
+    """Interval join: rows.value in [lo, hi) per ranges.range_id — as a
+    hash equi-join on a bounded bucket explode, never a nested-loop theta
     join. Each range explodes to the buckets it covers (bounded by
     span/width); each row computes its single bucket; the equi-join on
     bucket produces the candidate stream, and the exact [lo, hi)
@@ -117,19 +113,19 @@ def range_join(
     same plan degrades gracefully to a shuffled equi-join on bucket."""
     w = float(bucket_width)
     exploded = ranges.select(
-        range_id,
-        lo_col,
-        hi_col,
+        "range_id",
+        "lo",
+        "hi",
         F.explode(
             F.sequence(
-                F.floor(F.col(lo_col) / w).cast("bigint"),
-                F.floor(F.col(hi_col) / w).cast("bigint"),
+                F.floor(F.col("lo") / w).cast("bigint"),
+                F.floor(F.col("hi") / w).cast("bigint"),
             )
         ).alias("_bucket"),
     )
-    keyed = rows.withColumn("_bucket", F.floor(F.col(value_col) / w).cast("bigint"))
+    keyed = rows.withColumn("_bucket", F.floor(F.col("value") / w).cast("bigint"))
     return (
         keyed.join(F.broadcast(exploded), "_bucket")
-        .filter((F.col(value_col) >= F.col(lo_col)) & (F.col(value_col) < F.col(hi_col)))
+        .filter((F.col("value") >= F.col("lo")) & (F.col("value") < F.col("hi")))
         .drop("_bucket")
     )

@@ -255,17 +255,21 @@ def sql_rep_signals() -> str:
     """
 
 
-def quality_filter(docs: DataFrame,
-                   min_tokens: int = 20, max_tokens: int = 100000,
-                   min_distinct_frac: float = 0.30,
-                   max_top_tok_frac: float = 0.20,
-                   max_top_bigram_frac: float = 0.12,
-                   min_stopword_frac: float = 0.01) -> DataFrame:
+# quality_filter's rules (MIN_TOKENS is its one parameter's default)
+MIN_TOKENS = 20
+MAX_TOKENS = 100000
+MIN_DISTINCT_FRAC = 0.30
+MAX_TOP_TOK_FRAC = 0.20
+MAX_TOP_BIGRAM_FRAC = 0.12
+MIN_STOPWORD_FRAC = 0.01
+
+
+def quality_filter(docs: DataFrame, min_tokens: int = MIN_TOKENS) -> DataFrame:
     """Composite keep/drop quality gate (the C4 / Gopher rule family):
-    length window, distinct-token floor, repetition ceilings, stopword
-    floor — each rule emitted as its own boolean REASON column plus the
-    conjunctive `keep`, so downstream mixing can report per-rule drop
-    rates (the way data cards do). Pure composition of the oracled
+    length window [min_tokens, MAX_TOKENS], distinct-token floor,
+    repetition ceilings, stopword floor — each rule emitted as its own
+    boolean REASON column plus the conjunctive `keep`, so downstream
+    mixing can report per-rule drop rates (the way data cards do). Pure composition of the oracled
     signal operators — one extra join, no new shuffle shapes."""
     toks = F.split(F.col("text"), " ")
     base = docs.select(
@@ -277,15 +281,15 @@ def quality_filter(docs: DataFrame,
         "doc_id", "distinct_frac", "top_tok_frac", "top_bigram_frac"
     )
     j = base.join(rs, "doc_id")
-    ok_len = F.col("n_tokens").between(min_tokens, max_tokens)
-    ok_distinct = F.col("distinct_frac") >= min_distinct_frac
-    ok_top_tok = F.col("top_tok_frac") <= max_top_tok_frac
+    ok_len = F.col("n_tokens").between(min_tokens, MAX_TOKENS)
+    ok_distinct = F.col("distinct_frac") >= MIN_DISTINCT_FRAC
+    ok_top_tok = F.col("top_tok_frac") <= MAX_TOP_TOK_FRAC
     # docs with <2 tokens have no bigrams → top_bigram_frac is NULL
     # from rep_signals' left join; a doc with no bigrams trivially
     # passes the bigram-repetition ceiling, so coalesce to 0.0 (keeps
     # `keep` a real boolean for any min_tokens, incl. min_tokens<=1)
-    ok_top_bigram = F.coalesce(F.col("top_bigram_frac"), F.lit(0.0)) <= max_top_bigram_frac
-    ok_stop = F.round(F.col("n_stop") / F.col("n_tokens"), 6) >= min_stopword_frac
+    ok_top_bigram = F.coalesce(F.col("top_bigram_frac"), F.lit(0.0)) <= MAX_TOP_BIGRAM_FRAC
+    ok_stop = F.round(F.col("n_stop") / F.col("n_tokens"), 6) >= MIN_STOPWORD_FRAC
     return j.select(
         "doc_id",
         ok_len.alias("ok_len"),
@@ -297,11 +301,7 @@ def quality_filter(docs: DataFrame,
     )
 
 
-def sql_quality_filter(min_tokens: int = 20, max_tokens: int = 100000,
-                       min_distinct_frac: float = 0.30,
-                       max_top_tok_frac: float = 0.20,
-                       max_top_bigram_frac: float = 0.12,
-                       min_stopword_frac: float = 0.01) -> str:
+def sql_quality_filter() -> str:
     sw = ", ".join(f"'{w}'" for w in STOPWORDS)
     return f"""
       WITH base AS (
@@ -317,16 +317,16 @@ def sql_quality_filter(min_tokens: int = 20, max_tokens: int = 100000,
         FROM base b JOIN rs ON b.doc_id = rs.doc_id
       )
       SELECT doc_id,
-             n_tokens BETWEEN {min_tokens} AND {max_tokens} AS ok_len,
-             distinct_frac >= {min_distinct_frac} AS ok_distinct,
-             top_tok_frac <= {max_top_tok_frac} AS ok_top_tok,
-             COALESCE(top_bigram_frac, 0.0) <= {max_top_bigram_frac} AS ok_top_bigram,
-             round(CAST(n_stop AS DOUBLE) / n_tokens, 6) >= {min_stopword_frac} AS ok_stopwords,
-             (n_tokens BETWEEN {min_tokens} AND {max_tokens})
-               AND distinct_frac >= {min_distinct_frac}
-               AND top_tok_frac <= {max_top_tok_frac}
-               AND COALESCE(top_bigram_frac, 0.0) <= {max_top_bigram_frac}
-               AND round(CAST(n_stop AS DOUBLE) / n_tokens, 6) >= {min_stopword_frac} AS keep
+             n_tokens BETWEEN {MIN_TOKENS} AND {MAX_TOKENS} AS ok_len,
+             distinct_frac >= {MIN_DISTINCT_FRAC} AS ok_distinct,
+             top_tok_frac <= {MAX_TOP_TOK_FRAC} AS ok_top_tok,
+             COALESCE(top_bigram_frac, 0.0) <= {MAX_TOP_BIGRAM_FRAC} AS ok_top_bigram,
+             round(CAST(n_stop AS DOUBLE) / n_tokens, 6) >= {MIN_STOPWORD_FRAC} AS ok_stopwords,
+             (n_tokens BETWEEN {MIN_TOKENS} AND {MAX_TOKENS})
+               AND distinct_frac >= {MIN_DISTINCT_FRAC}
+               AND top_tok_frac <= {MAX_TOP_TOK_FRAC}
+               AND COALESCE(top_bigram_frac, 0.0) <= {MAX_TOP_BIGRAM_FRAC}
+               AND round(CAST(n_stop AS DOUBLE) / n_tokens, 6) >= {MIN_STOPWORD_FRAC} AS keep
       FROM j
     """
 
@@ -346,13 +346,14 @@ def lm_score(docs: DataFrame) -> DataFrame:
     shuffles, no UDF, no driver state; the total arrives via a
     broadcast single-row cross join. Rounded to 6 dp so the double
     reduction order (Spark partial aggs vs sequential) cannot flip
-    the comparison."""
+    the comparison. Nothing is persisted: the join side and the total
+    both read the vocab aggregation, and AQE reuses its partial-count
+    shuffle (a ReusedExchange), so the corpus is exploded and counted
+    once per action."""
     toks = docs.select(
         "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
     )
-    # persisted: BOTH the join side and the total read it — without
-    # the cache the vocab aggregation (a full corpus scan) runs twice
-    counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt")).persist()
+    counts = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("cnt"))
     total = counts.agg(F.sum("cnt").cast("double").alias("total"))
     per_doc = (
         toks.join(counts, "tok")
@@ -387,13 +388,16 @@ def sql_lm_score() -> str:
     """
 
 
-def inverted_index(docs: DataFrame, min_df: int = 2) -> DataFrame:
+MIN_DF = 2  # inverted_index drops tokens in fewer docs
+
+
+def inverted_index(docs: DataFrame) -> DataFrame:
     """Inverted index over the corpus: per token, document frequency,
     total term frequency, and the posting list (doc ids ascending).
     The posting list itself is emitted as an md5 witness of its
     canonical serialization (the driver-side canonicalizer cannot hash
     array columns) plus first/last doc — enough to value-compare the
-    full index across engines. min_df drops hapax tokens (the long
+    full index across engines. MIN_DF drops hapax tokens (the long
     tail that bloats a real index).
 
     100 TB shape: ONE shuffle on token (map-side combinable tf/df
@@ -420,11 +424,11 @@ def inverted_index(docs: DataFrame, min_df: int = 2) -> DataFrame:
                 )
             ).alias("postings_md5"),
         )
-        .filter(F.col("df") >= min_df)
+        .filter(F.col("df") >= MIN_DF)
     )
 
 
-def sql_inverted_index(min_df: int = 2) -> str:
+def sql_inverted_index() -> str:
     return f"""
       WITH toks AS (
         SELECT doc_id, unnest(string_split(text, ' ')) AS tok
@@ -437,13 +441,18 @@ def sql_inverted_index(min_df: int = 2) -> str:
              min(doc_id) AS first_doc, max(doc_id) AS last_doc,
              md5(string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id))
                AS postings_md5
-      FROM per_doc GROUP BY tok HAVING count(*) >= {min_df}
+      FROM per_doc GROUP BY tok HAVING count(*) >= {MIN_DF}
     """
 
 
-def bm25(docs: DataFrame, terms: tuple[str, ...] = ("spark", "window", "merge"),
-         k1: float = 1.2, b: float = 0.75) -> DataFrame:
-    """BM25 ranking of the corpus against a fixed term set — the
+# bm25's query terms and its k1 and b
+BM25_TERMS = ("spark", "window", "merge")
+BM25_K1 = 1.2
+BM25_B = 0.75
+
+
+def bm25(docs: DataFrame) -> DataFrame:
+    """BM25 ranking of the corpus against the BM25_TERMS set — the
     retrieval scorer the inverted index exists to serve (Robertson/
     Sparck Jones; the Lucene-default flavor with idf =
     ln(1 + (N - df + 0.5)/(df + 0.5))).
@@ -452,11 +461,11 @@ def bm25(docs: DataFrame, terms: tuple[str, ...] = ("spark", "window", "merge"),
     shuffle); N and avgdl arrive via one single-row aggregate
     broadcast; the token explode is filtered to the query terms BEFORE
     its one map-side-combinable (doc_id, tok) aggregation, so the
-    shuffle carries only matching postings; df (≤ |terms| rows) and
+    shuffle carries only matching postings; df (≤ |BM25_TERMS| rows) and
     the corpus stats are broadcast into the scoring join. One real
     shuffle on doc_id total. Scores rounded to 6 dp so double
     reduction order cannot flip the hash."""
-    lits = F.array(*[F.lit(t) for t in terms])
+    lits = F.array(*[F.lit(t) for t in BM25_TERMS])
     base = docs.select(
         "doc_id",
         F.size(F.split(F.col("text"), " ")).alias("dl"),
@@ -479,8 +488,8 @@ def bm25(docs: DataFrame, terms: tuple[str, ...] = ("spark", "window", "merge"),
         .withColumn(
             "term_score",
             F.col("idf")
-            * (F.col("tf") * (k1 + 1.0))
-            / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl"))),
+            * (F.col("tf") * (BM25_K1 + 1.0))
+            / (F.col("tf") + BM25_K1 * (1.0 - BM25_B + BM25_B * F.col("dl") / F.col("avgdl"))),
         )
     )
     return scored.groupBy("doc_id").agg(
@@ -490,9 +499,8 @@ def bm25(docs: DataFrame, terms: tuple[str, ...] = ("spark", "window", "merge"),
     )
 
 
-def sql_bm25(terms: tuple[str, ...] = ("spark", "window", "merge"),
-             k1: float = 1.2, b: float = 0.75) -> str:
-    tlist = ", ".join(f"'{t}'" for t in terms)
+def sql_bm25() -> str:
+    tlist = ", ".join(f"'{t}'" for t in BM25_TERMS)
     return f"""
       WITH toks AS (
         SELECT doc_id, len(string_split(text, ' ')) AS dl,
@@ -513,8 +521,8 @@ def sql_bm25(terms: tuple[str, ...] = ("spark", "window", "merge"),
              CAST(sum(tf) AS BIGINT) AS total_tf,
              round(sum(
                ln(1e0 + (n_docs - df + 5e-1) / (df + 5e-1))
-               * (tf * ({k1!r}e0 + 1e0))
-               / (tf + {k1!r}e0 * (1e0 - {b!r}e0 + {b!r}e0 * dl / avgdl))
+               * (tf * ({BM25_K1!r}e0 + 1e0))
+               / (tf + {BM25_K1!r}e0 * (1e0 - {BM25_B!r}e0 + {BM25_B!r}e0 * dl / avgdl))
              ), 6) AS bm25
       FROM tf JOIN dfreq USING (tok), stats
       GROUP BY doc_id
@@ -567,8 +575,8 @@ def synth_pii(docs: DataFrame) -> DataFrame:
     )
 
 
-def pii_scrub(docs: DataFrame, text_col: str = "pii_text") -> DataFrame:
-    """Detect-and-redact PII: per-kind match counts (computed BEFORE
+def pii_scrub(docs: DataFrame) -> DataFrame:
+    """Detect-and-redact PII in pii_text: per-kind match counts (computed BEFORE
     redaction) and the scrubbed text with typed placeholder tokens.
     Email first (its local part may contain digits/dots), then IPv4,
     then phone — the chain never creates new matches because the
@@ -577,7 +585,7 @@ def pii_scrub(docs: DataFrame, text_col: str = "pii_text") -> DataFrame:
     100 TB shape: pure JVM regexp column expressions (codegen'd, no
     UDF, no shuffle) — a map-only pass a real pipeline fuses into its
     first corpus scan."""
-    t = F.col(text_col)
+    t = F.col("pii_text")
     clean = F.regexp_replace(
         F.regexp_replace(
             F.regexp_replace(t, PII_EMAIL_RE, "<EMAIL>"), PII_IP_RE, "<IP>"
@@ -632,39 +640,38 @@ def sql_pii_scrub() -> str:
 def strip_boilerplate_lines(
     docs: DataFrame,
     text_col: str = "text",
-    group_col: str = "host",
     min_docs: int = 3,
     min_frac: float = 0.5,
 ) -> DataFrame:
     """CCNet-style frequency boilerplate removal: a LINE that appears
-    in ≥ min_docs documents AND ≥ min_frac of a group's documents
-    (group = host/shard) is template chrome (nav, copyright footers) —
+    in ≥ min_docs documents AND ≥ min_frac of a host's documents
+    is template chrome (nav, copyright footers) —
     strip it from every doc and reassemble the remaining lines in
-    order. Plan: one posexplode, one (group, line) agg + one group agg
+    order. Plan: one posexplode, one (host, line) agg + one host agg
     (both map-side combinable — a line's count collapses per
     partition before the shuffle), one left anti-style join back, one
     per-doc ordered reassembly (collect_list of (pos, line) structs +
     array_sort — no window). Returns (doc_id, clean_text, n_removed);
     docs whose every line was boilerplate come back with ''."""
     lines = docs.select(
-        group_col,
+        "host",
         "doc_id",
         F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
     )
-    group_sizes = docs.groupBy(group_col).agg(
+    group_sizes = docs.groupBy("host").agg(
         F.count_distinct(F.col("doc_id")).alias("_n_docs")
     )
     bp = (
-        lines.groupBy(group_col, "line")
+        lines.groupBy("host", "line")
         .agg(F.count_distinct(F.col("doc_id")).alias("_n"))
-        .join(group_sizes, group_col)
+        .join(group_sizes, "host")
         .where(
             (F.col("_n") >= min_docs)
             & (F.col("_n") / F.col("_n_docs") >= min_frac)
         )
-        .select(group_col, "line", F.lit(True).alias("_bp"))
+        .select("host", "line", F.lit(True).alias("_bp"))
     )
-    tagged = lines.join(bp, [group_col, "line"], "left")
+    tagged = lines.join(bp, ["host", "line"], "left")
     rebuilt = (
         tagged.filter(F.col("_bp").isNull())
         .groupBy("doc_id")
@@ -692,7 +699,7 @@ def strip_boilerplate_lines(
     )
 
 
-def bpe_merges(docs: DataFrame, k: int = 6, text_col: str = "text") -> DataFrame:
+def bpe_merges(docs: DataFrame, k: int = 6) -> DataFrame:
     """Learn the first k BPE merges over the corpus (byte-pair-encoding
     vocabulary induction — the tokenizer-training step of an LLM data
     pipeline). Words (whitespace tokens) collapse to a (word, freq)
@@ -708,18 +715,18 @@ def bpe_merges(docs: DataFrame, k: int = 6, text_col: str = "text") -> DataFrame
     plan depth; ~2k actions total on the tiny vocab relation).
 
     Returns k rows: (rank, left, right, pair_count)."""
-    merges, _vocab = _bpe_learn(docs, k, text_col)
+    merges, _vocab = _bpe_learn(docs, k)
     return merges
 
 
-def _bpe_learn(docs: DataFrame, k: int, text_col: str):
+def _bpe_learn(docs: DataFrame, k: int):
     """Shared BPE training loop: returns (merges, final vocab) — the
     vocab rows are (word = space-joined tokens after k merges, freq);
     the space-stripped word is the original surface form, so encoders
     can join back without carrying a key through the rewrites."""
     chars = F.filter(F.split(F.col("w"), ""), lambda s: s != "")
     words = (
-        docs.select(F.explode(F.split(F.col(text_col), " ")).alias("w"))
+        docs.select(F.explode(F.split(F.col("text"), " ")).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -786,7 +793,7 @@ def _bpe_learn(docs: DataFrame, k: int, text_col: str):
     return merges, cur
 
 
-def bpe_encode(docs: DataFrame, k: int = 6, text_col: str = "text") -> DataFrame:
+def bpe_encode(docs: DataFrame, k: int = 6) -> DataFrame:
     """Tokenize the corpus with the learned BPE merges: per doc the
     whitespace-word count and the BPE token count (the number every
     token-budget decision — mix_plan, Chinchilla-style sizing — needs
@@ -795,13 +802,13 @@ def bpe_encode(docs: DataFrame, k: int = 6, text_col: str = "text") -> DataFrame
     of the corpus words against the rewritten vocabulary (the
     space-stripped rewritten word IS the surface form — no key
     threading), then one per-doc agg."""
-    _merges, vocab = _bpe_learn(docs, k, text_col)
+    _merges, vocab = _bpe_learn(docs, k)
     tok = vocab.select(
         F.regexp_replace(F.col("word"), " ", "").alias("w"),
         F.size(F.split(F.col("word"), " ")).alias("n_toks"),
     )
     words = docs.select(
-        "doc_id", F.explode(F.split(F.col(text_col), " ")).alias("w")
+        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("w")
     ).filter(F.col("w") != "")
     return (
         words.join(tok, "w")

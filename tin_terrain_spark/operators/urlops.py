@@ -35,9 +35,9 @@ def synth_urls(docs: DataFrame) -> DataFrame:
     )
 
 
-def with_host(pages: DataFrame, url_col: str = "url") -> DataFrame:
-    """JVM-side host + registrable-domain extraction (no UDF)."""
-    host = F.parse_url(F.col(url_col), F.lit("HOST"))
+def with_host(pages: DataFrame) -> DataFrame:
+    """JVM-side host + registrable-domain extraction from url (no UDF)."""
+    host = F.parse_url(F.col("url"), F.lit("HOST"))
     return pages.withColumn("host", host).withColumn(
         "domain", F.substring_index(F.col("host"), ".", -2)
     )
@@ -112,17 +112,17 @@ def synth_noisy_urls(docs: DataFrame) -> DataFrame:
     return docs.select("doc_id", url.alias("url_noisy"))
 
 
-def canonicalize_url(pages: DataFrame, url_col: str = "url_noisy") -> DataFrame:
-    """URL canonicalization — the dedup key normalization every crawl
-    pipeline applies before url-level dedup: lowercase scheme+host,
-    drop default ports (:443 https / :80 http), strip fragments,
+def canonicalize_url(pages: DataFrame) -> DataFrame:
+    """URL canonicalization of url_noisy — the dedup key normalization
+    every crawl pipeline applies before url-level dedup: lowercase
+    scheme+host, drop default ports (:443 https / :80 http), strip fragments,
     remove tracking query params (utm_*, gclid, fbclid, ref) with
     separator repair, and strip a lone trailing slash from non-root
     paths. Path and query case/content are otherwise preserved.
 
     100 TB shape: a codegen'd JVM regexp_replace chain — map-only,
     no UDF, no shuffle; fuses into the scan."""
-    u = F.col(url_col)
+    u = F.col("url_noisy")
     staged = pages.withColumn("_nofrag", F.regexp_replace(u, "#.*$", "")).withColumn(
         "_pre",
         F.regexp_extract(
@@ -271,20 +271,18 @@ PSL_RULES: tuple[str, ...] = (
 )
 
 
-def _psl_rules_df(spark, rules):
+def _psl_rules_df(spark):
     rows = []
-    for r in rules:
+    for r in PSL_RULES:
         exc = r.startswith("!")
         pat = r[1:] if exc else r
         rows.append((pat, pat.count(".") + 1, exc))
     return spark.createDataFrame(rows, "pattern STRING, nlabels INT, is_exc BOOLEAN")
 
 
-def registered_domain(
-    hosts: DataFrame, host_col: str = "host", rules: tuple[str, ...] = PSL_RULES
-) -> DataFrame:
-    """eTLD+1 extraction with real public-suffix semantics (wildcard
-    `*.ck` and exception `!www.ck` rules — the cases the naive
+def registered_domain(hosts: DataFrame) -> DataFrame:
+    """eTLD+1 of each host under PSL_RULES, with real public-suffix
+    semantics (wildcard `*.ck` and exception `!www.ck` rules — the cases the naive
     last-two-labels split gets wrong; domain-level dedup/mixing keyed
     on the naive split silently merges every `*.co.uk` site into one
     group). Pure JVM plan: per host, generate the label-suffix
@@ -298,9 +296,9 @@ def registered_domain(
 
     Algorithm: https://publicsuffix.org/list/ (public spec)."""
     spark = hosts.sparkSession
-    rules_df = _psl_rules_df(spark, rules)
+    rules_df = _psl_rules_df(spark)
 
-    labels = F.split(F.col(host_col), r"\.")
+    labels = F.split(F.col("host"), r"\.")
     n = F.size(labels)
     # depth-i literal suffix = last i labels; wildcard form replaces
     # the (i-th from end) label with '*'; slot 0 reserves depth 1..5
@@ -320,15 +318,15 @@ def registered_domain(
         ),
     )
     keyed = (
-        hosts.select(host_col)
+        hosts.select("host")
         .distinct()
         .withColumn("_cand", F.array_union(lit_suf, F.filter(wild_suf, lambda c: c.isNotNull())))
     )
-    cand = keyed.select(host_col, F.explode("_cand").alias("pattern"))
+    cand = keyed.select("host", F.explode("_cand").alias("pattern"))
     matched = cand.join(F.broadcast(rules_df), "pattern")
     # winner: exceptions sort above all (is_exc, nlabels) — exception's
     # public suffix is the exception minus its leftmost label
-    best = matched.groupBy(host_col).agg(
+    best = matched.groupBy("host").agg(
         F.max(F.struct(F.col("is_exc"), F.col("nlabels"))).alias("_w")
     )
     suffix_len = F.when(F.col("_w.is_exc"), F.col("_w.nlabels") - 1).otherwise(
@@ -338,15 +336,15 @@ def registered_domain(
     # scale — let AQE pick the strategy (same reasoning as
     # dedup.contamination's opt-in broadcast)
     out = (
-        hosts.join(best, host_col, "left")
+        hosts.join(best, "host", "left")
         .withColumn("_slen", suffix_len)
         .withColumn(
             "public_suffix",
             F.when(
-                F.size(F.split(F.col(host_col), r"\.")) > F.col("_slen"),
+                F.size(F.split(F.col("host"), r"\.")) > F.col("_slen"),
                 F.array_join(
                     F.slice(
-                        F.split(F.col(host_col), r"\."),
+                        F.split(F.col("host"), r"\."),
                         -F.col("_slen"),
                         F.col("_slen"),
                     ),
@@ -357,10 +355,10 @@ def registered_domain(
         .withColumn(
             "registered_domain",
             F.when(
-                F.size(F.split(F.col(host_col), r"\.")) > F.col("_slen"),
+                F.size(F.split(F.col("host"), r"\.")) > F.col("_slen"),
                 F.array_join(
                     F.slice(
-                        F.split(F.col(host_col), r"\."),
+                        F.split(F.col("host"), r"\."),
                         -(F.col("_slen") + 1),
                         F.col("_slen") + 1,
                     ),

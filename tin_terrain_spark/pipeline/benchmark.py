@@ -44,6 +44,8 @@ PARAM_MAX_ERROR = [
 PARAM_STEP = [1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 12, 14, 16, 18, 20]
 # benchmark_workflow.cpp:488-489
 PARAM_THRESHOLD = [0.1, 0.2, 0.3, 0.5, 0.8, 1.0, 1.2, 1.4, 1.6, 1.8, 2.0, 2.5, 3.0]
+# cells of neighbour data around each tile, as in the pyramid
+BUFFER_CELLS = 2
 
 SWEEP_SCHEMA = (
     "tile_x BIGINT, tile_y BIGINT, n_points BIGINT, n_vertices INT, "
@@ -61,17 +63,17 @@ CSV_HEADER = (
 def run_parametrization(points: DataFrame, zoom: int, method: str,
                         max_error: float = float("nan"), step: int = -1,
                         threshold: float = float("nan"),
-                        grid_bits: int = 5, buffer_cells: int = 2,
+                        grid_bits: int = 5,
                         cells: DataFrame | None = None) -> dict:
     """One (method, param) run: the mesh_cells stage with error
     measurement over all tiles (per-tile SWEEP_SCHEMA rows, terrain
     encoding off), exact moment merge to a single StatsRow-shaped
     dict."""
     if cells is None:
-        cells = cell_grid(points, zoom, grid_bits, buffer_cells)
+        cells = cell_grid(points, zoom, grid_bits, BUFFER_CELLS)
     # curvature reads its threshold through the kernel's max_error slot
     per_tile = mesh_cells(
-        cells, zoom, grid_bits, buffer_cells, method,
+        cells, zoom, grid_bits, BUFFER_CELLS, method,
         threshold if method == "curvature" else max_error, step,
         compute_error=True, encode_terrain=False, columns=SWEEP_SCHEMA,
     )
@@ -123,59 +125,60 @@ def run_parametrization(points: DataFrame, zoom: int, method: str,
 
 def run_benchmark_sweep(points: DataFrame, zoom: int, out_dir: str,
                         input_name: str = "points",
-                        methods=("terra", "zemlya", "dense", "curvature"),
                         max_errors=None, steps=None, thresholds=None,
-                        grid_bits: int = 5, buffer_cells: int = 2,
-                        resume: bool = True) -> list[dict]:
-    """The full sweep: methods x their parameter sets, CSV + .done
-    markers in out_dir (benchmark_workflow.cpp:975-1073 shape). Returns
-    the stats rows written this invocation (resumed rows are skipped,
-    like the reference's benchmark_done fast-path)."""
+                        grid_bits: int = 5) -> list[dict]:
+    """The full sweep: terra, zemlya, dense and curvature x their
+    parameter sets, CSV + .done markers in out_dir
+    (benchmark_workflow.cpp:975-1073 shape). Returns the stats rows
+    written this invocation (resumed rows are skipped, like the
+    reference's benchmark_done fast-path)."""
     max_errors = PARAM_MAX_ERROR if max_errors is None else max_errors
     steps = PARAM_STEP if steps is None else steps
     thresholds = PARAM_THRESHOLD if thresholds is None else thresholds
     os.makedirs(out_dir, exist_ok=True)
     csv_path = os.path.join(out_dir, "tin_terrain_benchmarks.csv")
-    if not (resume and os.path.exists(csv_path)):
+    if not os.path.exists(csv_path):
         with open(csv_path, "w") as f:
             f.write(CSV_HEADER + "\n")
 
-    # cell aggregation is shared by every parametrization — persist once
-    cells = cell_grid(points, zoom, grid_bits, buffer_cells).persist()
+    # cell aggregation is shared by every parametrization — persist
+    # once, and release it however the sweep ends
+    cells = cell_grid(points, zoom, grid_bits, BUFFER_CELLS).persist()
     runs = []
-    for method in methods:
-        if method == "dense":
-            params = steps
-        elif method == "curvature":
-            params = thresholds
-        else:
-            params = max_errors
-        for p in params:
-            tag = f"{method}_{p}"
-            marker = os.path.join(out_dir, f"{tag}.done")
-            if resume and os.path.exists(marker):
-                continue
+    try:
+        for method in ("terra", "zemlya", "dense", "curvature"):
             if method == "dense":
-                kwargs = {"step": int(p)}
+                params = steps
             elif method == "curvature":
-                kwargs = {"threshold": float(p)}
+                params = thresholds
             else:
-                kwargs = {"max_error": float(p)}
-            row = run_parametrization(
-                points, zoom, method, grid_bits=grid_bits,
-                buffer_cells=buffer_cells, cells=cells, **kwargs,
-            )
-            row["input_file"] = input_name
-            with open(csv_path, "a") as f:
-                f.write(
-                    f'{row["input_file"]},{row["method_name"]},{row["input_num_points"]},'
-                    f'{row["param_max_error"]},{row["param_threshold"]},{row["param_step"]},'
-                    f'{row["meshing_time_seconds"]:.6f},{row["standard_dev_error"]:.9f},'
-                    f'{row["mean_error"]:.9f},{row["max_error"]:.9f},'
-                    f'{row["num_vertices"]},{row["num_faces"]},{row["violations"]}\n'
+                params = max_errors
+            for p in params:
+                marker = os.path.join(out_dir, f"{method}_{p}.done")
+                if os.path.exists(marker):
+                    continue
+                if method == "dense":
+                    kwargs = {"step": int(p)}
+                elif method == "curvature":
+                    kwargs = {"threshold": float(p)}
+                else:
+                    kwargs = {"max_error": float(p)}
+                row = run_parametrization(
+                    points, zoom, method, grid_bits=grid_bits, cells=cells,
+                    **kwargs,
                 )
-            with open(marker, "w") as f:
-                f.write("done\n")
-            runs.append(row)
-    cells.unpersist()
+                row["input_file"] = input_name
+                with open(csv_path, "a") as f:
+                    f.write(
+                        f'{row["input_file"]},{row["method_name"]},{row["input_num_points"]},'
+                        f'{row["param_max_error"]},{row["param_threshold"]},{row["param_step"]},'
+                        f'{row["meshing_time_seconds"]:.6f},{row["standard_dev_error"]:.9f},'
+                        f'{row["mean_error"]:.9f},{row["max_error"]:.9f},'
+                        f'{row["num_vertices"]},{row["num_faces"]},{row["violations"]}\n'
+                    )
+                with open(marker, "w") as f:
+                    f.write("done\n")
+                runs.append(row)
+    finally:
+        cells.unpersist()
     return runs

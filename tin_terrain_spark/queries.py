@@ -112,14 +112,14 @@ def _docs(spark: SparkSession, sf_dir: str,
     return docs.repartition(spark.sparkContext.defaultParallelism, "doc_id")
 
 
-def _points_sql(id_col: str = "doc_id", zoom: int = ZOOM) -> str:
+def _points_sql(zoom: int = ZOOM) -> str:
     """Shared oracle subquery: geocoded documents."""
-    x = GX.mercator_x_sql(id_col)
-    y = GX.mercator_y_sql(id_col)
+    x = GX.mercator_x_sql("doc_id")
+    y = GX.mercator_y_sql("doc_id")
     return f"""
       SELECT doc_id, lang,
              {x} AS x, {y} AS y,
-             {GX.hash_z_sql(id_col)} AS z_h,
+             {GX.hash_z_sql("doc_id")} AS z_h,
              {GX.tile_sql(x, zoom)} AS tile_x,
              {GX.tile_sql(y, zoom)} AS tile_y,
              {GX.cell_sql(x, zoom, GRID_BITS)} AS cell_x,

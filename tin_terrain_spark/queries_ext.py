@@ -845,7 +845,7 @@ def q_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.near_dup_pairs(_docs(spark, sf_dir), threshold=0.5)
 
 
-def _sql_near_dup_pairs(threshold: float = 0.5) -> str:
+def _sql_near_dup_pairs() -> str:
     return f"""
       WITH cand AS ({_sql_lsh_candidates()}),
       tok_sets AS ({D.sql_shingles()}),
@@ -862,7 +862,7 @@ def _sql_near_dup_pairs(threshold: float = 0.5) -> str:
       FROM inter i
       JOIN sizes sa ON sa.doc_id = i.doc_a
       JOIN sizes sb ON sb.doc_id = i.doc_b
-      WHERE round(CAST(i.n_inter AS DOUBLE) / (sa.sz + sb.sz - i.n_inter), 6) >= {threshold}
+      WHERE round(CAST(i.n_inter AS DOUBLE) / (sa.sz + sb.sz - i.n_inter), 6) >= 0.5
     """
 
 
@@ -1017,7 +1017,7 @@ def q_face_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_face_cells(res: int = FACE_RES) -> str:
+def _sql_face_cells() -> str:
     from .functions import geocode_exprs as _GX
     from .functions import h3geo as HG
 
@@ -1025,9 +1025,9 @@ def _sql_face_cells(res: int = FACE_RES) -> str:
     y = _GX.mercator_y_sql("doc_id")
     R = repr(HG.EARTH_R_MERC)
     half_pi = repr(__import__("math").pi / 2.0)
-    scale = repr((HG.SQRT7 ** res) / HG.RES0_U_GNOMONIC)
+    scale = repr((HG.SQRT7 ** FACE_RES) / HG.RES0_U_GNOMONIC)
     s32 = repr(HG._SQRT3_2)
-    rot = "" if res % 2 == 0 else f" - {HG.AP7_ROT_RADS!r}"
+    rot = "" if FACE_RES % 2 == 0 else f" - {HG.AP7_ROT_RADS!r}"
     return f"""
       WITH pts AS (SELECT doc_id, {x} AS x, {y} AS y FROM documents),
       ll AS (
@@ -2380,7 +2380,7 @@ def q_incr_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_incr_dedup(threshold: float = 0.5) -> str:
+def _sql_incr_dedup() -> str:
     rpb = len(D.MINHASH_FUNCS) // D.BANDS
     return f"""
       WITH sig AS ({_sql_minhash()}),
@@ -2415,7 +2415,7 @@ def _sql_incr_dedup(threshold: float = 0.5) -> str:
       best AS (
         SELECT new_id, min(old_id) AS dup_of,
                arg_min(jaccard, old_id) AS jaccard
-        FROM j WHERE jaccard >= {threshold} GROUP BY new_id
+        FROM j WHERE jaccard >= 0.5 GROUP BY new_id
       )
       SELECT d.doc_id, b.dup_of, b.jaccard,
              b.dup_of IS NOT NULL AS is_dup
@@ -2464,15 +2464,18 @@ QUERIES_EXT["length_quantiles"] = q_length_quantiles
 ORACLES_EXT["length_quantiles"] = _sql_length_quantiles()
 
 
+BPE_MERGES = 6  # merges learned by the bpe_merges and bpe_encode lines
+
+
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE vocabulary induction (textops.bpe_merges): first 6 merges
-    learned over the corpus word-frequency table; DuckDB twin unrolls
-    the same 6 rounds (argmax by count desc / pair asc, canonical
+    """BPE vocabulary induction (textops.bpe_merges): first BPE_MERGES
+    merges learned over the corpus word-frequency table; DuckDB twin
+    unrolls the same rounds (argmax by count desc / pair asc, canonical
     leftmost-non-overlap rewrite via list_reduce)."""
-    return T.bpe_merges(_docs(spark, sf_dir, spread=False), k=6)
+    return T.bpe_merges(_docs(spark, sf_dir, spread=False), k=BPE_MERGES)
 
 
-def _sql_bpe_merges(k: int = 6) -> str:
+def _sql_bpe_merges() -> str:
     parts = [
         """w0 AS (
         SELECT array_to_string(string_split_regex(w, ''), ' ') AS word,
@@ -2481,7 +2484,7 @@ def _sql_bpe_merges(k: int = 6) -> str:
         WHERE w <> '' GROUP BY w
       )"""
     ]
-    for r in range(1, k + 1):
+    for r in range(1, BPE_MERGES + 1):
         parts.append(f"""b{r} AS (
         SELECT toks[i] AS lft, toks[i + 1] AS rgt,
                CAST(sum(freq) AS BIGINT) AS cnt
@@ -2502,7 +2505,7 @@ def _sql_bpe_merges(k: int = 6) -> str:
     union = "\n      UNION ALL ".join(
         f'SELECT CAST({r} AS INT) AS rank, lft AS "left", rgt AS "right", '
         f"cnt AS pair_count FROM b{r}"
-        for r in range(1, k + 1)
+        for r in range(1, BPE_MERGES + 1)
     )
     return "WITH " + ",\n      ".join(parts) + "\n      " + union
 
@@ -2513,20 +2516,20 @@ ORACLES_EXT["bpe_merges"] = _sql_bpe_merges()
 
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenization (textops.bpe_encode): per-doc word and BPE
-    token counts under the 6 corpus-learned merges; the DuckDB twin
-    re-learns the identical merges (unrolled CTEs) and re-encodes."""
-    return T.bpe_encode(_docs(spark, sf_dir, spread="auto"), k=6)
+    token counts under the BPE_MERGES corpus-learned merges; the DuckDB
+    twin re-learns the identical merges (unrolled CTEs) and re-encodes."""
+    return T.bpe_encode(_docs(spark, sf_dir, spread="auto"), k=BPE_MERGES)
 
 
-def _sql_bpe_encode(k: int = 6) -> str:
-    learn = _sql_bpe_merges(k)
+def _sql_bpe_encode() -> str:
+    learn = _sql_bpe_merges()
     # reuse the learn CTE chain; swap the final union for the encoder
     with_block = learn[: learn.rindex("SELECT CAST(1 AS INT)")].rstrip()
     return f"""{with_block},
       tok AS (
         SELECT replace(word, ' ', '') AS w,
                len(string_split(word, ' ')) AS n_toks
-        FROM w{k}
+        FROM w{BPE_MERGES}
       ),
       dw AS (
         SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents

@@ -135,7 +135,6 @@ def jvm_options(driver_memory: str) -> str:
 def get_spark(
     app_name: str = "tin_terrain_spark",
     cores: int | None = None,
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """local[N] session tuned for the sandbox (single JVM). On a real
@@ -165,12 +164,10 @@ def get_spark(
     driver_memory = os.environ.get("SPARK_DRIVER_MEM", "12g")
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        shuffle_partitions = max(cores, 8)
     b = (
         SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cores, 8)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
