@@ -7,8 +7,13 @@ branch; every result is collected. Building a plan may run only the
 `_density_ring` aggregate (no job at all when the ring is given), no
 RDD may stay persisted after a collect, no call after the first may
 compile a generated class, and every result must equal `knn_brute`'s
-rows.
+rows. After the calls, each of Spark's two exchange thread pools
+(`shuffle-exchange`, `broadcast-exchange`, counted by thread name in
+`/proc/<jvm>/task/*/comm`) holds at most `session.EXCHANGE_THREADS`
+threads: uncapped, they grew by about 10 threads a call.
 """
+
+import os
 
 import numpy as np
 import pytest
@@ -46,6 +51,22 @@ def _last_execution(spark) -> int:
     return max((e.executionId() for e in conv.asJava(store.executionsList())), default=-1)
 
 
+def _exchange_threads(spark) -> dict[str, int]:
+    """Live threads of the JVM's exchange pools. Thread names are
+    `<pool>-<n>`, cut at 15 characters in `comm`."""
+    pid = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getPid()
+    counts = {"shuffle-exchange": 0, "broadcast-exchange": 0}
+    for tid in os.listdir(f"/proc/{pid}/task"):
+        try:
+            with open(f"/proc/{pid}/task/{tid}/comm") as f:
+                comm = f.read().rstrip("\n")
+        except OSError:  # the thread exited
+            continue
+        for pool in counts:
+            counts[pool] += comm.startswith(pool[:15])
+    return counts
+
+
 def _corpus(spark):
     """2,000 points uniform in a 4,000 km square; 12 queries inside it
     (the density ring resolves them) and 6 more 1,500 km or further
@@ -76,6 +97,7 @@ def _corpus(spark):
 def test_knn_operators_are_plans(spark):
     from tin_terrain_spark.functions.geocode_exprs import tile_size_meters
     from tin_terrain_spark.operators import joins as J
+    from tin_terrain_spark.session import EXCHANGE_THREADS
 
     pts, near, mixed = _corpus(spark)
     hex_size = tile_size_meters(ZOOM + GRID_BITS)
@@ -122,3 +144,8 @@ def test_knn_operators_are_plans(spark):
         compiled[call + 1] = _compiles(spark) - before
     assert all(n == 0 for c, n in compiled.items() if c > 1), f"classes compiled per call: {compiled}"
     assert len(brute["hex@1"]) == 18 * K
+    for key in ("spark.sql.shuffleExchange.maxThreadThreshold",
+                "spark.sql.broadcastExchange.maxThreadThreshold"):
+        assert spark.conf.get(key) == str(EXCHANGE_THREADS), key
+    threads = _exchange_threads(spark)
+    assert all(n <= EXCHANGE_THREADS for n in threads.values()), threads

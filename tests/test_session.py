@@ -1,6 +1,11 @@
 """The JVM that `get_spark` builds: the Parallel collector, the metaspace
-GC threshold, the young generation cap of a heap over 3 GB and the
-malloc arena cap.
+GC threshold, the JIT compile thresholds scaled ×4, the young generation
+cap of a heap over 3 GB and the malloc arena cap.
+
+Each flag is checked in the running JVM where it can be read back: the
+collector by its GC MXBeans, the compile threshold scaling by the
+HotSpot diagnostic MXBean's value of the flag (not only its presence in
+the argument list), the arena cap in `/proc/<jvm>/environ`.
 
 `get_spark` sets `jvm_options(<driver memory>)` as Spark's
 `defaultJavaOptions`, which Spark puts before a caller's
@@ -38,8 +43,11 @@ def _jvm_facts(spark) -> dict:
     runtime = mf.getRuntimeMXBean()
     with open(f"/proc/{runtime.getPid()}/environ", "rb") as f:
         environ = f.read().decode(errors="replace").split("\0")
+    diag = mf.getPlatformMXBean(
+        spark._jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
     return {
         "gc": sorted(b.getName() for b in mf.getGarbageCollectorMXBeans()),
+        "jit_scaling": float(diag.getVMOption("CompileThresholdScaling").getValue()),
         "args": list(runtime.getInputArguments()),
         "arena": [e for e in environ if e.startswith("MALLOC_ARENA_MAX=")],
     }
@@ -51,6 +59,7 @@ def _check(facts: dict, driver_memory: str, arena: str = "2") -> None:
     assert facts["gc"] == ["PS MarkSweep", "PS Scavenge"], facts["gc"]
     assert "-XX:+UseParallelGC" in facts["args"], facts["args"]
     assert "-XX:MetaspaceSize=256m" in facts["args"], facts["args"]
+    assert facts["jit_scaling"] == 4.0, facts["jit_scaling"]
     young = [a for a in facts["args"] if a.startswith("-XX:MaxNewSize=")]
     assert young == [a for a in jvm_options(driver_memory).split()
                      if a.startswith("-XX:MaxNewSize=")], facts["args"]

@@ -34,10 +34,11 @@ must be importable on the executors when the daemon starts (installed there,
 or on ``spark.executorEnv.PYTHONPATH``), not only through per-task
 ``--py-files``, which reach ``sys.path`` after the daemon has started.
 
-The last is the JVM's own memory: ``JVM_OPTIONS`` (the Parallel
-collector instead of G1, and a metaspace GC threshold),
-``MAX_NEW_SIZE_MB`` (a young generation cap for a heap over 3 GB, so
-that a heap that starts small does not outgrow G1's) and
+The last is the JVM itself: ``JVM_OPTIONS`` (the Parallel collector
+instead of G1, a metaspace GC threshold, and JIT compile thresholds
+scaled ×4), ``EXCHANGE_THREADS`` (the cap of Spark's two exchange
+thread pools), ``MAX_NEW_SIZE_MB`` (a young generation cap for a heap
+over 3 GB, so that a heap that starts small does not outgrow G1's) and
 ``MALLOC_ARENA_MAX``; their comments hold the measurements. Outside its
 heap the JVM holds its collector's data structures, metaspace, the code
 cache, thread stacks and the malloc arenas of its threads, which was
@@ -48,6 +49,18 @@ flags for the session's heap in
 (perfbench's fixed heap) add to them; a caller replaces them through
 ``extra_conf``. A JVM that spark-submit starts has its options before
 ``get_spark`` runs: ``scripts/run_scaling.py`` passes them itself.
+
+Most of an early operation's CPU is the JIT, not task work. A
+per-thread ledger (``/proc/<jvm>/task/*/stat`` diffed around the
+catalog benchmark's first measured operation, 4 seeds) read, as
+medians of CPU-s: C2 compiler threads 10.3 and C1 1.4 of a 19.9 CPU-s
+JVM total, executor tasks 4.1, the py4j call thread that plans the
+queries 1.9. With ``-XX:CompileThresholdScaling=4`` the same ledger
+read C2 3.3, C1 1.0, executor tasks 5.0, py4j 2.4, JVM total 16.3:
+fewer methods reach C2, and the tasks run somewhat colder code.
+Alternating benchmark pairs put ``op_cpu_s`` 14 % lower on catalog
+(10/10 pairs) and 17 % on pyramid (6/6); the ``JVM_OPTIONS`` comment
+holds the numbers.
 """
 
 from __future__ import annotations
@@ -89,7 +102,26 @@ CODEGEN_CACHE_ENTRIES = 1000
 # collector ran a full GC at each metaspace threshold (5 "Metadata GC
 # Threshold" full GCs in a GC-logged catalog run, the longest 203 ms);
 # with it 0 full GCs and 10 young pauses, at the same RSS.
-JVM_OPTIONS = "-XX:+UseParallelGC -XX:MetaspaceSize=256m"
+# -XX:CompileThresholdScaling=4: a method must run 4x as often before C1,
+# and then C2, compiles it, so lukewarm planner and generated-code
+# methods stay in the cheaper tiers instead of costing C2 time in every
+# early operation. Sweep on catalog's first measured operation, 4
+# alternated seeds, op_cpu_s medians: scaling 1 (HotSpot's default)
+# 20.46, 2 19.05, 4 16.76 (4 below 2 on 4/4 seeds). An earlier sweep
+# read 8 at 16.5 against 4's 16.1, its executor tasks paying for the
+# colder code (5.9 against 4.5 CPU-s), as C1-only compilation
+# (-XX:TieredStopAtLevel=1) did. Ten alternating catalog pairs (seeds
+# 1401-1410) and six pyramid pairs (1411-1416), every run correct with
+# 0 failed ops, parent median [quartiles] -> median, pairs lower:
+# catalog op_cpu_s 20.55 [20.18-21.51] -> 17.67 (10/10), peak_rss_mb
+# 605.8 [604.0-608.0] -> 581.7 (9/10), setup_s 24.17 [23.58-25.82] ->
+# 27.18 (1/10); pyramid op_cpu_s 9.71 [9.40-10.39] -> 8.10 (6/6),
+# peak_rss_mb 1236.0 [1230.6-1241.1] -> 1195.0 (6/6), setup_s 20.50
+# [20.26-23.17] -> 23.03 (3/6). Less compiled code is the RSS drop (the
+# JVM's entry of rss_parts_mb); set-up and the early operations' wall
+# time rise, as they run colder code (catalog op wall 6.4 -> 7.4 s).
+# Spark's jobs, tasks and shuffle bytes per operation do not move.
+JVM_OPTIONS = "-XX:+UseParallelGC -XX:MetaspaceSize=256m -XX:CompileThresholdScaling=4"
 
 # Largest young generation, in MB, of a driver heap over 3 GB (see
 # jvm_options). The Parallel collector lets its young generation reach
@@ -113,6 +145,21 @@ MAX_NEW_SIZE_MB = 1024
 # (medians of 3 seeds: 684 MB with the collector alone, 608 with both;
 # ranges 654-707 and 599-617).
 MALLOC_ARENA_MAX = "2"
+
+# Threads in each of Spark's two exchange pools, shuffle-exchange and
+# broadcast-exchange (static confs: the pools are JVM-wide, sized at
+# their first use). A pool starts a new thread per submission until it
+# holds its cap and drops a thread only after 60 s idle, so at Spark's
+# caps (1024 and 128) the pools grew with the call count: 200 and 128
+# threads after 20 knn_ring calls, and in one catalog benchmark session
+# of 14 operations 326 and 128 (849 JVM threads, peak_rss_mb 785). With
+# 16, an 11-operation session held 16 and 16 (404 threads, 619 MB), and
+# four alternating catalog pairs read peak_rss_mb 594.6 -> 578.0 (4/4)
+# against the same JVM flags uncapped. A broadcast collects its child
+# in its pool's thread and a nested broadcast waits on the same pool,
+# so the cap must stay above the depth to which plans nest broadcasts:
+# keep it at 16 or more.
+EXCHANGE_THREADS = 16
 
 # pyspark.daemon with stat-checked zip invalidation and gc.freeze after
 # a worker's first task (see the module docstring and pyworker).
@@ -147,9 +194,9 @@ def get_spark(
     to ~4 CPU-ms (no zip directory re-read, no full gc walk per task);
     the repo root is set as the executors' PYTHONPATH so that the daemon
     can import it, also in a JVM that spark-submit started. The JVM runs
-    with ``jvm_options(<driver memory>)``, and it and its Python workers
-    with at most
-    ``MALLOC_ARENA_MAX`` malloc arenas (a value already in the
+    with ``jvm_options(<driver memory>)`` and its exchange thread pools
+    capped at ``EXCHANGE_THREADS``, and it and its Python workers with at
+    most ``MALLOC_ARENA_MAX`` malloc arenas (a value already in the
     environment wins); see the module docstring."""
     # make the package importable in the processes this driver starts
     # (a local JVM and its Python workers inherit the environment)
@@ -188,6 +235,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.shuffleExchange.maxThreadThreshold", str(EXCHANGE_THREADS))
+        .config("spark.sql.broadcastExchange.maxThreadThreshold", str(EXCHANGE_THREADS))
         .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
         # the daemon imports the package before any task's --py-files
         # reach sys.path; a JVM started by spark-submit does not inherit
