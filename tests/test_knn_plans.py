@@ -1,19 +1,24 @@
 """The kNN operators return plans and leave nothing behind.
 
-`knn_ring` over both cell joins and `knn_hex` are each called 20 times
-in one session with the density-sized ring, and on every fourth call
-also with a given first ring of 1 that leaves some queries to the brute
-branch; every result is collected. Building a plan may run only the
-`_density_ring` aggregate (no job at all when the ring is given), no
-RDD may stay persisted after a collect, no call after the first may
-compile a generated class, and every result must equal `knn_brute`'s
-rows. After the calls, each of Spark's two exchange thread pools
-(`shuffle-exchange`, `broadcast-exchange`, counted by thread name in
-`/proc/<jvm>/task/*/comm`) holds at most `session.EXCHANGE_THREADS`
-threads: uncapped, they grew by about 10 threads a call.
+`knn_ring` and `knn_hex` are each called 20 times in one session with
+the density-sized ring, and on every fourth call also with a given
+first ring of 1 that leaves some queries to the brute branch; every
+result is collected. Building a plan may run only the `_density_ring`
+aggregate (no job at all when the ring is given), no RDD may stay
+persisted after a collect, no call after the first may compile a
+generated class, and every result must equal `knn_brute`'s rows. Every
+final adaptive plan joins the candidates with a `ShuffledHashJoin` on
+the cell key, and its only `BroadcastNestedLoopJoin` is the brute
+branch's condition-free cross join (absent when AQE finds that branch
+empty). After the calls, each of Spark's two exchange thread pools
+(`shuffle-exchange`, `broadcast-exchange`) and its result-query-stage
+pool (`ResultQueryStage`), counted by thread name in
+`/proc/<jvm>/task/*/comm`, holds at most `session.EXCHANGE_THREADS`
+threads: uncapped, they grew with the call count.
 """
 
 import os
+import re
 
 import numpy as np
 import pytest
@@ -51,11 +56,24 @@ def _last_execution(spark) -> int:
     return max((e.executionId() for e in conv.asJava(store.executionsList())), default=-1)
 
 
-def _exchange_threads(spark) -> dict[str, int]:
-    """Live threads of the JVM's exchange pools. Thread names are
-    `<pool>-<n>`, cut at 15 characters in `comm`."""
+# the static confs that cap the pools, keyed by thread-name prefix
+POOL_CONFS = {
+    "shuffle-exchange": "spark.sql.shuffleExchange.maxThreadThreshold",
+    "broadcast-exchange": "spark.sql.broadcastExchange.maxThreadThreshold",
+    "ResultQueryStage": "spark.sql.resultQueryStage.maxThreadThreshold",
+}
+# the candidate join on either grid's cell key
+CANDIDATE_JOIN = re.compile(
+    r"ShuffledHashJoin \[(cell_x|hex_q)#\d+L, (cell_y|hex_r)#\d+L\], "
+    r"\[\1#\d+L, \2#\d+L\], Inner"
+)
+
+
+def _pool_threads(spark) -> dict[str, int]:
+    """Live threads of the JVM's exchange and result-query-stage pools.
+    Thread names are `<pool>-<n>`, cut at 15 characters in `comm`."""
     pid = spark._jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getPid()
-    counts = {"shuffle-exchange": 0, "broadcast-exchange": 0}
+    counts = dict.fromkeys(POOL_CONFS, 0)
     for tid in os.listdir(f"/proc/{pid}/task"):
         try:
             with open(f"/proc/{pid}/task/{tid}/comm") as f:
@@ -65,6 +83,13 @@ def _exchange_threads(spark) -> dict[str, int]:
         for pool in counts:
             counts[pool] += comm.startswith(pool[:15])
     return counts
+
+
+def _final_plan(df) -> str:
+    """The final adaptive plan of a collected DataFrame."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan
+    return plan.split("== Initial Plan ==")[0]
 
 
 def _corpus(spark):
@@ -104,10 +129,8 @@ def test_knn_operators_are_plans(spark):
     ops = {}
     for ring in (None, 1):
         q = near if ring is None else mixed
-        ops[f"ring_broadcast@{ring}"] = (q, lambda q=q, ring=ring: J.knn_ring(
+        ops[f"ring@{ring}"] = (q, lambda q=q, ring=ring: J.knn_ring(
             pts, q, ZOOM, GRID_BITS, k=K, initial_ring=ring))
-        ops[f"ring_shuffle@{ring}"] = (q, lambda q=q, ring=ring: J.knn_ring(
-            pts, q, ZOOM, GRID_BITS, k=K, initial_ring=ring, cell_join="shuffle"))
         ops[f"hex@{ring}"] = (q, lambda q=q, ring=ring: J.knn_hex(
             pts, q.select("q_id", "x", "y"), hex_size, k=K, initial_ring=ring))
     cols = ("q_id", "rank", "doc_id", "dist2")
@@ -136,16 +159,30 @@ def test_knn_operators_are_plans(spark):
             else:  # only the density aggregate: one execution, no join
                 assert len(built) == 1 and "HashAggregate" in built[0], (name, built)
                 assert not any("Join" in n for n in built[0]), (name, built)
-            rows = sorted(map(tuple, plan.select(*cols).collect()))
+            out = plan.select(*cols)
+            rows = sorted(map(tuple, out.collect()))
             assert sc._jsc.getPersistentRDDs().isEmpty(), (
                 f"{name} (call {call + 1}) left a persisted RDD"
             )
             assert rows == brute[name], f"{name} call {call + 1} differs from knn_brute"
+            final = _final_plan(out)
+            assert CANDIDATE_JOIN.search(final), final
+            nested = re.findall(r"BroadcastNestedLoopJoin.*", final)
+            assert all(n == "BroadcastNestedLoopJoin BuildRight, Cross" for n in nested), nested
+            if name.endswith("@None"):  # every query resolves: no brute join
+                assert not nested, final
         compiled[call + 1] = _compiles(spark) - before
     assert all(n == 0 for c, n in compiled.items() if c > 1), f"classes compiled per call: {compiled}"
     assert len(brute["hex@1"]) == 18 * K
-    for key in ("spark.sql.shuffleExchange.maxThreadThreshold",
-                "spark.sql.broadcastExchange.maxThreadThreshold"):
+    for key in POOL_CONFS.values():
         assert spark.conf.get(key) == str(EXCHANGE_THREADS), key
-    threads = _exchange_threads(spark)
+    threads = _pool_threads(spark)
     assert all(n <= EXCHANGE_THREADS for n in threads.values()), threads
+
+
+def test_knn_ring_accepts_only_the_shuffle_join(spark):
+    from tin_terrain_spark.operators import joins as J
+
+    pts, near, _ = _corpus(spark)
+    with pytest.raises(ValueError, match="cell_join"):
+        J.knn_ring(pts, near, ZOOM, GRID_BITS, k=K, cell_join="broadcast")

@@ -177,13 +177,7 @@ def test_knn_density_ring_equals_brute(spark, points):
         ).collect()
     }
     assert b == h2
-    # the many-query shuffled cell equi-join shape is exact too
-    s = {
-        (r["q_id"], r["rank"]): r["doc_id"]
-        for r in knn_ring(others, queries, 2, 5, k=5, cell_join="shuffle").collect()
-    }
-    assert b == s
-    # a first ring past the 8192-cell broadcast cap: the shuffled ball join
+    # a wide first ring (60: 10,981 hex cells a query) is exact too
     sh = {
         (r["q_id"], r["rank"]): r["doc_id"]
         for r in knn_hex(
@@ -231,7 +225,7 @@ def _knn_corpus(spark, kind, k, zoom, grid_bits):
     return cells(pts, "doc_id"), cells(qs, "q_id")
 
 
-@pytest.mark.parametrize("variant", ["ring_broadcast", "ring_shuffle", "hex"])
+@pytest.mark.parametrize("variant", ["ring_shuffle", "hex"])
 @pytest.mark.parametrize("corpus", ["collinear", "identical", "tiny"])
 def test_knn_degenerate_corpora_equal_brute(spark, corpus, variant):
     """The density-sizing edge branches — a collinear corpus (1-D
@@ -249,8 +243,7 @@ def test_knn_degenerate_corpora_equal_brute(spark, corpus, variant):
         out = knn_hex(pts, queries.select("q_id", "x", "y"),
                       tile_size_meters(zoom + grid_bits), k=k)
     else:
-        out = knn_ring(pts, queries, zoom, grid_bits, k=k,
-                       cell_join=variant.split("_")[1])
+        out = knn_ring(pts, queries, zoom, grid_bits, k=k, cell_join="shuffle")
     got = sorted(tuple(r) for r in out.select("q_id", "rank", "doc_id", "dist2").collect())
     want = sorted(
         tuple(r) for r in knn_brute(pts, queries.select("q_id", "x", "y"), k=k)
@@ -536,7 +529,8 @@ def test_hot_cell_kernel_input_bounded(spark):
 
 def test_connected_components_transitive(spark):
     """CC over pairs: A~B~C one cluster WITHOUT an A~C edge; chains,
-    a long path (pointer-jump convergence), and isolated pairs."""
+    a long path (pointer-jump convergence), and isolated pairs. The
+    result is a plan: the call and its collect cache no relation."""
     from tin_terrain_spark.operators.dedup import connected_components
 
     # components: {1,2,3} (path), {10,11} (edge), {20..29} (long chain)
@@ -544,7 +538,10 @@ def test_connected_components_transitive(spark):
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11)] + chain, "doc_a long, doc_b long"
     )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    n_cached = cache.numCachedEntries()
     rows = connected_components(pairs).collect()
+    assert cache.numCachedEntries() == n_cached
     got = {r["doc_id"]: (r["cluster_id"], r["cluster_size"]) for r in rows}
     assert got[1] == (1, 3) and got[2] == (1, 3) and got[3] == (1, 3)
     assert got[10] == (10, 2) and got[11] == (10, 2)
@@ -818,7 +815,7 @@ def test_store_probe_hot_bucket_equals_brute_jaccard(spark):
 @pytest.mark.parametrize("empty", ["queries", "points"])
 def test_knn_empty_inputs_equal_brute(spark, points, empty):
     """0 queries (the ring round runs) or 0 points (the brute plan):
-    knn_ring over both cell joins and knn_hex return knn_brute's rows."""
+    knn_ring and knn_hex return knn_brute's rows."""
     import pyspark.sql.functions as F
 
     from tin_terrain_spark.functions.geocode_exprs import tile_size_meters
@@ -835,10 +832,8 @@ def test_knn_empty_inputs_equal_brute(spark, points, empty):
         tuple(r) for r in knn_brute(pts, queries.select("q_id", "x", "y"), k=5)
         .select(*cols).collect()
     )
-    outs = [knn_ring(pts, queries, 2, 5, k=5, cell_join=j)
-            for j in ("broadcast", "shuffle")]
-    outs.append(knn_hex(pts, queries.select("q_id", "x", "y"), tile_size_meters(7), k=5))
-    for out in outs:
+    for out in (knn_ring(pts, queries, 2, 5, k=5),
+                knn_hex(pts, queries.select("q_id", "x", "y"), tile_size_meters(7), k=5)):
         assert sorted(tuple(r) for r in out.select(*cols).collect()) == want
 
 

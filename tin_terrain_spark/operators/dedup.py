@@ -501,6 +501,17 @@ def connected_components(pairs: DataFrame,
     plan stays O(1) per round instead of growing with the iteration
     count. No collect of data rows.
 
+    Spark actions (SQL executions) per call: 3·rounds + 1 — the
+    edge-list checkpoint, then per round its stepped checkpoint (eager),
+    its pointer-jump checkpoint (lazy, but under AQE planning it runs
+    the jump's shuffle stages) and its potential aggregate. The
+    returned frame is a lazy plan, labels ⋈ cluster sizes over the last
+    round's label checkpoint; nothing is cached, so `unpersist` on it
+    is a no-op. The call's 2·rounds + 1 checkpointed RDDs stay
+    persisted until Spark's context cleaner reclaims them once their
+    frames are garbage-collected; `unpersist` on a localCheckpoint-ed
+    frame does not release them.
+
     Returns (doc_id, cluster_id, cluster_size) for every vertex of the
     graph (docs with no edge don't appear; their cluster is trivially
     themselves). If `stats` is passed, it receives {"rounds": n} — the
@@ -571,43 +582,31 @@ def connected_components(pairs: DataFrame,
     )
     labels = jump(step0)
     prev_sum = potential(labels)
-    step0.unpersist()
     rounds = 1
-    try:
-        for _ in range(24):  # at most 25 rounds with round 0
-            stepped = (
-                edges.join(
-                    labels.hint("SHUFFLE_HASH"),
-                    edges["doc_b"] == labels["doc_id"], "inner"
-                )
-                .groupBy(F.col("doc_a").alias("doc_id"))
-                .agg(F.min("label").alias("label"))
-                .localCheckpoint()
+    for _ in range(24):  # at most 25 rounds with round 0
+        stepped = (
+            edges.join(
+                labels.hint("SHUFFLE_HASH"),
+                edges["doc_b"] == labels["doc_id"], "inner"
             )
-            new_labels = jump(stepped)
-            cur_sum = potential(new_labels)
-            stepped.unpersist()
-            labels.unpersist()
-            labels = new_labels
-            rounds += 1
-            if cur_sum == prev_sum:
-                break
-            prev_sum = cur_sum
-        if stats is not None:
-            stats["rounds"] = rounds
-        sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
-        out = labels.join(sizes, "label").select(
-            "doc_id",
-            F.col("label").alias("cluster_id"),
-            "cluster_size",
+            .groupBy(F.col("doc_a").alias("doc_id"))
+            .agg(F.min("label").alias("label"))
+            .localCheckpoint()
         )
-        # pin the result, then release the iteration state
-        out = out.persist()
-        out.count()
-        return out
-    finally:
-        edges.unpersist()
-        labels.unpersist()
+        labels = jump(stepped)
+        rounds += 1
+        cur_sum = potential(labels)
+        if cur_sum == prev_sum:
+            break
+        prev_sum = cur_sum
+    if stats is not None:
+        stats["rounds"] = rounds
+    sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias("cluster_size"))
+    return labels.join(sizes, "label").select(
+        "doc_id",
+        F.col("label").alias("cluster_id"),
+        "cluster_size",
+    )
 
 
 def sql_dup_clusters(pairs_sql: str) -> str:

@@ -63,7 +63,17 @@ def pagerank(
     drift. Dangling nodes (no out-edges) redistribute their mass
     uniformly each iteration, per the standard formulation. Callers
     that already know the node count pass n_nodes to skip the count
-    action (most query shapes count the corpus anyway)."""
+    action (most query shapes count the corpus anyway).
+
+    Spark actions (SQL executions) per call: iters + 3, plus one for the
+    node count when n_nodes is None and one for the dangling-set
+    checkpoint when the graph has dangling nodes — the edge-weight
+    checkpoint, the dangling probe, the initial rank checkpoint and one
+    rank checkpoint per iteration. The returned frame is the last
+    round's checkpoint. The iters + 2 (+1 with dangling nodes)
+    checkpointed RDDs stay persisted until Spark's context cleaner
+    reclaims them once their frames are garbage-collected; `unpersist`
+    on a localCheckpoint-ed frame does not release them."""
     spark = edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     if n_nodes is None:
@@ -218,7 +228,15 @@ def hits(edges: DataFrame, nodes: DataFrame, iters: int = N_ITERS) -> DataFrame:
       node missing from an intermediate auth/hub table contributes
       exactly 0 through the inner equi-join, so zeros are only
       materialized ONCE at the end. Per-round work drops from 4 joins
-      to 2, and the shuffled volume from O(|E|)+O(|V|) to O(|V|)."""
+      to 2, and the shuffled volume from O(|E|)+O(|V|) to O(|V|).
+
+    Spark actions (SQL executions) per call: iters + 3 — the two
+    edge-list checkpoints, the initial hub checkpoint and one hub
+    checkpoint per round; the returned frame is a lazy plan over the
+    last round. The iters + 3 checkpointed RDDs stay persisted until
+    Spark's context cleaner reclaims them once their frames are
+    garbage-collected; `unpersist` on a localCheckpoint-ed frame does
+    not release them."""
     spark = edges.sparkSession
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     e_src = edges.repartition(n_part, "src").localCheckpoint()

@@ -7,9 +7,12 @@ coordinate lies in [min, max] falls in a covering tile; the exact
 `between` refine applies the reference's eps-padded containment
 (geometrix.cpp:256-260) with eps=0 for exact oracle parity.
 
-J6 kNN: grid-ring expansion — candidates from the Chebyshev ring of
-cells around each query, exact distance refine + per-query top-k
-window. A query's ring result is final only when its k-th distance is
+J6 kNN: grid-ring expansion — candidates from the ring of cells around
+each query, exact distance refine + per-query top-k window. Both grids
+(square cells, axial hexes) build their candidates the same way: each
+query's cell ball is exploded to one row per cell and shuffle-hash
+joined with the points on the cell key, so both sides are partitioned
+by cell. A query's ring result is final only when its k-th distance is
 ≤ the ring's guaranteed radius (ring_r * cell_size, the geometry the
 reference uses for buffered partitions, dem2tintiles_workflow.cpp:51-53);
 the queries the ring leaves open take the exact brute-force answer.
@@ -181,17 +184,24 @@ def _density_ring(pts: DataFrame, k: int, cell_m: float,
 
 
 def _knn_plan(pts: DataFrame, q: DataFrame, k: int, initial_ring: int | None,
-              cand_fn, guarantee_m, cell_m: float, geometry: str) -> DataFrame:
+              ball_fn, cell_key: list[str], guarantee_m, cell_m: float,
+              geometry: str) -> DataFrame:
     """The one kNN plan behind knn_ring and knn_hex: a single ring round,
     then knn_brute for the queries that round leaves open.
 
-    The round builds the candidates within ring R of every query
-    (cand_fn), refines them by exact distance and takes the per-query
-    top-k. A query is RESOLVED when it found k rows and its k-th
-    distance is <= guarantee_m(R): nothing outside the ring can be
-    closer. The result is topk ⋉ resolved (left semi-join) unioned with
-    knn_brute over the queries ▷ resolved (left anti-join), so every
-    query gets an exact answer whatever R is.
+    The round builds the candidates within ring R of every query:
+    ball_fn explodes each query's cell ball to (q_id, qx, qy, *cell_key)
+    rows, and the points join it on cell_key. The SHUFFLE_HASH hint pins
+    that join's shape, both sides shuffled on the cell key: without it
+    the planner broadcasts any ball under the broadcast threshold (every
+    small test), and a ball of many queries or a wide ring would go
+    through the Spark driver. The round then refines the candidates by
+    exact distance and takes the per-query top-k. A query is RESOLVED
+    when it found k rows and its k-th distance is <= guarantee_m(R):
+    nothing outside the ring can be closer. The result is topk ⋉
+    resolved (left semi-join) unioned with knn_brute over the queries ▷
+    resolved (left anti-join), so every query gets an exact answer
+    whatever R is.
 
     Building the plan runs one Spark action at most: the _density_ring
     aggregate that sizes R when initial_ring is None (over cell_m /
@@ -209,7 +219,8 @@ def _knn_plan(pts: DataFrame, q: DataFrame, k: int, initial_ring: int | None,
     if initial_ring is None:  # tiny corpus: brute IS the plan
         return knn_brute(pts, q_xy, k)
     guarantee2 = float(guarantee_m(initial_ring)) ** 2
-    cand = cand_fn(pts, q, initial_ring).withColumn(
+    ball = ball_fn(q, initial_ring)
+    cand = pts.join(ball.hint("SHUFFLE_HASH"), cell_key, "inner").withColumn(
         "dist2",
         (F.col("x") - F.col("qx")) * (F.col("x") - F.col("qx"))
         + (F.col("y") - F.col("qy")) * (F.col("y") - F.col("qy")),
@@ -244,10 +255,20 @@ def _knn_plan(pts: DataFrame, q: DataFrame, k: int, initial_ring: int | None,
     )
 
 
+def _square_ring_cells(q: DataFrame, ring: int) -> DataFrame:
+    """Enumerate the square BALL of Chebyshev radius `ring` around each
+    query cell as rows — (2R+1)² cells per query."""
+    r = F.lit(ring)
+    return (
+        q.withColumn("cell_x", F.explode(F.sequence(F.col("qcx") - r, F.col("qcx") + r)))
+        .withColumn("cell_y", F.explode(F.sequence(F.col("qcy") - r, F.col("qcy") + r)))
+        .select("q_id", "qx", "qy", "cell_x", "cell_y")
+    )
+
+
 def knn_ring(points: DataFrame, queries: DataFrame, zoom: int, grid_bits: int,
              k: int = 5, initial_ring: int | None = None,
-             repartition_to: int | None = None,
-             cell_join: str = "broadcast") -> DataFrame:
+             cell_join: str = "shuffle") -> DataFrame:
     """J6 scale path: one ring join on the cell grid, exact brute
     fallback only for the queries the ring does not resolve.
 
@@ -261,27 +282,17 @@ def knn_ring(points: DataFrame, queries: DataFrame, zoom: int, grid_bits: int,
     brute branch is the rare-miss path. See _knn_plan for the plan
     and its one action.
 
-    cell_join picks the candidate-join physical shape:
-      "broadcast" (default): broadcast the query set and range-join on
-        the cell box — NO shuffle of the big side, the right plan when
-        the query set is driver-small (the common lookup case).
-      "shuffle": explode each query's (2R+1)² cell box to rows and
-        hash equi-join on (cell_x, cell_y) WITHOUT broadcast — the
-        many-query plan (10^6+ queries would otherwise evaluate every
-        box predicate against every point row); both sides shuffle on
-        the cell key, partial work scales with |q|·ball + |points|.
-    Both shapes are exact and hash-equal to knn_brute (tested).
+    The candidates come from each query's (2R+1)² cell box exploded to
+    (cell_x, cell_y) rows and hash-joined with the points, both sides
+    shuffled on the cell key: work scales with |q|·ball + |points|, and
+    neither side goes through the Spark driver. Exact and hash-equal to
+    knn_brute (tested). cell_join names that join and accepts only
+    "shuffle"; any other value raises ValueError.
     """
-    if cell_join not in ("broadcast", "shuffle"):
-        raise ValueError(f"cell_join must be broadcast|shuffle, not {cell_join!r}")
+    if cell_join != "shuffle":
+        raise ValueError(f"cell_join must be 'shuffle', not {cell_join!r}")
     cell_m = GX.tile_size_meters(zoom + grid_bits)
     pts = points.select("doc_id", "x", "y", "cell_x", "cell_y")
-    # No .rdd probing (that forces an RDD conversion) and no implicit
-    # shuffle of the big side: callers with single-file local inputs
-    # opt in via repartition_to (the query layer passes the session
-    # default parallelism); cluster-scale inputs keep their layout.
-    if repartition_to is not None:
-        pts = pts.repartition(repartition_to)
     q = queries.select(
         "q_id",
         F.col("x").alias("qx"),
@@ -289,37 +300,9 @@ def knn_ring(points: DataFrame, queries: DataFrame, zoom: int, grid_bits: int,
         F.col("cell_x").alias("qcx"),
         F.col("cell_y").alias("qcy"),
     )
-
-    def cand_fn(pts_r, q_r, ring):
-        if cell_join == "shuffle":
-            r = F.lit(ring)
-            ball = (
-                q_r.withColumn(
-                    "cell_x", F.explode(F.sequence(F.col("qcx") - r, F.col("qcx") + r))
-                )
-                .withColumn(
-                    "cell_y", F.explode(F.sequence(F.col("qcy") - r, F.col("qcy") + r))
-                )
-                .select("q_id", "qx", "qy", "cell_x", "cell_y")
-            )
-            # pin the declared physical shape: both sides shuffle on
-            # the cell key. Without the hint the planner auto-broadcasts
-            # any small-sample ball (sub-threshold at test scale),
-            # silently turning the many-query plan back into the
-            # broadcast plan it exists to avoid.
-            return pts_r.join(ball.hint("SHUFFLE_HASH"), ["cell_x", "cell_y"], "inner")
-        return pts_r.join(
-            F.broadcast(q_r),
-            (F.col("cell_x") >= F.col("qcx") - ring)
-            & (F.col("cell_x") <= F.col("qcx") + ring)
-            & (F.col("cell_y") >= F.col("qcy") - ring)
-            & (F.col("cell_y") <= F.col("qcy") + ring),
-            "inner",
-        )
-
     return _knn_plan(
-        pts, q, k, initial_ring,
-        cand_fn, lambda r: r * cell_m, cell_m, "square",
+        pts, q, k, initial_ring, _square_ring_cells, ["cell_x", "cell_y"],
+        lambda r: r * cell_m, cell_m, "square",
     )
 
 
@@ -417,11 +400,10 @@ def _hex_ring_cells(q: DataFrame, ring: int) -> DataFrame:
     """Enumerate the hex BALL of radius `ring` around each query cell
     as rows — 3R(R+1)+1 cells per query (the axial-coordinate identity:
     hexdist <= R  ⟺  dq in [-R,R], dr in [max(-R,-dq-R), min(R,-dq+R)]).
-    Turns the ring lookup into a broadcast HASH equi-join on (hex_q,
-    hex_r) — at 10^12 points every point row probes a hash table once,
-    instead of evaluating a hex-distance predicate against every query
-    (BroadcastNestedLoopJoin, the plan the theta-join form compiles
-    to)."""
+    Turns the ring lookup into a HASH equi-join on (hex_q, hex_r)
+    instead of a hex-distance predicate evaluated against every
+    (point, query) pair, the nested-loop join the theta-join form
+    compiles to."""
     r = F.lit(ring)
     return (
         q.withColumn("dq", F.explode(F.sequence(-r, r)))
@@ -443,43 +425,26 @@ def _hex_ring_cells(q: DataFrame, ring: int) -> DataFrame:
 
 
 def knn_hex(points: DataFrame, queries: DataFrame, hex_size: float,
-            k: int = 5, initial_ring: int | None = None,
-            repartition_to: int | None = None) -> DataFrame:
+            k: int = 5, initial_ring: int | None = None) -> DataFrame:
     """J6 over the H3-style hex index (charter: "kNN lookups over H3
     ring expansion"): the same plan as knn_ring (_knn_plan), but the
     candidate ring is hexagonal — the ring ball is exploded to cell
-    rows and equi-joined on (hex_q, hex_r) — and the resolution
+    rows and shuffle-hash joined on (hex_q, hex_r) — and the resolution
     guarantee uses the hex staircase geometry
     (hexgrid.hex_ring_guarantee_m). Cells are computed from the meter
     coordinates with pure Column expressions (no UDF, no native lib);
     nothing is persisted, so each action derives them again. The ring
     is density-derived so it is expected to resolve every query.
     Exactness: results are hash-equal to knn_brute (the driver gate's
-    oracle recomputes brute-force kNN in DuckDB). The ring ball is
-    broadcast while it has at most 8192 cells a query; past that both
-    sides shuffle on the hex cell key."""
+    oracle recomputes brute-force kNN in DuckDB)."""
     from ..functions import hexgrid as HG
 
-    pts = points.select("doc_id", "x", "y")
-    if repartition_to is not None:
-        pts = pts.repartition(repartition_to)
-    pts = HG.with_hex_cell(pts, hex_size)
+    pts = HG.with_hex_cell(points.select("doc_id", "x", "y"), hex_size)
     q = HG.with_hex_cell(
         queries.select("q_id", F.col("x").alias("qx"), F.col("y").alias("qy")),
         hex_size, x="qx", y="qy", q_col="qhq", r_col="qhr",
     )
-
-    def cand_fn(pts_r, q_r, ring):
-        ball = _hex_ring_cells(q_r, ring)
-        # the ball has 3R(R+1)+1 rows PER QUERY and R is density-derived
-        # (unbounded on sparse corpora): past the cap drop the broadcast
-        # hint and let the equi-join shuffle instead of forcing an
-        # arbitrarily large broadcast through the driver
-        if 3 * ring * (ring + 1) + 1 <= 8192:
-            ball = F.broadcast(ball)
-        return pts_r.join(ball, ["hex_q", "hex_r"], "inner")
-
     return _knn_plan(
-        pts, q, k, initial_ring,
-        cand_fn, lambda r: HG.hex_ring_guarantee_m(r, hex_size), hex_size, "hex",
+        pts, q, k, initial_ring, _hex_ring_cells, ["hex_q", "hex_r"],
+        lambda r: HG.hex_ring_guarantee_m(r, hex_size), hex_size, "hex",
     )

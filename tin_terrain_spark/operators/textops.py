@@ -712,7 +712,15 @@ def bpe_merges(docs: DataFrame, k: int = 6) -> DataFrame:
     leftmost-non-overlapping merging (a just-merged token LR can never
     equal L, so the fold needs no lookahead). Per-round eager
     localCheckpoint = the repo's CC/pagerank loop discipline (bounds
-    plan depth; ~2k actions total on the tiny vocab relation).
+    plan depth).
+
+    Spark actions (SQL executions) per call: k + 1 — the vocabulary
+    checkpoint, then one vocabulary checkpoint per round (the round's
+    argmax runs inside it). The returned merges are a lazy plan that
+    recomputes each round's one-row argmax from that round's checkpoint.
+    The k + 1 checkpointed RDDs stay persisted until Spark's context
+    cleaner reclaims them once their frames are garbage-collected;
+    `unpersist` on a localCheckpoint-ed frame does not release them.
 
     Returns k rows: (rank, left, right, pair_count)."""
     merges, _vocab = _bpe_learn(docs, k)

@@ -80,10 +80,7 @@ def q_knn_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = pts.filter(F.col("doc_id") < 8).select(
         F.col("doc_id").alias("q_id"), "x", "y", "cell_x", "cell_y"
     )
-    return J.knn_ring(
-        pts.filter(F.col("doc_id") >= 8), queries, ZOOM, GRID_BITS, k=5,
-        repartition_to=spark.sparkContext.defaultParallelism,
-    )
+    return J.knn_ring(pts.filter(F.col("doc_id") >= 8), queries, ZOOM, GRID_BITS, k=5)
 
 
 # hex circumradius ~ the square cell size at (ZOOM + GRID_BITS): the
@@ -99,10 +96,7 @@ def q_knn_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = pts.filter(F.col("doc_id") < 8).select(
         F.col("doc_id").alias("q_id"), "x", "y"
     )
-    return J.knn_hex(
-        pts.filter(F.col("doc_id") >= 8), queries, HEX_SIZE, k=5,
-        repartition_to=spark.sparkContext.defaultParallelism,
-    )
+    return J.knn_hex(pts.filter(F.col("doc_id") >= 8), queries, HEX_SIZE, k=5)
 
 
 def q_hex_cells(spark: SparkSession, sf_dir: str) -> DataFrame:

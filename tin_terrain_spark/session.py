@@ -37,12 +37,13 @@ or on ``spark.executorEnv.PYTHONPATH``), not only through per-task
 The last is the JVM itself: ``JVM_OPTIONS`` (the Parallel collector
 instead of G1, a metaspace GC threshold, and JIT compile thresholds
 scaled ×4), ``EXCHANGE_THREADS`` (the cap of Spark's two exchange
-thread pools), ``MAX_NEW_SIZE_MB`` (a young generation cap for a heap
-over 3 GB, so that a heap that starts small does not outgrow G1's) and
-``MALLOC_ARENA_MAX``; their comments hold the measurements. Outside its
-heap the JVM holds its collector's data structures, metaspace, the code
-cache, thread stacks and the malloc arenas of its threads, which was
-most of the catalog benchmark's peak RSS. ``jvm_options`` puts the
+thread pools and of its result-query-stage pool), ``MAX_NEW_SIZE_MB``
+(a young generation cap for a heap over 3 GB, so that a heap that
+starts small does not outgrow G1's) and ``MALLOC_ARENA_MAX``; their
+comments hold the measurements. Outside its heap the JVM holds its
+collector's data structures, metaspace, the code cache, thread stacks
+and the malloc arenas of its threads, which was most of the catalog
+benchmark's peak RSS. ``jvm_options`` puts the
 flags for the session's heap in
 ``spark.driver.defaultJavaOptions``, which Spark puts before a caller's
 ``spark.driver.extraJavaOptions``, so a caller's own JVM options
@@ -158,7 +159,12 @@ MALLOC_ARENA_MAX = "2"
 # against the same JVM flags uncapped. A broadcast collects its child
 # in its pool's thread and a nested broadcast waits on the same pool,
 # so the cap must stay above the depth to which plans nest broadcasts:
-# keep it at 16 or more.
+# keep it at 16 or more. The same cap holds the result-query-stage
+# pool (spark.sql.resultQueryStage.maxThreadThreshold, default 1024),
+# which grew the same way: in a 60 s catalog benchmark session with the
+# exchange pools capped it went from 8 to 84 threads over 11
+# operations (JVM 326 -> 401 threads); capped, it held 16 and the JVM
+# 333-334 threads over 12.
 EXCHANGE_THREADS = 16
 
 # pyspark.daemon with stat-checked zip invalidation and gc.freeze after
@@ -194,10 +200,11 @@ def get_spark(
     to ~4 CPU-ms (no zip directory re-read, no full gc walk per task);
     the repo root is set as the executors' PYTHONPATH so that the daemon
     can import it, also in a JVM that spark-submit started. The JVM runs
-    with ``jvm_options(<driver memory>)`` and its exchange thread pools
-    capped at ``EXCHANGE_THREADS``, and it and its Python workers with at
-    most ``MALLOC_ARENA_MAX`` malloc arenas (a value already in the
-    environment wins); see the module docstring."""
+    with ``jvm_options(<driver memory>)`` and its exchange and
+    result-query-stage thread pools capped at ``EXCHANGE_THREADS``, and
+    it and its Python workers with at most ``MALLOC_ARENA_MAX`` malloc
+    arenas (a value already in the environment wins); see the module
+    docstring."""
     # make the package importable in the processes this driver starts
     # (a local JVM and its Python workers inherit the environment)
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -237,6 +244,7 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.shuffleExchange.maxThreadThreshold", str(EXCHANGE_THREADS))
         .config("spark.sql.broadcastExchange.maxThreadThreshold", str(EXCHANGE_THREADS))
+        .config("spark.sql.resultQueryStage.maxThreadThreshold", str(EXCHANGE_THREADS))
         .config("spark.python.daemon.module", PYTHON_DAEMON_MODULE)
         # the daemon imports the package before any task's --py-files
         # reach sys.path; a JVM started by spark-submit does not inherit
