@@ -11,13 +11,20 @@ import os
 import pytest
 
 from tin_terrain_spark.operators.geocode import geocode_points
-from tin_terrain_spark.pipeline.benchmark import (
-    PARAM_MAX_ERROR,
-    PARAM_STEP,
-    run_benchmark_sweep,
-)
+from tin_terrain_spark.pipeline import benchmark as B
+from tin_terrain_spark.pipeline.benchmark import PARAM_MAX_ERROR, PARAM_STEP
 
 SF_DIR = "/root/testdata/sf0.001"
+# a 2 + 2 + 1 + 1 subset of the reference's parameter sets, to stay small
+SMALL_PARAMS = {"PARAM_MAX_ERROR": [1.0, 5.0], "PARAM_STEP": [2], "PARAM_THRESHOLD": [0.5]}
+
+
+def _small_sweep(*args, **kwargs):
+    """run_benchmark_sweep over SMALL_PARAMS."""
+    with pytest.MonkeyPatch.context() as mp:
+        for name, values in SMALL_PARAMS.items():
+            mp.setattr(B, name, values)
+        return B.run_benchmark_sweep(*args, **kwargs)
 
 
 @pytest.fixture(scope="module")
@@ -33,10 +40,7 @@ def sweep(spark, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("sweep"))
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     pts = geocode_points(docs, zoom=1, grid_bits=5)
-    rows = run_benchmark_sweep(
-        pts, zoom=1, out_dir=out, input_name="sf0.001",
-        max_errors=[1.0, 5.0], steps=[2], thresholds=[0.5],
-    )
+    rows = _small_sweep(pts, zoom=1, out_dir=out, input_name="sf0.001")
     return out, pts, rows
 
 
@@ -114,10 +118,7 @@ def test_dense_count_law(sweep):
 
 def test_resume_skips_done(sweep, spark):
     out, pts, _ = sweep
-    again = run_benchmark_sweep(
-        pts, zoom=1, out_dir=out, input_name="sf0.001",
-        max_errors=[1.0, 5.0], steps=[2], thresholds=[0.5],
-    )
+    again = _small_sweep(pts, zoom=1, out_dir=out, input_name="sf0.001")
     assert again == []
     csv = open(os.path.join(out, "tin_terrain_benchmarks.csv")).read().splitlines()
     assert len(csv) == 7  # no duplicate appends
@@ -126,8 +127,6 @@ def test_resume_skips_done(sweep, spark):
 def test_failed_sweep_releases_cells(spark, tmp_path, monkeypatch):
     """A parametrization that raises still unpersists the sweep's
     shared cell grid: no cached relation outlives the failed call."""
-    from tin_terrain_spark.pipeline import benchmark as B
-
     def fail(*args, **kwargs):
         raise RuntimeError("parametrization failed")
 
@@ -135,8 +134,5 @@ def test_failed_sweep_releases_cells(spark, tmp_path, monkeypatch):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     pts = geocode_points(docs, zoom=1, grid_bits=5)
     with pytest.raises(RuntimeError, match="parametrization failed"):
-        run_benchmark_sweep(
-            pts, zoom=1, out_dir=str(tmp_path), max_errors=[1.0],
-            steps=[2], thresholds=[0.5],
-        )
+        _small_sweep(pts, zoom=1, out_dir=str(tmp_path))
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

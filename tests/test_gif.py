@@ -98,9 +98,7 @@ def test_disposal_2_restores_background():
     f0 = np.full((3, 3), 1, np.uint8)        # green
     f1 = np.full((3, 3), 2, np.uint8)        # transparent
     f1[0, 0] = 1
-    data = G.encode_gif(
-        np.stack([f0, f1]), pal, transparent=2, disposal=2, bg_index=0
-    )
+    data = G.encode_gif(np.stack([f0, f1]), pal, transparent=2, disposal=2)
     frames = G.decode_gif_frames(data)
     want = np.broadcast_to(pal[0], (3, 3, 3)).copy()
     want[0, 0] = pal[1]
@@ -204,28 +202,30 @@ def spark():
 def test_spark_real_decode_and_frames(spark):
     """GIF payloads flow through the REAL decode branch of
     image_features, and animated GIFs give REAL per-frame features in
-    sample_frames — equality against the kernel computed locally."""
+    sample_frames — equality against the kernel computed locally. The
+    12-pixel-wide image pads image_features' 16-vector with zeros; 21
+    frames give sample_frames three (every 10th)."""
     from tin_terrain_spark.operators import multimodal as M
 
     rng = np.random.RandomState(11)
     pal = _palette(16)
-    frames_idx = rng.randint(0, 16, size=(3, 12, 12)).astype(np.uint8)
+    frames_idx = rng.randint(0, 16, size=(21, 12, 12)).astype(np.uint8)
     payload = G.encode_gif(frames_idx, pal)
     df = spark.createDataFrame(
-        [(0, "video", 12, 12, 3, bytearray(payload))],
+        [(0, "video", 12, 12, 21, bytearray(payload))],
         "doc_id long, media_type string, width int, height int, "
         "n_frames int, payload binary",
     )
-    feat = M.image_features(df, dim=12).collect()[0]["feature"]
+    feat = M.image_features(df).collect()[0]["feature"]
     px = P.to_gray_f32(G.decode_gif(payload))
-    want = px.sum(axis=0, dtype=np.float64)[:12].astype(np.float32)
-    assert np.allclose(np.array(feat, np.float32), want)
+    want = px.sum(axis=0, dtype=np.float64).astype(np.float32)
+    assert np.allclose(np.array(feat, np.float32), np.pad(want, (0, 4)))
 
-    rows = M.sample_frames(df, every=1, dim=4).collect()
-    assert {r["frame_idx"] for r in rows} == {0, 1, 2}
+    rows = M.sample_frames(df).collect()
+    assert {r["frame_idx"] for r in rows} == {0, 10, 20}
     all_frames = G.decode_gif_frames(payload)
     for r in rows:
         fpx = P.to_gray_f32(all_frames[r["frame_idx"]])
-        want_f = fpx.sum(axis=0, dtype=np.float64)[:4].astype(np.float32)
+        want_f = fpx.sum(axis=0, dtype=np.float64)[:8].astype(np.float32)
         got = np.array(r["frame_feature"], np.float32)
         assert np.allclose(got, want_f)

@@ -14,14 +14,16 @@ def spark():
     s.stop()
 
 
-def _reference_pagerank(n, edges, iters=5, d=0.85):
+def _reference_pagerank(n, edges, d=0.85):
     from collections import defaultdict
+
+    from tin_terrain_spark.operators.graph import N_ITERS
 
     odeg = defaultdict(int)
     for s, _ in edges:
         odeg[s] += 1
     r = {v: 1.0 / n for v in range(n)}
-    for _ in range(iters):
+    for _ in range(N_ITERS):
         contrib = defaultdict(float)
         for s, t in edges:
             contrib[t] += r[s] / odeg[s]
@@ -33,7 +35,7 @@ def _reference_pagerank(n, edges, iters=5, d=0.85):
     return r
 
 
-def _run(spark, n, edges, iters=5):
+def _run(spark, n, edges):
     from pyspark.sql import functions as F
 
     from tin_terrain_spark.operators.graph import pagerank
@@ -42,7 +44,7 @@ def _run(spark, n, edges, iters=5):
     nodes = spark.range(n).select(F.col("id").alias("node"))
     return {
         r["node"]: r["rank"]
-        for r in pagerank(e, nodes, iters=iters).collect()
+        for r in pagerank(e, nodes).collect()
     }
 
 
@@ -79,8 +81,8 @@ def test_hub_receives_more_rank(spark):
 def test_multigraph_duplicate_edges_weighting(spark):
     # duplicate edge doubles the share: 0->1 twice, 0->2 once
     edges = [(0, 1), (0, 1), (0, 2), (1, 0), (2, 0)]
-    got = _run(spark, 3, edges, iters=3)
-    want = _reference_pagerank(3, edges, iters=3)
+    got = _run(spark, 3, edges)
+    want = _reference_pagerank(3, edges)
     for v in range(3):
         assert got[v] == pytest.approx(want[v], abs=1e-12)
 
@@ -107,12 +109,14 @@ def test_hits_hand_case(spark):
         [(1, 3), (2, 3), (3, 1)], "src BIGINT, dst BIGINT"
     )
     nodes = spark.createDataFrame([(1,), (2,), (3,)], "node BIGINT")
-    got = {r["node"]: (r["auth"], r["hub"]) for r in hits(edges, nodes, iters=2).collect()}
+    got = {r["node"]: (r["auth"], r["hub"]) for r in hits(edges, nodes).collect()}
     # hand iteration: h0=1 all.
     # a1: a(3)=h(1)+h(2)=2, a(1)=h(3)=1, a(2)=0
     # h1: h(1)=a(3)=2, h(2)=a(3)=2, h(3)=a(1)=1
     # a2: a(3)=h1(1)+h1(2)=4, a(1)=h1(3)=1, a(2)=0
     # h2: h(1)=a2(3)=4, h(2)=4, h(3)=a2(1)=1
-    assert got[3] == (4, 1)
-    assert got[1] == (1, 4)
-    assert got[2] == (0, 4)
+    # each later round doubles a(3) and h(1), h(2): after the 5 rounds
+    # (N_ITERS) a(3)=32, h(1)=h(2)=32, and a(1)=h(3)=1
+    assert got[3] == (32, 1)
+    assert got[1] == (1, 32)
+    assert got[2] == (0, 32)

@@ -26,7 +26,7 @@ def test_terra_small_dense_grid():
     verts, faces = generate_tin_terra(g, max_error=0.02)
     assert len(verts) >= 4
     assert len(faces) >= 2
-    ok, problems = check_tin_properties(verts, faces, expect_square_hull=True)
+    ok, problems = check_tin_properties(verts, faces)
     assert ok, problems
     assert not triangles_overlap_exists(verts, faces)
 
@@ -68,7 +68,7 @@ def test_terra_with_random_holes():
     mask = rng.randint(0, 16, size=g.z.shape) != 0
     g.z[mask] = np.nan
     verts, faces = generate_tin_terra(g, max_error=0.5)
-    ok, problems = check_tin_properties(verts, faces, expect_square_hull=True)
+    ok, problems = check_tin_properties(verts, faces)
     assert ok, problems
     # no NaN z values may be emitted
     assert not np.isnan(verts).any()

@@ -29,7 +29,7 @@ from tin_terrain_spark.kernels.tin import METHODS, generate_tin
 from tin_terrain_spark.operators.meshing import _make_tile_fn, _tile_terrain
 from tin_terrain_spark.kernels.raster import Grid
 from tin_terrain_spark.kernels.terra import generate_tin_terra
-from tin_terrain_spark.kernels.zemlya import generate_tin_zemlya
+from tin_terrain_spark.kernels.zemlya import ZemlyaMesh, generate_tin_zemlya
 
 pytestmark = pytest.mark.skipif(
     not native.native_available(), reason="no C compiler in this environment"
@@ -72,14 +72,23 @@ def _grids():
     yield "tiny", Grid(np.array([[1.0, 2.0], [3.0, 4.0]])), np.nan
 
 
+def _python_mesh(kernel, grid):
+    """The kernel's pure-Python mesh, the reference for the C path."""
+    if kernel == "terra":
+        return generate_tin_terra(grid, 2.0, use_native=False)
+    zm = ZemlyaMesh(grid)
+    zm.greedy_insert(2.0)
+    return zm.to_mesh()
+
+
 @pytest.mark.parametrize("kernel", ["terra", "zemlya"])
 def test_backend_equality(kernel):
     gen = generate_tin_terra if kernel == "terra" else generate_tin_zemlya
     for name, grid, _ in _grids():
         gp = Grid(grid.z.copy(), grid.xpos, grid.ypos, grid.cellsize, grid.ndv)
         gn = Grid(grid.z.copy(), grid.xpos, grid.ypos, grid.cellsize, grid.ndv)
-        vp, fp = gen(gp, 2.0, use_native=False)
-        vn, fn = gen(gn, 2.0, use_native=True)
+        vp, fp = _python_mesh(kernel, gp)
+        vn, fn = gen(gn, 2.0)
         assert np.array_equal(vp, vn), (kernel, name, "vertices differ")
         assert np.array_equal(fp, fn), (kernel, name, "faces differ")
         # corner repair must mutate the raster identically too

@@ -204,13 +204,11 @@ Allow: /
 
 Sitemap: https://x.org/news.xml
 """
-    star = parse_robots_meta(txt, agent="otherbot")
+    star = parse_robots_meta(txt)
     assert star["crawl_delay"] == 2.0
     assert star["sitemaps"] == [
         "https://x.org/sitemap.xml", "https://x.org/news.xml",
     ]
-    specific = parse_robots_meta(txt, agent="tinbot-crawler/1.0")
-    assert specific["crawl_delay"] == 0.5
     none = parse_robots_meta("User-agent: *\nDisallow: /x\n")
     assert none["crawl_delay"] is None and none["sitemaps"] == []
     bad = parse_robots_meta("User-agent: *\nCrawl-delay: soon\n")

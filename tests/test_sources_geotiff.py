@@ -268,29 +268,6 @@ def test_lzw_packbits_roundtrip_random():
         assert _packbits_decode(_packbits_encode(data)) == data
 
 
-def test_crs_validation(tmp_path):
-    from tin_terrain_spark.sources.geotiff import WEB_MERCATOR_EPSG
-
-    g = _sample_grid()
-    ok = str(tmp_path / "merc.tif")
-    write_geotiff(g, ok, epsg=3857)
-    r = read_geotiff(open(ok, "rb").read(), validate_projection=True)
-    assert r.z.shape == g.z.shape
-
-    wrong = str(tmp_path / "wgs84.tif")
-    write_geotiff(g, wrong, epsg=4326)
-    with pytest.raises(ValueError, match="EPSG:3857"):
-        read_geotiff(open(wrong, "rb").read(), validate_projection=True)
-
-    nokey = str(tmp_path / "nokey.tif")
-    write_geotiff(g, nokey)
-    with pytest.raises(ValueError, match="no projected CRS"):
-        read_geotiff(open(nokey, "rb").read(), validate_projection=True)
-    # without validation the same file loads (reference default)
-    assert read_geotiff(open(nokey, "rb").read()).z.shape == g.z.shape
-    assert 3857 in WEB_MERCATOR_EPSG
-
-
 def _strip_tags(path, drop):
     """Neutralize IFD entries in place (type 0 is skipped by the
     reader) so every other file offset stays valid."""
@@ -383,12 +360,12 @@ def test_bigtiff_roundtrip(tmp_path, compress):
     g = _sample_grid()
     pb = str(tmp_path / "big.tif")
     pc = str(tmp_path / "classic.tif")
-    write_geotiff(g, pb, compress=compress, epsg=3857, bigtiff=True)
-    write_geotiff(g, pc, compress=compress, epsg=3857)
+    write_geotiff(g, pb, compress=compress, bigtiff=True)
+    write_geotiff(g, pc, compress=compress)
     data = open(pb, "rb").read()
     assert struct.unpack("<H", data[2:4])[0] == 43
-    rb = read_geotiff(data, validate_projection=True)
-    rc = read_geotiff(open(pc, "rb").read(), validate_projection=True)
+    rb = read_geotiff(data)
+    rc = read_geotiff(open(pc, "rb").read())
     np.testing.assert_array_equal(rb.z, rc.z)
     np.testing.assert_array_equal(rb.z, g.z)
     assert (rb.xpos, rb.ypos, rb.cellsize, rb.ndv) == (

@@ -309,8 +309,8 @@ def test_ann_lsh_recall(spark):
     from tin_terrain_spark.operators.similarity import ann_brute, ann_lsh
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    exact = ann_brute(emb, n_queries=8, k=10).collect()
-    approx = ann_lsh(emb, n_queries=8, k=10).collect()
+    exact = ann_brute(emb).collect()
+    approx = ann_lsh(emb).collect()
     exact_set = {(r["q_id"], r["vec_id"]) for r in exact}
     approx_set = {(r["q_id"], r["vec_id"]) for r in approx}
     # sign-random-projection buckets keep a meaningful share of true
@@ -662,8 +662,8 @@ def test_ann_ivf_recall(spark):
     from tin_terrain_spark.operators.similarity import ann_brute, ann_ivf
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    exact = ann_brute(emb, n_queries=8, k=10).collect()
-    approx = ann_ivf(emb, n_queries=8, k=10).collect()
+    exact = ann_brute(emb).collect()
+    approx = ann_ivf(emb).collect()
     exact_set = {(r["q_id"], r["vec_id"]) for r in exact}
     approx_set = {(r["q_id"], r["vec_id"]) for r in approx}
     # probing 4 of 16 inverted lists scans ~25% of the corpus but the
@@ -1068,18 +1068,19 @@ def test_unknown_method_fails_on_driver(spark, points, tmp_path):
     assert not os.path.exists(out)
 
 
-def test_quality_filter_keep_is_boolean_for_tiny_docs(spark):
+def test_quality_filter_keep_is_boolean_for_tiny_docs(spark, monkeypatch):
     """Docs with <2 tokens produce no bigrams; top_bigram_frac comes
     back NULL from rep_signals' left join. `keep` must still be a real
-    boolean for every row, for ANY min_tokens — including <=1 where
+    boolean for every row, for ANY MIN_TOKENS — including <=1 where
     the length rule no longer masks the NULL via false AND NULL."""
-    from tin_terrain_spark.operators.textops import quality_filter
+    from tin_terrain_spark.operators import textops
 
+    monkeypatch.setattr(textops, "MIN_TOKENS", 1)
     docs = spark.createDataFrame(
         [(1, "one"), (2, "two words"), (3, "a a a a a a a a a a")],
         "doc_id BIGINT, text STRING",
     )
-    rows = {r.doc_id: r for r in quality_filter(docs, min_tokens=1).collect()}
+    rows = {r.doc_id: r for r in textops.quality_filter(docs).collect()}
     for did, r in rows.items():
         assert r.keep is not None, f"doc {did}: keep is NULL"
         assert r.ok_top_bigram is not None, f"doc {did}: ok_top_bigram is NULL"
@@ -1258,3 +1259,28 @@ def test_span_dups_witnesses_shared_passage(spark):
         assert r["n_docs"] == 2
         docs_seen |= {r["first_doc"], r["last_doc"]}
     assert docs_seen == {0, 1}  # doc 2 never flagged
+
+
+def test_vertex_dedup_ids_are_the_rank_of_first_doc(spark, tmp_path):
+    """A8's dense vertex ids, on a corpus whose cells span several
+    range partitions of the session's 8 cores: each cell's vertex_id
+    is the NumPy rank of its first_doc, so the ids are distinct and run
+    0..n-1. The doc ids are strided so the cells' first docs also span
+    many id buckets."""
+    import pandas as pd
+
+    from tin_terrain_spark.queries import q_vertex_dedup
+
+    ids = np.arange(12_000, dtype=np.int64) * 7_919
+    pd.DataFrame({"doc_id": ids}).to_parquet(tmp_path / "documents.parquet")
+    got = q_vertex_dedup(spark, str(tmp_path)).toPandas()
+    first = got["first_doc"].to_numpy()
+    assert len(np.unique(first)) == len(got) > 4_000
+    rank = np.empty(len(first), dtype=np.int64)
+    rank[np.argsort(first)] = np.arange(len(first))
+    vid = got["vertex_id"].to_numpy()
+    wrong = int((vid != rank).sum())
+    assert wrong == 0, (
+        f"{wrong} of {len(vid)} ids differ from the rank, "
+        f"{len(np.unique(vid))} distinct"
+    )

@@ -59,25 +59,22 @@ def test_asof_tie_on_ts_matches_and_prefers_max_id(spark):
 
 
 def test_asof_generic_schema(spark):
-    """Ids/payloads with non-default types and names: the join derives
-    everything from the input schemas (no hard-coded bigint/double
-    'value')."""
+    """Ids/payloads of other types, different on each side: the join
+    derives every type from the input schemas (no hard-coded
+    bigint/double)."""
     from tin_terrain_spark.operators.temporal import asof_join
 
     left = spark.createDataFrame(
-        [("a", 1, _ts(10), 7, "L1")],
-        "lid string, user_id long, ts timestamp, qty int, tag string",
+        [("a", 1, _ts(10), 7)],
+        "event_id string, user_id long, ts timestamp, value int",
     )
     right = spark.createDataFrame(
         [("r1", 1, _ts(9), "north"), ("r2", 1, _ts(11), "south")],
-        "rid string, user_id long, ts timestamp, region string",
+        "event_id string, user_id long, ts timestamp, value string",
     )
-    row = asof_join(
-        left, right, left_id="lid", right_id="rid",
-        right_vals=("region",), left_vals=("qty", "tag"),
-    ).collect()[0]
-    assert row["lid"] == "a" and row["qty"] == 7 and row["tag"] == "L1"
-    assert row["r_id"] == "r1" and row["r_region"] == "north"
+    row = asof_join(left, right).collect()[0]
+    assert row["event_id"] == "a" and row["value"] == 7
+    assert row["r_id"] == "r1" and row["r_value"] == "north"
 
 
 def test_range_join_boundaries_and_overlap(spark):

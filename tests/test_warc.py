@@ -112,7 +112,7 @@ def test_distributed_pack_and_scan(spark):
     pages = spark.createDataFrame(
         rows, "doc_id LONG, url STRING, warc_epoch LONG, html BINARY"
     )
-    files = synth_warc_files(pages, docs_per_file=25)
+    files = synth_warc_files(pages)
     fl = {r["file_id"]: r for r in files.collect()}
     assert sorted(fl) == [0, 1, 2]
     assert [fl[i]["n_records"] for i in (0, 1, 2)] == [25, 25, 10]

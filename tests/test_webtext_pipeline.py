@@ -147,7 +147,7 @@ def test_strip_boilerplate_lines(spark):
     df = spark.createDataFrame(rows, "doc_id BIGINT, host STRING, text STRING")
     got = {
         r["doc_id"]: r
-        for r in strip_boilerplate_lines(df, min_docs=3, min_frac=0.5).collect()
+        for r in strip_boilerplate_lines(df).collect()
     }
     assert got[0]["clean_text"] == "alpha" and got[0]["n_removed"] == 2
     assert got[1]["clean_text"] == "beta"
@@ -247,7 +247,7 @@ def test_discovery_to_frontier_composes(spark):
     )
     allowed = robots_filter(pages, rules).filter("allowed")
     plan = frontier_schedule(
-        allowed.withColumn("crawl_delay", F.lit(2)), priority_col=None,
+        allowed.withColumn("crawl_delay", F.lit(2)).withColumn("priority", F.lit(0)),
         base_epoch=1000,
     )
     rows = sorted(

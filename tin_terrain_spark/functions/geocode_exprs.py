@@ -79,18 +79,18 @@ def dem_z_sql(x_sql: str, y_sql: str) -> str:
     )
 
 
-def pixels_sql(m_sql: str, zoom: int, tile_size: int = TILE_SIZE) -> str:
+def pixels_sql(m_sql: str, zoom: int) -> str:
     """meters → global pixels (MercatorProjection.cpp:39-47): the C++
     computes invRes = 2^z / (2*HC/ts) then (m + HC) * invRes."""
-    m_res = 2.0 * HALF_CIRCUMFERENCE / tile_size
+    m_res = 2.0 * HALF_CIRCUMFERENCE / TILE_SIZE
     return f"((({m_sql}) + {dlit(HALF_CIRCUMFERENCE)}) * ({dlit(1 << zoom)} / {dlit(m_res)}))"
 
 
-def tile_sql(m_sql: str, zoom: int, tile_size: int = TILE_SIZE) -> str:
+def tile_sql(m_sql: str, zoom: int) -> str:
     """meters → tile index with the ceil-1 tie rule
     (MercatorProjection.cpp:48-65)."""
-    px = pixels_sql(m_sql, zoom, tile_size)
-    return f"(CAST(CEIL({px} / {dlit(tile_size)}) AS BIGINT) - 1)"
+    px = pixels_sql(m_sql, zoom)
+    return f"(CAST(CEIL({px} / {dlit(TILE_SIZE)}) AS BIGINT) - 1)"
 
 
 def cell_sql(m_sql: str, zoom: int, grid_bits: int) -> str:
@@ -100,13 +100,13 @@ def cell_sql(m_sql: str, zoom: int, grid_bits: int) -> str:
     return tile_sql(m_sql, zoom + grid_bits)
 
 
-def tile_min_sql(t_sql: str, zoom: int, tile_size: int = TILE_SIZE) -> str:
+def tile_min_sql(t_sql: str, zoom: int) -> str:
     """tile index → min meters coordinate (TileBounds,
     MercatorProjection.cpp:76-80 via PixelsToMeters :30-37)."""
-    res = 2.0 * HALF_CIRCUMFERENCE / tile_size / (1 << zoom)
+    res = 2.0 * HALF_CIRCUMFERENCE / TILE_SIZE / (1 << zoom)
     # the trailing `+ 0e0` normalizes IEEE -0.0 to 0.0 so both engines
     # serialize the tile-corner-at-origin case identically
-    return f"(((({t_sql}) * {dlit(tile_size)}) * {dlit(res)} - {dlit(HALF_CIRCUMFERENCE)}) + 0e0)"
+    return f"(((({t_sql}) * {dlit(TILE_SIZE)}) * {dlit(res)} - {dlit(HALF_CIRCUMFERENCE)}) + 0e0)"
 
 
 def tile_size_meters(zoom: int) -> float:

@@ -123,10 +123,11 @@ class BaseCellTables:
     bc_rep_rot: np.ndarray = None     # (122, R)
 
 
-def _center_of(face: int, ijk, res: int = 0):
+def _center_of(face: int, ijk):
+    """Geographic center of a res-0 lattice position."""
     la, lo = G.face_ijk_to_geo(
         np.array([face]), np.array([ijk[0]]), np.array([ijk[1]]),
-        np.array([ijk[2]]), res,
+        np.array([ijk[2]]), 0,
     )
     return float(la[0]), float(lo[0])
 
@@ -252,16 +253,15 @@ def derive_base_cells() -> BaseCellTables:
     return _derive_base_cells_numeric()
 
 
-def save_tables_artifact(path: str | None = None) -> str:
+def save_tables_artifact() -> str:
     """Write the numerically derived tables to the packaged artifact
     (scripts/freeze_h3_tables.py calls this)."""
     import json
     import os
 
     t = _derive_base_cells_numeric()
-    if path is None:
-        path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                            _TABLES_ARTIFACT)
+    path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                        _TABLES_ARTIFACT)
     d = {
         "lookup_bc": t.lookup_bc.tolist(),
         "lookup_rot": t.lookup_rot.tolist(),

@@ -254,8 +254,8 @@ def face_ijk_to_geo(face, i, j, k, res: int):
 EARTH_R_MERC = 20037508.342789243 / math.pi  # Web-Mercator sphere radius
 
 
-def with_face_ijk_cols(df, res: int, x_col: str = "x", y_col: str = "y"):
-    """Add (h3_face, h3_i, h3_j, h3_k) from Web-Mercator meters: the
+def with_face_ijk_cols(df, res: int):
+    """Add (h3_face, h3_i, h3_j, h3_k) from Web-Mercator x, y: the
     whole icosahedral chain — inverse Mercator, 20-way closest-face argmax
     (array_max over a struct array; ties break to the lowest face via
     the negated-face field, matching NumPy argmax), gnomonic scaling,
@@ -273,8 +273,8 @@ def with_face_ijk_cols(df, res: int, x_col: str = "x", y_col: str = "y"):
     finished analysis)."""
     from pyspark.sql import functions as F
 
-    lat = 2.0 * F.atan(F.exp(F.col(y_col) / F.lit(EARTH_R_MERC))) - math.pi / 2.0
-    lng = F.col(x_col) / F.lit(EARTH_R_MERC)
+    lat = 2.0 * F.atan(F.exp(F.col("y") / F.lit(EARTH_R_MERC))) - math.pi / 2.0
+    lng = F.col("x") / F.lit(EARTH_R_MERC)
     out = (
         df.withColumn("_lng", lng)
         .withColumn("_slat", F.sin(lat))

@@ -163,12 +163,12 @@ def _normalize(i: int, j: int, k: int) -> tuple[int, int, int]:
     return i - m, j - m, k - m
 
 
-def _round_half_away(x_num: int, den: int = 7) -> int:
-    """lround((num/den)) for integer num, positive den: round half away
-    from zero, matching the C library's lroundl on exact .5 values."""
+def _round_half_away(x_num: int) -> int:
+    """lround((num/7)) for integer num: round half away from zero,
+    matching the C library's lroundl on exact .5 values."""
     if x_num >= 0:
-        return (2 * x_num + den) // (2 * den)
-    return -((-2 * x_num + den) // (2 * den))
+        return (2 * x_num + 7) // 14
+    return -((-2 * x_num + 7) // 14)
 
 
 def _up_ap7(i: int, j: int, k: int) -> tuple[int, int, int]:
@@ -205,8 +205,7 @@ def _is_class_iii(res: int) -> bool:
 # --- axial <-> H3 ------------------------------------------------------
 
 
-def h3_from_axial(q: int, r: int, res: int = _MAX_RES,
-                  base_cell: int = SHIM_BASE_CELL) -> int:
+def h3_from_axial(q: int, r: int, res: int = _MAX_RES) -> int:
     """Encode an axial cell (hexgrid.py's (hex_q, hex_r)) at `res`
     under the shim base cell. Spec digit algorithm: walk from the
     finest resolution up, recording at each step which child of the
@@ -215,7 +214,11 @@ def h3_from_axial(q: int, r: int, res: int = _MAX_RES,
 
     Kept without a shipped caller: the scalar reference encode of
     tests/test_h3pack.py (test_np_batch_equals_scalar,
-    test_sql_walk_equals_numpy) and tests/test_property_based.py."""
+    test_sql_walk_equals_numpy) and tests/test_property_based.py.
+
+    Test-only parameters: res — tests/test_h3pack.py encodes at res 6,
+    7, 10 and 11 to reach the out-of-range error and to check parents
+    against direct coarser encodes."""
     # axial -> IJK (q = i - k, r = j - k with k = 0, then normalize)
     i, j, k = _normalize(int(q), int(r), 0)
     digits = [0] * res
@@ -236,7 +239,7 @@ def h3_from_axial(q: int, r: int, res: int = _MAX_RES,
         raise ValueError(
             f"axial ({q}, {r}) out of range for {res} digit levels"
         )
-    return pack_h3(res, base_cell, digits)
+    return pack_h3(res, SHIM_BASE_CELL, digits)
 
 
 def axial_from_h3(h: int) -> tuple[int, int]:
@@ -259,10 +262,9 @@ def axial_from_h3(h: int) -> tuple[int, int]:
     return i - k, j - k
 
 
-def h3_from_axial_np(q: np.ndarray, r: np.ndarray, res: int = _MAX_RES,
-                     base_cell: int = SHIM_BASE_CELL) -> np.ndarray:
-    """Vectorized batch encode: same algorithm as h3_from_axial,
-    whole-array integer ops.
+def h3_from_axial_np(q: np.ndarray, r: np.ndarray) -> np.ndarray:
+    """Vectorized batch encode: same algorithm as h3_from_axial at its
+    default (finest) res, whole-array integer ops.
 
     Kept without a shipped caller: the batch twin of the scalar
     reference, compared with it id for id by tests/test_h3pack.py
@@ -295,10 +297,11 @@ def h3_from_axial_np(q: np.ndarray, r: np.ndarray, res: int = _MAX_RES,
     i, j, k = nrm(i, j, k)
     h = np.full(
         i.shape,
-        (MODE_CELL << _MODE_OFFSET) | (res << _RES_OFFSET) | (base_cell << _BC_OFFSET),
+        (MODE_CELL << _MODE_OFFSET) | (_MAX_RES << _RES_OFFSET)
+        | (SHIM_BASE_CELL << _BC_OFFSET),
         dtype=np.uint64,
     )
-    for rr in range(res, 0, -1):
+    for rr in range(_MAX_RES, 0, -1):
         li, lj, lk = i, j, k
         di, dj = li - lk, lj - lk
         if _is_class_iii(rr):
@@ -313,9 +316,7 @@ def h3_from_axial_np(q: np.ndarray, r: np.ndarray, res: int = _MAX_RES,
         digit = (4 * ui + 2 * uj + uk).astype(np.uint64)
         h |= digit << np.uint64(3 * (_MAX_RES - rr))
     if not (np.all(i == 0) and np.all(j == 0) and np.all(k == 0)):
-        raise ValueError(f"some axial coords out of range for {res} digit levels")
-    for rr in range(res + 1, _MAX_RES + 1):
-        h |= np.uint64(7) << np.uint64(3 * (_MAX_RES - rr))
+        raise ValueError(f"some axial coords out of range for {_MAX_RES} digit levels")
     return h.astype(np.int64)  # BIGINT column carrier; bit pattern preserved
 
 
@@ -446,16 +447,16 @@ def _rha_sql(n: str) -> str:
     )
 
 
-def h3_step_exprs(res: int, q_col: str = "hex_q", r_col: str = "hex_r"):
+def h3_step_exprs(res: int):
     """Ordered (column_name, sql_expr) pairs computing the aperture-7
-    digit walk from axial (q_col, r_col) down to resolution 0, then the
+    digit walk from axial (hex_q, hex_r) down to resolution 0, then the
     packed id as column `h3_id` (NULL when the coordinate needs more
     than `res` digit levels — loud, never aliased)."""
     cols: list[tuple[str, str]] = []
     # axial -> normalized IJK (k = 0): m = least(q, r, 0)
-    m0 = f"LEAST({q_col}, {r_col}, 0)"
-    cols.append((f"_h3i{res}", f"CAST(({q_col}) - {m0} AS BIGINT)"))
-    cols.append((f"_h3j{res}", f"CAST(({r_col}) - {m0} AS BIGINT)"))
+    m0 = "LEAST(hex_q, hex_r, 0)"
+    cols.append((f"_h3i{res}", f"CAST((hex_q) - {m0} AS BIGINT)"))
+    cols.append((f"_h3j{res}", f"CAST((hex_r) - {m0} AS BIGINT)"))
     cols.append((f"_h3k{res}", f"CAST(0 - {m0} AS BIGINT)"))
     cols.extend(_h3_walk_body(res))
     header = (MODE_CELL << _MODE_OFFSET) | (res << _RES_OFFSET) | (
@@ -543,27 +544,24 @@ def _h3_stages(steps):
     return stages
 
 
-def with_h3_id(df, size: float, x: str = "x", y: str = "y",
-               res: int = 10, out_col: str = "h3_id"):
-    """DataFrame helper: axial cells (hexgrid.with_hex_cell) packed to
-    H3-layout ids with pure Column expressions (JVM-side, no UDF; the
-    same generated SQL is the DuckDB oracle twin). Default res 10
+def with_h3_id(df, size: float, res: int = 10):
+    """DataFrame helper: the axial cells of meter columns x, y
+    (hexgrid.with_hex_cell) packed to H3-layout ids with pure Column
+    expressions (JVM-side, no UDF; the same generated SQL is the
+    DuckDB oracle twin). Default res 10
     addresses ~282M cells around the origin — far beyond any hex grid
     this engine derives; out-of-range packs to NULL, never a wrong id."""
     from pyspark.sql import functions as F
 
     from . import hexgrid as HG
 
-    out = HG.with_hex_cell(df, size, x=x, y=y)
+    out = HG.with_hex_cell(df, size)
     for stage in _h3_stages(h3_step_exprs(res)):
         out = out.select(
             "*", *[F.expr(expr).alias(name) for name, expr in stage]
         )
     keep = [c for c in out.columns if not c.startswith(_H3_TMP) or c == "h3_id"]
-    out = out.select(*keep)
-    if out_col != "h3_id":
-        out = out.withColumnRenamed("h3_id", out_col)
-    return out
+    return out.select(*keep)
 
 
 def h3_parent_expr(res_from: int, res_to: int, col: str = "h3_id",

@@ -78,11 +78,11 @@ def with_hex_cell(df: DataFrame, size: float, x: str = "x", y: str = "y",
     )
 
 
-def hex_cell_subquery_sql(inner_sql: str, size: float,
-                          x: str = "x", y: str = "y") -> str:
+def hex_cell_subquery_sql(inner_sql: str, size: float) -> str:
     """DuckDB oracle twin of with_hex_cell: wraps `inner_sql` so every
-    row gains hex_q/hex_r computed through the SAME staged expressions."""
-    fq, fr = hex_frac_sql(x, y, size)
+    row gains hex_q/hex_r from its x, y, computed through the SAME
+    staged expressions."""
+    fq, fr = hex_frac_sql("x", "y", size)
     return f"""
       SELECT *,
              {HEX_Q_FROM_FRAC} AS hex_q,

@@ -16,6 +16,8 @@ import struct
 
 import numpy as np
 
+FPS = 10  # the frame rate encode_avi_mjpeg writes
+
 
 def is_avi(data: bytes) -> bool:
     return len(data) > 24 and data[:4] == b"RIFF" and data[8:12] == b"AVI "
@@ -72,24 +74,22 @@ def decode_avi_frame(data: bytes, idx: int) -> np.ndarray:
     return _jpeg.decode_jpeg(payload)
 
 
-def encode_avi_mjpeg(
-    frames: list[bytes], width: int, height: int, fps: int = 10
-) -> bytes:
+def encode_avi_mjpeg(frames: list[bytes], width: int, height: int) -> bytes:
     """Wrap pre-encoded baseline-JPEG frames into a minimal standard
-    AVI: hdrl (avih + one vids/MJPG strl) + movi ('00dc' chunks) +
-    idx1. Players and this repo's own demuxer read it back."""
+    AVI at FPS frames a second: hdrl (avih + one vids/MJPG strl) + movi
+    ('00dc' chunks) + idx1. Players and this repo's own demuxer read it back."""
     if not frames:
         raise ValueError("avi: need at least one frame")
     max_size = max(len(f) for f in frames)
     avih = struct.pack(
         "<IIIIIIIIIIIIII",
-        1_000_000 // fps, max_size * fps, 0, 0x10,  # AVIF_HASINDEX
+        1_000_000 // FPS, max_size * FPS, 0, 0x10,  # AVIF_HASINDEX
         len(frames), 0, 1, max_size, width, height, 0, 0, 0, 0,
     )
     strh = struct.pack(
         "<4s4sIHHIIIIIIII4h",
         b"vids", b"MJPG", 0, 0, 0, 0,   # flags, prio, lang, initial
-        1, fps, 0, len(frames),          # scale, rate, start, length
+        1, FPS, 0, len(frames),          # scale, rate, start, length
         max_size, 10_000, 0,             # buffer, quality, sample size
         0, 0, min(width, 32767), min(height, 32767),  # rcFrame
     )

@@ -310,15 +310,18 @@ def encode_gif(
     transparent: int | None = None,
     interlace: bool = False,
     disposal: int = 1,
-    delay_cs: int = 4,
-    bg_index: int = 0,
 ) -> bytes:
     """Write a GIF89a from index frames + one global palette.
 
     idx: (H, W) or (N, H, W) uint8 palette indices; palette: (K, 3)
-    uint8 (K rounded up to a power of two on disk). transparent /
-    disposal / delay apply to every frame (enough for fixtures; the
-    decoder handles per-frame values from any producer)."""
+    uint8 (K rounded up to a power of two on disk); the background is
+    palette index 0. transparent / disposal and a 4/100 s delay apply
+    to every frame (enough for fixtures; the decoder handles per-frame
+    values from any producer).
+
+    Test-only parameters: transparent, interlace, disposal —
+    tests/test_gif.py builds decoder fixtures with them (transparency
+    compositing, interlaced rows, disposal 2)."""
     idx = np.asarray(idx, dtype=np.uint8)
     if idx.ndim == 2:
         idx = idx[None]
@@ -337,7 +340,7 @@ def encode_gif(
     out = bytearray()
     out += b"GIF89a"
     out += struct.pack("<HH", w, h)
-    out += bytes([0x80 | ((bits - 1) & 0x07) << 4 | (bits - 1), bg_index, 0])
+    out += bytes([0x80 | ((bits - 1) & 0x07) << 4 | (bits - 1), 0, 0])
     out += pal.tobytes()
     if n > 1:  # Netscape looping block, the de-facto animation marker
         out += b"\x21\xff\x0bNETSCAPE2.0\x03\x01\x00\x00\x00"
@@ -349,7 +352,7 @@ def encode_gif(
             gflags |= 0x01
             tr = int(transparent)
         out += bytes([0x21, 0xF9, 4, gflags])
-        out += struct.pack("<H", delay_cs)
+        out += struct.pack("<H", 4)  # delay, 1/100 s
         out += bytes([tr, 0])
         out += b"\x2c" + struct.pack("<HHHH", 0, 0, w, h)
         out += bytes([0x40 if interlace else 0])

@@ -520,7 +520,12 @@ def encode_jpeg(px: np.ndarray, quality: int = 85,
     tables, one interleaved scan). subsample: "444" or "420" (3-chan
     only; 420 = 2x2-mean chroma downsample, Y sampled 2x2 per MCU).
     restart_interval > 0 emits DRI + RSTn every N MCUs (fixture for
-    the decoder's resync path)."""
+    the decoder's resync path).
+
+    Test-only parameters: subsample, restart_interval —
+    tests/test_jpeg.py builds decoder fixtures with them (subsampled
+    chroma, restart markers); tests/test_sources_geotiff.py builds its
+    JPEG-in-TIFF tiles with 4:2:0."""
     if px.ndim == 2:
         px = px[:, :, None]
     h, w, nc = px.shape

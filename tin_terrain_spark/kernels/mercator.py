@@ -37,49 +37,49 @@ def meters_to_lonlat(mx, my):
     return lon, lat
 
 
-def resolution(zoom: int, tile_size: int = TILE_SIZE) -> float:
+def resolution(zoom: int) -> float:
     """meters per pixel at a zoom level (MercatorProjection.cpp:5-9,30-36).
 
     Kept without a shipped caller: SURVEY's port of the reference
     resolution, checked by tests/test_kernels_mercator.py."""
-    return 2.0 * HALF_CIRCUMFERENCE / tile_size / (1 << zoom)
+    return 2.0 * HALF_CIRCUMFERENCE / TILE_SIZE / (1 << zoom)
 
 
-def meters_to_pixels(mx, my, zoom: int, tile_size: int = TILE_SIZE):
+def meters_to_pixels(mx, my, zoom: int):
     """P3 — meters → global pixel coords (MercatorProjection.cpp:39-47)."""
-    inv_res = (1 << zoom) / (2.0 * HALF_CIRCUMFERENCE / tile_size)
+    inv_res = (1 << zoom) / (2.0 * HALF_CIRCUMFERENCE / TILE_SIZE)
     px = (np.asarray(mx, dtype=np.float64) + HALF_CIRCUMFERENCE) * inv_res
     py = (np.asarray(my, dtype=np.float64) + HALF_CIRCUMFERENCE) * inv_res
     return px, py
 
 
-def pixels_to_meters(px, py, zoom: int, tile_size: int = TILE_SIZE):
+def pixels_to_meters(px, py, zoom: int):
     """P3 inverse — global pixels → meters (MercatorProjection.cpp:30-37)."""
-    res = 2.0 * HALF_CIRCUMFERENCE / tile_size / (1 << zoom)
+    res = 2.0 * HALF_CIRCUMFERENCE / TILE_SIZE / (1 << zoom)
     mx = np.asarray(px, dtype=np.float64) * res - HALF_CIRCUMFERENCE
     my = np.asarray(py, dtype=np.float64) * res - HALF_CIRCUMFERENCE
     return mx, my
 
 
-def pixels_to_tile(px, py, tile_size: int = TILE_SIZE):
+def pixels_to_tile(px, py):
     """P4 — pixel → TMS tile index, ceil(p/ts)-1 tie rule
     (MercatorProjection.cpp:48-56)."""
-    tx = np.ceil(np.asarray(px, dtype=np.float64) / tile_size) - 1.0
-    ty = np.ceil(np.asarray(py, dtype=np.float64) / tile_size) - 1.0
+    tx = np.ceil(np.asarray(px, dtype=np.float64) / TILE_SIZE) - 1.0
+    ty = np.ceil(np.asarray(py, dtype=np.float64) / TILE_SIZE) - 1.0
     return tx.astype(np.int64), ty.astype(np.int64)
 
 
-def meters_to_tile(mx, my, zoom: int, tile_size: int = TILE_SIZE):
+def meters_to_tile(mx, my, zoom: int):
     """P5 = P3 ∘ P4 (MercatorProjection.cpp:58-65).
 
     Kept without a shipped caller: SURVEY's P5 tie-rule port;
     test_spark_integration (test_tile_key_matches_numpy_kernel) checks
     the geocoder's tile keys against it."""
-    px, py = meters_to_pixels(mx, my, zoom, tile_size)
-    return pixels_to_tile(px, py, tile_size)
+    px, py = meters_to_pixels(mx, my, zoom)
+    return pixels_to_tile(px, py)
 
 
-def tile_bounds(tx, ty, zoom: int, tile_size: int = TILE_SIZE):
+def tile_bounds(tx, ty, zoom: int):
     """P6 — tile → meters bbox (min_x, min_y, max_x, max_y)
     (MercatorProjection.cpp:76-80).
 
@@ -87,8 +87,8 @@ def tile_bounds(tx, ty, zoom: int, tile_size: int = TILE_SIZE):
     tests/test_kernels_mercator.py (test_tile_bounds_roundtrip)."""
     tx = np.asarray(tx, dtype=np.float64)
     ty = np.asarray(ty, dtype=np.float64)
-    min_x, min_y = pixels_to_meters(tx * tile_size, ty * tile_size, zoom, tile_size)
-    max_x, max_y = pixels_to_meters((tx + 1) * tile_size, (ty + 1) * tile_size, zoom, tile_size)
+    min_x, min_y = pixels_to_meters(tx * TILE_SIZE, ty * TILE_SIZE, zoom)
+    max_x, max_y = pixels_to_meters((tx + 1) * TILE_SIZE, (ty + 1) * TILE_SIZE, zoom)
     return min_x, min_y, max_x, max_y
 
 

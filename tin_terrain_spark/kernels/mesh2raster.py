@@ -54,15 +54,13 @@ def rasterise_mesh(
     faces: np.ndarray,
     out_width: int,
     out_height: int,
-    original_width: int = -1,
 ) -> Grid:
-    """World-coordinate mesh → raster (Mesh2Raster.cpp:145-252)."""
+    """World-coordinate mesh → raster (Mesh2Raster.cpp:145-252), at the
+    reference's default original width, out_width."""
     bb_min = verts[:, :2].min(axis=0)
     bb_max = verts[:, :2].max(axis=0)
     mesh_w = bb_max[0] - bb_min[0]
-    if original_width == -1:
-        original_width = out_width
-    cs_orig = mesh_w / (original_width - 1)
+    cs_orig = mesh_w / (out_width - 1)
     cellsize = (mesh_w + cs_orig) / out_width
 
     z = np.full((out_height, out_width), ERROR_NDV, dtype=np.float64)

@@ -135,18 +135,16 @@ def decode_netpbm(data: bytes) -> np.ndarray:
     return px.reshape(h, w, channels)
 
 
-def encode_netpbm(px: np.ndarray, plain: bool = False,
-                  maxval: int | None = None) -> bytes:
+def encode_netpbm(px: np.ndarray, plain: bool = False) -> bytes:
     """(H, W) / (H, W, 1) gray or (H, W, 3) color, uint8 or uint16 →
-    P5/P6 (binary) or P2/P3 (plain)."""
+    P5/P6 (binary) or P2/P3 (plain), maxval 255 or 65535 by dtype."""
     px = np.asarray(px)
     if px.ndim == 2:
         px = px[:, :, None]
     if px.ndim != 3 or px.shape[2] not in (1, 3):
         raise ValueError("netpbm: need (H,W[,1|3]) array")
     color = px.shape[2] == 3
-    if maxval is None:
-        maxval = 65535 if px.dtype == np.uint16 else 255
+    maxval = 65535 if px.dtype == np.uint16 else 255
     if int(px.max(initial=0)) > maxval:
         raise ValueError("netpbm: sample exceeds maxval")
     h, w = px.shape[:2]

@@ -371,8 +371,8 @@ def _byte_rows(px: np.ndarray) -> np.ndarray:
     return np.ascontiguousarray(px, dtype=np.uint8).reshape(h, w * c)
 
 
-def encode_png(px: np.ndarray, filters=None, level: int = 6,
-               interlace: bool = False, depth: int | None = None) -> bytes:
+def encode_png(px: np.ndarray, filters=None, interlace: bool = False,
+               depth: int | None = None) -> bytes:
     """uint8 or uint16 (H, W) or (H, W, C) -> PNG bytes (depth 8 or
     16 per the input dtype). `filters` picks the per-row filter type
     (int or list, default 0) so tests can exercise every unfilter path
@@ -380,7 +380,11 @@ def encode_png(px: np.ndarray, filters=None, level: int = 6,
     filtered as its own sub-image, per spec). depth=1/2/4 writes
     sub-byte GRAYSCALE (single channel only): input holds raw sample
     values < 2**depth, rows bit-packed MSB-first, filters on the
-    packed bytes with bpp=1."""
+    packed bytes with bpp=1.
+
+    Test-only parameters: filters, interlace, depth — tests/test_png.py
+    builds decoder fixtures with them (every unfilter path, Adam7,
+    sub-byte grayscale)."""
     if px.ndim == 2:
         px = px[:, :, None]
     h, w, c = px.shape
@@ -400,12 +404,11 @@ def encode_png(px: np.ndarray, filters=None, level: int = 6,
                 stream += _filter_scanlines(
                     _pack_bits(sub, depth), 1, _norm_filters(filters, sub.shape[0])
                 )
-            raw = zlib.compress(bytes(stream), level)
+            raw = zlib.compress(bytes(stream))
         else:
             raw = zlib.compress(
                 _filter_scanlines(_pack_bits(rows2d, depth), 1,
-                                  _norm_filters(filters, h)),
-                level,
+                                  _norm_filters(filters, h))
             )
     else:
         depth = 16 if px.dtype == np.uint16 else 8
@@ -419,11 +422,10 @@ def encode_png(px: np.ndarray, filters=None, level: int = 6,
                 stream += _filter_scanlines(
                     _byte_rows(sub), bpp, _norm_filters(filters, sub.shape[0])
                 )
-            raw = zlib.compress(bytes(stream), level)
+            raw = zlib.compress(bytes(stream))
         else:
             raw = zlib.compress(
-                _filter_scanlines(_byte_rows(px), bpp, _norm_filters(filters, h)),
-                level,
+                _filter_scanlines(_byte_rows(px), bpp, _norm_filters(filters, h))
             )
     ihdr = struct.pack(">IIBBBBB", w, h, depth, color, 0, 0, int(interlace))
     return (
@@ -433,8 +435,8 @@ def encode_png(px: np.ndarray, filters=None, level: int = 6,
 
 def encode_png_palette(idx: np.ndarray, palette: np.ndarray,
                        trns: np.ndarray | None = None,
-                       filters=None, level: int = 6,
-                       interlace: bool = False, depth: int = 8) -> bytes:
+                       filters=None, interlace: bool = False,
+                       depth: int = 8) -> bytes:
     """uint8 index raster (H, W) + palette (N, 3) [+ per-entry alpha
     (M,)] -> color-type-3 PNG bytes (fixture/sink side of the palette
     decode path). depth=1/2/4 bit-packs the indices MSB-first
@@ -442,7 +444,11 @@ def encode_png_palette(idx: np.ndarray, palette: np.ndarray,
 
     Kept without a shipped caller: builds the palette PNGs that
     tests/test_png.py (test_roundtrip_palette and the other palette
-    cases) decodes."""
+    cases) decodes.
+
+    Test-only parameters: trns, filters, interlace, depth —
+    tests/test_png.py builds its palette fixtures with them (tRNS
+    alpha, every unfilter path, Adam7, sub-byte indices)."""
     h, w = idx.shape
     palette = np.ascontiguousarray(palette, dtype=np.uint8)
     if palette.ndim != 2 or palette.shape[1] != 3 or not len(palette):
@@ -468,12 +474,11 @@ def encode_png_palette(idx: np.ndarray, palette: np.ndarray,
             stream += _filter_scanlines(
                 _rows(sub), 1, _norm_filters(filters, sub.shape[0])
             )
-        raw = zlib.compress(bytes(stream), level)
+        raw = zlib.compress(bytes(stream))
     else:
         raw = zlib.compress(
             _filter_scanlines(_rows(idx8.reshape(h, w)), 1,
-                              _norm_filters(filters, h)),
-            level,
+                              _norm_filters(filters, h))
         )
     ihdr = struct.pack(">IIBBBBB", w, h, depth, 3, 0, 0, int(interlace))
     out = _MAGIC + _chunk(b"IHDR", ihdr) + _chunk(b"PLTE", palette.tobytes())

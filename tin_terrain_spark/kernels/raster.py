@@ -149,11 +149,11 @@ def _subsample_3x3_full(z: np.ndarray, ndv: float) -> np.ndarray:
 
 
 def sample_nearest_valid_avg(
-    grid: Grid, row: int, col: int, min_samples: int = 1,
-    subsampled: np.ndarray | None = None,
+    grid: Grid, row: int, col: int, subsampled: np.ndarray | None = None,
 ) -> float:
     """Expanding Bresenham-circle search for valid samples
-    (raster_tools.cpp:343-427). Returns NaN when nothing valid exists.
+    (raster_tools.cpp:343-427): the average of the first circle that
+    holds any. Returns NaN when nothing valid exists.
     Pass a precomputed `_subsample_3x3_full` plane via `subsampled` to
     amortize across repeated calls on the same grid."""
     z = grid.z
@@ -167,12 +167,11 @@ def sample_nearest_valid_avg(
     if subsampled is None:
         subsampled = _subsample_3x3_full(z, ndv)
 
-    min_samples = min(min_samples, MAX_AVERAGING_SAMPLES)
     samples: list[float] = []
 
     max_radius = int(np.sqrt(w * w + h * h))
     radius = 2
-    while radius <= max_radius and len(samples) < min_samples:
+    while radius <= max_radius and not samples:
         offs = _circle_offsets(radius)  # (n, 2) int arrays in putpixel order
         rr = row + offs[:, 1] + 1  # +1: subsample plane covers -1..h
         cc = col + offs[:, 0] + 1
@@ -224,7 +223,7 @@ def _circle_offsets(radius: int) -> np.ndarray:
 
 
 def nearest_valid_avg_batch(
-    grid: Grid, rows: np.ndarray, cols: np.ndarray, min_samples: int = 1
+    grid: Grid, rows: np.ndarray, cols: np.ndarray
 ) -> np.ndarray:
     """Vectorized sample_nearest_valid_avg for MANY cells of one grid:
     identical per-cell results (same circle order, same 64-sample cap),
@@ -245,7 +244,6 @@ def nearest_valid_avg_batch(
         return out
 
     plane = _subsample_3x3_full(z, ndv)
-    min_samples = min(min_samples, MAX_AVERAGING_SAMPLES)
     sums = np.zeros(len(todo))
     counts = np.zeros(len(todo), dtype=np.int64)
 
@@ -267,7 +265,7 @@ def nearest_valid_avg_batch(
         good &= order_idx <= room[:, None]
         sums[active] += np.where(good, vals, 0.0).sum(axis=1)
         counts[active] += good.sum(axis=1)
-        active = active[counts[active] < min_samples]
+        active = active[counts[active] == 0]
 
     has = counts > 0
     res = np.full(len(todo), np.nan)

@@ -23,10 +23,9 @@ import numpy as np
 def check_tin_properties(
     verts: np.ndarray,
     faces: np.ndarray,
-    expect_square_hull: bool = True,
-    rel_tol: float = 1e-9,
 ):
-    """(ok, problems): mesh validity checks on a TIN.
+    """(ok, problems): mesh validity checks on a TIN, whose triangles
+    must tile its bounding box (area within a relative 1e-9).
 
     Kept without a shipped caller: the mesh-validity check of
     tests/test_kernels_terra.py (terra, dense and zemlya cases)."""
@@ -65,12 +64,12 @@ def check_tin_properties(
         )
         if (area2 <= 0).any():
             problems.append(f"{int((area2 <= 0).sum())} non-CCW/degenerate faces")
-        if expect_square_hull and nv:
+        if nv:
             bbox_area = (verts[:, 0].max() - verts[:, 0].min()) * (
                 verts[:, 1].max() - verts[:, 1].min()
             )
             tri_area_sum = float(np.abs(area2).sum() / 2.0)
-            if bbox_area > 0 and abs(tri_area_sum - bbox_area) > rel_tol * bbox_area:
+            if bbox_area > 0 and abs(tri_area_sum - bbox_area) > 1e-9 * bbox_area:
                 problems.append(
                     f"hull has holes: tri area {tri_area_sum} vs bbox {bbox_area}"
                 )

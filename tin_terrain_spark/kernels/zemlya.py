@@ -285,16 +285,15 @@ class ZemlyaMesh(DelaunayMesh):
         return verts, faces_arr
 
 
-def generate_tin_zemlya(grid: Grid, max_error: float, use_native: bool = True):
+def generate_tin_zemlya(grid: Grid, max_error: float):
     """Facade mirroring generate_tin_zemlya (src/zemlya_meshing.cpp).
     Dispatches to the compiled fast path (kernels/native.py) when
     available — bit-identical outputs, pure-Python fallback."""
-    if use_native:
-        from . import native
+    from . import native
 
-        out = native.zemlya_native(grid, max_error)
-        if out is not None:
-            return out
+    out = native.zemlya_native(grid, max_error)
+    if out is not None:
+        return out
     zm = ZemlyaMesh(grid)
     zm.greedy_insert(max_error)
     return zm.to_mesh()

@@ -55,22 +55,21 @@ def synth_links(docs: DataFrame, n_nodes: int) -> DataFrame:
 def pagerank(
     edges: DataFrame,
     nodes: DataFrame,
-    iters: int = N_ITERS,
     n_nodes: int | None = None,
 ) -> DataFrame:
-    """PageRank with fixed iteration count over edges(src, dst) and
+    """PageRank with N_ITERS iterations over edges(src, dst) and
     nodes(node). Returns (node, rank) with sum(rank) == 1 up to float
     drift. Dangling nodes (no out-edges) redistribute their mass
     uniformly each iteration, per the standard formulation. Callers
     that already know the node count pass n_nodes to skip the count
     action (most query shapes count the corpus anyway).
 
-    Spark actions (SQL executions) per call: iters + 3, plus one for the
+    Spark actions (SQL executions) per call: N_ITERS + 3, plus one for the
     node count when n_nodes is None and one for the dangling-set
     checkpoint when the graph has dangling nodes — the edge-weight
     checkpoint, the dangling probe, the initial rank checkpoint and one
     rank checkpoint per iteration. The returned frame is the last
-    round's checkpoint. The iters + 2 (+1 with dangling nodes)
+    round's checkpoint. The N_ITERS + 2 (+1 with dangling nodes)
     checkpointed RDDs stay persisted until Spark's context cleaner
     reclaims them once their frames are garbage-collected; `unpersist`
     on a localCheckpoint-ed frame does not release them."""
@@ -107,7 +106,7 @@ def pagerank(
     ).localCheckpoint()
 
     base = (1.0 - DAMPING) / n_nodes
-    for _ in range(iters):
+    for _ in range(N_ITERS):
         contrib = (
             wedges.join(
                 ranks.select(F.col("node").alias("src"), "rank").hint(
@@ -206,12 +205,12 @@ def host_graph(links: DataFrame) -> DataFrame:
     )
 
 
-def hits(edges: DataFrame, nodes: DataFrame, iters: int = N_ITERS) -> DataFrame:
-    """HITS hub/authority scores, fixed iteration count, UNNORMALIZED
+def hits(edges: DataFrame, nodes: DataFrame) -> DataFrame:
+    """HITS hub/authority scores, N_ITERS iterations, UNNORMALIZED
     INTEGER form: h0 = 1; a_t(v) = Σ h_{t-1}(u) over in-edges,
     h_t(u) = Σ a_t(v) over out-edges. Skipping the per-round
     normalization keeps every score an exact BIGINT (growth ≈
-    (davg²)^iters — ~9^5 on the degree-3 synth graph, far from
+    (davg²)^N_ITERS — ~9^5 on the degree-3 synth graph, far from
     overflow), which preserves the ranking per iteration and makes the
     DuckDB twin bit-exact (no reduction-order float drift; the
     classic normalized scores are score/max per side if a caller
@@ -230,10 +229,10 @@ def hits(edges: DataFrame, nodes: DataFrame, iters: int = N_ITERS) -> DataFrame:
       materialized ONCE at the end. Per-round work drops from 4 joins
       to 2, and the shuffled volume from O(|E|)+O(|V|) to O(|V|).
 
-    Spark actions (SQL executions) per call: iters + 3 — the two
+    Spark actions (SQL executions) per call: N_ITERS + 3 — the two
     edge-list checkpoints, the initial hub checkpoint and one hub
     checkpoint per round; the returned frame is a lazy plan over the
-    last round. The iters + 3 checkpointed RDDs stay persisted until
+    last round. The N_ITERS + 3 checkpointed RDDs stay persisted until
     Spark's context cleaner reclaims them once their frames are
     garbage-collected; `unpersist` on a localCheckpoint-ed frame does
     not release them."""
@@ -245,7 +244,7 @@ def hits(edges: DataFrame, nodes: DataFrame, iters: int = N_ITERS) -> DataFrame:
         "node", F.lit(1).cast("bigint").alias("hub")
     ).localCheckpoint()
     auth = None
-    for _ in range(iters):
+    for _ in range(N_ITERS):
         auth = (
             e_src.join(
                 hub.select(F.col("node").alias("src"), "hub").hint(

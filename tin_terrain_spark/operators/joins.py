@@ -287,7 +287,14 @@ def knn_ring(points: DataFrame, queries: DataFrame, zoom: int, grid_bits: int,
     shuffled on the cell key: work scales with |q|·ball + |points|, and
     neither side goes through the Spark driver. Exact and hash-equal to
     knn_brute (tested). cell_join names that join and accepts only
-    "shuffle"; any other value raises ValueError.
+    "shuffle"; any other value raises ValueError. It stays a parameter
+    because bench.py and perfbench pass cell_join="shuffle".
+
+    Test-only parameters: initial_ring — a ring smaller than the
+    density ring leaves queries open, which is how
+    tests/test_r06_optimizations.py and tests/test_spark_integration.py
+    reach the knn_brute branch (tests/test_knn_plans.py checks its
+    plan).
     """
     if cell_join != "shuffle":
         raise ValueError(f"cell_join must be 'shuffle', not {cell_join!r}")
@@ -436,7 +443,13 @@ def knn_hex(points: DataFrame, queries: DataFrame, hex_size: float,
     nothing is persisted, so each action derives them again. The ring
     is density-derived so it is expected to resolve every query.
     Exactness: results are hash-equal to knn_brute (the driver gate's
-    oracle recomputes brute-force kNN in DuckDB)."""
+    oracle recomputes brute-force kNN in DuckDB).
+
+    Test-only parameters: initial_ring — as for knn_ring, a small ring
+    sends queries to the knn_brute branch in
+    tests/test_r06_optimizations.py and tests/test_knn_plans.py, and a
+    large one (60) forces a 10,981-cell ball in
+    tests/test_spark_integration.py."""
     from ..functions import hexgrid as HG
 
     pts = HG.with_hex_cell(points.select("doc_id", "x", "y"), hex_size)

@@ -25,8 +25,14 @@ MEDIA_SCHEMA = (
 )
 
 FEATURE_SCHEMA = "doc_id BIGINT, media_type STRING, feature ARRAY<FLOAT>"
+FEATURE_DIM = 16  # image_features' vector length
 
 FRAME_SCHEMA = "doc_id BIGINT, frame_idx INT, frame_feature ARRAY<FLOAT>"
+FRAME_EVERY = 10  # sample_frames keeps frames 0, 10, 20, ...
+FRAME_DIM = 8  # sample_frames' vector length
+# the media oracles in queries_ext.py (SQL_MEDIA_FEATURES,
+# SQL_MEDIA_DECODE_REAL, SQL_FRAME_SAMPLE, SQL_VIDEO_DECODE_REAL) write
+# the same three numbers
 
 
 def synth_media(docs: DataFrame) -> DataFrame:
@@ -452,8 +458,8 @@ def _decode_pixels(payload: bytes, width: int, height: int) -> np.ndarray:
     return _decode_stub(payload, width, height)
 
 
-def image_features(media: DataFrame, dim: int = 16) -> DataFrame:
-    """decode → pooled feature vector, batched via mapInPandas (the
+def image_features(media: DataFrame) -> DataFrame:
+    """decode → pooled FEATURE_DIM-vector, batched via mapInPandas (the
     Arrow batch is the unit of decode work; partition count controls
     decode parallelism at 100 TB)."""
 
@@ -463,11 +469,11 @@ def image_features(media: DataFrame, dim: int = 16) -> DataFrame:
             for payload, w, h in zip(pdf["payload"], pdf["width"], pdf["height"]):
                 px = _decode_pixels(bytes(payload) if payload is not None else b"", int(w), int(h))
                 # pooled per-column sums (exact in float32: sum < 2^21/65536),
-                # truncated to dim; a real decode narrower than dim is
-                # zero-padded so the feature vector length is invariant
-                pooled = px.sum(axis=0, dtype=np.float64)[:dim]
-                if pooled.shape[0] < dim:
-                    pooled = np.pad(pooled, (0, dim - pooled.shape[0]))
+                # truncated to FEATURE_DIM; a real decode narrower than
+                # that is zero-padded so the vector length is invariant
+                pooled = px.sum(axis=0, dtype=np.float64)[:FEATURE_DIM]
+                if pooled.shape[0] < FEATURE_DIM:
+                    pooled = np.pad(pooled, (0, FEATURE_DIM - pooled.shape[0]))
                 feats.append(pooled.astype(np.float32).tolist())
             yield pd.DataFrame(
                 {
@@ -564,8 +570,9 @@ def _decode_frames_real(payload: bytes, width: int, height: int,
     return None
 
 
-def sample_frames(media: DataFrame, every: int = 10, dim: int = 8) -> DataFrame:
-    """Frame sampling for video rows. Each container payload crosses
+def sample_frames(media: DataFrame) -> DataFrame:
+    """Frame sampling for video rows: every FRAME_EVERY-th frame, pooled
+    to a FRAME_DIM-vector. Each container payload crosses
     Arrow exactly ONCE and is demuxed once per doc inside the op —
     never exploded JVM-side, which would duplicate the (at 100 TB,
     ~100 MB) payload per sampled frame through the plan. Real demux +
@@ -583,7 +590,7 @@ def sample_frames(media: DataFrame, every: int = 10, dim: int = 8) -> DataFrame:
                 pdf["n_frames"], pdf["payload"],
             ):
                 data = bytes(payload) if payload is not None else b""
-                idxs = list(range(0, int(nf), every))
+                idxs = list(range(0, int(nf), FRAME_EVERY))
                 pxs = _decode_frames_real(data, int(w), int(h), idxs)
                 if pxs is None:
                     pxs = [
@@ -594,7 +601,7 @@ def sample_frames(media: DataFrame, every: int = 10, dim: int = 8) -> DataFrame:
                     doc_ids.append(int(doc_id))
                     frame_idxs.append(i)
                     feats.append(
-                        px.sum(axis=0, dtype=np.float64)[:dim]
+                        px.sum(axis=0, dtype=np.float64)[:FRAME_DIM]
                         .astype(np.float32).tolist()
                     )
             yield pd.DataFrame(

@@ -251,9 +251,8 @@ def frontier_schedule(
     frontier: DataFrame,
     n_fetchers: int = 64,
     base_epoch: int = 0,
-    priority_col: str | None = "priority",
 ) -> DataFrame:
-    """Turn a crawl frontier (url, host, crawl_delay[, priority]) into
+    """Turn a crawl frontier (url, host, crawl_delay, priority) into
     a politeness-respecting fetch plan: every url gets a fetcher slot
     (stable hash of its host — all requests to one host go through ONE
     fetcher, so the spacing guarantee survives distribution) and a
@@ -264,8 +263,7 @@ def frontier_schedule(
     politeness serializes that host anyway; the work bound is the
     frontier's largest single host, which is inherent to the
     semantics, not the plan)."""
-    order = [F.col(priority_col).desc()] if priority_col else []
-    w = Window.partitionBy("host").orderBy(*order, F.col("url"))
+    w = Window.partitionBy("host").orderBy(F.col("priority").desc(), F.col("url"))
     seq = F.row_number().over(w)
     return (
         frontier.withColumn("fetcher", F.pmod(F.xxhash64(F.col("host")), F.lit(n_fetchers)).cast("int"))
@@ -354,11 +352,11 @@ ROBOTS_META_SCHEMA = (
 )
 
 
-def parse_robots_meta(text: str, agent: str = "*") -> dict:
-    """Extract the non-rule metadata of a robots.txt: the applicable
-    group's Crawl-delay (seconds, float; the de-facto extension most
-    crawlers honor) and every Sitemap: url (Sitemap lines are
-    group-independent per the REP). Returns
+def parse_robots_meta(text: str) -> dict:
+    """Extract the non-rule metadata of a robots.txt: the Crawl-delay
+    of the first group for agent `*` (seconds, float; the de-facto
+    extension most crawlers honor) and every Sitemap: url (Sitemap
+    lines are group-independent per the REP). Returns
     {crawl_delay: float|None, sitemaps: [url, ...]}."""
     sitemaps: list[str] = []
     groups: list[tuple[list[str], float | None]] = []
@@ -396,21 +394,8 @@ def parse_robots_meta(text: str, agent: str = "*") -> dict:
                 except ValueError:
                     pass
     flush()
-
-    agent_l = agent.lower()
-    best: tuple[int, float | None] | None = None
-    for agents, delay in groups:
-        for a in agents:
-            if a == "*":
-                score = 0
-            elif a and a in agent_l:
-                score = len(a)
-            else:
-                continue
-            if best is None or score > best[0]:
-                best = (score, delay)
     return {
-        "crawl_delay": None if best is None else best[1],
+        "crawl_delay": next((d for agents, d in groups if "*" in agents), None),
         "sitemaps": sitemaps,
     }
 

@@ -36,14 +36,14 @@ def _norm_sql(col: str) -> str:
     return f"SQRT({DOT.format(a=col, b=col)})"
 
 
-def ann_brute(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K) -> DataFrame:
-    """Exact brute-force cosine top-k for the first n_queries vectors."""
+def ann_brute(emb: DataFrame) -> DataFrame:
+    """Exact brute-force cosine top-TOP_K for the first N_QUERIES vectors."""
     # norms once per vector / per query, not per pair (same values,
     # factored out of the O(n x queries) pair stream)
     v = emb.select(
         "vec_id", "embedding", F.expr(_norm_sql("embedding")).alias("_norm")
     )
-    q = v.filter(F.col("vec_id") < n_queries).select(
+    q = v.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("embedding").alias("q_emb"),
         F.col("_norm").alias("_qnorm"),
@@ -55,7 +55,7 @@ def ann_brute(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K) -> Dat
     w = W.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("vec_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("q_id", "vec_id", "rank", "score")
     )
 
@@ -93,13 +93,13 @@ def srp_buckets(emb: DataFrame) -> DataFrame:
     )
 
 
-def ann_lsh(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K) -> DataFrame:
+def ann_lsh(emb: DataFrame) -> DataFrame:
     """LSH-bucketed ANN: candidates = vectors sharing ANY table's bucket
     with the query (equi-join on (table, bucket) — shuffle-free with
     broadcast queries), deduped, exact cosine refine + top-k.
     Approximate by design; recall vs ann_brute asserted in tests."""
     b = srp_buckets(emb)
-    qb = b.filter(F.col("vec_id") < n_queries).select(
+    qb = b.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), "table_id", "bucket"
     )
     cand_ids = (
@@ -108,7 +108,7 @@ def ann_lsh(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K) -> DataF
         .select("q_id", "vec_id")
         .distinct()
     )
-    q = emb.filter(F.col("vec_id") < n_queries).select(
+    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
     embn = emb.select(
@@ -122,7 +122,7 @@ def ann_lsh(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K) -> DataF
     w = W.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("vec_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("q_id", "vec_id", "rank", "score")
     )
 
@@ -190,7 +190,7 @@ def assign_ivf(emb: DataFrame, cent: DataFrame) -> DataFrame:
     )
 
 
-def ann_ivf(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K) -> DataFrame:
+def ann_ivf(emb: DataFrame) -> DataFrame:
     """IVF-probed ANN (the charter's IVF scale path, alongside the
     SRP-LSH variant): queries probe their IVF_PROBE nearest centroids,
     candidates come from those inverted lists only (equi-join on
@@ -200,7 +200,7 @@ def ann_ivf(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K) -> DataF
     cent = ivf_centroids(emb)
     asg = assign_ivf(emb, cent)
 
-    q = emb.filter(F.col("vec_id") < n_queries).select(
+    q = emb.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
     qd2 = F.expr(L2.format(a="q_emb", b="centroid"))
@@ -233,7 +233,7 @@ def ann_ivf(emb: DataFrame, n_queries: int = N_QUERIES, k: int = TOP_K) -> DataF
     w = W.partitionBy("q_id").orderBy(F.col("score").desc(), F.col("vec_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= TOP_K)
         .select("q_id", "vec_id", "rank", "score")
     )
 

@@ -27,10 +27,6 @@ def asof_join(
     right: DataFrame,
     on: str = "user_id",
     ts_col: str = "ts",
-    left_id: str = "event_id",
-    right_id: str = "event_id",
-    right_vals: tuple = ("value",),
-    left_vals: tuple = ("value",),
 ) -> DataFrame:
     """Backward as-of join: for every left row, attach the right row
     with the greatest ts <= left.ts for the same `on` key (ties on ts
@@ -42,42 +38,39 @@ def asof_join(
     Right rows sort BEFORE left rows at equal ts, so ts_r == ts_l
     matches (the usual as-of convention).
 
-    The left payload columns (`left_vals`, kept under their own names)
-    are symmetrical to `right_vals` (emitted as r_<name>); id, ts, and
-    payload types are taken from the input schemas, never assumed.
+    Both sides carry an id `event_id` and a payload `value`. The left
+    row keeps its own under those names; the matched right row's come
+    out as r_id and r_value, with its ts as r_ts. Id, ts, and payload
+    types are taken from the input schemas, never assumed.
     """
-    rid_t = right.schema[right_id].dataType.simpleString()
-    lid_t = left.schema[left_id].dataType.simpleString()
+    rid_t = right.schema["event_id"].dataType.simpleString()
+    lid_t = left.schema["event_id"].dataType.simpleString()
     ts_t = right.schema[ts_col].dataType.simpleString()
-    rval_t = {c: right.schema[c].dataType.simpleString() for c in right_vals}
-    lval_t = {c: left.schema[c].dataType.simpleString() for c in left_vals}
+    rval_t = right.schema["value"].dataType.simpleString()
+    lval_t = left.schema["value"].dataType.simpleString()
     r_payload = F.struct(
         F.col(ts_col).alias("r_ts"),
-        F.col(right_id).alias("r_id"),
-        *[F.col(c).alias(f"r_{c}") for c in right_vals],
+        F.col("event_id").alias("r_id"),
+        F.col("value").alias("r_value"),
     )
     r = right.select(
         F.col(on),
         F.col(ts_col),
         F.lit(0).alias("_side"),
-        F.col(right_id).alias("_rid"),
+        F.col("event_id").alias("_rid"),
         r_payload.alias("_r"),
         F.lit(None).cast(lid_t).alias("_lid"),
-        *[F.lit(None).cast(lval_t[c]).alias(f"_l_{c}") for c in left_vals],
+        F.lit(None).cast(lval_t).alias("_lval"),
     )
-    null_r = F.lit(None).cast(
-        f"struct<r_ts:{ts_t},r_id:{rid_t},"
-        + ",".join(f"r_{c}:{rval_t[c]}" for c in right_vals)
-        + ">"
-    )
+    null_r = F.lit(None).cast(f"struct<r_ts:{ts_t},r_id:{rid_t},r_value:{rval_t}>")
     l = left.select(
         F.col(on),
         F.col(ts_col),
         F.lit(1).alias("_side"),
         F.lit(None).cast(rid_t).alias("_rid"),
         null_r.alias("_r"),
-        F.col(left_id).alias("_lid"),
-        *[F.col(c).alias(f"_l_{c}") for c in left_vals],
+        F.col("event_id").alias("_lid"),
+        F.col("value").alias("_lval"),
     )
     u = r.unionByName(l)
     w = (
@@ -86,16 +79,15 @@ def asof_join(
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
     carried = u.withColumn("_match", F.last("_r", ignorenulls=True).over(w))
-    out = carried.filter(F.col("_side") == 1).select(
-        F.col("_lid").alias(left_id),
+    return carried.filter(F.col("_side") == 1).select(
+        F.col("_lid").alias("event_id"),
         F.col(on),
         F.col(ts_col),
-        *[F.col(f"_l_{c}").alias(c) for c in left_vals],
+        F.col("_lval").alias("value"),
         F.col("_match.r_id").alias("r_id"),
         F.col("_match.r_ts").alias("r_ts"),
-        *[F.col(f"_match.r_{c}").alias(f"r_{c}") for c in right_vals],
+        F.col("_match.r_value").alias("r_value"),
     )
-    return out
 
 
 def range_join(

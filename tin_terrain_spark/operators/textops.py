@@ -255,7 +255,7 @@ def sql_rep_signals() -> str:
     """
 
 
-# quality_filter's rules (MIN_TOKENS is its one parameter's default)
+# quality_filter's rules
 MIN_TOKENS = 20
 MAX_TOKENS = 100000
 MIN_DISTINCT_FRAC = 0.30
@@ -264,9 +264,9 @@ MAX_TOP_BIGRAM_FRAC = 0.12
 MIN_STOPWORD_FRAC = 0.01
 
 
-def quality_filter(docs: DataFrame, min_tokens: int = MIN_TOKENS) -> DataFrame:
+def quality_filter(docs: DataFrame) -> DataFrame:
     """Composite keep/drop quality gate (the C4 / Gopher rule family):
-    length window [min_tokens, MAX_TOKENS], distinct-token floor,
+    length window [MIN_TOKENS, MAX_TOKENS], distinct-token floor,
     repetition ceilings, stopword floor — each rule emitted as its own
     boolean REASON column plus the conjunctive `keep`, so downstream
     mixing can report per-rule drop rates (the way data cards do). Pure composition of the oracled
@@ -281,13 +281,13 @@ def quality_filter(docs: DataFrame, min_tokens: int = MIN_TOKENS) -> DataFrame:
         "doc_id", "distinct_frac", "top_tok_frac", "top_bigram_frac"
     )
     j = base.join(rs, "doc_id")
-    ok_len = F.col("n_tokens").between(min_tokens, MAX_TOKENS)
+    ok_len = F.col("n_tokens").between(MIN_TOKENS, MAX_TOKENS)
     ok_distinct = F.col("distinct_frac") >= MIN_DISTINCT_FRAC
     ok_top_tok = F.col("top_tok_frac") <= MAX_TOP_TOK_FRAC
     # docs with <2 tokens have no bigrams → top_bigram_frac is NULL
     # from rep_signals' left join; a doc with no bigrams trivially
     # passes the bigram-repetition ceiling, so coalesce to 0.0 (keeps
-    # `keep` a real boolean for any min_tokens, incl. min_tokens<=1)
+    # `keep` a real boolean for any MIN_TOKENS, incl. MIN_TOKENS<=1)
     ok_top_bigram = F.coalesce(F.col("top_bigram_frac"), F.lit(0.0)) <= MAX_TOP_BIGRAM_FRAC
     ok_stop = F.round(F.col("n_stop") / F.col("n_tokens"), 6) >= MIN_STOPWORD_FRAC
     return j.select(
@@ -637,14 +637,15 @@ def sql_pii_scrub() -> str:
     """
 
 
-def strip_boilerplate_lines(
-    docs: DataFrame,
-    text_col: str = "text",
-    min_docs: int = 3,
-    min_frac: float = 0.5,
-) -> DataFrame:
+# strip_boilerplate_lines: a line in at least BP_MIN_DOCS of a host's
+# docs, and in at least BP_MIN_FRAC of them, is boilerplate
+BP_MIN_DOCS = 3
+BP_MIN_FRAC = 0.5
+
+
+def strip_boilerplate_lines(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """CCNet-style frequency boilerplate removal: a LINE that appears
-    in ≥ min_docs documents AND ≥ min_frac of a host's documents
+    in ≥ BP_MIN_DOCS documents AND ≥ BP_MIN_FRAC of a host's documents
     is template chrome (nav, copyright footers) —
     strip it from every doc and reassemble the remaining lines in
     order. Plan: one posexplode, one (host, line) agg + one host agg
@@ -666,8 +667,8 @@ def strip_boilerplate_lines(
         .agg(F.count_distinct(F.col("doc_id")).alias("_n"))
         .join(group_sizes, "host")
         .where(
-            (F.col("_n") >= min_docs)
-            & (F.col("_n") / F.col("_n_docs") >= min_frac)
+            (F.col("_n") >= BP_MIN_DOCS)
+            & (F.col("_n") / F.col("_n_docs") >= BP_MIN_FRAC)
         )
         .select("host", "line", F.lit(True).alias("_bp"))
     )

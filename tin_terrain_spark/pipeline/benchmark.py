@@ -125,16 +125,12 @@ def run_parametrization(points: DataFrame, zoom: int, method: str,
 
 def run_benchmark_sweep(points: DataFrame, zoom: int, out_dir: str,
                         input_name: str = "points",
-                        max_errors=None, steps=None, thresholds=None,
                         grid_bits: int = 5) -> list[dict]:
     """The full sweep: terra, zemlya, dense and curvature x their
-    parameter sets, CSV + .done markers in out_dir
-    (benchmark_workflow.cpp:975-1073 shape). Returns the stats rows
-    written this invocation (resumed rows are skipped, like the
-    reference's benchmark_done fast-path)."""
-    max_errors = PARAM_MAX_ERROR if max_errors is None else max_errors
-    steps = PARAM_STEP if steps is None else steps
-    thresholds = PARAM_THRESHOLD if thresholds is None else thresholds
+    parameter sets (PARAM_MAX_ERROR, PARAM_STEP, PARAM_THRESHOLD), CSV
+    + .done markers in out_dir (benchmark_workflow.cpp:975-1073 shape).
+    Returns the stats rows written this invocation (resumed rows are
+    skipped, like the reference's benchmark_done fast-path)."""
     os.makedirs(out_dir, exist_ok=True)
     csv_path = os.path.join(out_dir, "tin_terrain_benchmarks.csv")
     if not os.path.exists(csv_path):
@@ -148,11 +144,11 @@ def run_benchmark_sweep(points: DataFrame, zoom: int, out_dir: str,
     try:
         for method in ("terra", "zemlya", "dense", "curvature"):
             if method == "dense":
-                params = steps
+                params = PARAM_STEP
             elif method == "curvature":
-                params = thresholds
+                params = PARAM_THRESHOLD
             else:
-                params = max_errors
+                params = PARAM_MAX_ERROR
             for p in params:
                 marker = os.path.join(out_dir, f"{method}_{p}.done")
                 if os.path.exists(marker):

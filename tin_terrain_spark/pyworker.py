@@ -27,6 +27,9 @@ import sys
 import zipimport
 
 _stamps = {}
+# the stock functions the shim wraps, taken before it replaces them
+_stock_read = zipimport._read_directory
+_stock_invalidate = zipimport.zipimporter.invalidate_caches
 
 
 def _stamp(path):
@@ -37,18 +40,18 @@ def _stamp(path):
     return st.st_ino, st.st_size, st.st_mtime_ns
 
 
-def _stamped_read(archive, _read=zipimport._read_directory):
+def _stamped_read(archive):
     stamp = _stamp(archive)  # taken first: a write during the read re-reads later
-    files = _read(archive)
+    files = _stock_read(archive)
     _stamps[archive] = stamp
     return files
 
 
-def _invalidate_caches(self, _stock=zipimport.zipimporter.invalidate_caches):
+def _invalidate_caches(self):
     files = zipimport._zip_directory_cache.get(self.archive)
     stamp = _stamp(self.archive)
     if files is None or stamp is None or _stamps.get(self.archive) != stamp:
-        _stock(self)  # re-reads through _stamped_read, or empties on error
+        _stock_invalidate(self)  # re-reads through _stamped_read, or empties on error
     else:
         self._files = files
 
@@ -71,11 +74,12 @@ if __name__ == "__main__":
     import pyspark.daemon
 
     _frozen = False
+    _stock_main = pyspark.daemon.worker_main
 
-    def _main_then_freeze(infile, outfile, _main=pyspark.daemon.worker_main):
+    def _main_then_freeze(infile, outfile):
         global _frozen
         try:
-            return _main(infile, outfile)
+            return _stock_main(infile, outfile)
         finally:
             if not _frozen:  # not gc.get_freeze_count(): it walks the list, ~7 ms
                 gc.collect()

@@ -24,6 +24,8 @@ from .operators.meshing import mesh_tiles
 
 ZOOM = 3
 GRID_BITS = 5
+# q_vertex_dedup's id buckets span 2^16 doc ids, so hold at most 65,536 cells
+VERTEX_BUCKET_BITS = 16
 
 
 # Size gate for spread="auto": spread only when the input carries
@@ -366,43 +368,45 @@ def q_vertex_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8: distinct-vertex dedup + dense first-seen index
     (Mesh::generate_decomposed, Mesh.cpp:107-143).
 
-    The dense id is assigned in two phases so no stage ever sorts the
-    full vertex set in one task (the naive `row_number() OVER (ORDER BY
-    first_doc)` forces a single-partition exchange): (1) range-partition
-    by first_doc and rank within each partition, (2) compute per-
-    partition offsets (one row per partition — trivially small) and add
-    them via a broadcast join. Output identical to the global window.
-    first_doc is unique (each doc lands in exactly one cell), so the
-    ordering is total and the ids are deterministic."""
+    The dense id is assigned in two phases so no stage sorts the full
+    vertex set in one task (the naive `row_number() OVER (ORDER BY
+    first_doc)` forces a single-partition exchange). Each cell goes to
+    the bucket `first_doc >> VERTEX_BUCKET_BITS`: (1) rank the cells
+    within their bucket, (2) add the count of cells in lower buckets,
+    a running sum over one row per non-empty bucket, via a broadcast
+    join. The bucket is monotone in first_doc and first_doc is unique
+    (each doc lands in exactly one cell), so the ids equal the global
+    window's, whatever the partitioning, and no bucket holds more than
+    2^VERTEX_BUCKET_BITS cells. A bucket read from
+    spark_partition_id() of a range exchange does not give that: the
+    plan reads the exchange twice, and the two reads may disagree."""
     pts = geocode_points(_docs(spark, sf_dir, spread=False), zoom=ZOOM, grid_bits=GRID_BITS, with_dem_z=False)
     from pyspark.sql import Window as W
 
-    firsts = pts.groupBy("cell_x", "cell_y").agg(F.min("doc_id").alias("first_doc"))
-    n_parts = max(spark.sparkContext.defaultParallelism, 2)
-    ranged = firsts.repartitionByRange(n_parts, "first_doc").withColumn(
-        "_pid", F.spark_partition_id()
+    firsts = (
+        pts.groupBy("cell_x", "cell_y")
+        .agg(F.min("doc_id").alias("first_doc"))
+        .withColumn("_b", F.shiftright("first_doc", VERTEX_BUCKET_BITS))
     )
-    local = ranged.withColumn(
-        "_rn", F.row_number().over(W.partitionBy("_pid").orderBy("first_doc"))
+    local = firsts.withColumn(
+        "_rn", F.row_number().over(W.partitionBy("_b").orderBy("first_doc"))
     )
-    # one row per partition; the cumsum window here is over <= n_parts
-    # rows, not the data — scale-safe by construction
     offsets = (
-        local.groupBy("_pid")
+        firsts.groupBy("_b")
         .agg(F.count(F.lit(1)).alias("_cnt"))
         .withColumn(
             "_off",
             F.coalesce(
                 F.sum("_cnt").over(
-                    W.orderBy("_pid").rowsBetween(W.unboundedPreceding, -1)
+                    W.orderBy("_b").rowsBetween(W.unboundedPreceding, -1)
                 ),
                 F.lit(0),
             ),
         )
-        .select("_pid", "_off")
+        .select("_b", "_off")
     )
     return (
-        local.join(F.broadcast(offsets), "_pid")
+        local.join(F.broadcast(offsets), "_b")
         .withColumn("vertex_id", (F.col("_rn") + F.col("_off") - 1).cast("int"))
         .select("cell_x", "cell_y", "first_doc", "vertex_id")
     )

@@ -1933,6 +1933,7 @@ def q_cdx_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_cdx_index() -> str:
     from .operators.urlops import N_HOSTS
+    from .sources.warc import DOCS_PER_FILE
 
     # byte arithmetic of sources/warc.py build_warc/_record:
     #   http envelope = 78 + digits(hlen) + hlen   (status+ctype+clen lines)
@@ -1945,7 +1946,7 @@ def _sql_cdx_index() -> str:
                  || CAST(doc_id % {N_HOSTS} AS VARCHAR)
                  || '.example.org/doc/' || CAST(doc_id AS VARCHAR) AS url,
                1767225600 + doc_id AS warc_epoch,
-               CAST(FLOOR(doc_id / 25) AS BIGINT) AS file_id,
+               CAST(FLOOR(doc_id / {DOCS_PER_FILE}) AS BIGINT) AS file_id,
                octet_length(encode(text)) AS hlen,
                md5(text) AS digest
         FROM documents
@@ -2317,7 +2318,7 @@ def q_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_boilerplate_lines() -> str:
-    return """
+    return f"""
       WITH d AS (
         SELECT doc_id,
                source || '-' || CAST(doc_id % 7 AS VARCHAR) AS grp,
@@ -2337,7 +2338,7 @@ def _sql_boilerplate_lines() -> str:
         FROM (SELECT grp, line, count(DISTINCT doc_id) AS n
               FROM lines GROUP BY grp, line) f
         JOIN sizes USING (grp)
-        WHERE f.n >= 3 AND CAST(f.n AS DOUBLE) / n_docs >= 0.5
+        WHERE f.n >= {T.BP_MIN_DOCS} AND CAST(f.n AS DOUBLE) / n_docs >= {T.BP_MIN_FRAC}
       ), kept AS (
         SELECT l.doc_id, l.pos, l.line
         FROM lines l LEFT JOIN bp b ON l.grp = b.grp AND l.line = b.line

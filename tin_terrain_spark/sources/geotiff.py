@@ -8,9 +8,9 @@ organization, compression none/deflate/LZW/PackBits/new-style-JPEG
 T.81 codec, kernels/jpeg.py), horizontal
 predictor, uint/int/float samples, ModelPixelScale + ModelTiepoint or
 axis-aligned ModelTransformation georef (files with NO georef raise),
-optional EPSG:3857 GeoKey validation matching the reference's
-load_raster_file(validate=true), and the GDAL_NODATA ascii tag — plus
-a minimal float32 writer (test fixtures / export).
+and the GDAL_NODATA ascii tag — plus a minimal float32 writer (test
+fixtures / export). Like the reference CLI's
+load_raster_file(validate=false), the GeoKey CRS is not checked.
 
 Load semantics mirror /root/reference/src/RasterIO.cpp:347-441:
 band 1 only, cellsize = |scale_x|, pos = lower-left corner
@@ -70,13 +70,7 @@ _TAG_JPEG_TABLES = 347
 _TAG_MODEL_PIXEL_SCALE = 33550
 _TAG_MODEL_TIEPOINT = 33922
 _TAG_MODEL_TRANSFORMATION = 34264
-_TAG_GEOKEY_DIRECTORY = 34735
 _TAG_GDAL_NODATA = 42113
-
-# GeoKey ids (GeoTIFF spec §6.2)
-_GEOKEY_MODEL_TYPE = 1024
-_GEOKEY_PROJECTED_CS = 3072
-WEB_MERCATOR_EPSG = (3857, 3785, 900913)  # canonical + legacy aliases
 
 
 def _lzw_decode(raw: bytes) -> bytes:
@@ -357,14 +351,8 @@ def _decode_block(raw: bytes, compression: int, dtype: np.dtype,
     return a[:, :, 0]
 
 
-def read_geotiff(data: bytes, validate_projection: bool = False) -> Grid:
-    """Parse GeoTIFF bytes → Grid (reference load semantics).
-
-    validate_projection=True mirrors load_raster_file(validate=true)
-    (RasterIO.cpp:274-332 + 371-378): the GeoKey directory must declare
-    a projected CRS equal to EPSG:3857 (legacy web-mercator aliases
-    accepted, as GDAL's AutoIdentifyEPSG would); anything else raises
-    with the reference's gdalwarp reprojection hint."""
+def read_geotiff(data: bytes) -> Grid:
+    """Parse GeoTIFF bytes → Grid (reference load semantics)."""
     if data[:2] == b"II":
         bo = "<"
     elif data[:2] == b"MM":
@@ -435,22 +423,6 @@ def read_geotiff(data: bytes, validate_projection: bool = False) -> Grid:
                                   predictor, block_spp, jpeg_tables)
             z[r0 : r0 + rows] = block.astype(np.float64)
 
-    if validate_projection:
-        gk = tags.get(_TAG_GEOKEY_DIRECTORY)
-        epsg = None
-        if gk is not None:
-            # GeoKey directory: 4-short header, then (key, loc, cnt,
-            # value) quads; inline values have loc == 0
-            for j in range(4, len(gk) - 3, 4):
-                if int(gk[j]) == _GEOKEY_PROJECTED_CS and int(gk[j + 1]) == 0:
-                    epsg = int(gk[j + 3])
-        if epsg not in WEB_MERCATOR_EPSG:
-            raise ValueError(
-                f"input raster must be in EPSG:3857 (Web Mercator); GeoKey "
-                f"directory declares {epsg if epsg is not None else 'no projected CRS'}. "
-                "Reproject with: gdalwarp -t_srs EPSG:3857 input.tif output.tif"
-            )
-
     # georef (RasterIO.cpp:421-441 semantics): ModelPixelScale +
     # ModelTiepoint, or an axis-aligned ModelTransformation matrix.
     # A file with NEITHER is not silently given a unit georef — that
@@ -497,16 +469,19 @@ def read_geotiff(data: bytes, validate_projection: bool = False) -> Grid:
 
 
 def write_geotiff(grid: Grid, path: str, compress: "bool | str" = False,
-                  epsg: int | None = None, bigtiff: bool = False,
-                  predictor: int = 1) -> None:
+                  bigtiff: bool = False, predictor: int = 1) -> None:
     """Minimal single-band float32 GeoTIFF writer (little-endian, one
     strip per raster; compress: False | True/'deflate' | 'lzw' |
-    'packbits'; optional GeoKey CRS declaration; bigtiff=True emits the
+    'packbits'; no GeoKey CRS declaration; bigtiff=True emits the
     version-43 8-byte-offset layout; predictor=3 applies the
     floating-point predictor before compression — the deflate+
     predictor-3 combination is the common float32 DEM archive layout)
     — enough for test fixtures and for exporting Grids to
-    GDAL-readable files."""
+    GDAL-readable files.
+
+    Test-only parameters: bigtiff, predictor —
+    tests/test_sources_geotiff.py builds its BigTIFF and predictor-3
+    decoder fixtures with them."""
     h, w = grid.z.shape
     if predictor == 3 and not compress:
         # TIFF predictors are a compression-codec parameter: libtiff/
@@ -566,12 +541,6 @@ def write_geotiff(grid: Grid, path: str, compress: "bool | str" = False,
     # tiepoint: raster (0,0) ↔ world top-left corner
     entry(_TAG_MODEL_TIEPOINT, 12, 6,
           (0.0, 0.0, 0.0, grid.xpos, grid.ypos + h * grid.cellsize, 0.0))
-    if epsg is not None:
-        # GeoKey directory v1.1.0: ModelType=Projected(1), ProjectedCS=epsg
-        entry(_TAG_GEOKEY_DIRECTORY, 3, 12,
-              (1, 1, 0, 2,
-               _GEOKEY_MODEL_TYPE, 0, 1, 1,
-               _GEOKEY_PROJECTED_CS, 0, 1, epsg))
     entry(_TAG_GDAL_NODATA, 2, len(ndv_s), ndv_s)
 
     n = len(entries)

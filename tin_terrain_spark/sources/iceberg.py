@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 TILE_KEY = ("zoom", "tile_x", "tile_y")
+TILES_TABLE = "lake.web.tiles"  # the Iceberg table the tile sink merges into
 
 
 class IcebergUnavailable(RuntimeError):
@@ -64,7 +65,11 @@ def iceberg_session_confs(catalog: str = "lake", warehouse: str = "s3://bucket/w
     so the launch path is code, not tribal knowledge).
 
     Kept without a shipped caller: a deployment setting for the
-    cluster launcher, checked by tests/test_sources_iceberg.py."""
+    cluster launcher, checked by tests/test_sources_iceberg.py.
+
+    Test-only parameters: catalog, warehouse — deployment settings the
+    cluster launcher chooses; tests/test_sources_iceberg.py passes
+    them."""
     return {
         f"spark.sql.catalog.{catalog}": "org.apache.iceberg.spark.SparkCatalog",
         f"spark.sql.catalog.{catalog}.type": "hadoop",
@@ -77,21 +82,19 @@ def iceberg_session_confs(catalog: str = "lake", warehouse: str = "s3://bucket/w
     }
 
 
-def merge_tiles(spark: SparkSession, tiles: DataFrame,
-                table: str = "lake.web.tiles",
-                temp_view: str = "_tiles_updates") -> None:
-    """Idempotent tile upsert: MERGE INTO keyed on (zoom, tile_x,
-    tile_y). A resumed/repeated run converges to the same table state
-    (matched rows overwritten with the recomputed tile, missing rows
-    inserted) under Iceberg's serializable snapshot commit — the
+def merge_tiles(spark: SparkSession, tiles: DataFrame) -> None:
+    """Idempotent tile upsert into TILES_TABLE: MERGE INTO keyed on
+    (zoom, tile_x, tile_y). A resumed/repeated run converges to the
+    same table state (matched rows overwritten with the recomputed
+    tile, missing rows inserted) under Iceberg's serializable snapshot commit — the
     cluster-grade replacement for filesystem .done markers."""
     _require(spark)
-    tiles.createOrReplaceTempView(temp_view)
+    tiles.createOrReplaceTempView("_tiles_updates")
     on = " AND ".join(f"t.{k} = u.{k}" for k in TILE_KEY)
     spark.sql(
         f"""
-        MERGE INTO {table} t
-        USING {temp_view} u
+        MERGE INTO {TILES_TABLE} t
+        USING _tiles_updates u
         ON {on}
         WHEN MATCHED THEN UPDATE SET *
         WHEN NOT MATCHED THEN INSERT *
@@ -99,13 +102,12 @@ def merge_tiles(spark: SparkSession, tiles: DataFrame,
     )
 
 
-def completed_tile_keys(spark: SparkSession, zoom: int,
-                        table: str = "lake.web.tiles") -> DataFrame:
+def completed_tile_keys(spark: SparkSession, zoom: int) -> DataFrame:
     """Keys already materialized at this zoom — the anti-join input for
     skip-what's-done resume (mirrors pipeline.dem2tintiles' parquet
     manifest, but transactional)."""
     _require(spark)
-    return spark.table(table).where(f"zoom = {zoom}").select(*TILE_KEY)
+    return spark.table(TILES_TABLE).where(f"zoom = {zoom}").select(*TILE_KEY)
 
 
 # --------------------------------------------------------------------------
@@ -141,19 +143,18 @@ class TileCatalog:
 
 
 class IcebergTileCatalog(TileCatalog):
-    def __init__(self, spark: SparkSession, table: str = "lake.web.tiles"):
+    def __init__(self, spark: SparkSession):
         _require(spark)
         self.spark = spark
-        self.table = table
 
     def merge(self, tiles: DataFrame) -> None:
-        merge_tiles(self.spark, tiles, self.table)
+        merge_tiles(self.spark, tiles)
 
     def completed_keys(self, zoom: int) -> DataFrame:
-        return completed_tile_keys(self.spark, zoom, self.table)
+        return completed_tile_keys(self.spark, zoom)
 
     def read(self) -> DataFrame:
-        return self.spark.table(self.table)
+        return self.spark.table(TILES_TABLE)
 
 
 class LocalTileCatalog(TileCatalog):
@@ -247,12 +248,12 @@ class LocalTileCatalog(TileCatalog):
         return self.read().where(F.col("zoom") == zoom).select(*TILE_KEY)
 
 
-def tile_catalog(spark: SparkSession, table: str = "lake.web.tiles",
-                 local_path: str | None = None) -> TileCatalog:
-    """Binding choice: Iceberg when the jars are present, else the
-    local parquet catalog at `local_path` (required in that case)."""
+def tile_catalog(spark: SparkSession, local_path: str | None = None) -> TileCatalog:
+    """Binding choice: Iceberg's TILES_TABLE when the jars are present,
+    else the local parquet catalog at `local_path` (required in that
+    case)."""
     if iceberg_available(spark):
-        return IcebergTileCatalog(spark, table)
+        return IcebergTileCatalog(spark)
     if local_path is None:
         raise IcebergUnavailable(
             "no Iceberg runtime and no local_path fallback given"

@@ -329,14 +329,14 @@ def warc_cdx(files: DataFrame) -> DataFrame:
 
 
 WARC_FILE_SCHEMA = "file_id BIGINT, n_records INT, content BINARY"
+DOCS_PER_FILE = 25  # synth_warc_files' pages per file; the CDX oracle's too
 
 
 def synth_warc_files(
-    pages: DataFrame, docs_per_file: int = 25, id_col: str = "doc_id",
-    gzip_mode: str = "alternate",
+    pages: DataFrame, gzip_mode: str = "alternate",
 ) -> DataFrame:
     """Pack pages(doc_id, url, warc_epoch, html) into deterministic
-    WARC files: file_id = doc_id // docs_per_file, records ordered by
+    WARC files: file_id = doc_id // DOCS_PER_FILE, records ordered by
     doc_id; gzip_mode 'alternate' gzips odd files per record (the CC
     layout) and leaves even files plain, 'none'/'all' force one
     layout (the CDX oracle needs 'none' — plain offsets are
@@ -349,7 +349,7 @@ def synth_warc_files(
 
     def pack(key, pdf):
         (fid,) = key
-        pdf = pdf.sort_values(id_col)
+        pdf = pdf.sort_values("doc_id")
         recs = [
             {
                 "url": u,
@@ -358,7 +358,7 @@ def synth_warc_files(
                 "record_id": int(d),
             }
             for d, u, e, h in zip(
-                pdf[id_col], pdf["url"], pdf["warc_epoch"], pdf["html"]
+                pdf["doc_id"], pdf["url"], pdf["warc_epoch"], pdf["html"]
             )
         ]
         gz = {"alternate": bool(fid % 2), "none": False, "all": True}[gzip_mode]
@@ -368,7 +368,7 @@ def synth_warc_files(
         )
 
     keyed = pages.withColumn(
-        "file_id", F.floor(F.col(id_col) / docs_per_file).cast("bigint")
+        "file_id", F.floor(F.col("doc_id") / DOCS_PER_FILE).cast("bigint")
     )
     # pin the pack kernel's parallelism: an explicit repartition on the
     # group key (reused by the groupBy — no second exchange) keeps AQE
