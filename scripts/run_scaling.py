@@ -25,7 +25,11 @@ import zipfile
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from tin_terrain_spark.session import MALLOC_ARENA_MAX, jvm_options  # noqa: E402
+from tin_terrain_spark.session import (  # noqa: E402
+    MALLOC_ARENA_MAX,
+    cds_java_options,
+    jvm_options,
+)
 
 DRIVER = """
 import json, os, sys, time
@@ -81,9 +85,13 @@ def submit(driver_py: str, zip_path: str, env: dict) -> subprocess.CompletedProc
     """Run ``driver_py`` under ``spark-submit --py-files zip_path`` in the
     JVM that ``get_spark`` builds. spark-submit starts the JVM before the
     driver calls ``get_spark``, so the builder-time driver memory, JVM
-    options and environment come too late there; they are given here."""
+    options and environment come too late there; they are given here,
+    the class-data archive's flags and conf dir included (the driver's
+    ``get_spark`` then checks the archive as for a JVM it started)."""
     env = dict(env)
     env.setdefault("MALLOC_ARENA_MAX", MALLOC_ARENA_MAX)
+    cds_flags, cds_env = cds_java_options()
+    env.update(cds_env)
     spark_submit = shutil.which("spark-submit") or os.path.join(
         os.path.dirname(sys.executable), "spark-submit"
     )
@@ -95,7 +103,7 @@ def submit(driver_py: str, zip_path: str, env: dict) -> subprocess.CompletedProc
         "--driver-memory",
         driver_memory,
         "--conf",
-        f"spark.driver.defaultJavaOptions={jvm_options(driver_memory)}",
+        f"spark.driver.defaultJavaOptions={jvm_options(driver_memory)} {cds_flags}".strip(),
         "--py-files",
         zip_path,
         driver_py,

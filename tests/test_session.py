@@ -13,6 +13,11 @@ the argument list), the arena cap in `/proc/<jvm>/environ`.
 starts its JVM before the driver calls `get_spark`;
 `scripts/run_scaling.submit` passes the same flags and environment on
 its command line.
+
+The class-data archive runs its whole life in subprocess drivers that
+share one cache (`TMPDIR`): the first session records, the second
+promotes and maps the archive (read back in `/proc/<jvm>/maps`), and a
+truncated or unmappable archive never fails a session.
 """
 
 from __future__ import annotations
@@ -23,6 +28,7 @@ import shutil
 import subprocess
 import sys
 import textwrap
+import zipfile
 
 import pytest
 
@@ -45,11 +51,15 @@ def _jvm_facts(spark) -> dict:
         environ = f.read().decode(errors="replace").split("\0")
     diag = mf.getPlatformMXBean(
         spark._jvm.java.lang.Class.forName("com.sun.management.HotSpotDiagnosticMXBean"))
+    with open(f"/proc/{runtime.getPid()}/maps") as f:
+        archives = sorted({line.split()[-1] for line in f if line.rstrip().endswith(".jsa")})
     return {
         "gc": sorted(b.getName() for b in mf.getGarbageCollectorMXBeans()),
         "jit_scaling": float(diag.getVMOption("CompileThresholdScaling").getValue()),
         "args": list(runtime.getInputArguments()),
         "arena": [e for e in environ if e.startswith("MALLOC_ARENA_MAX=")],
+        "conf_dir": [e for e in environ if e.startswith("SPARK_CONF_DIR=")],
+        "archives": archives,
     }
 
 
@@ -64,6 +74,14 @@ def _check(facts: dict, driver_memory: str, arena: str = "2") -> None:
     assert young == [a for a in jvm_options(driver_memory).split()
                      if a.startswith("-XX:MaxNewSize=")], facts["args"]
     assert facts["arena"] == [f"MALLOC_ARENA_MAX={arena}"], facts["arena"]
+    # an archive flag comes with the archive's log tags off stdout
+    if _archive_flags(facts):
+        assert "-Xlog:cds*=off" in facts["args"], facts["args"]
+
+
+def _archive_flags(facts: dict) -> list[str]:
+    return [a for a in facts["args"] if a.startswith(
+        ("-XX:SharedArchiveFile=", "-XX:ArchiveClassesAtExit="))]
 
 
 def test_jvm_options_cap_the_young_generation_over_3g():
@@ -98,7 +116,10 @@ DRIVER = textwrap.dedent("""
 
     conf = json.loads(os.environ.get("TTS_EXTRA_CONF", "{}"))
     spark = get_spark("session_subprocess", cores=1, extra_conf=conf)
-    print("FACTS", json.dumps(_jvm_facts(spark)))
+    facts = _jvm_facts(spark)
+    facts["count"] = spark.range(3).count()
+    facts["marker"] = spark.sparkContext.getConf().get("spark.tts.marker", "")
+    print("FACTS", json.dumps(facts))
     spark.stop()
 """)
 
@@ -106,7 +127,10 @@ DRIVER = textwrap.dedent("""
 def _facts(out: subprocess.CompletedProcess) -> dict:
     for line in out.stdout.splitlines():
         if line.startswith("FACTS "):
-            return json.loads(line[len("FACTS "):])
+            facts = json.loads(line[len("FACTS "):])
+            facts["notes"] = [e for e in out.stderr.splitlines()
+                              if e.startswith("tin_terrain_spark:")]
+            return facts
     raise AssertionError(out.stdout + out.stderr[-3000:])
 
 
@@ -129,17 +153,156 @@ def test_caller_java_options_add_to_the_defaults(tmp_path):
     assert "-XX:-UsePerfData" in facts["args"], facts["args"]
 
 
+def _run(tmp_path, cache: str, **extra: str) -> dict:
+    """One driver session with its archive cache under ``cache``."""
+    driver = tmp_path / "driver.py"
+    driver.write_text(DRIVER)
+    out = subprocess.run([sys.executable, str(driver)], env=_env(TMPDIR=cache, **extra),
+                         capture_output=True, text=True, timeout=600, cwd=tmp_path)
+    return _facts(out)
+
+
+@pytest.fixture(scope="module")
+def archive(tmp_path_factory):
+    """A cache in which one session recorded an archive and the next one
+    promoted and mapped it; a pristine copy of the archive and the
+    recording's claim are kept for the tests that damage them."""
+    from tin_terrain_spark import session
+
+    tmp = tmp_path_factory.mktemp("cds")
+    cache = str(tmp)
+    recorder = _run(tmp, cache)
+    cds = os.path.join(cache, f"tts_cds_{os.getuid()}")
+    (claim_path,) = [os.path.join(cds, f) for f in os.listdir(cds) if f.endswith(".json")]
+    with open(claim_path) as f:
+        claim = json.load(f)
+    mapper = _run(tmp, cache)
+    published = os.path.join(cds, f"{session._cds_key()}.jsa")
+    pristine = str(tmp / "pristine.jsa")
+    shutil.copy2(published, pristine)
+    return {"cache": cache, "dir": cds, "published": published, "pristine": pristine,
+            "claim": claim, "recorder": recorder, "mapper": mapper}
+
+
+def _republish(archive: dict) -> None:
+    """Put the pristine archive back at the published name, stamped as a
+    promotion stamps it."""
+    from tin_terrain_spark import session
+
+    shutil.copy2(archive["pristine"], archive["published"])
+    session._write_json(archive["published"] + ".ok", session._stamp(archive["published"]))
+
+
+def test_second_session_maps_the_archive_the_first_recorded(archive):
+    recorder, mapper, published = archive["recorder"], archive["mapper"], archive["published"]
+    (flag,) = _archive_flags(recorder)
+    assert flag.startswith(f"-XX:ArchiveClassesAtExit={archive['dir']}/"), flag
+    assert recorder["conf_dir"] == [f"SPARK_CONF_DIR={archive['dir']}/conf"]
+    assert recorder["count"] == 3 and recorder["notes"] == []
+    assert archive["claim"]["classpath"].startswith(f"{archive['dir']}/conf/:")
+    # the recording JVM wrote its own name; the next session promoted it
+    assert _archive_flags(mapper) == [f"-XX:SharedArchiveFile={published}"]
+    assert published in mapper["archives"], mapper["archives"]
+    assert mapper["count"] == 3 and mapper["notes"] == []
+    _check(mapper, "1g")
+    # the recording's claim went with the promotion
+    assert sorted(os.listdir(archive["dir"])) == sorted(
+        ["conf", os.path.basename(published), os.path.basename(published) + ".ok"])
+
+
+def test_truncated_archive_never_reaches_a_jvm(archive, tmp_path):
+    """A truncated archive, published or pending, is removed before any
+    session's JVM sees it; mapped, it would crash that JVM."""
+    from tin_terrain_spark import session
+
+    cds, published, claim = archive["dir"], archive["published"], archive["claim"]
+    _republish(archive)
+    key = os.path.basename(published).removesuffix(".jsa")
+    half = os.path.getsize(published) // 2
+    # published: cut in place after its promotion
+    os.chmod(published, 0o644)
+    os.truncate(published, half)
+    # pending: a finished recording (its JVM exited) cut short
+    pending = os.path.join(cds, f"{key}.rec-truncated.jsa")
+    shutil.copy(archive["pristine"], pending)
+    os.truncate(pending, half)
+    with open(os.path.join(cds, f"{key}.rec-truncated.json"), "w") as f:
+        json.dump(claim, f)
+    # a JVM that maps it dies instead of falling back
+    crash = subprocess.run([claim["java"], f"-XX:SharedArchiveFile={pending}",
+                            "-XX:-CreateCoredumpOnCrash", "-XX:+SuppressFatalErrorMessage",
+                            "-cp", claim["classpath"], "-version"],
+                           capture_output=True, timeout=120, cwd=tmp_path)
+    assert crash.returncode != 0
+    # another JVM records (this process stands in for it), so the session
+    # neither maps nor records: only the checks run
+    live = os.path.join(cds, f"{key}.rec-live.json")
+    with open(live, "w") as f:
+        json.dump({"pid": os.getpid(), "start": session._started(os.getpid())}, f)
+    try:
+        facts = _run(tmp_path, archive["cache"])
+    finally:
+        os.remove(live)
+    assert facts["count"] == 3 and facts["notes"] == []
+    assert _archive_flags(facts) == []
+    assert facts["conf_dir"] != [f"SPARK_CONF_DIR={cds}/conf"], facts["conf_dir"]
+    assert not any(f.endswith(".jsa") for f in os.listdir(cds)), os.listdir(cds)
+
+
+def test_unmapped_archive_is_reported_and_removed(archive, tmp_path):
+    """A session whose JVM falls back without its archive (here: a
+    classpath the archive was not recorded on) says so on stderr and
+    removes the archive, so that the next session records a new one."""
+    _republish(archive)
+    extra = tmp_path / "extra.jar"
+    with zipfile.ZipFile(extra, "w") as z:
+        z.writestr("META-INF/MANIFEST.MF", "Manifest-Version: 1.0\n")
+    conf = json.dumps({"spark.driver.extraClassPath": str(extra)})
+    facts = _run(tmp_path, archive["cache"], TTS_EXTRA_CONF=conf)
+    assert facts["count"] == 3
+    assert _archive_flags(facts) == [f"-XX:SharedArchiveFile={archive['published']}"]
+    assert archive["published"] not in facts["archives"], facts["archives"]
+    assert len(facts["notes"]) == 1 and "did not map" in facts["notes"][0], facts["notes"]
+    assert not os.path.exists(archive["published"])
+
+
+def test_user_spark_conf_dir_skips_the_archive(archive, tmp_path):
+    """A user's SPARK_CONF_DIR stays the JVM's: its spark-defaults.conf is
+    read, and the session runs without an archive and says so once."""
+    _republish(archive)
+    conf_dir = tmp_path / "conf"
+    conf_dir.mkdir()
+    (conf_dir / "spark-defaults.conf").write_text("spark.tts.marker yes\n")
+    facts = _run(tmp_path, archive["cache"], SPARK_CONF_DIR=str(conf_dir))
+    assert facts["count"] == 3 and facts["marker"] == "yes"
+    assert facts["conf_dir"] == [f"SPARK_CONF_DIR={conf_dir}"]
+    assert _archive_flags(facts) == []
+    assert facts["notes"] == ["tin_terrain_spark: SPARK_CONF_DIR is set; "
+                              "the JVM starts without a class-data archive"]
+
+
 @pytest.mark.skipif(shutil.which("spark-submit") is None, reason="no spark-submit")
-def test_scaling_legs_run_the_same_jvm(tmp_path):
+def test_scaling_legs_run_the_same_jvm(archive, tmp_path, monkeypatch):
     """run_scaling.py's legs: spark-submit launches the JVM, get_spark's
-    builder conf comes too late, `submit` passes the flags itself."""
+    builder conf comes too late, `submit` passes the flags itself, the
+    class-data archive's included: the leg maps the archive that
+    get_spark's sessions recorded."""
+    import tempfile
+
     sys.path.insert(0, os.path.join(ROOT, "scripts"))
     try:
         from run_scaling import build_pyfiles_zip, submit
     finally:
         sys.path.pop(0)
+    _republish(archive)
     zip_path = build_pyfiles_zip(str(tmp_path / "tin_terrain_spark.zip"))
     driver = tmp_path / "driver.py"
     driver.write_text(DRIVER)
+    # submit finds the archive where this process's temp dir is
+    monkeypatch.setattr(tempfile, "tempdir", archive["cache"])
     # 4g: over 3 GB, so the young generation cap must come too
-    _check(_facts(submit(str(driver), zip_path, _env(SPARK_DRIVER_MEM="4g"))), "4g")
+    facts = _facts(submit(str(driver), zip_path, _env(SPARK_DRIVER_MEM="4g")))
+    _check(facts, "4g")
+    assert _archive_flags(facts) == [f"-XX:SharedArchiveFile={archive['published']}"]
+    assert archive["published"] in facts["archives"], facts["archives"]
+    assert facts["notes"] == []

@@ -188,6 +188,14 @@ def test_knn_density_ring_equals_brute(spark, points):
     assert b == sh
 
 
+def _persisted_rdd_ids(spark) -> set[int]:
+    """Ids of the RDDs persisted in the session's context. A no-leak check
+    asserts that a call added none (the ids after ⊆ the ids before): a
+    count can fall in between, as the context cleaner releases earlier
+    tests' checkpoints."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 def _knn_corpus(spark, kind, k, zoom, grid_bits):
     """Points (doc_id, x, y, cell_x, cell_y) and queries (q_id, x, y,
     cell_x, cell_y) for the degenerate corpora _density_ring branches
@@ -237,8 +245,7 @@ def test_knn_degenerate_corpora_equal_brute(spark, corpus, variant):
 
     k, zoom, grid_bits = 5, 2, 5
     pts, queries = _knn_corpus(spark, corpus, k, zoom, grid_bits)
-    jsc = spark.sparkContext._jsc.sc()
-    n_persisted = jsc.getPersistentRDDs().size()
+    persisted = _persisted_rdd_ids(spark)
     if variant == "hex":
         out = knn_hex(pts, queries.select("q_id", "x", "y"),
                       tile_size_meters(zoom + grid_bits), k=k)
@@ -250,7 +257,7 @@ def test_knn_degenerate_corpora_equal_brute(spark, corpus, variant):
         .select("q_id", "rank", "doc_id", "dist2").collect()
     )
     assert len(want) == 6 * k and got == want
-    assert jsc.getPersistentRDDs().size() == n_persisted
+    assert _persisted_rdd_ids(spark) <= persisted
 
 
 def test_with_h3_id_packs_axial(spark, points):
@@ -1199,12 +1206,11 @@ def test_lm_score_properties(spark):
         ["doc_id", "text"],
     )
     cache = spark._jsparkSession.sharedState().cacheManager()
-    jsc = spark.sparkContext._jsc
-    n_cached, n_persisted = cache.numCachedEntries(), jsc.getPersistentRDDs().size()
+    n_cached, persisted = cache.numCachedEntries(), _persisted_rdd_ids(spark)
     out = {r["doc_id"]: r for r in lm_score(docs).collect()}
     # the call leaves no cached relation and no persisted RDD behind
     assert cache.numCachedEntries() == n_cached
-    assert jsc.getPersistentRDDs().size() == n_persisted
+    assert _persisted_rdd_ids(spark) <= persisted
     # corpus: aa x6, bb x2, zz x1, yy x1 -> total 10
     assert out[0]["n_tokens"] == 4
     assert out[0]["bits_per_token"] == round(math.log2(10) - math.log2(6), 6)

@@ -31,8 +31,8 @@ FRAME_SCHEMA = "doc_id BIGINT, frame_idx INT, frame_feature ARRAY<FLOAT>"
 FRAME_EVERY = 10  # sample_frames keeps frames 0, 10, 20, ...
 FRAME_DIM = 8  # sample_frames' vector length
 # the media oracles in queries_ext.py (SQL_MEDIA_FEATURES,
-# SQL_MEDIA_DECODE_REAL, SQL_FRAME_SAMPLE, SQL_VIDEO_DECODE_REAL) write
-# the same three numbers
+# SQL_MEDIA_DECODE_REAL, SQL_FRAME_SAMPLE, SQL_VIDEO_DECODE_REAL) are
+# built from these three numbers
 
 
 def synth_media(docs: DataFrame) -> DataFrame:

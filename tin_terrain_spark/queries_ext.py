@@ -14,6 +14,7 @@ from .operators import similarity as S
 from .operators import textops as T
 from .operators import urlops as U
 from .operators.geocode import geocode_points
+from .operators.multimodal import FEATURE_DIM, FRAME_DIM, FRAME_EVERY
 from .queries import GRID_BITS, ZOOM, _docs, _points_sql
 
 
@@ -617,7 +618,7 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 # synth_media metadata recomputed in SQL (multimodal.synth_media mirrors):
 # seed = first 14 hex chars of sha256(text); px(r,c) derived by exact
 # integer arithmetic; feature[j] = sum over rows of column j.
-SQL_MEDIA_FEATURES = """
+SQL_MEDIA_FEATURES = f"""
   WITH m AS (
     SELECT doc_id,
            ['image','audio','video'][CAST(doc_id % 3 AS INT) + 1] AS media_type,
@@ -628,7 +629,7 @@ SQL_MEDIA_FEATURES = """
   SELECT doc_id, media_type, CAST(j AS INT) AS dim,
          sum(CAST((seed + (r + 1) * 1315423911 + (j + 1) * 2654435761) % 65521 AS DOUBLE) / 65536) AS fval
   FROM m,
-  LATERAL (SELECT unnest(range(0, 16)) AS j) dj,
+  LATERAL (SELECT unnest(range(0, {FEATURE_DIM})) AS j) dj,
   LATERAL (SELECT unnest(range(0, least(height, 32))) AS r) dr
   GROUP BY doc_id, media_type, j
 """
@@ -678,7 +679,7 @@ def q_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-SQL_FRAME_SAMPLE = """
+SQL_FRAME_SAMPLE = f"""
   WITH m AS (
     SELECT doc_id,
            (doc_id * 53) % 512 + 16 AS height,
@@ -689,8 +690,8 @@ SQL_FRAME_SAMPLE = """
   SELECT doc_id, CAST(f AS INT) AS frame_idx, CAST(j AS INT) AS dim,
          sum(CAST((seed + f * 2246822519 + (r + 1) * 1315423911 + (j + 1) * 2654435761) % 65521 AS DOUBLE) / 65536) AS fval
   FROM m,
-  LATERAL (SELECT unnest(range(0, n_frames, 10)) AS f) df,
-  LATERAL (SELECT unnest(range(0, 8)) AS j) dj,
+  LATERAL (SELECT unnest(range(0, n_frames, {FRAME_EVERY})) AS f) df,
+  LATERAL (SELECT unnest(range(0, {FRAME_DIM})) AS j) dj,
   LATERAL (SELECT unnest(range(0, least(height, 32))) AS r) dr
   GROUP BY doc_id, f, j
 """
@@ -1162,8 +1163,8 @@ def q_media_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 # gray value per pixel: ((seed + r*A + c*B) % 65521) % 256, seen by the
 # decoder as v/256 (PGM/PNG directly; BMP/GIF via the exact (v,v,v)
 # luma identity (v*299+v*587+v*114)//1000 == v). feature[j] = column
-# sum over rows for j < width, zero-padded to 16 dims.
-SQL_MEDIA_DECODE_REAL = """
+# sum over rows for j < width, zero-padded to FEATURE_DIM dims.
+SQL_MEDIA_DECODE_REAL = f"""
   WITH m AS (
     SELECT doc_id,
            ['pgm','pnm','bmp','png','gif'][CAST(doc_id % 5 AS INT) + 1]
@@ -1178,14 +1179,14 @@ SQL_MEDIA_DECODE_REAL = """
            sum(CAST((seed + (r + 1) * 1315423911 + (j + 1) * 2654435761)
                     % 65521 % 256 AS DOUBLE) / 256) AS s
     FROM m,
-    LATERAL (SELECT unnest(range(0, 16)) AS j) dj,
+    LATERAL (SELECT unnest(range(0, {FEATURE_DIM})) AS j) dj,
     LATERAL (SELECT unnest(range(0, h)) AS r) dr
     WHERE j < w
     GROUP BY doc_id, j
   ),
   grid AS (
     SELECT m.doc_id, m.format, dj.j
-    FROM m, LATERAL (SELECT unnest(range(0, 16)) AS j) dj
+    FROM m, LATERAL (SELECT unnest(range(0, {FEATURE_DIM})) AS j) dj
   )
   SELECT g.doc_id, g.format, CAST(g.j AS INT) AS dim,
          COALESCE(v.s, 0e0) + 0e0 AS fval
@@ -1289,7 +1290,7 @@ def q_video_decode_real(spark: SparkSession, sf_dir: str) -> DataFrame:
 # frame f is uniform gray v = ((seed + (f+1)*C) % 65521) % 256; the
 # pooled feature is 16 rows of v/256 -> v/16 in every dim (exact in
 # float32: v <= 255 -> 8 mantissa bits over a power-of-two scale).
-SQL_VIDEO_DECODE_REAL = """
+SQL_VIDEO_DECODE_REAL = f"""
   WITH m AS (
     SELECT doc_id,
            doc_id * 7 % 48 + 1 AS n_frames,
@@ -1300,8 +1301,8 @@ SQL_VIDEO_DECODE_REAL = """
          CAST((seed + (f + 1) * 2246822519) % 65521 % 256 AS DOUBLE)
            / 16e0 AS fval
   FROM m,
-  LATERAL (SELECT unnest(range(0, n_frames, 10)) AS f) df,
-  LATERAL (SELECT unnest(range(0, 8)) AS j) dj
+  LATERAL (SELECT unnest(range(0, n_frames, {FRAME_EVERY})) AS f) df,
+  LATERAL (SELECT unnest(range(0, {FRAME_DIM})) AS j) dj
 """
 
 QUERIES_EXT["video_decode_real"] = q_video_decode_real

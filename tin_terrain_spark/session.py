@@ -62,12 +62,58 @@ fewer methods reach C2, and the tasks run somewhat colder code.
 Alternating benchmark pairs put ``op_cpu_s`` 14 % lower on catalog
 (10/10 pairs) and 17 % on pyramid (6/6); the ``JVM_OPTIONS`` comment
 holds the numbers.
+
+A new driver JVM starts from a class-data-sharing archive (AppCDS,
+``cds_java_options``). Every start loaded and verified the same ~20k
+Spark classes; JDK 17 can write the loaded classes to a dynamic
+archive at exit (``-XX:ArchiveClassesAtExit``) and map it in a later
+JVM (``-XX:SharedArchiveFile``). The session keeps one archive per JDK
+build and classpath in ``<tempdir>/tts_cds_<uid>/``, as the native
+kernel keeps its ``.so``; for perfbench that is ``.perfbench_work/tmp``,
+so the first run of a checkout records it and later runs map it. Spark
+puts its conf dir on the JVM's classpath and JDK 17 dumps no archive
+when a classpath entry is a non-empty directory (``/opt/spark/conf``
+holds templates), so the session points ``SPARK_CONF_DIR`` at an empty
+dir in the cache; with a user's ``SPARK_CONF_DIR`` (or Hadoop/YARN conf
+dir, or a configuration in Spark's own conf dir) it runs without an
+archive and says so on stderr. Measured on a 4-core host, 10 alternating
+perfbench pairs a workload (every run correct, 0 failed ops), the
+archive recorded by one earlier pyramid run, medians parent -> archive:
+``setup_s`` 23.1 -> 17.7 s on pyramid (9/10 pairs lower) and 27.1 ->
+22.3 s on catalog (10/10), the session phase ~6.2 -> 3.5 s and the
+input phase ~5.7 -> 3.5 s (pyramid; catalog 4.7 -> 3.0); ``op_cpu_s``
++3 % and +1 %, ``peak_rss_mb`` 0 % and +2 %, within the run-to-run
+spread. Recording costs once: the recording run set up 3.2 s
+slower (28.0 against 24.8 s), and its JVM wrote 177 MB at exit, 11.7 s
+more teardown. A truncated archive is no safe fallback: a file cut to
+half made every JVM that mapped it die of SIGBUS instead of falling
+back, and a flipped byte inside a region shows only under
+``-XX:+VerifySharedSpaces``. So no JVM dumps to the published name:
+each recording gets a name of its own and a claim file, and a later
+session promotes a finished recording with ``os.replace`` only after
+one short ``-Xshare:on -XX:+VerifySharedSpaces`` start of the recording
+JVM's java on its classpath passed (~0.3 s). A session's own JVM does
+not verify, as that reads all 177 MB into its RSS. A published archive
+is mapped only while its inode, size and mtime match the promotion's
+stamp, and after start the session looks for it in
+``/proc/<jvm>/maps``: a JVM that fell back without it (a classpath it
+was not recorded on) gets a stderr line and the archive is removed, so
+the next session records a new one.
 """
 
 from __future__ import annotations
 
+import glob
+import hashlib
+import json
 import os
+import secrets
+import shutil
+import subprocess
+import sys
+import tempfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Entries in Spark's generated-code cache (Spark's default is 100).
@@ -185,6 +231,211 @@ def jvm_options(driver_memory: str) -> str:
     return f"{JVM_OPTIONS} -XX:MaxNewSize={MAX_NEW_SIZE_MB}m"
 
 
+# Off for the archive's log tags: a recording JVM logs ~1,100 "[warning][cds]
+# Skipping ..." lines (classes an archive cannot hold) and a JVM that
+# cannot use its archive one more, all on stdout, where bench.py and
+# perfbench print their result. _cds_after_start reports a fallback.
+CDS_LOG = "-Xlog:cds*=off"
+
+
+def _spark_home() -> str:
+    from pyspark.find_spark_home import _find_spark_home
+
+    return _find_spark_home()
+
+
+def _cds_dir() -> str:
+    """The archive cache, one per temp dir and user, like the native
+    kernel's build cache (kernels/native.py)."""
+    return os.path.join(tempfile.gettempdir(), f"tts_cds_{os.getuid()}")
+
+
+def _cds_blocker() -> str | None:
+    """Why the driver JVM cannot use an archive here, or None. Spark puts
+    its conf dir on the JVM's classpath, and JDK 17 dumps no archive
+    over a classpath that holds a non-empty directory, so the session
+    points SPARK_CONF_DIR at an empty dir; it does not where that would
+    hide a configuration."""
+    for var in ("SPARK_CONF_DIR", "HADOOP_CONF_DIR", "YARN_CONF_DIR"):
+        if os.environ.get(var):
+            return f"{var} is set"
+    conf = os.path.join(_spark_home(), "conf")
+    if os.path.isdir(conf) and any(not f.endswith(".template") for f in os.listdir(conf)):
+        return f"{conf} holds a configuration"
+    return None
+
+
+def _cds_key() -> str | None:
+    """One archive per JDK build and classpath: a hash over the java binary
+    that spark-class runs, its libjvm.so and Spark's jars (path, size,
+    mtime). None without a java binary."""
+    home = os.environ.get("JAVA_HOME")
+    java = os.path.join(home, "bin", "java") if home else shutil.which("java")
+    if not java or not os.path.exists(java):
+        return None
+    java = os.path.realpath(java)
+    libjvm = os.path.join(os.path.dirname(os.path.dirname(java)), "lib", "server", "libjvm.so")
+    jars = sorted(glob.glob(os.path.join(_spark_home(), "jars", "*")))
+    h = hashlib.sha256(os.environ.get("SPARK_DIST_CLASSPATH", "").encode())
+    for path in [java, libjvm, *jars]:
+        if os.path.exists(path):
+            st = os.stat(path)
+            h.update(f"{path} {st.st_size} {st.st_mtime_ns}\n".encode())
+    return h.hexdigest()[:16]
+
+
+def _started(pid: int) -> int | None:
+    """Start time of process ``pid`` in clock ticks after boot, or None when
+    it does not run (a zombie has exited). A pid and its start time name
+    one process, also after the pid is reused."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            fields = f.read().rsplit(")", 1)[1].split()
+        return None if fields[0] in "ZX" else int(fields[19])
+    except (OSError, IndexError, ValueError):
+        return None
+
+
+def _remove(*paths: str) -> None:
+    for p in paths:
+        try:
+            os.remove(p)
+        except FileNotFoundError:
+            pass
+
+
+def _write_json(path: str, value) -> None:
+    tmp = f"{path}.{os.getpid()}.tmp"
+    with open(tmp, "w") as f:
+        json.dump(value, f)
+    os.replace(tmp, path)
+
+
+def _read_json(path: str):
+    try:
+        with open(path) as f:
+            return json.load(f)
+    except (OSError, ValueError):
+        return None
+
+
+def _stamp(path: str) -> list[int]:
+    st = os.stat(path)
+    return [st.st_ino, st.st_size, st.st_mtime_ns]
+
+
+def _cds_published(published: str) -> bool:
+    """Whether ``published`` is the file that passed verification: its
+    inode, size and mtime equal the stamp written when it was promoted.
+    A published file that does not match (truncated, rewritten or
+    planted) is removed and never reaches a JVM."""
+    if not os.path.exists(published):
+        return False
+    if _read_json(f"{published}.ok") == _stamp(published):
+        return True
+    _remove(published, f"{published}.ok")
+    return False
+
+
+def _cds_verified(rec: str, claim: dict) -> bool:
+    """One short start of the recording JVM's java binary on its classpath
+    that must map ``rec`` (-Xshare:on) and pass the archive's CRC check
+    (-XX:+VerifySharedSpaces, which reads every region once). A truncated
+    archive crashes this JVM, not the session's."""
+    java, classpath = claim.get("java"), claim.get("classpath")
+    if not (java and classpath and os.path.exists(rec)):
+        return False
+    cmd = [java, "-Xshare:on", f"-XX:SharedArchiveFile={rec}", "-XX:+VerifySharedSpaces",
+           "-XX:-CreateCoredumpOnCrash", "-XX:+SuppressFatalErrorMessage",
+           "-cp", classpath, "-version"]
+    try:
+        out = subprocess.run(cmd, stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL,
+                             cwd=os.path.dirname(rec), timeout=120)
+    except (OSError, subprocess.TimeoutExpired):
+        return False
+    return out.returncode == 0
+
+
+def cds_java_options() -> tuple[str, dict[str, str]]:
+    """The class-data archive's flags for a driver JVM about to start, and
+    the environment the JVM needs for them (see the module docstring).
+
+    With a published archive whose stamp matches, the JVM maps it. Else
+    each finished recording (its JVM exited) is verified once, the first
+    that passes is promoted to the published name with ``os.replace``,
+    and the rest are removed. With none, and no recording JVM alive, this
+    JVM records its own archive at exit under a name of its own. Flags
+    and environment are empty where ``_cds_blocker`` says no, or while
+    another JVM records."""
+    why = _cds_blocker()
+    if why:
+        print(f"tin_terrain_spark: {why}; the JVM starts without a class-data archive",
+              file=sys.stderr)
+        return "", {}
+    key = _cds_key()
+    if key is None:
+        return "", {}
+    cache = _cds_dir()
+    env = {"SPARK_CONF_DIR": os.path.join(cache, "conf")}
+    os.makedirs(env["SPARK_CONF_DIR"], exist_ok=True)
+    published = os.path.join(cache, f"{key}.jsa")
+    recording = False
+    if not _cds_published(published):
+        for claim_path in sorted(glob.glob(os.path.join(cache, f"{key}.rec-*.json"))):
+            claim = _read_json(claim_path) or {}
+            if claim.get("pid") and _started(claim["pid"]) == claim.get("start"):
+                recording = True
+                continue
+            rec = claim_path.removesuffix(".json") + ".jsa"
+            if not os.path.exists(published) and _cds_verified(rec, claim):
+                _write_json(f"{published}.ok", _stamp(rec))
+                try:
+                    os.replace(rec, published)
+                except FileNotFoundError:
+                    pass  # another session promoted it first
+            _remove(rec, claim_path)
+    if _cds_published(published):
+        return f"-XX:SharedArchiveFile={published} {CDS_LOG}", env
+    if recording:
+        return "", {}
+    rec = os.path.join(cache, f"{key}.rec-{secrets.token_hex(6)}.jsa")
+    # the recording JVM rewrites the claim with its own pid (_cds_after_start)
+    _write_json(rec.removesuffix(".jsa") + ".json",
+                {"pid": os.getpid(), "start": _started(os.getpid())})
+    return f"-XX:ArchiveClassesAtExit={rec} {CDS_LOG}", env
+
+
+def _cds_after_start(spark: SparkSession) -> None:
+    """Check the archive flag of a driver JVM that just started, read back
+    from its command line. A JVM given an archive must map it
+    (``/proc/<jvm>/maps``); one that did not fell back without it, so
+    the archive is removed and the fallback reported on stderr. A
+    recording JVM's claim gets its pid, java binary and classpath, which
+    the later verification needs."""
+    jvm = spark._jvm
+    pid = jvm.java.lang.management.ManagementFactory.getRuntimeMXBean().getPid()
+    try:
+        with open(f"/proc/{pid}/cmdline", "rb") as f:
+            args = f.read().decode(errors="replace").split("\0")
+    except OSError:
+        return
+    for arg in args:
+        flag, _, path = arg.partition("=")
+        if flag == "-XX:SharedArchiveFile":
+            with open(f"/proc/{pid}/maps") as f:
+                mapped = any(path in line for line in f)
+            if not mapped:
+                print(f"tin_terrain_spark: the JVM did not map the class-data archive "
+                      f"{path}; it is removed and the next session records a new one",
+                      file=sys.stderr)
+                _remove(path, f"{path}.ok")
+        elif flag == "-XX:ArchiveClassesAtExit":
+            _write_json(path.removesuffix(".jsa") + ".json", {
+                "pid": pid, "start": _started(pid), "java": os.readlink(f"/proc/{pid}/exe"),
+                "classpath": jvm.java.lang.System.getProperty("java.class.path"),
+            })
+
+
 def get_spark(
     app_name: str = "tin_terrain_spark",
     cores: int | None = None,
@@ -203,8 +454,9 @@ def get_spark(
     with ``jvm_options(<driver memory>)`` and its exchange and
     result-query-stage thread pools capped at ``EXCHANGE_THREADS``, and
     it and its Python workers with at most ``MALLOC_ARENA_MAX`` malloc
-    arenas (a value already in the environment wins); see the module
-    docstring."""
+    arenas (a value already in the environment wins). A JVM that this
+    call starts maps the class-data archive or records one
+    (``cds_java_options``); see the module docstring."""
     # make the package importable in the processes this driver starts
     # (a local JVM and its Python workers inherit the environment)
     repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -250,10 +502,25 @@ def get_spark(
         # reach sys.path; a JVM started by spark-submit does not inherit
         # the os.environ set above
         .config("spark.executorEnv.PYTHONPATH", repo_root)
-        .config("spark.driver.defaultJavaOptions", jvm_options(driver_memory))
     )
+    # a JVM starts here unless this process has one already; one that
+    # spark-submit started (PYSPARK_GATEWAY_PORT) got its flags there
+    new_jvm = SparkContext._gateway is None
+    cds_flags, cds_env = (cds_java_options() if new_jvm and "PYSPARK_GATEWAY_PORT"
+                          not in os.environ else ("", {}))
+    b = b.config("spark.driver.defaultJavaOptions",
+                 f"{jvm_options(driver_memory)} {cds_flags}".strip())
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
-    spark = b.getOrCreate()
+    # the launched JVM inherits os.environ; this process's later children
+    # must not (their SPARK_CONF_DIR would read as the user's)
+    os.environ.update(cds_env)
+    try:
+        spark = b.getOrCreate()
+    finally:
+        for k in cds_env:
+            del os.environ[k]
+    if new_jvm:
+        _cds_after_start(spark)
     spark.sparkContext.setLogLevel("WARN")
     return spark
