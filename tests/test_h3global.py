@@ -86,6 +86,15 @@ def test_derivation_deterministic(tables):
     np.testing.assert_array_equal(tables.bc_center, t2.bc_center)
 
 
+def test_missing_artifact_raises(monkeypatch):
+    """Without the frozen artifact the tables are not derived
+    numerically in its place: that derivation can flip lookup_rot
+    entries across hosts, so ids would change without notice."""
+    monkeypatch.setattr(h3base, "_TABLES_ARTIFACT", "no_such_tables.json")
+    with pytest.raises(FileNotFoundError):
+        h3base.derive_base_cells.__wrapped__()
+
+
 @pytest.mark.parametrize("res", [0, 1, 2, 3])
 def test_exhaustive_center_roundtrip_and_census(tables, res):
     """THE invariant: every valid cell's decoded center re-encodes to

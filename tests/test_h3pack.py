@@ -99,19 +99,19 @@ def test_sql_walk_equals_numpy():
     import duckdb
 
     rng = np.random.RandomState(9)
-    q = np.concatenate([rng.randint(-2000, 2000, 300), [0, 1, -1, 4000]])
-    r = np.concatenate([rng.randint(-2000, 2000, 300), [0, -1, 1, -4000]])
+    q = np.concatenate([rng.randint(-500, 500, 300), [0, 1, -1, 4000]])
+    r = np.concatenate([rng.randint(-500, 500, 300), [0, -1, 1, -4000]])
     con = duckdb.connect()
     con.execute("CREATE TABLE cells (hex_q BIGINT, hex_r BIGINT)")
     con.executemany(
         "INSERT INTO cells VALUES (?, ?)", [(int(a), int(b)) for a, b in zip(q, r)]
     )
-    sql = H.h3_id_subquery_sql("SELECT * FROM cells", res=10)
+    sql = H.h3_id_subquery_sql("SELECT * FROM cells")
     got = con.execute(f"SELECT hex_q, hex_r, h3_id FROM ({sql})").fetchall()
     assert len(got) == len(q)
     for hq, hr, hid in got:
         try:
-            expect = H.h3_from_axial(hq, hr, res=10)
+            expect = H.h3_from_axial(hq, hr, res=H.H3_RES)
         except ValueError:
             expect = None
         assert hid == expect, (hq, hr, hid, expect)
@@ -125,17 +125,17 @@ def test_parent_expr_equals_python():
     h3_to_parent for ids across resolutions — checked in DuckDB."""
     import duckdb
 
-    ids = [H.h3_from_axial(q, r, res=7) for q, r in
+    ids = [H.h3_from_axial(q, r, res=H.H3_RES) for q, r in
            [(0, 0), (5, -3), (-40, 17), (123, -85), (1, 1)]]
     con = duckdb.connect()
     con.execute("CREATE TABLE t (h3_id BIGINT)")
     con.executemany("INSERT INTO t VALUES (?)", [(i,) for i in ids])
-    expr = H.h3_parent_expr(7, 4, "h3_id", dialect="duckdb")
+    expr = H.h3_parent_expr(dialect="duckdb")
     got = [r[0] for r in con.execute(f"SELECT {expr} FROM t").fetchall()]
-    expect = [H.h3_to_parent(i, 4) for i in ids]
+    expect = [H.h3_to_parent(i, H.H3_PARENT_RES) for i in ids]
     assert got == expect
     for p in expect:
-        assert H.h3_is_valid(p) and H.unpack_h3(p)["res"] == 4
+        assert H.h3_is_valid(p) and H.unpack_h3(p)["res"] == H.H3_PARENT_RES
 
 
 def test_parent_equals_coarse_walk():

@@ -267,20 +267,19 @@ def test_snapshot_delta_classification(spark):  # noqa: F811
 
 
 def test_host_quota_caps_and_is_deterministic(spark):  # noqa: F811
-    from tin_terrain_spark.operators.sampling import host_quota
+    from tin_terrain_spark.operators.sampling import PER_HOST, host_quota
 
     rows = [(i, f"h{i % 3}") for i in range(20)]
     pages = spark.createDataFrame(rows, "doc_id LONG, host STRING")
-    kept = host_quota(pages, per_host=4).collect()
+    kept = host_quota(pages).collect()
     by_host = {}
     for r in kept:
         by_host.setdefault(r["host"], []).append(r["doc_id"])
-    # exactly the 4 lowest doc_ids per host survive
-    assert sorted(by_host["h0"]) == [0, 3, 6, 9]
-    assert sorted(by_host["h1"]) == [1, 4, 7, 10]
-    assert sorted(by_host["h2"]) == [2, 5, 8, 11]
+    # exactly the PER_HOST lowest doc_ids per host survive
+    for h in range(3):
+        assert sorted(by_host[f"h{h}"]) == list(range(h, 3 * PER_HOST, 3))
     # plan audit: the window must compile to WindowGroupLimit
-    plan = host_quota(pages, per_host=4)._jdf.queryExecution().executedPlan().toString()
+    plan = host_quota(pages)._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan
 
 
@@ -361,3 +360,21 @@ def test_main_text_threshold_boundary():
     # density exactly 0.5 is KEPT (rule is strict-greater)
     assert html_main_text('<p><a href="/">abcde</a>fghij</p>') == ("abcdefghij", 0)
     assert html_main_text('<p><a href="/">abcdef</a>ghij</p>') == ("", 1)
+
+
+# ---------------------------------------------------------------------------
+# Fetch through the CDX index (queries_ext.q_cdx_fetch)
+# ---------------------------------------------------------------------------
+
+
+def test_cdx_fetch_query_leaves_no_cache(spark):  # noqa: F811
+    """The cdx_fetch query returns a plan: after its collect the
+    session's cache manager holds nothing, so a long-lived session
+    keeps no archive persisted."""
+    from tin_terrain_spark.queries_ext import QUERIES_EXT
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    rows = QUERIES_EXT["cdx_fetch"](spark, SF_DIR).collect()
+    assert rows and all(r["text_ok"] for r in rows)
+    assert cache.isEmpty()

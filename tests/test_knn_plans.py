@@ -132,7 +132,7 @@ def test_knn_operators_are_plans(spark):
         ops[f"ring@{ring}"] = (q, lambda q=q, ring=ring: J.knn_ring(
             pts, q, ZOOM, GRID_BITS, k=K, initial_ring=ring))
         ops[f"hex@{ring}"] = (q, lambda q=q, ring=ring: J.knn_hex(
-            pts, q.select("q_id", "x", "y"), hex_size, k=K, initial_ring=ring))
+            pts, q.select("q_id", "x", "y"), hex_size, initial_ring=ring))
     cols = ("q_id", "rank", "doc_id", "dist2")
     brute = {
         name: sorted(map(tuple, J.knn_brute(pts, q.select("q_id", "x", "y"), K)

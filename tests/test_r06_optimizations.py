@@ -309,7 +309,7 @@ def test_knn_ring_prune_multi_round_equals_brute(spark):
         assert len(brute) == k * n_q
         for out in (
             knn_ring(pts, queries, zoom, grid_bits, k=k, initial_ring=1),
-            knn_hex(pts, queries.select("q_id", "x", "y"), cell_m, k=k, initial_ring=1),
+            knn_hex(pts, queries.select("q_id", "x", "y"), cell_m, initial_ring=1),
         ):
             mark = max(e.executionId() for e in _executions(spark))
             got = {(r.q_id, r.rank): (r.doc_id, r.dist2) for r in out.collect()}

@@ -5,6 +5,7 @@ driver-gated (robots_filter query)."""
 import pytest
 
 from tin_terrain_spark.operators.robots import (
+    AGENT,
     crawl_allowed,
     parse_robots,
     pattern_regex,
@@ -77,13 +78,13 @@ def test_distributed_filter_matches_kernel(spark):
     rules = robots_rules(robots)
     got = {
         r["doc_id"]: r["allowed"]
-        for r in robots_filter(pages, rules, path_col="path").collect()
+        for r in robots_filter(pages, rules).collect()
     }
     assert len(got) == 40
     for i in range(40):
         host = f"h{i % 4}"
         if host in policies:
-            want = crawl_allowed(parse_robots(policies[host]), f"/doc/{i}")
+            want = crawl_allowed(parse_robots(policies[host], AGENT), f"/doc/{i}")
         else:
             want = True  # h3: no robots.txt
         assert got[i] == want, f"doc {i} host {host}"
@@ -118,7 +119,7 @@ def test_parse_sitemap_kernel():
 
 
 def test_frontier_schedule(spark):
-    from tin_terrain_spark.operators.robots import frontier_schedule
+    from tin_terrain_spark.operators.robots import BASE_EPOCH, N_FETCHERS, frontier_schedule
 
     fr = spark.createDataFrame(
         [
@@ -131,19 +132,19 @@ def test_frontier_schedule(spark):
     )
     got = {
         r["url"]: r
-        for r in frontier_schedule(fr, n_fetchers=4, base_epoch=100).collect()
+        for r in frontier_schedule(fr).collect()
     }
     # priority desc, then url asc within host; spacing = crawl_delay
     assert got["https://a.org/2"]["host_seq"] == 1
     assert got["https://a.org/3"]["host_seq"] == 2
     assert got["https://a.org/1"]["host_seq"] == 3
     assert [got[f"https://a.org/{i}"]["fetch_epoch"] for i in (2, 3, 1)] == [
-        100, 103, 106,
+        BASE_EPOCH, BASE_EPOCH + 3, BASE_EPOCH + 6,
     ]
-    assert got["https://b.org/1"]["fetch_epoch"] == 100
+    assert got["https://b.org/1"]["fetch_epoch"] == BASE_EPOCH
     # one fetcher per host, stable across rows
     a_f = {got[u]["fetcher"] for u in got if u.startswith("https://a")}
-    assert len(a_f) == 1 and all(0 <= f < 4 for f in a_f)
+    assert len(a_f) == 1 and all(0 <= f < N_FETCHERS for f in a_f)
 
 
 def test_expand_sitemap_tree(spark):

@@ -119,6 +119,8 @@ DRIVER = textwrap.dedent("""
     facts = _jvm_facts(spark)
     facts["count"] = spark.range(3).count()
     facts["marker"] = spark.sparkContext.getConf().get("spark.tts.marker", "")
+    facts["java_options"] = spark.sparkContext.getConf().get(
+        "spark.driver.defaultJavaOptions")
     print("FACTS", json.dumps(facts))
     spark.stop()
 """)
@@ -142,15 +144,39 @@ def _env(**extra: str) -> dict:
 
 
 def test_caller_java_options_add_to_the_defaults(tmp_path):
-    """perfbench's shape: a caller's `extraJavaOptions` keep the defaults."""
+    """perfbench's shape: a caller's `extraJavaOptions` keep the defaults,
+    and its heap, SPARK_DRIVER_MEM=3072m with no `spark.driver.memory` in
+    the caller's conf, gets `JVM_OPTIONS` as they are."""
+    from tin_terrain_spark.session import JVM_OPTIONS
+
     driver = tmp_path / "driver.py"
     driver.write_text(DRIVER)
     conf = json.dumps({"spark.driver.extraJavaOptions": "-XX:-UsePerfData"})
-    out = subprocess.run([sys.executable, str(driver)], env=_env(TTS_EXTRA_CONF=conf),
+    out = subprocess.run([sys.executable, str(driver)],
+                         env=_env(TTS_EXTRA_CONF=conf, SPARK_DRIVER_MEM="3072m"),
+                         capture_output=True, text=True, timeout=600, cwd=tmp_path)
+    facts = _facts(out)
+    _check(facts, "3072m")
+    assert "-XX:-UsePerfData" in facts["args"], facts["args"]
+    archive = " ".join(a for a in facts["java_options"].split()
+                       if a.startswith(("-XX:SharedArchiveFile=", "-XX:ArchiveClassesAtExit=",
+                                        "-Xlog:cds")))
+    assert facts["java_options"] == f"{JVM_OPTIONS} {archive}".strip(), facts["java_options"]
+
+
+def test_caller_driver_memory_sizes_the_flags(tmp_path):
+    """A caller's `spark.driver.memory` sizes the flags, not SPARK_DRIVER_MEM:
+    a 1g heap gets no young-generation cap, though the environment says 12g."""
+    driver = tmp_path / "driver.py"
+    driver.write_text(DRIVER)
+    conf = json.dumps({"spark.driver.memory": "1g"})
+    out = subprocess.run([sys.executable, str(driver)],
+                         env=_env(TTS_EXTRA_CONF=conf, SPARK_DRIVER_MEM="12g"),
                          capture_output=True, text=True, timeout=600, cwd=tmp_path)
     facts = _facts(out)
     _check(facts, "1g")
-    assert "-XX:-UsePerfData" in facts["args"], facts["args"]
+    assert "MaxNewSize" not in facts["java_options"], facts["java_options"]
+    assert "gc,ergo" not in out.stdout, out.stdout
 
 
 def _run(tmp_path, cache: str, **extra: str) -> dict:

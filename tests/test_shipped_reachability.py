@@ -15,24 +15,33 @@ caller: <reason>` in its docstring, the reason naming the test that
 compares against it. Such a def is a root too, so the helpers it calls
 are reached. A class counts as one def with all its methods.
 
-Every defaulted parameter in the package has a shipped caller. Each
-top-level def and method of every package module is checked. A
-defaulted parameter counts as passed when some call site in the
-package or a shipped root passes it by keyword, positionally at or
-past its index, or through `*args` or `**kwargs`. `ClassName(...)`
-counts as a call of `__init__`. Calls are matched by the called name,
-without resolving modules, as in the reachability walk. A parameter
-that nothing passes is a constant: write the value where it is used,
-or as a module constant when an operator and its DuckDB twin (`sql_*`)
-share it.
+Every parameter in the package takes two values in shipped calls.
+Each parameter of every top-level def and method of every package
+module is checked, required or defaulted. A call site in the package or
+a shipped root gives a parameter a value: the argument it passes by
+keyword or by position, or the default when it leaves the parameter
+out. `ClassName(...)` counts as a call of `__init__`. Calls are matched
+by the called name, without resolving modules, as in the reachability
+walk. A parameter fails when every shipped call gives it one and the
+same literal: passing a parameter its default literal is leaving it
+out, and a defaulted parameter that no shipped call reaches has its
+default as its one value. A non-literal argument, `*args` or `**kwargs`
+counts as a second value. A one-value parameter is a constant: write
+the value where it is used, or as a module constant when an operator
+and its DuckDB twin (`sql_*`) share it.
 
-A call in tests/ is not a shipped caller. A parameter that only tests
-pass stays only when a test needs it to reach an edge path, or to
-build fixtures for a decoder of outside input, and its def's docstring
-says so on a line `Test-only parameters: <name>, <name> — <reason>`,
-the reason naming the tests/test_*.py file that passes it. Such a line
-goes stale, and fails, when a shipped call starts passing the
-parameter, when no test passes it, or when the def loses it.
+A call in tests/ is not a shipped caller. A one-value parameter whose
+other values only tests pass stays only when a test needs them to
+reach an edge path, or to build fixtures for a decoder of outside
+input, and its def's docstring says so on a line `Test-only
+parameters: <name>, <name> — <reason>`, the reason naming the
+tests/test_*.py file that passes them. A one-value parameter that
+files outside the package pass, files that change only with the
+benchmark (bench.py, perfbench/), stays with a line `Frozen-caller
+parameters: <name> — <files>`. Either line goes stale, and fails, when
+shipped calls give the parameter a second value, when the def loses
+it, when no test passes it another value (Test-only), or when a named
+file is gone or no longer passes it (Frozen-caller).
 
 Pure `ast`, no Spark: about a second, most of it parsing.
 """
@@ -47,10 +56,12 @@ ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "tin_terrain_spark"
 SHIPPED = ("bench.py", "__spark_entry__.py", "scripts", "perfbench")
 MARKER = re.compile(r"Kept without a shipped caller:\s*\S")
-TEST_ONLY = re.compile(
-    r"^Test-only parameters?: (\w+(?:, \w+)*)\s+—\s+(.*?)(?:\n\s*\n|\Z)", re.M | re.S
+MARK = re.compile(
+    r"^(Test-only|Frozen-caller) parameters?: (\w+(?:, \w+)*)\s+—\s+(.*?)(?:\n\s*\n|\Z)",
+    re.M | re.S,
 )
 TEST_FILE = re.compile(r"\btests/test_\w+\.py\b")
+FROZEN_FILE = re.compile(r"[\w./]+\.py\b")
 DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
@@ -124,10 +135,10 @@ def test_every_package_def_is_reached_or_marked():
     )
 
 
-def _call_sites(paths) -> dict[str, list[tuple[int, bool, set[str]]]]:
-    """Per called name, each call's (positional arg count, whether it
-    passes *args or **kwargs, keyword names)."""
-    sites: dict[str, list[tuple[int, bool, set[str]]]] = {}
+def _call_sites(paths) -> dict[str, list[tuple[list, dict, bool]]]:
+    """Per called name, each call's (positional args, keyword args by
+    name, whether it passes *args or **kwargs)."""
+    sites: dict[str, list[tuple[list, dict, bool]]] = {}
     for path in paths:
         for n in ast.walk(ast.parse(path.read_text())):
             if not isinstance(n, ast.Call):
@@ -139,7 +150,7 @@ def _call_sites(paths) -> dict[str, list[tuple[int, bool, set[str]]]]:
                 k.arg is None for k in n.keywords
             )
             sites.setdefault(name, []).append(
-                (len(n.args), star, {k.arg for k in n.keywords})
+                (n.args, {k.arg: k.value for k in n.keywords if k.arg}, star)
             )
     return sites
 
@@ -163,65 +174,133 @@ def _package_defs():
                     yield path, m, f"{node.name}.{m.name}", called, 0 if static else 1
 
 
-def _defaulted(fn) -> dict[str, int | None]:
-    """Each defaulted parameter's name -> its positional index (None
-    for keyword-only)."""
+def _params(fn, implicit: int) -> dict[str, tuple[int | None, ast.expr | None]]:
+    """Each parameter past the implicit self or cls -> (its positional
+    index, None for keyword-only; its default, None when required)."""
     a = fn.args
     pos = a.posonlyargs + a.args
-    first = len(pos) - len(a.defaults)
-    out = {p.arg: i for i, p in enumerate(pos) if i >= first}
-    out.update({p.arg: None for p, d in zip(a.kwonlyargs, a.kw_defaults) if d})
+    defaults = [None] * (len(pos) - len(a.defaults)) + a.defaults
+    out = {p.arg: (i, d) for i, (p, d) in enumerate(zip(pos, defaults)) if i >= implicit}
+    out.update({p.arg: (None, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)})
     return out
 
 
-def _test_only(fn) -> dict[str, str]:
-    """Each parameter a `Test-only parameters:` line names -> its reason."""
-    out = {}
-    for m in TEST_ONLY.finditer(ast.get_docstring(fn) or ""):
-        out.update(dict.fromkeys(m.group(1).split(", "), m.group(2)))
+def _marks(fn) -> dict[str, dict[str, str]]:
+    """Per line kind ("Test-only", "Frozen-caller"), each parameter the
+    docstring's line names -> the line's reason."""
+    out: dict[str, dict[str, str]] = {"Test-only": {}, "Frozen-caller": {}}
+    for m in MARK.finditer(ast.get_docstring(fn) or ""):
+        out[m.group(1)].update(dict.fromkeys(m.group(2).split(", "), m.group(3)))
     return out
 
 
-def _passed(sites, called: str, arg: str, i: int | None, implicit: int) -> bool:
-    return any(
-        star or arg in kws or (i is not None and n_pos + implicit > i)
-        for n_pos, star, kws in sites.get(called, ())
-    )
+def _literal(node):
+    """A literal argument's (type, repr), or None."""
+    try:
+        v = ast.literal_eval(node)
+    except (ValueError, TypeError, SyntaxError, MemoryError, RecursionError):
+        return None
+    return type(v).__name__, repr(v)
 
 
-def unpassed_params() -> list[str]:
-    """`path:line def(param): why` of each defaulted parameter that no
-    shipped call passes and no valid `Test-only parameters:` line
-    keeps, and of each stale entry of such a line."""
+def _omitted(default: ast.expr):
+    """The value a call passes by leaving the parameter out."""
+    return _literal(default) or ("default", ast.unparse(default))
+
+
+def _values(sites, called: str, arg: str, i, default, implicit: int) -> list:
+    """What each call passes for one parameter: a literal's key, the
+    default's when it leaves the parameter out, and for anything else
+    (a non-literal, *args or **kwargs, a required parameter left out) a
+    fresh object, equal to no other value."""
+    out = []
+    for args, kws, star in sites.get(called, ()):
+        node = kws.get(arg)
+        if node is None and not star and i is not None and i - implicit < len(args):
+            node = args[i - implicit]
+        if node is not None:
+            out.append(_literal(node) or object())
+        elif star or default is None:
+            out.append(object())
+        else:
+            out.append(_omitted(default))
+    return out
+
+
+def _one_value(values: list) -> str | None:
+    """The one literal every call passes, or None."""
+    keys = set(values)
+    if len(keys) == 1 and isinstance(only := keys.pop(), tuple):
+        return only[1]
+    return None
+
+
+def _frozen_callers_pass(reason: str, called: str, arg: str, i, implicit: int) -> bool:
+    """Whether the reason names shipped files outside the package, each
+    with a call that passes the parameter itself."""
+    files = FROZEN_FILE.findall(reason)
+    for f in files:
+        path = ROOT / f
+        if not path.is_file() or PACKAGE in path.parents:
+            return False
+        sites = _call_sites([path]).get(called, ())
+        if not any(arg in kws or (i is not None and i - implicit < len(args))
+                   for args, kws, _ in sites):
+            return False
+    return bool(files)
+
+
+def one_value_params() -> list[str]:
+    """`path:line def(param): why` of each parameter that every shipped
+    call passes one and the same literal, unless a valid `Test-only
+    parameters:` or `Frozen-caller parameters:` line keeps it, and of
+    each stale entry of such a line."""
     shipped = _call_sites([*PACKAGE.rglob("*.py"), *_shipped_files()])
     tests = _call_sites((ROOT / "tests").rglob("*.py"))
     out = []
     for path, fn, shown, called, implicit in _package_defs():
         where = f"{path.relative_to(ROOT)}:{fn.lineno} {shown}"
-        params = _defaulted(fn)
-        marks = _test_only(fn)
-        for arg, i in params.items():
-            if _passed(shipped, called, arg, i, implicit):
-                if arg in marks:
-                    out.append(f"{where}({arg}): marked test-only, but a shipped call passes it")
-            elif not _passed(tests, called, arg, i, implicit):
-                out.append(f"{where}({arg}): no call passes it")
-            elif arg not in marks:
-                out.append(f"{where}({arg}): only tests pass it, and no Test-only line names it")
-            elif not any((ROOT / t).is_file() for t in TEST_FILE.findall(marks[arg])):
-                out.append(f"{where}({arg}): its Test-only reason names no tests/test_*.py file")
+        params = _params(fn, implicit)
+        marks = _marks(fn)
+        for arg, (i, default) in params.items():
+            values = _values(shipped, called, arg, i, default, implicit)
+            if not values and default is not None:
+                values = [_omitted(default)]
+            only = _one_value(values)
+            kinds = [k for k, m in marks.items() if arg in m]
+            if only is None:
+                out += [f"{where}({arg}): marked {k.lower()}, but shipped calls pass "
+                        "it more than one value" for k in kinds]
+            elif "Frozen-caller" in kinds:
+                if not _frozen_callers_pass(marks["Frozen-caller"][arg], called, arg, i, implicit):
+                    out.append(f"{where}({arg}): marked frozen-caller, but a file its "
+                               "line names is missing or no longer passes it")
+            elif "Test-only" in kinds:
+                if _one_value(values + _values(tests, called, arg, i, default, implicit)):
+                    out.append(f"{where}({arg}): marked test-only, but no test passes "
+                               f"another value than {only}")
+                elif not any((ROOT / t).is_file()
+                             for t in TEST_FILE.findall(marks["Test-only"][arg])):
+                    out.append(f"{where}({arg}): its Test-only reason names no "
+                               "tests/test_*.py file")
+            elif called in shipped:
+                out.append(f"{where}({arg}): every shipped call passes {only}")
+            else:
+                out.append(f"{where}({arg}): no shipped call passes it, so it is always {only}")
         out += [
-            f"{where}({arg}): marked test-only, but it is not a defaulted parameter"
-            for arg in marks.keys() - params.keys()
+            f"{where}({arg}): marked {k.lower()}, but the def has no such parameter"
+            for k, m in marks.items() for arg in m.keys() - params.keys()
         ]
     return out
 
 
-def test_every_operator_default_is_passed_somewhere():
-    unpassed = unpassed_params()
-    assert not unpassed, (
-        "make each of these defaulted parameters the constant it always "
-        "is, or (only tests pass it) keep it with a 'Test-only "
-        "parameters: <name> — <reason naming tests/test_*.py>' line in "
-        "its docstring:\n  " + "\n  ".join(unpassed)
+def test_every_parameter_takes_two_values_in_shipped_calls():
+    one_valued = one_value_params()
+    assert not one_valued, (
+        "make each of these parameters the constant it always is; keep "
+        "one only with a 'Test-only parameters: <name> — <reason naming "
+        "tests/test_*.py>' line in its docstring when tests need its other "
+        "values, or a 'Frozen-caller parameters: <name> — <files>' line "
+        "when bench.py or perfbench/ pass it:\n  "
+        + "\n  ".join(one_valued)
     )

@@ -36,8 +36,10 @@ def test_jarless_entry_points_raise(spark):
 
 
 def test_session_confs_cover_catalog_and_spj():
-    confs = I.iceberg_session_confs("lake", "s3://wh")
-    assert confs["spark.sql.catalog.lake"].endswith("SparkCatalog")
+    confs = I.iceberg_session_confs("s3://wh")
+    assert I.TILES_TABLE.startswith(f"{I.CATALOG}.")
+    assert confs[f"spark.sql.catalog.{I.CATALOG}"].endswith("SparkCatalog")
+    assert confs[f"spark.sql.catalog.{I.CATALOG}.warehouse"] == "s3://wh"
     assert confs["spark.sql.sources.v2.bucketing.enabled"] == "true"
     assert "IcebergSparkSessionExtensions" in confs["spark.sql.extensions"]
 

@@ -63,7 +63,7 @@ def test_geocode_ids_past_int64_product_range(spark):
     got = {r.doc_id: (r.x, r.y, r.z_h) for r in geocode_points(df).collect()}
     assert got == want
     sql = (f"SELECT doc_id, {GX.mercator_x_sql('doc_id')}, {GX.mercator_y_sql('doc_id')}, "
-           f"{GX.hash_z_sql('doc_id')} FROM (SELECT unnest(?::BIGINT[]) AS doc_id)")
+           f"{GX.hash_z_sql()} FROM (SELECT unnest(?::BIGINT[]) AS doc_id)")
     rows = duckdb.connect().execute(sql, [ids]).fetchall()
     assert {r[0]: tuple(r[1:]) for r in rows} == want
 
@@ -164,7 +164,7 @@ def test_knn_density_ring_equals_brute(spark, points):
     h = {
         (r["q_id"], r["rank"]): r["doc_id"]
         for r in knn_hex(
-            others, queries.select("q_id", "x", "y"), tile_size_meters(7), k=5
+            others, queries.select("q_id", "x", "y"), tile_size_meters(7)
         ).collect()
     }
     assert b == h
@@ -172,7 +172,7 @@ def test_knn_density_ring_equals_brute(spark, points):
     h2 = {
         (r["q_id"], r["rank"]): r["doc_id"]
         for r in knn_hex(
-            others, queries.select("q_id", "x", "y"), tile_size_meters(7), k=5,
+            others, queries.select("q_id", "x", "y"), tile_size_meters(7),
             initial_ring=1,
         ).collect()
     }
@@ -181,7 +181,7 @@ def test_knn_density_ring_equals_brute(spark, points):
     sh = {
         (r["q_id"], r["rank"]): r["doc_id"]
         for r in knn_hex(
-            others, queries.select("q_id", "x", "y"), tile_size_meters(7), k=5,
+            others, queries.select("q_id", "x", "y"), tile_size_meters(7),
             initial_ring=60,
         ).collect()
     }
@@ -248,7 +248,7 @@ def test_knn_degenerate_corpora_equal_brute(spark, corpus, variant):
     persisted = _persisted_rdd_ids(spark)
     if variant == "hex":
         out = knn_hex(pts, queries.select("q_id", "x", "y"),
-                      tile_size_meters(zoom + grid_bits), k=k)
+                      tile_size_meters(zoom + grid_bits))
     else:
         out = knn_ring(pts, queries, zoom, grid_bits, k=k, cell_join="shuffle")
     got = sorted(tuple(r) for r in out.select("q_id", "rank", "doc_id", "dist2").collect())
@@ -267,7 +267,7 @@ def test_with_h3_id_packs_axial(spark, points):
 
     from tin_terrain_spark.functions.geocode_exprs import tile_size_meters
     from tin_terrain_spark.functions.h3pack import (
-        SHIM_BASE_CELL, axial_from_h3, h3_is_valid, unpack_h3, with_h3_id,
+        H3_RES, SHIM_BASE_CELL, axial_from_h3, h3_is_valid, unpack_h3, with_h3_id,
     )
 
     rows = (
@@ -283,7 +283,7 @@ def test_with_h3_id_packs_axial(spark, points):
         h = r["h3_id"] & 0xFFFFFFFFFFFFFFFF  # BIGINT carrier -> uint64 bits
         assert h3_is_valid(h)
         f = unpack_h3(h)
-        assert f["res"] == 10 and f["base_cell"] == SHIM_BASE_CELL
+        assert f["res"] == H3_RES and f["base_cell"] == SHIM_BASE_CELL
         assert axial_from_h3(h) == (r["hex_q"], r["hex_r"])
 
 
@@ -840,7 +840,7 @@ def test_knn_empty_inputs_equal_brute(spark, points, empty):
         .select(*cols).collect()
     )
     for out in (knn_ring(pts, queries, 2, 5, k=5),
-                knn_hex(pts, queries.select("q_id", "x", "y"), tile_size_meters(7), k=5)):
+                knn_hex(pts, queries.select("q_id", "x", "y"), tile_size_meters(7))):
         assert sorted(tuple(r) for r in out.select(*cols).collect()) == want
 
 
@@ -1229,17 +1229,17 @@ def test_kmv_distinct_sketch(spark):
     stable, but the bound asserted is the published ~1/sqrt(k-2))."""
     import pyspark.sql.functions as F
 
-    from tin_terrain_spark.operators.sketches import kmv_distinct
+    from tin_terrain_spark.operators.sketches import K, kmv_distinct
 
     small = [("s", f"v{i % 10}") for i in range(100)]      # 10 distinct
     big = [("b", f"value-{i}") for i in range(20000)]      # 20k distinct
-    df = spark.createDataFrame(small + big, ["g", "v"])
-    out = {r["g"]: r for r in kmv_distinct(df, "g", "v", k=64).collect()}
+    df = spark.createDataFrame(small + big, ["lang", "tok"])
+    out = {r["lang"]: r for r in kmv_distinct(df).collect()}
     assert out["s"]["n_exact"] == 10
     assert out["s"]["kmv_estimate"] == 10.0  # lossless below k
     est, exact = out["b"]["kmv_estimate"], out["b"]["n_exact"]
     assert exact == 20000
-    assert abs(est - exact) / exact < 3.0 / (64 - 2) ** 0.5  # ~3 sigma
+    assert abs(est - exact) / exact < 3.0 / (K - 2) ** 0.5  # ~3 sigma
 
 
 def test_span_dups_witnesses_shared_passage(spark):

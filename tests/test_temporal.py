@@ -89,7 +89,7 @@ def test_range_join_boundaries_and_overlap(spark):
     )
     got = sorted(
         (r["event_id"], r["range_id"])
-        for r in range_join(rows, ranges, bucket_width=7.0).collect()
+        for r in range_join(rows, ranges).collect()
     )
     # lo inclusive, hi exclusive; overlapping ranges both match
     assert got == [(1, 0), (1, 1), (2, 1), (2, 2), (3, 0), (3, 1), (4, 1)]

@@ -208,6 +208,7 @@ def test_discovery_to_frontier_composes(spark):
     """Crawl-side e2e: sitemap tree discovery → robots policy →
     politeness schedule."""
     from tin_terrain_spark.operators.robots import (
+        BASE_EPOCH,
         expand_sitemap_tree,
         frontier_schedule,
         robots_filter,
@@ -248,14 +249,13 @@ def test_discovery_to_frontier_composes(spark):
     allowed = robots_filter(pages, rules).filter("allowed")
     plan = frontier_schedule(
         allowed.withColumn("crawl_delay", F.lit(2)).withColumn("priority", F.lit(0)),
-        base_epoch=1000,
     )
     rows = sorted(
         (r["url"], r["fetch_epoch"]) for r in plan.collect()
     )
     # /private/* never scheduled; 3 allowed urls spaced 2s on one host
     assert rows == [
-        ("https://s.org/a/1", 1000),
-        ("https://s.org/a/2", 1002),
-        ("https://s.org/b/1", 1004),
+        ("https://s.org/a/1", BASE_EPOCH),
+        ("https://s.org/a/2", BASE_EPOCH + 2),
+        ("https://s.org/b/1", BASE_EPOCH + 4),
     ]

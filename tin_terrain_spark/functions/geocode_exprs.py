@@ -64,18 +64,19 @@ def mercator_y_sql(id_col: str) -> str:
     return f"({dlit(-HALF_CIRCUMFERENCE)} + {dlit(2.0 * HALF_CIRCUMFERENCE)} * {u_hash_sql(id_col, 'u2')})"
 
 
-def hash_z_sql(id_col: str) -> str:
-    """Exact-arithmetic synthetic height in [-100, 100) for
+def hash_z_sql() -> str:
+    """Exact-arithmetic synthetic height of doc_id in [-100, 100) for
     oracle-checked aggregation queries (no transcendentals)."""
-    return f"({dlit(-100.0)} + {dlit(200.0)} * {u_hash_sql(id_col, 'u3')})"
+    return f"({dlit(-100.0)} + {dlit(200.0)} * {u_hash_sql('doc_id', 'u3')})"
 
 
-def dem_z_sql(x_sql: str, y_sql: str) -> str:
-    """FIXTURES.md §3 synthetic DEM (smooth + detail bands). Uses sin —
-    only for the meshing path (never oracle-value-compared raw)."""
+def dem_z_sql() -> str:
+    """FIXTURES.md §3 synthetic DEM (smooth + detail bands) of columns
+    x, y. Uses sin — only for the meshing path (never
+    oracle-value-compared raw)."""
     return (
-        f"(100.0 * SIN(({x_sql}) / 5000.0) * SIN(({y_sql}) / 5000.0) "
-        f"+ 10.0 * SIN(({x_sql}) / 700.0) * COS(({y_sql}) / 900.0))"
+        "(100.0 * SIN((x) / 5000.0) * SIN((y) / 5000.0) "
+        "+ 10.0 * SIN((x) / 700.0) * COS((y) / 900.0))"
     )
 
 

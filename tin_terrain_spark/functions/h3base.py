@@ -197,8 +197,10 @@ _TABLES_ARTIFACT = "h3_base_tables.json"
 
 @lru_cache(maxsize=1)
 def derive_base_cells() -> BaseCellTables:
-    """Base-cell tables: loaded from the packaged frozen artifact
-    (h3_base_tables.json) when present, else derived numerically.
+    """Base-cell tables, loaded from the packaged frozen artifact
+    (h3_base_tables.json) with pkgutil, which reads it from a package
+    directory and from a --py-files zip alike. A missing artifact
+    raises: the numeric tables could mint different ids on this host.
 
     The artifact exists because the numeric derivation, while
     deterministic WITHIN an environment, proved sensitive to the
@@ -212,45 +214,28 @@ def derive_base_cells() -> BaseCellTables:
     and scripts/freeze_h3_tables.py regenerates it from
     _derive_base_cells_numeric()."""
     import json
-    import os
+    import pkgutil
 
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        _TABLES_ARTIFACT)
-    raw = None
-    if os.path.exists(path):
-        with open(path) as f:
-            raw = f.read()
-    else:  # zip-deployed package (--py-files): read via pkgutil
-        try:
-            import pkgutil
-
-            data = pkgutil.get_data(__package__, _TABLES_ARTIFACT)
-            if data is not None:
-                raw = data.decode()
-        except Exception:
-            raw = None
-    if raw is not None:
-        d = json.loads(raw)
-        tabs = BaseCellTables(
-            lookup_bc=np.array(d["lookup_bc"], dtype=np.int16),
-            lookup_rot=np.array(d["lookup_rot"], dtype=np.int8),
-            bc_home_face=np.array(d["bc_home_face"], dtype=np.int8),
-            bc_home_ijk=np.array(d["bc_home_ijk"], dtype=np.int8),
-            bc_home_rot=np.array(d["bc_home_rot"], dtype=np.int8),
-            bc_is_pentagon=np.array(d["bc_is_pentagon"], dtype=bool),
-            bc_faces=tuple(tuple(f) for f in d["bc_faces"]),
-            bc_center=np.array(d["bc_center"], dtype=np.float64),
-            bc_rep_count=np.array(d["bc_rep_count"], dtype=np.int8),
-            bc_rep_face=np.array(d["bc_rep_face"], dtype=np.int8),
-            bc_rep_ijk=np.array(d["bc_rep_ijk"], dtype=np.int8),
-            bc_rep_rot=np.array(d["bc_rep_rot"], dtype=np.int8),
-        )
-        assert tabs.lookup_bc.shape == (540,) and \
-            int((tabs.lookup_bc >= 0).sum()) == 380 and \
-            sorted(set(tabs.lookup_bc[tabs.lookup_bc >= 0].tolist())) == \
-            list(range(122)), "corrupt h3 base-cell artifact"
-        return tabs
-    return _derive_base_cells_numeric()
+    d = json.loads(pkgutil.get_data(__package__, _TABLES_ARTIFACT))
+    tabs = BaseCellTables(
+        lookup_bc=np.array(d["lookup_bc"], dtype=np.int16),
+        lookup_rot=np.array(d["lookup_rot"], dtype=np.int8),
+        bc_home_face=np.array(d["bc_home_face"], dtype=np.int8),
+        bc_home_ijk=np.array(d["bc_home_ijk"], dtype=np.int8),
+        bc_home_rot=np.array(d["bc_home_rot"], dtype=np.int8),
+        bc_is_pentagon=np.array(d["bc_is_pentagon"], dtype=bool),
+        bc_faces=tuple(tuple(f) for f in d["bc_faces"]),
+        bc_center=np.array(d["bc_center"], dtype=np.float64),
+        bc_rep_count=np.array(d["bc_rep_count"], dtype=np.int8),
+        bc_rep_face=np.array(d["bc_rep_face"], dtype=np.int8),
+        bc_rep_ijk=np.array(d["bc_rep_ijk"], dtype=np.int8),
+        bc_rep_rot=np.array(d["bc_rep_rot"], dtype=np.int8),
+    )
+    assert tabs.lookup_bc.shape == (540,) and \
+        int((tabs.lookup_bc >= 0).sum()) == 380 and \
+        sorted(set(tabs.lookup_bc[tabs.lookup_bc >= 0].tolist())) == \
+        list(range(122)), "corrupt h3 base-cell artifact"
+    return tabs
 
 
 def save_tables_artifact() -> str:

@@ -223,7 +223,11 @@ def ijk_to_hex2d(i, j, k):
 def geo_to_face_ijk(lat, lng, res: int):
     """lat/lng (radians) -> (face, i, j, k) at `res`: the icosahedral
     front-end's output, ready for base-cell resolution (and already
-    consumable by h3pack.h3_from_axial under a per-face origin)."""
+    consumable by h3pack.h3_from_axial under a per-face origin).
+
+    Test-only parameters: res — the NumPy reference of
+    with_face_ijk_cols, which tests/test_h3geo.py checks at res 2 and 3
+    (the Class II and Class III frames); h3base uses res 0."""
     face, x, y = geo_to_hex2d(lat, lng, res)
     i, j, k = hex2d_to_ijk(x, y)
     return face, i, j, k
@@ -232,7 +236,11 @@ def geo_to_face_ijk(lat, lng, res: int):
 def face_ijk_to_geo(face, i, j, k, res: int):
     """Cell-center lat/lng (radians) of (face, ijk) at `res` — the
     inverse projection (hex2d -> angular distance via arctan of the
-    rescaled radius -> destination along the un-rotated azimuth)."""
+    rescaled radius -> destination along the un-rotated azimuth).
+
+    Test-only parameters: res — tests/test_h3geo.py round-trips cell
+    centers at res 0-4, the odd ones through the Class III rotation
+    this undoes; h3base uses res 0."""
     face = np.asarray(face, np.int64)
     x, y = ijk_to_hex2d(i, j, k)
     r2d = np.hypot(x, y)

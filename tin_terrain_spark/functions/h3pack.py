@@ -56,6 +56,13 @@ _BC_OFFSET = 45
 SHIM_BASE_CELL = 20
 _PENTAGONS = frozenset({4, 14, 24, 38, 49, 58, 63, 72, 83, 97, 107, 117})
 
+# the resolution with_h3_id packs at and its oracle twin recomputes:
+# res 7 spans ~823k cells (radius ~510) around the origin, the hex grid
+# at queries_ext.HEX_SIZE reaches ~±150, and fewer walk steps keep the
+# staged plan small; out-of-range cells pack to NULL, never a wrong id
+H3_RES = 7
+H3_PARENT_RES = 4  # the resolution h3_parent_expr rolls H3_RES ids up to
+
 
 def pack_h3(res: int, base_cell: int, digits) -> int:
     """Assemble a cell-mode H3 index from fields. `digits` holds the
@@ -447,25 +454,25 @@ def _rha_sql(n: str) -> str:
     )
 
 
-def h3_step_exprs(res: int):
+def h3_step_exprs():
     """Ordered (column_name, sql_expr) pairs computing the aperture-7
     digit walk from axial (hex_q, hex_r) down to resolution 0, then the
-    packed id as column `h3_id` (NULL when the coordinate needs more
-    than `res` digit levels — loud, never aliased)."""
+    packed id at H3_RES as column `h3_id` (NULL when the coordinate
+    needs more than H3_RES digit levels — loud, never aliased)."""
     cols: list[tuple[str, str]] = []
     # axial -> normalized IJK (k = 0): m = least(q, r, 0)
     m0 = "LEAST(hex_q, hex_r, 0)"
-    cols.append((f"_h3i{res}", f"CAST((hex_q) - {m0} AS BIGINT)"))
-    cols.append((f"_h3j{res}", f"CAST((hex_r) - {m0} AS BIGINT)"))
-    cols.append((f"_h3k{res}", f"CAST(0 - {m0} AS BIGINT)"))
-    cols.extend(_h3_walk_body(res))
-    header = (MODE_CELL << _MODE_OFFSET) | (res << _RES_OFFSET) | (
+    cols.append((f"_h3i{H3_RES}", f"CAST((hex_q) - {m0} AS BIGINT)"))
+    cols.append((f"_h3j{H3_RES}", f"CAST((hex_r) - {m0} AS BIGINT)"))
+    cols.append((f"_h3k{H3_RES}", f"CAST(0 - {m0} AS BIGINT)"))
+    cols.extend(_h3_walk_body())
+    header = (MODE_CELL << _MODE_OFFSET) | (H3_RES << _RES_OFFSET) | (
         SHIM_BASE_CELL << _BC_OFFSET
     )
-    for rr in range(res + 1, _MAX_RES + 1):
+    for rr in range(H3_RES + 1, _MAX_RES + 1):
         header |= 7 << (3 * (_MAX_RES - rr))
     digit_sum = " + ".join(
-        f"_h3d{rr} * {1 << (3 * (_MAX_RES - rr))}" for rr in range(1, res + 1)
+        f"_h3d{rr} * {1 << (3 * (_MAX_RES - rr))}" for rr in range(1, H3_RES + 1)
     )
     cols.append(
         (
@@ -477,13 +484,14 @@ def h3_step_exprs(res: int):
     return cols
 
 
-def _h3_walk_body(res: int):
+def _h3_walk_body():
     """The aperture-7 up-walk step columns of h3_step_exprs: consumes
-    `_h3i{res}/_h3j{res}/_h3k{res}`, emits parents down to level 0 and
-    digits `_h3d{rr}` (identical text to the pre-refactor inline loop —
-    the h3_cells oracle twin depends on the semantics, not the text)."""
+    `_h3i{H3_RES}/_h3j{H3_RES}/_h3k{H3_RES}`, emits parents down to
+    level 0 and digits `_h3d{rr}` (identical text to the pre-refactor
+    inline loop — the h3_cells oracle twin depends on the semantics,
+    not the text)."""
     cols: list[tuple[str, str]] = []
-    for rr in range(res, 0, -1):
+    for rr in range(H3_RES, 0, -1):
         i, j, k = f"_h3i{rr}", f"_h3j{rr}", f"_h3k{rr}"
         di = f"(({i}) - ({k}))"
         dj = f"(({j}) - ({k}))"
@@ -544,19 +552,17 @@ def _h3_stages(steps):
     return stages
 
 
-def with_h3_id(df, size: float, res: int = 10):
+def with_h3_id(df, size: float):
     """DataFrame helper: the axial cells of meter columns x, y
-    (hexgrid.with_hex_cell) packed to H3-layout ids with pure Column
-    expressions (JVM-side, no UDF; the same generated SQL is the
-    DuckDB oracle twin). Default res 10
-    addresses ~282M cells around the origin — far beyond any hex grid
-    this engine derives; out-of-range packs to NULL, never a wrong id."""
+    (hexgrid.with_hex_cell) packed to H3-layout ids at H3_RES with pure
+    Column expressions (JVM-side, no UDF; the same generated SQL is the
+    DuckDB oracle twin)."""
     from pyspark.sql import functions as F
 
     from . import hexgrid as HG
 
     out = HG.with_hex_cell(df, size)
-    for stage in _h3_stages(h3_step_exprs(res)):
+    for stage in _h3_stages(h3_step_exprs()):
         out = out.select(
             "*", *[F.expr(expr).alias(name) for name, expr in stage]
         )
@@ -564,30 +570,27 @@ def with_h3_id(df, size: float, res: int = 10):
     return out.select(*keep)
 
 
-def h3_parent_expr(res_from: int, res_to: int, col: str = "h3_id",
-                   dialect: str = "spark") -> str:
-    """Parent-cell id at `res_to` from an id at `res_from`, as ONE
-    integer expression (H3's hierarchical-containment property): zero
-    the digits below the parent resolution, refill them with 7s (a
+def h3_parent_expr(dialect: str = "spark") -> str:
+    """Parent-cell id at H3_PARENT_RES of the H3_RES id in column h3_id,
+    as ONE integer expression (H3's hierarchical-containment property):
+    zero the digits below the parent resolution, refill them with 7s (a
     3-bit group of 1s IS 7), and adjust the resolution field — all of
     which collapses to ((id >> s) << s) + C with a precomputed
     constant. Spark spells the shifts shiftright/shiftleft, DuckDB
     >>/<< — the VALUES are identical exact int64 arithmetic."""
-    if not (0 <= res_to <= res_from <= _MAX_RES):
-        raise ValueError("need 0 <= res_to <= res_from <= 15")
-    s = 3 * (_MAX_RES - res_to)
-    c = ((1 << s) - 1) + ((res_to - res_from) << _RES_OFFSET)
+    s = 3 * (_MAX_RES - H3_PARENT_RES)
+    c = ((1 << s) - 1) + ((H3_PARENT_RES - H3_RES) << _RES_OFFSET)
     if dialect == "spark":
-        return f"(shiftleft(shiftright({col}, {s}), {s}) + CAST({c} AS BIGINT))"
-    return f"((({col}) >> {s}) << {s}) + CAST({c} AS BIGINT)"
+        return f"(shiftleft(shiftright(h3_id, {s}), {s}) + CAST({c} AS BIGINT))"
+    return f"(((h3_id) >> {s}) << {s}) + CAST({c} AS BIGINT)"
 
 
-def h3_id_subquery_sql(inner_sql: str, res: int = 10) -> str:
+def h3_id_subquery_sql(inner_sql: str) -> str:
     """DuckDB oracle twin of with_h3_id: wraps a subquery that already
     has hex_q/hex_r (hexgrid.hex_cell_subquery_sql) in a nested-select
     chain materializing each walk stage, then drops the intermediate
     _h3* columns."""
-    steps = h3_step_exprs(res)
+    steps = h3_step_exprs()
     sql = f"SELECT * FROM ({inner_sql})"
     for stage in _h3_stages(steps):
         cols = ", ".join(f"{expr} AS {name}" for name, expr in stage)

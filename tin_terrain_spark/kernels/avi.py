@@ -17,6 +17,7 @@ import struct
 import numpy as np
 
 FPS = 10  # the frame rate encode_avi_mjpeg writes
+SIZE = 16  # the frame width and height encode_avi_mjpeg writes
 
 
 def is_avi(data: bytes) -> bool:
@@ -62,40 +63,39 @@ def avi_frame_chunks(data: bytes) -> list[bytes]:
     return frames
 
 
-def decode_avi_frame(data: bytes, idx: int) -> np.ndarray:
-    """Decode frame `idx` (clamped to the last frame, like a player
-    holding the final still) to (H, W[, C]) uint8 via kernels/jpeg.py."""
+def decode_avi_frame(data: bytes) -> np.ndarray:
+    """Decode the first frame to (H, W[, C]) uint8 via kernels/jpeg.py."""
     from . import jpeg as _jpeg
 
-    chunks = avi_frame_chunks(data)
-    payload = chunks[min(max(idx, 0), len(chunks) - 1)]
+    payload = avi_frame_chunks(data)[0]
     if not _jpeg.is_jpeg(payload):
         raise ValueError("avi: frame chunk is not baseline JPEG")
     return _jpeg.decode_jpeg(payload)
 
 
-def encode_avi_mjpeg(frames: list[bytes], width: int, height: int) -> bytes:
-    """Wrap pre-encoded baseline-JPEG frames into a minimal standard
-    AVI at FPS frames a second: hdrl (avih + one vids/MJPG strl) + movi
-    ('00dc' chunks) + idx1. Players and this repo's own demuxer read it back."""
+def encode_avi_mjpeg(frames: list[bytes]) -> bytes:
+    """Wrap pre-encoded SIZE x SIZE baseline-JPEG frames into a minimal
+    standard AVI at FPS frames a second: hdrl (avih + one vids/MJPG
+    strl) + movi ('00dc' chunks) + idx1. Players and this repo's own
+    demuxer read it back."""
     if not frames:
         raise ValueError("avi: need at least one frame")
     max_size = max(len(f) for f in frames)
     avih = struct.pack(
         "<IIIIIIIIIIIIII",
         1_000_000 // FPS, max_size * FPS, 0, 0x10,  # AVIF_HASINDEX
-        len(frames), 0, 1, max_size, width, height, 0, 0, 0, 0,
+        len(frames), 0, 1, max_size, SIZE, SIZE, 0, 0, 0, 0,
     )
     strh = struct.pack(
         "<4s4sIHHIIIIIIII4h",
         b"vids", b"MJPG", 0, 0, 0, 0,   # flags, prio, lang, initial
         1, FPS, 0, len(frames),          # scale, rate, start, length
         max_size, 10_000, 0,             # buffer, quality, sample size
-        0, 0, min(width, 32767), min(height, 32767),  # rcFrame
+        0, 0, SIZE, SIZE,                # rcFrame
     )
     strf = struct.pack(
-        "<IiiHH4sIiiII", 40, width, height, 1, 24, b"MJPG",
-        width * height * 3, 0, 0, 0, 0,
+        "<IiiHH4sIiiII", 40, SIZE, SIZE, 1, 24, b"MJPG",
+        SIZE * SIZE * 3, 0, 0, 0, 0,
     )
     strl = (
         b"strh" + struct.pack("<I", len(strh)) + strh

@@ -44,9 +44,9 @@ class MT19937:
     UPPER = 0x80000000
     LOWER = 0x7FFFFFFF
 
-    def __init__(self, seed: int = 42):
+    def __init__(self):
         mt = [0] * self.N
-        mt[0] = seed & 0xFFFFFFFF
+        mt[0] = 42
         for i in range(1, self.N):
             mt[i] = (1812433253 * (mt[i - 1] ^ (mt[i - 1] >> 30)) + i) & 0xFFFFFFFF
         self.mt = mt
@@ -104,7 +104,7 @@ class DelaunayMesh:
         self.dead: list = []  # per edge group (len = len(onext)//4)
         self.first_face: Triangle | None = None
         self.starting_edge: int = -1
-        self._rng = MT19937(42)
+        self._rng = MT19937()
 
     # ---- allocation / primitive topology -------------------------------
 

@@ -512,7 +512,7 @@ def _component_blocks(plane: np.ndarray, q: np.ndarray):
     return out
 
 
-def encode_jpeg(px: np.ndarray, quality: int = 85,
+def encode_jpeg(px: np.ndarray, quality: int = 90,
                 subsample: str = "444",
                 restart_interval: int = 0) -> bytes:
     """uint8 (H, W), (H, W, 1) grayscale or (H, W, 3) RGB -> baseline
@@ -522,10 +522,11 @@ def encode_jpeg(px: np.ndarray, quality: int = 85,
     restart_interval > 0 emits DRI + RSTn every N MCUs (fixture for
     the decoder's resync path).
 
-    Test-only parameters: subsample, restart_interval —
-    tests/test_jpeg.py builds decoder fixtures with them (subsampled
-    chroma, restart markers); tests/test_sources_geotiff.py builds its
-    JPEG-in-TIFF tiles with 4:2:0."""
+    Test-only parameters: quality, subsample, restart_interval —
+    tests/test_jpeg.py builds decoder fixtures with them (quality 95's
+    quantization tables, subsampled chroma, restart markers);
+    tests/test_sources_geotiff.py builds its JPEG-in-TIFF tiles at
+    quality 92 and 95 and with 4:2:0."""
     if px.ndim == 2:
         px = px[:, :, None]
     h, w, nc = px.shape

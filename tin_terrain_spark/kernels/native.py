@@ -51,13 +51,12 @@ from __future__ import annotations
 import ctypes
 import hashlib
 import os
+import pkgutil
 import subprocess
 import tempfile
 import threading
 
 import numpy as np
-
-_SRC = os.path.join(os.path.dirname(os.path.abspath(__file__)), "_native", "tinmesh.c")
 
 _CFLAGS = ["-O2", "-fPIC", "-shared", "-ffp-contract=off", "-fno-unsafe-math-optimizations"]
 
@@ -66,20 +65,12 @@ _tried = False
 
 
 def _read_source() -> bytes | None:
-    """Read tinmesh.c — from the filesystem when the package is a plain
-    directory, via pkgutil when it's imported from a --py-files zip
-    (executors on a real cluster load the package from a zip archive;
-    open() on a path inside a zip raises OSError)."""
+    """Read tinmesh.c with pkgutil, which reads it from a package
+    directory and from a --py-files zip alike (executors on a real
+    cluster load the package from a zip archive)."""
     try:
-        with open(_SRC, "rb") as f:
-            return f.read()
+        return pkgutil.get_data(__package__, "_native/tinmesh.c")
     except OSError:
-        pass
-    try:
-        import pkgutil
-
-        return pkgutil.get_data("tin_terrain_spark.kernels", "_native/tinmesh.c")
-    except Exception:
         return None
 
 

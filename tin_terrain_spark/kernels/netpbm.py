@@ -31,9 +31,10 @@ def is_netpbm(data: bytes) -> bool:
     )
 
 
-def _tokens(data: bytes, start: int):
-    """Yield (token, end_offset) skipping whitespace and '#' comments."""
-    i = start
+def _tokens(data: bytes):
+    """Yield (token, end_offset) after the 2-byte magic, skipping
+    whitespace and '#' comments."""
+    i = 2
     n = len(data)
     while i < n:
         c = data[i]
@@ -60,7 +61,7 @@ def decode_netpbm(data: bytes) -> np.ndarray:
     channels = 3 if kind in (3, 6) else 1
     want = 2 if bitmap else 3  # PBM has no maxval token
     header: list[int] = []
-    toks = _tokens(data, 2)
+    toks = _tokens(data)
     end = 2
     for tok, end in toks:
         try:

@@ -18,6 +18,8 @@ import struct
 
 import numpy as np
 
+RATE = 8000  # the sample rate encode_wav writes
+
 
 def is_wav(data: bytes) -> bool:
     return len(data) > 44 and data[:4] == b"RIFF" and data[8:12] == b"WAVE"
@@ -64,8 +66,8 @@ def decode_wav(data: bytes) -> tuple[np.ndarray, int]:
     return samples[: frames * channels].reshape(frames, channels), rate
 
 
-def encode_wav(samples: np.ndarray, rate: int, bits: int = 16) -> bytes:
-    """(n,) or (n, channels) → WAVE bytes. bits: 16 (int16 PCM, input
+def encode_wav(samples: np.ndarray, bits: int = 16) -> bytes:
+    """(n,) or (n, channels) → WAVE bytes at RATE. bits: 16 (int16 PCM, input
     float in [-1, 1) or int16), 8 (uint8 PCM, input float or uint8),
     32 (IEEE float32, input float)."""
     s = np.asarray(samples)
@@ -91,7 +93,7 @@ def encode_wav(samples: np.ndarray, rate: int, bits: int = 16) -> bytes:
         raise ValueError(f"wav: bits {bits} unsupported")
     block = channels * bits // 8
     fmt = struct.pack(
-        "<HHIIHH", audio_format, channels, rate, rate * block, block, bits
+        "<HHIIHH", audio_format, channels, RATE, RATE * block, block, bits
     )
     body = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
     body += b"data" + struct.pack("<I", len(raw)) + raw

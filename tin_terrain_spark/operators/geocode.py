@@ -32,12 +32,12 @@ def geocode_points(
     out = (
         df.withColumn("x", F.expr(GX.mercator_x_sql("doc_id")))
         .withColumn("y", F.expr(GX.mercator_y_sql("doc_id")))
-        .withColumn("z_h", F.expr(GX.hash_z_sql("doc_id")))
+        .withColumn("z_h", F.expr(GX.hash_z_sql()))
         .withColumn("tile_x", F.expr(GX.tile_sql("x", zoom)))
         .withColumn("tile_y", F.expr(GX.tile_sql("y", zoom)))
         .withColumn("cell_x", F.expr(GX.cell_sql("x", zoom, grid_bits)))
         .withColumn("cell_y", F.expr(GX.cell_sql("y", zoom, grid_bits)))
     )
     if with_dem_z:
-        out = out.withColumn("z", F.expr(GX.dem_z_sql("x", "y")))
+        out = out.withColumn("z", F.expr(GX.dem_z_sql()))
     return out

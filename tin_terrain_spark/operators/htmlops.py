@@ -165,11 +165,12 @@ def extract_html(pages: DataFrame, keep_cols: tuple[str, ...] = ()) -> DataFrame
     return pages.select("doc_id", "html", *keep_cols).mapInPandas(op, schema)
 
 
-def _enc_body(text_col):
-    """Entity-encode the body paragraph: 'a'→'&#97;' first (the decimal
-    ref contains no 'e'), then 'e'→'&#x65;' (the hex ref contains no
-    'a') — order-safe, and the extractor must decode both to win."""
-    return F.expr(f"replace(replace({text_col}, 'a', '&#97;'), 'e', '&#x65;')")
+def _enc_body():
+    """Entity-encode the body paragraph, column text: 'a'→'&#97;' first
+    (the decimal ref contains no 'e'), then 'e'→'&#x65;' (the hex ref
+    contains no 'a') — order-safe, and the extractor must decode both
+    to win."""
+    return F.expr("replace(replace(text, 'a', '&#97;'), 'e', '&#x65;')")
 
 
 def synth_html(docs: DataFrame) -> DataFrame:
@@ -181,7 +182,7 @@ def synth_html(docs: DataFrame) -> DataFrame:
     title = F.concat(
         F.lit("Doc "), F.col("doc_id").cast("string"), F.lit(" &amp; &lt;soup&gt;")
     )
-    body = _enc_body("text")
+    body = _enc_body()
     tail = F.concat(F.lit("tail "), (F.col("doc_id") % 7).cast("string"))
 
     v0 = F.concat(
@@ -579,7 +580,7 @@ def synth_boilerplate_html(docs: DataFrame) -> DataFrame:
     title = F.concat(
         F.lit("Doc "), F.col("doc_id").cast("string"), F.lit(" &amp; &lt;soup&gt;")
     )
-    body = _enc_body("text")
+    body = _enc_body()
     tail = F.concat(F.lit("tail "), (F.col("doc_id") % 7).cast("string"))
     page = F.concat(
         F.lit(

@@ -287,8 +287,11 @@ def knn_ring(points: DataFrame, queries: DataFrame, zoom: int, grid_bits: int,
     shuffled on the cell key: work scales with |q|·ball + |points|, and
     neither side goes through the Spark driver. Exact and hash-equal to
     knn_brute (tested). cell_join names that join and accepts only
-    "shuffle"; any other value raises ValueError. It stays a parameter
-    because bench.py and perfbench pass cell_join="shuffle".
+    "shuffle"; any other value raises ValueError.
+
+    Frozen-caller parameters: cell_join — bench.py and
+    perfbench/workloads.py pass "shuffle"; both change only with the
+    benchmark.
 
     Test-only parameters: initial_ring — a ring smaller than the
     density ring leaves queries open, which is how
@@ -431,13 +434,17 @@ def _hex_ring_cells(q: DataFrame, ring: int) -> DataFrame:
     )
 
 
+HEX_K = 5  # the neighbours knn_hex finds for each query
+
+
 def knn_hex(points: DataFrame, queries: DataFrame, hex_size: float,
-            k: int = 5, initial_ring: int | None = None) -> DataFrame:
+            initial_ring: int | None = None) -> DataFrame:
     """J6 over the H3-style hex index (charter: "kNN lookups over H3
-    ring expansion"): the same plan as knn_ring (_knn_plan), but the
-    candidate ring is hexagonal — the ring ball is exploded to cell
-    rows and shuffle-hash joined on (hex_q, hex_r) — and the resolution
-    guarantee uses the hex staircase geometry
+    ring expansion"): the HEX_K nearest points of each query by the
+    same plan as knn_ring (_knn_plan), but the candidate ring is
+    hexagonal — the ring ball is exploded to cell rows and shuffle-hash
+    joined on (hex_q, hex_r) — and the resolution guarantee uses the
+    hex staircase geometry
     (hexgrid.hex_ring_guarantee_m). Cells are computed from the meter
     coordinates with pure Column expressions (no UDF, no native lib);
     nothing is persisted, so each action derives them again. The ring
@@ -458,6 +465,6 @@ def knn_hex(points: DataFrame, queries: DataFrame, hex_size: float,
         hex_size, x="qx", y="qy", q_col="qhq", r_col="qhr",
     )
     return _knn_plan(
-        pts, q, k, initial_ring, _hex_ring_cells, ["hex_q", "hex_r"],
+        pts, q, HEX_K, initial_ring, _hex_ring_cells, ["hex_q", "hex_r"],
         lambda r: HG.hex_ring_guarantee_m(r, hex_size), hex_size, "hex",
     )

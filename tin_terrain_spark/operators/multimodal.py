@@ -153,22 +153,18 @@ def synth_real_audio(docs: DataFrame) -> DataFrame:
                 k = (seed + t * 2654435761) % 65521
                 f = d % 4
                 if f == 0:
-                    payload = _wav.encode_wav(
-                        (k - 32768).astype(np.int16), 8000, bits=16
-                    )
+                    payload = _wav.encode_wav((k - 32768).astype(np.int16), bits=16)
                 elif f == 1:
-                    payload = _wav.encode_wav(
-                        (k % 256).astype(np.uint8), 8000, bits=8
-                    )
+                    payload = _wav.encode_wav((k % 256).astype(np.uint8), bits=8)
                 elif f == 2:
                     st = np.column_stack(
                         [k - 32768, (3 * k) % 65521 - 32768]
                     ).astype(np.int16)
-                    payload = _wav.encode_wav(st, 8000, bits=16)
+                    payload = _wav.encode_wav(st, bits=16)
                 else:
                     payload = _wav.encode_wav(
                         (k.astype(np.float64) / 65536.0).astype(np.float32),
-                        8000, bits=32,
+                        bits=32,
                     )
                 payloads.append(payload)
                 fmts.append(REAL_AUDIO_FORMATS[f])
@@ -199,7 +195,7 @@ def _uniform_jpeg_frame_cache():
         from ..kernels import jpeg as _jpeg
 
         _UNIFORM_FRAMES = [
-            _jpeg.encode_jpeg(np.full((16, 16), v, np.uint8), quality=90)
+            _jpeg.encode_jpeg(np.full((16, 16), v, np.uint8))
             for v in range(256)
         ]
         return _UNIFORM_FRAMES
@@ -230,17 +226,15 @@ def synth_real_video(docs: DataFrame) -> DataFrame:
                 f = np.arange(1, n + 1, dtype=np.int64)
                 v = (seed + f * 2246822519) % 65521 % 256
                 payloads.append(
-                    _avi.encode_avi_mjpeg(
-                        [frames_by_v[int(x)] for x in v], 16, 16
-                    )
+                    _avi.encode_avi_mjpeg([frames_by_v[int(x)] for x in v])
                 )
                 ns.append(n)
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
                     "media_type": "video",
-                    "width": np.full(len(pdf), 16, dtype=np.int32),
-                    "height": np.full(len(pdf), 16, dtype=np.int32),
+                    "width": np.full(len(pdf), _avi.SIZE, dtype=np.int32),
+                    "height": np.full(len(pdf), _avi.SIZE, dtype=np.int32),
                     "n_frames": np.array(ns, dtype=np.int32),
                     "payload": payloads,
                 }
@@ -394,7 +388,7 @@ def _decode_real(payload: bytes, width: int, height: int) -> "np.ndarray | None"
 
     if _avi.is_avi(payload):  # first frame, like the GIF still path
         try:
-            px = _png.to_gray_f32(np.atleast_3d(_avi.decode_avi_frame(payload, 0)))
+            px = _png.to_gray_f32(np.atleast_3d(_avi.decode_avi_frame(payload)))
         except ValueError:
             return None
         return px[: min(int(height), 32), : min(int(width), 32)]

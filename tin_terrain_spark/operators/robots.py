@@ -108,18 +108,19 @@ def crawl_allowed(rules: list[tuple[str, int, bool]], path: str) -> bool:
 
 
 RULES_SCHEMA = "host STRING, pattern_re STRING, prec INT, allow INT"
+AGENT = "tincrawler/1.0"  # the user agent robots_rules selects groups for
 
 
-def robots_rules(robots: DataFrame, agent: str = "*") -> DataFrame:
-    """(host, robots_txt) → one row per applicable rule, with the
-    pattern precompiled to a regex. Arrow-batched parse; the output is
-    tiny (rules ~ O(hosts)) and meant to be broadcast."""
+def robots_rules(robots: DataFrame) -> DataFrame:
+    """(host, robots_txt) → one row per rule that applies to AGENT, with
+    the pattern precompiled to a regex. Arrow-batched parse; the output
+    is tiny (rules ~ O(hosts)) and meant to be broadcast."""
 
     def op(batches):
         for pdf in batches:
             hosts, regexes, precs, allows = [], [], [], []
             for host, txt in zip(pdf["host"], pdf["robots_txt"]):
-                for pat, prec, allow in parse_robots(str(txt), agent):
+                for pat, prec, allow in parse_robots(str(txt), AGENT):
                     hosts.append(host)
                     regexes.append(pattern_regex(pat))
                     precs.append(prec)
@@ -136,20 +137,19 @@ def robots_rules(robots: DataFrame, agent: str = "*") -> DataFrame:
     return robots.select("host", "robots_txt").mapInPandas(op, RULES_SCHEMA)
 
 
-def robots_filter(
-    pages: DataFrame, rules: DataFrame, path_col: str = "path"
-) -> DataFrame:
-    """Annotate pages with the crawl-policy verdict: broadcast the
-    rule table, keep matching rules (JVM RLIKE), take the max of the
-    packed (prec, allow) struct per page, default allow. Adds an
-    `allowed` boolean; pages on hosts without rules stay allowed."""
+def robots_filter(pages: DataFrame, rules: DataFrame) -> DataFrame:
+    """Annotate pages with the crawl-policy verdict on their `path`:
+    broadcast the rule table, keep matching rules (JVM RLIKE), take the
+    max of the packed (prec, allow) struct per page, default allow.
+    Adds an `allowed` boolean; pages on hosts without rules stay
+    allowed."""
     matched = (
         pages.join(F.broadcast(rules), "host", "left")
         .withColumn(
             "_hit",
             F.when(
                 F.col("pattern_re").isNotNull()
-                & F.expr(f"{path_col} rlike pattern_re"),
+                & F.expr("path rlike pattern_re"),
                 F.struct(F.col("prec"), F.col("allow")),
             ),
         )
@@ -247,17 +247,18 @@ def sitemap_urls(sitemaps: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def frontier_schedule(
-    frontier: DataFrame,
-    n_fetchers: int = 64,
-    base_epoch: int = 0,
-) -> DataFrame:
+N_FETCHERS = 64  # frontier_schedule's fetcher slots
+BASE_EPOCH = 1767225600  # frontier_schedule's first fetch: 2026-01-01 00:00 UTC
+
+
+def frontier_schedule(frontier: DataFrame) -> DataFrame:
     """Turn a crawl frontier (url, host, crawl_delay, priority) into
-    a politeness-respecting fetch plan: every url gets a fetcher slot
-    (stable hash of its host — all requests to one host go through ONE
-    fetcher, so the spacing guarantee survives distribution) and a
-    fetch_epoch spaced crawl_delay seconds apart within the host,
-    highest priority first, then by url. Pure JVM plan: one hash, one
+    a politeness-respecting fetch plan: every url gets one of
+    N_FETCHERS fetcher slots (stable hash of its host — all requests to
+    one host go through ONE fetcher, so the spacing guarantee survives
+    distribution) and a fetch_epoch from BASE_EPOCH on, spaced
+    crawl_delay seconds apart within the host, highest priority first,
+    then by url. Pure JVM plan: one hash, one
     per-host window (rank is per-host sequence — skew-bounded because a
     mega-host's rows land on one partition of the window shuffle but
     politeness serializes that host anyway; the work bound is the
@@ -266,12 +267,12 @@ def frontier_schedule(
     w = Window.partitionBy("host").orderBy(F.col("priority").desc(), F.col("url"))
     seq = F.row_number().over(w)
     return (
-        frontier.withColumn("fetcher", F.pmod(F.xxhash64(F.col("host")), F.lit(n_fetchers)).cast("int"))
+        frontier.withColumn("fetcher", F.pmod(F.xxhash64(F.col("host")), F.lit(N_FETCHERS)).cast("int"))
         .withColumn("host_seq", seq)
         .withColumn(
             "fetch_epoch",
             (
-                F.lit(base_epoch)
+                F.lit(BASE_EPOCH)
                 + (F.col("host_seq") - 1).cast("bigint") * F.col("crawl_delay").cast("bigint")
             ).cast("bigint"),
         )
@@ -306,29 +307,31 @@ def _parse_level(frontier: DataFrame) -> DataFrame:
     return frontier.mapInPandas(op, SITEMAP_TREE_SCHEMA)
 
 
-def expand_sitemap_tree(files: DataFrame, max_depth: int = 3) -> DataFrame:
+SITEMAP_DEPTH = 2  # the sitemap levels expand_sitemap_tree follows
+
+
+def expand_sitemap_tree(files: DataFrame) -> DataFrame:
     """Recursive sitemap discovery over (sitemap_url, sitemap_xml)
     files: parse every root sitemap; entries
     of a sitemapindex are FOLLOWED (equi-join of the child loc back to
     the files table), plain urlset entries are emitted as leaves with
-    their depth. The loop is UNROLLED max_depth times into one
+    their depth. The loop is UNROLLED SITEMAP_DEPTH times into one
     declarative plan — no driver actions, each level is a map-only
     parse + one hash join sized by the index entries (sitemap files
     are ~50k-url shards; the fan-out is bounded by the files table,
     so at 100 TB the whole tree walk is a few joins over a sitemap
     table that is ~10^-4 of the corpus). Dangling child references
     drop out at the join (a real crawl treats them as fetch failures);
-    index entries still unresolved at max_depth are dropped — raise
-    max_depth for deeper trees (real-world trees are depth ≤ 2; cycles
-    would duplicate leaves up to max_depth, as in a real crawler's
-    bounded frontier)."""
+    index entries still unresolved at SITEMAP_DEPTH are dropped
+    (real-world trees are depth ≤ 2; cycles would duplicate leaves up
+    to SITEMAP_DEPTH, as in a real crawler's bounded frontier)."""
     frontier = files.select(
         F.col("sitemap_url").alias("root_url"),
         F.col("sitemap_xml").alias("_xml"),
         F.lit(0).alias("depth"),
     )
     leaves = None
-    for _ in range(max_depth):
+    for _ in range(SITEMAP_DEPTH):
         entries = _parse_level(frontier)
         level_leaves = entries.filter(~F.col("is_index")).drop("is_index")
         leaves = level_leaves if leaves is None else leaves.unionByName(level_leaves)

@@ -22,16 +22,17 @@ RATES = {"en": 50, "de": 30, "fr": 30}
 RATE_OTHER = 10
 
 
-def _hash_pct(col):
-    """Deterministic uniform [0, 100) bucket from the id — portable to
+def _hash_pct():
+    """Deterministic uniform [0, 100) bucket from doc_id — portable to
     DuckDB as CAST(concat('0x', substr(md5(...),1,14)) AS BIGINT) % 100."""
     return F.conv(
-        F.substring(F.md5(col.cast("string")), 1, 14), 16, 10
+        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 14), 16, 10
     ).cast("bigint") % 100
 
 
-def sql_hash_pct(expr: str) -> str:
-    return f"(CAST(concat('0x', substr(md5(CAST({expr} AS VARCHAR)), 1, 14)) AS BIGINT) % 100)"
+def sql_hash_pct() -> str:
+    """DuckDB twin of _hash_pct over doc_id."""
+    return "(CAST(concat('0x', substr(md5(CAST(doc_id AS VARCHAR)), 1, 14)) AS BIGINT) % 100)"
 
 
 def _rate_col():
@@ -51,7 +52,7 @@ def sql_rate() -> str:
 def stratified_sample(docs: DataFrame) -> DataFrame:
     """Rows kept iff hash_pct(doc_id) < rate(lang). Pure Column exprs —
     the filter pushes to the scan, no shuffle, no state."""
-    h = _hash_pct(F.col("doc_id"))
+    h = _hash_pct()
     return (
         docs.withColumn("h_pct", h)
         .filter(F.col("h_pct") < _rate_col())
@@ -61,7 +62,7 @@ def stratified_sample(docs: DataFrame) -> DataFrame:
 
 def sample_profile(docs: DataFrame) -> DataFrame:
     """Per-lang mixing report: total, sampled, realized rate."""
-    h = _hash_pct(F.col("doc_id"))
+    h = _hash_pct()
     kept = (h < _rate_col()).cast("int")
     return docs.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_total"),
@@ -71,7 +72,7 @@ def sample_profile(docs: DataFrame) -> DataFrame:
 
 
 def sql_stratified_sample() -> str:
-    h = sql_hash_pct("doc_id")
+    h = sql_hash_pct()
     return f"""
       SELECT doc_id, lang, {h} AS h_pct
       FROM documents
@@ -80,7 +81,7 @@ def sql_stratified_sample() -> str:
 
 
 def sql_sample_profile() -> str:
-    h = sql_hash_pct("doc_id")
+    h = sql_hash_pct()
     return f"""
       SELECT lang, count(*) AS n_total,
              CAST(sum(CASE WHEN {h} < {sql_rate()} THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled,
@@ -89,10 +90,13 @@ def sql_sample_profile() -> str:
     """
 
 
-def host_quota(pages: DataFrame, per_host: int = 3) -> DataFrame:
+PER_HOST = 3  # host_quota's cap
+
+
+def host_quota(pages: DataFrame) -> DataFrame:
     """Per-host document cap — the anti-mega-host mixing primitive: no
-    single host may contribute more than `per_host` docs to the
-    training mix. Deterministic: keeps the `per_host` LOWEST doc_id
+    single host may contribute more than PER_HOST docs to the
+    training mix. Deterministic: keeps the PER_HOST LOWEST doc_id
     values per host.
 
     100 TB shape: a rank-filtered window over (host), which Spark
@@ -103,7 +107,7 @@ def host_quota(pages: DataFrame, per_host: int = 3) -> DataFrame:
     w = Window.partitionBy("host").orderBy(F.col("doc_id").asc())
     return (
         pages.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= per_host)
+        .filter(F.col("_rn") <= PER_HOST)
         .drop("_rn")
     )
 

@@ -28,70 +28,64 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from .dedup import _P, _tok_hash
 
+K = 64  # the hashes a group's sketch keeps
 
-def kmv_distinct(df: DataFrame, group_col: str, value_col: str,
-                 k: int = 64) -> DataFrame:
-    """Per-group distinct-count estimate: (group, n_exact, n_mins,
-    kmv_estimate). n_exact (the true distinct count) is included for
-    the accuracy contract; a production run would drop it and keep
-    only the sketch columns."""
-    h = (
-        df.select(F.col(group_col), _tok_hash(F.col(value_col)).alias("h"))
-        .distinct()
-    )
-    w = Window.partitionBy(group_col).orderBy("h")
+
+def kmv_distinct(df: DataFrame) -> DataFrame:
+    """Per-lang distinct-count estimate of the tok values: (lang,
+    n_exact, n_mins, kmv_estimate). n_exact (the true distinct count)
+    is included for the accuracy contract; a production run would drop
+    it and keep only the sketch columns."""
+    h = df.select("lang", _tok_hash(F.col("tok")).alias("h")).distinct()
+    w = Window.partitionBy("lang").orderBy("h")
     ranked = h.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") <= k
+        F.col("rk") <= K
     )
-    sketch = ranked.groupBy(group_col).agg(
+    sketch = ranked.groupBy("lang").agg(
         F.count(F.lit(1)).alias("n_mins"), F.max("h").alias("hk")
     )
-    exact = df.groupBy(group_col).agg(
-        F.countDistinct(value_col).alias("n_exact")
-    )
+    exact = df.groupBy("lang").agg(F.countDistinct("tok").alias("n_exact"))
     est = F.when(
-        F.col("n_mins") < k, F.col("n_mins").cast("double")
+        F.col("n_mins") < K, F.col("n_mins").cast("double")
     ).otherwise(
-        F.lit(float(k - 1)) / ((F.col("hk") + F.lit(1)).cast("double")
+        F.lit(float(K - 1)) / ((F.col("hk") + F.lit(1)).cast("double")
                                / F.lit(float(_P)))
     )
-    return exact.join(sketch, group_col).select(
-        group_col,
+    return exact.join(sketch, "lang").select(
+        "lang",
         "n_exact",
         "n_mins",
         F.round(est, 6).alias("kmv_estimate"),
     )
 
 
-def sql_kmv_distinct(source_sql: str, group_col: str, value_col: str,
-                     k: int = 64) -> str:
-    """DuckDB twin over `source_sql` (a query yielding the same
-    (group, value) rows)."""
+def sql_kmv_distinct() -> str:
+    """DuckDB twin over the documents' (lang, space-split token) rows."""
     from .dedup import SQL_TOK_HASH
 
-    vh = SQL_TOK_HASH.format(s=value_col)
+    vh = SQL_TOK_HASH.format(s="tok")
     return f"""
-      WITH src AS ({source_sql}),
-      hs AS (SELECT DISTINCT {group_col}, {vh} AS h FROM src),
+      WITH src AS (SELECT lang, unnest(string_split(text, ' ')) AS tok FROM documents),
+      hs AS (SELECT DISTINCT lang, {vh} AS h FROM src),
       ranked AS (
-        SELECT {group_col}, h,
-               row_number() OVER (PARTITION BY {group_col} ORDER BY h) AS rk
+        SELECT lang, h,
+               row_number() OVER (PARTITION BY lang ORDER BY h) AS rk
         FROM hs
       ),
       sk AS (
-        SELECT {group_col}, count(*) AS n_mins, max(h) AS hk
-        FROM ranked WHERE rk <= {k} GROUP BY {group_col}
+        SELECT lang, count(*) AS n_mins, max(h) AS hk
+        FROM ranked WHERE rk <= {K} GROUP BY lang
       ),
       ex AS (
-        SELECT {group_col}, count(DISTINCT {value_col}) AS n_exact
-        FROM src GROUP BY {group_col}
+        SELECT lang, count(DISTINCT tok) AS n_exact
+        FROM src GROUP BY lang
       )
-      SELECT ex.{group_col}, ex.n_exact, sk.n_mins,
-             round(CASE WHEN sk.n_mins < {k}
+      SELECT ex.lang, ex.n_exact, sk.n_mins,
+             round(CASE WHEN sk.n_mins < {K}
                         THEN CAST(sk.n_mins AS DOUBLE)
-                        ELSE {float(k - 1)!r}
+                        ELSE {float(K - 1)!r}
                              / ((CAST(sk.hk AS DOUBLE) + 1e0)
                                 / {float(_P)!r})
                    END, 6) AS kmv_estimate
-      FROM ex JOIN sk USING ({group_col})
+      FROM ex JOIN sk USING (lang)
     """

@@ -13,7 +13,7 @@ ring-ball explode:
     (pandas.merge_asof semantics) and works at any left/right ratio.
   - range_join: bounded bucket-explode + hash equi-join + exact
     refine — identical shape to the hex-ring kNN. The explode factor
-    is ceil(span / bucket_width) + 1 per range, so the candidate
+    is ceil(span / BUCKET_WIDTH) + 1 per range, so the candidate
     stream is O(rows + ranges x spans/width), not O(rows x ranges).
 """
 
@@ -22,14 +22,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 
-def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
+def asof_join(left: DataFrame, right: DataFrame) -> DataFrame:
     """Backward as-of join: for every left row, attach the right row
-    with the greatest ts <= left.ts for the same `on` key (ties on ts
+    with the greatest ts <= left.ts for the same user_id (ties on ts
     broken by greatest right id; no match → nulls).
 
     Plan shape: union the two sides with a side tag, then ONE window
@@ -45,17 +40,17 @@ def asof_join(
     """
     rid_t = right.schema["event_id"].dataType.simpleString()
     lid_t = left.schema["event_id"].dataType.simpleString()
-    ts_t = right.schema[ts_col].dataType.simpleString()
+    ts_t = right.schema["ts"].dataType.simpleString()
     rval_t = right.schema["value"].dataType.simpleString()
     lval_t = left.schema["value"].dataType.simpleString()
     r_payload = F.struct(
-        F.col(ts_col).alias("r_ts"),
+        F.col("ts").alias("r_ts"),
         F.col("event_id").alias("r_id"),
         F.col("value").alias("r_value"),
     )
     r = right.select(
-        F.col(on),
-        F.col(ts_col),
+        F.col("user_id"),
+        F.col("ts"),
         F.lit(0).alias("_side"),
         F.col("event_id").alias("_rid"),
         r_payload.alias("_r"),
@@ -64,8 +59,8 @@ def asof_join(
     )
     null_r = F.lit(None).cast(f"struct<r_ts:{ts_t},r_id:{rid_t},r_value:{rval_t}>")
     l = left.select(
-        F.col(on),
-        F.col(ts_col),
+        F.col("user_id"),
+        F.col("ts"),
         F.lit(1).alias("_side"),
         F.lit(None).cast(rid_t).alias("_rid"),
         null_r.alias("_r"),
@@ -74,15 +69,15 @@ def asof_join(
     )
     u = r.unionByName(l)
     w = (
-        W.partitionBy(on)
-        .orderBy(F.col(ts_col).asc(), F.col("_side").asc(), F.col("_rid").asc())
+        W.partitionBy("user_id")
+        .orderBy(F.col("ts").asc(), F.col("_side").asc(), F.col("_rid").asc())
         .rowsBetween(W.unboundedPreceding, W.currentRow)
     )
     carried = u.withColumn("_match", F.last("_r", ignorenulls=True).over(w))
     return carried.filter(F.col("_side") == 1).select(
         F.col("_lid").alias("event_id"),
-        F.col(on),
-        F.col(ts_col),
+        F.col("user_id"),
+        F.col("ts"),
         F.col("_lval").alias("value"),
         F.col("_match.r_id").alias("r_id"),
         F.col("_match.r_ts").alias("r_ts"),
@@ -90,20 +85,19 @@ def asof_join(
     )
 
 
-def range_join(
-    rows: DataFrame,
-    ranges: DataFrame,
-    bucket_width: float = 5.0,
-) -> DataFrame:
+BUCKET_WIDTH = 10.0  # range_join's bucket width, in value units
+
+
+def range_join(rows: DataFrame, ranges: DataFrame) -> DataFrame:
     """Interval join: rows.value in [lo, hi) per ranges.range_id — as a
     hash equi-join on a bounded bucket explode, never a nested-loop theta
-    join. Each range explodes to the buckets it covers (bounded by
-    span/width); each row computes its single bucket; the equi-join on
-    bucket produces the candidate stream, and the exact [lo, hi)
-    predicate refines it. Overlapping ranges are supported (a row can
+    join. Each range explodes to the BUCKET_WIDTH-wide buckets it
+    covers (bounded by span/width); each row computes its single
+    bucket; the equi-join on bucket produces the candidate stream, and
+    the exact [lo, hi) predicate refines it. Overlapping ranges are supported (a row can
     match many ranges). Small `ranges` broadcast; at 10^9 ranges the
     same plan degrades gracefully to a shuffled equi-join on bucket."""
-    w = float(bucket_width)
+    w = BUCKET_WIDTH
     exploded = ranges.select(
         "range_id",
         "lo",

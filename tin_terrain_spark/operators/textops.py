@@ -643,12 +643,12 @@ BP_MIN_DOCS = 3
 BP_MIN_FRAC = 0.5
 
 
-def strip_boilerplate_lines(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """CCNet-style frequency boilerplate removal: a LINE that appears
-    in ≥ BP_MIN_DOCS documents AND ≥ BP_MIN_FRAC of a host's documents
-    is template chrome (nav, copyright footers) —
-    strip it from every doc and reassemble the remaining lines in
-    order. Plan: one posexplode, one (host, line) agg + one host agg
+def strip_boilerplate_lines(docs: DataFrame) -> DataFrame:
+    """CCNet-style frequency boilerplate removal over (host, doc_id,
+    text): a LINE that appears in ≥ BP_MIN_DOCS documents AND ≥
+    BP_MIN_FRAC of a host's documents is template chrome (nav,
+    copyright footers) — strip it from every doc and reassemble the
+    remaining lines in order. Plan: one posexplode, one (host, line) agg + one host agg
     (both map-side combinable — a line's count collapses per
     partition before the shuffle), one left anti-style join back, one
     per-doc ordered reassembly (collect_list of (pos, line) structs +
@@ -657,7 +657,7 @@ def strip_boilerplate_lines(docs: DataFrame, text_col: str = "text") -> DataFram
     lines = docs.select(
         "host",
         "doc_id",
-        F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
+        F.posexplode(F.split(F.col("text"), "\n")).alias("pos", "line"),
     )
     group_sizes = docs.groupBy("host").agg(
         F.count_distinct(F.col("doc_id")).alias("_n_docs")

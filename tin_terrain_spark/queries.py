@@ -121,7 +121,7 @@ def _points_sql(zoom: int = ZOOM) -> str:
     return f"""
       SELECT doc_id, lang,
              {x} AS x, {y} AS y,
-             {GX.hash_z_sql("doc_id")} AS z_h,
+             {GX.hash_z_sql()} AS z_h,
              {GX.tile_sql(x, zoom)} AS tile_x,
              {GX.tile_sql(y, zoom)} AS tile_y,
              {GX.cell_sql(x, zoom, GRID_BITS)} AS cell_x,

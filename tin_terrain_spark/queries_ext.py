@@ -15,6 +15,7 @@ from .operators import textops as T
 from .operators import urlops as U
 from .operators.geocode import geocode_points
 from .operators.multimodal import FEATURE_DIM, FRAME_DIM, FRAME_EVERY
+from .operators.sketches import kmv_distinct, sql_kmv_distinct
 from .queries import GRID_BITS, ZOOM, _docs, _points_sql
 
 
@@ -97,7 +98,7 @@ def q_knn_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = pts.filter(F.col("doc_id") < 8).select(
         F.col("doc_id").alias("q_id"), "x", "y"
     )
-    return J.knn_hex(pts.filter(F.col("doc_id") >= 8), queries, HEX_SIZE, k=5)
+    return J.knn_hex(pts.filter(F.col("doc_id") >= 8), queries, HEX_SIZE)
 
 
 def q_hex_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -131,10 +132,7 @@ def q_h3_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .functions import h3pack as H3
 
     pts = geocode_points(_docs(spark, sf_dir, spread="auto"), zoom=ZOOM, grid_bits=GRID_BITS, with_dem_z=False)
-    # res 7 spans ~823k cells (radius ~510) around the origin — the
-    # hex grid at HEX_SIZE reaches ~±150; fewer walk steps keep the
-    # staged plan small
-    packed = H3.with_h3_id(pts.select("doc_id", "x", "y"), HEX_SIZE, res=7)
+    packed = H3.with_h3_id(pts.select("doc_id", "x", "y"), HEX_SIZE)
     return packed.groupBy("h3_id").agg(
         F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("first_doc")
     )
@@ -145,7 +143,7 @@ def _sql_h3_cells() -> str:
     from .functions import hexgrid as HG
 
     inner = HG.hex_cell_subquery_sql(f"SELECT doc_id, x, y FROM ({_points_sql()})", HEX_SIZE)
-    packed = H3.h3_id_subquery_sql(inner, res=7)
+    packed = H3.h3_id_subquery_sql(inner)
     return f"""
       SELECT h3_id, count(*) AS n_docs, min(doc_id) AS first_doc
       FROM ({packed})
@@ -436,7 +434,6 @@ def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = asof_join(
         ev.filter(F.col("event_type") == "purchase"),
         ev.filter(F.col("event_type") == "view"),
-        on="user_id", ts_col="ts",
     )
     return out.select(
         "event_id", "user_id",
@@ -482,9 +479,7 @@ def q_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.temporal import range_join
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    joined = range_join(
-        ev.select("event_id", "value"), _synth_ranges(spark), bucket_width=10.0
-    )
+    joined = range_join(ev.select("event_id", "value"), _synth_ranges(spark))
     return joined.groupBy("range_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 6).alias("sum_value"),
@@ -759,7 +754,7 @@ def q_h3_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cells = q_h3_cells(spark, sf_dir)
     return (
-        cells.withColumn("h3_parent", F.expr(H3.h3_parent_expr(7, 4, "h3_id")))
+        cells.withColumn("h3_parent", F.expr(H3.h3_parent_expr()))
         .groupBy("h3_parent")
         .agg(
             F.sum("n_docs").alias("n_docs"),
@@ -772,7 +767,7 @@ def q_h3_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _sql_h3_rollup() -> str:
     from .functions import h3pack as H3
 
-    parent = H3.h3_parent_expr(7, 4, "h3_id", dialect="duckdb")
+    parent = H3.h3_parent_expr(dialect="duckdb")
     return f"""
       SELECT {parent} AS h3_parent,
              CAST(sum(n_docs) AS BIGINT) AS n_docs,
@@ -787,19 +782,19 @@ def _sql_h3_rollup() -> str:
 # (`near_dup_pairs` itself and `dup_clusters`): rebuilding it costs
 # ~1 s of py4j/analysis before any data moves, and re-executing it
 # costs the whole LSH pipeline again. Compute it ONCE per
-# (session, sf_dir, threshold) and eagerly localCheckpoint — the
-# checkpoint truncates the LSH lineage so every consumer (incl. the
-# CC loop's per-round plans) analyzes a flat scan, not the subtree.
+# (session, sf_dir), at near_dup_pairs' default threshold 0.5, and
+# eagerly localCheckpoint — the checkpoint truncates the LSH lineage
+# so every consumer (incl. the CC loop's per-round plans) analyzes a
+# flat scan, not the subtree.
 # Keyed by applicationId (a fresh session never reuses a stale entry).
 _PAIRS_CACHE: dict = {}
 
 
-def _shared_near_dup_pairs(spark: SparkSession, sf_dir: str,
-                           threshold: float = 0.5) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, threshold)
+def _shared_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    key = (spark.sparkContext.applicationId, sf_dir)
     df = _PAIRS_CACHE.get(key)
     if df is None:
-        df = D.near_dup_pairs(_docs(spark, sf_dir), threshold).localCheckpoint()
+        df = D.near_dup_pairs(_docs(spark, sf_dir)).localCheckpoint()
         _PAIRS_CACHE[key] = df
     return df
 
@@ -808,7 +803,7 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the near-dup graph (cluster ids +
     sizes) — Spark iterative min-label propagation vs a DuckDB
     recursive-CTE transitive closure."""
-    pairs = _shared_near_dup_pairs(spark, sf_dir, 0.5).select("doc_a", "doc_b")
+    pairs = _shared_near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
     return D.connected_components(pairs)
 
 
@@ -834,10 +829,9 @@ def q_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     `dup_clusters` clusters WITHOUT re-running LSH, the production
     shape); later calls return a fresh plan so the bench's
     every-run-is-a-full-execution contract holds for THIS line."""
-    key = (spark.sparkContext.applicationId, sf_dir, 0.5)
-    if key not in _PAIRS_CACHE:
-        return _shared_near_dup_pairs(spark, sf_dir, 0.5)
-    return D.near_dup_pairs(_docs(spark, sf_dir), threshold=0.5)
+    if (spark.sparkContext.applicationId, sf_dir) not in _PAIRS_CACHE:
+        return _shared_near_dup_pairs(spark, sf_dir)
+    return D.near_dup_pairs(_docs(spark, sf_dir))
 
 
 def _sql_near_dup_pairs() -> str:
@@ -1106,7 +1100,7 @@ def q_dedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     and keep trivially). One left equi-join of the corpus against the
     (small) cluster table — scales to any corpus size."""
     docs = _docs(spark, sf_dir, spread=False).select("doc_id")
-    pairs = _shared_near_dup_pairs(spark, sf_dir, 0.5).select("doc_a", "doc_b")
+    pairs = _shared_near_dup_pairs(spark, sf_dir).select("doc_a", "doc_b")
     cc = D.connected_components(pairs).select("doc_id", "cluster_id")
     cid = F.coalesce(F.col("cluster_id"), F.col("doc_id"))
     return docs.join(cc, "doc_id", "left").select(
@@ -1395,25 +1389,14 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-language distinct-token estimate next to the exact count.
     Unlike HLL, the fixed-hash KMV sketch is value-comparable across
     engines, so the DuckDB oracle recomputes the sketch itself."""
-    from .operators.sketches import kmv_distinct
-
     toks = _docs(spark, sf_dir, spread="auto").select(
         "lang", F.explode(F.split(F.col("text"), " ")).alias("tok")
     )
-    return kmv_distinct(toks, "lang", "tok", k=64)
-
-
-def _sql_kmv_distinct() -> str:
-    from .operators.sketches import sql_kmv_distinct
-
-    return sql_kmv_distinct(
-        "SELECT lang, unnest(string_split(text, ' ')) AS tok FROM documents",
-        "lang", "tok", k=64,
-    )
+    return kmv_distinct(toks)
 
 
 QUERIES_EXT["kmv_distinct"] = q_kmv_distinct
-ORACLES_EXT["kmv_distinct"] = _sql_kmv_distinct()
+ORACLES_EXT["kmv_distinct"] = sql_kmv_distinct()
 
 
 def q_span_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1676,7 +1659,7 @@ def q_host_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.sampling import host_quota
 
     pages = U.with_host(U.synth_urls(_docs(spark, sf_dir, spread=False)))
-    kept = host_quota(pages, per_host=3)
+    kept = host_quota(pages)
     return kept.groupBy("host").agg(
         F.count(F.lit(1)).cast("int").alias("n_kept"),
         F.min("doc_id").alias("first_doc"),
@@ -1685,6 +1668,7 @@ def q_host_quota(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_host_quota() -> str:
+    from .operators.sampling import PER_HOST
     from .operators.urlops import N_HOSTS
 
     return f"""
@@ -1701,7 +1685,7 @@ def _sql_host_quota() -> str:
       )
       SELECT host, CAST(count(*) AS INT) AS n_kept,
              min(doc_id) AS first_doc, max(doc_id) AS last_doc
-      FROM ranked WHERE rn <= 3 GROUP BY host
+      FROM ranked WHERE rn <= {PER_HOST} GROUP BY host
     """
 
 
@@ -1739,8 +1723,8 @@ def q_robots_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("robots_txt").isNotNull())
         .distinct()
     )
-    rules = R.robots_rules(robots, agent="tincrawler/1.0")
-    out = R.robots_filter(pages.drop("_v"), rules, path_col="path")
+    rules = R.robots_rules(robots)
+    out = R.robots_filter(pages.drop("_v"), rules)
     return out.select("doc_id", "host", "allowed")
 
 
@@ -2053,7 +2037,7 @@ def q_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
         )  # host-constant by construction (host is keyed on doc_id % N_HOSTS)
         .withColumn("priority", F.col("doc_id") % 10)
     )
-    plan = R.frontier_schedule(fr, n_fetchers=64, base_epoch=1767225600)
+    plan = R.frontier_schedule(fr)
     return (
         plan.groupBy("host")
         .agg(
@@ -2075,6 +2059,7 @@ def q_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_frontier() -> str:
+    from .operators.robots import BASE_EPOCH
     from .operators.urlops import N_HOSTS
 
     return f"""
@@ -2094,8 +2079,8 @@ def _sql_frontier() -> str:
         FROM fr
       )
       SELECT host, count(*) AS n_urls,
-             CAST(1767225600 AS BIGINT) AS first_epoch,
-             CAST(1767225600 + (count(*) - 1) * min(delay) AS BIGINT)
+             CAST({BASE_EPOCH} AS BIGINT) AS first_epoch,
+             CAST({BASE_EPOCH} + (count(*) - 1) * min(delay) AS BIGINT)
                AS last_epoch,
              TRUE AS one_fetcher,
              min(CASE WHEN rn = 1 THEN url END) AS top_url
@@ -2127,10 +2112,9 @@ def q_cdx_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("html", F.encode(F.col("text"), "UTF-8"))
     )
-    # persist: the archive is a STORED table in deployment (index
-    # build reads it once, fetches read spans later); without this the
-    # synthetic pack subtree would execute once per consumer
-    files = W.synth_warc_files(pages, gzip_mode="alternate").persist()
+    # the index build and the fetch both read the archive; in deployment
+    # it is a stored table, here the plan packs it for each of them
+    files = W.synth_warc_files(pages, gzip_mode="alternate")
     idx = W.warc_cdx(files)
     wanted = idx.filter(
         F.regexp_extract(F.col("url"), "/doc/([0-9]+)$", 1).cast("bigint") % 7
@@ -2219,7 +2203,7 @@ def q_sitemap_tree(spark: SparkSession, sf_dir: str) -> DataFrame:
     # walk's initial frontier AND by every level's child join with no
     # Catalyst subtree reuse — persist it for the call
     files = children.unionByName(roots)
-    leaves = R.expand_sitemap_tree(files, max_depth=2)
+    leaves = R.expand_sitemap_tree(files)
     # the shard files are roots too (they ARE in the files table);
     # keep only the walk that started at the host's index root
     return leaves.filter(F.col("root_url").endswith("/sitemap.xml"))
@@ -2306,7 +2290,7 @@ def q_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
         _docs(spark, sf_dir)
         .withColumn("host", grp)
         .withColumn(
-            "full_text",
+            "text",
             F.concat(
                 F.lit("Home | About | Contact\n"),
                 F.col("text"),
@@ -2315,7 +2299,7 @@ def q_boilerplate_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
     )
-    return T.strip_boilerplate_lines(aug, text_col="full_text")
+    return T.strip_boilerplate_lines(aug)
 
 
 def _sql_boilerplate_lines() -> str:

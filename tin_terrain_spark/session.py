@@ -451,7 +451,9 @@ def get_spark(
     to ~4 CPU-ms (no zip directory re-read, no full gc walk per task);
     the repo root is set as the executors' PYTHONPATH so that the daemon
     can import it, also in a JVM that spark-submit started. The JVM runs
-    with ``jvm_options(<driver memory>)`` and its exchange and
+    with ``jvm_options(<driver memory>)``, the driver memory being the
+    caller's ``spark.driver.memory`` in ``extra_conf``, else
+    ``SPARK_DRIVER_MEM``, else 12g, and its exchange and
     result-query-stage thread pools capped at ``EXCHANGE_THREADS``, and
     it and its Python workers with at most ``MALLOC_ARENA_MAX`` malloc
     arenas (a value already in the environment wins). A JVM that this
@@ -467,7 +469,10 @@ def get_spark(
     # workers inherit it, the driver's own Python has already started
     os.environ.setdefault("MALLOC_ARENA_MAX", MALLOC_ARENA_MAX)
 
-    driver_memory = os.environ.get("SPARK_DRIVER_MEM", "12g")
+    # the heap the JVM gets: a caller's spark.driver.memory wins (it is
+    # applied last, below), and the flags are sized for that heap
+    driver_memory = ((extra_conf or {}).get("spark.driver.memory")
+                     or os.environ.get("SPARK_DRIVER_MEM", "12g"))
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     b = (

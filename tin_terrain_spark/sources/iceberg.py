@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 TILE_KEY = ("zoom", "tile_x", "tile_y")
-TILES_TABLE = "lake.web.tiles"  # the Iceberg table the tile sink merges into
+CATALOG = "lake"  # the Iceberg catalog iceberg_session_confs configures
+TILES_TABLE = f"{CATALOG}.web.tiles"  # the Iceberg table the tile sink merges into
 
 
 class IcebergUnavailable(RuntimeError):
@@ -60,20 +61,20 @@ def _require(spark: SparkSession) -> None:
         )
 
 
-def iceberg_session_confs(catalog: str = "lake", warehouse: str = "s3://bucket/wh") -> dict:
+def iceberg_session_confs(warehouse: str = "s3://bucket/wh") -> dict:
     """The session confs a cluster launcher should set (documented here
-    so the launch path is code, not tribal knowledge).
+    so the launch path is code, not tribal knowledge) for CATALOG, the
+    catalog of TILES_TABLE.
 
     Kept without a shipped caller: a deployment setting for the
     cluster launcher, checked by tests/test_sources_iceberg.py.
 
-    Test-only parameters: catalog, warehouse — deployment settings the
-    cluster launcher chooses; tests/test_sources_iceberg.py passes
-    them."""
+    Test-only parameters: warehouse — a deployment setting the cluster
+    launcher chooses; tests/test_sources_iceberg.py passes it."""
     return {
-        f"spark.sql.catalog.{catalog}": "org.apache.iceberg.spark.SparkCatalog",
-        f"spark.sql.catalog.{catalog}.type": "hadoop",
-        f"spark.sql.catalog.{catalog}.warehouse": warehouse,
+        f"spark.sql.catalog.{CATALOG}": "org.apache.iceberg.spark.SparkCatalog",
+        f"spark.sql.catalog.{CATALOG}.type": "hadoop",
+        f"spark.sql.catalog.{CATALOG}.warehouse": warehouse,
         # storage-partitioned joins between bucket(url) tables
         "spark.sql.sources.v2.bucketing.enabled": "true",
         "spark.sql.extensions": (
