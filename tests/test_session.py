@@ -18,6 +18,11 @@ The class-data archive runs its whole life in subprocess drivers that
 share one cache (`TMPDIR`): the first session records, the second
 promotes and maps the archive (read back in `/proc/<jvm>/maps`), and a
 truncated or unmappable archive never fails a session.
+
+SQL kernels and RDD-path Python share one Python worker pool: a
+subprocess driver runs both kinds of job and counts the worker daemons
+among the JVM's children. Task errors still name the user's exception,
+with pyspark's own frames cut from the traceback.
 """
 
 from __future__ import annotations
@@ -332,3 +337,74 @@ def test_scaling_legs_run_the_same_jvm(archive, tmp_path, monkeypatch):
     assert _archive_flags(facts) == [f"-XX:SharedArchiveFile={archive['published']}"]
     assert archive["published"] in facts["archives"], facts["archives"]
     assert facts["notes"] == []
+
+
+POOL_DRIVER = textwrap.dedent("""
+    import json, os, sys
+    sys.path.insert(0, os.environ["TTS_REPO"])
+    from pyspark.sql import functions as F
+    from tin_terrain_spark.session import get_spark
+
+    spark = get_spark("session_pool", cores=2)
+    facts = {}
+    # the SQL runners (Arrow and pickled UDFs) and the RDD path
+    df = spark.range(0, 8, 1, 2)
+    facts["arrow"] = df.mapInArrow(lambda it: it, "id long").count()
+    plus = F.pandas_udf(lambda s: s + 1, "long")
+    facts["pandas"] = sum(r[0] for r in df.select(plus("id")).collect())
+    facts["udf"] = sum(r[0] for r in df.select(F.udf(lambda x: x + 1, "long")("id")).collect())
+    facts["rows"] = spark.createDataFrame([(1, "a"), (2, "b")], "a int, b string").count()
+    jvm = spark._jvm.java.lang.ProcessHandle.current().pid()
+    facts["children"] = []
+    for task in os.listdir(f"/proc/{jvm}/task"):
+        with open(f"/proc/{jvm}/task/{task}/children") as f:
+            for pid in f.read().split():
+                with open(f"/proc/{pid}/cmdline", "rb") as g:
+                    facts["children"].append(g.read().decode().split("\\0"))
+
+    def boom(batches):
+        for b in batches:
+            1 // 0
+            yield b
+
+    for name, job in (
+        ("rdd_error", lambda: spark.sparkContext.parallelize([1]).map(lambda x: 1 // 0).collect()),
+        ("arrow_error", lambda: spark.range(1).mapInArrow(boom, "id long").collect()),
+    ):
+        try:
+            job()
+        except Exception as e:
+            facts[name] = str(e)
+    print("FACTS", json.dumps(facts))
+    spark.stop()
+""")
+
+
+@pytest.fixture(scope="module")
+def pool(tmp_path_factory):
+    """Facts of one subprocess session that ran a mapInArrow, a pandas_udf,
+    an F.udf and a list-form createDataFrame job, then two failing jobs."""
+    tmp = tmp_path_factory.mktemp("pool")
+    driver = tmp / "driver.py"
+    driver.write_text(POOL_DRIVER)
+    out = subprocess.run([sys.executable, str(driver)], env=_env(), capture_output=True,
+                         text=True, timeout=600, cwd=tmp)
+    return _facts(out)
+
+
+def test_sql_and_rdd_python_share_one_worker_pool(pool):
+    assert (pool["arrow"], pool["pandas"], pool["udf"], pool["rows"]) == (8, 36, 36, 2)
+    daemons = [c for c in pool["children"] if "-m tin_terrain_spark.pyworker" in " ".join(c)]
+    assert len(daemons) == 1, pool["children"]
+
+
+def test_rdd_task_error_names_the_user_exception(pool):
+    assert "ZeroDivisionError" in pool["rdd_error"], pool["rdd_error"]
+    assert "in <lambda>" in pool["rdd_error"], pool["rdd_error"]
+
+
+def test_sql_task_error_keeps_the_simplified_traceback(pool):
+    err = pool["arrow_error"]
+    assert "ZeroDivisionError" in err and "in boom" in err, err
+    # pyspark's own frames are cut: the traceback starts at the user's code
+    assert "pyspark/worker.py" not in err and "pyspark/sql/" not in err, err

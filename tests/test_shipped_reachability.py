@@ -25,10 +25,17 @@ by the called name, without resolving modules, as in the reachability
 walk. A parameter fails when every shipped call gives it one and the
 same literal: passing a parameter its default literal is leaving it
 out, and a defaulted parameter that no shipped call reaches has its
-default as its one value. A non-literal argument, `*args` or `**kwargs`
-counts as a second value. A one-value parameter is a constant: write
-the value where it is used, or as a module constant when an operator
-and its DuckDB twin (`sql_*`) share it.
+default as its one value. A module constant passed by its bare name (an
+upper-case name bound once at module level, in the calling file or
+imported from it with `from ... import`, and not rebound in the calling
+function) is the value it is bound to: the literal, when it is bound to
+one, else the constant itself, so `f(ZOOM)` and `f(3)` pass one value
+where `ZOOM = 3`. Any other non-literal argument, `*args` or `**kwargs`
+counts as a second value. That includes a column expression such as
+`F.col("tok")`: `dedup._tok_hash` and the `sinks._decode_obj` pandas
+UDF take a column by design, as a Spark function does. A one-value
+parameter is a constant: write the value where it is used, or as a
+module constant when an operator and its DuckDB twin (`sql_*`) share it.
 
 A call in tests/ is not a shipped caller. A one-value parameter whose
 other values only tests pass stays only when a test needs them to
@@ -43,12 +50,13 @@ shipped calls give the parameter a second value, when the def loses
 it, when no test passes it another value (Test-only), or when a named
 file is gone or no longer passes it (Frozen-caller).
 
-Pure `ast`, no Spark: about a second, most of it parsing.
+Pure `ast`, no Spark: about three seconds, most of it parsing.
 """
 
 from __future__ import annotations
 
 import ast
+import functools
 import re
 from pathlib import Path
 
@@ -62,6 +70,7 @@ MARK = re.compile(
 )
 TEST_FILE = re.compile(r"\btests/test_\w+\.py\b")
 FROZEN_FILE = re.compile(r"[\w./]+\.py\b")
+CONSTANT = re.compile(r"_?[A-Z][A-Z0-9_]*$")
 DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
 
 
@@ -135,23 +144,115 @@ def test_every_package_def_is_reached_or_marked():
     )
 
 
+@functools.cache
+def _tree(path: Path) -> ast.Module:
+    return ast.parse(path.read_text())
+
+
+@functools.cache
+def _module_constants(path: Path) -> dict[str, tuple[str, str]]:
+    """Each upper-case name bound once at the module level of ``path``,
+    and never through `global`, -> its value: the literal's key when it
+    is bound to a literal, else ("constant", "<file>:<name>")."""
+    tree = _tree(path)
+    bound: dict[str, list] = {}
+    for node in tree.body:
+        if isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            single = len(targets) == 1 and isinstance(targets[0], ast.Name)
+            for t in targets:
+                for n in ast.walk(t):
+                    if isinstance(n, ast.Name):
+                        bound.setdefault(n.id, []).append(node.value if single else None)
+        elif isinstance(node, DEFS):
+            bound.setdefault(node.name, []).append(None)
+        else:
+            for n in ast.walk(node):
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store):
+                    bound.setdefault(n.id, []).append(None)
+                elif isinstance(n, ast.alias):
+                    bound.setdefault((n.asname or n.name).split(".")[0], []).append(None)
+    rebound = {g for n in ast.walk(tree) if isinstance(n, ast.Global) for g in n.names}
+    return {
+        name: _literal(values[0]) or ("constant", f"{path.relative_to(ROOT)}:{name}")
+        for name, values in bound.items()
+        if CONSTANT.match(name) and len(values) == 1 and values[0] is not None
+        and name not in rebound
+    }
+
+
+def _imported_module(path: Path, node: ast.ImportFrom) -> Path | None:
+    """The file an ImportFrom in ``path`` reads from, when it is in the repo."""
+    base = path.parent
+    for _ in range(node.level - 1):
+        base = base.parent
+    if not node.level:
+        base = ROOT
+    mod = base.joinpath(*(node.module or "").split("."))
+    for f in (mod.with_suffix(".py"), mod / "__init__.py"):
+        if f.is_file():
+            return f
+    return None
+
+
+@functools.cache
+def _constants(path: Path) -> dict[str, tuple[str, str]]:
+    """The module constants a bare name in ``path`` can name: its own, and
+    those it imports by name from a repo module."""
+    out = dict(_module_constants(path))
+    for n in ast.walk(_tree(path)):
+        if isinstance(n, ast.ImportFrom) and (src := _imported_module(path, n)):
+            theirs = _module_constants(src)
+            for a in n.names:
+                if a.name in theirs and CONSTANT.match(a.asname or a.name):
+                    out[a.asname or a.name] = theirs[a.name]
+    return out
+
+
+def _local_names(fn) -> set[str]:
+    """Names a def or lambda binds: its parameters and every name stored in
+    its body, nested scopes included (which can only hide a constant)."""
+    a = fn.args
+    params = a.posonlyargs + a.args + a.kwonlyargs + [p for p in (a.vararg, a.kwarg) if p]
+    return {p.arg for p in params} | {
+        n.id for n in ast.walk(fn) if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+    }
+
+
+def _value(node, constants: dict):
+    """An argument's value key: a literal's, or a module constant's by its
+    bare name; None for anything else."""
+    if isinstance(node, ast.Name):
+        return constants.get(node.id)
+    return _literal(node)
+
+
 def _call_sites(paths) -> dict[str, list[tuple[list, dict, bool]]]:
-    """Per called name, each call's (positional args, keyword args by
-    name, whether it passes *args or **kwargs)."""
+    """Per called name, each call's (positional argument values, keyword
+    argument values by name, whether it passes *args or **kwargs); a
+    value is `_value`'s key, None for a non-literal."""
     sites: dict[str, list[tuple[list, dict, bool]]] = {}
+
+    def visit(node, constants):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)):
+            local = _local_names(node)
+            constants = {k: v for k, v in constants.items() if k not in local}
+        if isinstance(node, ast.Call):
+            name = getattr(node.func, "id", None) or getattr(node.func, "attr", None)
+            if name is not None:
+                star = any(isinstance(a, ast.Starred) for a in node.args) or any(
+                    k.arg is None for k in node.keywords
+                )
+                sites.setdefault(name, []).append((
+                    [_value(a, constants) for a in node.args],
+                    {k.arg: _value(k.value, constants) for k in node.keywords if k.arg},
+                    star,
+                ))
+        for child in ast.iter_child_nodes(node):
+            visit(child, constants)
+
     for path in paths:
-        for n in ast.walk(ast.parse(path.read_text())):
-            if not isinstance(n, ast.Call):
-                continue
-            name = getattr(n.func, "id", None) or getattr(n.func, "attr", None)
-            if name is None:
-                continue
-            star = any(isinstance(a, ast.Starred) for a in n.args) or any(
-                k.arg is None for k in n.keywords
-            )
-            sites.setdefault(name, []).append(
-                (n.args, {k.arg: k.value for k in n.keywords if k.arg}, star)
-            )
+        visit(_tree(path), _constants(path))
     return sites
 
 
@@ -160,7 +261,7 @@ def _package_defs():
     each top-level def and method in the package."""
     funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
     for path in sorted(PACKAGE.rglob("*.py")):
-        for node in ast.parse(path.read_text()).body:
+        for node in _tree(path).body:
             if isinstance(node, funcs):
                 yield path, node, node.name, node.name, 0
             elif isinstance(node, ast.ClassDef):
@@ -203,27 +304,27 @@ def _literal(node):
     return type(v).__name__, repr(v)
 
 
-def _omitted(default: ast.expr):
-    """The value a call passes by leaving the parameter out."""
-    return _literal(default) or ("default", ast.unparse(default))
+def _omitted(default: ast.expr | None, constants: dict):
+    """The value a call passes by leaving the parameter out (None when it
+    is required)."""
+    if default is None:
+        return None
+    return _value(default, constants) or ("default", ast.unparse(default))
 
 
-def _values(sites, called: str, arg: str, i, default, implicit: int) -> list:
-    """What each call passes for one parameter: a literal's key, the
-    default's when it leaves the parameter out, and for anything else
-    (a non-literal, *args or **kwargs, a required parameter left out) a
-    fresh object, equal to no other value."""
+def _values(sites, called: str, arg: str, i, omitted, implicit: int) -> list:
+    """What each call passes for one parameter: a literal's or a module
+    constant's key, ``omitted`` when it leaves the parameter out, and for
+    anything else (a non-literal, *args or **kwargs, a required
+    parameter left out) a fresh object, equal to no other value."""
     out = []
     for args, kws, star in sites.get(called, ()):
-        node = kws.get(arg)
-        if node is None and not star and i is not None and i - implicit < len(args):
-            node = args[i - implicit]
-        if node is not None:
-            out.append(_literal(node) or object())
-        elif star or default is None:
-            out.append(object())
+        if arg in kws:
+            out.append(kws[arg] or object())
+        elif not star and i is not None and i - implicit < len(args):
+            out.append(args[i - implicit] or object())
         else:
-            out.append(_omitted(default))
+            out.append(object() if star or omitted is None else omitted)
     return out
 
 
@@ -263,9 +364,10 @@ def one_value_params() -> list[str]:
         params = _params(fn, implicit)
         marks = _marks(fn)
         for arg, (i, default) in params.items():
-            values = _values(shipped, called, arg, i, default, implicit)
-            if not values and default is not None:
-                values = [_omitted(default)]
+            omitted = _omitted(default, _constants(path))
+            values = _values(shipped, called, arg, i, omitted, implicit)
+            if not values and omitted is not None:
+                values = [omitted]
             only = _one_value(values)
             kinds = [k for k, m in marks.items() if arg in m]
             if only is None:
@@ -276,7 +378,7 @@ def one_value_params() -> list[str]:
                     out.append(f"{where}({arg}): marked frozen-caller, but a file its "
                                "line names is missing or no longer passes it")
             elif "Test-only" in kinds:
-                if _one_value(values + _values(tests, called, arg, i, default, implicit)):
+                if _one_value(values + _values(tests, called, arg, i, omitted, implicit)):
                     out.append(f"{where}({arg}): marked test-only, but no test passes "
                                f"another value than {only}")
                 elif not any((ROOT / t).is_file()

@@ -133,6 +133,16 @@ class TestRegisteredDomain:
         plan = registered_domain(df)._jdf.queryExecution().executedPlan().toString()
         assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
+    def test_rules_table_is_a_jvm_relation(self, spark):
+        """The rules table is a local relation, not a Python RDD: over JVM
+        hosts, the query runs no Python task."""
+        from tin_terrain_spark.operators.urlops import registered_domain
+
+        df = spark.sql("VALUES ('www.site7.co.uk'), ('a.www.ck') AS t(host)")
+        plan = registered_domain(df)._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan, plan
+        assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+
 
 def test_strip_boilerplate_lines(spark):
     from tin_terrain_spark.operators.textops import strip_boilerplate_lines

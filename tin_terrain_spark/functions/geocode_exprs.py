@@ -101,14 +101,5 @@ def cell_sql(m_sql: str, zoom: int, grid_bits: int) -> str:
     return tile_sql(m_sql, zoom + grid_bits)
 
 
-def tile_min_sql(t_sql: str, zoom: int) -> str:
-    """tile index → min meters coordinate (TileBounds,
-    MercatorProjection.cpp:76-80 via PixelsToMeters :30-37)."""
-    res = 2.0 * HALF_CIRCUMFERENCE / TILE_SIZE / (1 << zoom)
-    # the trailing `+ 0e0` normalizes IEEE -0.0 to 0.0 so both engines
-    # serialize the tile-corner-at-origin case identically
-    return f"(((({t_sql}) * {dlit(TILE_SIZE)}) * {dlit(res)} - {dlit(HALF_CIRCUMFERENCE)}) + 0e0)"
-
-
 def tile_size_meters(zoom: int) -> float:
     return 2.0 * HALF_CIRCUMFERENCE / (1 << zoom)

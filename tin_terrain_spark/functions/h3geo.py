@@ -278,7 +278,11 @@ def with_face_ijk_cols(df, res: int):
     separate projections — inlining everything into one expression
     would re-embed the 20-struct array once per reference and blow the
     tree up exponentially (measured: the single-projection form never
-    finished analysis)."""
+    finished analysis).
+
+    Test-only parameters: res — tests/test_h3geo.py checks the chain
+    against geo_to_face_ijk at res 2 and 3 (the Class II and Class III
+    frames); the h3_global query uses FACE_RES."""
     from pyspark.sql import functions as F
 
     lat = 2.0 * F.atan(F.exp(F.col("y") / F.lit(EARTH_R_MERC))) - math.pi / 2.0
@@ -401,6 +405,11 @@ def geo_to_h3(lat, lng, res: int) -> np.ndarray:
     so the ids are engine-canonical: structurally library-true (valid
     per isValidCell, pentagons in the library pentagon slots, exact cell
     censuses) but not numerically equal to the real library's ids.
+
+    Test-only parameters: res — tests/test_h3global.py round-trips every
+    cell at res 0-3 and random points at res 5, 9 and 15, and checks
+    parents across resolutions; the h3_global query encodes at
+    H3_GLOBAL_RES.
     """
     from . import h3base
     from .h3pack import pack_h3_np, walk_digits_np

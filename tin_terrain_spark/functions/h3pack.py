@@ -556,7 +556,11 @@ def with_h3_id(df, size: float):
     """DataFrame helper: the axial cells of meter columns x, y
     (hexgrid.with_hex_cell) packed to H3-layout ids at H3_RES with pure
     Column expressions (JVM-side, no UDF; the same generated SQL is the
-    DuckDB oracle twin)."""
+    DuckDB oracle twin).
+
+    Test-only parameters: size — tests/test_spark_integration.py decodes
+    the ids of cells at the zoom-7 tile size, coarser than the queries'
+    HEX_SIZE."""
     from pyspark.sql import functions as F
 
     from . import hexgrid as HG
@@ -587,7 +591,7 @@ def h3_parent_expr(dialect: str = "spark") -> str:
 
 def h3_id_subquery_sql(inner_sql: str) -> str:
     """DuckDB oracle twin of with_h3_id: wraps a subquery that already
-    has hex_q/hex_r (hexgrid.hex_cell_subquery_sql) in a nested-select
+    has hex_q/hex_r (queries_ext._hex_cell_subquery_sql) in a nested-select
     chain materializing each walk stage, then drops the intermediate
     _h3* columns."""
     steps = h3_step_exprs()

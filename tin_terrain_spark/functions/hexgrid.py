@@ -78,19 +78,6 @@ def with_hex_cell(df: DataFrame, size: float, x: str = "x", y: str = "y",
     )
 
 
-def hex_cell_subquery_sql(inner_sql: str, size: float) -> str:
-    """DuckDB oracle twin of with_hex_cell: wraps `inner_sql` so every
-    row gains hex_q/hex_r from its x, y, computed through the SAME
-    staged expressions."""
-    fq, fr = hex_frac_sql("x", "y", size)
-    return f"""
-      SELECT *,
-             {HEX_Q_FROM_FRAC} AS hex_q,
-             {HEX_R_FROM_FRAC} AS hex_r
-      FROM (SELECT *, {fq} AS fq, {fr} AS fr FROM ({inner_sql}))
-    """
-
-
 def hex_ring_guarantee_m(ring: int, size: float) -> float:
     """Euclidean distance below which NOTHING outside hex-ring `ring`
     can lie (see module docstring geometry)."""

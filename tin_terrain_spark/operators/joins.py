@@ -456,7 +456,12 @@ def knn_hex(points: DataFrame, queries: DataFrame, hex_size: float,
     sends queries to the knn_brute branch in
     tests/test_r06_optimizations.py and tests/test_knn_plans.py, and a
     large one (60) forces a 10,981-cell ball in
-    tests/test_spark_integration.py."""
+    tests/test_spark_integration.py.
+
+    Test-only parameters: hex_size — the corpora of
+    tests/test_spark_integration.py, tests/test_r06_optimizations.py and
+    tests/test_knn_plans.py size their hex cells to their own point
+    density."""
     from ..functions import hexgrid as HG
 
     pts = HG.with_hex_cell(points.select("doc_id", "x", "y"), hex_size)

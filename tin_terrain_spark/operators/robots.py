@@ -32,7 +32,11 @@ def parse_robots(text: str, agent: str = "*") -> list[tuple[str, int, bool]]:
     given agent. Group selection: rules under the most specific
     matching User-agent line (longest token that is a substring of
     `agent`, case-insensitive), falling back to '*'. precedence =
-    pattern length (longest wins)."""
+    pattern length (longest wins).
+
+    Test-only parameters: agent — tests/test_robots.py picks a named
+    group by substring and falls back to '*' for other agents; the
+    crawl layer asks for AGENT."""
     groups: list[tuple[list[str], list[tuple[str, bool]]]] = []
     cur_agents: list[str] = []
     cur_rules: list[tuple[str, bool]] = []

@@ -700,7 +700,10 @@ def strip_boilerplate_lines(docs: DataFrame) -> DataFrame:
     )
 
 
-def bpe_merges(docs: DataFrame, k: int = 6) -> DataFrame:
+BPE_MERGES = 6  # merges bpe_encode learns; bpe_merges' default and its DuckDB twin's
+
+
+def bpe_merges(docs: DataFrame, k: int = BPE_MERGES) -> DataFrame:
     """Learn the first k BPE merges over the corpus (byte-pair-encoding
     vocabulary induction — the tokenizer-training step of an LLM data
     pipeline). Words (whitespace tokens) collapse to a (word, freq)
@@ -723,7 +726,10 @@ def bpe_merges(docs: DataFrame, k: int = 6) -> DataFrame:
     cleaner reclaims them once their frames are garbage-collected;
     `unpersist` on a localCheckpoint-ed frame does not release them.
 
-    Returns k rows: (rank, left, right, pair_count)."""
+    Returns k rows: (rank, left, right, pair_count).
+
+    Test-only parameters: k — tests/test_webtext_pipeline.py checks the
+    merges of the classic low/lower/lowest corpus by hand at k=3."""
     merges, _vocab = _bpe_learn(docs, k)
     return merges
 
@@ -802,16 +808,16 @@ def _bpe_learn(docs: DataFrame, k: int):
     return merges, cur
 
 
-def bpe_encode(docs: DataFrame, k: int = 6) -> DataFrame:
-    """Tokenize the corpus with the learned BPE merges: per doc the
+def bpe_encode(docs: DataFrame) -> DataFrame:
+    """Tokenize the corpus with BPE_MERGES learned merges: per doc the
     whitespace-word count and the BPE token count (the number every
     token-budget decision — mix_plan, Chinchilla-style sizing — needs
-    from the REAL tokenizer rather than a whitespace proxy). The k
+    from the REAL tokenizer rather than a whitespace proxy). The
     merges train inside the plan (_bpe_learn); encoding is a hash join
     of the corpus words against the rewritten vocabulary (the
     space-stripped rewritten word IS the surface form — no key
     threading), then one per-doc agg."""
-    _merges, vocab = _bpe_learn(docs, k)
+    _merges, vocab = _bpe_learn(docs, BPE_MERGES)
     tok = vocab.select(
         F.regexp_replace(F.col("word"), " ", "").alias("w"),
         F.size(F.split(F.col("word"), " ")).alias("n_toks"),

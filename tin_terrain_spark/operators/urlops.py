@@ -272,12 +272,16 @@ PSL_RULES: tuple[str, ...] = (
 
 
 def _psl_rules_df(spark):
+    """PSL_RULES as (pattern, nlabels, is_exc), a VALUES relation: the
+    JVM holds it as a local table, so a query that reads it runs no
+    Python task (the list form of createDataFrame is a PythonRDD of
+    pickled rows)."""
     rows = []
     for r in PSL_RULES:
         exc = r.startswith("!")
         pat = r[1:] if exc else r
-        rows.append((pat, pat.count(".") + 1, exc))
-    return spark.createDataFrame(rows, "pattern STRING, nlabels INT, is_exc BOOLEAN")
+        rows.append(f"('{pat}', {pat.count('.') + 1}, {str(exc).upper()})")
+    return spark.sql(f"VALUES {', '.join(rows)} AS t(pattern, nlabels, is_exc)")
 
 
 def registered_domain(hosts: DataFrame) -> DataFrame:

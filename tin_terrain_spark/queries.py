@@ -171,24 +171,34 @@ SQL_TILE_COUNTS = f"""
 """
 
 
+def _tile_min_sql(t_sql: str) -> str:
+    """tile index at ZOOM → min meters coordinate (TileBounds,
+    MercatorProjection.cpp:76-80 via PixelsToMeters :30-37)."""
+    res = 2.0 * GX.HALF_CIRCUMFERENCE / GX.TILE_SIZE / (1 << ZOOM)
+    # the trailing `+ 0e0` normalizes IEEE -0.0 to 0.0 so both engines
+    # serialize the tile-corner-at-origin case identically
+    return (f"(((({t_sql}) * {GX.dlit(GX.TILE_SIZE)}) * {GX.dlit(res)} "
+            f"- {GX.dlit(GX.HALF_CIRCUMFERENCE)}) + 0e0)")
+
+
 def q_tile_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P6 TileBounds: distinct occupied tiles → meters bbox."""
     pts = geocode_points(_docs(spark, sf_dir, spread=False), zoom=ZOOM, grid_bits=GRID_BITS, with_dem_z=False)
     t = pts.select("tile_x", "tile_y").distinct()
     return (
-        t.withColumn("bound_min_x", F.expr(GX.tile_min_sql("tile_x", ZOOM)))
-        .withColumn("bound_min_y", F.expr(GX.tile_min_sql("tile_y", ZOOM)))
-        .withColumn("bound_max_x", F.expr(GX.tile_min_sql("tile_x + 1", ZOOM)))
-        .withColumn("bound_max_y", F.expr(GX.tile_min_sql("tile_y + 1", ZOOM)))
+        t.withColumn("bound_min_x", F.expr(_tile_min_sql("tile_x")))
+        .withColumn("bound_min_y", F.expr(_tile_min_sql("tile_y")))
+        .withColumn("bound_max_x", F.expr(_tile_min_sql("tile_x + 1")))
+        .withColumn("bound_max_y", F.expr(_tile_min_sql("tile_y + 1")))
     )
 
 
 SQL_TILE_BOUNDS = f"""
   SELECT tile_x, tile_y,
-         {GX.tile_min_sql('tile_x', ZOOM)} AS bound_min_x,
-         {GX.tile_min_sql('tile_y', ZOOM)} AS bound_min_y,
-         {GX.tile_min_sql('tile_x + 1', ZOOM)} AS bound_max_x,
-         {GX.tile_min_sql('tile_y + 1', ZOOM)} AS bound_max_y
+         {_tile_min_sql('tile_x')} AS bound_min_x,
+         {_tile_min_sql('tile_y')} AS bound_min_y,
+         {_tile_min_sql('tile_x + 1')} AS bound_max_x,
+         {_tile_min_sql('tile_y + 1')} AS bound_max_y
   FROM (SELECT DISTINCT tile_x, tile_y FROM ({_points_sql()}))
 """
 

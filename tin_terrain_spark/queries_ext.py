@@ -16,6 +16,7 @@ from .operators import urlops as U
 from .operators.geocode import geocode_points
 from .operators.multimodal import FEATURE_DIM, FRAME_DIM, FRAME_EVERY
 from .operators.sketches import kmv_distinct, sql_kmv_distinct
+from .operators.textops import BPE_MERGES
 from .queries import GRID_BITS, ZOOM, _docs, _points_sql
 
 
@@ -90,6 +91,21 @@ def q_knn_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
 HEX_SIZE = GX.tile_size_meters(ZOOM + GRID_BITS)
 
 
+def _hex_cell_subquery_sql(inner_sql: str) -> str:
+    """DuckDB oracle twin of hexgrid.with_hex_cell at HEX_SIZE: wraps
+    `inner_sql` so every row gains hex_q/hex_r from its x, y, computed
+    through the SAME staged expressions."""
+    from .functions import hexgrid as HG
+
+    fq, fr = HG.hex_frac_sql("x", "y", HEX_SIZE)
+    return f"""
+      SELECT *,
+             {HG.HEX_Q_FROM_FRAC} AS hex_q,
+             {HG.HEX_R_FROM_FRAC} AS hex_r
+      FROM (SELECT *, {fq} AS fq, {fr} AS fr FROM ({inner_sql}))
+    """
+
+
 def q_knn_hex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN over H3-style hex-ring expansion (charter surface) — must
     equal q_knn_brute, so the brute SQL is its (fully independent)
@@ -114,9 +130,7 @@ def q_hex_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_hex_cells() -> str:
-    from .functions import hexgrid as HG
-
-    inner = HG.hex_cell_subquery_sql(f"SELECT doc_id, x, y FROM ({_points_sql()})", HEX_SIZE)
+    inner = _hex_cell_subquery_sql(f"SELECT doc_id, x, y FROM ({_points_sql()})")
     return f"""
       SELECT hex_q, hex_r, count(*) AS n_docs, min(doc_id) AS first_doc
       FROM ({inner})
@@ -140,9 +154,8 @@ def q_h3_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _sql_h3_cells() -> str:
     from .functions import h3pack as H3
-    from .functions import hexgrid as HG
 
-    inner = HG.hex_cell_subquery_sql(f"SELECT doc_id, x, y FROM ({_points_sql()})", HEX_SIZE)
+    inner = _hex_cell_subquery_sql(f"SELECT doc_id, x, y FROM ({_points_sql()})")
     packed = H3.h3_id_subquery_sql(inner)
     return f"""
       SELECT h3_id, count(*) AS n_docs, min(doc_id) AS first_doc
@@ -2113,8 +2126,17 @@ def q_cdx_fetch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("html", F.encode(F.col("text"), "UTF-8"))
     )
     # the index build and the fetch both read the archive; in deployment
-    # it is a stored table, here the plan packs it for each of them
-    files = W.synth_warc_files(pages, gzip_mode="alternate")
+    # it is a stored table. Here both read it through one exchange above
+    # the pack, at the join's partition count, which Spark reuses for
+    # the second reader: one collect packs the archive once. The join
+    # would infer `file_id IS NOT NULL` below the exchange of its side
+    # only, and two exchanges that differ are not reused: the filter
+    # (true of every packed file) is put under both.
+    files = (
+        W.synth_warc_files(pages, gzip_mode="alternate")
+        .filter(F.col("file_id").isNotNull())
+        .repartition("file_id")
+    )
     idx = W.warc_cdx(files)
     wanted = idx.filter(
         F.regexp_extract(F.col("url"), "/doc/([0-9]+)$", 1).cast("bigint") % 7
@@ -2444,15 +2466,12 @@ QUERIES_EXT["length_quantiles"] = q_length_quantiles
 ORACLES_EXT["length_quantiles"] = _sql_length_quantiles()
 
 
-BPE_MERGES = 6  # merges learned by the bpe_merges and bpe_encode lines
-
-
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE vocabulary induction (textops.bpe_merges): first BPE_MERGES
     merges learned over the corpus word-frequency table; DuckDB twin
     unrolls the same rounds (argmax by count desc / pair asc, canonical
     leftmost-non-overlap rewrite via list_reduce)."""
-    return T.bpe_merges(_docs(spark, sf_dir, spread=False), k=BPE_MERGES)
+    return T.bpe_merges(_docs(spark, sf_dir, spread=False))
 
 
 def _sql_bpe_merges() -> str:
@@ -2498,7 +2517,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenization (textops.bpe_encode): per-doc word and BPE
     token counts under the BPE_MERGES corpus-learned merges; the DuckDB
     twin re-learns the identical merges (unrolled CTEs) and re-encodes."""
-    return T.bpe_encode(_docs(spark, sf_dir, spread="auto"), k=BPE_MERGES)
+    return T.bpe_encode(_docs(spark, sf_dir, spread="auto"))
 
 
 def _sql_bpe_encode() -> str:

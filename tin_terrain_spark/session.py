@@ -34,6 +34,25 @@ must be importable on the executors when the daemon starts (installed there,
 or on ``spark.executorEnv.PYTHONPATH``), not only through per-task
 ``--py-files``, which reach ``sys.path`` after the daemon has started.
 
+SQL kernels and RDD-path Python share one worker pool. Spark keeps one
+daemon, with its own workers, per (Python executable, worker module,
+daemon module, environment) of a Python function. The SQL runners
+(``mapInArrow``, ``mapInPandas``, ``applyInPandas``, ``pandas_udf``,
+``udf``) add ``SPARK_SIMPLIFIED_TRACEBACK=1`` to a function's
+environment (``spark.sql.execution.pyspark.udf.simplifiedTraceback.enabled``,
+on by default); the RDD path (``rdd.map``, the list form of
+``createDataFrame``) does not. So a session that ran both kinds of
+task held two daemons and two sets of ``cores`` workers. The session
+puts the variable into every function's environment
+(``spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK``): both kinds map to
+one pool, and an RDD task's traceback is simplified as a SQL task's is.
+Measured on a 4-core host, 10 alternating pyramid benchmark pairs
+(seeds 11-20, every run correct, 0 failed ops), medians parent ->
+change: ``peak_rss_mb`` 1189.0 -> 927.3 MB (lower in 10/10), the
+summary's ``rss_parts_mb`` from [151, 3465, 62, 62, 81 x 4, 49 x 4] to
+[151, 3462, 62, 81 x 4]; ``setup_s`` 17.4 -> 16.1 s (9/10; the warm-up
+starts one daemon fewer), ``op_cpu_s`` 8.15 -> 8.16 (3/10).
+
 The last is the JVM itself: ``JVM_OPTIONS`` (the Parallel collector
 instead of G1, a metaspace GC threshold, and JIT compile thresholds
 scaled ×4), ``EXCHANGE_THREADS`` (the cap of Spark's two exchange
@@ -507,6 +526,10 @@ def get_spark(
         # reach sys.path; a JVM started by spark-submit does not inherit
         # the os.environ set above
         .config("spark.executorEnv.PYTHONPATH", repo_root)
+        # one Python worker pool for SQL and RDD-path tasks (module
+        # docstring): the SQL runners add this variable to a function's
+        # environment, and Spark keys its worker pools on that environment
+        .config("spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK", "1")
     )
     # a JVM starts here unless this process has one already; one that
     # spark-submit started (PYSPARK_GATEWAY_PORT) got its flags there
