@@ -27,7 +27,7 @@ from tin_terrain_spark.kernels import native
 from tin_terrain_spark.kernels.codec import decode_qm_tile
 from tin_terrain_spark.kernels.tin import METHODS, generate_tin
 from tin_terrain_spark.operators.meshing import _make_tile_fn, _tile_terrain
-from tin_terrain_spark.kernels.raster import Grid
+from tin_terrain_spark.kernels.raster import Grid, repair_corners
 from tin_terrain_spark.kernels.terra import generate_tin_terra
 from tin_terrain_spark.kernels.zemlya import ZemlyaMesh, generate_tin_zemlya
 
@@ -106,19 +106,14 @@ def test_native_disable_env(monkeypatch):
 
 def test_repair_corners_c_equals_python():
     """The lazy per-center C corner repair must mutate the raster
-    bit-identically to the Python full-plane implementation on every
-    grid class (sparse rasters stress the wide Bresenham search)."""
+    bit-identically to raster.repair_corners on every grid class
+    (sparse rasters stress the wide Bresenham search)."""
     for name, grid, ndv in _grids():
         gp = Grid(grid.z.copy(), grid.xpos, grid.ypos, grid.cellsize, grid.ndv)
         gn = Grid(grid.z.copy(), grid.xpos, grid.ypos, grid.cellsize, grid.ndv)
-        native._repair_corners(gp)
-        lib = native.get_lib()
-        import ctypes
-
+        repair_corners(gp)
         h, w = gn.z.shape
-        lib.tin_repair_corners(
-            native._ptr(gn.z, ctypes.c_double), h, w, float(gn.ndv)
-        )
+        native.get_lib().tin_repair_corners(gn.z.ctypes.data, h, w, float(gn.ndv))
         assert np.array_equal(gp.z, gn.z, equal_nan=True), name
         # repaired corners must also be bit-sign-identical
         for r, c in ((0, 0), (h - 1, 0), (h - 1, w - 1), (0, w - 1)):
@@ -190,45 +185,71 @@ def test_terra_native_result_is_not_overwritten():
     assert all(arr.flags.owndata for arr in (va, fa, vb, fb))
 
 
-def test_terra_native_overflow_restores_corners(monkeypatch):
+@pytest.mark.parametrize("kernel", ["terra", "zemlya"])
+def test_native_overflow_restores_corners(kernel, monkeypatch):
     """A C call that overflows returns None with the raster's corners
-    as they were, so the pure-Python fallback repairs pristine corners
-    (repair is not idempotent) and equals the oracle."""
+    as they were, bit for bit, so the pure-Python fallback repairs
+    pristine corners (repair is not idempotent) and equals the
+    oracle."""
+    native_fn = native.terra_native if kernel == "terra" else native.zemlya_native
+    gen = generate_tin_terra if kernel == "terra" else generate_tin_zemlya
     z = np.full((36, 36), np.nan)
     z[10, 12], z[20, 5] = 7.0, -3.0
     before = z.copy()
     monkeypatch.setattr(native, "_scratch", lambda h, w, cap: native._Scratch(h, w, 1))
     grid = Grid(z)
-    assert native.terra_native(grid, 2.0) is None
-    assert np.array_equal(grid.z, before, equal_nan=True)
-    v, f = generate_tin_terra(grid, 2.0)  # falls back to Python
-    vp, fp = generate_tin_terra(Grid(before.copy()), 2.0, use_native=False)
+    assert native_fn(grid, 2.0) is None
+    assert grid.z.tobytes() == before.tobytes()
+    v, f = gen(grid, 2.0)  # overflows again, then falls back to Python
+    vp, fp = _python_mesh(kernel, Grid(before.copy()))
     assert np.array_equal(v, vp) and np.array_equal(f, fp)
 
 
-@pytest.mark.parametrize("layout", ["float32", "fortran", "strided"])
-def test_terra_native_other_layouts(layout):
-    """Rasters that are not C-contiguous float64 repair in their own
-    arithmetic and mesh a float64 copy: still equal to the oracle."""
+def _dem_with_nodata_corners():
+    """A 20x20 integer-valued DEM (exact in int16 and float32) with
+    no-data (-9999) around every corner, so each repaired corner is a
+    fractional nearest-valid average."""
     rng = np.random.RandomState(4)
-    z = np.full((36, 36), np.nan)
-    idx = rng.choice(36 * 36, 80, replace=False)
-    z.ravel()[idx] = rng.rand(80) * 100
+    z = np.cumsum(np.cumsum(rng.randint(-20, 21, (20, 20)), axis=0), axis=1) + 300
+    z = z.astype(np.float64)
+    z[:3, :3] = z[-3:, :2] = z[-2:, -3:] = z[:2, -2:] = -9999.0
+    z[8:11, 6:9] = -9999.0
+    return z
 
-    def make():
-        if layout == "float32":
-            return z.astype(np.float32)
-        if layout == "fortran":
-            return np.asfortranarray(z)
-        out = np.full((36, 72), np.nan)[:, ::2]
-        out[...] = z
-        return out
 
-    gn, gp = Grid(make(), 1.0, 2.0, 3.0), Grid(make(), 1.0, 2.0, 3.0)
-    vn, fn = generate_tin_terra(gn, 2.0, use_native=True)
-    vp, fp = generate_tin_terra(gp, 2.0, use_native=False)
-    assert np.array_equal(vn, vp) and np.array_equal(fn, fp)
-    assert np.array_equal(gn.z, gp.z, equal_nan=True)
+def _layout(z, layout):
+    if layout == "float32":
+        return z.astype(np.float32)
+    if layout == "int16":
+        return z.astype(np.int16)
+    if layout == "fortran":
+        return np.asfortranarray(z)
+    out = np.full((z.shape[0], 2 * z.shape[1]), np.nan)[:, ::2]  # strided
+    out[...] = z
+    return out
+
+
+@pytest.mark.parametrize("layout", ["float32", "int16", "fortran", "strided"])
+@pytest.mark.parametrize("method", METHODS)
+@pytest.mark.parametrize("backend", ["native", "python"])
+def test_mesh_other_layouts(backend, method, layout, monkeypatch):
+    """A Grid holds its raster as C-contiguous float64 whatever the
+    caller passes: a raster of another dtype or layout repairs its
+    corners and meshes exactly as the float64 raster of the same
+    values does, with the library loaded and unloaded."""
+    if backend == "python":
+        monkeypatch.setattr(native, "get_lib", lambda: None)
+    z = _dem_with_nodata_corners()
+    g = Grid(_layout(z, layout), 1.0, 2.0, 3.0, -9999.0)
+    assert g.z.dtype == np.float64 and g.z.flags.c_contiguous
+    ref = Grid(z.copy(), 1.0, 2.0, 3.0, -9999.0)
+    v, f = generate_tin(g, method, 2.0)
+    vr, fr = generate_tin(ref, method, 2.0)
+    assert np.array_equal(v, vr) and np.array_equal(f, fr)
+    assert g.z.tobytes() == ref.z.tobytes()
+    if method in ("terra", "zemlya"):
+        corners = ref.z[[0, -1, -1, 0], [0, 0, -1, -1]]
+        assert (corners != np.round(corners)).all(), corners
 
 
 # -- the post-mesh half: native.tile_qm_native vs its NumPy oracle ------

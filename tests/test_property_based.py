@@ -184,15 +184,13 @@ def test_clip_native_matches_python_random(seed, n, scale, shift):
 )
 @SET
 def test_repair_corners_native_matches_python_random(seed, size, n_valid):
-    """C corner repair == Python corner repair bit-for-bit on random
+    """C corner repair == raster.repair_corners bit-for-bit on random
     sparse rasters (fuzzes the Bresenham search + subsample plane)."""
     from tin_terrain_spark.kernels import native
-    from tin_terrain_spark.kernels.raster import Grid
+    from tin_terrain_spark.kernels.raster import Grid, repair_corners
 
     if native.get_lib() is None:
         return
-    import ctypes
-
     rng = np.random.RandomState(seed)
     z = np.full((size, size), np.nan)
     if n_valid:
@@ -200,10 +198,8 @@ def test_repair_corners_native_matches_python_random(seed, size, n_valid):
         z.ravel()[idx] = rng.rand(len(idx)) * 100 - 50
     gp = Grid(z.copy())
     gn = Grid(z.copy())
-    native._repair_corners(gp)
-    native.get_lib().tin_repair_corners(
-        native._ptr(gn.z, ctypes.c_double), size, size, float(gn.ndv)
-    )
+    repair_corners(gp)
+    native.get_lib().tin_repair_corners(gn.z.ctypes.data, size, size, float(gn.ndv))
     assert np.array_equal(gp.z, gn.z, equal_nan=True)
 
 

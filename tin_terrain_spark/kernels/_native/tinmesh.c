@@ -741,17 +741,17 @@ static int64_t emit_mesh(Mesh *m, const double *zsrc, const uint8_t *used,
 
 void tin_repair_corners(double *z, int h, int w, double ndv);
 
-/* terra: corner repair (when `repair`), greedy insertion and emission
- * in one call — kernels/native.py:terra_native.
+/* terra: corner repair, greedy insertion and emission in one call —
+ * kernels/native.py:terra_native.
  * z: h*w row-major float64, repaired in place. used (h*w bytes), token
  * and vid (h*w int64 each) are scratch, zeroed here. verts_out holds
  * h*w rows of (x, y, z); faces_out holds cap_faces rows of int64.
  * Returns n_faces (n_vertices in *n_verts_out), or -1 on overflow/oom,
- * in which case a repair done here is undone, so the pure-Python
- * fallback repairs pristine corners (repair is not idempotent). */
+ * in which case the repair is undone, so the pure-Python fallback
+ * repairs pristine corners (repair is not idempotent). */
 int64_t tin_terra_mesh(double *z, int h, int w, double ndv,
                        double max_error, double xpos, double ypos,
-                       double cellsize, int repair, uint8_t *used,
+                       double cellsize, uint8_t *used,
                        int64_t *token, int64_t *vid, double *verts_out,
                        int64_t *faces_out, int64_t cap_faces,
                        int64_t *n_verts_out) {
@@ -759,7 +759,7 @@ int64_t tin_terra_mesh(double *z, int h, int w, double ndv,
                         (size_t)(w - 1)};
     double snap[4];
     for (int i = 0; i < 4; i++) snap[i] = z[corner[i]];
-    if (repair) tin_repair_corners(z, h, w, ndv);
+    tin_repair_corners(z, h, w, ndv);
     memset(used, 0, (size_t)h * w);
     memset(token, 0, (size_t)h * w * sizeof(int64_t));
 
@@ -789,7 +789,7 @@ int64_t tin_terra_mesh(double *z, int h, int w, double ndv,
         nf = emit_mesh(&m, z, used, xpos, ypos, cellsize, vid, verts_out,
                        faces_out, cap_faces, n_verts_out);
     mesh_free(&m);
-    if (nf < 0 && repair)
+    if (nf < 0)
         for (int i = 0; i < 4; i++) z[corner[i]] = snap[i];
     return nf;
 }
@@ -850,12 +850,11 @@ int64_t tin_zemlya_mesh(const double *z, const double *insert_stack,
 
 /* ------------------------------------------------------------------ */
 /* corner repair (kernels/raster.py:_subsample_3x3_full +              */
-/* sample_nearest_valid_avg + kernels/native.py:_repair_corners)       */
+/* sample_nearest_valid_avg + repair_corners)                          */
 /*                                                                     */
-/* The Python path precomputes the whole (h+2, w+2) subsample plane    */
-/* and invalidates it on bit-level corner change; evaluating the SAME  */
-/* per-center arithmetic lazily against the live raster is value-      */
-/* identical in both the reused and recomputed cases (elementwise ops  */
+/* The Python path computes the whole (h+2, w+2) subsample plane for   */
+/* each corner search; evaluating the SAME per-center arithmetic       */
+/* lazily against the live raster is value-identical (elementwise ops  */
 /* have no cross-element interaction) and skips the O(h*w) plane on    */
 /* every tile. Summation orders below mirror np.nansum's sequential    */
 /* reduce over the stacked arrays (lengths 4 and 6: no pairwise).      */
@@ -951,10 +950,10 @@ static double nearest_valid_avg(const double *z, int h, int w, double ndv,
     return s / (double)ns;
 }
 
-/* TerraUtils corner repair against the LIVE raster, in the Python
- * path's corner order TL, BL, BR, TR (kernels/native.py:_repair_corners;
- * lazy per-center evaluation replaces the plane+invalidate dance with
- * identical values). */
+/* TerraUtils corner repair against the LIVE raster, in the reference's
+ * corner order TL, BL, BR, TR (kernels/raster.py:repair_corners; lazy
+ * per-center evaluation replaces the per-search plane with identical
+ * values). */
 void tin_repair_corners(double *z, int h, int w, double ndv) {
     int ndv_is_nan = isnan(ndv);
     int corners[4][2] = {{0, 0}, {h - 1, 0}, {h - 1, w - 1}, {0, w - 1}};

@@ -43,7 +43,7 @@ def generate_tin_dense_quadwalk(grid: Grid, step: int = 1):
     cols = np.minimum(np.arange(vpr) * step, w - 1)
     rows = np.minimum(np.arange(vpc) * step, h - 1)
 
-    zz = grid.z[np.ix_(rows, cols)].astype(np.float64).copy()
+    zz = grid.z[np.ix_(rows, cols)]
     bad_r, bad_c = np.nonzero(is_no_data(zz, grid.ndv))
     if len(bad_r):
         from .raster import nearest_valid_avg_batch

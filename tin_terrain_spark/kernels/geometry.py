@@ -189,8 +189,9 @@ def clip_triangles_to_01_quadrant(triangles: np.ndarray,
         return triangles
     # C fast path (same algorithm, same order; byte-parity asserted in
     # tests/test_native_parity.py); this Python loop is the oracle and
-    # the no-toolchain fallback. force_python exists for that parity
-    # test.
+    # the no-toolchain fallback. force_python selects it for that
+    # parity test and for perfbench's traced clip probe
+    # (perfbench/workloads.py), which times either backend.
     if not force_python:
         from . import native
 

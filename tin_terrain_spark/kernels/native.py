@@ -10,10 +10,12 @@ system C compiler into a per-user cache directory the first time it's
 needed and exposes drop-in replacements. The mesh-tile kernel
 (operators/meshing.py:_make_tile_fn) makes one native mesh call and
 one native tile call per tile:
-  - terra_native / zemlya_native: corner repair (terra), greedy
-    insertion AND the to_mesh emission in C — row-major valid
-    vertices at pixel-centre world coordinates, faces flipped CCW in
-    pixel space — returning fresh (verts, faces) arrays;
+  - terra_native / zemlya_native: corner repair, greedy insertion
+    AND the to_mesh emission in C — row-major valid vertices at
+    pixel-centre world coordinates, faces flipped CCW in pixel space —
+    returning fresh (verts, faces) arrays. Each takes the Grid's
+    C-contiguous float64 raster (raster.Grid holds no other type) by
+    address and repairs its corners in place;
   - tile_qm_native: the post-mesh half of a tile in C — unit-tile
     normalize, [0,1]² clip, first-seen vertex order and the
     quantized-mesh body — for every method.
@@ -123,13 +125,12 @@ def _build_and_load():
     dbl = ctypes.c_double
     vp = ctypes.c_void_p
     cint = ctypes.c_int
-    P = ctypes.POINTER
     # mesh entries: raster, shape, ndv, max_error, georef, then the
     # _Scratch.args tail (used, token, vid, verts, faces, cap, n_verts)
     scratch = [vp, vp, vp, vp, vp, i64, vp]
     lib.tin_terra_mesh.restype = i64
     lib.tin_terra_mesh.argtypes = [
-        vp, cint, cint, dbl, dbl, dbl, dbl, dbl, cint, *scratch,
+        vp, cint, cint, dbl, dbl, dbl, dbl, dbl, *scratch,
     ]
     lib.tin_zemlya_mesh.restype = i64
     lib.tin_zemlya_mesh.argtypes = [
@@ -138,9 +139,9 @@ def _build_and_load():
     lib.tin_tile_qm.restype = i64
     lib.tin_tile_qm.argtypes = [vp, i64, vp, i64, dbl, dbl, dbl, vp, i64, vp, vp]
     lib.tin_repair_corners.restype = None
-    lib.tin_repair_corners.argtypes = [P(dbl), ctypes.c_int, ctypes.c_int, dbl]
+    lib.tin_repair_corners.argtypes = [vp, cint, cint, dbl]
     lib.tin_clip01.restype = i64
-    lib.tin_clip01.argtypes = [P(dbl), i64, P(dbl), i64]
+    lib.tin_clip01.argtypes = [vp, i64, vp, i64]
     return lib
 
 
@@ -156,49 +157,6 @@ def native_available() -> bool:
     return get_lib() is not None
 
 
-def _ptr(a, ct):
-    return a.ctypes.data_as(ctypes.POINTER(ct))
-
-
-def _repair_corners(grid) -> None:
-    """TerraUtils corner repair against the LIVE raster — identical to
-    TerraMesh.repair_point call order. The 3x3-subsample plane is
-    computed once and reused across corners, but ONLY while provably
-    unchanged: a corner write that alters the raster invalidates it, so
-    the values equal the per-call-fresh-plane semantics bit-for-bit
-    (a prior repaired corner can land inside a later corner's Bresenham
-    search on near-empty rasters)."""
-    from .raster import _subsample_3x3_full, sample_nearest_valid_avg
-
-    h, w = grid.z.shape
-    plane = None
-    for px, py in ((0, 0), (0, h - 1), (w - 1, h - 1), (w - 1, 0)):
-        if plane is None:
-            plane = _subsample_3x3_full(grid.z, grid.ndv)
-        z = sample_nearest_valid_avg(grid, py, px, subsampled=plane)
-        old = grid.z[py, px]
-        new = 0.0 if (np.isnan(z) or z == grid.ndv) else z
-        grid.z[py, px] = new
-        # bit-level change check (NaN old and ±0.0 flips both count)
-        if not (new == old and np.signbit(new) == np.signbit(old)):
-            plane = None
-
-
-def repair_corners_dispatch(grid) -> None:
-    """Corner repair via the C path when available (lazy per-center
-    subsample against the live raster — value-identical to the Python
-    plane, asserted in tests/test_native_parity.py), else the Python
-    plane implementation."""
-    lib = get_lib()
-    h, w = grid.z.shape
-    if lib is not None and grid.z.dtype == np.float64 and grid.z.flags.c_contiguous:
-        lib.tin_repair_corners(
-            _ptr(grid.z, ctypes.c_double), h, w, float(grid.ndv)
-        )
-        return
-    _repair_corners(grid)
-
-
 def clip01_native(triangles: np.ndarray):
     """C fast path for clip_triangles_to_01_quadrant: same sequential
     algorithm, same output ORDER (strictly-inside first, then clip
@@ -211,28 +169,10 @@ def clip01_native(triangles: np.ndarray):
     n = len(tris)
     cap = 16 * n + 8
     out = np.empty((cap, 3, 3), dtype=np.float64)
-    m = lib.tin_clip01(
-        _ptr(tris, ctypes.c_double), n, _ptr(out, ctypes.c_double), cap
-    )
+    m = lib.tin_clip01(tris.ctypes.data, n, out.ctypes.data, cap)
     if m < 0:
         return None
     return out[:m]
-
-
-def _snapshot_corners(grid):
-    """Bit-exact copies of the 4 corner cells, taken BEFORE
-    _repair_corners: corner repair is not idempotent (a repaired corner
-    can enter a later corner's nearest-valid search), so a native-path
-    failure after repair must hand the pure-Python fallback pristine
-    corners or the fallback diverges from the semantics oracle."""
-    h, w = grid.z.shape
-    return [(py, px, grid.z[py, px].copy())
-            for px, py in ((0, 0), (0, h - 1), (w - 1, h - 1), (w - 1, 0))]
-
-
-def _restore_corners(grid, snap) -> None:
-    for py, px, v in snap:
-        grid.z[py, px] = v
 
 
 # scratch buffers are per thread (fresh mesh and encoder buffers cost
@@ -280,31 +220,20 @@ def terra_native(grid, max_error: float):
     """Native TerraMesh corner repair + greedy_insert + to_mesh in one
     C call. Returns (verts, faces) or None when the native path is
     unavailable / overflowed (the C call then restores the corners it
-    repaired)."""
+    repaired: repair is not idempotent, and the Python fallback must
+    repair pristine corners)."""
     lib = get_lib()
     if lib is None:
         return None
     h, w = grid.z.shape
     if h < 2 or w < 2:
         return None
-    z = grid.z
-    repair = z.dtype == np.float64 and z.flags.c_contiguous
-    snap = None
-    if not repair:
-        # other dtypes and layouts repair in place in their own
-        # arithmetic (the Python oracle's), then mesh a float64 copy
-        snap = _snapshot_corners(grid)
-        _repair_corners(grid)
-        z = np.ascontiguousarray(grid.z, dtype=np.float64)
     s = _scratch(h, w, 2 * (h * w + 8) + 16)
     nf = lib.tin_terra_mesh(
-        z.ctypes.data, h, w, float(grid.ndv), float(max_error),
-        float(grid.xpos), float(grid.ypos), float(grid.cellsize), repair,
-        *s.args,
+        grid.z.ctypes.data, h, w, float(grid.ndv), float(max_error),
+        float(grid.xpos), float(grid.ypos), float(grid.cellsize), *s.args,
     )
     if nf < 0:
-        if snap is not None:
-            _restore_corners(grid, snap)
         return None
     return s.mesh(nf)
 
@@ -323,15 +252,13 @@ def zemlya_native(grid, max_error: float):
         return None
     zm = ZemlyaMesh(grid)
     zm.build_pyramid()  # pre-repair raster, as in greedy_insert
-    corner_snap = _snapshot_corners(grid)
-    repair_corners_dispatch(grid)
+    z = grid.z
+    rows, cols = [0, h - 1, h - 1, 0], [0, 0, w - 1, w - 1]
+    snap = z[rows, cols]  # pristine corners for the fallback, see terra_native
+    lib.tin_repair_corners(z.ctypes.data, h, w, float(grid.ndv))
 
     result = np.full((h, w), np.nan)
-    z = grid.z
-    result[0, 0] = z[0, 0]
-    result[h - 1, 0] = z[h - 1, 0]
-    result[h - 1, w - 1] = z[h - 1, w - 1]
-    result[0, w - 1] = z[0, w - 1]
+    result[rows, cols] = z[rows, cols]
 
     max_level = zm.max_level
     stack = np.empty((max_level, h, w), dtype=np.float64)
@@ -339,15 +266,14 @@ def zemlya_native(grid, max_error: float):
         zm._update_insert(level)
         stack[level - 1] = zm.insert_r
 
-    zc = np.ascontiguousarray(z, dtype=np.float64)
     s = _scratch(h, w, 2 * (h * w * max_level + 8) + 16)
     nf = lib.tin_zemlya_mesh(
-        zc.ctypes.data, stack.ctypes.data, max_level, h, w,
+        z.ctypes.data, stack.ctypes.data, max_level, h, w,
         float(grid.ndv), float(max_error), float(grid.xpos),
         float(grid.ypos), float(grid.cellsize), result.ctypes.data, *s.args,
     )
     if nf < 0:
-        _restore_corners(grid, corner_snap)  # see terra_native
+        z[rows, cols] = snap
         return None
     return s.mesh(nf)
 

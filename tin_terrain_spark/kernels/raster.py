@@ -13,6 +13,8 @@ Kernels:
                             sum is <= 0 keeps the no-data value)
   sample_nearest_valid_avg  src/raster_tools.cpp:274-427 (expanding
                             Bresenham circles of 3x3 weighted samples)
+  repair_corners            src/TerraUtils.cpp:8-22 (the mesh kernels'
+                            corner repair)
   raster_bbox               Raster.h:301-312 (bbox spans pixel CENTERS)
 """
 
@@ -32,13 +34,22 @@ def is_no_data(z, ndv):
 
 @dataclass
 class Grid:
-    """ndarray + georef: the in-kernel raster representation."""
+    """ndarray + georef: the in-kernel raster representation.
+
+    `z` is held as a C-contiguous float64 array, the one raster type the
+    reference meshes (RasterDouble, Raster.h:550): any other dtype or
+    layout is converted on construction, and a float64 C array is kept
+    as the same object, so in-place corner repair reaches the caller's
+    array."""
 
     z: np.ndarray  # (h, w) float64, top-left origin, row-major
     xpos: float = 0.0  # world x of lower-left corner
     ypos: float = 0.0  # world y of lower-left corner
     cellsize: float = 1.0
     ndv: float = np.nan
+
+    def __post_init__(self):
+        self.z = np.ascontiguousarray(self.z, dtype=np.float64)
 
     @property
     def h(self) -> int:
@@ -91,11 +102,7 @@ def integer_downsample_mean(grid: Grid, win: int) -> Grid:
     hs, ws = h // win, w // win
     src = grid.z[: hs * win, : ws * win]
     blocks = src.reshape(hs, win, ws, win)
-    valid = blocks != grid.ndv
-    if not np.isnan(grid.ndv):
-        # NaN != ndv is True, so NaNs count as valid — replicate by
-        # letting them poison sums exactly as the reference does.
-        pass
+    valid = blocks != grid.ndv  # NaN != ndv: NaN counts as valid, as in the reference
     count = valid.sum(axis=(1, 3))
     s = np.where(valid, blocks, 0.0).sum(axis=(1, 3))
     out = np.full((hs, ws), grid.ndv, dtype=np.float64)
@@ -148,14 +155,10 @@ def _subsample_3x3_full(z: np.ndarray, ndv: float) -> np.ndarray:
     return out
 
 
-def sample_nearest_valid_avg(
-    grid: Grid, row: int, col: int, subsampled: np.ndarray | None = None,
-) -> float:
+def sample_nearest_valid_avg(grid: Grid, row: int, col: int) -> float:
     """Expanding Bresenham-circle search for valid samples
     (raster_tools.cpp:343-427): the average of the first circle that
-    holds any. Returns NaN when nothing valid exists.
-    Pass a precomputed `_subsample_3x3_full` plane via `subsampled` to
-    amortize across repeated calls on the same grid."""
+    holds any. Returns NaN when nothing valid exists."""
     z = grid.z
     ndv = grid.ndv
     h, w = z.shape
@@ -164,8 +167,7 @@ def sample_nearest_valid_avg(
         if not (np.isnan(v) or v == ndv):
             return float(v)
 
-    if subsampled is None:
-        subsampled = _subsample_3x3_full(z, ndv)
+    subsampled = _subsample_3x3_full(z, ndv)
 
     samples: list[float] = []
 
@@ -190,6 +192,18 @@ def sample_nearest_valid_avg(
     if len(samples) == 1:
         return samples[0]
     return float(sum(samples) / len(samples))
+
+
+def repair_corners(grid: Grid) -> None:
+    """TerraUtils corner repair (TerraUtils.cpp:8-22), in place: each
+    corner in the reference's order (top-left, bottom-left,
+    bottom-right, top-right) becomes its nearest-valid average, 0.0
+    when no valid sample exists. Each search reads the live raster, so
+    a later corner can see an earlier corner's repair."""
+    h, w = grid.z.shape
+    for row, col in ((0, 0), (h - 1, 0), (h - 1, w - 1), (0, w - 1)):
+        v = sample_nearest_valid_avg(grid, row, col)
+        grid.z[row, col] = 0.0 if np.isnan(v) or v == grid.ndv else v
 
 
 _CIRCLE_CACHE: dict = {}

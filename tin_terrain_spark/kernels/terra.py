@@ -35,7 +35,7 @@ import numpy as np
 
 from .delaunay import DelaunayMesh, Triangle
 from .geometry import tri_area
-from .raster import Grid, sample_nearest_valid_avg
+from .raster import Grid, repair_corners
 
 
 from math import ceil as _ceil, floor as _floor, inf as _inf
@@ -167,19 +167,6 @@ class TerraMesh(DelaunayMesh):
         self.counter = 0
         self.max_error = 0.0
 
-    # -- corner repair (TerraUtils.cpp:8-22) -----------------------------
-
-    def repair_point(self, px: int, py: int) -> None:
-        # no caching across calls: the reference repairs corners against
-        # the LIVE raster, so each repair may see earlier repairs
-        # (sample_nearest_valid_avg vectorizes the subsample plane per call)
-        z = sample_nearest_valid_avg(self.grid, py, px)
-        ndv = self.grid.ndv
-        if np.isnan(z) or z == ndv:
-            self.grid.z[py, px] = 0.0
-        else:
-            self.grid.z[py, px] = z
-
     # -- candidate scan (TerraMesh.cpp:78-173) ----------------------------
 
     def scan_triangle(self, t: Triangle) -> None:
@@ -226,10 +213,7 @@ class TerraMesh(DelaunayMesh):
         h, w = g.z.shape
         assert w >= 2 and h >= 2, "raster must be at least 2x2"
 
-        self.repair_point(0, 0)
-        self.repair_point(0, h - 1)
-        self.repair_point(w - 1, h - 1)
-        self.repair_point(w - 1, 0)
+        repair_corners(g)
 
         self.init_mesh((0.0, 0.0), (0.0, float(h - 1)), (float(w - 1), float(h - 1)), (float(w - 1), 0.0))
 

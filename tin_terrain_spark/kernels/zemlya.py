@@ -33,7 +33,7 @@ import numpy as np
 
 from .delaunay import DelaunayMesh, Triangle
 from .geometry import tri_area
-from .raster import Grid, sample_nearest_valid_avg
+from .raster import Grid, repair_corners
 
 
 def _avg4(stack: np.ndarray) -> np.ndarray:
@@ -63,14 +63,6 @@ class ZemlyaMesh(DelaunayMesh):
         self.counter = 0
         self.current_level = 0
         self.max_error = 0.0
-
-    def repair_point(self, px: int, py: int) -> None:
-        # live-raster semantics: see terra.repair_point
-        z = sample_nearest_valid_avg(self.grid, py, px)
-        if np.isnan(z) or z == self.grid.ndv:
-            self.grid.z[py, px] = 0.0
-        else:
-            self.grid.z[py, px] = z
 
     # -- pyramid build (ZemlyaMesh.cpp:59-104), vectorized ---------------
 
@@ -209,11 +201,7 @@ class ZemlyaMesh(DelaunayMesh):
         assert w >= 2 and h >= 2
 
         self.build_pyramid()
-
-        self.repair_point(0, 0)
-        self.repair_point(0, h - 1)
-        self.repair_point(w - 1, h - 1)
-        self.repair_point(w - 1, 0)
+        repair_corners(self.grid)
 
         z = self.grid.z
         self.result[0, 0] = z[0, 0]

@@ -402,7 +402,7 @@ def _decode_real(payload: bytes, width: int, height: int) -> "np.ndarray | None"
         except Exception:
             grid = None
         if grid is not None:
-            z = np.asarray(grid.z, dtype=np.float64)
+            z = grid.z
             finite = np.isfinite(z)
             if finite.any():
                 lo = z[finite].min()

@@ -460,7 +460,7 @@ def read_geotiff(data: bytes) -> Grid:
         except ValueError:
             pass
     return Grid(
-        np.ascontiguousarray(z),
+        z,
         xpos=min(origin_x, x2),
         ypos=min(origin_y, y2),
         cellsize=abs(scale_x),
